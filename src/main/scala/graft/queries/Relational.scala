@@ -647,14 +647,11 @@ ORDER BY value DESC NULLS LAST, event_id LIMIT 20""")),
       (spark, dir) => {
         val w = Window.partitionBy(col("event_type"))
           .orderBy(col("value").desc, col("event_id"))
-        // explicit-width repartition on the window key: AQE's
-        // byte-based coalescing folds this small exchange to one task
-        // and serializes the per-group sort (same repair + rationale
-        // as q_hist_equidepth, OlapOps.scala; count follows
-        // spark.sql.shuffle.partitions, not a constant)
+        // no explicit repartition on the window key: its
+        // REPARTITION_BY_NUM node would stop Catalyst from planting the
+        // map-side partial WindowGroupLimit below the window's own
+        // exchange, so every task would ship each group's full history
         Tables.events(spark, dir)
-          .repartition(spark.sessionState.conf.numShufflePartitions,
-            col("event_type"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .select(col("event_type"), col("rn"), col("event_id"), col("value"))

@@ -204,7 +204,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             }
           })
         val spec = ManifestSink.readTableSpec(conf, p)
-        val order = ManifestSink.readTableOrder(conf, p)
+        val order = spec.orderBy
         val props = ManifestSink.readTableProps(conf, p)
         // identity spec re-attaches as field metadata so DESCRIBE and
         // write-side validation see it (the DDL codec stores schemas
@@ -222,14 +222,14 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           })
           case None => withDefaults
         }
-        spec match {
+        spec.layout match {
           // identity-split tables expose SHOW PARTITIONS / ALTER
           // TABLE DROP PARTITION (partition values ARE manifest
           // metadata there — see [[GraftSplitCatalogTable]]); a
           // days()/hours() spec gets the TIME-transform face (the
           // partition values are DERIVED day/hour ordinals)
           case Some((0, c)) =>
-            ManifestSink.readTableTransform(conf, p) match {
+            spec.transform match {
               case Some(tf) =>
                 new GraftTimeSplitCatalogTable(ident, p, loaded, c, tf,
                   order, props)
@@ -237,8 +237,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
                 new GraftSplitCatalogTable(ident, p, loaded, c,
                   order, props)
             }
-          case _ =>
-            new GraftCatalogTable(ident, p, loaded, spec,
+          case layout =>
+            new GraftCatalogTable(ident, p, loaded, layout,
               order, props)
         }
       case None =>
@@ -461,11 +461,11 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
     bucketSpec.foreach { case (n, col, tf) =>
       require(n >= 0, s"bucket count must be >= 0, got $n")
-      ManifestSink.writeTableSpec(conf, tablePath(ident), n, col,
-        transform = tf)
+      ManifestSink.writeTableSpec(conf, tablePath(ident),
+        TableSpec(Some((n, col)), transform = tf))
     }
     clusterCol.foreach(c => ManifestSink.writeTableSpec(conf,
-      tablePath(ident), -1, "", orderBy = Some(c)))
+      tablePath(ident), TableSpec(orderBy = Some(c))))
     // COLUMN DEFAULTS at create: Spark delivers them as the field-
     // metadata pair (CURRENT_DEFAULT, EXISTS_DEFAULT) — capture into
     // the snapshot's colmap header keyed by field id, then store the
@@ -888,10 +888,11 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         }
         // the bucket layout routes by this name in the write
         // distribution and the reported partitioning — follow it
-        ManifestSink.readTableSpec(conf, p).foreach { case (n, c) =>
+        val spec = ManifestSink.readTableSpec(conf, p)
+        spec.layout.foreach { case (n, c) =>
           if (c.equalsIgnoreCase(from))
-            ManifestSink.writeTableSpec(conf, p, n, to,
-              transform = ManifestSink.readTableTransform(conf, p))
+            ManifestSink.writeTableSpec(conf, p,
+              spec.copy(layout = Some((n, to))))
         }
         schemaChanged = true
         colmap = colmap.copy(retired = colmap.retired :+ s.fields(idx).name)
@@ -947,7 +948,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
               s"cannot drop '$name': referenced by CHECK constraint(s) " +
                 s"${refs.mkString(", ")} — drop them first")
           }
-          ManifestSink.readTableSpec(conf, p).foreach { case (_, c) =>
+          ManifestSink.readTableSpec(conf, p).layout.foreach { case (_, c) =>
             require(!c.equalsIgnoreCase(name),
               s"cannot drop '$name': it is the bucket column of $ident")
           }
@@ -1039,7 +1040,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       // machinery as CALL set_layout(spec => 'none', order_by => c).
       case (s, cb: TableChange.ClusterBy) =>
         val cols = cb.clusteringColumns().map(_.fieldNames().mkString("."))
-        require(ManifestSink.readTableSpec(conf, p).isEmpty,
+        require(ManifestSink.readTableSpec(conf, p).layout.isEmpty,
           s"ALTER TABLE CLUSTER BY: a bucket/identity layout owns row " +
             s"placement on $ident — replace it via CALL set_layout")
         if (cols.isEmpty) ManifestSink.clearTableSpec(conf, p)
@@ -1052,8 +1053,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             x.dataType == org.apache.spark.sql.types.StringType),
             s"CLUSTER BY column '${cols.head}' must be a BIGINT or " +
               s"STRING column of ${s.fieldNames.mkString("(", ",", ")")}")
-          ManifestSink.writeTableSpec(conf, p, -1, "",
-            orderBy = Some(f.get.name))
+          ManifestSink.writeTableSpec(conf, p,
+            TableSpec(orderBy = Some(f.get.name)))
         }
         s
       case (_, c) => throw new UnsupportedOperationException(
@@ -1084,8 +1085,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * constraints) lives INSIDE the table directory, so the move
     * itself carries everything — but manifests record part and
     * sidecar paths ABSOLUTELY (shallow clones depend on that), so
-    * after the move each version/branch/head manifest gets its old
-    * prefix textually re-pointed to the new directory (KB-sized
+    * after the move each version/branch/head manifest has the `path`
+    * and `dvref` of its part records re-pointed to the new directory
+    * (user values such as string stats are left alone; KB-sized
     * files, metadata-only; a rename is not concurrent-safe against
     * in-flight commits by nature, same as any engine). Hazards,
     * documented not hidden: a SHALLOW CLONE of the renamed table
@@ -1103,35 +1105,23 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     if (!fs.rename(src, dst))
       throw new java.io.IOException(
         s"rename $oldIdent -> $newIdent failed at $src")
-    // re-point recorded absolute paths (raw + URL-encoded forms — the
-    // manifest "path"/"dvref" fields are encoded) in every manifest
-    val srcStr = src.toString
-    val dstStr = dst.toString
-    val srcUri = src.toUri.getPath
-    val dstUri = dst.toUri.getPath
-    fs.listStatus(dst).filter { st =>
-      val n = st.getPath.getName
-      n == ManifestSink.ManifestFile ||
-        (n.startsWith("_MANIFEST.") && n.endsWith(".json")) ||
-        (n.startsWith("_BRANCH-") && n.endsWith(".json"))
-    }.foreach { st =>
-      val in = fs.open(st.getPath)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val repointed = body
-        .replace(ManifestSink.encPath(srcStr), ManifestSink.encPath(dstStr))
-        .replace(ManifestSink.encPath(srcUri), ManifestSink.encPath(dstUri))
-        .replace(srcStr, dstStr).replace(srcUri, dstUri)
-      if (repointed != body) {
-        val tmp = new Path(dst,
-          s".${st.getPath.getName}.rn${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(repointed.getBytes("UTF-8")) finally out.close()
-        fs.delete(st.getPath, false)
-        if (!fs.rename(tmp, st.getPath))
-          throw new java.io.IOException(
-            s"manifest re-point failed for ${st.getPath}")
-      }
+    // re-point the recorded absolute part and sidecar paths (`path`
+    // and `dvref` of every part record) in every manifest; nothing
+    // else in a record names the table directory
+    val forms = Seq(src.toString -> dst.toString,
+      src.toUri.getPath -> dst.toUri.getPath)
+    def repoint(p: String): String =
+      forms.collectFirst { case (from, to)
+          if p == from || p.startsWith(from + "/") =>
+        to + p.substring(from.length)
+      }.getOrElse(p)
+    fs.listStatus(dst).map(_.getPath.getName).filter { n =>
+      n.startsWith("_MANIFEST.") && n.endsWith(".json")
+    }.foreach { n =>
+      val body = MetaJson.read(conf, new Path(dst, n)).getOrElse("")
+      val repointed = MetaJson.lines(body)
+        .map(MetaJson.repointLine(_, repoint)).mkString("", "\n", "\n")
+      if (repointed != body) MetaJson.replace(conf, dst, n, repointed)
     }
   }
 
@@ -2030,7 +2020,7 @@ private[sources] class ManifestFilesTable(path: String)
         // a part's split_value is its PROVABLY single value (stats
         // min == max, zero nulls) — anything weaker reads as NULL
         val conf = ManifestSink.driverConf()
-        val splitCol = ManifestSink.readTableSpec(conf, path)
+        val splitCol = ManifestSink.readTableSpec(conf, path).layout
           .collect { case (0, c) => c }
         val firstStr = ManifestSink.readSchema(conf, path, None)
           .flatMap(_.fields.find(_.dataType ==
@@ -2114,7 +2104,7 @@ private[sources] class ManifestPartitionsTable(path: String)
     new SB {
       override def build(): Scan = {
         val conf = ManifestSink.driverConf()
-        val splitCol = ManifestSink.readTableSpec(conf, path)
+        val splitCol = ManifestSink.readTableSpec(conf, path).layout
           .collect { case (0, c) => c }
         val firstStr = ManifestSink.readSchema(conf, path, None)
           .flatMap(_.fields.find(_.dataType ==

@@ -744,16 +744,14 @@ private[sources] final class SetLayoutProcedure(warehouse: String)
   private val TimeRe = """(?i)(days|hours)\s*\(\s*([^)\s]+)\s*\)""".r
 
   private def render(conf: org.apache.hadoop.conf.Configuration,
-      dir: String): String =
-    ManifestSink.readTableSpec(conf, dir) match {
-      case Some((0, c)) => ManifestSink.readTableTransform(conf, dir) match {
-        case Some(tf) => s"$tf($c)"
-        case None => s"identity($c)"
-      }
+      dir: String): String = {
+    val spec = ManifestSink.readTableSpec(conf, dir)
+    spec.layout match {
+      case Some((0, c)) => spec.transform.fold(s"identity($c)")(tf => s"$tf($c)")
       case Some((n, c)) => s"bucket($n,$c)"
-      case None => ManifestSink.readTableOrder(conf, dir)
-        .map(c => s"ordered($c)").getOrElse("none")
+      case None => spec.orderBy.map(c => s"ordered($c)").getOrElse("none")
     }
+  }
 
   override def call(input: InternalRow): JIterator[Scan] = {
     val conf = ManifestSink.driverConf()
@@ -781,8 +779,8 @@ private[sources] final class SetLayoutProcedure(warehouse: String)
           org.apache.spark.sql.types.TimestampType),
           s"set_layout: $tf column '$col' must be a TIMESTAMP column " +
             s"of ${schema.fieldNames.mkString("(", ",", ")")}")
-        ManifestSink.writeTableSpec(conf, dir, 0, f.get.name,
-          transform = Some(tf))
+        ManifestSink.writeTableSpec(conf, dir,
+          TableSpec(Some((0, f.get.name)), transform = Some(tf)))
       case BucketRe(n, col) =>
         require(orderBy.isEmpty,
           "set_layout: order_by only composes with spec => 'none' " +
@@ -793,7 +791,8 @@ private[sources] final class SetLayoutProcedure(warehouse: String)
           s"set_layout: bucket column '$col' must be the table's first " +
             s"BIGINT column (${keyed.getOrElse("none present")})")
         require(n.toInt >= 1, s"set_layout: bucket count must be >= 1")
-        ManifestSink.writeTableSpec(conf, dir, n.toInt, keyed.get)
+        ManifestSink.writeTableSpec(conf, dir,
+          TableSpec(Some((n.toInt, keyed.get))))
       case "none" | "NONE" =>
         orderBy match {
           case Some(c) =>
@@ -803,10 +802,8 @@ private[sources] final class SetLayoutProcedure(warehouse: String)
                 x.dataType == org.apache.spark.sql.types.StringType),
               s"set_layout: order_by column '$c' must be a BIGINT or " +
                 s"STRING column of ${schema.fieldNames.mkString("(", ",", ")")}")
-            // buckets -1 never matches readTableSpec's parser: the
-            // table reads back as unpartitioned-but-ordered
-            ManifestSink.writeTableSpec(conf, dir, -1, "",
-              orderBy = Some(f.get.name))
+            ManifestSink.writeTableSpec(conf, dir,
+              TableSpec(orderBy = Some(f.get.name)))
           case None => ManifestSink.clearTableSpec(conf, dir)
         }
       case col =>
@@ -819,7 +816,7 @@ private[sources] final class SetLayoutProcedure(warehouse: String)
             x.dataType == org.apache.spark.sql.types.StringType),
           s"set_layout: identity column '$col' must be a BIGINT or " +
             s"STRING column of ${schema.fieldNames.mkString("(", ",", ")")}")
-        ManifestSink.writeTableSpec(conf, dir, 0, f.get.name)
+        ManifestSink.writeTableSpec(conf, dir, TableSpec(Some((0, f.get.name))))
     }
     result(old, render(conf, dir))
   }

@@ -155,7 +155,8 @@ private[sources] class GraftStagedTable(
       else Some(ColMap.identity(clean.fields.length).copy(defaults = defaults))
     bucketSpec match {
       case Some((n, c, tf)) =>
-        ManifestSink.writeTableSpec(conf, path, n, c, transform = tf)
+        ManifestSink.writeTableSpec(conf, path,
+          TableSpec(Some((n, c)), transform = tf))
       case None if replace =>
         // the replaced table's layout does not survive into the new
         // one: an unpartitioned RTAS over a bucketed table must not

@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.catalog.{Identifier, View, ViewInfo}
@@ -20,35 +18,17 @@ import org.apache.spark.sql.types.StructType
   * (temp + rename, the same single-writer publication pattern the
   * manifest format uses). Table directories and view files share a
   * namespace directory without colliding: a table IS a directory, a
-  * view IS a `.view.json` file.
-  *
-  * The record is one line of the manifest family's URL-encoded JSON
-  * dialect: every value percent-encoded so arbitrary SQL text (quotes,
-  * braces, newlines) can never corrupt the line format; list fields
-  * join their pre-encoded elements with `,`; a null element (legal in
-  * column comments) encodes as `%N` — a sequence `URLEncoder` itself
-  * can never emit. At 100 TB none of this matters and that is the
-  * point: views add query-text indirection with zero data-path cost.
+  * view IS a `.view.json` file. The record format is [[MetaJson]]'s.
+  * At 100 TB none of this matters and that is the point: views add
+  * query-text indirection with zero data-path cost.
   */
 private[sources] object GraftViews {
 
   private val Suffix = ".view.json"
-  private val NullToken = "%N"
 
   def viewPath(warehouse: String, ident: Identifier): Path =
     new Path((warehouse +: ident.namespace()).mkString("/"),
       ident.name() + Suffix)
-
-  private def enc(s: String): String =
-    if (s == null) NullToken else java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String =
-    if (s == NullToken) null else java.net.URLDecoder.decode(s, "UTF-8")
-  private def encList(xs: Array[String]): String =
-    if (xs == null) NullToken else xs.map(enc).mkString(",")
-  private def decList(s: String): Array[String] =
-    if (s == NullToken) null
-    else if (s.isEmpty) Array.empty
-    else s.split(",", -1).map(dec)
 
   def exists(conf: Configuration, warehouse: String,
       ident: Identifier): Boolean = {
@@ -59,53 +39,16 @@ private[sources] object GraftViews {
   def write(conf: Configuration, warehouse: String, info: ViewInfo,
       orReplace: Boolean): Unit = {
     val p = viewPath(warehouse, info.ident())
-    val fs = p.getFileSystem(conf)
-    fs.mkdirs(p.getParent)
-    val props = info.properties().asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString(";")
-    val line =
-      s"""{"sql":"${enc(info.sql())}","catalog":"${enc(info.currentCatalog())}"""" +
-        s""","namespace":"${encList(info.currentNamespace())}"""" +
-        s""","schema":"${enc(info.schema().toDDL)}"""" +
-        s""","queryCols":"${encList(info.queryColumnNames())}"""" +
-        s""","aliases":"${encList(info.columnAliases())}"""" +
-        s""","comments":"${encList(info.columnComments())}"""" +
-        s""","props":"${enc(props)}"}"""
-    val tmp = new Path(p.getParent,
-      s".${p.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    out.write((line + "\n").getBytes("UTF-8"))
-    out.close()
-    if (orReplace && fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"view publish failed: $tmp -> $p")
-    }
+    val body = MetaJson.encodeView(info)
+    if (orReplace) MetaJson.replace(conf, p.getParent, p.getName, body)
+    else if (!MetaJson.claim(conf, p.getParent, p.getName, body))
+      throw new java.io.IOException(s"view publish failed: $p exists")
   }
 
   def read(conf: Configuration, warehouse: String,
-      ident: Identifier): Option[View] = {
-    val p = viewPath(warehouse, ident)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val line = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().next() finally in.close()
-    def field(k: String): String =
-      ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(line)
-        .map(_.group(1)).getOrElse("")
-    val props = dec(field("props"))
-    Some(new GraftView(ident.toString, dec(field("sql")),
-      dec(field("catalog")), decList(field("namespace")),
-      StructType.fromDDL(dec(field("schema"))),
-      decList(field("queryCols")), decList(field("aliases")),
-      decList(field("comments")),
-      (if (props == null || props.isEmpty) Map.empty[String, String]
-       else props.split(";", -1).map { kv =>
-         val i = kv.indexOf('=')
-         dec(kv.substring(0, i)) -> dec(kv.substring(i + 1))
-       }.toMap).asJava))
-  }
+      ident: Identifier): Option[View] =
+    MetaJson.read(conf, viewPath(warehouse, ident))
+      .map(MetaJson.decodeView(ident, _))
 
   def list(conf: Configuration, warehouse: String,
       namespace: Array[String]): Array[Identifier] = {

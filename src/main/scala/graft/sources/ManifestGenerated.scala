@@ -44,10 +44,8 @@ private[sources] object ManifestGenerated {
     * wrong columns. */
   val PropKey = "graft.generated"
 
-  private def enc(s: String): String =
-    java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String =
-    java.net.URLDecoder.decode(s, "UTF-8")
+  private def enc(s: String): String = ManifestCodec.encodeString(s)
+  private def dec(s: String): String = ManifestCodec.decodeString(s)
 
   def render(specs: Seq[(String, String)]): String =
     specs.map { case (c, e) => s"${enc(c)}=${enc(e)}" }.mkString(";")

@@ -417,7 +417,8 @@ object ManifestMaintenance {
     val conf = ManifestSink.driverConf()
     require(zorder.isEmpty || clusterBy.forall(_.isEmpty),
       "compact: zorder and cluster_by are mutually exclusive")
-    require(zorder.isEmpty || ManifestSink.readTableSpec(conf, dir).isEmpty,
+    val spec = ManifestSink.readTableSpec(conf, dir)
+    require(zorder.isEmpty || spec.layout.isEmpty,
       "compact: OPTIMIZE ZORDER requires an unpartitioned table layout " +
         "(a bucket/identity spec owns the row placement — CALL " +
         "set_layout(spec => 'none') first)")
@@ -438,8 +439,7 @@ object ManifestMaintenance {
     val parts = splitValue match {
       case None => allParts
       case Some(v) =>
-        val sc = ManifestSink.readTableSpec(conf, dir)
-          .collect { case (0, c) => c }
+        val sc = spec.layout.collect { case (0, c) => c }
           .getOrElse(throw new IllegalArgumentException(
             "compact: split_value scoping requires an " +
               "identity-partitioned table layout"))
@@ -448,7 +448,7 @@ object ManifestMaintenance {
             org.apache.spark.sql.types.StringType).map(_.name))
         // time-transform layouts scope by the DERIVED ordinal (the
         // value SHOW PARTITIONS speaks): "compact yesterday's day"
-        ManifestSink.readTableTransform(conf, dir) match {
+        spec.transform match {
           case Some(tf) => allParts.filter(m => TimeSplit.partOrdinal(
             m.cstats.get(sc), m.rows, tf).map(_.toString).contains(v))
           case None => allParts.filter(m =>
@@ -467,7 +467,7 @@ object ManifestMaintenance {
         case Some(c) => _.repartitionByRange(targetParts,
           c.split(',').map(_.trim).filter(_.nonEmpty)
             .map(org.apache.spark.sql.functions.col).toSeq: _*)
-        case None => ManifestSink.readTableOrder(conf, dir) match {
+        case None => spec.orderBy match {
           // WRITE ORDERED BY tables: compaction restores the global
           // range layout (disjoint sorted parts → tight min/max
           // pruning) that interleaved appends may have blurred
@@ -630,8 +630,8 @@ object ManifestMaintenance {
     // compaction settles MOR debt and packs small files WITHOUT
     // demoting the table out of storage-partitioned joins).
     val headSpec =
-      if (forcePlainLayout) None else ManifestSink.readTableSpec(conf, dir)
-    val bucketSpec: Option[Int] = headSpec.collect { case (n, _) if n > 0 => n }
+      if (forcePlainLayout) TableSpec() else ManifestSink.readTableSpec(conf, dir)
+    val bucketSpec: Option[Int] = headSpec.layout.collect { case (n, _) if n > 0 => n }
       .orElse(selected.headOption.map(_.nbuckets)
         .filter(n => !forcePlainLayout && n > 0 &&
           selected.forall(_.nbuckets == n)))
@@ -640,12 +640,11 @@ object ManifestMaintenance {
     // value-split writer, so compaction settles MOR debt without
     // breaking single-valued parts — grouped metadata aggregates and
     // point-predicate pruning survive maintenance
-    val splitSpec: Option[String] = headSpec.collect { case (0, c) => c }
+    val splitSpec: Option[String] = headSpec.layout.collect { case (0, c) => c }
     // days()/hours() split layouts migrate through compaction exactly
     // like identity splits — the writer routes by the DERIVED ordinal
     val splitTf: Option[String] =
-      if (splitSpec.isDefined) ManifestSink.readTableTransform(conf, dir)
-      else None
+      if (splitSpec.isDefined) headSpec.transform else None
     val keyCol = schema.fields.find(
       _.dataType == org.apache.spark.sql.types.LongType).map(_.name)
     try {

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.net.{URLDecoder, URLEncoder}
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -83,59 +81,21 @@ private[sources] object ManifestMv {
       keyExpr: Option[String] = None,
       keyTz: Option[String] = None) {
     /** MULTI-KEY grouping: `keyCol` is a comma-separated column list
-      * (the whole list URL-encodes into the meta line as one token,
-      * so the comma is a safe separator; a column name containing a
-      * literal comma is rejected at create). Single-key MVs are the
-      * 1-element case — metas written by earlier versions read
-      * unchanged. */
+      * (a column name containing a literal comma is rejected at
+      * create). Single-key MVs are the 1-element case. */
     def keys: Seq[String] = keyCol.split(',').map(_.trim).filter(_.nonEmpty)
   }
 
   final case class RefreshStats(fromVersion: Int, toVersion: Int,
       plusParts: Int, minusParts: Int, groups: Long)
 
-  private def enc(s: String) = URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String) = URLDecoder.decode(s, "UTF-8")
+  private def writeMeta(conf: Configuration, mvDir: String, m: MvMeta): Unit =
+    MetaJson.replace(conf, new Path(mvDir), MetaFile, MetaJson.encodeMvMeta(m))
 
-  private def writeMeta(conf: Configuration, mvDir: String, m: MvMeta): Unit = {
-    val line = (Seq("source=" + enc(m.source), "key=" + enc(m.keyCol),
-      "sum=" + enc(m.sumCol), "scale=" + m.scale,
-      "srcv=" + m.sourceVersion, "mvv=" + m.mvVersion) ++
-      m.mmCol.map(c => "mm=" + enc(c)) ++
-      m.ndvCol.map(c => "ndv=" + enc(c)) ++
-      m.keyExpr.map(e => "kexpr=" + enc(e)) ++
-      m.keyTz.map(z => "ktz=" + enc(z)) ++
-      m.join.toSeq.flatMap(j => Seq("dim=" + enc(j.dimSource),
-        "fk=" + enc(j.fk), "dimkey=" + enc(j.dimKey),
-        "dimv=" + j.dimVersion))).mkString("&")
-    val target = new Path(mvDir, MetaFile)
-    val tmp = new Path(mvDir, MetaFile + ".tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val fs = target.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(line.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(target)) fs.delete(target, false)
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"MV meta publish failed: $target")
-  }
-
-  def readMeta(conf: Configuration, mvDir: String): MvMeta = {
-    val p = new Path(mvDir, MetaFile)
-    val fs = p.getFileSystem(conf)
-    require(fs.exists(p), s"no materialized view at $mvDir (missing $MetaFile)")
-    val in = fs.open(p)
-    val line = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
-    val kv = line.split('&').map { t =>
-      val i = t.indexOf('='); t.take(i) -> t.drop(i + 1)
-    }.toMap
-    MvMeta(dec(kv("source")), dec(kv("key")), dec(kv("sum")),
-      kv("scale").toInt, kv("srcv").toInt, kv("mvv").toInt,
-      kv.get("mm").map(dec), kv.get("ndv").map(dec),
-      kv.get("dim").map(d => MvJoin(dec(d), dec(kv("fk")),
-        dec(kv("dimkey")), kv("dimv").toInt)),
-      kv.get("kexpr").map(dec), kv.get("ktz").map(dec))
-  }
+  def readMeta(conf: Configuration, mvDir: String): MvMeta =
+    MetaJson.read(conf, new Path(mvDir, MetaFile)).map(MetaJson.decodeMvMeta)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no materialized view at $mvDir (missing $MetaFile)"))
 
   /** The defining rollup: per-key exact (count, decimal sum). The sum
     * is pinned to the CANONICAL type DECIMAL(38, scale) — Spark's own

@@ -209,72 +209,13 @@ private[sources] object StrBin {
   * existed" — both read as "cannot prune", never as "no rows match".
   * Deletion vectors only narrow a part's live set, so the recorded
   * bounds stay conservative (wider-than-live is always prune-safe).
-  * Encoding is additive on the manifest line (`"cstats":"…"`): old
-  * manifests parse unchanged and simply never column-prune. */
+  * `nulls` = -1 and `sum` = None mean untracked; `bloom` is the
+  * declared secondary-column filter (hex, "" = none). */
 private[sources] final case class ColStat(kind: Char, min: String,
     max: String, nulls: Long = -1L, sum: Option[Long] = None,
     bloom: String = "") {
   def lMin: Long = min.toLong
   def lMax: Long = max.toLong
-}
-
-private[sources] object ColStat {
-  import java.net.{URLDecoder, URLEncoder}
-  private def enc(s: String) = URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String) = URLDecoder.decode(s, "UTF-8")
-
-  /** `col=k:min:max&col2=…` with every free-form token URL-encoded —
-    * the blob is then URL-encoded ONCE MORE onto the manifest line,
-    * so the line's regex field parser never sees a comma or quote. */
-  def encode(m: Map[String, ColStat]): String =
-    m.toSeq.sortBy(_._1).map { case (c, st) =>
-      // the 4th token (null count) and 5th token (long-column SUM)
-      // are OPTIONAL and positional — a sum with an UNKNOWN null
-      // count encodes a `?` placeholder in the 4th slot so the sum
-      // is never silently dropped (decoders read `?` back as
-      // unknown); unknown decoders of FUTURE extra tokens must
-      // ignore them, which `decode` below guarantees
-      val n = if (st.nulls >= 0) st.nulls.toString else "?"
-      val sm = st.sum.map(_.toString).getOrElse("?")
-      // emit the positional tail only through the LAST present leg,
-      // with `?` placeholders filling gaps — byte-identical to the
-      // pre-bloom encoding for bloom-free stats. The 6th leg is the
-      // SECONDARY-COLUMN BLOOM (hex, URL-safe by construction):
-      // per-part membership filter for declared high-cardinality
-      // columns (`graft.bloom_cols`), consulted by point lookups
-      // where min/max ranges admit nearly everything.
-      val tail =
-        if (st.bloom.nonEmpty) s":$n:$sm:${st.bloom}"
-        else if (st.sum.isDefined) s":$n:$sm"
-        else if (st.nulls >= 0) s":$n"
-        else ""
-      s"${enc(c)}=${st.kind}:${enc(st.min)}:${enc(st.max)}$tail"
-    }.mkString("&")
-
-  /** Unknown-null placeholder read-back: `?` → -1 (untracked). */
-  private def nl(n: String): Long = if (n == "?") -1L else n.toLong
-
-  def decode(blob: String): Map[String, ColStat] =
-    if (blob.isEmpty) Map.empty
-    else blob.split('&').iterator.map { entry =>
-      val eq = entry.indexOf('=')
-      // limit -1: an EMPTY string min/max is a legal stat value and
-      // must survive the split (trailing empties are dropped otherwise).
-      // TRAILING tokens beyond the 5 this version knows are IGNORED,
-      // not rejected — future stat legs stay additive for old readers
-      // (a v+1 writer's 6-token blob reads fine here, minus the new leg)
-      val st = entry.drop(eq + 1).split(":", -1) match {
-        case Array(k, mn, mx)    => ColStat(k.head, dec(mn), dec(mx))
-        case Array(k, mn, mx, n) => ColStat(k.head, dec(mn), dec(mx), nl(n))
-        case arr @ Array(k, mn, mx, n, sm, _*) =>
-          ColStat(k.head, dec(mn), dec(mx), nl(n),
-            if (sm == "?" || sm.isEmpty) None else Some(sm.toLong),
-            bloom = if (arr.length >= 6) arr(5) else "")
-        case other => throw new IllegalArgumentException(
-          s"bad ColStat entry '$entry' (${other.length} tokens)")
-      }
-      dec(entry.take(eq)) -> st
-    }.toMap
 }
 
 /** DELETION VECTOR codec: a bitmap over a part's row ORDINALS (line
@@ -334,16 +275,8 @@ private[sources] object DeleteVector {
     * Returns the sidecar's absolute path. */
   def writeRef(conf: Configuration, dir: String, name: String,
       bits: Array[Long]): String = {
-    val target = new Path(dir, name)
-    val fs = target.getFileSystem(conf)
-    val tmp = new Path(dir,
-      s".$name.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(toHex(bits).getBytes("UTF-8")) finally out.close()
-    if (fs.exists(target)) fs.delete(target, false)
-    if (!fs.rename(tmp, target)) throw new java.io.IOException(
-      s"cannot publish deletion-vector sidecar $target")
-    target.toString
+    MetaJson.replace(conf, new Path(dir), name, toHex(bits))
+    new Path(dir, name).toString
   }
 
   /** Read a sidecar back into a bitmap. */
@@ -361,23 +294,6 @@ private[sources] object DeleteVector {
     if (m.dvRef.nonEmpty) readRef(conf, m.dvRef) else m.dvBits
 }
 
-/** One committed part's full manifest record. `bloomHex` is "" when
-  * the part predates the bloom field or the table has no key column —
-  * [[mayContain]] then degrades to the pure range check. `sMin`/`sMax`
-  * are binary-collation min/max of the first STRING column (None when
-  * the part predates the field, has no string column, or saw only
-  * NULLs) — the reader prunes string predicates on them exactly like
-  * the long key range, and None always means "cannot exclude".
-  * `dvHex` is the part's DELETION VECTOR ("" = nothing deleted);
-  * `rows` stays the PHYSICAL line count — [[visibleRows]] is the
-  * served count, and all other stats become safe OVER-approximations
-  * once a vector exists (pruning may only over-include; exact
-  * metadata answers must consult [[visibleRows]] or decline).
-  * `kSum` is the exact sum of the key column's non-null values
-  * (None = untracked/legacy, or the per-part sum overflowed a Long
-  * while streaming) — the 4th leg of the file-stats record that
-  * turns a global SUM into a metadata-only answer; secondary long
-  * columns carry theirs in [[ColStat.sum]]. */
 /** EQUALITY-DELETE clause pending on a part (the Iceberg v2
   * equality-delete shape): "rows where column <fieldId> equals any of
   * `values` are deleted" — committed as METADATA on the part line
@@ -397,27 +313,23 @@ private[sources] object DeleteVector {
 private[sources] final case class EqClause(
     col: String, fieldId: Int, kind: Char, values: Seq[String])
 
-private[sources] object EqClause {
-  import java.net.{URLDecoder, URLEncoder}
-  private def enc(s: String) = URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String) = URLDecoder.decode(s, "UTF-8")
-
-  /** `enc(col):id:kind:enc(v1)|enc(v2);next...` — the blob is then
-    * URL-encoded once more onto the manifest line (like cstats), so
-    * the line's field regex never sees its separators. */
-  def encode(cs: Seq[EqClause]): String =
-    cs.map(c => s"${enc(c.col)}:${c.fieldId}:${c.kind}:" +
-      c.values.map(enc).mkString("|")).mkString(";")
-
-  def decode(blob: String): Seq[EqClause] =
-    if (blob.isEmpty) Seq.empty
-    else blob.split(';').toSeq.map { s =>
-      val Array(c, id, k, vs) = s.split(":", 4)
-      EqClause(dec(c), id.toInt, k.head,
-        if (vs.isEmpty) Seq.empty else vs.split('|').toSeq.map(dec))
-    }
-}
-
+/** One committed part's full manifest record. `bloomHex` is "" when
+  * the part predates the bloom field or the table has no key column —
+  * [[mayContain]] then degrades to the pure range check. `sMin`/`sMax`
+  * are binary-collation min/max of the first STRING column (None when
+  * the part predates the field, has no string column, or saw only
+  * NULLs) — the reader prunes string predicates on them exactly like
+  * the long key range, and None always means "cannot exclude".
+  * `dvHex` is the part's DELETION VECTOR ("" = nothing deleted);
+  * `rows` stays the PHYSICAL line count — [[visibleRows]] is the
+  * served count, and all other stats become safe OVER-approximations
+  * once a vector exists (pruning may only over-include; exact
+  * metadata answers must consult [[visibleRows]] or decline).
+  * `kSum` is the exact sum of the key column's non-null values
+  * (None = untracked/legacy, or the per-part sum overflowed a Long
+  * while streaming) — the 4th leg of the file-stats record that
+  * turns a global SUM into a metadata-only answer; secondary long
+  * columns carry theirs in [[ColStat.sum]]. */
 private[sources] final case class PartMeta(
     path: String, rows: Long, kMin: Long, kMax: Long, bloomHex: String,
     sMin: Option[String] = None, sMax: Option[String] = None,
@@ -587,15 +499,6 @@ object ManifestSink {
     * committed, or expired by [[ManifestMaintenance]]) fails loudly —
     * silently serving the head instead would be a time-travel
     * correctness bug. */
-  /** Paths are URL-encoded inside manifest lines so a table path
-    * containing `,` `"` `}` (all legal in POSIX paths) can never
-    * corrupt the line-oriented record format; the field regex then
-    * only ever sees the percent-encoded form. */
-  private[sources] def encPath(p: String): String =
-    java.net.URLEncoder.encode(p, "UTF-8")
-  private def decPath(p: String): String =
-    java.net.URLDecoder.decode(p, "UTF-8")
-
   def readManifest(conf: Configuration, dir: String,
       version: Option[Int]): Seq[(String, Long, Long, Long)] =
     readManifestMeta(conf, dir, version)
@@ -604,26 +507,19 @@ object ManifestSink {
   /** Full per-part records including the bloom field. */
   private[sources] def readManifestMeta(conf: Configuration, dir: String,
       version: Option[Int]): Seq[PartMeta] =
-    metaFromLines(manifestLines(conf, dir, version))
+    MetaJson.decodeParts(manifestLines(conf, dir, version))
 
   /** The MAIN version a branch's first commit forked from (None for
     * legacy branches predating fork recording; 0 = main had no
     * version files yet, i.e. a genuinely-empty fork base). */
   private[sources] def readBranchFork(conf: Configuration, dir: String,
       branch: String): Option[Int] =
-    manifestLines(conf, dir, Some(1), Some(branch))
-      .find(_.startsWith("{\"version\":"))
-      .flatMap(l => """"fork":(\d+)""".r.findFirstMatchIn(l)
-        .map(_.group(1).toInt))
+    MetaJson.decodeHeader(manifestLines(conf, dir, Some(1), Some(branch))).fork
 
   /** The snapshot's operation label ("" for pre-label snapshots). */
   private[sources] def readOp(conf: Configuration, dir: String,
       version: Option[Int]): String =
-    manifestLines(conf, dir, version)
-      .find(_.startsWith("{\"version\":"))
-      .flatMap(l => """"op":"([^"]*)"""".r.findFirstMatchIn(l)
-        .map(m => decPath(m.group(1))))
-      .getOrElse("")
+    MetaJson.decodeHeader(manifestLines(conf, dir, version)).op
 
   /** Parts + (schema, column mapping) from ONE manifest read — the
     * scan planner's shape (a second read of a 100k-part manifest just
@@ -632,69 +528,14 @@ object ManifestSink {
       version: Option[Int] = None, branch: Option[String] = None)
       : (Seq[PartMeta], Option[(StructType, ColMap)]) = {
     val lines = manifestLines(conf, dir, version, branch)
-    (metaFromLines(lines), schemaFromLines(lines).map { s =>
-      (s, colMapFromLines(lines).getOrElse(ColMap.identity(s.fields.length)))
-    })
+    (MetaJson.decodeParts(lines), withColMap(MetaJson.decodeHeader(lines)))
   }
 
-  private def metaFromLines(lines: Seq[String]): Seq[PartMeta] =
-    // data records are exactly the lines that START with {"path": —
-    // a schema header whose DDL happens to contain the literal text
-    // "path" (e.g. a column named path) can never be misclassified
-    lines.filter(_.startsWith("{\"path\":")).map { line =>
-      def field(k: String): String = {
-        val m = ("\"" + k + "\":\"?([^,\"}]*)\"?").r.findFirstMatchIn(line)
-        m.map(_.group(1)).getOrElse("")
-      }
-      // smin/smax are URL-encoded like paths (arbitrary user strings
-      // must not break the line format); absent field ⇒ None — old
-      // manifests stay readable and simply never string-prune
-      def strField(k: String): Option[String] = {
-        val v = field(k)
-        if (v.isEmpty && !line.contains("\"" + k + "\":")) None
-        else Some(decPath(v))
-      }
-      val dvRows = field("dvrows")
-      val b = field("bytes")
-      val bk = field("bucket")
-      val nbk = field("nbuckets")
-      val cl = field("cols")
-      val kn = field("knulls")
-      val sn = field("snulls")
-      val ks = field("ksum")
-      PartMeta(decPath(field("path")), field("rows").toLong,
-        field("min").toLong, field("max").toLong, field("bloom"),
-        strField("smin"), strField("smax"), field("dv"),
-        decPath(field("dvref")),
-        if (dvRows.isEmpty) 0L else dvRows.toLong,
-        if (b.isEmpty) 0L else b.toLong,
-        if (bk.isEmpty) -1 else bk.toInt,
-        if (nbk.isEmpty) 0 else nbk.toInt,
-        field("sorted") == "1",
-        cstats = ColStat.decode(decPath(field("cstats"))),
-        // the part's LINE LAYOUT as stable field ids (column mapping);
-        // absent ⇒ the legacy identity rule: slot j holds field id j
-        cols = if (cl.isEmpty) Seq.empty
-          else cl.split('-').toSeq.map(_.toInt),
-        // null counts of the key / first-string columns; -1 (absent,
-        // legacy) always means "unknown — cannot prune or answer"
-        kNulls = if (kn.isEmpty) -1L else kn.toLong,
-        sNulls = if (sn.isEmpty) -1L else sn.toLong,
-        // key-column sum; absent = untracked (legacy) or overflowed
-        kSum = if (ks.isEmpty) None else Some(ks.toLong),
-        // pending equality-delete clauses; absent (legacy) = none
-        eq = EqClause.decode(decPath(field("eq"))),
-        // nested sub-layouts (`pid:0-1-2|pid2:0-1`); absent ⇒ identity
-        ncols = {
-          val nc = field("ncols")
-          if (nc.isEmpty) Map.empty[Int, Seq[Int]]
-          else nc.split('|').map { e =>
-            val Array(pid, sids) = e.split(":", 2)
-            pid.toInt -> (if (sids.isEmpty) Seq.empty[Int]
-              else sids.split('-').toSeq.map(_.toInt))
-          }.toMap
-        })
-    }
+  /** The header's (schema, column mapping) pair; an absent mapping is
+    * the identity over the schema's fields. */
+  private def withColMap(h: ManifestHeader): Option[(StructType, ColMap)] =
+    h.schema.map(s =>
+      (s, h.colmap.getOrElse(ColMap.identity(s.fields.length))))
 
   /** TABLE-LEVEL LAYOUT SPEC (`_TABLE.json`): created by `CREATE
     * TABLE … PARTITIONED BY (bucket(n, col))` / `(col)` and read by
@@ -707,37 +548,28 @@ object ManifestSink {
     * SPJ while generations are mixed), and compaction migrates data
     * to the head spec. An optional `orderBy` field carries the
     * table's WRITE ORDERED BY column for unpartitioned layouts
-    * (range-distributed, sorted parts → tight min/max pruning);
-    * legacy readers regex-parse the known fields and ignore it. */
+    * (range-distributed, sorted parts → tight min/max pruning). */
   private[sources] def writeTableSpec(conf: Configuration, dir: String,
-      buckets: Int, bucketCol: String,
-      orderBy: Option[String] = None,
-      transform: Option[String] = None): Unit = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    fs.mkdirs(d)
-    val tmp = new Path(d,
-      s"._TABLE.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val ob = orderBy.filter(_.nonEmpty)
-      .fold("")(c => s""","orderBy":"${encPath(c)}"""")
-    // hidden-transform split layouts (days/hours over a TIMESTAMP
-    // column) tag the spec; legacy readers regex known fields only
-    val tf = transform.filter(_.nonEmpty)
-      .fold("")(t => s""","transform":"${encPath(t)}"""")
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"""{"buckets":$buckets,"bucketCol":"${encPath(bucketCol)}"$ob$tf}\n"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    // replace-in-place (RENAME COLUMN of the bucket column and
-    // set_layout rewrite the spec): Hadoop's local rename refuses an
-    // existing target
-    val target = new Path(d, "_TABLE.json")
-    if (fs.exists(target)) fs.delete(target, false)
-    if (!fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"table spec publish failed at $dir")
-    }
+      spec: TableSpec): Unit =
+    MetaJson.replace(conf, new Path(dir), TableFile,
+      MetaJson.encodeTableSpec(spec))
+
+  private val TableFile = "_TABLE.json"
+
+  /** The table's layout spec, read once; all None when absent. */
+  private[sources] def readTableSpec(conf: Configuration,
+      dir: String): TableSpec =
+    MetaJson.read(conf, new Path(dir, TableFile))
+      .fold(TableSpec())(MetaJson.decodeTableSpec)
+
+  /** Drop the layout spec entirely (`set_layout(..., spec =>
+    * 'none')`): later INSERTs take the plain unpartitioned write
+    * path; existing parts keep their recorded layout. */
+  private[sources] def clearTableSpec(conf: Configuration,
+      dir: String): Unit = {
+    val p = new Path(dir, TableFile)
+    val fs = p.getFileSystem(conf)
+    if (fs.exists(p)) fs.delete(p, false)
   }
 
   /** Declared secondary-bloom columns (the `graft.bloom_cols` table
@@ -779,13 +611,13 @@ object ManifestSink {
   private[sources] val NdvProp = "graft.ndv"
   private[sources] def encodeNdv(pairs: Seq[(String, Long)]): String =
     pairs.map { case (c, d) =>
-      s"${java.net.URLEncoder.encode(c, "UTF-8")}:$d" }.mkString(";")
+      s"${ManifestCodec.encodeString(c)}:$d" }.mkString(";")
   private[sources] def readNdv(conf: Configuration,
       dir: String): Map[String, Long] =
     readTableProps(conf, dir).get(NdvProp).toSeq
       .flatMap(_.split(";")).filter(_.nonEmpty).map { kv =>
         val i = kv.lastIndexOf(':')
-        java.net.URLDecoder.decode(kv.substring(0, i), "UTF-8") ->
+        ManifestCodec.decodeString(kv.substring(0, i)) ->
           kv.substring(i + 1).toLong
       }.toMap
 
@@ -801,7 +633,7 @@ object ManifestSink {
   private[sources] def encodeHist(
       hists: Seq[(String, Double, Seq[(Long, Long, Long)])]): String =
     hists.map { case (c, height, bins) =>
-      s"${java.net.URLEncoder.encode(c, "UTF-8")}=$height:" +
+      s"${ManifestCodec.encodeString(c)}=$height:" +
         bins.map { case (lo, hi, ndv) => s"$lo,$hi,$ndv" }.mkString("|")
     }.mkString(";")
   private[sources] def readHist(conf: Configuration, dir: String)
@@ -810,7 +642,7 @@ object ManifestSink {
       .flatMap(_.split(";")).filter(_.nonEmpty).flatMap { kv =>
         scala.util.Try {
           val eq = kv.indexOf('=')
-          val c = java.net.URLDecoder.decode(kv.substring(0, eq), "UTF-8")
+          val c = ManifestCodec.decodeString(kv.substring(0, eq))
           val rest = kv.substring(eq + 1)
           val colon = rest.indexOf(':')
           val height = rest.substring(0, colon).toDouble
@@ -825,146 +657,50 @@ object ManifestSink {
 
   /** TABLE PROPERTIES (`TBLPROPERTIES` / `COMMENT ON TABLE` — the
     * Delta/Iceberg free-form key-value surface): stored in their own
-    * `_PROPS.json` sidecar (URL-encoded `k:v;…` — keys and values
-    * round-trip arbitrary text), replaced atomically like the layout
-    * spec. Properties are TABLE-level operational metadata (comments,
+    * `_PROPS.json` sidecar, replaced atomically like the layout spec.
+    * Properties are TABLE-level operational metadata (comments,
     * team ownership tags, policy knobs), not snapshot state — they
     * deliberately do not version with the data. */
   private[sources] def writeTableProps(conf: Configuration, dir: String,
       props: Map[String, String]): Unit = {
     val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    val target = new Path(d, "_PROPS.json")
-    if (props.isEmpty) { if (fs.exists(target)) fs.delete(target, false); return }
-    fs.mkdirs(d)
-    val tmp = new Path(d,
-      s"._PROPS.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val body = props.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${encPath(k)}:${encPath(v)}" }.mkString(";")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"props":"$body"}\n""".getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(target)) fs.delete(target, false)
-    if (!fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"table props publish failed at $dir")
-    }
+    if (props.isEmpty) {
+      val fs = d.getFileSystem(conf)
+      val target = new Path(d, PropsFile)
+      if (fs.exists(target)) fs.delete(target, false)
+    } else MetaJson.replace(conf, d, PropsFile, MetaJson.encodeProps(props))
   }
+
+  private val PropsFile = "_PROPS.json"
 
   private[sources] def readTableProps(conf: Configuration,
-      dir: String): Map[String, String] = {
-    val p = new Path(dir, "_PROPS.json")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val line = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().next() finally in.close()
-    """"props":"([^"]*)"""".r.findFirstMatchIn(line).map(_.group(1))
-      .filter(_.nonEmpty)
-      .map(_.split(';').toSeq.map { kv =>
-        val Array(k, v) = kv.split(":", 2)
-        decPath(k) -> decPath(v)
-      }.toMap).getOrElse(Map.empty)
-  }
+      dir: String): Map[String, String] =
+    MetaJson.read(conf, new Path(dir, PropsFile))
+      .fold(Map.empty[String, String])(MetaJson.decodeProps)
 
-  /** Drop the layout spec entirely (`set_layout(..., spec =>
-    * 'none')`): later INSERTs take the plain unpartitioned write
-    * path; existing parts keep their recorded layout. */
-  private[sources] def clearTableSpec(conf: Configuration,
-      dir: String): Unit = {
-    val p = new Path(dir, "_TABLE.json")
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) fs.delete(p, false)
-  }
-
-  private[sources] def readTableSpec(conf: Configuration,
-      dir: String): Option[(Int, String)] = {
-    val p = new Path(dir, "_TABLE.json")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val line = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().next() finally in.close()
-    val n = """"buckets":(\d+)""".r.findFirstMatchIn(line).map(_.group(1).toInt)
-    val c = """"bucketCol":"([^"]*)"""".r.findFirstMatchIn(line)
-      .map(m => decPath(m.group(1)))
-    for (nn <- n; cc <- c) yield (nn, cc)
-  }
-
-  /** The split spec's hidden time transform ("days" | "hours"), when
-    * the layout is `PARTITIONED BY (days(ts))` / `(hours(ts))` —
-    * always paired with a (0, col) [[readTableSpec]] result. */
-  private[sources] def readTableTransform(conf: Configuration,
-      dir: String): Option[String] = {
-    val p = new Path(dir, "_TABLE.json")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val line = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().next() finally in.close()
-    """"transform":"([^"]*)"""".r.findFirstMatchIn(line)
-      .map(m => decPath(m.group(1))).filter(_.nonEmpty)
-  }
-
-  /** The table's WRITE ORDERED BY column, when one is set. */
-  private[sources] def readTableOrder(conf: Configuration,
-      dir: String): Option[String] = {
-    val p = new Path(dir, "_TABLE.json")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val line = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().next() finally in.close()
-    """"orderBy":"([^"]*)"""".r.findFirstMatchIn(line)
-      .map(m => decPath(m.group(1))).filter(_.nonEmpty)
-  }
-
-  /** CHECK CONSTRAINTS (`_CONSTRAINTS.json`, one URL-encoded record
-    * line per constraint): stored by `ALTER TABLE ADD CONSTRAINT …
-    * CHECK (…)`, reported by the loaded table's `constraints()`, and
-    * from there ENFORCED BY THE ENGINE — Spark's
-    * ResolveTableConstraints injects a CheckInvariant over every
-    * write to the table, so a violating INSERT fails before a single
-    * part commits (the write is atomic: no partial data lands). The
-    * file is replaced atomically as a whole — constraint sets are
-    * tiny and change rarely. */
+  /** CHECK CONSTRAINTS (`_CONSTRAINTS.json`, one record line per
+    * constraint): stored by `ALTER TABLE ADD CONSTRAINT … CHECK (…)`,
+    * reported by the loaded table's `constraints()`, and from there
+    * ENFORCED BY THE ENGINE — Spark's ResolveTableConstraints injects
+    * a CheckInvariant over every write to the table, so a violating
+    * INSERT fails before a single part commits (the write is atomic:
+    * no partial data lands). The file is replaced atomically as a
+    * whole — constraint sets are tiny and change rarely. */
   private[sources] def writeConstraints(conf: Configuration, dir: String,
       constraints: Seq[(String, String)]): Unit = {
     val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    fs.mkdirs(d)
-    val target = new Path(d, "_CONSTRAINTS.json")
-    if (constraints.isEmpty) { fs.delete(target, false); return }
-    val tmp = new Path(d,
-      s"._CONSTRAINTS.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try constraints.foreach { case (n, sql) =>
-      out.write(
-        s"""{"name":"${encPath(n)}","sql":"${encPath(sql)}"}\n"""
-          .getBytes("UTF-8"))
-    } finally out.close()
-    if (fs.exists(target)) fs.delete(target, false)
-    if (!fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"constraint publish failed at $dir")
-    }
+    if (constraints.isEmpty)
+      d.getFileSystem(conf).delete(new Path(d, ConstraintsFile), false)
+    else MetaJson.replace(conf, d, ConstraintsFile,
+      MetaJson.encodeConstraints(constraints))
   }
 
+  private val ConstraintsFile = "_CONSTRAINTS.json"
+
   private[sources] def readConstraints(conf: Configuration,
-      dir: String): Seq[(String, String)] = {
-    val p = new Path(dir, "_CONSTRAINTS.json")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Seq.empty
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toList finally in.close()
-    lines.filter(_.nonEmpty).map { line =>
-      def field(k: String): String =
-        ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(line)
-          .map(m => decPath(m.group(1))).getOrElse("")
-      (field("name"), field("sql"))
-    }
-  }
+      dir: String): Seq[(String, String)] =
+    MetaJson.read(conf, new Path(dir, ConstraintsFile))
+      .fold(Seq.empty[(String, String)])(MetaJson.decodeConstraints)
 
   /** SNAPSHOT TAGS — immutable named refs (`_TAG.<name>.json`
     * holding the version number): `VERSION AS OF 'name'` resolves
@@ -980,35 +716,18 @@ object ManifestSink {
       s"invalid tag name '$name' (letters, digits, '_', '-' only)")
     require(listVersions(conf, dir).contains(version),
       s"cannot tag version $version at $dir: no such snapshot")
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    val target = new Path(d, tagFile(name))
-    if (fs.exists(target)) throw new IllegalStateException(
-      s"tag '$name' already exists at $dir (tags are immutable; " +
-        "drop it first to retag)")
-    val tmp = new Path(d,
-      s".${tagFile(name)}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"version":$version}\n""".getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      // the atomic rename lost to a concurrent tagger — same name,
-      // fail loudly like the exists check would have
-      throw new IllegalStateException(s"tag '$name' already exists at $dir")
-    }
+    // the claim fails for an existing tag, including one a concurrent
+    // tagger published first
+    if (!MetaJson.claim(conf, new Path(dir), tagFile(name),
+        MetaJson.encodeTag(version)))
+      throw new IllegalStateException(
+        s"tag '$name' already exists at $dir (tags are immutable; " +
+          "drop it first to retag)")
   }
 
   private[sources] def readTag(conf: Configuration, dir: String,
-      name: String): Option[Int] = {
-    val p = new Path(dir, tagFile(name))
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val line = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().next() finally in.close()
-    """"version":(\d+)""".r.findFirstMatchIn(line).map(_.group(1).toInt)
-  }
+      name: String): Option[Int] =
+    MetaJson.read(conf, new Path(dir, tagFile(name))).map(MetaJson.decodeTag)
 
   private[sources] def listTags(conf: Configuration,
       dir: String): Seq[(String, Int)] = {
@@ -1038,84 +757,15 @@ object ManifestSink {
     * (additive evolution never rewrites history). */
   def readSchema(conf: Configuration, dir: String,
       version: Option[Int]): Option[StructType] =
-    schemaFromLines(manifestLines(conf, dir, version))
-
-  private def schemaFromLines(lines: Seq[String]): Option[StructType] =
-    lines.find(_.startsWith("{\"schema\":"))
-      .map { line =>
-        val ddl = line.stripPrefix("{\"schema\":\"").stripSuffix("\"}")
-          .replace("\\\"", "\"").replace("\\\\", "\\")
-        StructType.fromDDL(ddl)
-      }
-
-  private val ColMapIdsRe = """"colmap":"([0-9-]*)"""".r
-  private val ColMapNextRe = """"nextid":(\d+)""".r
-  private val ColMapRetRe = """"retired":"([^"]*)"""".r
-
-  /** The snapshot's [[ColMap]] header; absent (every pre-mapping
-    * manifest) ⇒ identity over the snapshot schema's field count. */
-  private def colMapFromLines(lines: Seq[String]): Option[ColMap] =
-    lines.find(_.startsWith("{\"colmap\":")).map { line =>
-      val ids = ColMapIdsRe.findFirstMatchIn(line).map(_.group(1))
-        .filter(_.nonEmpty).map(_.split('-').toSeq.map(_.toInt))
-        .getOrElse(Seq.empty)
-      val next = ColMapNextRe.findFirstMatchIn(line).map(_.group(1).toInt)
-        .getOrElse(if (ids.isEmpty) 0 else ids.max + 1)
-      val retired = ColMapRetRe.findFirstMatchIn(line).map(_.group(1))
-        .filter(_.nonEmpty)
-        .map(_.split(',').toSeq.map(decPath)).getOrElse(Seq.empty)
-      val defaults = """"defaults":"([^"]*)"""".r.findFirstMatchIn(line)
-        .map(_.group(1)).filter(_.nonEmpty).map(_.split(';').toSeq.map {
-          entry =>
-            val Array(id, cur, ex) = entry.split(":", 3)
-            id.toInt -> (decPath(cur), decPath(ex))
-        }.toMap).getOrElse(Map.empty[Int, (String, String)])
-      // nested field ids (additive field, see renderColMap):
-      // `pid=id0-id1~next~ret0/ret1|...`
-      val nested = """"nestedmap":"([^"]*)"""".r.findFirstMatchIn(line)
-        .map(_.group(1)).filter(_.nonEmpty).map(_.split('|').toSeq.map {
-          entry =>
-            val Array(pid, body) = entry.split("=", 2)
-            val Array(nids, nnext, nret) = body.split("~", 3)
-            pid.toInt -> ColMap.Nested(
-              if (nids.isEmpty) Seq.empty
-              else nids.split('-').toSeq.map(_.toInt),
-              nnext.toInt,
-              if (nret.isEmpty) Seq.empty
-              else nret.split('/').toSeq.map(decPath))
-        }.toMap).getOrElse(Map.empty[Int, ColMap.Nested])
-      ColMap(ids, next, retired, defaults, nested)
-    }
+    MetaJson.decodeHeader(manifestLines(conf, dir, version)).schema
 
   /** Snapshot schema + column mapping, read from ONE manifest
     * resolution (the pair is only consistent when both come from the
     * same lines). */
   private[sources] def readSchemaAndColMap(conf: Configuration,
       dir: String, version: Option[Int] = None,
-      branch: Option[String] = None): Option[(StructType, ColMap)] = {
-    val lines = manifestLines(conf, dir, version, branch)
-    schemaFromLines(lines).map { s =>
-      (s, colMapFromLines(lines).getOrElse(ColMap.identity(s.fields.length)))
-    }
-  }
-
-  private def renderColMap(cm: ColMap): String = {
-    // defaults are an ADDITIVE field (legacy readers regex the known
-    // fields and ignore it): `id:enc(cur):enc(exists);...`
-    val dflt = if (cm.defaults.isEmpty) ""
-      else s""","defaults":"${cm.defaults.toSeq.sortBy(_._1)
-        .map { case (id, (cur, ex)) =>
-          s"$id:${encPath(cur)}:${encPath(ex)}" }.mkString(";")}""""
-    // nested mappings, additive like defaults (legacy readers ignore
-    // the field): structural chars are never produced by encPath
-    val nst = if (cm.nested.isEmpty) ""
-      else s""","nestedmap":"${cm.nested.toSeq.sortBy(_._1)
-        .map { case (pid, n) =>
-          s"$pid=${n.ids.mkString("-")}~${n.nextId}~" +
-            n.retired.map(encPath).mkString("/") }.mkString("|")}""""
-    s"""{"colmap":"${cm.ids.mkString("-")}","nextid":${cm.nextId},""" +
-      s""""retired":"${cm.retired.map(encPath).mkString(",")}"$dflt$nst}"""
-  }
+      branch: Option[String] = None): Option[(StructType, ColMap)] =
+    withColMap(MetaJson.decodeHeader(manifestLines(conf, dir, version, branch)))
 
   /** The mapping the published snapshot carries: an explicit override
     * (DDL — rename/drop/add know their exact result), or derivation
@@ -1220,7 +870,6 @@ object ManifestSink {
         "(letters, digits, '_', '-' only)")
     }
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
     // strip default-value field metadata before rendering: the catalog
     // re-attaches CURRENT_DEFAULT/EXISTS_DEFAULT on loadTable (Spark's
     // default resolution reads it), and Spark 4's toDDL renders that
@@ -1237,76 +886,26 @@ object ManifestSink {
         f.copy(metadata = b.build())
       } else f
     })
-    val ddl = ddlSchema.toDDL.replace("\\", "\\\\").replace("\"", "\\\"")
+    val ddl = ddlSchema.toDDL
     def render(version: Int, parts: Seq[PartMeta], cm: ColMap,
-        fork: Option[Int] = None): Array[Byte] = {
-      val content = new StringBuilder
-      content.append(s"""{"schema":"$ddl"}""").append('\n')
-      // written only once non-trivial, so a table that never renames
-      // or drops keeps its manifests byte-compatible with pre-mapping
-      // readers of this format
-      if (!cm.isIdentity || cm.retired.nonEmpty ||
+        fork: Option[Int] = None): String =
+      MetaJson.encodeManifest(ddl,
+        // written only once non-trivial: a table that never renames
+        // or drops carries no mapping line
+        Some(cm).filter(cm => !cm.isIdentity || cm.retired.nonEmpty ||
           cm.nextId != schema.fields.length || cm.defaults.nonEmpty ||
-          cm.nested.nonEmpty)
-        content.append(renderColMap(cm)).append('\n')
-      if (history) {
+          cm.nested.nonEmpty),
         // the OPERATION KIND rides the version record (Delta's
         // DESCRIBE HISTORY `operation` / Iceberg's snapshot summary):
-        // pure lineage metadata, parsed by `.history` only
-        val opField = if (op.isEmpty) "" else s""","op":"${encPath(op)}""""
-        // a branch's FIRST commit records the MAIN version it forked
-        // from: the implicit fork would otherwise be reconstructible
-        // only by containment search, which cannot distinguish a
-        // genuine fork-from-empty from a branch commit that rewrote
-        // every fork part (both are "contained" in an empty main
-        // snapshot vacuously) — see ManifestMaintenance.cherrypick
-        val forkField = fork.fold("")(f => s""","fork":$f""")
-        content.append(s"""{"version":$version$opField$forkField}""")
-          .append('\n')
-      }
-      parts.foreach { m =>
-        val b = if (m.bloomHex.isEmpty) "" else s""","bloom":"${m.bloomHex}""""
-        val s = (m.sMin, m.sMax) match {
-          case (Some(mn), Some(mx)) =>
-            s""","smin":"${encPath(mn)}","smax":"${encPath(mx)}""""
-          case _ => ""
-        }
-        val d = if (m.dvHex.isEmpty) "" else s""","dv":"${m.dvHex}""""
-        val r = if (m.dvRef.isEmpty) ""
-          else s""","dvref":"${encPath(m.dvRef)}","dvrows":${m.dvCard}"""
-        val by = if (m.bytes <= 0) "" else s""","bytes":${m.bytes}"""
-        val bk = if (m.nbuckets <= 0) ""
-          else s""","bucket":${m.bucket},"nbuckets":${m.nbuckets}"""
-        val so = if (!m.sorted) "" else s""","sorted":1"""
-        val cs = if (m.cstats.isEmpty) ""
-          else s""","cstats":"${encPath(ColStat.encode(m.cstats))}""""
-        val co = if (m.cols.isEmpty) ""
-          else s""","cols":"${m.cols.mkString("-")}""""
-        val nc = if (m.ncols.isEmpty) ""
-          else s""","ncols":"${m.ncols.toSeq.sortBy(_._1).map {
-            case (pid, sids) => s"$pid:${sids.mkString("-")}"
-          }.mkString("|")}""""
-        val kn = if (m.kNulls < 0) "" else s""","knulls":${m.kNulls}"""
-        val sn = if (m.sNulls < 0) "" else s""","snulls":${m.sNulls}"""
-        val ks = m.kSum.fold("")(v => s""","ksum":$v""")
-        val ef = if (m.eq.isEmpty) ""
-          else s""","eq":"${encPath(EqClause.encode(m.eq))}""""
-        content.append(
-          s"""{"path":"${encPath(m.path)}","rows":${m.rows},""" +
-            s""""min":${m.kMin},"max":${m.kMax}$b$s$d$r$by$bk$so$cs$co$nc$kn$sn$ks$ef}""")
-          .append('\n')
-      }
-      content.toString.getBytes("UTF-8")
-    }
-    def write(name: String, bytes: Array[Byte], overwrite: Boolean): Boolean = {
-      val target = new Path(dir, name)
-      val tmp = new Path(dir, s".$name.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      if (!overwrite && fs.exists(target)) { fs.delete(tmp, false); return false }
-      if (overwrite && fs.exists(target)) fs.delete(target, false)
-      if (!fs.rename(tmp, target)) { fs.delete(tmp, false); false } else true
-    }
+        // pure lineage metadata, parsed by `.history` only. A branch's
+        // FIRST commit records the MAIN version it forked from: the
+        // implicit fork would otherwise be reconstructible only by
+        // containment search, which cannot distinguish a genuine
+        // fork-from-empty from a branch commit that rewrote every fork
+        // part (both are "contained" in an empty main snapshot
+        // vacuously) — see ManifestMaintenance.cherrypick
+        if (history) Some((version, op, fork)) else None, parts)
+
     // column mapping bookkeeping shared by both commit paths: resolve
     // the mapping (override from DDL, else derive from the head), and
     // stamp every NEWLY-ADDED part with its line layout (the published
@@ -1340,8 +939,7 @@ object ManifestSink {
       val head = readManifestMeta(conf, path, None)
       val (parts, cm) =
         finish(head, readSchemaAndColMap(conf, path), rebase(head))
-      if (!write(ManifestFile, render(0, parts, cm), overwrite = true))
-        throw new java.io.IOException(s"cannot publish $dir/$ManifestFile")
+      MetaJson.replace(conf, dir, ManifestFile, render(0, parts, cm))
       return 0
     }
     // OPTIMISTIC CONCURRENCY (the Iceberg commit loop): a history
@@ -1358,8 +956,7 @@ object ManifestSink {
     // raced head pointer can never serve a dropped/old snapshot.
     var attempts = 0
     var committed = -1
-    var finalParts: Seq[PartMeta] = Seq.empty
-    var finalColMap: ColMap = ColMap.identity(schema.fields.length)
+    var body = ""
     while (committed < 0) {
       attempts += 1
       if (attempts > 1000) throw new java.io.IOException(
@@ -1432,17 +1029,14 @@ object ManifestSink {
       }
       val claim = branch.map(branchVersionFile(_, version))
         .getOrElse(versionFile(version))
-      if (write(claim, render(version, parts, cm, fork), overwrite = false)) {
-        committed = version
-        finalParts = parts
-        finalColMap = cm
-      }
+      body = render(version, parts, cm, fork)
+      if (MetaJson.claim(conf, dir, claim, body)) committed = version
     }
     // the rewritable head POINTER tracks only the MAIN line; branch
-    // heads resolve purely from their newest version file
-    if (branch.isEmpty)
-      write(ManifestFile, render(committed, finalParts, finalColMap),
-        overwrite = true)
+    // heads resolve purely from their newest version file. A racing
+    // committer may rewrite the pointer first: history readers never
+    // trust it, so losing that race is not a failed commit
+    if (branch.isEmpty) MetaJson.tryReplace(conf, dir, ManifestFile, body)
     committed
   }
 
@@ -1568,11 +1162,11 @@ object ManifestSink {
     * and schema — main-head fallback while the branch has no commits. */
   def readBranchMeta(conf: Configuration, dir: String,
       branch: String, version: Option[Int] = None): Seq[PartMeta] =
-    metaFromLines(manifestLines(conf, dir, version, Some(branch)))
+    MetaJson.decodeParts(manifestLines(conf, dir, version, Some(branch)))
 
   def readBranchSchema(conf: Configuration, dir: String,
       branch: String): Option[StructType] =
-    schemaFromLines(manifestLines(conf, dir, None, Some(branch)))
+    MetaJson.decodeHeader(manifestLines(conf, dir, None, Some(branch))).schema
 }
 
 private[sources] class ManifestTable(

@@ -1160,7 +1160,7 @@ private[sources] class ManifestScan(
     rowLevelOwner.foreach(_.recordScan(parts, baseVersion))
     parts.map(p =>
       ManifestPartition(p.path, p.rows, p.dvHex, p.dvRef, p.bucket,
-        p.cols, EqClause.encode(p.eq), p.ncols)).toArray
+        p.cols, p.eq, p.ncols)).toArray
   }
 
   override def supportedCustomMetrics()
@@ -1307,8 +1307,8 @@ private[sources] class ManifestScan(
   * when EVERY planned part carries a consistent bucket. */
 private[sources] case class ManifestPartition(
     path: String, rows: Long, dvHex: String = "", dvRef: String = "",
-    bucket: Int = -1, cols: Seq[Int] = Seq.empty, eqBlob: String = "",
-    ncols: Map[Int, Seq[Int]] = Map.empty)
+    bucket: Int = -1, cols: Seq[Int] = Seq.empty,
+    eq: Seq[EqClause] = Seq.empty, ncols: Map[Int, Seq[Int]] = Map.empty)
     extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
@@ -1446,7 +1446,7 @@ private[sources] class ManifestMicroBatchStream(
       .filterNot(m => before.contains(m.path))
       .map(m =>
         ManifestPartition(m.path, m.rows, m.dvHex, m.dvRef,
-          cols = m.cols, eqBlob = EqClause.encode(m.eq),
+          cols = m.cols, eq = m.eq,
           ncols = m.ncols): InputPartition)
       .toArray
   }
@@ -1570,9 +1570,9 @@ private[sources] class ManifestCdfScan(
   * visible rows under a deletion vector), `=true` emits exactly the
   * lines IN the mask (the newly-deleted ordinals of a vector commit —
   * precise row-level CDC without reading a single surviving row).
-  * `eqBlob` carries the part's equality-delete clauses as of the
+  * `eq` carries the part's equality-delete clauses as of the
   * REPLAYED state — matching rows are excluded from any replay (they
-  * were already deleted); `emitOnlyEqBlob` inverts it for the eq
+  * were already deleted); `emitOnlyEq` inverts it for the eq
   * commit's own diff: emit exactly the rows the NEW clauses remove —
   * row-level CDC for equality deletes, enumerated at read time by
   * evaluating the clause against each line. */
@@ -1580,7 +1580,7 @@ private[sources] case class ManifestCdfPartition(
     path: String, changeType: String, version: Int,
     maskHex: String = "", emitOnlyMask: Boolean = false,
     cols: Seq[Int] = Seq.empty,
-    eqBlob: String = "", emitOnlyEqBlob: String = "",
+    eq: Seq[EqClause] = Seq.empty, emitOnlyEq: Seq[EqClause] = Seq.empty,
     ncols: Map[Int, Seq[Int]] = Map.empty)
     extends InputPartition
 
@@ -1633,15 +1633,15 @@ private[sources] class ManifestChangeFeedStream(
       val cur = ManifestSink.readManifestMeta(conf.value, path, Some(v))
       val curPaths = cur.map(_.path).toSet
       // replays always honor the part's EQUALITY-DELETE clauses as of
-      // the replayed state (`eqBlob` masks matching rows out), so
+      // the replayed state (`eq` masks matching rows out), so
       // inserts/deletes never leak rows an earlier eq commit removed
       val inserts = cur.filterNot(m => prev.contains(m.path))
         .map(m => ManifestCdfPartition(m.path, "insert", v, vecHex(m),
-          cols = m.cols, eqBlob = EqClause.encode(m.eq),
+          cols = m.cols, eq = m.eq,
           ncols = m.ncols))
       val deletes = prev.valuesIterator.filterNot(m => curPaths(m.path))
         .map(m => ManifestCdfPartition(m.path, "delete", v, vecHex(m),
-          cols = m.cols, eqBlob = EqClause.encode(m.eq),
+          cols = m.cols, eq = m.eq,
           ncols = m.ncols)).toSeq
       // a retained part whose DELETION VECTOR grew: replay exactly
       // the newly-flagged ordinals as deletes — true row-level CDC
@@ -1660,7 +1660,7 @@ private[sources] class ManifestChangeFeedStream(
             if (DeleteVector.popCount(delta) == 0) None
             else Some(ManifestCdfPartition(m.path, "delete", v,
               DeleteVector.toHex(delta), emitOnlyMask = true,
-              cols = m.cols, eqBlob = EqClause.encode(old.eq),
+              cols = m.cols, eq = old.eq,
               ncols = m.ncols))
           case _ => None
         }
@@ -1679,8 +1679,8 @@ private[sources] class ManifestChangeFeedStream(
         prev.get(m.path) match {
           case Some(old) if m.eq.size > old.eq.size =>
             Some(ManifestCdfPartition(m.path, "delete", v, vecHex(m),
-              cols = m.cols, eqBlob = EqClause.encode(old.eq),
-              emitOnlyEqBlob = EqClause.encode(m.eq.drop(old.eq.size)),
+              cols = m.cols, eq = old.eq,
+              emitOnlyEq = m.eq.drop(old.eq.size),
               ncols = m.ncols))
           case _ => None
         }
@@ -1753,9 +1753,9 @@ private[sources] class ManifestCdfReaderFactory(
       // diff — emit exactly the rows its new clauses match
       private val eqDflts =
         EqMask.defaultToks(baseSchema, ids, initDefaults)
-      private val dropEq = EqMask.matchers(part.eqBlob, part.cols, eqDflts)
+      private val dropEq = EqMask.matchers(part.eq, part.cols, eqDflts)
       private val onlyEq =
-        EqMask.matchers(part.emitOnlyEqBlob, part.cols, eqDflts)
+        EqMask.matchers(part.emitOnlyEq, part.cols, eqDflts)
       private val in = path.getFileSystem(conf.value).open(path)
       private val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       private var current: InternalRow = _
@@ -1914,9 +1914,9 @@ private[sources] object EqMask {
       catch { case _: NumberFormatException => false }
     }
 
-  def matchers(blob: String, partCols: Seq[Int],
+  def matchers(clauses: Seq[EqClause], partCols: Seq[Int],
       defaults: Map[Int, String] = Map.empty): Array[Matcher] =
-    EqClause.decode(blob).map { c =>
+    clauses.map { c =>
       val slot =
         if (partCols.isEmpty) c.fieldId
         else {
@@ -2031,7 +2031,7 @@ private[sources] class ManifestReaderFactory(
       // by stable field id, zero per-row decode; default-aware so a
       // clause on a defaulted later-added column still drops the
       // pre-ADD rows that serve the frozen default
-      private val eqMatchers = EqMask.matchers(part.eqBlob, part.cols,
+      private val eqMatchers = EqMask.matchers(part.eq, part.cols,
         EqMask.defaultToks(schema, ids, initDefaults))
       private def eqDeleted(cols: Array[String]): Boolean =
         EqMask.matches(eqMatchers, cols)
@@ -2128,6 +2128,12 @@ private[sources] object ManifestCodec {
   def encodeString(s: String): String =
     if (urlSafe(s)) s else java.net.URLEncoder.encode(s, "UTF-8")
 
+  /** Inverse of [[encodeString]]: no escape bytes ⇒ the encoded form
+    * IS the value. */
+  def decodeString(s: String): String =
+    if (s.indexOf('%') < 0 && s.indexOf('+') < 0) s
+    else java.net.URLDecoder.decode(s, "UTF-8")
+
   def encode(row: InternalRow, schema: StructType): String = {
     val sb = new StringBuilder
     var i = 0
@@ -2210,10 +2216,7 @@ private[sources] object ManifestCodec {
       case BooleanType   => s.toBoolean
       case TimestampType => s.toLong // micros, as the writer printed it
       case DateType      => s.toInt  // days
-      case StringType    =>
-        // no escape bytes ⇒ the encoded form IS the value
-        if (s.indexOf('%') < 0 && s.indexOf('+') < 0) UTF8String.fromString(s)
-        else UTF8String.fromString(java.net.URLDecoder.decode(s, "UTF-8"))
+      case StringType    => UTF8String.fromString(decodeString(s))
       case d: DecimalType =>
         Decimal(new java.math.BigDecimal(s), d.precision, d.scale)
       case BinaryType    => java.util.Base64.getDecoder.decode(s)

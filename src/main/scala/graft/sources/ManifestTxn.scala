@@ -64,8 +64,9 @@ object ManifestTxn {
   def branchOf(id: String): String = s"txn-$id"
 
   private def txnRoot(warehouse: String) = new Path(warehouse, "_txn")
+  private def markerName(id: String) = s"$id.commit"
   private def markerPath(warehouse: String, id: String) =
-    new Path(txnRoot(warehouse), s"$id.commit")
+    new Path(txnRoot(warehouse), markerName(id))
   private def appliedPath(warehouse: String, id: String) =
     new Path(txnRoot(warehouse), s"$id.applied")
 
@@ -96,48 +97,20 @@ object ManifestTxn {
       TxnEntry(dir, bvs.last, fork)
     }
     val fs = txnRoot(warehouse).getFileSystem(conf)
-    fs.mkdirs(txnRoot(warehouse))
-    val target = markerPath(warehouse, id)
-    if (fs.exists(target) || fs.exists(appliedPath(warehouse, id)))
+    if (fs.exists(markerPath(warehouse, id)) ||
+        fs.exists(appliedPath(warehouse, id)))
       throw new IllegalStateException(s"txn '$id' already committed")
-    val tmp = new Path(txnRoot(warehouse),
-      s".$id.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val body = entries.map(e =>
-      s"""{"dir":"${e.dir.replace("\\", "\\\\").replace("\"", "\\\"")}",""" +
-        s""""branchHead":${e.branchHead},"forkBase":${e.forkBase}}""")
-      .mkString("", "\n", "\n").getBytes("UTF-8")
-    val out = fs.create(tmp, true)
-    try out.write(body) finally out.close()
     // the COMMIT POINT: one atomic no-overwrite rename
-    if (fs.exists(target) || !fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
+    if (!MetaJson.claim(conf, txnRoot(warehouse), markerName(id),
+        MetaJson.encodeTxnMarker(entries)))
       throw new java.io.IOException(s"cannot claim txn marker for '$id'")
-    }
     entries
   }
 
   private def readMarker(conf: Configuration, warehouse: String,
-      id: String): Option[Seq[TxnEntry]] = {
-    val fs = txnRoot(warehouse).getFileSystem(conf)
-    val p = markerPath(warehouse, id)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-      new String(bos.toByteArray, "UTF-8")
-    } finally in.close()
-    val dirRe = """"dir":"((?:[^"\\]|\\.)*)"""".r
-    val bhRe = """"branchHead":(\d+)""".r
-    val fbRe = """"forkBase":(\d+)""".r
-    Some(text.split("\n").toSeq.filter(_.nonEmpty).map { l =>
-      TxnEntry(
-        dirRe.findFirstMatchIn(l).get.group(1)
-          .replace("\\\"", "\"").replace("\\\\", "\\"),
-        bhRe.findFirstMatchIn(l).get.group(1).toInt,
-        fbRe.findFirstMatchIn(l).get.group(1).toInt)
-    })
-  }
+      id: String): Option[Seq[TxnEntry]] =
+    MetaJson.read(conf, markerPath(warehouse, id))
+      .map(MetaJson.decodeTxnMarker)
 
   /** Phase 3 — idempotent roll-forward of a committed marker: publish
     * each table's staged branch head as main version forkBase+1

@@ -207,6 +207,19 @@ class CatalogSpec extends SparkSpec {
       .head.getLong(0) === 3L, "failed rename leaves the source intact")
   }
 
+  test("ALTER TABLE RENAME TO re-points part paths only: a row whose " +
+    "string value is the old table path still matches after the move") {
+    wh
+    val oldPath = s"$wh/ns/rn_self"
+    spark.sql("CREATE TABLE gcs.ns.rn_self (k BIGINT, s STRING)")
+    spark.sql(s"INSERT INTO gcs.ns.rn_self VALUES (1, '$oldPath')")
+    spark.sql("ALTER TABLE gcs.ns.rn_self RENAME TO ns.rn_self_moved")
+    // the part's string stats (smin/smax) hold the old path as USER
+    // data: re-pointing them would prune the only part away
+    assert(spark.sql("SELECT count(*) FROM gcs.ns.rn_self_moved " +
+      s"WHERE s = '$oldPath'").head.getLong(0) === 1L)
+  }
+
   test("TBLPROPERTIES: create/SET/UNSET round-trip, COMMENT ON TABLE " +
     "rides the comment key, CTAS carries them, RTAS replaces them") {
     wh

@@ -62,16 +62,16 @@ class ParSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(l)
     try {
       Par.fanOut(scanStage) // probe only — nothing executed
-      // listener events are posted asynchronously; give the bus a
-      // moment (a posted JobStart lands in well under this), then a
-      // control action below proves the listener itself works
-      Thread.sleep(500)
+      // listener events are posted asynchronously: drain the bus so a
+      // late JobStart is counted, then a control action below proves
+      // the listener itself works
+      org.apache.spark.graftbridge.TestBus.waitUntilEmpty(spark.sparkContext)
       assert(jobs.get() === 0,
         s"fanOut's partition probe ran ${jobs.get()} job(s) on a " +
           "scan-stage input — the free-probe contract is broken")
       // control: the listener DOES see jobs (no vacuous pass)
       scanStage.write.format("noop").mode("overwrite").save()
-      Thread.sleep(500)
+      org.apache.spark.graftbridge.TestBus.waitUntilEmpty(spark.sparkContext)
       assert(jobs.get() > 0, "listener control failed to observe a job")
     } finally spark.sparkContext.removeSparkListener(l)
   }
