@@ -477,7 +477,7 @@ FROM events""")),
 
     // --- STRING-STATS PART PRUNING through the manifest loop: the
     // table is clustered BY THE STRING column (range layout), so each
-    // part's smin/smax stats are selective and the equality predicate
+    // part's string min/max stats are selective and the equality predicate
     // prunes the scan to the one-or-two parts whose range can hold
     // 'purchase' — the categorical-column twin of the long-key range
     // pruning (ManifestSourceSpec proves file-level skipping by

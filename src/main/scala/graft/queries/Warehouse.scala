@@ -1641,7 +1641,7 @@ ORDER BY event_id""")),
     // hold 'click' rows, a MOR delete masks every click, and the
     // stats still say "might contain 'click'" — the probe plans all
     // 4 parts to return 0 rows. One ANALYZE later the same probe
-    // plans ZERO parts (smin rose past 'click' everywhere), with no
+    // plans ZERO parts (the string min rose past 'click' everywhere), with no
     // data file written. At 100 TB this is how zone maps recover
     // after GDPR-scale deletes without paying compaction: one scan,
     // one manifest. parts_before/parts_after/parts_analyzed ride the
@@ -2425,8 +2425,8 @@ FROM events WHERE event_type IS NOT NULL""")),
     // file-stats record after min/max/null_count): the writer streams
     // an EXACT running sum per tracked long column (Math.addExact —
     // a part whose sum would overflow records "untracked" instead of
-    // wrapping), the manifest carries it (PartMeta.kSum for the key,
-    // ColStat.sum for secondary longs), and a global SUM/COUNT/MIN/MAX
+    // wrapping), the manifest carries it in the column's ColStat.sum,
+    // and a global SUM/COUNT/MIN/MAX
     // pushes down completely: one summary row from KBs of metadata,
     // zero data files opened, at any table size. The fold itself also
     // add-exacts and DECLINES to a real scan on overflow — a metadata
@@ -3533,18 +3533,13 @@ WHERE event_id >= (SELECT (max(event_id) * 6) // 10 FROM events)""")),
         spark.sql("CREATE TABLE graftbl.wh.docs_nb (event_id BIGINT, " +
           "url STRING, value DOUBLE)")
         // the 8-part md5 source feeds TWO inserts (bloom table + its
-        // range-only twin): localCheckpoint computes the hash + the
-        // repartition exchange once; both writes read the blocks
-        // (guide §5 — r21 alternating pairs: 2.58 vs 2.74 s mean,
-        // within local noise; kept on the structural ground that one
-        // compute replaces two, which is what matters at real scale)
+        // range-only twin)
         Tables.events(spark, dir)
           .select(col("event_id"),
             concat(lit("u-"), md5(col("event_id").cast("string")))
               .as("url"),
             col("value"))
           .repartition(8, col("event_id"))
-          .localCheckpoint()
           .createOrReplaceTempView("graft_bloom2_src")
         spark.sql("INSERT INTO graftbl.wh.docs SELECT * FROM graft_bloom2_src")
         spark.sql(
@@ -3697,7 +3692,7 @@ WHERE event_id <= (SELECT max(event_id) // 4 FROM events)
     // one. The maintenance pass ranks the string domain into ≤256
     // rank buckets (one ranking pass; at 100 TB it runs over a
     // sample — the ids only steer clustering, pruning reads the
-    // parts' true smin/smax), assigns each row its 8-bit rank code,
+    // parts' true string min/max), assigns each row its 8-bit rank code,
     // and Morton-interleaves as for numeric dims. The gate proves a
     // (source, doc_id) BOX predicate plans strictly fewer parts
     // after `CALL compact(zorder => 'source,doc_id')` than the 8 it

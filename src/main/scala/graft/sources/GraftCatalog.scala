@@ -628,10 +628,11 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     *    previously-dropped column's position can never resurrect the
     *    dropped bytes still sitting in old parts.
     *  - RENAME changes the logical name only — field ids (and hence
-    *    every part's layout) are untouched. The old name is RETIRED:
-    *    reusing it is rejected, so per-part stats recorded under a
-    *    name always describe the same physical column (pruning stays
-    *    provably sound across renames).
+    *    every part's layout) are untouched; the key's and the first
+    *    string's per-part stats move to the new name in the same
+    *    commit. The old name is RETIRED: reusing it is rejected, so
+    *    per-part stats recorded under a name always describe the same
+    *    physical column (pruning stays provably sound across renames).
     *  - DROP removes the field from the logical schema; parts keep
     *    their bytes (time travel still sees the column) and readers
     *    simply never resolve the dropped id. Guarded against the two
@@ -657,6 +658,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     var schemaChanged = false
     var constraintsChanged = false
     var propsChanged = false
+    // renames (from, to) of the key / first string, in order: the
+    // commit moves every head part's record of them to the new name
+    // (see ManifestSink.keyAndFirstStr)
+    var renames = Seq.empty[(String, String)]
     def constraintRefs(name: String): Seq[String] =
       constraints.collect { case (n, sql)
         if ("""\b""" + java.util.regex.Pattern.quote(name) + """\b""").r
@@ -896,6 +901,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         }
         schemaChanged = true
         colmap = colmap.copy(retired = colmap.retired :+ s.fields(idx).name)
+        if (ManifestSink.keyAndFirstStr(s).contains(s.fields(idx).name))
+          renames :+= (s.fields(idx).name -> to)
         StructType(s.fields.updated(idx, s.fields(idx).copy(name = to)))
       // DROP COLUMN parent.child — metadata-only: the sub-field's id
       // leaves the nested mapping, so readers never resolve its slot
@@ -1067,7 +1074,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       ManifestSink.writeConstraints(conf, p, constraints)
     if (schemaChanged)
       ManifestSink.publishRebase(conf, p, widened, history = true,
-        rebase = head => head,
+        rebase = head => head.map(m => m.copy(cstats =
+          renames.foldLeft(m.cstats) { case (cs, (from, to)) =>
+            cs.get(from).fold(cs)(st => cs - from + (to -> st))
+          })),
         strictBase = if (baseVersion > 0) Some(baseVersion) else None,
         colmapOverride = Some(colmap), op = "alter")
     loadTable(ident)
@@ -1237,8 +1247,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   * against. */
 private[sources] class ManifestHistoryTable(path: String)
     extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read._
-  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.connector.read.{Scan, ScanBuilder => SB}
+  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  import org.apache.spark.unsafe.types.UTF8String
 
   private val historySchema = StructType.fromDDL(
     "version INT, operation STRING, n_parts BIGINT, n_rows BIGINT, " +
@@ -1249,54 +1260,25 @@ private[sources] class ManifestHistoryTable(path: String)
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): org.apache.spark.sql.connector.read.Scan =
-        new org.apache.spark.sql.connector.read.Scan with Batch {
-          override def readSchema(): StructType = historySchema
-          override def toBatch: Batch = this
-          override def description(): String =
-            s"graft.ManifestHistoryScan($path)"
-          override def planInputPartitions(): Array[InputPartition] = {
-            val conf = ManifestSink.driverConf()
-            val dir = new Path(path)
-            val fs = dir.getFileSystem(conf)
-            val rows = ManifestSink.listVersions(conf, path).map { v =>
-              val parts = ManifestSink.readManifestMeta(conf, path, Some(v))
-              val mtime = fs.getFileStatus(
-                new Path(dir, ManifestSink.versionFile(v))).getModificationTime
-              (Array[Long](v.toLong, parts.size.toLong,
-                parts.map(_.visibleRows).sum,
-                parts.count(_.hasDv).toLong,
-                parts.map(_.bytes).sum, mtime),
-                ManifestSink.readOp(conf, path, Some(v)))
-            }.toArray
-            Array(HistoryPartition(rows))
-          }
-          override def createReaderFactory(): PartitionReaderFactory =
-            new PartitionReaderFactory {
-              override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-                new PartitionReader[InternalRow] {
-                  private val rows = p.asInstanceOf[HistoryPartition].rows
-                  private var i = -1
-                  override def next(): Boolean = { i += 1; i < rows.length }
-                  override def get(): InternalRow = {
-                    val (r, op) = rows(i)
-                    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                      Array[Any](r(0).toInt,
-                        org.apache.spark.unsafe.types.UTF8String.fromString(op),
-                        r(1), r(2), r(3), r(4), r(5)))
-                  }
-                  override def close(): Unit = ()
-                }
-            }
-        }
+  override def newScanBuilder(options: CaseInsensitiveStringMap): SB =
+    new SB {
+      override def build(): Scan = {
+        val conf = ManifestSink.driverConf()
+        val dir = new Path(path)
+        val fs = dir.getFileSystem(conf)
+        val rows = ManifestSink.listVersions(conf, path).map { v =>
+          val parts = ManifestSink.readManifestMeta(conf, path, Some(v))
+          new GenericInternalRow(Array[Any](v,
+            UTF8String.fromString(ManifestSink.readOp(conf, path, Some(v))),
+            parts.size.toLong, parts.map(_.visibleRows).sum,
+            parts.count(_.hasDv).toLong, parts.map(_.bytes).sum,
+            fs.getFileStatus(new Path(dir, ManifestSink.versionFile(v)))
+              .getModificationTime)): InternalRow
+        }.toArray
+        new LocalRowsScan(historySchema, rows)
+      }
     }
 }
-
-private[sources] case class HistoryPartition(
-    rows: Array[(Array[Long], String)])
-    extends org.apache.spark.sql.connector.read.InputPartition
 
 /** SQL-callable twin of [[graft.functions.OracleHash.h64]]: top 60
   * bits of md5 of the UTF-8 string rendering, as non-negative BIGINT —
@@ -1438,36 +1420,24 @@ private[sources] class GraftCatalogTable(
     }
 
   import org.apache.spark.sql.sources.{Filter => V1Filter}
-  import org.apache.spark.sql.sources.{EqualTo => FEq, GreaterThan => FGt, GreaterThanOrEqual => FGe, LessThan => FLt, LessThanOrEqual => FLe}
-
-  private def keyField = tableSchema.fields.find(_.dataType == LongType)
-
   /** The retained part list over `parts`, when every part is
     * decidable; None when the predicate cannot be proven part-whole
     * from stats. Pure in `parts` so the commit loop can RE-APPLY it
     * against a freshly-read head on claim retry. */
   private def decideOn(parts: Seq[PartMeta],
       filters: Array[V1Filter]): Option[Seq[PartMeta]] = {
-    val key = keyField match {
-      case Some(f) if !f.nullable => f.name
-      case _ => return None // nullable key: stats don't cover null rows
-    }
-    var lo = Long.MinValue
-    var hi = Long.MaxValue
-    filters.foreach {
-      case FGt(c, v: Long) if c == key =>
-        lo = math.max(lo, if (v == Long.MaxValue) v else v + 1)
-      case FGe(c, v: Long) if c == key => lo = math.max(lo, v)
-      case FLt(c, v: Long) if c == key =>
-        hi = math.min(hi, if (v == Long.MinValue) v else v - 1)
-      case FLe(c, v: Long) if c == key => hi = math.min(hi, v)
-      case FEq(c, v: Long) if c == key =>
-        lo = math.max(lo, v); hi = math.min(hi, v)
-      case _ => return None // non-key / non-range predicate
-    }
-    val keep = parts.filter(p => p.kMax < lo || p.kMin > hi)
-    val drop = parts.filter(p => p.kMin >= lo && p.kMax <= hi)
-    if (keep.size + drop.size == parts.size) Some(keep) else None
+    val key = tableSchema.fields.find(_.dataType == LongType)
+      .getOrElse(return None).name
+    // every conjunct must be a range on the key (none = delete all)
+    val (lo, hi) =
+      if (filters.isEmpty) (Long.MinValue, Long.MaxValue)
+      else LongRange.conjunction(key, filters.toSeq) match {
+        case Some((l, h, true)) => (l, h)
+        case _ => return None
+      }
+    val classes = parts.map(LongRange.classify(_, key, lo, hi))
+    if (classes.contains('m')) None
+    else Some(parts.zip(classes).collect { case (p, 'u') => p })
   }
 
   private def decide(filters: Array[V1Filter]): Option[Seq[PartMeta]] =
@@ -1790,8 +1760,6 @@ private[sources] class GraftSplitCatalogTable(
     tableSchema.fields.find(_.name.equalsIgnoreCase(splitCol)).getOrElse(
       throw new IllegalStateException(
         s"split column '$splitCol' missing from ${tableSchema.sql}"))
-  private def firstStr: Option[String] =
-    tableSchema.fields.find(_.dataType == StringType).map(_.name)
 
   override def partitionSchema(): StructType =
     StructType(Seq(StructField(field.name, field.dataType, field.nullable)))
@@ -1808,9 +1776,8 @@ private[sources] class GraftSplitCatalogTable(
 
   override def listPartitionIdentifiers(names: Array[String],
       id: InternalRow): Array[InternalRow] = {
-    val fs0 = firstStr
     val vals = ManifestSink.readManifestMeta(conf, path, None)
-      .flatMap(m => MetaTables.singleValue(m, field.name, fs0))
+      .flatMap(MetaTables.singleValue(_, field.name))
       .distinct.sorted
     val filtered =
       if (names.isEmpty) vals
@@ -1828,33 +1795,25 @@ private[sources] class GraftSplitCatalogTable(
     * the value? (pre-layout generation parts; stats get a veto) */
   private def mayHold(m: PartMeta, want: String): Boolean =
     m.cstats.get(field.name) match {
-      case Some(st) if st.kind == 'l' =>
-        st.nulls != m.rows &&
-          want.toLong >= st.lMin && want.toLong <= st.lMax
-      case Some(st) =>
-        st.nulls != m.rows && StrBin.cmp(want, st.min) >= 0 &&
-          StrBin.cmp(want, st.max) <= 0
-      case None =>
-        if (firstStr.contains(field.name))
-          m.strOverlaps(Some(want), Some(want))
-        else true // untracked: cannot exonerate
+      case Some(st) if st.kind == 'l' => st.mayContain(want.toLong)
+      case Some(st) => st.mayContainStr(want)
+      case None => true // untracked: cannot exonerate
     }
 
   override def dropPartition(id: InternalRow): Boolean = {
     val want = rawOf(id)
-    val fs0 = firstStr
     var dropped = false
     ManifestSink.publishRebase(conf, path, tableSchema, history = true,
       rebase = head => {
         val straddlers = head.filter(m =>
-          MetaTables.singleValue(m, field.name, fs0).isEmpty &&
+          MetaTables.singleValue(m, field.name).isEmpty &&
             mayHold(m, want))
         require(straddlers.isEmpty,
           s"DROP PARTITION (${field.name} = $want): ${straddlers.size} " +
             "pre-layout part(s) may still hold the value — CALL " +
             "system.compact to migrate the layout first")
         val (hit, keep) = head.partition(m =>
-          MetaTables.singleValue(m, field.name, fs0).contains(want))
+          MetaTables.singleValue(m, field.name).contains(want))
         dropped = dropped || hit.nonEmpty
         keep
       },
@@ -2022,31 +1981,36 @@ private[sources] class ManifestFilesTable(path: String)
         val conf = ManifestSink.driverConf()
         val splitCol = ManifestSink.readTableSpec(conf, path).layout
           .collect { case (0, c) => c }
-        val firstStr = ManifestSink.readSchema(conf, path, None)
-          .flatMap(_.fields.find(_.dataType ==
-            org.apache.spark.sql.types.StringType).map(_.name))
-        val rows = ManifestSink.readManifestMeta(conf, path, None)
-          .zipWithIndex.map { case (m, i) =>
-            val sv = splitCol
-              .flatMap(c => MetaTables.singleValue(m, c, firstStr))
-              .map(UTF8String.fromString).orNull
-            // the generalized per-column record, rendered name-sorted
-            // ("c:[min..max] …") so the view is deterministic
-            // visible_rows is NULL (unknown) while equality-delete
-            // clauses are pending — honesty over an over-estimate in
-            // an audit view
-            new GenericInternalRow(Array[Any](i,
-              UTF8String.fromString(new Path(m.path).getName), m.rows,
-              if (m.countsExact) m.visibleRows else null,
-              m.kMin, m.kMax, m.hasDv, m.dvCount,
-              m.bytes, m.bucket,
-              UTF8String.fromString(m.cstats.toSeq.sortBy(_._1)
-                .map { case (c, st) => s"$c:[${st.min}..${st.max}]" }
-                .mkString(" ")),
-              m.kSum.map(java.lang.Long.valueOf).orNull,
-              sv, m.eq.size,
-              m.sorted)): org.apache.spark.sql.catalyst.InternalRow
-          }.toArray
+        val (parts, snap) = ManifestSink.readSnapshot(conf, path)
+        val key = MetaTables.keyOf(snap.map(_._1))
+        // the key and first string have their own view columns
+        val ownCols = snap.fold(Set.empty[String])(s =>
+          ManifestSink.keyAndFirstStr(s._1))
+        val rows = parts.zipWithIndex.map { case (m, i) =>
+          val sv = splitCol
+            .flatMap(MetaTables.singleValue(m, _))
+            .map(UTF8String.fromString).orNull
+          val k = key.flatMap(m.cstats.get)
+          // the other columns' stats, rendered name-sorted
+          // ("c:[min..max] …") so the view is deterministic
+          // visible_rows is NULL (unknown) while equality-delete
+          // clauses are pending — honesty over an over-estimate in
+          // an audit view
+          new GenericInternalRow(Array[Any](i,
+            UTF8String.fromString(new Path(m.path).getName), m.rows,
+            if (m.countsExact) m.visibleRows else null,
+            k.fold(Long.MaxValue)(_.lMin), k.fold(Long.MinValue)(_.lMax),
+            m.hasDv, m.dvCount,
+            m.bytes, m.bucket,
+            UTF8String.fromString(m.cstats.toSeq.sortBy(_._1)
+              .collect { case (c, st)
+                  if st.hasValues && !ownCols.contains(c) =>
+                s"$c:[${st.min}..${st.max}]" }
+              .mkString(" ")),
+            k.flatMap(_.sum).map(java.lang.Long.valueOf).orNull,
+            sv, m.eq.size,
+            m.sorted)): org.apache.spark.sql.catalyst.InternalRow
+        }.toArray
         new LocalRowsScan(filesSchema, rows)
       }
     }
@@ -2055,20 +2019,13 @@ private[sources] class ManifestFilesTable(path: String)
 /** Shared metadata-table helpers. */
 private[sources] object MetaTables {
   /** The part's PROVABLY single value on column `c` (min == max, zero
-    * nulls), or None. The first string column's stats live in the
-    * part's primary sMin/sMax legs (the writer tracks additional
-    * strings in `cstats`), so both stores are consulted. */
-  def singleValue(m: PartMeta, c: String,
-      firstStr: Option[String]): Option[String] =
-    m.cstats.get(c).filter(st => st.min == st.max && st.nulls == 0L)
-      .map(_.min)
-      .orElse {
-        if (!firstStr.contains(c)) None
-        else (m.sMin, m.sMax) match {
-          case (Some(a), Some(b)) if a == b && m.sNulls == 0L => Some(a)
-          case _ => None
-        }
-      }
+    * nulls), or None. */
+  def singleValue(m: PartMeta, c: String): Option[String] =
+    m.cstats.get(c).flatMap(_.single)
+
+  /** The key: the first BIGINT column. */
+  def keyOf(schema: Option[StructType]): Option[String] =
+    schema.flatMap(_.fields.find(_.dataType == LongType)).map(_.name)
 }
 
 /** Per-PARTITION rollup of the head snapshot as a TABLE (`SELECT ...
@@ -2106,10 +2063,9 @@ private[sources] class ManifestPartitionsTable(path: String)
         val conf = ManifestSink.driverConf()
         val splitCol = ManifestSink.readTableSpec(conf, path).layout
           .collect { case (0, c) => c }
-        val firstStr = ManifestSink.readSchema(conf, path, None)
-          .flatMap(_.fields.find(_.dataType ==
-            org.apache.spark.sql.types.StringType).map(_.name))
-        val metas = ManifestSink.readManifestMeta(conf, path, None)
+        val (metas, snap) = ManifestSink.readSnapshot(conf, path)
+        val key = MetaTables.keyOf(snap.map(_._1))
+        def keyStat(m: PartMeta) = key.flatMap(m.cstats.get)
         // a part's partition identity: its recorded bucket, or its
         // PROVABLY single split value (stats min == max, zero nulls
         // — the same soundness rule `.files.split_value` uses), or
@@ -2118,7 +2074,7 @@ private[sources] class ManifestPartitionsTable(path: String)
           if (m.nbuckets > 0)
             (s"bucket=${m.bucket}", s"bucket(${m.nbuckets})")
           else splitCol.flatMap(c =>
-              MetaTables.singleValue(m, c, firstStr)
+              MetaTables.singleValue(m, c)
                 .map(v => (s"$c=$v", s"identity($c)")))
             .getOrElse((null, "none"))
         val rows = metas.groupBy(ident).toSeq
@@ -2132,8 +2088,9 @@ private[sources] class ManifestPartitionsTable(path: String)
               ms.map(_.rows).sum,
               if (ms.forall(_.countsExact)) ms.map(_.visibleRows).sum
               else null,
-              ms.map(_.bytes).sum, ms.map(_.kMin).min,
-              ms.map(_.kMax).max,
+              ms.map(_.bytes).sum,
+              ms.map(keyStat(_).fold(Long.MaxValue)(_.lMin)).min,
+              ms.map(keyStat(_).fold(Long.MinValue)(_.lMax)).max,
               ms.count(_.hasDv),
               ms.count(_.eq.nonEmpty))): org.apache.spark.sql.catalyst.InternalRow
           }.toArray

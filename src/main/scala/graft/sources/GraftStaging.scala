@@ -111,23 +111,14 @@ private[sources] class GraftStagedTable(
     }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      staged = messages.toSeq.flatMap {
-        case m: PartCommit      => Seq(m)
-        case m: MultiPartCommit => m.parts
-      }.map { m =>
-        PartMeta(m.path, m.rows, m.keyMin, m.keyMax, m.bloom,
-          m.strMin, m.strMax, bytes = m.bytes, bucket = m.bucket,
-          nbuckets = if (m.bucket >= 0) buckets.getOrElse(0) else 0,
-          sorted = m.sorted, cstats = m.cstats,
-          kNulls = m.keyNulls, sNulls = m.strNulls, kSum = m.keySum)
-      }
+      staged = ManifestSink.committedParts(messages.toSeq, buckets)
       publishSchema = writeSchema
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
       val fs = new Path(path).getFileSystem(sconf.value)
       messages.foreach {
-        case m: PartCommit => fs.delete(new Path(m.path), false)
+        case m: PartMeta => fs.delete(new Path(m.path), false)
         case m: MultiPartCommit =>
           m.parts.foreach(p => fs.delete(new Path(p.path), false))
         case _ => ()

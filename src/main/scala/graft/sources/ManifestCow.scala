@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *      provably disjoint from the predicate's key conjuncts — a
   *      NULL key never satisfies a range conjunct, so null-key rows
   *      can't be deleted by one), `dropped` (pure key-range
-  *      predicate, non-nullable key, part fully inside — every row
+  *      predicate, part fully inside with zero null keys — every row
   *      provably matches), `affected` (the rest — must be rewritten),
   *   2. stage a temp read-manifest listing ONLY the affected parts
   *      (absolute paths: no data is copied to stage a read),
@@ -110,35 +110,25 @@ private[sources] object ManifestCow {
     val spark = SparkSession.active
     val conf = ManifestSink.driverConf()
 
-    // Key-range bounds from the TOP-LEVEL key conjuncts only (the
-    // filters array is a conjunction). Used to PRUNE the rewrite set,
-    // so looseness is safe: any conjunct we don't understand just
-    // means "can't exclude this part".
-    val keyF = schema.fields.find(_.dataType == LongType)
-    val key = keyF.map(_.name)
-    var lo = Long.MinValue
-    var hi = Long.MaxValue
-    var pureKeyRange = keyF.exists(!_.nullable)
-    filters.foreach {
-      case GreaterThan(c, v: Long) if key.contains(c) =>
-        lo = math.max(lo, if (v == Long.MaxValue) v else v + 1)
-      case GreaterThanOrEqual(c, v: Long) if key.contains(c) =>
-        lo = math.max(lo, v)
-      case LessThan(c, v: Long) if key.contains(c) =>
-        hi = math.min(hi, if (v == Long.MinValue) v else v - 1)
-      case LessThanOrEqual(c, v: Long) if key.contains(c) =>
-        hi = math.min(hi, v)
-      case EqualTo(c, v: Long) if key.contains(c) =>
-        lo = math.max(lo, v); hi = math.min(hi, v)
-      case _ => pureKeyRange = false
+    // Classify on the key interval of the TOP-LEVEL key conjuncts
+    // (the filters array is a conjunction; see [[LongRange]]). It only
+    // PRUNES the rewrite set, so looseness is safe: a conjunct it does
+    // not understand just means "can't exclude this part". A part is
+    // untouched when no row can satisfy the key conjuncts (a NULL key
+    // satisfies none), and dropped when the predicate is a pure key
+    // range every row of the part provably satisfies.
+    val key = schema.fields.find(_.dataType == LongType).map(_.name)
+    val range = key.flatMap(LongRange.conjunction(_, filters.toSeq))
+    def disposition(p: PartMeta): Char = range match {
+      case Some((lo, hi, pure)) =>
+        LongRange.classify(p, key.get, lo, hi) match {
+          case 'd' if !pure => 'm'
+          case c => c
+        }
+      case None => 'm'
     }
-    val bounded = lo != Long.MinValue || hi != Long.MaxValue
-    // disjoint stats ⇒ no row can satisfy the key conjuncts ⇒ untouched
-    val (untouched, rest) = parts.partition(p =>
-      bounded && (p.kMin <= p.kMax) && (p.kMax < lo || p.kMin > hi))
-    // pure aligned range + non-nullable key ⇒ every row matches ⇒ drop
-    val (dropped, affected) = rest.partition(p =>
-      pureKeyRange && p.kMin >= lo && p.kMax <= hi)
+    val (dropped, affected) = parts.filter(disposition(_) != 'u')
+      .partition(disposition(_) == 'd')
 
     // head-aware rebases + footprints from here on: the parts this
     // delete DROPS or REWRITES are its conflict footprint — a racing

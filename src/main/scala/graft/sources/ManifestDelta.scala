@@ -82,7 +82,7 @@ private[sources] class ManifestDeltaOp(
   * (if any) plus one (part path, fragment sidecar, cardinality)
   * triple per part this task recorded deletes against. */
 private[sources] case class DeltaCommit(
-    newPart: Option[PartCommit],
+    newPart: Option[PartMeta],
     frags: Seq[(String, String, Long)]) extends WriterCommitMessage
 
 private[sources] class ManifestDeltaBatchWrite(
@@ -103,11 +103,7 @@ private[sources] class ManifestDeltaBatchWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val commits = messages.toSeq.map { case m: DeltaCommit => m }
-    val newParts = commits.flatMap(_.newPart).filter(_.rows > 0).map { m =>
-      PartMeta(m.path, m.rows, m.keyMin, m.keyMax, m.bloom,
-        m.strMin, m.strMax, bytes = m.bytes, cstats = m.cstats,
-        kNulls = m.keyNulls, sNulls = m.strNulls, kSum = m.keySum)
-    }
+    val newParts = commits.flatMap(_.newPart).filter(_.rows > 0)
     val (scanned, base) = op.scannedOrFail
     val byPath = scanned.map(m => m.path -> m).toMap
     val fs = new Path(path).getFileSystem(conf.value)
@@ -242,8 +238,7 @@ private[sources] class ManifestDeltaWriter(
         val ref = DeleteVector.writeRef(conf.value, dir, name, arr)
         (part, ref, DeleteVector.popCount(arr))
     }
-    val newPart = Option(inserts)
-      .map(_.commit().asInstanceOf[PartCommit])
+    val newPart = Option(inserts).map(_.commit())
     DeltaCommit(newPart, frags)
   }
 

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.sources.{And => FAnd, EqualTo => FEq, Filter => V1Filter, GreaterThan => FGt, GreaterThanOrEqual => FGe, In => FIn, LessThan => FLt, LessThanOrEqual => FLe}
+import org.apache.spark.sql.sources.{EqualTo => FEq, Filter => V1Filter, In => FIn}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** EQUALITY DELETES (`graft.delete.mode=eq` — the Iceberg v2
@@ -81,37 +81,14 @@ private[sources] object ManifestEq {
     * provably-outside. An empty canonical interval (lo > hi) means
     * the predicate matches nothing: the delete is a no-op. */
   def translateRange(schema: StructType,
-      filters: Array[V1Filter]): Option[(String, Long, Long)] = {
-    def one(f: V1Filter): Option[(String, Long, Long)] = f match {
-      case FLt(c, v: Number) =>
-        val b = v.longValue
-        // x < MinValue matches nothing — emit the empty canonical
-        // interval (lo > hi), NOT the one-point [MinValue, MinValue]
-        // which would wrongly delete rows AT the extreme
-        if (b == Long.MinValue) Some((c, 1L, 0L))
-        else Some((c, Long.MinValue, b - 1))
-      case FLe(c, v: Number) => Some((c, Long.MinValue, v.longValue))
-      case FGt(c, v: Number) =>
-        val b = v.longValue
-        // x > MaxValue matches nothing — same empty-interval rule
-        if (b == Long.MaxValue) Some((c, 1L, 0L))
-        else Some((c, b + 1, Long.MaxValue))
-      case FGe(c, v: Number) => Some((c, v.longValue, Long.MaxValue))
-      case FAnd(a, b) => for {
-        x <- one(a); y <- one(b); if x._1 == y._1
-      } yield (x._1, math.max(x._2, y._2), math.min(x._3, y._3))
-      case _ => None
+      filters: Array[V1Filter]): Option[(String, Long, Long)] =
+    filters.headOption.flatMap(LongRange.of).flatMap { case (col, _, _) =>
+      LongRange.conjunction(col, filters.toSeq).collect {
+        // vacuous single bound (`c >= Long.MinValue`): other paths own it
+        case (lo, hi, true) if filters.length > 1 ||
+            lo != Long.MinValue || hi != Long.MaxValue => (col, lo, hi)
+      }
     }
-    if (filters.isEmpty) return None
-    val legs = filters.toSeq.map(one)
-    if (legs.exists(_.isEmpty)) return None
-    val ls = legs.flatten
-    val col = ls.head._1
-    if (!ls.forall(_._1 == col)) None
-    else if (legs.size == 1 && ls.head._2 == Long.MinValue &&
-        ls.head._3 == Long.MaxValue) None // vacuous, let other paths own it
-    else Some((col, ls.map(_._2).max, ls.map(_._3).min))
-  }
 
   /** Kind-'L' clause for the canonical inclusive range — BIGINT
     * columns only. Strings are excluded deliberately: range masking
@@ -159,24 +136,14 @@ private[sources] object ManifestEq {
     * rows. Without a default those rows read NULL, which a non-null
     * clause value never matches: exonerated. */
   private[sources] def mayMatch(p: PartMeta, c: EqClause,
-      keyCol: Option[String], strCol: Option[String],
       defaultTok: Option[String] = None): Boolean =
     if (p.rows == 0L) false
     else if (p.cols.nonEmpty && !p.cols.contains(c.fieldId))
       defaultTok.exists(c.values.contains)
-    else if (keyCol.contains(c.col))
-      c.values.exists(v => p.mayContain(v.toLong))
-    else if (strCol.contains(c.col))
-      // all-null string part cannot match a (non-null) clause value
-      !(p.sNulls >= 0 && p.sNulls == p.rows) &&
-        c.values.exists(v => p.strOverlaps(Some(v), Some(v)))
     else p.cstats.get(c.col) match {
       case Some(st) if st.kind == 'l' =>
-        st.nulls != p.rows &&
-          c.values.exists(v => v.toLong >= st.lMin && v.toLong <= st.lMax)
-      case Some(st) =>
-        st.nulls != p.rows && c.values.exists(v =>
-          StrBin.cmp(v, st.min) >= 0 && StrBin.cmp(v, st.max) <= 0)
+        c.values.exists(v => st.mayContain(v.toLong))
+      case Some(st) => c.values.exists(st.mayContainStr)
       case None => true // untracked column: cannot exonerate
     }
 
@@ -184,30 +151,16 @@ private[sources] object ManifestEq {
     * provably matches (drop the line — the metadata-delete answer),
     * 'u' = no row can match (carried untouched), 'm' = straddler or
     * undecidable (mark with the clause — read-side cost only, never
-    * a wrong answer). NULL rows never match a range, so a drop
-    * additionally requires a PROVEN zero null count. */
+    * a wrong answer); see [[LongRange.classify]]. */
   private[sources] def rangeDisposition(p: PartMeta, c: EqClause,
-      lo: Long, hi: Long, keyCol: Option[String],
-      defaultTok: Option[String] = None): Char = {
-    if (p.rows == 0L) return 'u'
-    if (p.cols.nonEmpty && !p.cols.contains(c.fieldId))
+      lo: Long, hi: Long, defaultTok: Option[String] = None): Char =
+    if (p.cols.nonEmpty && !p.cols.contains(c.fieldId)) {
       // layout never wrote the column: every row serves the frozen
       // initial default — all match when it lands inside the range,
       // none otherwise (no default = NULL = never matches)
-      return if (defaultTok.exists(d => EqMask.inRange(d, lo, hi))) 'd'
-             else 'u'
-    def decide(vMin: Long, vMax: Long, nulls: Long): Char =
-      if (nulls >= 0 && nulls == p.rows) 'u'
-      else if (vMin > vMax) 'm'
-      else if (vMax < lo || vMin > hi) 'u'
-      else if (vMin >= lo && vMax <= hi && nulls == 0L) 'd'
-      else 'm'
-    if (keyCol.contains(c.col)) decide(p.kMin, p.kMax, p.kNulls)
-    else p.cstats.get(c.col) match {
-      case Some(st) if st.kind == 'l' => decide(st.lMin, st.lMax, st.nulls)
-      case _ => 'm'
-    }
-  }
+      if (p.rows > 0L && defaultTok.exists(d => EqMask.inRange(d, lo, hi))) 'd'
+      else 'u'
+    } else LongRange.classify(p, c.col, lo, hi)
 
   /** True when the session should take — and the predicate can take —
     * the equality-delete path (`=`/IN clause, or a BIGINT range). */
@@ -235,7 +188,6 @@ private[sources] object ManifestEq {
     val conf = ManifestSink.driverConf()
     val cm = ManifestSink.readSchemaAndColMap(conf, path).map(_._2)
       .getOrElse(ColMap.identity(schema.fields.length))
-    val keyCol = schema.fields.find(_.dataType == LongType).map(_.name)
     // the clause column's frozen initial default, raw form — parts
     // whose layout predates the column serve it for every row
     def dfltTok(col: String): Option[String] =
@@ -246,13 +198,12 @@ private[sources] object ManifestEq {
         val clause = clauseOf(schema, cm, col, vs).getOrElse(
           throw new IllegalArgumentException(
             s"equality delete: unsupported column '$col'"))
-        val strCol = schema.fields.find(_.dataType == StringType).map(_.name)
         val dflt = dfltTok(col)
         // an IN-list of only NULLs matches nothing: commit nothing
         if (clause.values.isEmpty) return
         ManifestSink.publishRebase(conf, path, schema, history = true,
           rebase = head => head.map { p =>
-            if (mayMatch(p, clause, keyCol, strCol, dflt))
+            if (mayMatch(p, clause, dflt))
               p.copy(eq = p.eq :+ clause)
             else p
           },
@@ -273,7 +224,7 @@ private[sources] object ManifestEq {
         val dflt = dfltTok(col)
         ManifestSink.publishRebase(conf, path, schema, history = true,
           rebase = head => head.flatMap { p =>
-            rangeDisposition(p, clause, lo, hi, keyCol, dflt) match {
+            rangeDisposition(p, clause, lo, hi, dflt) match {
               case 'd' => None
               case 'm' => Some(p.copy(eq = p.eq :+ clause))
               case _   => Some(p)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** IDENTITY COLUMNS (`id BIGINT GENERATED ALWAYS AS IDENTITY (START
   * WITH s INCREMENT BY k)` — the Delta-shaped surrogate-key surface,
@@ -73,33 +73,20 @@ private[sources] object ManifestIdentity {
   val MetaAllow = "identity.allowExplicitInsert"
 
   /** The committed high-water (step>0) / low-water (step<0) of the
-    * identity column over `parts`, from write-time stats only: the
-    * key-column min/max when the identity column IS the primary
-    * BIGINT column, else its ColStat entry. Parts predating the
-    * column contribute nothing. */
-  def committedMark(parts: Seq[PartMeta], schema: StructType,
-      spec: Spec): Option[Long] = {
-    val keyIdx = schema.fields.indexWhere(_.dataType == LongType)
-    val isKey = keyIdx >= 0 && schema.fields(keyIdx).name == spec.col
-    val marks = parts.flatMap { p =>
-      val viaKey =
-        if (isKey && p.rows > 0 && p.rows != p.kNulls && p.kMin <= p.kMax)
-          Some(if (spec.step > 0) p.kMax else p.kMin)
-        else None
-      val viaStat = p.cstats.get(spec.col).collect {
-        case st if st.kind == 'l' && st.nulls != p.rows =>
-          if (spec.step > 0) st.lMax else st.lMin
-      }
-      viaKey.toSeq ++ viaStat.toSeq
-    }
+    * identity column over `parts`, from the column's write-time
+    * [[ColStat]] only. Parts predating the column contribute nothing. */
+  def committedMark(parts: Seq[PartMeta], spec: Spec): Option[Long] = {
+    val marks = parts.flatMap(_.cstats.get(spec.col).collect {
+      case st if st.kind == 'l' && st.hasValues =>
+        if (spec.step > 0) st.lMax else st.lMin
+    })
     if (marks.isEmpty) None
     else Some(if (spec.step > 0) marks.max else marks.min)
   }
 
   /** First value the next write may issue. */
-  def nextBase(parts: Seq[PartMeta], schema: StructType,
-      spec: Spec): Long =
-    committedMark(parts, schema, spec).map(_ + spec.step)
+  def nextBase(parts: Seq[PartMeta], spec: Spec): Long =
+    committedMark(parts, spec).map(_ + spec.step)
       .getOrElse(spec.start)
 }
 

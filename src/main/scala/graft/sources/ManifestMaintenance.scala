@@ -50,13 +50,13 @@ object ManifestMaintenance {
     * map-side-combined min/max aggregate per (part, tracked column),
     * and ONE small row per part back to the driver — O(parts), never
     * O(rows). Tracked columns follow the writer's selection exactly
-    * (key = first BIGINT, string stats = first STRING, up to 8 extra
-    * columns of each type), so analyzed manifests are
+    * ([[ManifestSink.statCols]]), so analyzed manifests are
     * indistinguishable from freshly-written ones to every pruning
-    * path. Blooms are left in place: built over the physical keys,
-    * they stay supersets of the visible keys — sound, just not
-    * tightened. A part with zero visible rows gets the all-null
-    * sentinels (prunes against any real bound). Committed with
+    * path. Blooms are left in place: built over the physical values,
+    * they stay supersets of the visible ones — sound, just not
+    * tightened. A part with zero visible rows keeps only its key and
+    * first-string records, with no value and no null (prunes against
+    * any bound on them). Committed with
     * `strictBase` + the analyzed parts as footprint: stats computed
     * against this snapshot's vectors must not overwrite a
     * concurrently re-vectored part. Returns (parts updated, new
@@ -74,21 +74,9 @@ object ManifestMaintenance {
       throw new IllegalArgumentException(s"no manifest table at $dir"))
     val parts = ManifestSink.readManifestMeta(conf, dir, pin)
     if (parts.isEmpty) return (0, baseVersion)
-    val keyIdx = schema.fields.indexWhere(_.dataType == LongType)
-    val strIdx = schema.fields.indexWhere(_.dataType == StringType)
-    // TIMESTAMP columns refresh alongside the longs — their stats ARE
-    // micros longs (the writer's 'l' leg); aggregate unix_micros so
-    // the collected values decode uniformly
-    val extraLong = schema.fields.indices
-      .filter(i => (schema.fields(i).dataType == LongType ||
-        schema.fields(i).dataType ==
-          org.apache.spark.sql.types.TimestampType) && i != keyIdx)
-      .take(8)
-    val extraStr = schema.fields.indices
-      .filter(i => schema.fields(i).dataType == StringType && i != strIdx)
-      .take(8)
-    val tracked: Seq[Int] =
-      Seq(keyIdx, strIdx).filter(_ >= 0) ++ extraLong ++ extraStr
+    val (longCols, strCols) = ManifestSink.statCols(schema)
+    val keepEmpty = ManifestSink.keyAndFirstStr(schema)
+    val tracked: Seq[Int] = (longCols ++ strCols).toSeq
     if (tracked.isEmpty) return (0, baseVersion)
     val reader = spark.read.format("graft.sources.ManifestSource")
       .option("path", dir)
@@ -141,120 +129,77 @@ object ManifestMaintenance {
           catch { case _: ArithmeticException => None }
       }
       val visCount = r.getLong(smBase + longTracked.length)
-      var m = base
-      tracked.zipWithIndex.foreach { case (i, j) =>
-        val f = schema.fields(i)
-        val (mn, mx, ct) = (mnAt(j), mnAt(j) + 1, mnAt(j) + 2)
-        // null count over the SERVED rows = scanned count − non-null
-        val nulls = visCount - r.getLong(ct)
-        if (i == keyIdx) m =
-          if (r.isNullAt(mn)) m.copy(kMin = Long.MaxValue,
-            kMax = Long.MinValue, kNulls = nulls, kSum = sumAt(i))
-          else m.copy(kMin = r.getLong(mn), kMax = r.getLong(mx),
-            kNulls = nulls, kSum = sumAt(i))
-        else if (i == strIdx) m = m.copy(
-          sMin = if (r.isNullAt(mn)) None else Some(r.getString(mn)),
-          sMax = if (r.isNullAt(mx)) None else Some(r.getString(mx)),
-          sNulls = nulls)
-        else if (f.dataType == LongType || f.dataType ==
-            org.apache.spark.sql.types.TimestampType) m = m.copy(cstats =
-          if (r.isNullAt(mn)) m.cstats - f.name
-          else m.cstats + (f.name -> ColStat('l',
-            r.getLong(mn).toString, r.getLong(mx).toString, nulls,
-            sumAt(i))))
-        else m = m.copy(cstats =
-          if (r.isNullAt(mn)) m.cstats - f.name
-          // carry the committed secondary bloom (if any): built over
-          // PHYSICAL values, it stays a sound superset of the visible
-          // ones — rebuild_blooms recomputes it below
-          else m.cstats + (f.name ->
-            ColStat('s', r.getString(mn), r.getString(mx), nulls,
-              bloom = base.cstats.get(f.name).map(_.bloom).getOrElse(""))))
-      }
-      path -> m
+      // every tracked column gets a fresh record (or none, like the
+      // writer's, when it has no visible value); the committed bloom
+      // (built over PHYSICAL values) carries over, a sound superset of
+      // the visible ones — rebuild_blooms recomputes it below
+      path -> base.copy(cstats = tracked.zipWithIndex.foldLeft(base.cstats) {
+        case (cs, (i, j)) =>
+          val f = schema.fields(i)
+          val (mn, mx, ct) = (mnAt(j), mnAt(j) + 1, mnAt(j) + 2)
+          def bound(k: Int): String =
+            if (r.isNullAt(k)) null
+            else if (f.dataType == StringType) r.getString(k)
+            else r.getLong(k).toString
+          if (r.isNullAt(mn) && !keepEmpty(f.name)) cs - f.name
+          else cs + (f.name -> ColStat(
+            if (f.dataType == StringType) 's' else 'l', bound(mn), bound(mx),
+            // null count over the SERVED rows = scanned count − non-null
+            visCount - r.getLong(ct), sumAt(i),
+            base.cstats.get(f.name).map(_.bloom).getOrElse("")))
+      })
     }.toMap
-    // a part with no group row has zero visible rows: all-null
-    // sentinels prune it against any real bound
+    // a part with no group row has zero visible rows: its key and
+    // first-string records hold no value and no null, which prunes it
+    // against any bound on them
     val tightened: Map[String, PartMeta] = parts.map { p =>
-      p.path -> fresh.getOrElse(p.path,
-        p.copy(kMin = Long.MaxValue, kMax = Long.MinValue,
-          sMin = None, sMax = None, cstats = Map.empty,
-          kNulls = if (keyIdx >= 0) 0L else p.kNulls,
-          sNulls = if (strIdx >= 0) 0L else p.sNulls,
-          kSum = if (keyIdx >= 0) Some(0L) else p.kSum))
+      p.path -> fresh.getOrElse(p.path, p.copy(cstats =
+        schema.fields.filter(f => keepEmpty(f.name)).map { f =>
+          f.name -> ColStat(if (f.dataType == StringType) 's' else 'l',
+            null, null, 0L,
+            if (f.dataType == LongType) Some(0L) else None)
+        }.toMap))
     }.toMap
     // OPT-IN bloom rebuild (`rebuild_blooms => true`): blooms are
-    // built over PHYSICAL keys at write time, so after a delete they
+    // built over PHYSICAL values at write time, so after a delete they
     // stay supersets — sound but useless against deleted point
-    // lookups the key RANGE still admits. Rebuilding pays one extra
-    // shuffle of the visible keys (clustered per part, bitmap built
-    // on an executor, one hex string per part to the driver) and
-    // restores point-lookup skipping on the survivors.
-    val updated: Map[String, PartMeta] =
-      if (!rebuildBlooms || keyIdx < 0) tightened
+    // lookups the RANGE still admits. One extra pass per bloom column
+    // (the key, plus each declared STRING column, ≤4): visible values
+    // clustered per part, bitmap built on an executor, one hex string
+    // per part to the driver — restores point-lookup skipping on the
+    // survivors.
+    val withBlooms: Map[String, PartMeta] =
+      if (!rebuildBlooms) tightened
       else {
         import spark.implicits._
-        val keyName = schema.fields(keyIdx).name
-        val rebuilt: Map[String, String] = df
-          .select(col(PartMetaColumn.Name).as("_p"), col(keyName).as("_k"))
-          .where(col("_k").isNotNull)
-          .as[(String, Long)]
-          .groupByKey(_._1)
-          .mapGroups { (p, it) =>
-            val bits = PartBloom.newBits()
+        def rebuild(vals: org.apache.spark.sql.Dataset[(String, Long)],
+            nbits: Int): Map[String, String] =
+          vals.groupByKey(_._1).mapGroups { (p, it) =>
+            val bits = PartBloom.newBits(nbits)
             var n = 0L
             it.foreach { kv => PartBloom.add(bits, kv._2); n += 1 }
             (p, PartBloom.toHex(PartBloom.shrinkFor(bits, n)))
-          }
-          .collect().toMap
-        tightened.map { case (path, m) =>
-          path -> m.copy(bloomHex = rebuilt.getOrElse(path, ""))
-        }
-      }
-    // secondary-column bloom rebuild rides the same opt-in: one
-    // visible-value pass per declared bloom column (≤4), clustered
-    // per part, one hex string per part to the driver — restores
-    // point-lookup skipping after deletes shrank the visible set
-    val withColBlooms: Map[String, PartMeta] =
-      if (!rebuildBlooms) updated
-      else {
-        import org.apache.spark.sql.functions.col
-        val bcols = ManifestSink.bloomCols(conf, dir).flatMap(c =>
-          schema.fields.find(f => f.name.equalsIgnoreCase(c) &&
-            f.dataType == StringType)).map(_.name).distinct
-        // honor the table's declared `graft.bloom_bits` width: since
-        // shrinkFor caps at the ALLOCATED size, allocating the default
-        // 2^16 here would silently shrink a declared 2^18 filter on
-        // rebuild, restoring the fp saturation the knob exists to avoid
+          }.collect().toMap
+        def visible(c: String) = df
+          .select(col(PartMetaColumn.Name).as("_p"), col(c).as("_v"))
+          .where(col("_v").isNotNull)
+        // the key filter is built at the default width; declared
+        // STRING blooms honor the table's `graft.bloom_bits` (shrinkFor
+        // caps at the ALLOCATED size, so allocating the default here
+        // would silently shrink a declared 2^18 filter on rebuild)
         val bloomBitsN = ManifestSink.bloomBits(conf, dir)
-        bcols.foldLeft(updated) { (acc, c) =>
-          import spark.implicits._
-          val rebuilt: Map[String, String] = df
-            .select(col(PartMetaColumn.Name).as("_p"), col(c).as("_v"))
-            .where(col("_v").isNotNull)
-            .as[(String, String)]
-            .groupByKey(_._1)
-            .mapGroups { (p, it) =>
-              val bits = PartBloom.newBits(bloomBitsN)
-              var n = 0L
-              it.foreach { kv =>
-                PartBloom.add(bits, PartBloom.strKey(kv._2)); n += 1 }
-              (p, PartBloom.toHex(PartBloom.shrinkFor(bits, n)))
-            }
-            .collect().toMap
-          acc.map { case (path, m) =>
-            val hex = rebuilt.getOrElse(path, "")
-            val next = m.cstats.get(c) match {
-              case Some(st) => m.cstats + (c -> st.copy(bloom = hex))
-              // the PRIMARY string column rides smin/smax, not cstats:
-              // give its bloom a ColStat carrier when one was built
-              case None if hex.nonEmpty && m.sMin.isDefined &&
-                  strIdx >= 0 && schema.fields(strIdx).name == c =>
-                m.cstats + (c -> ColStat('s', m.sMin.get, m.sMax.get,
-                  m.sNulls, bloom = hex))
-              case None => m.cstats
-            }
-            path -> m.copy(cstats = next)
+        val keyBloom = schema.fields.find(_.dataType == LongType).map(f =>
+          f.name -> rebuild(visible(f.name).as[(String, Long)],
+            PartBloom.MaxBits))
+        val strBlooms = ManifestSink.bloomCols(conf, dir).flatMap(c =>
+          schema.fields.find(f => f.name.equalsIgnoreCase(c) &&
+            f.dataType == StringType)).map(_.name).distinct.map(c =>
+          c -> rebuild(visible(c).as[(String, String)]
+            .map(kv => (kv._1, PartBloom.strKey(kv._2))), bloomBitsN))
+        (keyBloom.toSeq ++ strBlooms).foldLeft(tightened) {
+          case (acc, (c, rebuilt)) => acc.map { case (path, m) =>
+            path -> m.copy(cstats = m.cstats.get(c).fold(m.cstats)(st =>
+              m.cstats + (c -> st.copy(bloom = rebuilt.getOrElse(path, "")))))
           }
         }
       }
@@ -346,11 +291,11 @@ object ManifestMaintenance {
       }
     }
     val v = ManifestSink.publishRebase(conf, dir, schema, history = true,
-      head => head.map(p => withColBlooms.getOrElse(p.path, p)),
+      head => head.map(p => withBlooms.getOrElse(p.path, p)),
       strictBase = Some(baseVersion),
       footprint = Some(parts.map(_.path).toSet),
       op = "analyze")
-    (withColBlooms.size, v)
+    (withBlooms.size, v)
   }
 
   /** COMPACT DELETION VECTORS — the rewrite-data-files half of
@@ -443,16 +388,13 @@ object ManifestMaintenance {
           .getOrElse(throw new IllegalArgumentException(
             "compact: split_value scoping requires an " +
               "identity-partitioned table layout"))
-        val firstStr = ManifestSink.readSchema(conf, dir, None)
-          .flatMap(_.fields.find(_.dataType ==
-            org.apache.spark.sql.types.StringType).map(_.name))
         // time-transform layouts scope by the DERIVED ordinal (the
         // value SHOW PARTITIONS speaks): "compact yesterday's day"
         spec.transform match {
           case Some(tf) => allParts.filter(m => TimeSplit.partOrdinal(
             m.cstats.get(sc), m.rows, tf).map(_.toString).contains(v))
           case None => allParts.filter(m =>
-            MetaTables.singleValue(m, sc, firstStr).contains(v))
+            MetaTables.singleValue(m, sc).contains(v))
         }
     }
     if (parts.isEmpty) return CompactStats(0, 0, baseVersion)
@@ -505,8 +447,8 @@ object ManifestMaintenance {
     * code is its rank among the boundaries (≤255 comparisons, pure
     * codegen'd map). The ids only STEER clustering — any boundary
     * set yields a correct layout (pruning reads the parts' true
-    * smin/smax, never the ids) — so at 100 TB the ranking pass runs
-    * over a deterministic sample without any correctness cost. */
+    * string min/max, never the ids) — so at 100 TB the ranking pass
+    * runs over a deterministic sample without any correctness cost. */
   private def zorderLayout(zcols: Seq[String], targetParts: Int)
       : org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
@@ -517,13 +459,13 @@ object ManifestMaintenance {
       val isStr = zcols.map(c =>
         df.schema(c).dataType == org.apache.spark.sql.types.StringType)
       // string dims: one ranking pass each over the distinct domain
-      // (binary collation — the same order smin/smax pruning uses).
+      // (binary collation — the same order string-stats pruning uses).
       // The single-partition ntile window is BOUNDED first: a
       // high-cardinality domain (url hosts, digests) is cut to
       // ~64k values by a DETERMINISTIC hash-sample before ranking —
       // sound because the boundaries only steer clustering (pruning
-      // reads the parts' true smin/smax), so a sampled boundary set
-      // costs tile balance, never correctness.
+      // reads the parts' true string min/max), so a sampled boundary
+      // set costs tile balance, never correctness.
       val strBounds: Map[String, Array[String]] =
         zcols.zip(isStr).collect { case (c, true) =>
           val dist = df.select(col(c).as("v")).na.drop().distinct()

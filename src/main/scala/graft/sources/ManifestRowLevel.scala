@@ -137,11 +137,8 @@ private[sources] class ManifestReplaceWrite(
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val newParts = messages.toSeq.map { case m: PartCommit =>
-      PartMeta(m.path, m.rows, m.keyMin, m.keyMax, m.bloom,
-        m.strMin, m.strMax, bytes = m.bytes, cstats = m.cstats,
-        kNulls = m.keyNulls, sNulls = m.strNulls, kSum = m.keySum)
-    }.filter(_.rows > 0) // an all-deleted group needs no empty part
+    val newParts = messages.toSeq.map { case m: PartMeta => m }
+      .filter(_.rows > 0) // an all-deleted group needs no empty part
     val (replaced, base) = op.scannedOrFail
     val replacedPaths = replaced.map(_.path).toSet
     // footprint = the scanned (replaced) parts: a concurrent commit
@@ -158,7 +155,7 @@ private[sources] class ManifestReplaceWrite(
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(path).getFileSystem(conf.value)
     messages.foreach {
-      case m: PartCommit => fs.delete(new Path(m.path), false)
+      case m: PartMeta => fs.delete(new Path(m.path), false)
       case _ => ()
     }
   }

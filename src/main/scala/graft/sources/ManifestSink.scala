@@ -24,10 +24,10 @@ import org.apache.spark.util.SerializableConfiguration
   *  - every task stages its own uniquely-named part file
   *    (`part-<partition>-<task>`): task retries / speculative
   *    duplicates can never collide or corrupt committed data;
-  *  - each task's DataWriter.commit() returns a
-  *    [[PartCommit]] message carrying (rows, key min/max, path) —
-  *    per-partition statistics computed WHILE writing, the footer
-  *    metadata every modern table format keeps;
+  *  - each task's DataWriter.commit() returns the part's
+  *    [[PartMeta]] record (path, rows, per-column [[ColStat]]s) —
+  *    statistics computed WHILE writing, the footer metadata every
+  *    modern table format keeps;
   *  - the driver's BatchWrite.commit() writes `_MANIFEST.json` LAST,
   *    listing the table schema plus exactly the committed attempts —
   *    the manifest is the atomic publish point, so readers either see
@@ -50,7 +50,7 @@ import org.apache.spark.util.SerializableConfiguration
   * types — see [[ManifestCodec]]); the protocol, not the encoding, is
   * the operator. [[ManifestSource]] is the matching read path: it
   * plans one input partition per committed part and prunes parts
-  * whose (key min, key max) range cannot satisfy the pushed filters.
+  * whose column stats cannot satisfy the pushed filters.
   */
 class ManifestSink extends TableProvider {
   // the write schema comes from the DataFrame being written
@@ -182,13 +182,13 @@ private[sources] object PartBloom {
 }
 
 /** UTF-8 byte-order string comparison — the ONE collation every side
-  * of string-stats pruning uses. The writer tracks sMin/sMax with
+  * of string-stats pruning uses. The writer tracks string min/max with
   * UTF8String.compareTo (UTF-8 byte order); Java String's natural
   * order is UTF-16 code-unit order, which DISAGREES for supplementary
   * characters (U+10000+, surrogate pairs 0xD800–0xDFFF as code units)
   * vs chars in U+E000–U+FFFF — comparing stats with String operators
   * could prune a part that actually contains matching rows. Both
-  * [[PartMeta.strOverlaps]] and the scan builder's bound intersection
+  * [[ColStat.strOverlaps]] and the scan builder's bound intersection
   * route through here so stats and predicates always agree. */
 private[sources] object StrBin {
   import org.apache.spark.unsafe.types.UTF8String
@@ -198,24 +198,119 @@ private[sources] object StrBin {
   def max(a: String, b: String): String = if (cmp(a, b) >= 0) a else b
 }
 
-/** PER-COLUMN min/max stats beyond the primary key/string pair — the
-  * generalized data-skipping record every modern table format keeps
-  * per file: the writer tracks every additional LongType ('l') and
-  * StringType ('s') column while streaming rows out, and the scan
-  * prunes parts on predicates over ANY of them, not just the first.
-  * Bounds cover the part's NON-NULL values (comparisons are never
-  * TRUE for NULL, so skipping is 3VL-safe); an ABSENT entry means
-  * "no non-null values in this part" OR "written before stats
-  * existed" — both read as "cannot prune", never as "no rows match".
-  * Deletion vectors only narrow a part's live set, so the recorded
-  * bounds stay conservative (wider-than-live is always prune-safe).
-  * `nulls` = -1 and `sum` = None mean untracked; `bloom` is the
-  * declared secondary-column filter (hex, "" = none). */
+/** PER-COLUMN part statistics — the one data-skipping record a part
+  * keeps for each tracked column, keyed by column name in
+  * [[PartMeta.cstats]] (the per-file min/max/null-count record of
+  * Delta and Iceberg). The writer tracks the columns
+  * [[ManifestSink.statCols]] picks: BIGINT and TIMESTAMP columns as
+  * 'l' (TIMESTAMP as epoch micros), STRING columns as 's' in UTF-8
+  * byte order ([[StrBin]]).
+  *  - `min`/`max` bound the part's NON-NULL values (comparisons are
+  *    never TRUE for NULL, so skipping is 3VL-safe). Both are null
+  *    when the part holds no non-null value of the column (recorded
+  *    for the key and first string only, see
+  *    [[ManifestSink.keyAndFirstStr]]); every range or point probe
+  *    then excludes the part.
+  *  - `nulls` = -1 means untracked. `sum` is the exact sum of an 'l'
+  *    column's non-null values (None = untracked, or the part's sum
+  *    overflowed a Long while streaming).
+  *  - `bloom` is the column's point-lookup filter as hex ("" = none):
+  *    always built for the key (the first BIGINT), and for STRING
+  *    columns declared in `graft.bloom_cols` (see [[PartBloom]]).
+  * A column with no entry (no value in the part, the part predates
+  * it, or it is beyond the tracking cap) is never pruned on. Deletion
+  * vectors only narrow a part's live set, so recorded bounds stay
+  * conservative (wider-than-live is always prune-safe). The long
+  * bounds and the bloom bits are parsed once per record. */
 private[sources] final case class ColStat(kind: Char, min: String,
     max: String, nulls: Long = -1L, sum: Option[Long] = None,
     bloom: String = "") {
-  def lMin: Long = min.toLong
-  def lMax: Long = max.toLong
+  def hasValues: Boolean = min != null
+  lazy val lMin: Long = if (hasValues) min.toLong else Long.MaxValue
+  lazy val lMax: Long = if (hasValues) max.toLong else Long.MinValue
+  lazy val bloomBits: Array[Long] = PartBloom.fromHex(bloom)
+  /** Can the part hold the 'l' value `v`? Range, then bloom. */
+  def mayContain(v: Long): Boolean =
+    v >= lMin && v <= lMax &&
+      (bloomBits.isEmpty || PartBloom.mightContain(bloomBits, v))
+  /** Can the part hold the 's' value `v`? Range, then bloom. */
+  def mayContainStr(v: String): Boolean =
+    strOverlaps(Some(v), Some(v)) && (bloomBits.isEmpty ||
+      PartBloom.mightContain(bloomBits, PartBloom.strKey(v)))
+  /** Can the part hold an 's' value within [lo, hi] (inclusive, in
+    * [[StrBin]] order; None = open)? */
+  def strOverlaps(lo: Option[String], hi: Option[String]): Boolean =
+    hasValues && hi.forall(h => StrBin.cmp(min, h) <= 0) &&
+      lo.forall(l => StrBin.cmp(max, l) >= 0)
+  /** The part's provably single value: min == max and zero nulls. */
+  def single: Option[String] =
+    if (hasValues && nulls == 0L && min == max) Some(min) else None
+}
+
+/** BIGINT/TIMESTAMP predicates as canonical INCLUSIVE intervals, and a
+  * part's place against one — the single rule the scan, the
+  * metadata-only and copy-on-write DELETE paths and range equality
+  * deletes share. An empty interval (lo > hi) matches nothing:
+  * `c > Long.MaxValue` and `c < Long.MinValue` map to it, never to the
+  * one-point interval at the extreme, which would skip (or delete) the
+  * rows stored there. */
+private[sources] object LongRange {
+  import org.apache.spark.sql.sources.{And, EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+
+  /** (column, lo, hi) of a `<`/`<=`/`>`/`>=`/`=`/`<=>` comparison
+    * with a BIGINT or TIMESTAMP literal, or an AND of them on one
+    * column; None for any other filter. */
+  def of(f: Filter): Option[(String, Long, Long)] = f match {
+    case GreaterThan(c, v) => value(v).map(b =>
+      if (b == Long.MaxValue) (c, 1L, 0L) else (c, b + 1, Long.MaxValue))
+    case GreaterThanOrEqual(c, v) => value(v).map(b => (c, b, Long.MaxValue))
+    case LessThan(c, v) => value(v).map(b =>
+      if (b == Long.MinValue) (c, 1L, 0L) else (c, Long.MinValue, b - 1))
+    case LessThanOrEqual(c, v) => value(v).map(b => (c, Long.MinValue, b))
+    case EqualTo(c, v) => value(v).map(b => (c, b, b))
+    case EqualNullSafe(c, v) => value(v).map(b => (c, b, b))
+    case And(a, b) => for {
+      x <- of(a); y <- of(b) if x._1 == y._1
+    } yield (x._1, math.max(x._2, y._2), math.min(x._3, y._3))
+    case _ => None
+  }
+
+  /** A filter literal as the long the column's stats record: a BIGINT
+    * value, or a TIMESTAMP's epoch micros (java.sql.Timestamp by
+    * default, java.time.Instant under the java8 datetime API). */
+  def value(v: Any): Option[Long] = v match {
+    case l: Long => Some(l)
+    case t: java.sql.Timestamp => Some(
+      org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t))
+    case i: java.time.Instant => Some(
+      org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(i))
+    case _ => None
+  }
+
+  /** The interval a conjunction admits on `col` and whether EVERY
+    * conjunct is such a comparison on `col`; None when no conjunct
+    * bounds `col`. */
+  def conjunction(col: String,
+      filters: Seq[Filter]): Option[(Long, Long, Boolean)] = {
+    val legs = filters.map(f => of(f).filter(_._1 == col))
+    val ls = legs.flatten
+    if (ls.isEmpty) None
+    else Some((ls.map(_._2).max, ls.map(_._3).min, legs.forall(_.isDefined)))
+  }
+
+  /** Part `p` against [lo, hi] on column `col`: 'u' = no row can
+    * match, 'd' = every row provably matches (values inside, zero
+    * nulls), 'm' = straddles or undecidable. NULL never matches a
+    * range, so a part with no non-null value is 'u'. */
+  def classify(p: PartMeta, col: String, lo: Long, hi: Long): Char =
+    if (lo > hi || p.rows == 0L) 'u'
+    else p.cstats.get(col) match {
+      case Some(st) if st.kind == 'l' =>
+        if (!st.hasValues || st.lMax < lo || st.lMin > hi) 'u'
+        else if (st.lMin >= lo && st.lMax <= hi && st.nulls == 0L) 'd'
+        else 'm'
+      case _ => 'm'
+    }
 }
 
 /** DELETION VECTOR codec: a bitmap over a part's row ORDINALS (line
@@ -313,40 +408,30 @@ private[sources] object DeleteVector {
 private[sources] final case class EqClause(
     col: String, fieldId: Int, kind: Char, values: Seq[String])
 
-/** One committed part's full manifest record. `bloomHex` is "" when
-  * the part predates the bloom field or the table has no key column —
-  * [[mayContain]] then degrades to the pure range check. `sMin`/`sMax`
-  * are binary-collation min/max of the first STRING column (None when
-  * the part predates the field, has no string column, or saw only
-  * NULLs) — the reader prunes string predicates on them exactly like
-  * the long key range, and None always means "cannot exclude".
-  * `dvHex` is the part's DELETION VECTOR ("" = nothing deleted);
-  * `rows` stays the PHYSICAL line count — [[visibleRows]] is the
-  * served count, and all other stats become safe OVER-approximations
-  * once a vector exists (pruning may only over-include; exact
-  * metadata answers must consult [[visibleRows]] or decline).
-  * `kSum` is the exact sum of the key column's non-null values
-  * (None = untracked/legacy, or the per-part sum overflowed a Long
-  * while streaming) — the 4th leg of the file-stats record that
-  * turns a global SUM into a metadata-only answer; secondary long
-  * columns carry theirs in [[ColStat.sum]]. */
+/** One committed part's full manifest record — also the message a
+  * writer task commits (the driver only stamps `nbuckets`). Per-column
+  * statistics live in `cstats`, one [[ColStat]] per tracked column
+  * keyed by name. `bytes` is the part file's exact on-disk size (the
+  * planner-facing size statistic); `sorted` certifies the rows arrived
+  * in non-decreasing key order with no null key. `dvHex` is the part's
+  * DELETION VECTOR ("" = nothing deleted); `rows` stays the PHYSICAL
+  * line count — [[visibleRows]] is the served count, and all other
+  * stats become safe OVER-approximations once a vector exists (pruning
+  * may only over-include; exact metadata answers must consult
+  * [[visibleRows]] or decline). */
 private[sources] final case class PartMeta(
-    path: String, rows: Long, kMin: Long, kMax: Long, bloomHex: String,
-    sMin: Option[String] = None, sMax: Option[String] = None,
+    path: String, rows: Long,
     dvHex: String = "", dvRef: String = "", dvCard: Long = 0L,
     bytes: Long = 0L, bucket: Int = -1, nbuckets: Int = 0,
     sorted: Boolean = false,
     cstats: Map[String, ColStat] = Map.empty,
     cols: Seq[Int] = Seq.empty,
-    kNulls: Long = -1L, sNulls: Long = -1L,
-    kSum: Option[Long] = None,
     eq: Seq[EqClause] = Seq.empty,
     /** NESTED line sub-layouts: parent field id -> the nested field
       * ids of the struct token's sub-slots as written. Absent entry ⇒
       * identity (sub-slot = nested id) — the legacy rule one level
       * down; see [[ColMap.nested]]. */
-    ncols: Map[Int, Seq[Int]] = Map.empty) {
-  lazy val bloomBits: Array[Long] = PartBloom.fromHex(bloomHex)
+    ncols: Map[Int, Seq[Int]] = Map.empty) extends WriterCommitMessage {
   lazy val dvBits: Array[Long] = DeleteVector.fromHex(dvHex)
   /** A vector exists — inline (`dvHex`) or as a SIDECAR file
     * (`dvRef` + its cached cardinality `dvCard`). The sidecar is the
@@ -363,19 +448,6 @@ private[sources] final case class PartMeta(
     * consult [[countsExact]] and decline. */
   def visibleRows: Long = rows - dvCount
   def countsExact: Boolean = eq.isEmpty
-  def mayContain(v: Long): Boolean =
-    v >= kMin && v <= kMax &&
-      (bloomBits.isEmpty || PartBloom.mightContain(bloomBits, v))
-  /** Can this part contain a string-key row within [lo, hi]? (UTF-8
-    * byte-order compare via [[StrBin]] — the writer's collation —
-    * bounds inclusive; absent stats never exclude). */
-  def strOverlaps(lo: Option[String], hi: Option[String]): Boolean =
-    (sMin, sMax) match {
-      case (Some(mn), Some(mx)) =>
-        hi.forall(h => StrBin.cmp(mn, h) <= 0) &&
-          lo.forall(l => StrBin.cmp(mx, l) >= 0)
-      case _ => true
-    }
 }
 
 /** COLUMN MAPPING (the Delta column-mapping / Iceberg field-id shape):
@@ -490,7 +562,7 @@ object ManifestSink {
       }
     }
 
-  /** One committed part's stats: (path, rows, keyMin, keyMax). */
+  /** One committed part's stats: (path, rows, key min, key max). */
   def readManifest(conf: Configuration, dir: String): Seq[(String, Long, Long, Long)] =
     readManifest(conf, dir, None)
 
@@ -500,11 +572,58 @@ object ManifestSink {
     * silently serving the head instead would be a time-travel
     * correctness bug. */
   def readManifest(conf: Configuration, dir: String,
-      version: Option[Int]): Seq[(String, Long, Long, Long)] =
-    readManifestMeta(conf, dir, version)
-      .map(m => (m.path, m.rows, m.kMin, m.kMax))
+      version: Option[Int]): Seq[(String, Long, Long, Long)] = {
+    val (parts, snap) = readSnapshot(conf, dir, version)
+    val key = snap.flatMap(_._1.fields.find(_.dataType == LongType))
+      .map(_.name)
+    parts.map { m =>
+      val st = key.flatMap(m.cstats.get)
+      (m.path, m.rows, st.fold(Long.MaxValue)(_.lMin),
+        st.fold(Long.MinValue)(_.lMax))
+    }
+  }
 
-  /** Full per-part records including the bloom field. */
+  /** Names of the key (first BIGINT) and the first STRING column: the
+    * two whose [[ColStat]] a part keeps even when it holds no non-null
+    * value of them (their null counts prune IS [NOT] NULL and answer
+    * COUNT/SUM on all-null parts), and whose records a RENAME COLUMN
+    * carries to the new name. Any other column records nothing for an
+    * all-null part — an absent entry never prunes and declines
+    * metadata answers — and its records keep their write-time name,
+    * which a rename retires (they stop resolving, which is sound). */
+  private[sources] def keyAndFirstStr(schema: StructType): Set[String] = {
+    import org.apache.spark.sql.types.StringType
+    (schema.fields.find(_.dataType == LongType) ++
+      schema.fields.find(_.dataType == StringType)).map(_.name).toSet
+  }
+
+  /** The parts a write's task messages committed, each bucketed part
+    * stamped with the table's bucket count. */
+  private[sources] def committedParts(messages: Seq[WriterCommitMessage],
+      buckets: Option[Int]): Seq[PartMeta] =
+    messages.flatMap {
+      case m: PartMeta        => Seq(m)
+      case m: MultiPartCommit => m.parts
+    }.map(m =>
+      if (m.bucket >= 0) m.copy(nbuckets = buckets.getOrElse(0)) else m)
+
+  /** The columns whose per-part [[ColStat]] the writer records, as
+    * schema indices: ('l' columns, 's' columns). The key (first
+    * BIGINT) and up to 8 more BIGINT/TIMESTAMP columns; the first
+    * STRING and up to 8 more — the cap bounds manifest line width. */
+  private[sources] def statCols(
+      schema: StructType): (Array[Int], Array[Int]) = {
+    import org.apache.spark.sql.types.{StringType, TimestampType}
+    val keyIdx = schema.fields.indexWhere(_.dataType == LongType)
+    val longs = schema.fields.indices.filter(i => i != keyIdx &&
+      (schema.fields(i).dataType == LongType ||
+        schema.fields(i).dataType == TimestampType)).take(8)
+    ((if (keyIdx >= 0) keyIdx +: longs else longs).toArray,
+      schema.fields.indices.filter(schema.fields(_).dataType == StringType)
+        .take(9).toArray)
+  }
+
+  /** Full per-part records. */
   private[sources] def readManifestMeta(conf: Configuration, dir: String,
       version: Option[Int]): Seq[PartMeta] =
     MetaJson.decodeParts(manifestLines(conf, dir, version))
@@ -1436,7 +1555,7 @@ private[sources] class ManifestBatchWrite(
         }
         IdentityFillFactory(factory, schema, slot, spec.step,
           spec.allowExplicit,
-          ManifestIdentity.nextBase(head, schema, spec))
+          ManifestIdentity.nextBase(head, spec))
       case None => factory
     }
   }
@@ -1502,16 +1621,7 @@ private[sources] class ManifestBatchWrite(
         case (f, _) => f.copy(nullable = true)
       })
     }
-    val newParts = messages.toSeq.flatMap {
-      case m: PartCommit      => Seq(m)
-      case m: MultiPartCommit => m.parts
-    }.map { m =>
-      PartMeta(m.path, m.rows, m.keyMin, m.keyMax, m.bloom,
-        m.strMin, m.strMax, bytes = m.bytes, bucket = m.bucket,
-        nbuckets = if (m.bucket >= 0) buckets.getOrElse(0) else 0,
-        sorted = m.sorted, cstats = m.cstats,
-        kNulls = m.keyNulls, sNulls = m.strNulls, kSum = m.keySum)
-    }
+    val newParts = ManifestSink.committedParts(messages.toSeq, buckets)
     replaceFilters match {
       case Some(filters) =>
         // REPLACE WHERE (OverwriteByExpression): ONE atomic snapshot
@@ -1570,7 +1680,7 @@ private[sources] class ManifestBatchWrite(
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(path).getFileSystem(conf.value)
     messages.foreach {
-      case m: PartCommit => fs.delete(new Path(m.path), false)
+      case m: PartMeta => fs.delete(new Path(m.path), false)
       case m: MultiPartCommit =>
         m.parts.foreach(p => fs.delete(new Path(p.path), false))
       case _ => ()
@@ -1639,16 +1749,7 @@ private[sources] class ManifestStreamingWrite(
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     if (alreadyCommitted(epochId)) { abort(epochId, messages); return }
-    val newParts = messages.toSeq.flatMap {
-      case m: PartCommit      => Seq(m)
-      case m: MultiPartCommit => m.parts
-    }.map { m =>
-      PartMeta(m.path, m.rows, m.keyMin, m.keyMax, m.bloom,
-        m.strMin, m.strMax, bytes = m.bytes, bucket = m.bucket,
-        nbuckets = if (m.bucket >= 0) buckets.getOrElse(0) else 0,
-        sorted = m.sorted, cstats = m.cstats,
-        kNulls = m.keyNulls, sNulls = m.strNulls, kSum = m.keySum)
-    }
+    val newParts = ManifestSink.committedParts(messages.toSeq, buckets)
     ManifestSink.publishRebase(conf.value, path, schema, history = true,
       head => head ++ newParts, strictBase = None, op = opToken(epochId))
   }
@@ -1657,7 +1758,7 @@ private[sources] class ManifestStreamingWrite(
       messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(path).getFileSystem(conf.value)
     messages.foreach {
-      case m: PartCommit => fs.delete(new Path(m.path), false)
+      case m: PartMeta => fs.delete(new Path(m.path), false)
       case m: MultiPartCommit =>
         m.parts.foreach(p => fs.delete(new Path(p.path), false))
       case _ => ()
@@ -1676,22 +1777,9 @@ private[sources] final case class ManifestStreamingWriterFactory(
     batch.createWriter(partitionId, taskId)
 }
 
-/** Per-task statistics carried back to the driver at commit.
-  * `bytes` is the part file's exact on-disk size — the planner-facing
-  * size statistic (estimateStatistics) that lets a pruned scan report
-  * its true residual footprint instead of a width guess. */
-private[sources] case class PartCommit(
-    path: String, rows: Long, keyMin: Long, keyMax: Long, bloom: String,
-    strMin: Option[String] = None, strMax: Option[String] = None,
-    bytes: Long = 0L, bucket: Int = -1, sorted: Boolean = false,
-    cstats: Map[String, ColStat] = Map.empty,
-    keyNulls: Long = -1L, strNulls: Long = -1L,
-    keySum: Option[Long] = None)
-    extends WriterCommitMessage
-
-/** A bucketed task commits one message carrying one PartCommit per
-  * bucket it actually wrote. */
-private[sources] case class MultiPartCommit(parts: Seq[PartCommit])
+/** A bucketed or split task commits one message carrying one part per
+  * bucket or value it actually wrote. */
+private[sources] case class MultiPartCommit(parts: Seq[PartMeta])
     extends WriterCommitMessage
 
 private[sources] class ManifestWriterFactory(
@@ -1768,11 +1856,10 @@ private[sources] class BucketedManifestWriter(
 
   override def commit(): WriterCommitMessage = {
     val parts = writers.entrySet().iterator()
-    val out = Seq.newBuilder[PartCommit]
+    val out = Seq.newBuilder[PartMeta]
     while (parts.hasNext) {
       val e = parts.next()
-      out += e.getValue.commit().asInstanceOf[PartCommit]
-        .copy(bucket = e.getKey)
+      out += e.getValue.commit().copy(bucket = e.getKey)
     }
     MultiPartCommit(out.result())
   }
@@ -1852,9 +1939,9 @@ private[sources] class SplitManifestWriter(
 
   override def commit(): WriterCommitMessage = {
     val parts = writers.values().iterator()
-    val out = Seq.newBuilder[PartCommit]
+    val out = Seq.newBuilder[PartMeta]
     while (parts.hasNext)
-      out += parts.next().commit().asInstanceOf[PartCommit]
+      out += parts.next().commit()
     MultiPartCommit(out.result())
   }
 
@@ -1867,86 +1954,56 @@ private[sources] class SplitManifestWriter(
 }
 
 /** Executor-side writer: stages `part-<token>-<partition>-<task>` and
-  * tracks rows + min/max of the first LongType column while writing. */
+  * tracks the part's per-column [[ColStat]]s while writing. */
 private[sources] class ManifestDataWriter(
     dir: String, schema: StructType, token: String,
     partitionId: Int, taskId: Long, conf: Configuration,
     suffix: String = "", bloomCols: Seq[String] = Nil,
     bloomBits: Int = PartBloom.MaxBits)
     extends DataWriter[InternalRow] {
+  import org.apache.spark.unsafe.types.UTF8String
 
   private val file =
     new Path(dir, s"part-$token-$partitionId-$taskId$suffix.csv")
   private val fs = file.getFileSystem(conf)
   private val out = fs.create(file, true)
   private val keyIdx = schema.fields.indexWhere(_.dataType == LongType)
-  private val strIdx = schema.fields.indexWhere(
-    _.dataType == org.apache.spark.sql.types.StringType)
   private var rows = 0L
   private var bytes = 0L
-  private var kMin = Long.MaxValue
-  private var kMax = Long.MinValue
   // DETECTED sortedness: the part is key-sorted iff every key arrived
   // non-decreasing and none was null — detection beats declaration
   // (any write path that happens to produce sorted runs gets the
   // sort-free-join credit, including compaction and clustered writes)
   private var sorted = true
   private var lastKey = Long.MinValue
-  // min/max of the first string column in UTF8 BINARY order (the
-  // same collation Spark's string comparisons and the reader's
-  // pruning use) — tracked as UTF8String to avoid per-row decode
-  private var sMin: org.apache.spark.unsafe.types.UTF8String = null
-  private var sMax: org.apache.spark.unsafe.types.UTF8String = null
-  // GENERALIZED per-column stats (see [[ColStat]]): every ADDITIONAL
-  // long/string column beyond the primary pair, capped at 8 of each
-  // to bound manifest width — a few long-or-string `while` updates
-  // per row, the price of pruning on any predicate column at read
-  // TIMESTAMP columns ride the long legs verbatim (micros ARE the
-  // internal long) — min/max/null stats feed time-range part pruning
-  // and the days()/hours() split layout's derived partition values
-  private val extraLong: Array[Int] = schema.fields.indices
-    .filter(i => (schema.fields(i).dataType == LongType ||
-      schema.fields(i).dataType ==
-        org.apache.spark.sql.types.TimestampType) && i != keyIdx)
-    .take(8).toArray
-  private val extraStr: Array[Int] = schema.fields.indices
-    .filter(i => schema.fields(i).dataType ==
-      org.apache.spark.sql.types.StringType && i != strIdx)
-    .take(8).toArray
-  private val eLMin = Array.fill(extraLong.length)(Long.MaxValue)
-  private val eLMax = Array.fill(extraLong.length)(Long.MinValue)
-  private val eSMin =
-    new Array[org.apache.spark.unsafe.types.UTF8String](extraStr.length)
-  private val eSMax =
-    new Array[org.apache.spark.unsafe.types.UTF8String](extraStr.length)
-  // NULL COUNTS per tracked column — the third leg of the file-stats
-  // triple (min/max/null_count): IS [NOT] NULL part pruning and
-  // metadata-only COUNT(col) both answer from these
-  private var keyNulls = 0L
-  private var strNulls = 0L
-  private val eLNulls = Array.fill(extraLong.length)(0L)
-  private val eSNulls = Array.fill(extraStr.length)(0L)
-  // EXACT SUMS of every tracked long column (non-null values, exact
-  // arithmetic: a per-part overflow marks the column's sum untracked
-  // rather than wrapping) — the 4th stats leg, turning a global SUM
-  // into a metadata-only pushed aggregate
-  private var keySum = 0L
-  private var keySumOk = true
-  private val eLSum = Array.fill(extraLong.length)(0L)
-  private val eLSumOk = Array.fill(extraLong.length)(true)
-  // built at max size while streaming (final row count unknown),
-  // folded to the row-count-sized filter at commit — see PartBloom
-  private val bloom = if (keyIdx >= 0) PartBloom.newBits() else null
-  // SECONDARY-COLUMN BLOOMS: one filter per declared STRING column
-  // (graft.bloom_cols), fed the stable 64-bit hash of each value's
-  // UTF-8 bytes — attached to the column's ColStat at commit
-  private val bloomStrIdx: Array[Int] = bloomCols
-    .map(c => schema.fields.indexWhere(f =>
-      f.name.equalsIgnoreCase(c) &&
-        f.dataType == org.apache.spark.sql.types.StringType))
-    .filter(_ >= 0).toArray
-  private val colBlooms: Array[Array[Long]] =
-    Array.fill(bloomStrIdx.length)(PartBloom.newBits(bloomBits))
+  // the tracked columns (ManifestSink.statCols): a few `while` updates
+  // per row over plain arrays, no per-row lookup or allocation
+  // beyond the string min/max clones
+  private val (longCols, strCols) = ManifestSink.statCols(schema)
+  private val minL = Array.fill(longCols.length)(Long.MaxValue)
+  private val maxL = Array.fill(longCols.length)(Long.MinValue)
+  private val nullsL = new Array[Long](longCols.length)
+  // EXACT sums (a per-part overflow marks the column's sum untracked
+  // rather than wrapping) — what turns a global SUM into a
+  // metadata-only pushed aggregate
+  private val sumL = new Array[Long](longCols.length)
+  private val sumOkL = Array.fill(longCols.length)(true)
+  // string min/max in UTF8 BINARY order (the collation Spark's string
+  // comparisons and the reader's pruning use), kept as UTF8String to
+  // avoid per-row decode
+  private val minS = new Array[UTF8String](strCols.length)
+  private val maxS = new Array[UTF8String](strCols.length)
+  private val nullsS = new Array[Long](strCols.length)
+  // blooms (null = none): the key always; STRING columns declared in
+  // `graft.bloom_cols`, fed the stable 64-bit hash of the value's
+  // UTF-8 bytes. Built at max size while streaming (final row count
+  // unknown), folded to the row-count-sized filter at commit.
+  private val bloomL: Array[Array[Long]] = longCols.map(i =>
+    if (i == keyIdx) PartBloom.newBits() else null)
+  private val bloomS: Array[Array[Long]] = strCols.map(i =>
+    if (bloomCols.exists(_.equalsIgnoreCase(schema.fields(i).name)))
+      PartBloom.newBits(bloomBits)
+    else null)
 
   /** Row-level rewrites deliver (metadata, row) pairs; the manifest
     * writer needs no per-row metadata (the rewrite's replaced-part
@@ -1960,96 +2017,68 @@ private[sources] class ManifestDataWriter(
     out.write(line)
     rows += 1
     bytes += line.length
-    if (keyIdx >= 0 && !row.isNullAt(keyIdx)) {
-      val k = row.getLong(keyIdx)
-      if (k < kMin) kMin = k
-      if (k > kMax) kMax = k
-      if (k < lastKey) sorted = false
-      lastKey = k
-      PartBloom.add(bloom, k)
-      if (keySumOk)
-        try keySum = Math.addExact(keySum, k)
-        catch { case _: ArithmeticException => keySumOk = false }
-    } else if (keyIdx >= 0) { sorted = false; keyNulls += 1 }
-    if (strIdx >= 0 && !row.isNullAt(strIdx)) {
-      val s = row.getUTF8String(strIdx)
-      if (sMin == null || s.compareTo(sMin) < 0) sMin = s.clone()
-      if (sMax == null || s.compareTo(sMax) > 0) sMax = s.clone()
-    } else if (strIdx >= 0) strNulls += 1
+    if (keyIdx >= 0) {
+      if (row.isNullAt(keyIdx)) sorted = false
+      else {
+        val k = row.getLong(keyIdx)
+        if (k < lastKey) sorted = false
+        lastKey = k
+      }
+    }
     var i = 0
-    while (i < extraLong.length) {
-      val idx = extraLong(i)
+    while (i < longCols.length) {
+      val idx = longCols(i)
       if (!row.isNullAt(idx)) {
         val v = row.getLong(idx)
-        if (v < eLMin(i)) eLMin(i) = v
-        if (v > eLMax(i)) eLMax(i) = v
-        if (eLSumOk(i))
-          try eLSum(i) = Math.addExact(eLSum(i), v)
-          catch { case _: ArithmeticException => eLSumOk(i) = false }
-      } else eLNulls(i) += 1
+        if (v < minL(i)) minL(i) = v
+        if (v > maxL(i)) maxL(i) = v
+        if (sumOkL(i))
+          try sumL(i) = Math.addExact(sumL(i), v)
+          catch { case _: ArithmeticException => sumOkL(i) = false }
+        if (bloomL(i) != null) PartBloom.add(bloomL(i), v)
+      } else nullsL(i) += 1
       i += 1
     }
     i = 0
-    while (i < extraStr.length) {
-      val idx = extraStr(i)
+    while (i < strCols.length) {
+      val idx = strCols(i)
       if (!row.isNullAt(idx)) {
         val s = row.getUTF8String(idx)
-        if (eSMin(i) == null || s.compareTo(eSMin(i)) < 0) eSMin(i) = s.clone()
-        if (eSMax(i) == null || s.compareTo(eSMax(i)) > 0) eSMax(i) = s.clone()
-      } else eSNulls(i) += 1
-      i += 1
-    }
-    i = 0
-    while (i < bloomStrIdx.length) {
-      val idx = bloomStrIdx(i)
-      if (!row.isNullAt(idx))
-        PartBloom.add(colBlooms(i), PartBloom.strKey(row.getUTF8String(idx)))
+        if (minS(i) == null || s.compareTo(minS(i)) < 0) minS(i) = s.clone()
+        if (maxS(i) == null || s.compareTo(maxS(i)) > 0) maxS(i) = s.clone()
+        if (bloomS(i) != null) PartBloom.add(bloomS(i), PartBloom.strKey(s))
+      } else nullsS(i) += 1
       i += 1
     }
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def commit(): PartMeta = {
     out.close()
-    val hex =
-      if (bloom == null || kMin > kMax) "" // no key column / no non-null keys
-      else PartBloom.toHex(PartBloom.shrinkFor(bloom, rows))
-    // declared secondary blooms by column name (non-empty filters
-    // only — an all-null column writes no bloom)
-    val colBloomHex: Map[String, String] = bloomStrIdx.indices.collect {
-      case i if colBlooms(i).exists(_ != 0L) =>
-        schema.fields(bloomStrIdx(i)).name ->
-          PartBloom.toHex(PartBloom.shrinkFor(colBlooms(i), rows))
-    }.toMap
+    // an all-null column writes no bloom
+    def hexOf(bits: Array[Long]): String =
+      if (bits == null || !bits.exists(_ != 0L)) ""
+      else PartBloom.toHex(PartBloom.shrinkFor(bits, rows))
+    val keep = ManifestSink.keyAndFirstStr(schema)
     val cstats: Map[String, ColStat] =
-      (extraLong.indices.collect {
-        case i if eLMin(i) <= eLMax(i) =>
-          schema.fields(extraLong(i)).name ->
-            ColStat('l', eLMin(i).toString, eLMax(i).toString, eLNulls(i),
-              if (eLSumOk(i)) Some(eLSum(i)) else None)
-      } ++ extraStr.indices.collect {
-        case i if eSMin(i) != null =>
-          val name = schema.fields(extraStr(i)).name
-          name -> ColStat('s', eSMin(i).toString, eSMax(i).toString,
-            eSNulls(i), bloom = colBloomHex.getOrElse(name, ""))
-      } ++
-        // the PRIMARY string column's min/max ride the line's own
-        // smin/smax fields, not cstats — a declared bloom on it still
-        // needs a ColStat carrier (min/max duplicated, harmless)
-        (if (strIdx >= 0 && sMin != null &&
-             colBloomHex.contains(schema.fields(strIdx).name))
-           Seq(schema.fields(strIdx).name ->
-             ColStat('s', sMin.toString, sMax.toString, strNulls,
-               bloom = colBloomHex(schema.fields(strIdx).name)))
-         else Nil)).toMap
-    PartCommit(file.toString, rows, kMin, kMax, hex,
-      Option(sMin).map(_.toString), Option(sMax).map(_.toString), bytes,
-      sorted = keyIdx >= 0 && rows > 0 && sorted, cstats = cstats,
-      keyNulls = if (keyIdx >= 0) keyNulls else -1L,
-      strNulls = if (strIdx >= 0) strNulls else -1L,
-      // an all-null/empty part records Some(0): the sum over zero
-      // non-null values is additively 0 (the NULL-vs-0 decision for
-      // SQL SUM belongs to the fold, which has the null counts)
-      keySum = if (keyIdx >= 0 && keySumOk) Some(keySum) else None)
+      (longCols.indices.collect {
+        case i if minL(i) <= maxL(i) || keep(schema.fields(longCols(i)).name) =>
+          val has = minL(i) <= maxL(i)
+          // an all-null/empty part records Some(0): the sum over zero
+          // non-null values is additively 0 (the NULL-vs-0 decision
+          // for SQL SUM belongs to the fold, which sees hasValues)
+          schema.fields(longCols(i)).name -> ColStat('l',
+            if (has) minL(i).toString else null,
+            if (has) maxL(i).toString else null, nullsL(i),
+            if (sumOkL(i)) Some(sumL(i)) else None, hexOf(bloomL(i)))
+      } ++ strCols.indices.collect {
+        case i if minS(i) != null || keep(schema.fields(strCols(i)).name) =>
+          schema.fields(strCols(i)).name -> ColStat('s',
+            Option(minS(i)).map(_.toString).orNull,
+            Option(maxS(i)).map(_.toString).orNull, nullsS(i),
+            bloom = hexOf(bloomS(i)))
+      }).toMap
+    PartMeta(file.toString, rows, bytes = bytes,
+      sorted = keyIdx >= 0 && rows > 0 && sorted, cstats = cstats)
   }
 
   override def abort(): Unit = {

@@ -189,51 +189,32 @@ private[sources] class ManifestScanBuilder(
     with SupportsPushDownLimit
     with SupportsPushDownTopN {
 
-  // the writer tracked min/max of the first LongType column; the
-  // reader prunes on exactly the same column
+  // the key (first BIGINT): the column parts are sorted and bucketed
+  // by, so TopN and the pushed-filter report speak about it alone
   private val keyCol: Option[String] =
     schema.fields.find(_.dataType == LongType).map(_.name)
 
-  private val strCol: Option[String] =
-    schema.fields.find(_.dataType == StringType).map(_.name)
-
   private var required: StructType = schema
-  private var keyLo: Long = Long.MinValue // inclusive
-  private var keyHi: Long = Long.MaxValue // inclusive
-  // string bounds (binary collation, inclusive) on the first string
-  // column, from pushed predicates — pruned against smin/smax stats
-  private var strLo: Option[String] = None
-  private var strHi: Option[String] = None
-  // discrete IN-list values on the primary string column (see the In
-  // case below — the range alone can't exclude lexically-between
-  // values); intersected across conjunctive In filters
-  private var strInSet: Option[Set[String]] = None
-  // GENERALIZED column bounds from pushed predicates on ANY OTHER
-  // long/string column — pruned against the per-part [[ColStat]]
-  // record; a part with no stat for a bounded column is kept (absent
-  // means "cannot prune", covering legacy manifests and all-null
-  // parts alike)
-  private var cLongLo = Map.empty[String, Long]
-  private var cLongHi = Map.empty[String, Long]
-  private var cStrLo = Map.empty[String, String]
-  private var cStrHi = Map.empty[String, String]
-  // discrete point values per STRING column (EqualTo / fully-typed
-  // In), intersected across conjuncts — consulted against the
-  // column's declared SECONDARY BLOOM ([[ColStat.bloom]]) where
-  // min/max ranges admit nearly every part (URLs, digests, UUIDs)
-  private var cStrPoints = Map.empty[String, Set[String]]
-  private def addStrPoints(c: String, vs: Set[String]): Unit =
-    cStrPoints += c -> cStrPoints.get(c).fold(vs)(_ intersect vs)
-  // IS [NOT] NULL predicates, pruned against the per-part NULL COUNTS
-  // (key/first-string columns always tracked; other long/string
-  // columns via their ColStat record); unknown (-1, legacy) never
-  // prunes
+  // per-column bounds from pushed predicates, pruned against each
+  // part's [[ColStat]]: BIGINT/TIMESTAMP intervals ([[LongRange]]),
+  // STRING bounds (inclusive, [[StrBin]] order — open bounds stay
+  // closed-for-pruning: exclusion only needs "can't overlap", row
+  // exactness is the residual filter's job). A part with no stat for
+  // a bounded column is kept (absent means "cannot prune").
+  private var longBounds = Map.empty[String, (Long, Long)]
+  private var strLo = Map.empty[String, String]
+  private var strHi = Map.empty[String, String]
+  // discrete point values per column (=, <=>, fully-typed IN),
+  // intersected across conjuncts: a part survives when SOME value
+  // passes the column's range AND bloom — a [min..max] range over an
+  // IN list would admit every value between, and blooms are the only
+  // pruning that works on hash layouts and high-cardinality strings
+  private var longPoints = Map.empty[String, Set[Long]]
+  private var strPoints = Map.empty[String, Set[String]]
+  // IS [NOT] NULL predicates, pruned against the per-part NULL COUNTS;
+  // unknown (-1) never prunes
   private var isNullCols = Set.empty[String]
   private var notNullCols = Set.empty[String]
-  // candidate key values from point predicates (EqualTo / fully-typed
-  // In), intersected across conjuncts — enables bloom pruning, which
-  // range bounds can't do on hash-layout parts
-  private var points: Option[Set[Long]] = None
   private var pushed: Array[Filter] = Array.empty
   private var sawFilters = false
   // the accepted metadata aggregate's (output schema, final rows) —
@@ -257,7 +238,7 @@ private[sources] class ManifestScanBuilder(
     * writes, recorded as min==max per-part stats) — the classic
     * "rows per day over 100k files" answered from the manifest alone,
     * one output row per group. SUM answers from the writer's exact
-    * per-part sums ([[PartMeta.kSum]] / [[ColStat.sum]]); a fold that
+    * per-part sums ([[ColStat.sum]]); a fold that
     * would overflow a Long declines instead of wrapping. Complete
     * pushdown: emitted rows carry final values, not partials. */
   private def canPushAgg(a: Aggregation): Boolean = metaAggAnswer(a).isDefined
@@ -322,65 +303,35 @@ private[sources] class ManifestScanBuilder(
       }
     }
     def groupValue(p: PartMeta, c: String): Option[Any] =
-      if (keyCol.contains(c)) {
-        if (p.kNulls == 0 && p.kMin == p.kMax)
-          Some(java.lang.Long.valueOf(p.kMin))
-        else if (p.kNulls > 0 && p.kNulls == p.rows) Some(null)
-        else None // straddles, or legacy (kNulls == -1)
-      } else if (strCol.contains(c)) {
-        if (p.sNulls == 0 && p.sMin.isDefined && p.sMin == p.sMax)
-          Some(p.sMin.get)
-        else if (p.sNulls > 0 && p.sNulls == p.rows) Some(null)
+      p.cstats.get(c).flatMap { st =>
+        if (st.hasValues) st.single.map(v =>
+          if (st.kind == 'l') java.lang.Long.valueOf(v.toLong) else v)
+        else if (st.nulls == p.rows) Some(null)
         else None
-      } else p.cstats.get(c) match {
-        case Some(st) if st.nulls == 0 && st.min == st.max =>
-          Some(if (st.kind == 'l') java.lang.Long.valueOf(st.lMin)
-            else st.min)
-        // absent entry = all-null part OR legacy manifest — the two
-        // are indistinguishable here, so decline both
-        case _ => None
       }
     if (groupNames.nonEmpty && (anyDv ||
         live.exists(p => groupNames.exists(c => groupValue(p, c).isEmpty))))
       return None
 
-    // ---- per-aggregate answerability (uniform across parts)
-    def isKeyRef(n: String) = keyCol.contains(n)
-    // the STRING stats column folds exactly: the writer records
-    // sMin/sMax in UTF8 binary order — Spark's own string collation —
-    // and `sMin == None` MEANS "no non-null strings in this part"
-    def isStrRef(n: String) = strCol.contains(n)
-    // ANY OTHER long/string column answers from its [[ColStat]]
-    // record — but ONLY when every live part carries one: a part with
-    // rows and no entry is an all-null part, a legacy manifest, or a
-    // column beyond the writer's tracking cap, and the first is the
-    // only one where skipping would be correct — declining all three
-    // keeps the metadata answer provably exact
-    def isStatRef(n: String): Boolean =
-      !isKeyRef(n) && !isStrRef(n) &&
-        fieldOf(n).exists(f =>
-          f.dataType == LongType || f.dataType == StringType ||
-            f.dataType == org.apache.spark.sql.types.TimestampType) &&
-        meta.forall(p => p.visibleRows == 0 || p.cstats.contains(n))
-    def statAnswerable(n: String): Boolean =
-      isKeyRef(n) || isStrRef(n) || isStatRef(n)
+    // ---- per-aggregate answerability (uniform across parts): every
+    // column answers from its [[ColStat]] — but ONLY when every live
+    // part carries one (a part with rows and no entry predates the
+    // column or is beyond the writer's tracking cap). STRING stats
+    // fold exactly: the writer records them in UTF8 binary order,
+    // Spark's own string collation.
+    def statType(n: String): Boolean = fieldOf(n).exists(f =>
+      f.dataType == LongType || f.dataType == StringType ||
+        f.dataType == TimestampType)
+    def statAnswerable(n: String): Boolean = statType(n) &&
+      meta.forall(p => p.visibleRows == 0 || p.cstats.contains(n))
     // COUNT(col) = Σ (rows − null count), answerable when every part
     // carries a null count for the column
-    def countAnswerable(n: String): Boolean =
-      if (isKeyRef(n)) meta.forall(_.kNulls >= 0)
-      else if (isStrRef(n)) meta.forall(_.sNulls >= 0)
-      else fieldOf(n).exists(f =>
-        f.dataType == LongType || f.dataType == StringType ||
-          f.dataType == org.apache.spark.sql.types.TimestampType) &&
-        meta.forall(p => p.rows == 0 ||
-          p.cstats.get(n).exists(_.nulls >= 0))
-    // SUM(col) answers from the writer's exact per-part sums — key
-    // column from [[PartMeta.kSum]], secondary longs from
-    // [[ColStat.sum]]; a part written before sum tracking (or whose
-    // own sum overflowed) declines
+    def countAnswerable(n: String): Boolean = statType(n) &&
+      meta.forall(p => p.rows == 0 || p.cstats.get(n).exists(_.nulls >= 0))
+    // SUM(col) answers from the writer's exact per-part sums; a part
+    // whose own sum overflowed declines
     def sumAnswerable(n: String): Boolean =
-      if (isKeyRef(n)) meta.forall(p => p.rows == 0 || p.kSum.isDefined)
-      else fieldOf(n).exists(_.dataType == LongType) &&
+      fieldOf(n).exists(_.dataType == LongType) &&
         meta.forall(p => p.rows == 0 ||
           p.cstats.get(n).exists(_.sum.isDefined))
     val ok = a.aggregateExpressions.forall {
@@ -396,45 +347,26 @@ private[sources] class ManifestScanBuilder(
     if (!ok) return None
 
     // ---- fold final values per group of parts
-    def foldMM(g: Seq[PartMeta], c: String, wantMin: Boolean): Any =
-      if (isKeyRef(c)) {
-        val withKeys = g.filter(p => p.kMin <= p.kMax)
-        if (withKeys.isEmpty) null
-        else java.lang.Long.valueOf(
-          if (wantMin) withKeys.map(_.kMin).min else withKeys.map(_.kMax).max)
-      } else if (isStrRef(c)) {
-        val withStr = g.filter(_.sMin.isDefined)
-        if (withStr.isEmpty) null
-        else if (wantMin) withStr.map(_.sMin.get).reduce(StrBin.min)
-        else withStr.map(_.sMax.get).reduce(StrBin.max)
-      } else {
-        val st = g.flatMap(_.cstats.get(c))
-        if (st.isEmpty) null
-        else if (st.head.kind == 's') {
-          if (wantMin) st.map(_.min).reduce(StrBin.min)
-          else st.map(_.max).reduce(StrBin.max)
-        } else java.lang.Long.valueOf(
-          if (wantMin) st.map(_.lMin).min else st.map(_.lMax).max)
-      }
+    def foldMM(g: Seq[PartMeta], c: String, wantMin: Boolean): Any = {
+      val st = g.flatMap(_.cstats.get(c)).filter(_.hasValues)
+      if (st.isEmpty) null
+      else if (st.head.kind == 's') {
+        if (wantMin) st.map(_.min).reduce(StrBin.min)
+        else st.map(_.max).reduce(StrBin.max)
+      } else java.lang.Long.valueOf(
+        if (wantMin) st.map(_.lMin).min else st.map(_.lMax).max)
+    }
     def countNonNull(g: Seq[PartMeta], c: String): Long = g.map { p =>
-      if (isKeyRef(c)) p.rows - math.max(0L, p.kNulls)
-      else if (isStrRef(c)) p.rows - math.max(0L, p.sNulls)
-      else p.cstats.get(c).map(st => p.rows - math.max(0L, st.nulls))
+      p.cstats.get(c).map(st => p.rows - math.max(0L, st.nulls))
         .getOrElse(0L)
     }.sum
-    // SQL SUM is NULL iff zero non-null inputs — provable without
-    // null counts: a part saw a non-null value iff it recorded stats
-    def foldSum(g: Seq[PartMeta], c: String): Any = {
-      val any =
-        if (isKeyRef(c)) g.exists(p => p.kMin <= p.kMax)
-        else g.exists(_.cstats.contains(c))
-      if (!any) null
+    // SQL SUM is NULL iff zero non-null inputs
+    def foldSum(g: Seq[PartMeta], c: String): Any =
+      if (!g.exists(_.cstats.get(c).exists(_.hasValues))) null
       else java.lang.Long.valueOf(g.foldLeft(0L) { (acc, p) =>
-        val s = if (isKeyRef(c)) p.kSum.getOrElse(0L)
-          else p.cstats.get(c).flatMap(_.sum).getOrElse(0L)
-        Math.addExact(acc, s) // overflow → decline via the catch below
+        // overflow → decline via the catch below
+        Math.addExact(acc, p.cstats.get(c).flatMap(_.sum).getOrElse(0L))
       })
-    }
     def groupRow(key: Seq[Any], g: Seq[PartMeta]): Array[Any] =
       (key ++ a.aggregateExpressions.toSeq.map[Any] {
         // visibleRows: a deletion vector reduces the served count
@@ -524,172 +456,55 @@ private[sources] class ManifestScanBuilder(
   }
   override def isPartiallyPushed(): Boolean = true
 
-  /** Accept range/point predicates on the key column for part pruning;
-    * report every filter as residual (Spark re-evaluates row-level). */
+  /** Accept range/point/null predicates on any stats-tracked column
+    * for part pruning; report every filter as residual (Spark
+    * re-evaluates row-level). */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     if (filters.nonEmpty) sawFilters = true
     def isKey(c: String) = keyCol.contains(c)
-    filters.foreach {
-      case IsNull(c)    => isNullCols += c
-      case IsNotNull(c) => notNullCols += c
-      case GreaterThan(c, v: Long) if isKey(c) =>
-        keyLo = math.max(keyLo, if (v == Long.MaxValue) v else v + 1)
-      case GreaterThanOrEqual(c, v: Long) if isKey(c) =>
-        keyLo = math.max(keyLo, v)
-      case LessThan(c, v: Long) if isKey(c) =>
-        keyHi = math.min(keyHi, if (v == Long.MinValue) v else v - 1)
-      case LessThanOrEqual(c, v: Long) if isKey(c) =>
-        keyHi = math.min(keyHi, v)
-      case EqualTo(c, v: Long) if isKey(c) =>
-        keyLo = math.max(keyLo, v); keyHi = math.min(keyHi, v)
-        addPoints(Set(v))
-      // <=> with a NON-NULL literal is exactly = for pruning (it
-      // matches only that value; `c <=> NULL` arrives with a null
-      // operand, never matches `v: Long`, and stays unpruned)
-      case EqualNullSafe(c, v: Long) if isKey(c) =>
-        keyLo = math.max(keyLo, v); keyHi = math.min(keyHi, v)
-        addPoints(Set(v))
-      case In(c, vs) if isKey(c) && vs.nonEmpty =>
-        val longs = vs.collect { case v: Long => v }
-        if (longs.length == vs.length) { // only prune when ALL values are typed
-          keyLo = math.max(keyLo, longs.min); keyHi = math.min(keyHi, longs.max)
-          addPoints(longs.toSet)
+    def addStrLo(c: String, v: String): Unit =
+      strLo += c -> strLo.get(c).fold(v)(StrBin.max(v, _))
+    def addStrHi(c: String, v: String): Unit =
+      strHi += c -> strHi.get(c).fold(v)(StrBin.min(v, _))
+    def addStrPoints(c: String, vs: Set[String]): Unit =
+      strPoints += c -> strPoints.get(c).fold(vs)(_ intersect vs)
+    def addLongPoints(c: String, vs: Seq[Any]): Unit = {
+      val ls = vs.flatMap(LongRange.value)
+      // only prune when ALL values are typed
+      if (ls.length == vs.length) longPoints += c ->
+        longPoints.get(c).fold(ls.toSet)(_ intersect ls.toSet)
+    }
+    filters.foreach { f =>
+      LongRange.of(f).foreach { case (c, lo, hi) =>
+        longBounds += c -> longBounds.get(c).fold((lo, hi)) {
+          case (l, h) => (math.max(l, lo), math.min(h, hi))
         }
-      // string-column bounds against the smin/smax part stats. ALL
-      // comparisons — intersecting bounds here and checking stats in
-      // strOverlaps — go through StrBin (UTF-8 byte order, the
-      // writer's collation); Java String order (UTF-16 code units)
-      // would disagree on supplementary characters and could prune a
-      // part that holds matching rows. Open bounds stay open: GT/LT
-      // keep the boundary value in the PRUNING range — row-exactness
-      // is the residual filter's job, exclusion only needs "can't
-      // overlap".
-      case EqualTo(c, v: String) if strCol.contains(c) =>
-        strLo = Some(strLo.fold(v)(StrBin.max(v, _)))
-        strHi = Some(strHi.fold(v)(StrBin.min(v, _)))
-        addStrPoints(c, Set(v))
-      case EqualNullSafe(c, v: String) if strCol.contains(c) =>
-        strLo = Some(strLo.fold(v)(StrBin.max(v, _)))
-        strHi = Some(strHi.fold(v)(StrBin.min(v, _)))
-        addStrPoints(c, Set(v))
-      case GreaterThan(c, v: String) if strCol.contains(c) =>
-        strLo = Some(strLo.fold(v)(StrBin.max(v, _)))
-      case GreaterThanOrEqual(c, v: String) if strCol.contains(c) =>
-        strLo = Some(strLo.fold(v)(StrBin.max(v, _)))
-      case LessThan(c, v: String) if strCol.contains(c) =>
-        strHi = Some(strHi.fold(v)(StrBin.min(v, _)))
-      case LessThanOrEqual(c, v: String) if strCol.contains(c) =>
-        strHi = Some(strHi.fold(v)(StrBin.min(v, _)))
-      case In(c, vs) if strCol.contains(c) && vs.nonEmpty =>
-        val strs = vs.collect { case v: String => v }
-        if (strs.length == vs.length) {
-          val mn = strs.reduce(StrBin.min)
-          val mx = strs.reduce(StrBin.max)
-          strLo = Some(strLo.fold(mn)(StrBin.max(mn, _)))
-          strHi = Some(strHi.fold(mx)(StrBin.min(mx, _)))
-          // the DISCRETE set too: a [min..max] range over an IN list
-          // admits every lexically-between value ('error' sits inside
-          // ['click','view']) — on a value-split layout the point set
-          // is what prunes to exactly the named values' parts
-          strInSet = Some(strInSet.fold(strs.toSet)(_ intersect strs.toSet))
-          addStrPoints(c, strs.toSet)
-        }
-      // LIKE 'p%' — every match is >= p, and (when the last char can
-      // increment byte-safely) < p-with-last-char-incremented, so an
-      // INCLUSIVE hi of that successor is a conservative superset
-      case StringStartsWith(c, v) if strCol.contains(c) && v.nonEmpty =>
-        strLo = Some(strLo.fold(v)(StrBin.max(v, _)))
-        prefixUpper(v).foreach(u =>
-          strHi = Some(strHi.fold(u)(StrBin.min(u, _))))
-      case StringStartsWith(c, v) if v.nonEmpty =>
-        cStrLo += c -> cStrLo.get(c).fold(v)(StrBin.max(v, _))
-        prefixUpper(v).foreach(u =>
-          cStrHi += c -> cStrHi.get(c).fold(u)(StrBin.min(u, _)))
-      // every OTHER long/string column: intersect into the
-      // generalized bound maps, pruned against per-part ColStats.
-      // Open long bounds tighten by ±1 exactly like the key column's;
-      // open string bounds stay closed-for-pruning (exclusion only
-      // needs "can't overlap" — row exactness is the residual's job)
-      case GreaterThan(c, v: Long) =>
-        cLongLo += c -> math.max(cLongLo.getOrElse(c, Long.MinValue),
-          if (v == Long.MaxValue) v else v + 1)
-      case GreaterThanOrEqual(c, v: Long) =>
-        cLongLo += c -> math.max(cLongLo.getOrElse(c, Long.MinValue), v)
-      case LessThan(c, v: Long) =>
-        cLongHi += c -> math.min(cLongHi.getOrElse(c, Long.MaxValue),
-          if (v == Long.MinValue) v else v - 1)
-      case LessThanOrEqual(c, v: Long) =>
-        cLongHi += c -> math.min(cLongHi.getOrElse(c, Long.MaxValue), v)
-      case EqualTo(c, v: Long) =>
-        cLongLo += c -> math.max(cLongLo.getOrElse(c, Long.MinValue), v)
-        cLongHi += c -> math.min(cLongHi.getOrElse(c, Long.MaxValue), v)
-      case EqualNullSafe(c, v: Long) =>
-        cLongLo += c -> math.max(cLongLo.getOrElse(c, Long.MinValue), v)
-        cLongHi += c -> math.min(cLongHi.getOrElse(c, Long.MaxValue), v)
-      case In(c, vs) if vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[Long]) =>
-        val longs = vs.map(_.asInstanceOf[Long])
-        cLongLo += c -> math.max(cLongLo.getOrElse(c, Long.MinValue), longs.min)
-        cLongHi += c -> math.min(cLongHi.getOrElse(c, Long.MaxValue), longs.max)
-      case EqualTo(c, v: String) =>
-        cStrLo += c -> cStrLo.get(c).fold(v)(StrBin.max(v, _))
-        cStrHi += c -> cStrHi.get(c).fold(v)(StrBin.min(v, _))
-        addStrPoints(c, Set(v))
-      case EqualNullSafe(c, v: String) =>
-        cStrLo += c -> cStrLo.get(c).fold(v)(StrBin.max(v, _))
-        cStrHi += c -> cStrHi.get(c).fold(v)(StrBin.min(v, _))
-        addStrPoints(c, Set(v))
-      case GreaterThan(c, v: String) =>
-        cStrLo += c -> cStrLo.get(c).fold(v)(StrBin.max(v, _))
-      case GreaterThanOrEqual(c, v: String) =>
-        cStrLo += c -> cStrLo.get(c).fold(v)(StrBin.max(v, _))
-      case LessThan(c, v: String) =>
-        cStrHi += c -> cStrHi.get(c).fold(v)(StrBin.min(v, _))
-      case LessThanOrEqual(c, v: String) =>
-        cStrHi += c -> cStrHi.get(c).fold(v)(StrBin.min(v, _))
-      case In(c, vs) if vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[String]) =>
-        val strs = vs.map(_.asInstanceOf[String])
-        val mn = strs.reduce(StrBin.min)
-        val mx = strs.reduce(StrBin.max)
-        cStrLo += c -> cStrLo.get(c).fold(mn)(StrBin.max(mn, _))
-        cStrHi += c -> cStrHi.get(c).fold(mx)(StrBin.min(mx, _))
-        addStrPoints(c, strs.toSet)
-      // TIMESTAMP columns: filter values arrive as java.sql.Timestamp
-      // or java.time.Instant (java8API) — convert to the micros the
-      // writer's 'l' ColStat leg recorded and intersect into the same
-      // long bound maps. Range pruning on a days()/hours() split
-      // layout plans exactly the covered ordinals' parts this way
-      // (each part's micros range lives inside one ordinal). Open
-      // bounds stay closed-for-pruning: micros granularity makes the
-      // off-by-one irrelevant for exclusion, and the filters remain
-      // residual (row exactness is Spark's post-filter). Open bounds
-      // tighten by the 1-micro step exactly like the long columns' —
-      // `ts < DAY-BOUNDARY` must NOT keep the boundary day's part.
-      case GreaterThan(c, v) if tsMicros(v).isDefined =>
-        val m = tsMicros(v).get
-        cLongLo += c -> math.max(cLongLo.getOrElse(c, Long.MinValue),
-          if (m == Long.MaxValue) m else m + 1)
-      case GreaterThanOrEqual(c, v) if tsMicros(v).isDefined =>
-        val m = tsMicros(v).get
-        cLongLo += c -> math.max(cLongLo.getOrElse(c, Long.MinValue), m)
-      case LessThan(c, v) if tsMicros(v).isDefined =>
-        val m = tsMicros(v).get
-        cLongHi += c -> math.min(cLongHi.getOrElse(c, Long.MaxValue),
-          if (m == Long.MinValue) m else m - 1)
-      case LessThanOrEqual(c, v) if tsMicros(v).isDefined =>
-        val m = tsMicros(v).get
-        cLongHi += c -> math.min(cLongHi.getOrElse(c, Long.MaxValue), m)
-      case EqualTo(c, v) if tsMicros(v).isDefined =>
-        val m = tsMicros(v).get
-        cLongLo += c -> math.max(cLongLo.getOrElse(c, Long.MinValue), m)
-        cLongHi += c -> math.min(cLongHi.getOrElse(c, Long.MaxValue), m)
-      case In(c, vs) if vs.nonEmpty &&
-          vs.forall(v => tsMicros(v).isDefined) =>
-        val ms = vs.map(v => tsMicros(v).get)
-        cLongLo += c -> math.max(cLongLo.getOrElse(c, Long.MinValue), ms.min)
-        cLongHi += c -> math.min(cLongHi.getOrElse(c, Long.MaxValue), ms.max)
-      case _ => ()
+      }
+      f match {
+        case IsNull(c)    => isNullCols += c
+        case IsNotNull(c) => notNullCols += c
+        // <=> with a NON-NULL literal is exactly = for pruning (it
+        // matches only that value; `c <=> NULL` arrives with a null
+        // operand and stays unpruned)
+        case EqualTo(c, v: String) => addStrPoints(c, Set(v))
+        case EqualNullSafe(c, v: String) => addStrPoints(c, Set(v))
+        case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
+          addStrPoints(c, vs.map(_.asInstanceOf[String]).toSet)
+        case EqualTo(c, v) => addLongPoints(c, Seq(v))
+        case EqualNullSafe(c, v) => addLongPoints(c, Seq(v))
+        case In(c, vs) if vs.nonEmpty => addLongPoints(c, vs.toSeq)
+        case GreaterThan(c, v: String) => addStrLo(c, v)
+        case GreaterThanOrEqual(c, v: String) => addStrLo(c, v)
+        case LessThan(c, v: String) => addStrHi(c, v)
+        case LessThanOrEqual(c, v: String) => addStrHi(c, v)
+        // LIKE 'p%' — every match is >= p, and (when the last char can
+        // increment byte-safely) < p-with-last-char-incremented, so an
+        // INCLUSIVE hi of that successor is a conservative superset
+        case StringStartsWith(c, v) if v.nonEmpty =>
+          addStrLo(c, v)
+          prefixUpper(v).foreach(addStrHi(c, _))
+        case _ => ()
+      }
     }
     pushed = filters.filter {
       case GreaterThan(c, _: Long)        => isKey(c)
@@ -713,22 +528,6 @@ private[sources] class ManifestScanBuilder(
     if (v.nonEmpty && v.last < 0x7F) Some(v.init + (v.last + 1).toChar)
     else None
 
-  private def addPoints(vs: Set[Long]): Unit =
-    points = Some(points.fold(vs)(_ intersect vs))
-
-  /** A pushed-filter timestamp value as epoch MICROS — the exact
-    * representation the writer's stats recorded. Spark hands
-    * java.sql.Timestamp by default and java.time.Instant under the
-    * java8 datetime API; both convert losslessly. Anything else is
-    * not a timestamp predicate. */
-  private def tsMicros(v: Any): Option[Long] = v match {
-    case t: java.sql.Timestamp => Some(
-      org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t))
-    case i: java.time.Instant => Some(
-      org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(i))
-    case _ => None
-  }
-
   override def build(): Scan = {
     // change-feed reads bypass the batch machinery entirely: the
     // stream plans snapshot DIFFS, not head parts (filters stay
@@ -742,12 +541,11 @@ private[sources] class ManifestScanBuilder(
           ManifestSink.readSchemaAndColMap(conf.value, path)))
     }
     // plan against the manifest on the DRIVER: only committed parts,
-    // and only those whose key range can intersect [keyLo, keyHi].
-    // Null-key rows are safe to skip under a key predicate (three-
-    // valued logic: no key comparison is ever TRUE for NULL), and a
-    // part whose keys are all NULL carries the (MaxValue, MinValue)
-    // sentinel, so any real bound prunes it; with no pushed bounds
-    // nothing is pruned.
+    // and only those whose column stats can satisfy the pushed
+    // predicates. NULL rows are safe to skip under a comparison
+    // (three-valued logic: none is ever TRUE for NULL), so a part
+    // whose column is all NULL is pruned by any bound on it; with no
+    // pushed predicates nothing is pruned.
     //
     // The head version is resolved HERE and the meta read PINNED to
     // it, so the (part list, base version) pair a row-level rewrite
@@ -781,84 +579,33 @@ private[sources] class ManifestScanBuilder(
       case Some((aggSchema, aggRows)) =>
         new ManifestAggScan(aggSchema, aggRows)
       case None =>
-        var kept = all.filter(m => !(m.kMax < keyLo || m.kMin > keyHi))
-        if (strLo.isDefined || strHi.isDefined)
-          kept = kept.filter(_.strOverlaps(strLo, strHi))
-        // discrete IN-set pruning: survive only if SOME listed value
-        // can live in the part (point-overlap per value) — on a
-        // value-split layout this plans exactly the named values'
-        // parts where the folded range would keep everything between
-        strInSet.foreach { vals =>
-          kept = kept.filter(m =>
-            vals.exists(s => m.strOverlaps(Some(s), Some(s))))
-        }
-        // generalized column pruning: a part survives unless SOME
-        // bounded column has a recorded stat that proves no overlap
-        // (absent stat ⇒ keep; kind mismatch ⇒ keep — never wrong)
-        if (cLongLo.nonEmpty || cLongHi.nonEmpty ||
-            cStrLo.nonEmpty || cStrHi.nonEmpty) {
-          val longCols = cLongLo.keySet ++ cLongHi.keySet
-          val strCols = cStrLo.keySet ++ cStrHi.keySet
-          kept = kept.filter { m =>
-            longCols.forall { c =>
-              m.cstats.get(c) match {
-                case Some(st) if st.kind == 'l' =>
-                  st.lMax >= cLongLo.getOrElse(c, Long.MinValue) &&
-                    st.lMin <= cLongHi.getOrElse(c, Long.MaxValue)
-                case _ => true
-              }
-            } && strCols.forall { c =>
-              m.cstats.get(c) match {
-                case Some(st) if st.kind == 's' =>
-                  cStrLo.get(c).forall(lo => StrBin.cmp(st.max, lo) >= 0) &&
-                    cStrHi.get(c).forall(hi => StrBin.cmp(st.min, hi) <= 0)
-                case _ => true
-              }
-            }
-          }
-        }
-        // NULL-COUNT pruning: IS NULL skips parts with provably ZERO
-        // nulls in the column; IS NOT NULL skips provably ALL-null
-        // parts. Both counts are write-time PHYSICAL (or
+        // a part survives unless SOME predicate column has a recorded
+        // stat that proves no row can match (absent stat or kind
+        // mismatch ⇒ keep — never wrong). NULL-count pruning: IS NULL
+        // skips parts with provably ZERO nulls, IS NOT NULL provably
+        // ALL-null parts. Counts are write-time PHYSICAL (or
         // ANALYZE-refreshed visible) totals — zero physical nulls ⇒
-        // zero visible nulls, all physical null ⇒ all visible null,
-        // so the skip stays sound under deletion vectors; unknown
-        // (-1, legacy manifests) never prunes.
-        if (isNullCols.nonEmpty || notNullCols.nonEmpty) {
-          def nullsFor(m: PartMeta, c: String): Long =
-            if (keyCol.contains(c)) m.kNulls
-            else if (strCol.contains(c)) m.sNulls
-            else m.cstats.get(c).map(_.nulls).getOrElse(-1L)
-          kept = kept.filter { m =>
-            isNullCols.forall(c => nullsFor(m, c) != 0L) &&
-              notNullCols.forall { c =>
-                val n = nullsFor(m, c)
-                !(n >= 0 && m.rows > 0 && n >= m.rows)
-              }
-          }
-        }
-        // point predicates additionally consult the per-part bloom: a
-        // part whose range admits v but whose bloom proves v absent
-        // is skipped (hash-layout tables prune here, not on min/max)
-        points.foreach { ps =>
-          kept = kept.filter(m => ps.exists(m.mayContain))
-        }
-        // SECONDARY-COLUMN BLOOMS: a string point lookup on a
-        // declared bloom column (graft.bloom_cols) skips every part
-        // whose filter proves all values absent — the only pruning
-        // that works on high-cardinality strings, where min/max
-        // ranges admit nearly every part. Absent bloom (undeclared
-        // column, legacy part, all-null part) never prunes.
-        if (cStrPoints.nonEmpty) kept = kept.filter { m =>
-          cStrPoints.forall { case (c, vs) =>
-            m.cstats.get(c) match {
-              case Some(st) if st.kind == 's' && st.bloom.nonEmpty =>
-                val bits = PartBloom.fromHex(st.bloom)
-                vs.exists(v =>
-                  PartBloom.mightContain(bits, PartBloom.strKey(v)))
-              case _ => true
+        // zero visible nulls, all physical null ⇒ all visible null —
+        // so every skip stays sound under deletion vectors.
+        def holds(m: PartMeta, c: String, kind: Char)(
+            ok: ColStat => Boolean): Boolean =
+          m.cstats.get(c).forall(st => st.kind != kind || ok(st))
+        def nulls(m: PartMeta, c: String): Long =
+          m.cstats.get(c).map(_.nulls).getOrElse(-1L)
+        var kept = all.filter { m =>
+          longBounds.forall { case (c, (lo, hi)) =>
+            LongRange.classify(m, c, lo, hi) != 'u'
+          } && (strLo.keySet ++ strHi.keySet).forall(c =>
+            holds(m, c, 's')(_.strOverlaps(strLo.get(c), strHi.get(c)))) &&
+            longPoints.forall { case (c, ps) =>
+              holds(m, c, 'l')(st => ps.exists(st.mayContain)) } &&
+            strPoints.forall { case (c, ps) =>
+              holds(m, c, 's')(st => ps.exists(st.mayContainStr)) } &&
+            isNullCols.forall(nulls(m, _) != 0L) &&
+            notNullCols.forall { c =>
+              val n = nulls(m, c)
+              !(n >= 0 && m.rows > 0 && n >= m.rows)
             }
-          }
         }
         limit.foreach { n =>
           // keep the shortest part prefix whose VISIBLE row counts
@@ -877,18 +624,20 @@ private[sources] class ManifestScanBuilder(
         // retained Sort+Limit finishes the job, so a decline is only
         // ever slower, never wrong.
         topN.foreach { case (asc, n) =>
-          val ordered = kept.sortBy(_.kMin)
-          val eligible = kept.nonEmpty &&
-            kept.forall(p => p.sorted && p.countsExact) &&
+          val ranged = kept.flatMap(p => p.cstats.get(keyCol.get)
+            .filter(_ => p.sorted && p.countsExact).map(p -> _))
+          val ordered = ranged.sortBy(_._2.lMin)
+          val eligible = kept.nonEmpty && ranged.size == kept.size &&
             ordered.sliding(2).forall {
-              case Seq(a, b) => a.kMax <= b.kMin
+              case Seq(a, b) => a._2.lMax <= b._2.lMin
               case _ => true
             }
           if (eligible) {
             var need = n.toLong
-            kept = (if (asc) ordered else ordered.reverse).takeWhile { p =>
-              val take = need > 0; need -= p.visibleRows; take
-            }
+            kept = (if (asc) ordered else ordered.reverse).map(_._1)
+              .takeWhile { p =>
+                val take = need > 0; need -= p.visibleRows; take
+              }
           }
         }
         new ManifestScan(kept, schema, required, conf, all.size, limit, keyCol,
@@ -1098,57 +847,34 @@ private[sources] class ManifestScan(
     * output and throws on a miss — a scan projecting (event_type,
     * value) out of a keyed table must simply decline runtime
     * filtering, not break the query. */
-  /** Runtime (DPP-style) pruning is advertised for every column the
-    * manifest can answer membership for: the key (range + bloom), the
-    * primary string column (smin/smax), and any column some planned
-    * part carries a [[ColStat]] for — a star join filtering on ANY
-    * stats-tracked dimension column narrows the fact scan at
+  /** Runtime (DPP-style) pruning is advertised for every column some
+    * planned part carries a [[ColStat]] for — a star join filtering on
+    * ANY stats-tracked dimension column narrows the fact scan at
     * execution. Only columns surviving column pruning are advertised
     * (advertising a pruned-away column makes Spark's PartitionPruning
     * throw at resolution — pinned by ManifestSourceSpec). */
-  override def filterAttributes(): Array[NamedReference] = {
-    val strCol = schema.fields.find(_.dataType == StringType).map(_.name)
-    val statCols = initialParts.iterator.flatMap(_.cstats.keysIterator)
-      .distinct.toSeq
-    (keyCol.toSeq ++ strCol.toSeq ++ statCols).distinct
+  override def filterAttributes(): Array[NamedReference] =
+    initialParts.iterator.flatMap(_.cstats.keysIterator).distinct
       .filter(required.fieldNames.contains)
       .map(c => Expressions.column(c)).toArray
-  }
 
+  // runtime sets are point sets: each value must pass the column's
+  // range AND bloom; a part with no entry is kept (absent ⇒ cannot
+  // prune)
   override def filter(filters: Array[Filter]): Unit = filters.foreach {
-    // runtime key sets are point sets, so the per-part bloom applies
-    // on top of the (min, max) range — mayContain checks both
-    case In(c, vs) if keyCol.contains(c) =>
-      val longs = vs.collect { case v: Long => v }
-      if (longs.length == vs.length) // only prune on fully-typed sets
-        parts = parts.filter(p => longs.exists(p.mayContain))
-    case EqualTo(c, v: Long) if keyCol.contains(c) =>
-      parts = parts.filter(_.mayContain(v))
-    case In(c, vs) if vs.nonEmpty &&
-        schema.fields.find(_.dataType == StringType).map(_.name).contains(c) =>
-      val strs = vs.collect { case v: String => v }
-      if (strs.length == vs.length)
-        parts = parts.filter(p =>
-          strs.exists(s => p.strOverlaps(Some(s), Some(s))))
     case In(c, vs) if vs.nonEmpty =>
-      // secondary columns: point-set membership against the ColStat
-      // range; a part with no entry is kept (absent ⇒ cannot prune)
       if (vs.forall(_.isInstanceOf[Long])) {
         val longs = vs.map(_.asInstanceOf[Long])
-        parts = parts.filter(p => p.cstats.get(c) match {
-          case Some(st) if st.kind == 'l' =>
-            longs.exists(v => v >= st.lMin && v <= st.lMax)
-          case _ => true
-        })
+        parts = parts.filter(_.cstats.get(c).forall(st =>
+          st.kind != 'l' || longs.exists(st.mayContain)))
       } else if (vs.forall(_.isInstanceOf[String])) {
         val strs = vs.map(_.asInstanceOf[String])
-        parts = parts.filter(p => p.cstats.get(c) match {
-          case Some(st) if st.kind == 's' =>
-            strs.exists(s => StrBin.cmp(st.min, s) <= 0 &&
-              StrBin.cmp(st.max, s) >= 0)
-          case _ => true
-        })
+        parts = parts.filter(_.cstats.get(c).forall(st =>
+          st.kind != 's' || strs.exists(st.mayContainStr)))
       }
+    case EqualTo(c, v: Long) =>
+      parts = parts.filter(_.cstats.get(c).forall(st =>
+        st.kind != 'l' || st.mayContain(v)))
     case _ => ()
   }
 
@@ -1214,28 +940,18 @@ private[sources] class ManifestScan(
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
       if (tablePath.isEmpty) return out
-      val strName = schema.fields
-        .find(_.dataType == org.apache.spark.sql.types.StringType)
-        .map(_.name)
       def nullsFor(c: String): Long = {
-        def fold(get: PartMeta => Long): Long =
-          if (parts.exists(p => get(p) < 0)) -1L else parts.map(get).sum
-        if (keyCol.contains(c)) fold(_.kNulls)
-        else if (strName.contains(c)) fold(_.sNulls)
-        else fold(_.cstats.get(c).map(_.nulls).getOrElse(-1L))
+        val ns = parts.map(_.cstats.get(c).map(_.nulls).getOrElse(-1L))
+        if (ns.exists(_ < 0)) -1L else ns.sum
       }
       // LONG-column [min, max] folded from this scan's planned parts:
       // JoinEstimation intersects key ranges before applying the NDV
       // formula — without them it cannot size a join at all
       def rangeFor(c: String): Option[(Long, Long)] = {
-        val bounds: Seq[(Long, Long)] =
-          if (keyCol.contains(c))
-            parts.collect { case p if p.rows > 0 && p.kMin <= p.kMax =>
-              (p.kMin, p.kMax) }
-          else parts.flatMap(_.cstats.get(c))
-            .collect { case st if st.kind == 'l' => (st.lMin, st.lMax) }
-        if (bounds.isEmpty) None
-        else Some((bounds.map(_._1).min, bounds.map(_._2).max))
+        val st = parts.flatMap(_.cstats.get(c))
+          .filter(st => st.kind == 'l' && st.hasValues)
+        if (st.isEmpty) None
+        else Some((st.map(_.lMin).min, st.map(_.lMax).max))
       }
       // ANALYZE-collected equi-depth histograms (graft.hist props):
       // per-bin ndv is what FilterEstimation needs to size a RANGE

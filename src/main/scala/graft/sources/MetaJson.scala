@@ -160,16 +160,17 @@ private[sources] object MetaJson {
 
   private def colStatJson(st: ColStat): JValue = obj(
     "kind" -> JString(st.kind.toString),
-    "min" -> JString(st.min), "max" -> JString(st.max),
+    "min" -> when(st.hasValues)(JString(st.min)),
+    "max" -> when(st.hasValues)(JString(st.max)),
     "nulls" -> when(st.nulls >= 0)(JLong(st.nulls)),
     "sum" -> st.sum.fold[JValue](JNothing)(JLong(_)),
     "bloom" -> when(st.bloom.nonEmpty)(JString(st.bloom)))
 
   private def colStatOf(v: JValue): ColStat = {
     val f = fields(v)
-    ColStat(f.text("kind").head, f.text("min"), f.text("max"),
-      f.longOr("nulls", -1L), f.get("sum").map(asLong),
-      f.textOr("bloom", ""))
+    ColStat(f.text("kind").head, f.optText("min").orNull,
+      f.optText("max").orNull, f.longOr("nulls", -1L),
+      f.get("sum").map(asLong), f.textOr("bloom", ""))
   }
 
   private def colStatsJson(m: Map[String, ColStat]): JValue =
@@ -190,12 +191,6 @@ private[sources] object MetaJson {
 
   def encodePart(m: PartMeta): String = render(obj(
     "path" -> JString(m.path), "rows" -> JLong(m.rows),
-    "min" -> JLong(m.kMin), "max" -> JLong(m.kMax),
-    "bloom" -> when(m.bloomHex.nonEmpty)(JString(m.bloomHex)),
-    // the string bounds travel as a pair: one without the other
-    // cannot prune
-    "smin" -> when(m.sMin.isDefined && m.sMax.isDefined)(JString(m.sMin.get)),
-    "smax" -> when(m.sMin.isDefined && m.sMax.isDefined)(JString(m.sMax.get)),
     "dv" -> when(m.dvHex.nonEmpty)(JString(m.dvHex)),
     "dvref" -> when(m.dvRef.nonEmpty)(JString(m.dvRef)),
     "dvrows" -> when(m.dvRef.nonEmpty)(JLong(m.dvCard)),
@@ -207,22 +202,16 @@ private[sources] object MetaJson {
     "cols" -> when(m.cols.nonEmpty)(ints(m.cols)),
     "ncols" -> when(m.ncols.nonEmpty)(JObject(m.ncols.toList.sortBy(_._1)
       .map { case (pid, sids) => pid.toString -> ints(sids) })),
-    "knulls" -> when(m.kNulls >= 0)(JLong(m.kNulls)),
-    "snulls" -> when(m.sNulls >= 0)(JLong(m.sNulls)),
-    "ksum" -> m.kSum.fold[JValue](JNothing)(JLong(_)),
     "eq" -> when(m.eq.nonEmpty)(JArray(m.eq.map(eqJson).toList))))
 
   private def partOf(f: Map[String, JValue]): PartMeta =
-    PartMeta(f.text("path"), f.long("rows"), f.long("min"), f.long("max"),
-      f.textOr("bloom", ""), f.optText("smin"), f.optText("smax"),
-      f.textOr("dv", ""), f.textOr("dvref", ""), f.longOr("dvrows", 0L),
+    PartMeta(f.text("path"), f.long("rows"), f.textOr("dv", ""),
+      f.textOr("dvref", ""), f.longOr("dvrows", 0L),
       f.longOr("bytes", 0L), f.longOr("bucket", -1L).toInt,
       f.longOr("nbuckets", 0L).toInt,
       f.get("sorted").contains(JBool(true)),
       cstats = f.get("cstats").fold(Map.empty[String, ColStat])(colStatsOf),
       cols = f.get("cols").fold(Seq.empty[Int])(asInts),
-      kNulls = f.longOr("knulls", -1L), sNulls = f.longOr("snulls", -1L),
-      kSum = f.get("ksum").map(asLong),
       eq = f.get("eq").fold(Seq.empty[EqClause]) {
         case JArray(cs) => cs.map(eqOf)
         case other => bad("array", other)

@@ -368,6 +368,47 @@ class CatalogSpec extends SparkSpec {
     assert(spark.sql("SELECT * FROM gcs.ns.del WHERE k = 399").count() === 0)
   }
 
+  /** One single-part append per key set, non-nullable `k`. */
+  private def extremeTable(name: String, parts: Seq[Seq[Long]]): Unit = {
+    import spark.implicits._
+    parts.foreach(ks => ks.toDF("k").coalesce(1)
+      .write.format("graft.sources.ManifestSink")
+      .option("path", s"$wh/ns/$name").option("history", "true")
+      .mode("append").save())
+  }
+  private def rows(name: String): Long =
+    spark.sql(s"SELECT count(*) FROM gcs.ns.$name").head.getLong(0)
+
+  test("DELETE k > Long.MaxValue / k < Long.MinValue matches no row: " +
+      "the metadata path keeps the parts at the extremes") {
+    wh
+    extremeTable("extm",
+      Seq(Seq(1L, 2L), Seq(Long.MaxValue), Seq(Long.MinValue)))
+    spark.sql(s"DELETE FROM gcs.ns.extm WHERE k > ${Long.MaxValue}L")
+    assert(rows("extm") === 4L)
+    spark.sql(s"DELETE FROM gcs.ns.extm WHERE k < ${Long.MinValue}L")
+    assert(rows("extm") === 4L)
+    // the equality-delete path agrees
+    spark.conf.set("graft.delete.mode", "eq")
+    try {
+      spark.sql(s"DELETE FROM gcs.ns.extm WHERE k > ${Long.MaxValue}L")
+      spark.sql(s"DELETE FROM gcs.ns.extm WHERE k < ${Long.MinValue}L")
+    } finally spark.conf.unset("graft.delete.mode")
+    assert(rows("extm") === 4L)
+  }
+
+  test("DELETE and REPLACE WHERE k > Long.MaxValue keep a part whose " +
+      "keys all sit at the extreme next to a straddling part") {
+    wh
+    extremeTable("extc", Seq(Seq(5L, Long.MaxValue), Seq(Long.MaxValue)))
+    spark.sql(s"DELETE FROM gcs.ns.extc WHERE k > ${Long.MaxValue}L")
+    assert(rows("extc") === 3L)
+    // REPLACE WHERE classifies through the copy-on-write kernel alone
+    spark.sql(s"INSERT INTO gcs.ns.extc REPLACE WHERE k > ${Long.MaxValue}L " +
+      "SELECT 7L AS k")
+    assert(rows("extc") === 4L)
+  }
+
   test("TIMESTAMP AS OF resolves the newest snapshot at or before the instant") {
     wh
     import java.nio.file.attribute.FileTime

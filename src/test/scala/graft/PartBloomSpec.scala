@@ -46,8 +46,8 @@ class PartBloomSpec extends AnyFunSuite {
     val sized = PartBloom.shrinkFor(bits, 50L)
     assert(PartBloom.fromHex(PartBloom.toHex(sized)).toSeq === sized.toSeq)
     assert(PartBloom.fromHex("").isEmpty && PartBloom.fromHex(null).isEmpty)
-    // PartMeta with no bloom keeps pure range behavior
-    val legacy = PartMeta("p", 10L, 0L, 100L, "")
+    // a column record with no bloom keeps pure range behavior
+    val legacy = ColStat('l', "0", "100")
     assert(legacy.mayContain(50L) && !legacy.mayContain(101L))
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** SUM stats + identity-partitioned layout + grouped metadata-only
   * aggregates: the writer records an exact per-part SUM for every
-  * tracked long column (key → PartMeta.kSum, secondary → ColStat.sum),
+  * tracked long column (its ColStat.sum),
   * `option("splitBy", c)` commits single-valued parts per distinct
   * value of c, and the scan answers global SUM and single-valued
   * GROUP BY COUNT/MIN/MAX/SUM entirely from the manifest — declining
@@ -65,7 +65,7 @@ class AggMetaSpec extends graft.SparkSpec {
   test("SUM declines on per-part overflow and under deletion vectors") {
     val t = Files.createTempDirectory("graft-aggmeta").toString + "/t"
     import spark.implicits._
-    // one part whose running sum overflows a Long: kSum untracked
+    // one part whose running sum overflows a Long: the key's sum untracked
     Seq(Long.MaxValue, 5L).toDF("k").coalesce(1).pipe(df => write(df, t))
     val q = readBack(t).agg(sum($"k").as("sk"))
     assert(!metaOnly(q), "overflowed per-part sum must decline")
@@ -99,8 +99,9 @@ class AggMetaSpec extends graft.SparkSpec {
     write(df, t, opts = Map("splitBy" -> "cat"))
     val parts = ManifestSink.readManifestMeta(conf, t, None)
     assert(parts.length === 3, s"one part per value, got ${parts.length}")
-    assert(parts.forall(p => p.sMin.isDefined && p.sMin == p.sMax &&
-      p.sNulls == 0L), "every part single-valued on cat")
+    assert(parts.forall(p => p.cstats.get("cat").exists(st =>
+      st.hasValues && st.min == st.max && st.nulls == 0L)),
+      "every part single-valued on cat")
     // a point predicate on the split column prunes to its one part
     val one = readBack(t).filter($"cat" === "b")
     val planned = one.queryExecution.executedPlan.collectFirst {
@@ -174,7 +175,7 @@ class AggMetaSpec extends graft.SparkSpec {
     val t = s"$base/t"
     import spark.implicits._
     (0L until 500L).toDF("k").repartition(2).pipe(df => write(df, t))
-    // simulate a pre-sum manifest: strip the ksum fields from the
+    // simulate a pre-sum manifest: strip the key's sum from the
     // committed snapshot text (additive codec → still readable)
     val fs = new org.apache.hadoop.fs.Path(t).getFileSystem(conf)
     Seq(ManifestSink.ManifestFile, ManifestSink.versionFile(1)).foreach { f =>
@@ -184,7 +185,7 @@ class AggMetaSpec extends graft.SparkSpec {
         val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close()
         val out = fs.create(p, true)
-        try out.write(txt.replaceAll(""","ksum":-?\d+""", "")
+        try out.write(txt.replaceAll(""","sum":-?\d+""", "")
           .getBytes("UTF-8"))
         finally out.close()
       }
@@ -212,7 +213,8 @@ class AggMetaSpec extends graft.SparkSpec {
     val t = s"$wh/ns/t"
     val before = ManifestSink.readManifestMeta(conf, t, None)
     assert(before.length === 6, "two split inserts = 3 values x 2")
-    assert(before.forall(p => p.sMin.isDefined && p.sMin == p.sMax))
+    assert(before.forall(p => p.cstats.get("cat").exists(st =>
+      st.hasValues && st.min == st.max)))
     val q = spark.sql(
       "SELECT cat, count(*) AS n, sum(k) AS sk FROM gam.ns.t " +
         "GROUP BY cat ORDER BY cat")
@@ -224,7 +226,8 @@ class AggMetaSpec extends graft.SparkSpec {
     spark.sql("CALL gam.system.compact(table => 'ns.t', target_parts => 1)")
     val after = ManifestSink.readManifestMeta(conf, t, None)
     assert(after.length === 3, s"one part per value, got ${after.length}")
-    assert(after.forall(p => p.sMin.isDefined && p.sMin == p.sMax))
+    assert(after.forall(p => p.cstats.get("cat").exists(st =>
+      st.hasValues && st.min == st.max)))
     val q2 = spark.sql(
       "SELECT cat, count(*) AS n, sum(k) AS sk FROM gam.ns.t " +
         "GROUP BY cat ORDER BY cat")

@@ -29,7 +29,7 @@ class CherrypickSpec extends AnyFunSuite {
 
   private val conf = new Configuration()
   private val schema = StructType.fromDDL("k BIGINT")
-  private def pm(p: String, rows: Long = 1L) = PartMeta(p, rows, 0L, 0L, "")
+  private def pm(p: String, rows: Long = 1L) = PartMeta(p, rows)
   private def headPaths(dir: String): Set[String] =
     ManifestSink.readManifestMeta(conf, dir, None).map(_.path).toSet
   private def commit(dir: String, f: Seq[PartMeta] => Seq[PartMeta],

@@ -29,8 +29,7 @@ class ColStatsSpec extends graft.SparkSpec {
     val stats = Map(
       "weird col,\"&=" -> ColStat('s', "", "z\"&:,€😀"),
       "k2" -> ColStat('l', "-9223372036854775808", "9223372036854775807"))
-    val part = PartMeta(s"$dir/part-x.csv", 3L, 0L, 2L, "",
-      cstats = stats)
+    val part = PartMeta(s"$dir/part-x.csv", 3L, cstats = stats)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType)))
@@ -44,7 +43,7 @@ class ColStatsSpec extends graft.SparkSpec {
     "null placeholder, sum never silently dropped") {
     def roundtrip(m: Map[String, ColStat]): Map[String, ColStat] =
       MetaJson.decodePart(MetaJson.encodePart(
-        PartMeta("p", 1L, 0L, 0L, "", cstats = m))).cstats
+        PartMeta("p", 1L, cstats = m))).cstats
     // a FUTURE writer's extra stat field must read fine here, minus
     // the field this version doesn't know
     val future = MetaJson.decodePart("""{"path":"p","rows":1,"min":0,""" +
@@ -309,5 +308,95 @@ class ColStatsSpec extends graft.SparkSpec {
     val df = readBack(dir).filter(col("k2") >= 1000L)
     assert(scanParts(df) === 1, "carried-forward part must still prune")
     assert(df.count() === 50L)
+  }
+
+  test("pruning is sound on generated BIGINT/TIMESTAMP predicates, " +
+      "Long extremes and all-null parts included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val wh = Files.createTempDirectory("graft-cstats").toString
+    spark.conf.set("spark.sql.catalog.gprn", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gprn.warehouse", wh)
+    val t0 = 1700000000000000L // epoch micros
+    val day = 86400000000L
+    val (mn, mx) = (Long.MinValue, Long.MaxValue)
+    type R = (Option[Long], Option[Long], Option[Long]) // (k, v, ts)
+    // one part per append: the extremes, a v-all-null part, a part
+    // with a NULL key and NULL timestamps
+    val parts: Seq[Seq[R]] = Seq(
+      Seq((Some(mn), Some(1L), Some(t0)), (Some(-5L), None, Some(t0 + 1)),
+        (Some(0L), Some(3L), Some(t0 + day))),
+      Seq((Some(1L), None, Some(t0 + 2 * day)), (Some(10L), None, None)),
+      Seq((Some(mx), Some(mn), Some(t0 + 3 * day)),
+        (Some(100L), Some(mx), None)),
+      Seq((None, Some(7L), Some(t0)), (Some(50L), Some(8L), Some(t0 + 10))),
+      Seq((Some(mx), Some(9L), Some(t0 + day)),
+        (Some(mn), Some(-9L), Some(t0 + day))))
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("v", LongType), StructField("ts", TimestampType)))
+    spark.sql("CREATE TABLE gprn.ns.p (k BIGINT, v BIGINT, ts TIMESTAMP)")
+    parts.foreach { rs =>
+      spark.createDataFrame(spark.sparkContext.parallelize(rs.map {
+        case (k, v, ts) => Row(k.orNull, v.orNull,
+          ts.map(DateTimeUtils.toJavaTimestamp).orNull)
+      }, 1), schema)
+        .write.format("graft.sources.ManifestSink")
+        .option("path", s"$wh/ns/p").option("history", "true")
+        .mode("append").save()
+    }
+    val paths = ManifestSink.readManifestMeta(conf, s"$wh/ns/p", None)
+      .map(_.path)
+    assert(paths.size === parts.size)
+    // literals: every stored value, its neighbours, and the extremes
+    def near(xs: Seq[Long]): Seq[Long] = xs.flatMap(x =>
+      Seq(x, if (x == mn) x else x - 1, if (x == mx) x else x + 1))
+    val rows = parts.flatten
+    val longPool = near(rows.flatMap(r => r._1 ++ r._2) ++ Seq(mn, mx, 0L))
+    val tsPool = near(rows.flatMap(_._3) :+ (t0 - day))
+    // (SQL predicate, the in-memory row test it stands for)
+    val pred: Gen[(String, R => Boolean)] = for {
+      c <- Gen.oneOf(0, 1, 2)
+      lit = if (c == 2) Gen.oneOf(tsPool) else Gen.oneOf(longPool)
+      a <- lit
+      b <- lit
+      ins <- Gen.listOfN(3, lit)
+      op <- Gen.oneOf("=", "IN", "<", "<=", ">", ">=", "BETWEEN")
+    } yield {
+      val name = Seq("k", "v", "ts")(c)
+      def sql(x: Long) = if (c == 2) s"timestamp_micros(${x}L)" else s"${x}L"
+      val (text, f): (String, Long => Boolean) = op match {
+        case "IN" => (s"$name IN (${ins.map(sql).mkString(", ")})",
+          ins.contains(_))
+        case "BETWEEN" => (s"$name BETWEEN ${sql(a)} AND ${sql(b)}",
+          x => a <= x && x <= b)
+        case "=" => (s"$name = ${sql(a)}", _ == a)
+        case "<" => (s"$name < ${sql(a)}", _ < a)
+        case "<=" => (s"$name <= ${sql(a)}", _ <= a)
+        case ">" => (s"$name > ${sql(a)}", _ > a)
+        case _ => (s"$name >= ${sql(a)}", _ >= a)
+      }
+      // NULL never satisfies a comparison
+      (text, (r: R) => Seq(r._1, r._2, r._3)(c).exists(f))
+    }
+    val cases = (0 until 25).flatMap(i =>
+      pred.apply(Gen.Parameters.default, Seed(7L + i)))
+    assert(cases.size === 25)
+    cases.foreach { case (text, matches) =>
+      val q = spark.sql(s"SELECT k FROM gprn.ns.p WHERE $text")
+      val want = rows.count(matches)
+      assert(spark.sql(s"SELECT count(*) FROM gprn.ns.p WHERE $text")
+        .head.getLong(0) === want, text)
+      val planned = q.queryExecution.sparkPlan.collect {
+        case b: BatchScanExec => b.inputPartitions.collect {
+          case m: ManifestPartition => m.path }
+      }.flatten.toSet
+      parts.zip(paths).foreach { case (rs, path) =>
+        if (rs.exists(matches))
+          assert(planned.contains(path), s"$text dropped matching part $path")
+      }
+    }
   }
 }

@@ -46,12 +46,12 @@ class MetaJsonSpec extends AnyFunSuite {
 
   private val colStat: Gen[ColStat] = for {
     kind <- Gen.oneOf('l', 's')
-    mn <- str
-    mx <- str
+    bounds <- Gen.option(Gen.zip(str, str)) // None = no non-null value
     nulls <- count
     sum <- Gen.option(anyLong)
     bloom <- Gen.oneOf(Gen.const(""), hex)
-  } yield ColStat(kind, mn, mx, nulls, sum, bloom)
+  } yield ColStat(kind, bounds.map(_._1).orNull, bounds.map(_._2).orNull,
+    nulls, sum, bloom)
 
   private val eqClause: Gen[EqClause] = for {
     col <- str
@@ -63,10 +63,6 @@ class MetaJsonSpec extends AnyFunSuite {
   private val part: Gen[PartMeta] = for {
     path <- str
     rows <- anyLong
-    kMin <- anyLong
-    kMax <- anyLong
-    bloom <- Gen.oneOf(Gen.const(""), hex)
-    sBounds <- Gen.option(Gen.zip(str, str))
     dv <- Gen.oneOf(Gen.const(""), hex)
     dvRef <- Gen.oneOf(Gen.const(""), str)
     dvCard <- Gen.choose(0L, Long.MaxValue)
@@ -75,16 +71,12 @@ class MetaJsonSpec extends AnyFunSuite {
     sorted <- Gen.oneOf(true, false)
     cstats <- small(Gen.zip(str, colStat)).map(_.toMap)
     cols <- small(id)
-    kNulls <- count
-    sNulls <- count
-    kSum <- Gen.option(anyLong)
     eq <- small(eqClause)
     ncols <- small(Gen.zip(id, small(id))).map(_.toMap)
-  } yield PartMeta(path, rows, kMin, kMax, bloom,
-    sBounds.map(_._1), sBounds.map(_._2), dv, dvRef,
+  } yield PartMeta(path, rows, dv, dvRef,
     if (dvRef.isEmpty) 0L else dvCard, bytes,
     bucket.fold(-1)(_._1), bucket.fold(0)(_._2), sorted, cstats, cols,
-    kNulls, sNulls, kSum, eq, ncols)
+    eq, ncols)
 
   private val colMap: Gen[ColMap] = for {
     ids <- small(id)

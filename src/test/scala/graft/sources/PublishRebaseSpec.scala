@@ -23,7 +23,7 @@ class PublishRebaseSpec extends AnyFunSuite {
 
   private val conf = new Configuration()
   private val schema = StructType.fromDDL("k BIGINT")
-  private def pm(p: String) = PartMeta(p, 1L, 0L, 0L, "")
+  private def pm(p: String) = PartMeta(p, 1L)
   private def headPaths(dir: String): Set[String] =
     ManifestSink.readManifestMeta(conf, dir, None).map(_.path).toSet
 
@@ -249,7 +249,7 @@ class PublishRebaseSpec extends AnyFunSuite {
     assert(StrBin.max(emoji, pua) === emoji)
     // the writer's stats for rows {pua, emoji} are (pua, emoji) in
     // UTF-8 order; an equality probe for the emoji must overlap
-    val part = PartMeta("p", 2L, 0L, 0L, "", Some(pua), Some(emoji))
+    val part = ColStat('s', pua, emoji)
     assert(part.strOverlaps(Some(emoji), Some(emoji)),
       "UTF-16 comparison would prune the part that holds the row")
     assert(!part.strOverlaps(Some(emoji + "z"), None),

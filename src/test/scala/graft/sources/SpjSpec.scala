@@ -284,7 +284,8 @@ class SpjSpec extends graft.SparkSpec {
     val metas = ManifestSink.readManifestMeta(conf, s"$wh/ns/ord", None)
     assert(metas.forall(_.sorted), "ordered write must land sorted parts")
     // disjoint ranges: total overlap-free coverage of [0, 1000)
-    val ranges = metas.map(m => (m.kMin, m.kMax)).sortBy(_._1)
+    val ranges = metas.map(m => (m.cstats("k").lMin, m.cstats("k").lMax))
+      .sortBy(_._1)
     assert(ranges.sliding(2).forall {
       case Seq((_, aMax), (bMin, _)) => aMax < bMin
       case _ => true
@@ -306,7 +307,8 @@ class SpjSpec extends graft.SparkSpec {
     spark.sql("CALL gsp.system.compact(table => 'ns.ord', target_parts => 4)")
     val after = ManifestSink.readManifestMeta(conf, s"$wh/ns/ord", None)
     assert(after.length === 4 && after.forall(_.sorted))
-    val ranges2 = after.map(m => (m.kMin, m.kMax)).sortBy(_._1)
+    val ranges2 = after.map(m => (m.cstats("k").lMin, m.cstats("k").lMax))
+      .sortBy(_._1)
     assert(ranges2.sliding(2).forall {
       case Seq((_, aMax), (bMin, _)) => aMax < bMin
       case _ => true
