@@ -34,6 +34,10 @@ import graft.model.Tables
   */
 object Scoring {
 
+  /** Name prefix of the temp directory the regression head's
+    * save/load round-trip goes through. */
+  private[graft] val ModelDirPrefix = "graft-model-"
+
   /** Deterministic linear target the regression head must recover:
     * x_pos = 400 + 900·e₁ + 500·e₂ + 250·e₃ (spans the calibration
     * domain [33, 1117] for unit-ish embedding components). */
@@ -60,16 +64,25 @@ object Scoring {
 
     // S4 model-file load (estimate_queue.py:64-69 loads .h5 from
     // disk): persist the regression head and score with the LOADED
-    // model — the round-trip is the operator, not a cache.
+    // model — the round-trip is the operator, not a cache. The load
+    // is eager (the model holds its coefficients in memory), so the
+    // model directory is removed as soon as it returns.
     val posModel = {
       val fit = new LinearRegression()
         .setFeaturesCol("features").setLabelCol("t_xpos")
         .setSolver("normal").setRegParam(0.0)
         .fit(train)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-model-").toString + "/queue_end_pos"
-      fit.write.overwrite().save(path)
-      org.apache.spark.ml.regression.LinearRegressionModel.load(path)
+      val dir = java.nio.file.Files.createTempDirectory(ModelDirPrefix)
+      try {
+        val path = dir.resolve("queue_end_pos").toString
+        fit.write.overwrite().save(path)
+        org.apache.spark.ml.regression.LinearRegressionModel.load(path)
+      } finally {
+        import scala.jdk.CollectionConverters._
+        val walk = java.nio.file.Files.walk(dir)
+        val paths = try walk.iterator().asScala.toSeq finally walk.close()
+        paths.reverse.foreach(java.nio.file.Files.deleteIfExists)
+      }
     }
     val lanesModel = new LogisticRegression()
       .setFeaturesCol("features").setLabelCol("t_lanes")

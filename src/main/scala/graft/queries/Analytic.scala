@@ -58,7 +58,7 @@ ORDER BY c_custkey""")),
         val ord = Window.partitionBy(col("user_id"))
           .orderBy(col("ts"), col("event_id"))
         // keyedFanOut = the window's own hash exchange, pinned against
-        // AQE folding it to one task (Probe: 201+228 ms serial window
+        // AQE folding it to one task (measured: 201+228 ms serial window
         // stages; see Par.keyedFanOut)
         graft.util.Par.keyedFanOut(
           Tables.events(spark, dir)

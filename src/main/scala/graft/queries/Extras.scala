@@ -379,7 +379,7 @@ GROUP BY 1 ORDER BY 1""")),
     // commits it): events are written through graft.sources
     // .ManifestSink — every task stages a uniquely-named part file
     // and reports (rows, key min/max) in its WriterCommitMessage; the
-    // driver publishes _MANIFEST.json LAST as the atomic commit
+    // driver claims the next version file LAST as the atomic commit
     // point. The query then reads the manifest back and returns the
     // commit-protocol proof: manifest totals must equal the source
     // table's count/min/max REGARDLESS of how many partitions wrote —

@@ -193,7 +193,7 @@ GROUP BY r.c_mktsegment ORDER BY r.c_mktsegment""")),
           .orderBy(col("value"), col("event_id"))
         // pin the window's hash exchange at the configured shuffle
         // width: AQE's byte-based coalescing folds the ~MB exchange to
-        // ONE task and the per-group ntile sort runs serially (Probe:
+        // ONE task and the per-group ntile sort runs serially (measured:
         // two 1-task stages, 369+213 ms warm). An explicit-count
         // repartition on the SAME key is the exchange the window
         // requires (no extra shuffle) and is never coalesced; the

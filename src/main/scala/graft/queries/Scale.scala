@@ -447,14 +447,14 @@ FROM d ORDER BY zval, o_orderkey"""
         Seq("fa", "fb").foreach { t =>
           fact.repartition(4, col("k"))
             .write.format("graft.sources.ManifestSink")
-            .option("path", s"$base/ns/$t").option("history", "true")
+            .option("path", s"$base/ns/$t")
             .mode("overwrite").save()
         }
         Tables.orders(spark, dir)
           .select((col("o_orderkey") % 5000).as("dk"), col("o_totalprice"))
           .repartition(4)
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$base/ns/dim").option("history", "true")
+          .option("path", s"$base/ns/dim")
           .mode("overwrite").save()
         spark.sql("CALL gch.system.analyze(table => 'ns.fa')")
         spark.sql(

@@ -1537,7 +1537,7 @@ WHERE rn <= 5 ORDER BY probe_id, d2, vec_id""")),
           // fan the one-task corpus scan ahead of the decimal
           // assignment kernel (guide §2.5, the q_ann_ivf_build shape —
           // r21: the base build's kernel ran 556 ms on one core,
-          // Probe-measured). Both consumers (cellOf + codeOf) see the
+          // measured per stage). Both consumers (cellOf + codeOf) see the
           // SAME fanned subtree, so the round-robin exchange is
           // computed once and reused (ReusedExchange), not per branch.
           val slice = graft.util.Par.fanOut(slice0)
@@ -1563,14 +1563,14 @@ WHERE rn <= 5 ORDER BY probe_id, d2, vec_id""")),
         indexRows(emb.filter(col("vec_id") >= 8 && col("vec_id") % 4 =!= 0))
           .repartitionByRange(4, col("cell"), col("vec_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .mode("overwrite").save()
         // incremental maintenance → snapshot 2: only the delta's
         // codes are computed; the committed base parts are untouched
         indexRows(emb.filter(col("vec_id") >= 8 && col("vec_id") % 4 === 0))
           .repartitionByRange(2, col("cell"), col("vec_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .mode("append").save()
         // serve from the COMMITTED head (= base ∪ delta)
         val index = spark.read.format("graft.sources.ManifestSource")
@@ -1715,7 +1715,7 @@ WHERE rn <= 5 ORDER BY probe_id, hamming, vec_id""")),
         indexRows(sigs.filter(col("doc_id") % 3 =!= 0))
           .repartition(4, col("bh"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .mode("overwrite").save()
         val index = spark.read.format("graft.sources.ManifestSource")
           .option("path", t).option("version", "1").load()
@@ -1742,7 +1742,7 @@ WHERE rn <= 5 ORDER BY probe_id, hamming, vec_id""")),
         indexRows(sigs.filter(col("doc_id") % 3 === 0))
           .repartition(2, col("bh"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .mode("append").save()
         val after = spark.read.format("graft.sources.ManifestSource")
           .option("path", t).load()

@@ -165,7 +165,7 @@ FROM documents GROUP BY md5(text) ORDER BY keeper_id""")),
         docs.filter(col("doc_id") % 3 =!= 0)
           .groupBy(fp.as("fp")).agg(min(col("doc_id")).as("keeper_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .mode("overwrite").save()
         val index = spark.read.format("graft.sources.ManifestSource")
           .option("path", t).load()
@@ -180,7 +180,7 @@ FROM documents GROUP BY md5(text) ORDER BY keeper_id""")),
           "left_anti").localCheckpoint()
         newUnique.select(col("fp"), col("keeper_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .mode("append").save()
         val updated = spark.read.format("graft.sources.ManifestSource")
           .option("path", t).load()
@@ -929,12 +929,12 @@ FROM tf GROUP BY term ORDER BY df DESC, term LIMIT 30""")),
         postings(docs.filter(col("doc_id") % 5 =!= 0))
           .repartitionByRange(4, col("term_hash"), col("doc_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .mode("overwrite").save()
         postings(docs.filter(col("doc_id") % 5 === 0))
           .repartitionByRange(2, col("term_hash"), col("doc_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .mode("append").save()
         // the base snapshot predates the delta docs entirely
         val baseIntact = spark.read
@@ -1046,21 +1046,21 @@ ORDER BY score DESC, doc_id LIMIT 20""")),
         postings(base)
           .repartitionByRange(4, col("term_hash"), col("doc_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", pT).option("history", "true")
+          .option("path", pT)
           .mode("overwrite").save()
         doclen(base).repartitionByRange(4, col("doc_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", dT).option("history", "true")
+          .option("path", dT)
           .mode("overwrite").save()
         // incremental maintenance: delta-only postings + lengths
         postings(delta)
           .repartitionByRange(2, col("term_hash"), col("doc_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", pT).option("history", "true")
+          .option("path", pT)
           .mode("append").save()
         doclen(delta).repartitionByRange(2, col("doc_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", dT).option("history", "true")
+          .option("path", dT)
           .mode("append").save()
         // corpus stats FROM INDEX METADATA: one summary row off the
         // doclen manifest (rows + per-part dl sums), no data scan

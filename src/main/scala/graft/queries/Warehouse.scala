@@ -43,7 +43,7 @@ object Warehouse {
       parts: Int = 4): Unit =
     df.repartition(parts)
       .write.format("graft.sources.ManifestSink")
-      .option("path", path).option("history", "true").mode(mode).save()
+      .option("path", path).mode(mode).save()
 
   private def readVersion(spark: SparkSession, path: String,
       version: Option[Int]): DataFrame = {
@@ -429,7 +429,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
             if (!fs.exists(marker)) {
               batch.repartition(2)
                 .write.format("graft.sources.ManifestSink")
-                .option("path", silver).option("history", "true")
+                .option("path", silver)
                 .mode(if (fs.exists(new Path(silver))) "append" else "overwrite")
                 .save()
               fs.create(marker, false).close()
@@ -542,7 +542,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
           .select(col("event_id"), col("value"))
         base.repartitionByRange(8, col("event_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$t/wh/ev_t").option("history", "true")
+          .option("path", s"$t/wh/ev_t")
           .mode("overwrite").save()
         spark.sql("DELETE FROM graftcow.wh.ev_t WHERE event_id < 677")
         val after = spark.sql(
@@ -779,7 +779,7 @@ FROM feed ORDER BY _commit_version, _change_type, event_id""")),
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ev_t").option("history", "true")
+          .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
         spark.conf.set("graft.delete.mode", "mor")
         try {
@@ -832,7 +832,7 @@ ORDER BY snapshot""")),
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ev_t").option("history", "true")
+          .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
         spark.sql(
           "UPDATE graftupd.wh.ev_t SET value = value + 1.0 " +
@@ -886,7 +886,7 @@ ORDER BY event_type""")),
         base.filter(col("k") % 2 === 0)
           .repartitionByRange(4, col("k"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ord_t").option("history", "true")
+          .option("path", s"$wh/wh/ord_t")
           .mode("overwrite").save()
         base.filter(col("k") % 3 === 0)
           .select(col("k"), col("prio"),
@@ -957,7 +957,7 @@ FROM merged GROUP BY prio ORDER BY prio""")),
         base.filter(col("k") % 2 === 0)
           .repartitionByRange(4, col("k"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ord_sync").option("history", "true")
+          .option("path", s"$wh/wh/ord_sync")
           .mode("overwrite").save()
         base.filter(col("k") % 3 === 0)
           .select(col("k"), col("prio"),
@@ -1028,7 +1028,7 @@ FROM merged GROUP BY prio ORDER BY prio""")),
         base.filter(col("k") % 2 === 0)
           .repartitionByRange(4, col("k"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ord_t").option("history", "true")
+          .option("path", s"$wh/wh/ord_t")
           .mode("overwrite").save()
         base.filter(col("k") % 3 === 0)
           .select(col("k"), col("prio"),
@@ -1107,7 +1107,7 @@ ORDER BY prio""")),
         // real multi-batch ingest
         def stage(df: DataFrame): Unit = df.repartition(4)
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .option("branch", "audit").mode("append").save()
         stage(base.filter(col("event_id") % 4 === 1))
         stage(base.filter(col("event_id") % 4 === 3))
@@ -1387,7 +1387,7 @@ FROM events""")),
           .select(col("event_id"), col("user_id"), col("value"))
         base.repartitionByRange(4, col("event_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ev_t").option("history", "true")
+          .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
         spark.conf.set("graft.delete.mode", "mor")
         try spark.sql("DELETE FROM graftmf.wh.ev_t WHERE event_id % 10 = 0")
@@ -1657,7 +1657,7 @@ ORDER BY event_id""")),
         (0 until 4).foreach { i =>
           base.filter(col("event_id") % 4 === i).coalesce(1)
             .write.format("graft.sources.ManifestSink")
-            .option("path", s"$wh/wh/ev_t").option("history", "true")
+            .option("path", s"$wh/wh/ev_t")
             .mode(if (i == 0) "overwrite" else "append").save()
         }
         spark.conf.set("graft.delete.mode", "mor")
@@ -1826,7 +1826,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
         def writeBucketed(df: DataFrame, name: String): Unit =
           df.repartition(8, graft.functions.GraftBucket.bucketId(col("k"), 8))
             .write.format("graft.sources.ManifestSink")
-            .option("path", s"$wh/wh/$name").option("history", "true")
+            .option("path", s"$wh/wh/$name")
             .option("buckets", "8").mode("overwrite").save()
         writeBucketed(Tables.lineitem(spark, dir).select(
           col("l_orderkey").as("k"), col("l_quantity"),
@@ -1963,7 +1963,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ev_t").option("history", "true")
+          .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
         Tables.events(spark, dir)
           .filter(col("event_type") === "click" && col("event_id") % 3 =!= 0)
@@ -2074,7 +2074,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
         base.filter(col("event_id") % 3 =!= 2)
           .repartitionByRange(4, col("event_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ev_t").option("history", "true")
+          .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
         spark.sql("CALL graftmv.system.create_mv(" +
           "mv_table => 'wh.ev_mv', source_table => 'wh.ev_t', " +
@@ -2083,7 +2083,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
         base.filter(col("event_id") % 3 === 2)
           .repartitionByRange(2, col("event_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ev_t").option("history", "true")
+          .option("path", s"$wh/wh/ev_t")
           .mode("append").save()
         spark.conf.set("graft.delete.mode", "mor")
         try spark.sql("DELETE FROM graftmv.wh.ev_t WHERE event_type = 'error'")
@@ -2130,7 +2130,7 @@ ORDER BY event_type NULLS FIRST""")),
         base.filter(col("event_id") % 5 =!= 0)
           .repartitionByRange(4, col("event_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ev_t").option("history", "true")
+          .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
         spark.sql("CALL graftmvrw.system.create_mv(" +
           "mv_table => 'wh.ev_mv', source_table => 'wh.ev_t', " +
@@ -2154,7 +2154,7 @@ ORDER BY event_type NULLS FIRST""")),
           base.filter(col("event_id") % 5 === 0)
             .repartitionByRange(2, col("event_id"))
             .write.format("graft.sources.ManifestSink")
-            .option("path", s"$wh/wh/ev_t").option("history", "true")
+            .option("path", s"$wh/wh/ev_t")
             .mode("append").save()
           val stale = phase("stale")
           fresh.unionAll(stale)
@@ -2194,7 +2194,7 @@ ORDER BY phase, event_type NULLS FIRST""")),
             col("o_totalprice").as("price"))
           .repartitionByRange(8, col("k"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .mode("overwrite").save()
         // cust is a SECONDARY long column — its extremes answer from
         // the generalized ColStat record, same metadata-only path
@@ -2245,7 +2245,7 @@ FROM orders""")),
             mode: String): Unit =
           df.repartitionByRange(4, col("event_id"))
             .write.format("graft.sources.ManifestSink")
-            .option("path", path).option("history", "true")
+            .option("path", path)
             .mode(mode).save()
         write(base.filter(col("event_id") % 4 =!= 1), s"$wh/wh/ev_t",
           "overwrite")
@@ -2567,7 +2567,7 @@ ORDER BY event_type NULLS FIRST""")),
             mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
             .write.format("graft.sources.ManifestSink")
-            .option("path", path).option("history", "true")
+            .option("path", path)
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 === 0), src, "overwrite")
         spark.sql("CALL graftsmv.system.create_mv(" +
@@ -2594,7 +2594,7 @@ ORDER BY event_type NULLS FIRST""")),
             if (!fs.exists(marker)) {
               batch.repartitionByRange(2, col("event_id"))
                 .write.format("graft.sources.ManifestSink")
-                .option("path", src).option("history", "true")
+                .option("path", src)
                 .mode("append").save()
               fs.create(marker, false).close()
             }
@@ -2707,7 +2707,7 @@ FROM events""")),
           .select(col("event_id"), col("event_type"), col("value"))
         base.repartitionByRange(4, col("event_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ev_t").option("history", "true")
+          .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
         spark.conf.set("graft.branch", "audit")
         try {
@@ -2769,7 +2769,7 @@ FROM events""")),
         def write(df: DataFrame, mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
             .write.format("graft.sources.ManifestSink")
-            .option("path", s"$wh/wh/src").option("history", "true")
+            .option("path", s"$wh/wh/src")
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 =!= 1), "overwrite")
         spark.sql("CALL graftmvx.system.create_mv(" +
@@ -2837,7 +2837,7 @@ GROUP BY event_type ORDER BY event_type NULLS FIRST""")),
         def write(df: DataFrame, mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
             .write.format("graft.sources.ManifestSink")
-            .option("path", s"$wh/wh/src").option("history", "true")
+            .option("path", s"$wh/wh/src")
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 =!= 1), "overwrite")
         spark.sql("CALL graftmvmk.system.create_mv(" +
@@ -2911,7 +2911,7 @@ ORDER BY etype NULLS FIRST, par NULLS FIRST""")),
         def write(df: DataFrame, mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
             .write.format("graft.sources.ManifestSink")
-            .option("path", s"$wh/wh/src").option("history", "true")
+            .option("path", s"$wh/wh/src")
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 =!= 1), "overwrite")
         spark.sql("CALL graftmvra.system.create_mv(" +
@@ -2985,7 +2985,7 @@ ORDER BY etype NULLS FIRST""")),
         def write(df: DataFrame, mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
             .write.format("graft.sources.ManifestSink")
-            .option("path", s"$wh/wh/src").option("history", "true")
+            .option("path", s"$wh/wh/src")
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 =!= 1), "overwrite")
         spark.sql("CALL graftmvnd.system.create_mv(" +
@@ -3070,7 +3070,7 @@ GROUP BY etype ORDER BY etype NULLS FIRST""")),
         def write(df: DataFrame, mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
             .write.format("graft.sources.ManifestSink")
-            .option("path", s"$wh/wh/src").option("history", "true")
+            .option("path", s"$wh/wh/src")
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 =!= 1), "overwrite")
         spark.sql("CALL graftmtg.system.create_mv(" +
@@ -3929,7 +3929,7 @@ FROM cur GROUP BY etype ORDER BY etype""")),
             col("o_totalprice").as("price"))
           .repartitionByRange(4, col("k"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ord").option("history", "true")
+          .option("path", s"$wh/wh/ord")
           .mode("overwrite").save()
         Tables.lineitem(spark, dir)
           .select(col("l_orderkey"), col("l_quantity"))
@@ -4176,7 +4176,7 @@ FROM orders WHERE o_orderkey % 7 = 0""")),
         base.filter(col("k") % 2 === 0)
           .repartitionByRange(4, col("k"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/wh/ord_t").option("history", "true")
+          .option("path", s"$wh/wh/ord_t")
           .mode("overwrite").save()
         base.filter(col("k") % 3 === 0)
           .select(col("k"), (col("price") * 2).as("price"),
@@ -4251,7 +4251,7 @@ FROM merged""")),
         // stage the fix on its branch — fork at main v1
         base.filter(col("event_id") % 4 === 1).repartition(4)
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .option("branch", "fix").mode("append").save()
         // main advances with an interleaved, disjoint commit
         writeHistory(base.filter(col("event_id") % 4 === 2), t, "append")
@@ -4583,7 +4583,7 @@ FROM orders ORDER BY k""")),
         writeHistory(base.filter(col("event_id") % 2 =!= 0), t, "append")
         base.filter(col("event_id") % 10 === 0).repartition(2)
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .option("branch", "audit").mode("append").save()
         spark.sql("CALL graftmr.system.tag(table => 'wh.ev_t', " +
           "name => 'release-1', version => 1)")
@@ -4636,7 +4636,7 @@ ORDER BY type, name""")),
         def stage(df: DataFrame, t: String,
             branch: String = "txn-epoch7"): Unit = df.repartition(2)
           .write.format("graft.sources.ManifestSink")
-          .option("path", t).option("history", "true")
+          .option("path", t)
           .option("branch", branch).mode("append").save()
         stage(ev.filter(col("event_id") % 2 =!= 0), ta)
         stage(ev.filter(col("event_id") % 3 =!= 0)
@@ -4793,7 +4793,7 @@ GROUP BY n.n_name ORDER BY n.n_name""")),
         (0 until 4).foreach { i =>
           ev.filter(col("k") >= i * 250L && col("k") < (i + 1) * 250L)
             .coalesce(1).write.format("graft.sources.ManifestSink")
-            .option("path", t).option("history", "true")
+            .option("path", t)
             .mode(if (i == 0) "overwrite" else "append").save()
         }
         spark.conf.set("graft.delete.mode", "mor")
@@ -4864,14 +4864,14 @@ GROUP BY n.n_name ORDER BY n.n_name""")),
           .select(col("event_id").as("k"), col("value"))
           .repartitionByRange(8, col("k"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/ns/fact").option("history", "true")
+          .option("path", s"$wh/ns/fact")
           .mode("overwrite").save()
         Tables.orders(spark, dir)
           .select((col("o_orderkey") % 2000).as("dk"),
             col("o_totalprice"))
           .repartition(4)
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/ns/dim").option("history", "true")
+          .option("path", s"$wh/ns/dim")
           .mode("overwrite").save()
         val factBytes = spark.sql(
           "SELECT CAST(sum(bytes) AS BIGINT) FROM gsb.ns.fact.files")
@@ -5065,7 +5065,7 @@ FROM events ORDER BY k LIMIT 10""")),
           .select(col("event_id").as("k"), col("event_type"), col("value"))
           .repartitionByRange(8, col("k"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/ns/t").option("history", "true")
+          .option("path", s"$wh/ns/t")
           .mode("overwrite").save()
         val bytes = spark.sql(
           "SELECT CAST(sum(bytes) AS BIGINT) FROM gcb.ns.t.files")
@@ -5187,7 +5187,7 @@ WHERE event_id % 2 <> 0 ORDER BY event_id""")),
               def stage(df: DataFrame, t: String): Unit = df
                 .repartition(2).write
                 .format("graft.sources.ManifestSink")
-                .option("path", t).option("history", "true")
+                .option("path", t)
                 .option("branch", s"txn-$id").mode("append").save()
               stage(batch, silver)
               stage(batch.filter(col("price") > 100000.0)
@@ -5253,7 +5253,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
             (col("user_id") % 4).as("par"), col("value"))
           .repartitionByRange(4, col("event_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/ns/ev").option("history", "true")
+          .option("path", s"$wh/ns/ev")
           .mode("overwrite").save()
         spark.sql("CALL gmrr.system.create_mv(mv_table => 'ns.mv', " +
           "source_table => 'ns.ev', key_col => 'event_type,par', " +
@@ -5311,7 +5311,7 @@ GROUP BY user_id % 4 ORDER BY par""")),
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(4, col("event_id"))
           .write.format("graft.sources.ManifestSink")
-          .option("path", s"$wh/ns/ev").option("history", "true")
+          .option("path", s"$wh/ns/ev")
           .mode("overwrite").save()
         spark.sql("CALL gmrf.system.create_mv(mv_table => 'ns.mv', " +
           "source_table => 'ns.ev', key_col => 'event_type', " +

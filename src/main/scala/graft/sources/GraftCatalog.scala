@@ -538,7 +538,6 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     // a table is born as a schema-only snapshot: same commit protocol,
     // zero parts — readers see an empty versioned table immediately
     ManifestSink.publishSnapshot(conf, tablePath(ident), clean, Seq.empty,
-      history = true,
       colmap = if (defaults.isEmpty) None
         else Some(ColMap.identity(clean.fields.length)
           .copy(defaults = defaults)),
@@ -649,8 +648,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     val p = tablePath(ident)
     val baseVersion = ManifestSink.listVersions(conf, p)
       .lastOption.getOrElse(0)
-    val (schema, colmap0) = ManifestSink.readSchemaAndColMap(conf, p,
-        if (baseVersion == 0) None else Some(baseVersion))
+    val (schema, colmap0) = ManifestSink
+      .readSchemaAndColMap(conf, p, Some(baseVersion))
       .getOrElse(throw new NoSuchTableException(ident))
     var constraints = ManifestSink.readConstraints(conf, p)
     var colmap = colmap0
@@ -1073,7 +1072,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     if (constraintsChanged)
       ManifestSink.writeConstraints(conf, p, constraints)
     if (schemaChanged)
-      ManifestSink.publishRebase(conf, p, widened, history = true,
+      ManifestSink.publishRebase(conf, p, widened,
         rebase = head => head.map(m => m.copy(cstats =
           renames.foldLeft(m.cstats) { case (cs, (from, to)) =>
             cs.get(from).fold(cs)(st => cs - from + (to -> st))
@@ -1322,7 +1321,7 @@ private[sources] object H64Function extends UnboundFunction {
 }
 
 /** A catalog-loaded manifest table: batch read (full pushdown
-  * surface), streaming read (snapshot offsets), history-mode batch
+  * surface), streaming read (snapshot offsets), versioned batch
   * write (INSERT INTO appends a snapshot; INSERT OVERWRITE is a
   * logical truncate commit), and METADATA-ONLY `DELETE FROM`.
   *
@@ -1363,12 +1362,12 @@ private[sources] class GraftCatalogTable(
   protected def splitTransform: Option[String] = None
 
   /** SQL `TRUNCATE TABLE` — a LOGICAL truncate: one empty-part-list
-    * history snapshot (same schema), so pre-truncate versions stay
+    * snapshot (same schema), so pre-truncate versions stay
     * time-travelable and the data files stay until vacuum. Same
     * semantics as INSERT OVERWRITE of zero rows. */
   override def truncateTable(): Boolean = {
     ManifestSink.publishSnapshot(ManifestSink.driverConf(), path,
-      tableSchema, Seq.empty, history = true, op = "truncate")
+      tableSchema, Seq.empty, op = "truncate")
     true
   }
 
@@ -1475,7 +1474,7 @@ private[sources] class GraftCatalogTable(
         // new head makes the delete stats-undecidable, fail loudly
         // rather than half-apply (the caller re-plans → COW path)
         ManifestSink.publishRebase(ManifestSink.driverConf(), path,
-          tableSchema, history = true,
+          tableSchema,
           rebase = head => decideOn(head, filters).getOrElse(
             throw new java.util.ConcurrentModificationException(
               s"metadata DELETE on $path no longer stats-decidable " +
@@ -1659,7 +1658,7 @@ private[sources] class GraftCatalogTable(
               override def requiredOrdering(): Array[SortOrder] = ord
               override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
                 new ManifestBatchWrite(path, info.schema(), doTruncate,
-                  history = true, sconf, branch,
+                  sconf, branch,
                   replaceFilters = replaceFilters, identity = identitySpec,
                   generated = genFills)
               override def toStreaming
@@ -1669,7 +1668,7 @@ private[sources] class GraftCatalogTable(
           case None => new Write {
             override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
               new ManifestBatchWrite(path, info.schema(), doTruncate,
-                history = true, sconf, branch,
+                sconf, branch,
                 replaceFilters = replaceFilters, identity = identitySpec,
                   generated = genFills)
             override def toStreaming
@@ -1695,7 +1694,7 @@ private[sources] class GraftCatalogTable(
               override def requiredOrdering(): Array[SortOrder] = Array.empty
               override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
                 new ManifestBatchWrite(path, info.schema(), doTruncate,
-                  history = true, sconf, branch,
+                  sconf, branch,
                   replaceFilters = replaceFilters, splitBy = Some(c),
                   splitTransform = splitTransform,
                   identity = identitySpec, generated = genFills)
@@ -1719,7 +1718,7 @@ private[sources] class GraftCatalogTable(
                     .ASCENDING))
               override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
                 new ManifestBatchWrite(path, info.schema(), doTruncate,
-                  history = true, sconf, branch, buckets = Some(n),
+                  sconf, branch, buckets = Some(n),
                   replaceFilters = replaceFilters, identity = identitySpec,
                   generated = genFills)
               override def toStreaming
@@ -1803,7 +1802,7 @@ private[sources] class GraftSplitCatalogTable(
   override def dropPartition(id: InternalRow): Boolean = {
     val want = rawOf(id)
     var dropped = false
-    ManifestSink.publishRebase(conf, path, tableSchema, history = true,
+    ManifestSink.publishRebase(conf, path, tableSchema,
       rebase = head => {
         val straddlers = head.filter(m =>
           MetaTables.singleValue(m, field.name).isEmpty &&
@@ -1902,7 +1901,7 @@ private[sources] class GraftTimeSplitCatalogTable(
   override def dropPartition(id: InternalRow): Boolean = {
     val want = wantOf(id)
     var dropped = false
-    ManifestSink.publishRebase(conf, path, tableSchema, history = true,
+    ManifestSink.publishRebase(conf, path, tableSchema,
       rebase = head => {
         val straddlers = head.filter(m => m.rows > 0 &&
           partOrd(m).isEmpty && TimeSplit.mayHoldOrdinal(

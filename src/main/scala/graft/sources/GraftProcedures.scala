@@ -517,7 +517,7 @@ private[sources] final class CreateMvProcedure(warehouse: String)
       .comment("MV table identifier relative to the catalog warehouse")
       .build(),
     ProcedureParameter.in("source_table", StringType)
-      .comment("source table identifier (history table)").build(),
+      .comment("source table identifier").build(),
     ProcedureParameter.in("key_col", StringType).defaultValue("''")
       .comment("grouping column(s), comma-separated for a multi-key MV; " +
         "'' when key_expr is given instead").build(),
@@ -680,13 +680,12 @@ private[sources] final class CloneProcedure(warehouse: String)
           s"clone: source has no snapshot $n (history: $versions)")
         n
     }
-    val pin = if (v == 0) None else Some(v)
-    val parts = ManifestSink.readManifestMeta(conf, srcDir, pin)
-    val (schema, cm) = ManifestSink.readSchemaAndColMap(conf, srcDir, pin)
+    val parts = ManifestSink.readManifestMeta(conf, srcDir, Some(v))
+    val (schema, cm) = ManifestSink.readSchemaAndColMap(conf, srcDir, Some(v))
       .getOrElse(throw new IllegalStateException(
         s"clone: unreadable source schema at $srcDir"))
     ManifestSink.publishSnapshot(conf, targetDir, schema, parts,
-      history = true, colmap = Some(cm), op = "clone")
+      colmap = Some(cm), op = "clone")
     result(v, parts.size, parts.map(_.visibleRows).sum)
   }
 }

@@ -163,7 +163,7 @@ private[sources] class GraftStagedTable(
       // one truncate-style snapshot: new schema, only the staged
       // parts, FRESH identity mapping (old field ids described the
       // replaced schema) — history keeps every pre-replace version
-      ManifestSink.publishRebase(conf, path, clean, history = true,
+      ManifestSink.publishRebase(conf, path, clean,
         rebase = _ => staged, strictBase = None,
         colmapOverride = Some(cm.getOrElse(
           ColMap.identity(clean.fields.length))),
@@ -172,7 +172,7 @@ private[sources] class GraftStagedTable(
       if (ManifestSink.readSchema(conf, path).isDefined)
         throw new TableAlreadyExistsException(ident)
       ManifestSink.publishSnapshot(conf, path, clean, staged,
-        history = true, colmap = cm, op = "ctas")
+        colmap = cm, op = "ctas")
     }
   }
 

@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *      source, keep rows where the predicate is FALSE or NULL (SQL
   *      DELETE semantics), write them through the normal sink,
   *   4. move the new part files into the table dir and commit
-  *      `untouched ++ rewritten` as the next history snapshot.
+  *      `untouched ++ rewritten` as the next snapshot.
   *
   * Time travel is untouched by construction: prior snapshots still
   * list the pre-delete part files, which COW never deletes (VACUUM
@@ -85,12 +85,10 @@ private[sources] object ManifestCow {
     // the way an append can.
     val baseVersion = ManifestSink.listVersions(conf, path)
       .lastOption.getOrElse(0)
-    val parts =
-      if (baseVersion == 0) ManifestSink.readManifestMeta(conf, path, None)
-      else ManifestSink.readManifestMeta(conf, path, Some(baseVersion))
+    val parts = ManifestSink.readManifestMeta(conf, path, Some(baseVersion))
     val (touched, rewritten) = rewriteSurvivors(path, schema, filters, parts)
     if (touched.isEmpty) return // predicate provably matches no row
-    ManifestSink.publishRebase(conf, path, schema, history = true,
+    ManifestSink.publishRebase(conf, path, schema,
       head => head.filterNot(p => touched.contains(p.path)) ++ rewritten,
       strictBase = Some(baseVersion), footprint = Some(touched),
       op = "delete")
@@ -146,7 +144,6 @@ private[sources] object ManifestCow {
       // carrying the table's column mapping so mixed-generation part
       // layouts decode correctly through the staging read
       ManifestSink.publishSnapshot(conf, tmpRead, schema, affected,
-        history = false,
         colmap = ManifestSink.alignedColMap(conf, path, schema))
       // stage 3: DELETE keeps rows where the predicate is FALSE or
       // NULL — the three-valued-logic contract a naive `!pred` breaks

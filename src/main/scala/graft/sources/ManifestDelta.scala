@@ -129,7 +129,7 @@ private[sources] class ManifestDeltaBatchWrite(
         p -> (DeleteVector.writeRef(conf.value, path, name, sized), card)
       }
 
-    ManifestSink.publishRebase(conf.value, path, schema, history = true,
+    ManifestSink.publishRebase(conf.value, path, schema,
       head => head.map(p => updated.get(p.path)
         .map { case (ref, card) =>
           p.copy(dvHex = "", dvRef = ref, dvCard = card)

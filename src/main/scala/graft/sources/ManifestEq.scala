@@ -201,7 +201,7 @@ private[sources] object ManifestEq {
         val dflt = dfltTok(col)
         // an IN-list of only NULLs matches nothing: commit nothing
         if (clause.values.isEmpty) return
-        ManifestSink.publishRebase(conf, path, schema, history = true,
+        ManifestSink.publishRebase(conf, path, schema,
           rebase = head => head.map { p =>
             if (mayMatch(p, clause, dflt))
               p.copy(eq = p.eq :+ clause)
@@ -222,7 +222,7 @@ private[sources] object ManifestEq {
           throw new IllegalArgumentException(
             s"range delete: unsupported column '$col' (BIGINT only)"))
         val dflt = dfltTok(col)
-        ManifestSink.publishRebase(conf, path, schema, history = true,
+        ManifestSink.publishRebase(conf, path, schema,
           rebase = head => head.flatMap { p =>
             rangeDisposition(p, clause, lo, hi, dflt) match {
               case 'd' => None

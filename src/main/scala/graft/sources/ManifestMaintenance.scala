@@ -3,8 +3,8 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-/** Table-maintenance operations over a [[ManifestSink]] history table
-  * — the VACUUM / expire-snapshots side of the snapshot log, the op
+/** Table-maintenance operations over a [[ManifestSink]] table — the
+  * VACUUM / expire-snapshots side of the snapshot log, the op
   * every production table format ships because time travel is a lease,
   * not a mortgage: superseded data must eventually be reclaimed or a
   * 100 TB table with daily rewrites stores every byte it ever held.
@@ -69,19 +69,17 @@ object ManifestMaintenance {
     val conf = ManifestSink.driverConf()
     val baseVersion = ManifestSink.listVersions(conf, dir)
       .lastOption.getOrElse(0)
-    val pin = if (baseVersion == 0) None else Some(baseVersion)
-    val schema = ManifestSink.readSchema(conf, dir, pin).getOrElse(
-      throw new IllegalArgumentException(s"no manifest table at $dir"))
-    val parts = ManifestSink.readManifestMeta(conf, dir, pin)
+    val schema = ManifestSink.readSchema(conf, dir, Some(baseVersion))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no manifest table at $dir"))
+    val parts = ManifestSink.readManifestMeta(conf, dir, Some(baseVersion))
     if (parts.isEmpty) return (0, baseVersion)
     val (longCols, strCols) = ManifestSink.statCols(schema)
     val keepEmpty = ManifestSink.keyAndFirstStr(schema)
     val tracked: Seq[Int] = (longCols ++ strCols).toSeq
     if (tracked.isEmpty) return (0, baseVersion)
-    val reader = spark.read.format("graft.sources.ManifestSource")
-      .option("path", dir)
-    val df = (if (baseVersion > 0)
-      reader.option("version", baseVersion.toString) else reader).load()
+    val df = spark.read.format("graft.sources.ManifestSource")
+      .option("path", dir).option("version", baseVersion.toString).load()
     // SUM refresh for every tracked long column rides the same pass,
     // APPENDED after the min/max/count triples so their offsets stay
     // positional. Computed in DecimalType(38,0) — exact, overflow-proof
@@ -290,7 +288,7 @@ object ManifestMaintenance {
         }
       }
     }
-    val v = ManifestSink.publishRebase(conf, dir, schema, history = true,
+    val v = ManifestSink.publishRebase(conf, dir, schema,
       head => head.map(p => withBlooms.getOrElse(p.path, p)),
       strictBase = Some(baseVersion),
       footprint = Some(parts.map(_.path).toSet),
@@ -317,9 +315,7 @@ object ManifestMaintenance {
     val conf = ManifestSink.driverConf()
     val baseVersion = ManifestSink.listVersions(conf, dir)
       .lastOption.getOrElse(0)
-    val parts =
-      if (baseVersion == 0) ManifestSink.readManifestMeta(conf, dir, None)
-      else ManifestSink.readManifestMeta(conf, dir, Some(baseVersion))
+    val parts = ManifestSink.readManifestMeta(conf, dir, Some(baseVersion))
     // merge-on-read debt = deletion vectors AND pending equality-
     // delete clauses; both settle the same way (read masked, write
     // plain parts)
@@ -369,9 +365,7 @@ object ManifestMaintenance {
         "set_layout(spec => 'none') first)")
     val baseVersion = ManifestSink.listVersions(conf, dir)
       .lastOption.getOrElse(0)
-    val allParts =
-      if (baseVersion == 0) ManifestSink.readManifestMeta(conf, dir, None)
-      else ManifestSink.readManifestMeta(conf, dir, Some(baseVersion))
+    val allParts = ManifestSink.readManifestMeta(conf, dir, Some(baseVersion))
     // PARTITION-SCOPED compaction (Delta `OPTIMIZE ... WHERE part =
     // v` / Iceberg rewrite_data_files(where)): only the named
     // identity partition's parts rewrite; every other part carries by
@@ -556,8 +550,7 @@ object ManifestMaintenance {
       forcePlainLayout: Boolean = false,
       scopedSplitLayout: Boolean = false)
       : (Seq[PartMeta], Int) = {
-    val schema = ManifestSink.readSchema(conf, dir,
-      if (baseVersion == 0) None else Some(baseVersion))
+    val schema = ManifestSink.readSchema(conf, dir, Some(baseVersion))
       .getOrElse(throw new IllegalStateException(s"no schema at $dir"))
     val fs = new Path(dir).getFileSystem(conf)
     val token = java.util.UUID.randomUUID().toString.take(8)
@@ -591,7 +584,6 @@ object ManifestMaintenance {
       _.dataType == org.apache.spark.sql.types.LongType).map(_.name)
     try {
       ManifestSink.publishSnapshot(conf, tmpRead, schema, selected,
-        history = false,
         colmap = ManifestSink.alignedColMap(conf, dir, schema))
       val df = spark.read.format("graft.sources.ManifestSource")
         .option("path", tmpRead).load()
@@ -646,7 +638,7 @@ object ManifestMaintenance {
       // compaction conflicts loudly — compaction is always safe to
       // retry
       val selectedPaths = selected.map(_.path).toSet
-      val v = ManifestSink.publishRebase(conf, dir, schema, history = true,
+      val v = ManifestSink.publishRebase(conf, dir, schema,
         head => head.filterNot(p => selectedPaths.contains(p.path)) ++ rewritten,
         strictBase = Some(baseVersion), footprint = Some(selectedPaths),
         op = "optimize")
@@ -682,7 +674,7 @@ object ManifestMaintenance {
         Some(version))
       .getOrElse(throw new IllegalArgumentException(
         s"no snapshot $version at $dir"))
-    ManifestSink.publishSnapshot(conf, dir, schema, parts, history = true,
+    ManifestSink.publishSnapshot(conf, dir, schema, parts,
       colmap = Some(cm), op = "restore")
   }
 
@@ -705,7 +697,7 @@ object ManifestMaintenance {
         Some(branch))
       .getOrElse(throw new IllegalStateException(
         s"branch '$branch' at $dir has no schema header"))
-    ManifestSink.publishSnapshot(conf, dir, schema, parts, history = true,
+    ManifestSink.publishSnapshot(conf, dir, schema, parts,
       colmap = Some(cm), op = "publish")
   }
 
@@ -777,8 +769,7 @@ object ManifestMaintenance {
         // proof below is then the sole (and sufficient) guard against
         // branch commits that dropped or rewrote fork parts. fork=0
         // means main had no version files at fork time: a genuinely
-        // empty base.
-        case Some(0) => Seq.empty
+        // empty base, which main version 0 reads as.
         case Some(f) => ManifestSink.readManifestMeta(conf, dir, Some(f))
         case None =>
           // LEGACY FORK-POINT RECONSTRUCTION (branches committed before
@@ -827,7 +818,6 @@ object ManifestMaintenance {
       s"cherry-pick refused: branch '$branch' snapshot $v adds no " +
         s"parts over its base at $dir")
     val newVersion = ManifestSink.publishRebase(conf, dir, mSchema,
-      history = true,
       rebase = head => {
         val headPaths = head.map(_.path).toSet
         val dup = delta.filter(p => headPaths(p.path))

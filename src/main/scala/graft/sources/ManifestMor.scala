@@ -63,18 +63,15 @@ private[sources] object ManifestMor {
     val conf = ManifestSink.driverConf()
     val baseVersion = ManifestSink.listVersions(conf, path)
       .lastOption.getOrElse(0)
-    val parts =
-      if (baseVersion == 0) ManifestSink.readManifestMeta(conf, path, None)
-      else ManifestSink.readManifestMeta(conf, path, Some(baseVersion))
+    val parts = ManifestSink.readManifestMeta(conf, path, Some(baseVersion))
 
     // rows to DELETE: predicate TRUE (NULL/FALSE rows survive — same
     // three-valued contract as ManifestCow, opposite polarity)
     val pred: Column = filters.map(ManifestCow.toColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    val reader = spark.read.format("graft.sources.ManifestSource")
+    val matched = spark.read.format("graft.sources.ManifestSource")
       .option("path", path)
-    val matched = (if (baseVersion > 0) // pin the scanned base snapshot
-        reader.option("version", baseVersion.toString) else reader)
+      .option("version", baseVersion.toString) // pin the scanned base snapshot
       .load()
       .select(col(PartMetaColumn.Name).as("p"), col(PosMetaColumn.Name).as("o"),
         coalesce(pred, lit(false)).as("del"))
@@ -133,7 +130,7 @@ private[sources] object ManifestMor {
     // so a concurrent commit re-vectoring one of them conflicts; a
     // commit touching only other parts composes through the
     // head-aware rebase
-    ManifestSink.publishRebase(conf, path, schema, history = true,
+    ManifestSink.publishRebase(conf, path, schema,
       head => head.map(p => byPart.get(p.path)
         .map { case (ref, card) =>
           p.copy(dvHex = "", dvRef = ref, dvCard = card)

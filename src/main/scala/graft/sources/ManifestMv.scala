@@ -148,8 +148,7 @@ private[sources] object ManifestMv {
     * scale-adaptive by construction. */
   private def writeMv(df: DataFrame, mvDir: String): Unit =
     df.write.format("graft.sources.ManifestSink")
-      .option("path", mvDir).option("history", "true")
-      .mode("overwrite").save()
+      .option("path", mvDir).mode("overwrite").save()
 
   /** The accepted derived-key shape: `date_trunc('<grain>', <col>)`.
     * Grains are the calendar set both the engine and the oracle
@@ -175,8 +174,8 @@ private[sources] object ManifestMv {
     val conf = ManifestSink.driverConf()
     val srcVersion = ManifestSink.listVersions(conf, sourceDir).lastOption
       .getOrElse(throw new IllegalArgumentException(
-        s"create_mv: source $sourceDir has no history snapshots " +
-          "(MVs track the snapshot log; write with history=true)"))
+        s"create_mv: source $sourceDir has no committed snapshot " +
+          "(MVs track the snapshot log)"))
     val src = spark.read.format("graft.sources.ManifestSource")
       .option("path", sourceDir).option("version", srcVersion.toString).load()
     keyExpr.foreach { ke =>
@@ -256,7 +255,7 @@ private[sources] object ManifestMv {
     def headOf(d: String, what: String): Int =
       ManifestSink.listVersions(conf, d).lastOption.getOrElse(
         throw new IllegalArgumentException(
-          s"create_mv: $what $d has no history snapshots"))
+          s"create_mv: $what $d has no committed snapshot"))
     val srcVersion = headOf(factDir, "fact source")
     val dimVersion = headOf(dimDir, "dim source")
     val fact = spark.read.format("graft.sources.ManifestSource")
@@ -348,7 +347,7 @@ private[sources] object ManifestMv {
         // stage a read by REFERENCE (absolute paths, no data copied);
         // an empty side still needs the rollup's shape
         ManifestSink.publishSnapshot(conf, tmp, schema, parts,
-          history = false, colmap = ManifestSink.alignedColMap(conf,
+          colmap = ManifestSink.alignedColMap(conf,
             m.source, schema, Some(head)))
         val base = spark.read.format("graft.sources.ManifestSource")
           .option("path", tmp).load()

@@ -145,7 +145,7 @@ private[sources] class ManifestReplaceWrite(
     // that only touched OTHER parts composes — its parts carry
     // forward through the head-aware rebase; one that dropped or
     // re-vectored a scanned part conflicts loudly
-    ManifestSink.publishRebase(conf.value, path, schema, history = true,
+    ManifestSink.publishRebase(conf.value, path, schema,
       head => head.filterNot(p => replacedPaths.contains(p.path)) ++ newParts,
       strictBase = Some(base), footprint = Some(replacedPaths),
       branch = op.branch,

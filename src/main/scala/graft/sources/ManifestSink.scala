@@ -28,12 +28,13 @@ import org.apache.spark.util.SerializableConfiguration
   *    [[PartMeta]] record (path, rows, per-column [[ColStat]]s) —
   *    statistics computed WHILE writing, the footer metadata every
   *    modern table format keeps;
-  *  - the driver's BatchWrite.commit() writes `_MANIFEST.json` LAST,
-  *    listing the table schema plus exactly the committed attempts —
-  *    the manifest is the atomic publish point, so readers either see
-  *    the full dataset or none of it, and orphaned files from failed
-  *    attempts are invisible (abort() deletes what it can; correctness
-  *    never depends on that cleanup).
+  *  - the driver's BatchWrite.commit() claims the next immutable
+  *    version file `_MANIFEST.v<N>.json` LAST, listing the table schema
+  *    plus exactly the committed attempts — the claim is the atomic
+  *    publish point, so readers either see the full dataset or none of
+  *    it, and orphaned files from failed attempts are invisible
+  *    (abort() deletes what it can; correctness never depends on that
+  *    cleanup).
   *
   * Filesystem access uses the SESSION Hadoop configuration end to end:
   * captured once on the driver (`sessionState.newHadoopConf()`, which
@@ -62,7 +63,6 @@ class ManifestSink extends TableProvider {
       partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
     new ManifestTable(properties.get("path"), schema,
-      "true".equalsIgnoreCase(properties.get("history")),
       Option(properties.get("clusterBy")).filter(_.nonEmpty),
       Option(properties.get("writePartitions")).map(_.toInt),
       Option(properties.get("branch")).filter(_.nonEmpty),
@@ -513,9 +513,7 @@ private[sources] object ColMap {
 }
 
 object ManifestSink {
-  val ManifestFile = "_MANIFEST.json"
-
-  /** Immutable snapshot manifest name for version `v` (history mode). */
+  /** Immutable snapshot manifest name for version `v`. */
   def versionFile(v: Int): String = f"_MANIFEST.v$v%05d.json"
   private val VersionRe = """_MANIFEST\.v(\d+)\.json""".r
 
@@ -566,9 +564,9 @@ object ManifestSink {
   def readManifest(conf: Configuration, dir: String): Seq[(String, Long, Long, Long)] =
     readManifest(conf, dir, None)
 
-  /** Same, against a specific snapshot version (history mode). A
-    * request for a version whose manifest file is missing (never
-    * committed, or expired by [[ManifestMaintenance]]) fails loudly —
+  /** Same, against a specific snapshot version. A request for a
+    * version whose manifest file is missing (never committed, or
+    * expired by [[ManifestMaintenance]]) fails loudly —
     * silently serving the head instead would be a time-travel
     * correctness bug. */
   def readManifest(conf: Configuration, dir: String,
@@ -911,19 +909,17 @@ object ManifestSink {
   /** Publish a snapshot whose part list is exactly `parts` (commit
     * path for writes, and the metadata-only path for DDL/DELETE: a
     * new version is one small JSON file — no data is copied). Atomic:
-    * content lands under a temp name and renames in; the immutable
-    * snapshot publishes before the head pointer flips, so a crash
-    * between the two leaves the table readable at the old head with a
-    * complete (merely unreferenced) new snapshot. Returns the
-    * committed version (0 for a plain non-history table). */
+    * content lands under a temp name and is claimed as the next
+    * version file, so a crash before the claim leaves the table
+    * readable at the old head. Returns the committed version. */
   private[sources] def publishSnapshot(conf: Configuration, path: String,
-      schema: StructType, parts: Seq[PartMeta], history: Boolean,
+      schema: StructType, parts: Seq[PartMeta],
       colmap: Option[ColMap] = None, op: String = ""): Int =
     // fixed-part publishes (staging reads, restore, fast-forward,
     // clone, truncate) re-reference EXISTING parts: their recorded
     // layouts are already correct, so never stamp — and when the
     // caller hands the snapshot's mapping, publish it verbatim
-    publishRebase(conf, path, schema, history, _ => parts,
+    publishRebase(conf, path, schema, _ => parts,
       strictBase = None, colmapOverride = colmap, stampNew = false,
       op = op)
 
@@ -974,7 +970,7 @@ object ManifestSink {
     * the operation's snapshot: snapshot isolation, not
     * serializability, same as the lakehouse defaults.) */
   private[sources] def publishRebase(conf: Configuration, path: String,
-      schema: StructType, history: Boolean,
+      schema: StructType,
       rebase: Seq[PartMeta] => Seq[PartMeta],
       strictBase: Option[Int],
       footprint: Option[Set[String]] = None,
@@ -983,11 +979,8 @@ object ManifestSink {
       stampNew: Boolean = true,
       op: String = "",
       strictForkBase: Option[Int] = None): Int = {
-    branch.foreach { b =>
-      require(history, s"branch commits require a history table ($path)")
-      require(validBranch(b), s"invalid branch name '$b' " +
-        "(letters, digits, '_', '-' only)")
-    }
+    branch.foreach(b => require(validBranch(b), s"invalid branch name " +
+      s"'$b' (letters, digits, '_', '-' only)"))
     val dir = new Path(path)
     // strip default-value field metadata before rendering: the catalog
     // re-attaches CURRENT_DEFAULT/EXISTS_DEFAULT on loadTable (Spark's
@@ -1023,9 +1016,9 @@ object ManifestSink {
         // fork-from-empty from a branch commit that rewrote every fork
         // part (both are "contained" in an empty main snapshot
         // vacuously) — see ManifestMaintenance.cherrypick
-        if (history) Some((version, op, fork)) else None, parts)
+        Some((version, op, fork)), parts)
 
-    // column mapping bookkeeping shared by both commit paths: resolve
+    // column mapping bookkeeping: resolve
     // the mapping (override from DDL, else derive from the head), and
     // stamp every NEWLY-ADDED part with its line layout (the published
     // schema's field ids) — but only once the mapping is non-identity;
@@ -1050,32 +1043,24 @@ object ManifestSink {
         }, cm)
       }
     }
-    if (!history) {
-      // a plain table has no version log to pin against — silently
-      // ignoring strictBase would void the caller's race guarantee
-      require(strictBase.isEmpty,
-        s"strictBase requires a history table, got plain table at $dir")
-      val head = readManifestMeta(conf, path, None)
-      val (parts, cm) =
-        finish(head, readSchemaAndColMap(conf, path), rebase(head))
-      MetaJson.replace(conf, dir, ManifestFile, render(0, parts, cm))
-      return 0
-    }
-    // OPTIMISTIC CONCURRENCY (the Iceberg commit loop): a history
-    // commit CLAIMS its immutable version file — exists-check + rename,
+    // OPTIMISTIC CONCURRENCY (the Iceberg commit loop): a commit
+    // CLAIMS its immutable version file — exists-check + rename,
     // never an overwrite — so two racing committers cannot both land
     // on version N and silently drop a snapshot; the loser re-reads
     // the log, RE-APPLIES its operation against the new head via
     // `rebase`, and retries at the next free slot. (On HDFS the rename
     // itself refuses an existing destination, making the claim fully
     // atomic; on a raw local fs the exists-check shrinks the window.)
-    // The unversioned head file is a convenience POINTER, rewritten
-    // after the claim — readers of history tables resolve HEAD from
-    // the newest version file (see manifestLines), so a stale or
-    // raced head pointer can never serve a dropped/old snapshot.
+    // Readers resolve HEAD as the newest version file (manifestLines).
+    // The part list at version v of the line this commit targets; a
+    // branch with no commits forks IMPLICITLY from the main head.
+    def metaAt(v: Int): Seq[PartMeta] = branch match {
+      case Some(b) if v > 0 => readBranchMeta(conf, path, b, Some(v))
+      case Some(_) => readManifestMeta(conf, path, None)
+      case None => readManifestMeta(conf, path, Some(v))
+    }
     var attempts = 0
     var committed = -1
-    var body = ""
     while (committed < 0) {
       attempts += 1
       if (attempts > 1000) throw new java.io.IOException(
@@ -1084,15 +1069,7 @@ object ManifestSink {
         case Some(b) => listBranchVersions(conf, path, b).lastOption.getOrElse(0)
         case None    => listVersions(conf, path).lastOption.getOrElse(0)
       }
-      // a branch with no commits forks IMPLICITLY from the main head
-      val head = branch match {
-        case Some(b) =>
-          if (latest == 0) readManifestMeta(conf, path, None)
-          else readBranchMeta(conf, path, b, Some(latest))
-        case None =>
-          if (latest == 0) readManifestMeta(conf, path, None)
-          else readManifestMeta(conf, path, Some(latest))
-      }
+      val head = metaAt(latest)
       strictBase.foreach { base =>
         if (latest != base) footprint match {
           case None => throw new java.util.ConcurrentModificationException(
@@ -1101,12 +1078,6 @@ object ManifestSink {
           case Some(touched) =>
             // conflict check: every touched part must survive into the
             // advanced head BIT-IDENTICAL to the base snapshot's record
-            def metaAt(v: Int): Seq[PartMeta] = branch match {
-              case Some(b) if v > 0 => readBranchMeta(conf, path, b, Some(v))
-              case _ =>
-                if (v == 0) readManifestMeta(conf, path, None)
-                else readManifestMeta(conf, path, Some(v))
-            }
             val baseParts = metaAt(base).map(m => m.path -> m).toMap
             val headParts = head.map(m => m.path -> m).toMap
             val conflicted = touched.filter(p =>
@@ -1125,9 +1096,8 @@ object ManifestSink {
       val headSchemaCm = branch match {
         case Some(b) if latest > 0 =>
           readSchemaAndColMap(conf, path, Some(latest), Some(b))
-        case _ =>
-          readSchemaAndColMap(conf, path,
-            if (latest == 0) None else Some(latest))
+        case Some(_) => readSchemaAndColMap(conf, path)
+        case None => readSchemaAndColMap(conf, path, Some(latest))
       }
       val (parts, cm) = finish(head, headSchemaCm, rebase(head))
       val version = latest + 1
@@ -1148,19 +1118,13 @@ object ManifestSink {
       }
       val claim = branch.map(branchVersionFile(_, version))
         .getOrElse(versionFile(version))
-      body = render(version, parts, cm, fork)
-      if (MetaJson.claim(conf, dir, claim, body)) committed = version
+      if (MetaJson.claim(conf, dir, claim, render(version, parts, cm, fork)))
+        committed = version
     }
-    // the rewritable head POINTER tracks only the MAIN line; branch
-    // heads resolve purely from their newest version file. A racing
-    // committer may rewrite the pointer first: history readers never
-    // trust it, so losing that race is not a failed commit
-    if (branch.isEmpty) MetaJson.tryReplace(conf, dir, ManifestFile, body)
     committed
   }
 
-  /** Committed snapshot versions present at `dir`, ascending (history
-    * mode; empty for a plain single-manifest table). */
+  /** Committed snapshot versions present at `dir`, ascending. */
   def listVersions(conf: Configuration, dir: String): Seq[Int] = {
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
@@ -1199,9 +1163,7 @@ object ManifestSink {
     * version diff — the cache turns all but the first into memory
     * hits. A cheap existence probe guards each hit so an EXPIRED
     * snapshot (ManifestMaintenance deletes its file) still fails
-    * loudly instead of serving from memory. Byte-bounded LRU; the
-    * mutable head pointer (`_MANIFEST.json`, plain tables) is never
-    * cached. */
+    * loudly instead of serving from memory. Byte-bounded LRU. */
   private object LinesCache {
     private val MaxBytes = 64L << 20
     private val map =
@@ -1226,15 +1188,13 @@ object ManifestSink {
   private def manifestLines(conf: Configuration, dir: String,
       version: Option[Int] = None,
       branch: Option[String] = None): Seq[String] = {
-    // HEAD of a history table = the NEWEST immutable version file,
-    // not the rewritable head pointer: version files are claimed
-    // exclusively at commit (publishSnapshot), so this resolution is
-    // immune to head-pointer races and to a committer crashing
-    // between the claim and the pointer rewrite. The unversioned
-    // _MANIFEST.json remains authoritative only for plain
-    // (non-history) tables, where it is the sole commit point.
-    // A BRANCH head is the newest branch version file; a branch with
-    // no commits yet has not diverged and reads as the main head.
+    // HEAD = the NEWEST immutable version file: version files are
+    // claimed exclusively at commit (publishRebase), so a committer
+    // never leaves a half-published head behind. Main version 0 is the
+    // empty table before its first commit, so a directory with no
+    // version file reads as empty. A BRANCH head is the newest branch
+    // version file; a branch with no commits yet has not diverged and
+    // reads as the main head.
     val name: Option[String] = branch match {
       case Some(b) =>
         val bv = version.orElse(listBranchVersions(conf, dir, b).lastOption)
@@ -1242,10 +1202,11 @@ object ManifestSink {
           case Some(v) => Some(branchVersionFile(b, v))
           case None    => listVersions(conf, dir).lastOption.map(versionFile)
         }
-      case None =>
-        version.orElse(listVersions(conf, dir).lastOption).map(versionFile)
+      case None => version.orElse(listVersions(conf, dir).lastOption)
+        .filter(_ != 0).map(versionFile)
     }
-    val p = new Path(dir, name.getOrElse(ManifestFile))
+    if (name.isEmpty) return Seq.empty
+    val p = new Path(dir, name.get)
     val fs = p.getFileSystem(conf)
     // the status probe doubles as the staleness guard: the cache key
     // carries (length, mtime), so a table dir that was DELETED AND
@@ -1263,17 +1224,14 @@ object ManifestSink {
             .getOrElse(listVersions(conf, dir)).mkString(",")})")
       return Seq.empty
     }
-    val cacheKey = name.map(n =>
-      s"$dir/$n#${status.getLen}#${status.getModificationTime}").orNull
-    if (cacheKey != null) {
-      val hit = LinesCache.get(cacheKey)
-      if (hit != null) return hit
-    }
+    val cacheKey = s"$p#${status.getLen}#${status.getModificationTime}"
+    val hit = LinesCache.get(cacheKey)
+    if (hit != null) return hit
     val in = fs.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
     val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    if (cacheKey != null) LinesCache.put(cacheKey, lines)
+    LinesCache.put(cacheKey, lines)
     lines
   }
 
@@ -1289,7 +1247,7 @@ object ManifestSink {
 }
 
 private[sources] class ManifestTable(
-    path: String, schema: StructType, history: Boolean,
+    path: String, schema: StructType,
     clusterBy: Option[String] = None, writePartitions: Option[Int] = None,
     branch: Option[String] = None, buckets: Option[Int] = None,
     splitBy: Option[String] = None,
@@ -1346,7 +1304,6 @@ private[sources] class ManifestTable(
           new Write {
             override def toBatch: BatchWrite =
               new ManifestBatchWrite(path, info.schema(), doTruncate,
-                history,
                 new SerializableConfiguration(ManifestSink.driverConf()),
                 branch, splitBy = splitBy, splitTransform = splitTransform)
           }
@@ -1375,7 +1332,7 @@ private[sources] class ManifestTable(
             override def requiredNumPartitions(): Int =
               writePartitions.getOrElse(0)
             override def toBatch: BatchWrite =
-              new ManifestBatchWrite(path, info.schema(), doTruncate, history,
+              new ManifestBatchWrite(path, info.schema(), doTruncate,
                 new SerializableConfiguration(ManifestSink.driverConf()),
                 branch, splitBy = splitBy, splitTransform = splitTransform)
           }
@@ -1383,7 +1340,7 @@ private[sources] class ManifestTable(
           override def toBatch: BatchWrite =
             // capture the session conf HERE — newWriteBuilder/build run
             // on the driver; executors only ever see the serialized copy
-            new ManifestBatchWrite(path, info.schema(), doTruncate, history,
+            new ManifestBatchWrite(path, info.schema(), doTruncate,
               new SerializableConfiguration(ManifestSink.driverConf()), branch,
               buckets)
         }
@@ -1413,7 +1370,7 @@ private[sources] class ManifestTable(
             override def requiredNumPartitions(): Int =
               writePartitions.getOrElse(0) // 0 = planner's choice
             override def toBatch: BatchWrite =
-              new ManifestBatchWrite(path, info.schema(), doTruncate, history,
+              new ManifestBatchWrite(path, info.schema(), doTruncate,
                 new SerializableConfiguration(ManifestSink.driverConf()), branch)
           }
       }
@@ -1422,20 +1379,14 @@ private[sources] class ManifestTable(
 
 /** Driver-side commit coordinator.
   *
-  * Two commit layouts share one protocol:
-  *
-  *  - plain (default): a single `_MANIFEST.json`, last-writer-wins;
-  *    `overwrite` physically truncates the directory — exactly the
-  *    original sink contract.
-  *  - `history=true`: every commit additionally publishes an IMMUTABLE
-  *    `_MANIFEST.v<N>.json` snapshot (N = 1 + latest committed
-  *    version) and rewrites the head as a copy of it. `overwrite`
-  *    becomes a LOGICAL truncate — the new snapshot just lists no
-  *    prior parts; superseded part files stay on disk, readable via
-  *    `option("version", n)` until [[ManifestMaintenance.expireSnapshots]]
-  *    reclaims them. This is the Iceberg/Delta snapshot-log shape:
-  *    time travel costs one small JSON file per commit, never a data
-  *    copy.
+  * Every table is a log of versions: each commit claims an IMMUTABLE
+  * `_MANIFEST.v<N>.json` snapshot (N = 1 + latest committed version),
+  * and the newest one is the head. `overwrite` is a LOGICAL truncate —
+  * the new snapshot just lists no prior parts; superseded part files
+  * stay on disk, readable via `option("version", n)` until
+  * [[ManifestMaintenance.expireSnapshots]] or orphan removal reclaims
+  * them. This is the Iceberg/Delta snapshot-log shape: time travel
+  * costs one small JSON file per commit, never a data copy.
   *
   * `append` (SaveMode.Append — no truncate) carries the current head's
   * part list into the new snapshot, so a commit is O(new data); the
@@ -1449,7 +1400,7 @@ private[sources] class ManifestTable(
   * never have a later commit silently overwrite its data files — the
   * invariant snapshot isolation rests on. */
 private[sources] class ManifestBatchWrite(
-    path: String, schema: StructType, truncate: Boolean, history: Boolean,
+    path: String, schema: StructType, truncate: Boolean,
     conf: SerializableConfiguration, branch: Option[String] = None,
     buckets: Option[Int] = None,
     replaceFilters: Option[Array[org.apache.spark.sql.sources.Filter]] = None,
@@ -1478,8 +1429,7 @@ private[sources] class ManifestBatchWrite(
     * otherwise happily interleave two concurrent identity appends that
     * both derived the same mark and issued OVERLAPPING ids, silently
     * breaking the uniqueness contract IdentitySpec pins. Set when the
-    * factory resolves the mark (history tables only — identity lives
-    * on catalog tables, which are always history). */
+    * factory resolves the mark. */
   @volatile private var identityBaseVersion: Option[Int] = None
 
   /** For a branch's FIRST identity append (empty branch log) the id
@@ -1493,12 +1443,10 @@ private[sources] class ManifestBatchWrite(
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
-    // prepare the target dir on the DRIVER before tasks launch; with
-    // history, truncate is logical (snapshots own their part files)
+    // prepare the target dir on the DRIVER before tasks launch;
+    // truncate is logical (snapshots own their part files)
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
-    if (truncate && !history && fs.exists(dir)) fs.delete(dir, true)
-    fs.mkdirs(dir)
+    dir.getFileSystem(conf.value).mkdirs(dir)
     val factory0 =
       new ManifestWriterFactory(path, schema, token, conf, buckets, splitBy,
         splitTransform)
@@ -1526,7 +1474,7 @@ private[sources] class ManifestBatchWrite(
         // immutable once claimed): the commit pins this base, so a
         // concurrent commit between here and our commit fails loudly
         // instead of landing overlapping ids.
-        val latestV = if (!history) 0 else branch match {
+        val latestV = branch match {
           case Some(b) =>
             ManifestSink.listBranchVersions(conf.value, path, b)
               .lastOption.getOrElse(0)
@@ -1534,7 +1482,7 @@ private[sources] class ManifestBatchWrite(
             ManifestSink.listVersions(conf.value, path)
               .lastOption.getOrElse(0)
         }
-        if (history) identityBaseVersion = Some(latestV)
+        identityBaseVersion = Some(latestV)
         val head = branch match {
           case Some(b) =>
             if (latestV == 0) {
@@ -1545,13 +1493,11 @@ private[sources] class ManifestBatchWrite(
               val mainV = ManifestSink.listVersions(conf.value, path)
                 .lastOption.getOrElse(0)
               identityForkBase = Some(mainV)
-              ManifestSink.readManifestMeta(conf.value, path,
-                if (mainV == 0) None else Some(mainV))
+              ManifestSink.readManifestMeta(conf.value, path, Some(mainV))
             }
             else ManifestSink.readBranchMeta(conf.value, path, b, Some(latestV))
           case None =>
-            ManifestSink.readManifestMeta(conf.value, path,
-              if (latestV == 0) None else Some(latestV))
+            ManifestSink.readManifestMeta(conf.value, path, Some(latestV))
         }
         IdentityFillFactory(factory, schema, slot, spec.step,
           spec.allowExplicit,
@@ -1640,13 +1586,10 @@ private[sources] class ManifestBatchWrite(
         val baseVersion =
           ManifestSink.listVersions(conf.value, path).lastOption.getOrElse(0)
         val baseParts =
-          if (baseVersion == 0)
-            ManifestSink.readManifestMeta(conf.value, path, None)
-          else ManifestSink.readManifestMeta(conf.value, path,
-            Some(baseVersion))
+          ManifestSink.readManifestMeta(conf.value, path, Some(baseVersion))
         val (touched, rewritten) =
           ManifestCow.rewriteSurvivors(path, published, filters, baseParts)
-        ManifestSink.publishRebase(conf.value, path, published, history,
+        ManifestSink.publishRebase(conf.value, path, published,
           head => head.filterNot(p => touched.contains(p.path)) ++
             rewritten ++ newParts,
           strictBase = Some(baseVersion), footprint = Some(touched),
@@ -1660,7 +1603,7 @@ private[sources] class ManifestBatchWrite(
         // mark was derived from (identityBaseVersion) — merging there
         // would issue overlapping ids, so the loser fails and retries
         // with a freshly-derived mark instead.
-        try ManifestSink.publishRebase(conf.value, path, published, history,
+        try ManifestSink.publishRebase(conf.value, path, published,
           head => (if (truncate) Seq.empty else head) ++ newParts,
           strictBase = identityBaseVersion, branch = branch, op = opName,
           strictForkBase = identityForkBase)
@@ -1750,7 +1693,7 @@ private[sources] class ManifestStreamingWrite(
       messages: Array[WriterCommitMessage]): Unit = {
     if (alreadyCommitted(epochId)) { abort(epochId, messages); return }
     val newParts = ManifestSink.committedParts(messages.toSeq, buckets)
-    ManifestSink.publishRebase(conf.value, path, schema, history = true,
+    ManifestSink.publishRebase(conf.value, path, schema,
       head => head ++ newParts, strictBase = None, op = opToken(epochId))
   }
 

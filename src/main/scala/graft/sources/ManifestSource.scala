@@ -20,7 +20,7 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 READ path over a [[ManifestSink]]-committed table —
   * closing the warehouse loop: what one job commits (part files + a
-  * `_MANIFEST.json` carrying the schema and per-part key statistics),
+  * version manifest carrying the schema and per-part statistics),
   * a later job scans with metadata-level pruning, never trusting the
   * directory listing.
   *
@@ -563,17 +563,11 @@ private[sources] class ManifestScanBuilder(
         val (m, sc) = ManifestSink.readSnapshot(conf.value, path,
           if (latest == 0) None else Some(latest), Some(b))
         (m, latest, sc)
-      case None => version match {
-        case Some(v) =>
-          val (m, sc) = ManifestSink.readSnapshot(conf.value, path, version)
-          (m, v, sc)
-        case None =>
-          val latest = ManifestSink.listVersions(conf.value, path)
-            .lastOption.getOrElse(0)
-          val (m, sc) = ManifestSink.readSnapshot(conf.value, path,
-            if (latest == 0) None else Some(latest))
-          (m, latest, sc)
-      }
+      case None =>
+        val v = version.getOrElse(ManifestSink.listVersions(conf.value, path)
+          .lastOption.getOrElse(0))
+        val (m, sc) = ManifestSink.readSnapshot(conf.value, path, Some(v))
+        (m, v, sc)
     }
     aggResult match {
       case Some((aggSchema, aggRows)) =>
@@ -1088,8 +1082,7 @@ private[sources] trait VersionAdmission
     ManifestSink.listVersions(admissionConf.value, admissionPath)
       .lastOption.getOrElse(0)
   private def pathsAt(v: Int): Set[String] =
-    if (v == 0) Set.empty
-    else ManifestSink.readManifestMeta(admissionConf.value, admissionPath,
+    ManifestSink.readManifestMeta(admissionConf.value, admissionPath,
       Some(v)).map(_.path).toSet
 
   override def prepareForTriggerAvailableNow(): Unit =

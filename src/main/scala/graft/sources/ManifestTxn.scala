@@ -145,7 +145,7 @@ object ManifestTxn {
           Some(e.branchHead), Some(branch)).getOrElse(
             throw new IllegalStateException(
               s"txn '$id': branch '$branch' at ${e.dir} has no schema"))
-        ManifestSink.publishRebase(conf, e.dir, schema, history = true,
+        ManifestSink.publishRebase(conf, e.dir, schema,
           _ => parts, strictBase = Some(e.forkBase),
           colmapOverride = Some(cm), stampNew = false, op = label)
         published += 1

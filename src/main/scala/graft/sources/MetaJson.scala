@@ -22,8 +22,8 @@ private[sources] final case class TableSpec(
     orderBy: Option[String] = None)
 
 /** A snapshot manifest's header lines: the schema DDL, the column
-  * mapping (absent ⇒ identity) and, on history tables, the version
-  * record with its operation label and a branch's fork base. */
+  * mapping (absent ⇒ identity) and the version record with its
+  * operation label and a branch's fork base. */
 private[sources] final case class ManifestHeader(
     schemaDdl: Option[String] = None, colmap: Option[ColMap] = None,
     version: Option[Int] = None, op: String = "",
@@ -53,18 +53,13 @@ private[sources] object MetaJson {
       body: String): Boolean =
     publish(conf, dir, name, body, overwrite = false)
 
-  /** REPLACE `dir/name` atomically (head pointer, table sidecars, view
-    * records, MV meta): readers see the old file or the new one,
-    * never a partly-written one. */
+  /** REPLACE `dir/name` atomically (table sidecars, view records, MV
+    * meta): readers see the old file or the new one, never a
+    * partly-written one. */
   def replace(conf: Configuration, dir: Path, name: String,
       body: String): Unit =
-    if (!tryReplace(conf, dir, name, body))
+    if (!publish(conf, dir, name, body, overwrite = true))
       throw new java.io.IOException(s"cannot publish ${new Path(dir, name)}")
-
-  /** [[replace]] that reports a lost race (false) instead of throwing. */
-  def tryReplace(conf: Configuration, dir: Path, name: String,
-      body: String): Boolean =
-    publish(conf, dir, name, body, overwrite = true)
 
   private def publish(conf: Configuration, dir: Path, name: String,
       body: String, overwrite: Boolean): Boolean = {
@@ -251,7 +246,7 @@ private[sources] object MetaJson {
         }))
 
   /** A whole snapshot manifest: schema line, the column-mapping line
-    * (only when given), the version line (history tables), then one
+    * (only when given), the version line, then one
     * line per part. */
   def encodeManifest(ddl: String, colmap: Option[ColMap],
       version: Option[(Int, String, Option[Int])],

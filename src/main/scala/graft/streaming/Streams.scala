@@ -612,7 +612,7 @@ ORDER BY user_id, event_type""")),
         // output row is produced by the data batch that delivered the
         // matching side. The trailing no-data batch only evicts
         // watermark-expired join state (8 partitions × 4 state stores
-        // of pure commit machinery, ~0.8 s/run measured via Probe) and
+        // of pure commit machinery, ~0.8 s/run measured per stage) and
         // cannot emit — so it is skipped. The OUTER join below keeps
         // it: null-extended rows emit exactly on eviction there.
         // Child session — the conf cannot leak to other queries.

@@ -276,7 +276,7 @@ class CatalogSpec extends SparkSpec {
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartition(8, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/pruned").option("history", "true")
+      .option("path", s"$wh/ns/pruned")
       .mode("overwrite").save()
     val df = spark.sql("SELECT k FROM gcs.ns.pruned WHERE k = 17")
     assert(df.collect().map(_.getLong(0)).toSeq === Seq(17L))
@@ -311,7 +311,7 @@ class CatalogSpec extends SparkSpec {
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/del").option("history", "true")
+      .option("path", s"$wh/ns/del")
       .mode("overwrite").save()
     val conf = spark.sessionState.newHadoopConf()
     val partsBefore = graft.sources.ManifestSink.readManifest(conf, s"$wh/ns/del")
@@ -373,7 +373,7 @@ class CatalogSpec extends SparkSpec {
     import spark.implicits._
     parts.foreach(ks => ks.toDF("k").coalesce(1)
       .write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/$name").option("history", "true")
+      .option("path", s"$wh/ns/$name")
       .mode("append").save())
   }
   private def rows(name: String): Long =
@@ -519,7 +519,7 @@ class CatalogSpec extends SparkSpec {
     def write(slice: DataFrame, mode: String, parts: Int): Unit =
       indexRows(slice).repartitionByRange(parts, col("cell"), col("vec_id"))
         .write.format("graft.sources.ManifestSink")
-        .option("path", t).option("history", "true").mode(mode).save()
+        .option("path", t).mode(mode).save()
     def committed(): DataFrame = spark.read
       .format("graft.sources.ManifestSource").option("path", t).load()
     val conf = spark.sessionState.newHadoopConf()
@@ -549,7 +549,7 @@ class CatalogSpec extends SparkSpec {
     (0L until 800L).map(i => (i, i * 3)).toDF("k", "v")
       .repartitionByRange(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true")
+      .option("path", t)
       .mode("overwrite").save()
     spark.conf.set("graft.delete.mode", "mor")
     try spark.sql("DELETE FROM gcs.ns.filesmeta WHERE k % 10 = 0")
@@ -580,13 +580,13 @@ class CatalogSpec extends SparkSpec {
     (0L until 100L).map(i => (i, i)).toDF("k", "v")
       .repartition(2)
       .write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true")
+      .option("path", t)
       .mode("overwrite").save()
     assert(spark.sql("SELECT * FROM gcs.ns.brmeta.branches").count() === 0)
     (100L until 150L).map(i => (i, i)).toDF("k", "v")
       .repartition(1)
       .write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true").option("branch", "audit")
+      .option("path", t).option("branch", "audit")
       .mode("append").save()
     val row = spark.sql(
       "SELECT branch, head_version, n_parts, n_rows FROM " +
@@ -645,13 +645,13 @@ class CatalogSpec extends SparkSpec {
     (0L until 120L).map(i => (i, i)).toDF("k", "v")
       .repartition(2)
       .write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true")
+      .option("path", t)
       .mode("overwrite").save()
     assert(spark.sql("SELECT * FROM gcs.ns.tagmeta.tags").count() === 0)
     spark.sql("CALL gcs.system.tag(table => 'ns.tagmeta', name => 'r1')")
     (120L until 150L).map(i => (i, i)).toDF("k", "v")
       .write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true")
+      .option("path", t)
       .mode("append").save()
     spark.sql("CALL gcs.system.tag(table => 'ns.tagmeta', name => 'r2')")
     val rows = spark.sql(
@@ -667,7 +667,7 @@ class CatalogSpec extends SparkSpec {
     (0L until 400L).map(i => (i, i % 7, s"s$i")).toDF("k", "g", "s")
       .repartition(8)
       .write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/mcc").option("history", "true")
+      .option("path", s"$wh/ns/mcc")
       .mode("overwrite").save()
     val r = spark.sql("CALL gcs.system.compact(table => 'ns.mcc', " +
       "target_parts => 2, cluster_by => 'g, k')").collect().head

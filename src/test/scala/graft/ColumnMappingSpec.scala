@@ -149,7 +149,7 @@ class ColumnMappingSpec extends SparkSpec {
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(8, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/pr").option("history", "true")
+      .option("path", s"$wh/ns/pr")
       .mode("overwrite").save()
     spark.sql("ALTER TABLE gcm.ns.pr RENAME COLUMN k TO id")
     val picked = spark.sql("SELECT id FROM gcm.ns.pr WHERE id = 417")
@@ -288,7 +288,7 @@ class ColumnMappingSpec extends SparkSpec {
       .select(col("k"),
         struct(lit(10L).as("a"), lit("a").as("b")).as("p"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", dir).option("history", "true")
+      .option("path", dir)
       .mode("overwrite").save()
     // append with a genuinely-null sub-value: accepted, and the
     // published schema must widen p.a to nullable
@@ -296,7 +296,7 @@ class ColumnMappingSpec extends SparkSpec {
       .toDF("k", "p")
       .select(col("k"), col("p").cast("struct<a: bigint, b: string>"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", dir).option("history", "true")
+      .option("path", dir)
       .mode("append").save()
     val read = spark.read.format("graft.sources.ManifestSource")
       .option("path", dir).load()

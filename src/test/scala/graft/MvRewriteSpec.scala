@@ -31,7 +31,7 @@ class MvRewriteSpec extends SparkSpec {
   private def write(df: DataFrame, mode: String): Unit =
     df.repartition(4)
       .write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/src").option("history", "true")
+      .option("path", s"$wh/ns/src")
       .mode(mode).save()
 
   private val rollupSql =
@@ -159,13 +159,13 @@ class MvRewriteSpec extends SparkSpec {
     (0L until 300L).map(i => (i, i % 4, i * 0.25))
       .toDF("k", "fk", "v").repartition(2)
       .write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/cfact").option("history", "true")
+      .option("path", s"$wh/ns/cfact")
       .mode("overwrite").save()
     // dk is INT while fk is BIGINT — the bare equi-join carries the
     // analyzer's implicit `CAST(dk AS BIGINT)`
     (0 until 4).map(i => (i, s"c$i")).toDF("dk", "attr")
       .coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/cdim").option("history", "true")
+      .option("path", s"$wh/ns/cdim")
       .mode("overwrite").save()
     spark.sql("CALL gmvr.system.create_mv(mv_table => 'ns.cmv', " +
       "source_table => 'ns.cfact', key_col => 'attr', sum_col => 'v', " +
@@ -206,13 +206,13 @@ class MvRewriteSpec extends SparkSpec {
       df.queryExecution.optimizedPlan.exists(_.isInstanceOf[Join])
     def writeF(df: DataFrame, mode: String): Unit = df.repartition(2)
       .write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/jfact").option("history", "true")
+      .option("path", s"$wh/ns/jfact")
       .mode(mode).save()
     writeF((0L until 500L).map(i => (i, i % 5, i * 0.5))
       .toDF("k", "fk", "v"), "overwrite")
     (0L until 5L).map(i => (i, s"d$i")).toDF("dk", "attr")
       .coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/jdim").option("history", "true")
+      .option("path", s"$wh/ns/jdim")
       .mode("overwrite").save()
     spark.sql("CALL gmvr.system.create_mv(mv_table => 'ns.jmv', " +
       "source_table => 'ns.jfact', key_col => 'attr', sum_col => 'v', " +
@@ -265,7 +265,7 @@ class MvRewriteSpec extends SparkSpec {
       // MOVED DIM declines; refresh recomputes fully and re-arms
       (5L until 6L).map(i => (i, s"d$i")).toDF("dk", "attr")
         .coalesce(1).write.format("graft.sources.ManifestSink")
-        .option("path", s"$wh/ns/jdim").option("history", "true")
+        .option("path", s"$wh/ns/jdim")
         .mode("append").save()
       val dimMoved = spark.sql(jq)
       assert(hasJoin(dimMoved), "a moved dim head must decline")
@@ -292,7 +292,7 @@ class MvRewriteSpec extends SparkSpec {
       .toDF("k", "ts", "v")
       .repartition(3)
       .write.format("graft.sources.ManifestSink")
-      .option("path", src).option("history", "true")
+      .option("path", src)
       .mode("overwrite").save()
     spark.sql("CALL gmvr.system.create_mv(mv_table => 'tg.mv', " +
       "source_table => 'tg.src', " +
@@ -339,7 +339,7 @@ class MvRewriteSpec extends SparkSpec {
           2.5))
         .toDF("k", "ts", "v")
         .write.format("graft.sources.ManifestSink")
-        .option("path", src).option("history", "true")
+        .option("path", src)
         .mode("append").save()
       assert(hasAggregate(spark.sql(grainSql)), "stale MV must decline")
       val st = spark.sql(

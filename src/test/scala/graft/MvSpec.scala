@@ -32,7 +32,7 @@ class MvSpec extends SparkSpec {
   private def write(df: DataFrame, path: String, mode: String): Unit =
     df.repartition(4)
       .write.format("graft.sources.ManifestSink")
-      .option("path", path).option("history", "true").mode(mode).save()
+      .option("path", path).mode(mode).save()
 
   /** (group, n, sum) set from any frame with (s, v). */
   private def direct(df: DataFrame): Set[(String, Long, java.math.BigDecimal)] =

@@ -35,12 +35,12 @@ class NullStatsSpec extends SparkSpec {
     spark.sql("CREATE TABLE gns.ns.t (k BIGINT, s STRING, v BIGINT)")
     (0L until 100L).map(k => (k, null: String, k)).toDF("k", "s", "v")
       .coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/t").option("history", "true")
+      .option("path", s"$wh/ns/t")
       .mode("append").save()
     (100L until 200L).map(k => (k, s"s$k", null: java.lang.Long))
       .toDF("k", "s", "v")
       .coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/t").option("history", "true")
+      .option("path", s"$wh/ns/t")
       .mode("append").save()
     // primary string column: sNulls == rows prunes IS NOT NULL,
     // sNulls == 0 prunes IS NULL
@@ -68,7 +68,7 @@ class NullStatsSpec extends SparkSpec {
       .map(k => (k, if (k % 3 == 0) null else s"s$k", k * 0.5))
       .toDF("k", "s", "d")
       .repartition(4).write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/c").option("history", "true")
+      .option("path", s"$wh/ns/c")
       .mode("append").save()
     val agg = spark.sql(
       "SELECT count(s) AS ns, count(k) AS nk, count(*) AS n FROM gns.ns.c")
@@ -100,7 +100,7 @@ class NullStatsSpec extends SparkSpec {
     (0L until 100L)
       .map(k => (k, if (k < 10) null else s"s$k")).toDF("k", "s")
       .coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/a").option("history", "true")
+      .option("path", s"$wh/ns/a")
       .mode("append").save()
     spark.conf.set("graft.delete.mode", "mor")
     try spark.sql("DELETE FROM gns.ns.a WHERE s IS NULL AND k < 10")

@@ -104,7 +104,7 @@ class PropertySpec extends SparkSpec {
       (0L until n).map(j => (j, s"v$j")).toDF("k", "s")
         .repartitionByRange(5, col("k"))
         .write.format("graft.sources.ManifestSink")
-        .option("path", table).option("history", "true")
+        .option("path", table)
         .mode("overwrite").save()
       spark.sql(s"DELETE FROM gcp.ns.t$i WHERE k >= $cut")
       val got = spark.sql(s"SELECT k FROM gcp.ns.t$i")

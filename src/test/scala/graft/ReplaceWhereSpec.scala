@@ -32,7 +32,7 @@ class ReplaceWhereSpec extends SparkSpec {
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", path).option("history", "true")
+      .option("path", path)
       .mode("overwrite").save()
     path
   }
@@ -103,7 +103,7 @@ class ReplaceWhereSpec extends SparkSpec {
     Seq((Some(1L), "a"), (None, "nullk"), (Some(5L), "b"))
       .toDF("k", "s")
       .write.format("graft.sources.ManifestSink")
-      .option("path", path).option("history", "true")
+      .option("path", path)
       .mode("overwrite").save()
     Seq((2L, "two")).toDF("k", "s").createOrReplaceTempView("rw_src3")
     spark.sql("INSERT INTO grw.ns.nullsafe REPLACE WHERE k < 3 " +

@@ -25,7 +25,7 @@ class RowLevelSpec extends SparkSpec {
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", path).option("history", "true")
+      .option("path", path)
       .mode("overwrite").save()
     path
   }
@@ -129,7 +129,7 @@ class RowLevelSpec extends SparkSpec {
         ((p * 100 + i).toLong, (p * 1000 + i).toLong, s"v$p-$i"))
         .toDF("k", "k2", "s").coalesce(1)
         .write.format("graft.sources.ManifestSink")
-        .option("path", path).option("history", "true")
+        .option("path", path)
         .mode(if (p == 0) "overwrite" else "append").save()
     }
     val before = headParts(path)
@@ -233,7 +233,7 @@ class RowLevelSpec extends SparkSpec {
         ((p * 100 + i).toLong, k2, s"v$p-$i")
       }.toDF("k", "k2", "s").coalesce(1)
         .write.format("graft.sources.ManifestSink")
-        .option("path", path).option("history", "true")
+        .option("path", path)
         .mode(if (p == 0) "overwrite" else "append").save()
     }
     val before = headParts(path)

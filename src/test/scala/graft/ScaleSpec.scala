@@ -241,7 +241,7 @@ class ScaleSpec extends SparkSpec {
       .select(col("doc_id"), col("source"), col("n_chars"))
       .repartition(8, col("doc_id"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true")
+      .option("path", t)
       .mode("overwrite").save()
     def probe() = spark.read.format("graft.sources.ManifestSource")
       .option("path", t).load().filter(col("source") === "src5")
@@ -446,7 +446,7 @@ class ScaleSpec extends SparkSpec {
     (0L until 100000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(64, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", s"$dir/fact").option("history", "true")
+      .option("path", s"$dir/fact")
       .mode("overwrite").save()
     // dim: big enough that IT never broadcasts at the test threshold
     (0L until 100000L).map(i => (i, i % 7)).toDF("k", "grp")

@@ -37,7 +37,7 @@ class ScanMetricsSpec extends SparkSpec {
     (0 until 4).foreach { i =>
       (i * 100L until (i + 1) * 100L).map(k => (k, s"v$k")).toDF("k", "s")
         .coalesce(1).write.format("graft.sources.ManifestSink")
-        .option("path", s"$wh/ns/m").option("history", "true")
+        .option("path", s"$wh/ns/m")
         .mode("append").save()
     }
     spark.conf.set("graft.delete.mode", "mor")

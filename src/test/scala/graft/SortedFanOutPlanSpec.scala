@@ -1,8 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{SqlOps4, VisionOps, SimOps}
@@ -31,28 +34,56 @@ class SortedFanOutPlanSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .appName("sorted-fanout-plan-spec").getOrCreate()
 
-  /** Assert the sortedFanOut shape on a query's physical plan:
-    * one range exchange, one Sort, and `heavyMarker` (an expression
-    * fragment of the per-row-expensive projection) present in the
-    * plan but ABSENT from the Sort's subtree — i.e. evaluated above
-    * the established order, never below it. */
+  /** The final physical plan of `df` as actually executed: the query
+    * runs into the `noop` sink, a listener captures that execution,
+    * and adaptive wrappers and query stages are unwrapped — so
+    * exchanges AQE inserts at runtime are visible. */
+  private def finalNodes(df: DataFrame): Seq[SparkPlan] = {
+    var captured: Option[QueryExecution] = None
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        captured = Some(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      org.apache.spark.graftbridge.TestBus.waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    nodes(captured.getOrElse(sys.error("no execution captured")).executedPlan)
+  }
+
+  /** Every node of `plan`, unwrapping adaptive plans and query stages. */
+  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => nodes(s.plan)
+    case p => p +: p.children.flatMap(nodes)
+  }
+
+  /** Assert the sortedFanOut shape on a query's final plan: one range
+    * exchange, one Sort, and the heavy expression `heavyMarker` (by
+    * its pretty name) evaluated in a node ABOVE the Sort and in no
+    * node of the Sort's subtree — i.e. above the established order,
+    * never below it. */
   private def pinShape(df: DataFrame, heavyMarker: String): Unit = {
-    val plan = df.queryExecution.sparkPlan
-    val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+    val all = finalNodes(df)
+    val plan = all.head
+    val exchanges = all.collect { case e: ShuffleExchangeExec => e }
     assert(exchanges.size === 1,
-      s"expected exactly one exchange:\n$plan")
-    assert(exchanges.head.outputPartitioning.toString
-      .toLowerCase.contains("range"),
+      s"expected exactly one exchange in the final plan:\n$plan")
+    assert(exchanges.head.outputPartitioning.isInstanceOf[RangePartitioning],
       s"the single exchange must be the sort's range partitioning:\n$plan")
-    val sorts = plan.collect { case s: SortExec => s }
+    val sorts = all.collect { case s: SortExec => s }
     assert(sorts.size === 1, s"expected exactly one Sort:\n$plan")
-    val whole = plan.toString
-    val below = sorts.head.toString
-    assert(whole.contains(heavyMarker),
-      s"heavy marker '$heavyMarker' not found in the plan:\n$whole")
-    assert(!below.contains(heavyMarker),
+    def heavy(n: SparkPlan): Boolean =
+      n.expressions.exists(_.exists(_.prettyName == heavyMarker))
+    val below = nodes(sorts.head)
+    assert(!below.exists(heavy),
       s"heavy projection '$heavyMarker' leaked BELOW the Sort — the " +
-        s"per-row work would run in the pre-shuffle stage:\n$below")
+        s"per-row work would run in the pre-shuffle stage:\n${sorts.head}")
+    assert(all.exists(n => heavy(n) && nodes(n).exists(_ eq sorts.head)),
+      s"heavy marker '$heavyMarker' not evaluated above the Sort:\n$plan")
   }
 
   private def q(all: Seq[graft.queries.QueryDef], name: String): DataFrame =

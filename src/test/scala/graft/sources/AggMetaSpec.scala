@@ -28,7 +28,7 @@ class AggMetaSpec extends graft.SparkSpec {
   private def write(df: DataFrame, t: String, mode: String = "append",
       opts: Map[String, String] = Map.empty): Unit = {
     var w = df.write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true")
+      .option("path", t)
     opts.foreach { case (k, v) => w = w.option(k, v) }
     w.mode(mode).save()
   }
@@ -178,7 +178,7 @@ class AggMetaSpec extends graft.SparkSpec {
     // simulate a pre-sum manifest: strip the key's sum from the
     // committed snapshot text (additive codec → still readable)
     val fs = new org.apache.hadoop.fs.Path(t).getFileSystem(conf)
-    Seq(ManifestSink.ManifestFile, ManifestSink.versionFile(1)).foreach { f =>
+    Seq(ManifestSink.versionFile(1)).foreach { f =>
       val p = new org.apache.hadoop.fs.Path(t, f)
       if (fs.exists(p)) {
         val in = fs.open(p)

@@ -34,7 +34,7 @@ class CherrypickSpec extends AnyFunSuite {
     ManifestSink.readManifestMeta(conf, dir, None).map(_.path).toSet
   private def commit(dir: String, f: Seq[PartMeta] => Seq[PartMeta],
       branch: Option[String] = None): Int =
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       rebase = f, strictBase = None, branch = branch)
 
   /** Rewrites a branch's v1 manifest WITHOUT its recorded fork field,
@@ -176,7 +176,7 @@ class CherrypickSpec extends AnyFunSuite {
     commit(dir, h => h :+ pm("f1"), Some("fix"))
     // main evolves its schema after the fork
     ManifestSink.publishRebase(conf, dir,
-      StructType.fromDDL("k BIGINT, s STRING"), history = true,
+      StructType.fromDDL("k BIGINT, s STRING"),
       rebase = h => h, strictBase = None)
     val ex = intercept[IllegalArgumentException] {
       ManifestMaintenance.cherrypick(conf, dir, "fix")

@@ -33,8 +33,7 @@ class ColStatsSpec extends graft.SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType)))
-    ManifestSink.publishSnapshot(conf, dir, schema, Seq(part),
-      history = false)
+    ManifestSink.publishSnapshot(conf, dir, schema, Seq(part))
     val back = ManifestSink.readManifestMeta(conf, dir, None)
     assert(back.head.cstats === stats)
   }
@@ -72,7 +71,7 @@ class ColStatsSpec extends graft.SparkSpec {
       (0L until 20000L).map(i => (i, s"u$i")).toDF("k", "u")
         .coalesce(1)
         .write.format("graft.sources.ManifestSink")
-        .option("path", dir).option("history", "true")
+        .option("path", dir)
         .mode("overwrite").save()
       ManifestSink.readManifestMeta(conf, dir, None)
         .head.cstats("u").bloom.length
@@ -97,7 +96,7 @@ class ColStatsSpec extends graft.SparkSpec {
     (0L until 20000L).map(i => (i, s"u$i")).toDF("k", "u")
       .coalesce(1)
       .write.format("graft.sources.ManifestSink")
-      .option("path", dir).option("history", "true")
+      .option("path", dir)
       .mode("overwrite").save()
     assert(ManifestSink.readManifestMeta(conf, dir, None)
       .head.cstats("u").bloom.length === 262144 / 4)
@@ -122,7 +121,7 @@ class ColStatsSpec extends graft.SparkSpec {
     (0L until 400L).map(i => (i, "h" + ((i * 37) % 400)))
       .toDF("k", "u").repartition(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", dir).option("history", "true")
+      .option("path", dir)
       .mode("overwrite").save()
     // every part's u-range spans nearly [h0, h399] (hash layout), so
     // min/max admit all 4 parts — the bloom is what prunes
@@ -138,7 +137,7 @@ class ColStatsSpec extends graft.SparkSpec {
     (0L until 400L).map(i => (i, "h" + ((i * 37) % 400)))
       .toDF("k", "u").repartition(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", dir2).option("history", "true")
+      .option("path", dir2)
       .mode("overwrite").save()
     assert(scanParts(readBack(dir2).filter(col("u") === "h37")) === 4,
       "no declared bloom: range-only baseline keeps every part")
@@ -297,7 +296,7 @@ class ColStatsSpec extends graft.SparkSpec {
       (0 until 50).map(i => ((p * 100 + i).toLong, (p * 1000 + i).toLong))
         .toDF("k", "k2").coalesce(1)
         .write.format("graft.sources.ManifestSink")
-        .option("path", dir).option("history", "true")
+        .option("path", dir)
         .mode(if (p == 0) "overwrite" else "append").save()
     }
     // COW DELETE touches only part 0 (k < 10); part 1 carries forward
@@ -344,7 +343,7 @@ class ColStatsSpec extends graft.SparkSpec {
           ts.map(DateTimeUtils.toJavaTimestamp).orNull)
       }, 1), schema)
         .write.format("graft.sources.ManifestSink")
-        .option("path", s"$wh/ns/p").option("history", "true")
+        .option("path", s"$wh/ns/p")
         .mode("append").save()
     }
     val paths = ManifestSink.readManifestMeta(conf, s"$wh/ns/p", None)

@@ -169,7 +169,7 @@ class IdentitySpec extends SparkSpec {
     val src = Files.createTempDirectory("graft-id-src-").toString
     spark.range(0, 10).selectExpr("id AS k", "id * 2 AS v")
       .write.format("graft.sources.ManifestSink")
-      .option("path", src).option("history", "true")
+      .option("path", src)
       .mode("overwrite").save()
     val ex = intercept[Exception] {
       val q = spark.readStream

@@ -26,7 +26,7 @@ class MorDeltaSpec extends graft.SparkSpec {
     (0L until rows).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
       .write.format("graft.sources.ManifestSink")
-      .option("path", path).option("history", "true")
+      .option("path", path)
       .mode("overwrite").save()
     path
   }
@@ -183,7 +183,7 @@ class MorDeltaSpec extends graft.SparkSpec {
     (5000L until 5100L).map(i => (i, s"b$i")).toDF("k", "s")
       .repartition(1)
       .write.format("graft.sources.ManifestSink")
-      .option("path", path).option("history", "true")
+      .option("path", path)
       .option("branch", "audit").mode("append").save()
     val staged = ManifestSink.readBranchMeta(conf, path, "audit")
       .map(_.path).toSet -- headMeta(path).map(_.path).toSet

@@ -30,7 +30,7 @@ class ProcedureSpec extends graft.SparkSpec {
     (0L until n).map(i => (i, i * 2)).toDF("k", "v")
       .repartition(parts)
       .write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true")
+      .option("path", t)
       .mode("overwrite").save()
     t
   }
@@ -291,7 +291,7 @@ class ProcedureSpec extends graft.SparkSpec {
     val t = writeTable("wap", 100L, 2)                        // main v1
     (1000L until 1100L).map(i => (i, i * 2)).toDF("k", "v")
       .write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true").option("branch", "audit")
+      .option("path", t).option("branch", "audit")
       .mode("append").save()
     // main readers see nothing of the staged branch commit
     assert(spark.sql("SELECT count(*) FROM gps.ns.wap").head.getLong(0)
@@ -377,7 +377,7 @@ class ProcedureSpec extends graft.SparkSpec {
     val t = writeTable("dryrun", 100, 2)             // v1: 2 parts
     (100L until 200L).map(i => (i, i)).toDF("k", "v").repartition(2)
       .write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true").mode("overwrite").save()
+      .option("path", t).mode("overwrite").save()
     def files() = new org.apache.hadoop.fs.Path(t).getFileSystem(conf)
       .listStatus(new org.apache.hadoop.fs.Path(t))
       .count(_.getPath.getName.endsWith(".csv"))
@@ -425,7 +425,7 @@ class ProcedureSpec extends graft.SparkSpec {
     (300L until 400L).map(i => (i, i * 2)).toDF("k", "v")
       .repartition(1)
       .write.format("graft.sources.ManifestSink")
-      .option("path", src).option("history", "true").mode("append").save()
+      .option("path", src).mode("append").save()
     // clone v1 by NAME — not the head
     val r = spark.sql("CALL gps.system.clone(source_table => 'ns.clsrc', " +
       "target_table => 'ns.clfork', version => 1)").head
@@ -442,7 +442,7 @@ class ProcedureSpec extends graft.SparkSpec {
     (1000L until 1100L).map(i => (i, i)).toDF("k", "v")
       .repartition(1)
       .write.format("graft.sources.ManifestSink")
-      .option("path", s"$wh/ns/clfork").option("history", "true")
+      .option("path", s"$wh/ns/clfork")
       .mode("append").save()
     assert(spark.sql("SELECT count(*) FROM gps.ns.clfork").head.getLong(0)
       === 400L)

@@ -29,16 +29,16 @@ class PublishRebaseSpec extends AnyFunSuite {
 
   test("a racer landing between base read and claim is rebased over, not dropped") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       _ => Seq(pm("a")), strictBase = None) // v1 = {a}
     var raced = false
-    val v = ManifestSink.publishRebase(conf, dir, schema, history = true,
+    val v = ManifestSink.publishRebase(conf, dir, schema,
       head => {
         if (!raced) {
           raced = true
           // the racer: commits {a, b} AFTER our head read — our claim
           // of its slot must fail and the retry must see part b
-          ManifestSink.publishRebase(conf, dir, schema, history = true,
+          ManifestSink.publishRebase(conf, dir, schema,
             h => h :+ pm("b"), strictBase = None) // v2 = {a, b}
         }
         head :+ pm("c")
@@ -52,12 +52,12 @@ class PublishRebaseSpec extends AnyFunSuite {
 
   test("strictBase fails loudly when the head advances mid-operation") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       _ => Seq(pm("a")), strictBase = None) // v1
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       _ => Seq(pm("b")), strictBase = None) // v2: head moved past base=1
     val ex = intercept[java.util.ConcurrentModificationException] {
-      ManifestSink.publishRebase(conf, dir, schema, history = true,
+      ManifestSink.publishRebase(conf, dir, schema,
         _ => Seq(pm("stale")), strictBase = Some(1))
     }
     assert(ex.getMessage.contains("advanced from snapshot 1 to 2"))
@@ -67,15 +67,15 @@ class PublishRebaseSpec extends AnyFunSuite {
   test("strictForkBase: a branch's FIRST commit fails loudly when MAIN " +
     "advanced past the fork base it planned against") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       _ => Seq(pm("a")), strictBase = None) // main v1
     // the committer planned against main v1 (e.g. derived an identity
     // id mark from it); main then advances to v2 — the empty branch
     // line never moves, so strictBase = Some(0) alone cannot see it
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       h => h :+ pm("b"), strictBase = None) // main v2
     val ex = intercept[java.util.ConcurrentModificationException] {
-      ManifestSink.publishRebase(conf, dir, schema, history = true,
+      ManifestSink.publishRebase(conf, dir, schema,
         h => h :+ pm("staged"), strictBase = Some(0),
         branch = Some("wap"), strictForkBase = Some(1))
     }
@@ -83,7 +83,7 @@ class PublishRebaseSpec extends AnyFunSuite {
     assert(ManifestSink.listBranchVersions(conf, dir, "wap").isEmpty,
       "failed branch commit must publish nothing")
     // re-planned against the CURRENT fork base, the same commit lands
-    val v = ManifestSink.publishRebase(conf, dir, schema, history = true,
+    val v = ManifestSink.publishRebase(conf, dir, schema,
       h => h :+ pm("staged"), strictBase = Some(0),
       branch = Some("wap"), strictForkBase = Some(2))
     assert(v === 1)
@@ -93,16 +93,16 @@ class PublishRebaseSpec extends AnyFunSuite {
 
   test("footprint: a disjoint interleaved commit composes, not conflicts") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       _ => Seq(pm("a"), pm("b")), strictBase = None) // v1 = {a, b}
     // an operation planned at base=1 that replaces part a; before it
     // commits, an interleaved APPEND lands v2 = {a, b, c}
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       h => h :+ pm("c"), strictBase = None)
     // strictBase alone would abort; the footprint proves part a is
     // bit-identical in the advanced head, so the head-aware rebase
     // re-applies and the interleaved part c survives
-    val v = ManifestSink.publishRebase(conf, dir, schema, history = true,
+    val v = ManifestSink.publishRebase(conf, dir, schema,
       h => h.filterNot(_.path == "a") :+ pm("a2"),
       strictBase = Some(1), footprint = Some(Set("a")))
     assert(v === 3)
@@ -112,14 +112,14 @@ class PublishRebaseSpec extends AnyFunSuite {
 
   test("footprint: an interleaved commit touching a footprint part conflicts") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       _ => Seq(pm("a"), pm("b")), strictBase = None) // v1
     // interleaved commit re-vectors part a (a MOR delete's shape)
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       h => h.map(p => if (p.path == "a") p.copy(dvHex = "ff") else p),
       strictBase = None) // v2
     val ex = intercept[java.util.ConcurrentModificationException] {
-      ManifestSink.publishRebase(conf, dir, schema, history = true,
+      ManifestSink.publishRebase(conf, dir, schema,
         h => h.filterNot(_.path == "a") :+ pm("a2"),
         strictBase = Some(1), footprint = Some(Set("a")))
     }
@@ -130,12 +130,12 @@ class PublishRebaseSpec extends AnyFunSuite {
 
   test("footprint: a dropped footprint part conflicts") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       _ => Seq(pm("a"), pm("b")), strictBase = None) // v1
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       h => h.filterNot(_.path == "a"), strictBase = None) // v2 drops a
     intercept[java.util.ConcurrentModificationException] {
-      ManifestSink.publishRebase(conf, dir, schema, history = true,
+      ManifestSink.publishRebase(conf, dir, schema,
         h => h.filterNot(_.path == "a") :+ pm("a2"),
         strictBase = Some(1), footprint = Some(Set("a")))
     }
@@ -144,14 +144,14 @@ class PublishRebaseSpec extends AnyFunSuite {
 
   test("branch commits fork from main, stay invisible, and fast-forward") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       _ => Seq(pm("a")), strictBase = None) // main v1 = {a}
     // first branch commit forks from the main head
-    val b1 = ManifestSink.publishRebase(conf, dir, schema, history = true,
+    val b1 = ManifestSink.publishRebase(conf, dir, schema,
       h => h :+ pm("staged1"), strictBase = None, branch = Some("audit"))
     assert(b1 === 1, "branch versions number independently")
     // second branch commit chains from the BRANCH head
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       h => h :+ pm("staged2"), strictBase = None, branch = Some("audit"))
     assert(ManifestSink.readBranchMeta(conf, dir, "audit")
       .map(_.path).toSet === Set("a", "staged1", "staged2"))
@@ -171,18 +171,18 @@ class PublishRebaseSpec extends AnyFunSuite {
   test("branch isolation: conflict detection pins the branch's own " +
     "line; main and branch lines never cross-conflict") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       _ => Seq(pm("a"), pm("b")), strictBase = None) // main v1 = {a, b}
     // a branch rewrite pinned at branch base 0 (unborn line)
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       h => h.filterNot(_.path == "a") :+ pm("a2"),
       strictBase = Some(0), footprint = Some(Set("a")),
       branch = Some("audit")) // audit v1 = {a2, b}
     // MAIN advancing does not conflict a BRANCH rewrite pinned at
     // the branch head — the lines are independent
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       h => h :+ pm("m2"), strictBase = None) // main v2 = {a, b, m2}
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       h => h.filterNot(_.path == "b") :+ pm("b2"),
       strictBase = Some(1), footprint = Some(Set("b")),
       branch = Some("audit")) // audit v2 = {a2, b2}
@@ -193,14 +193,14 @@ class PublishRebaseSpec extends AnyFunSuite {
     // a STALE branch rewrite whose footprint part was replaced on the
     // branch line (b -> b2 in audit v2) conflicts loudly
     intercept[java.util.ConcurrentModificationException] {
-      ManifestSink.publishRebase(conf, dir, schema, history = true,
+      ManifestSink.publishRebase(conf, dir, schema,
         h => h.filterNot(_.path == "b") :+ pm("b3"),
         strictBase = Some(1), footprint = Some(Set("b")),
         branch = Some("audit"))
     }
     // ...but a stale-based rewrite over a part that survived the
     // advanced branch head BIT-IDENTICAL composes
-    val v = ManifestSink.publishRebase(conf, dir, schema, history = true,
+    val v = ManifestSink.publishRebase(conf, dir, schema,
       h => h.filterNot(_.path == "a2") :+ pm("a3"),
       strictBase = Some(1), footprint = Some(Set("a2")),
       branch = Some("audit"))
@@ -211,7 +211,7 @@ class PublishRebaseSpec extends AnyFunSuite {
 
   test("an un-forked branch reads as the main head; empty branch cannot publish") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema, history = true,
+    ManifestSink.publishRebase(conf, dir, schema,
       _ => Seq(pm("a")), strictBase = None)
     assert(ManifestSink.readBranchMeta(conf, dir, "audit")
       .map(_.path) === Seq("a"), "no branch commits yet -> main head")

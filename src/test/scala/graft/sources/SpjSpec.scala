@@ -55,7 +55,7 @@ class SpjSpec extends graft.SparkSpec {
     val t = s"$wh/ns/$name"
     df.repartition(n, GraftBucket.bucketId(col("k"), n))
       .write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true")
+      .option("path", t)
       .option("buckets", n.toString)
       .mode("overwrite").save()
     t
@@ -130,7 +130,7 @@ class SpjSpec extends graft.SparkSpec {
     (800L until 900L).map(i => (i, i * 7)).toDF("k", "v")
       .coalesce(1)
       .write.format("graft.sources.ManifestSink")
-      .option("path", t).option("history", "true")
+      .option("path", t)
       .mode("append").save()
     val agg = spark.sql(
       "SELECT k, sum(v) AS s FROM gsp.ns.mixed GROUP BY k")

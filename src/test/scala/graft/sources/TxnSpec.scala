@@ -47,7 +47,7 @@ class TxnSpec extends SparkSpec {
     val df = if (str) (1000L until 1000L + n).map(i => (i, s"s$i")).toDF("k", "s")
       else (1000L until 1000L + n).map(i => (i, i * 2)).toDF("k", "v")
     df.coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", dir).option("history", "true")
+      .option("path", dir)
       .option("branch", branch).mode("append").save()
   }
 
@@ -108,7 +108,7 @@ class TxnSpec extends SparkSpec {
     // foreign main commit on tb between stage and commit
     (5000L until 5003L).map(i => (i, s"x$i")).toDF("k", "s")
       .coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", tb).option("history", "true")
+      .option("path", tb)
       .mode("append").save()
     intercept[java.util.ConcurrentModificationException] {
       ManifestTxn.commit(conf, wh, "e3", Seq(ta, tb))
@@ -171,7 +171,7 @@ class TxnSpec extends SparkSpec {
     // foreign commit lands on tb INSIDE the marker→roll-forward window
     (6000L until 6002L).map(i => (i, s"y$i")).toDF("k", "s")
       .coalesce(1).write.format("graft.sources.ManifestSink")
-      .option("path", tb).option("history", "true")
+      .option("path", tb)
       .mode("append").save()
     val ex = intercept[java.util.ConcurrentModificationException] {
       ManifestTxn.rollForward(conf, wh, "e5")
