@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,16 +11,7 @@ object Verify {
       case _ => (graft.util.Env.required("SPARK_GRAFT_SF_DIR"),
         graft.util.Env.required("SPARK_GRAFT_OUT_DIR"))
     }
-    val cpus = graft.util.Env.orElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     new java.io.File(outDir).mkdirs()
     // Dev-only subset: SPARK_GRAFT_ONLY=q_a,q_b re-verifies just the
     // named queries (the driver never sets it, so its gate always runs

@@ -388,10 +388,7 @@ GROUP BY 1 ORDER BY 1""")),
     // deterministic, so only the rollup is the gated output.)
     QueryDef("q_sink_manifest",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val target =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-sink/$key"
+        val target = QueryDef.freshTable(spark, dir, "sink")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .write.format("graft.sources.ManifestSink")
@@ -421,10 +418,7 @@ FROM events""")),
     // bound.
     QueryDef("q_manifest_roundtrip",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#rt").getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val target =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-sink-rt/$key"
+        val target = QueryDef.freshTable(spark, dir, "sink-rt")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
@@ -457,10 +451,7 @@ GROUP BY event_type ORDER BY event_type""")),
     // the stats path must agree with the data path exactly.
     QueryDef("q_manifest_stats_agg",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#agg").getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val target =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-sink-agg/$key"
+        val target = QueryDef.freshTable(spark, dir, "sink-agg")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .write.format("graft.sources.ManifestSink")
@@ -486,10 +477,7 @@ FROM events""")),
     // scanning a table and scanning a category.
     QueryDef("q_manifest_strprune",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#strp").getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val target =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-sink-strp/$key"
+        val target = QueryDef.freshTable(spark, dir, "sink-strp")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_type"))
@@ -521,11 +509,8 @@ FROM events WHERE event_type = 'purchase'""")),
     // table is strictly better for the source's range pruning.
     QueryDef("q_sink_compact",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#cmp").getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val small = s"$wh/graft-sink-cmp/$key/small"
-        val packed = s"$wh/graft-sink-cmp/$key/packed"
+        val t = QueryDef.freshTable(spark, dir, "sink-cmp")
+        val (small, packed) = (s"$t/small", s"$t/packed")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartition(32)
@@ -660,10 +645,8 @@ FROM lineitem WHERE l_quantity > 10""")),
     // the v1/v2 derivations analytically over the raw table.
     QueryDef("q_cdc_diff",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#cdc").getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val (t1, t2) = (s"$wh/graft-cdc/$key/v1", s"$wh/graft-cdc/$key/v2")
+        val t = QueryDef.freshTable(spark, dir, "cdc")
+        val (t1, t2) = (s"$t/v1", s"$t/v2")
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         base.filter(col("event_id") % 7 =!= 0)

@@ -1512,14 +1512,7 @@ WHERE rn <= 5 ORDER BY probe_id, d2, vec_id""")),
     // snapshot versioning across two appends.
     QueryDef("q_ann_index_serve",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#annidx").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val t =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-ann-idx/$key"
-        val p = new org.apache.hadoop.fs.Path(t)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true) // idempotent reruns
+        val t = QueryDef.freshTable(spark, dir, "annidx")
         val emb = Tables.embeddings(spark, dir)
         // the quantizer is re-scanned by BOTH index builds and the
         // probe shortlist (3 consumers) — materialize the 10-row
@@ -1678,14 +1671,7 @@ WHERE rn <= 5 ORDER BY probe_id, hamming, vec_id""")),
     // roundtrip losslessly (longs).
     QueryDef("q_minhash_incremental",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#mhidx").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val t =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-mh-idx/$key"
-        val p = new org.apache.hadoop.fs.Path(t)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true) // idempotent reruns
+        val t = QueryDef.freshTable(spark, dir, "mhidx")
         // signatures once for the whole corpus shape; the index/delta
         // split below decides who pays banding + the join
         val minCols = minhashFamilies(MinhashK).zipWithIndex.map {

@@ -151,14 +151,7 @@ FROM documents GROUP BY md5(text) ORDER BY keeper_id""")),
     // construction, so every leg is non-trivially exercised.
     QueryDef("q_dedup_incremental",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#dedupinc").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val t =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-dedup-idx/$key"
-        val p = new org.apache.hadoop.fs.Path(t)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true) // idempotent reruns
+        val t = QueryDef.freshTable(spark, dir, "dedupinc")
         val docs = Tables.documents(spark, dir)
         val fp = graft.functions.OracleHash.h64(col("text"))
         // committed index of the historical corpus

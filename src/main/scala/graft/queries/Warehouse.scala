@@ -25,19 +25,7 @@ import graft.sources.ManifestMaintenance
   * (KBs of metadata at any table size).
   */
 object Warehouse {
-
-  /** Per-(query, sf-dir) table path under the session warehouse dir,
-    * deleted before each run so version numbering is idempotent across
-    * reruns (history commits would otherwise accumulate). */
-  private def freshTable(spark: SparkSession, dir: String, tag: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir#$tag".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-wh/$tag/$key"
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    path
-  }
+  import QueryDef.freshTable
 
   private def writeHistory(df: DataFrame, path: String, mode: String,
       parts: Int = 4): Unit =
@@ -2004,7 +1992,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
 ORDER BY snapshot, event_type""")),
 
     // --- BOUNDED STREAMING BACKFILL (admission control,
-    // sources/ManifestSource VersionAdmission): a fresh consumer of a
+    // sources.ManifestMicroBatchStream): a fresh consumer of a
     // 100 TB table must not plan its whole backlog as ONE micro-batch
     // — `option("maxPartsPerTrigger", n)` budgets each trigger to the
     // snapshot versions whose newly-added parts fit (version

@@ -251,16 +251,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         if (ident.namespace().nonEmpty) {
           val parent = (warehouse +: ident.namespace()).mkString("/")
           if (ManifestSink.readSchema(conf, parent).isDefined)
-            ident.name() match {
-              case "history"  => return new ManifestHistoryTable(parent)
-              case "files"    => return new ManifestFilesTable(parent)
-              case "partitions" => return new ManifestPartitionsTable(parent)
-              case "branches" => return new ManifestBranchesTable(parent)
-              case "tags"     => return new ManifestTagsTable(parent)
-              case "refs"     => return new ManifestRefsTable(parent)
-              case "columns"  => return new ManifestColumnsTable(parent)
-              case _          => ()
-            }
+            MetaTables.forName(parent, ident.name()).foreach(t => return t)
         }
         throw new NoSuchTableException(ident)
     }
@@ -1235,50 +1226,6 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   }
 }
 
-/** The snapshot log as a TABLE (`SELECT * FROM cat.ns.t.history` —
-  * Delta's DESCRIBE HISTORY / Iceberg's `.history` analog): one row
-  * per committed version with its part count, VISIBLE row count
-  * (deletion vectors subtracted), vectored-part count, data bytes,
-  * and commit time. Entirely manifest-derived — the scan opens zero
-  * data files at any table size; expired versions simply stop
-  * appearing (their manifests are gone). `commit_time_ms` is the
-  * version file's mtime — the same clock TIMESTAMP AS OF resolves
-  * against. */
-private[sources] class ManifestHistoryTable(path: String)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.{Scan, ScanBuilder => SB}
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  private val historySchema = StructType.fromDDL(
-    "version INT, operation STRING, n_parts BIGINT, n_rows BIGINT, " +
-      "n_vectored BIGINT, total_bytes BIGINT, commit_time_ms BIGINT")
-
-  override def name(): String = s"manifest($path).history"
-  override def schema(): StructType = historySchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): SB =
-    new SB {
-      override def build(): Scan = {
-        val conf = ManifestSink.driverConf()
-        val dir = new Path(path)
-        val fs = dir.getFileSystem(conf)
-        val rows = ManifestSink.listVersions(conf, path).map { v =>
-          val parts = ManifestSink.readManifestMeta(conf, path, Some(v))
-          new GenericInternalRow(Array[Any](v,
-            UTF8String.fromString(ManifestSink.readOp(conf, path, Some(v))),
-            parts.size.toLong, parts.map(_.visibleRows).sum,
-            parts.count(_.hasDv).toLong, parts.map(_.bytes).sum,
-            fs.getFileStatus(new Path(dir, ManifestSink.versionFile(v)))
-              .getModificationTime)): InternalRow
-        }.toArray
-        new LocalRowsScan(historySchema, rows)
-      }
-    }
-}
-
 /** SQL-callable twin of [[graft.functions.OracleHash.h64]]: top 60
   * bits of md5 of the UTF-8 string rendering, as non-negative BIGINT —
   * bit-identical to both the Column helper and the DuckDB oracle
@@ -1932,90 +1879,23 @@ private[sources] class GraftTimeSplitCatalogTable(
     java.util.Collections.emptyMap[String, String]()
 }
 
-/** Per-part manifest metadata as a TABLE (`SELECT ... FROM
-  * cat.ns.t.files` — the Iceberg `.files` analog): one row per data
-  * part of the head snapshot with its manifest stats — physical and
-  * mask-aware visible row counts, key range, deletion-vector state,
-  * bytes. What an operator actually asks a table format ("which
-  * parts carry vectors?", "how skewed is the layout?") answered with
-  * ZERO data files opened: the rows come straight off the head
-  * manifest through a [[LocalRowsScan]]. */
-private[sources] class ManifestFilesTable(path: String)
+/** A METADATA TABLE (`SELECT * FROM cat.ns.t.<suffix>`, the Iceberg
+  * `db.table.history` shape): rows built on the driver from version
+  * manifests alone (KBs) and served through a [[LocalRowsScan]] — zero
+  * data files opened at any table size. */
+private[sources] class ManifestMetaTable(path: String, suffix: String,
+    ddl: String, rows: MetaTables.Rows)
     extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.{Scan, ScanBuilder => SB}
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  // key_sum: the part's exact key-column sum (NULL = untracked legacy
-  // part or a per-part Long overflow) — the stat behind metadata-only
-  // SUM pushdown, surfaced for layout audits like the rest. New stat
-  // columns APPEND at the end of this schema: ordinal consumers of
-  // the audit view must never see earlier columns shift (the view is
-  // also name-addressed, but position stability costs nothing)
-  // split_value: on an identity-partitioned table, the single value
-  // this part holds on the split column (NULL on non-split tables or
-  // a legacy/straddling part) — the Iceberg `.files.partition` analog,
-  // the audit answer to "which value does each file own?"
-  // is_sorted appended at the schema END (the only additive-safe
-  // slot): the part's key-sortedness flag — the WRITE ORDERED BY /
-  // compaction layout audit (q_write_ordered folds it)
-  private val filesSchema = StructType.fromDDL(
-    "part INT, file STRING, n_rows BIGINT, visible_rows BIGINT, " +
-      "key_min BIGINT, key_max BIGINT, " +
-      "has_dv BOOLEAN, dv_count BIGINT, " +
-      "bytes BIGINT, bucket INT, col_stats STRING, key_sum BIGINT, " +
-      "split_value STRING, eq_clauses INT, is_sorted BOOLEAN")
-
-  override def name(): String = s"manifest($path).files"
-  override def schema(): StructType = filesSchema
+  private val metaSchema = StructType.fromDDL(ddl)
+  override def name(): String = s"manifest($path).$suffix"
+  override def schema(): StructType = metaSchema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): SB =
-    new SB {
-      override def build(): Scan = {
-        // split column of the identity layout, if this table has one:
-        // a part's split_value is its PROVABLY single value (stats
-        // min == max, zero nulls) — anything weaker reads as NULL
-        val conf = ManifestSink.driverConf()
-        val splitCol = ManifestSink.readTableSpec(conf, path).layout
-          .collect { case (0, c) => c }
-        val (parts, snap) = ManifestSink.readSnapshot(conf, path)
-        val key = MetaTables.keyOf(snap.map(_._1))
-        // the key and first string have their own view columns
-        val ownCols = snap.fold(Set.empty[String])(s =>
-          ManifestSink.keyAndFirstStr(s._1))
-        val rows = parts.zipWithIndex.map { case (m, i) =>
-          val sv = splitCol
-            .flatMap(MetaTables.singleValue(m, _))
-            .map(UTF8String.fromString).orNull
-          val k = key.flatMap(m.cstats.get)
-          // the other columns' stats, rendered name-sorted
-          // ("c:[min..max] …") so the view is deterministic
-          // visible_rows is NULL (unknown) while equality-delete
-          // clauses are pending — honesty over an over-estimate in
-          // an audit view
-          new GenericInternalRow(Array[Any](i,
-            UTF8String.fromString(new Path(m.path).getName), m.rows,
-            if (m.countsExact) m.visibleRows else null,
-            k.fold(Long.MaxValue)(_.lMin), k.fold(Long.MinValue)(_.lMax),
-            m.hasDv, m.dvCount,
-            m.bytes, m.bucket,
-            UTF8String.fromString(m.cstats.toSeq.sortBy(_._1)
-              .collect { case (c, st)
-                  if st.hasValues && !ownCols.contains(c) =>
-                s"$c:[${st.min}..${st.max}]" }
-              .mkString(" ")),
-            k.flatMap(_.sum).map(java.lang.Long.valueOf).orNull,
-            sv, m.eq.size,
-            m.sorted)): org.apache.spark.sql.catalyst.InternalRow
-        }.toArray
-        new LocalRowsScan(filesSchema, rows)
-      }
-    }
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    () => LocalRowsScan(metaSchema, rows(ManifestSink.driverConf(), path))
 }
 
-/** Shared metadata-table helpers. */
+/** The metadata tables by name suffix, plus their shared helpers. */
 private[sources] object MetaTables {
   /** The part's PROVABLY single value on column `c` (min == max, zero
     * nulls), or None. */
@@ -2025,158 +1905,171 @@ private[sources] object MetaTables {
   /** The key: the first BIGINT column. */
   def keyOf(schema: Option[StructType]): Option[String] =
     schema.flatMap(_.fields.find(_.dataType == LongType)).map(_.name)
-}
 
-/** Per-PARTITION rollup of the head snapshot as a TABLE (`SELECT ...
-  * FROM cat.ns.t.partitions` — the Iceberg `.partitions` analog): one
-  * row per layout value — a bucket id, an identity-split value, or
-  * the NULL/"none" row for unpartitioned-generation parts — with its
-  * part count, physical and VISIBLE row counts, bytes, key range and
-  * merge-on-read debt. Pure manifest metadata (one driver-side
-  * manifest read, no data file opened): the capacity-planning view —
-  * "which partition is skewed, which carries deletion debt, which
-  * does a query on value v touch" — costs O(parts) metadata at any
-  * table size. Under layout EVOLUTION the `spec` column separates
-  * generations (mixed bucket(4)/bucket(8)/none rows coexist until
-  * compaction migrates), so the migration's progress is itself
-  * queryable. */
-private[sources] class ManifestPartitionsTable(path: String)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.{Scan, ScanBuilder => SB}
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
+  /** The metadata table `suffix` of the table at `path`, if one exists
+    * by that name. */
+  def forName(path: String, suffix: String): Option[Table] =
+    defs.get(suffix).map { case (ddl, rows) =>
+      new ManifestMetaTable(path, suffix, ddl, rows) }
 
-  private val partitionsSchema = StructType.fromDDL(
-    "partition STRING, spec STRING, parts INT, n_rows BIGINT, " +
-      "visible_rows BIGINT, bytes BIGINT, key_min BIGINT, " +
-      "key_max BIGINT, dv_parts INT, eq_parts INT")
+  /** (conf, table dir) -> rows of plain cells (see [[LocalRowsScan]]). */
+  type Rows = (org.apache.hadoop.conf.Configuration, String) => Seq[Seq[Any]]
 
-  override def name(): String = s"manifest($path).partitions"
-  override def schema(): StructType = partitionsSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
+  private def table(ddl: String)(rows: Rows): (String, Rows) = (ddl, rows)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): SB =
-    new SB {
-      override def build(): Scan = {
-        val conf = ManifestSink.driverConf()
-        val splitCol = ManifestSink.readTableSpec(conf, path).layout
-          .collect { case (0, c) => c }
-        val (metas, snap) = ManifestSink.readSnapshot(conf, path)
-        val key = MetaTables.keyOf(snap.map(_._1))
-        def keyStat(m: PartMeta) = key.flatMap(m.cstats.get)
-        // a part's partition identity: its recorded bucket, or its
-        // PROVABLY single split value (stats min == max, zero nulls
-        // — the same soundness rule `.files.split_value` uses), or
-        // the unpartitioned-generation row
-        def ident(m: PartMeta): (String, String) =
-          if (m.nbuckets > 0)
-            (s"bucket=${m.bucket}", s"bucket(${m.nbuckets})")
-          else splitCol.flatMap(c =>
-              MetaTables.singleValue(m, c)
-                .map(v => (s"$c=$v", s"identity($c)")))
-            .getOrElse((null, "none"))
-        val rows = metas.groupBy(ident).toSeq
-          .sortBy { case ((p, s), _) => (s, Option(p).getOrElse("")) }
-          .map { case ((part, spec), ms) =>
-            // visible_rows goes NULL (unknown) as soon as one part of
-            // the partition carries a pending equality-delete clause
-            new GenericInternalRow(Array[Any](
-              Option(part).map(UTF8String.fromString).orNull,
-              UTF8String.fromString(spec), ms.size,
-              ms.map(_.rows).sum,
-              if (ms.forall(_.countsExact)) ms.map(_.visibleRows).sum
-              else null,
-              ms.map(_.bytes).sum,
-              ms.map(keyStat(_).fold(Long.MaxValue)(_.lMin)).min,
-              ms.map(keyStat(_).fold(Long.MinValue)(_.lMax)).max,
-              ms.count(_.hasDv),
-              ms.count(_.eq.nonEmpty))): org.apache.spark.sql.catalyst.InternalRow
-          }.toArray
-        new LocalRowsScan(partitionsSchema, rows)
+  private val defs: Map[String, (String, Rows)] = Map(
+    // the snapshot log (Delta's DESCRIBE HISTORY): one row per
+    // committed version with its part count, VISIBLE row count
+    // (deletion vectors subtracted), vectored-part count, data bytes
+    // and commit time. Expired versions stop appearing (their
+    // manifests are gone). `commit_time_ms` is the version file's
+    // mtime — the clock TIMESTAMP AS OF resolves against.
+    "history" -> table("version INT, operation STRING, n_parts BIGINT, " +
+      "n_rows BIGINT, n_vectored BIGINT, total_bytes BIGINT, " +
+      "commit_time_ms BIGINT") { (conf, path) =>
+      val dir = new Path(path)
+      val fs = dir.getFileSystem(conf)
+      ManifestSink.listVersions(conf, path).map { v =>
+        val parts = ManifestSink.readManifestMeta(conf, path, Some(v))
+        Seq(v, ManifestSink.readOp(conf, path, Some(v)),
+          parts.size.toLong, parts.map(_.visibleRows).sum,
+          parts.count(_.hasDv).toLong, parts.map(_.bytes).sum,
+          fs.getFileStatus(new Path(dir, ManifestSink.versionFile(v)))
+            .getModificationTime)
       }
-    }
-}
-
-/** Branch heads as a TABLE (`SELECT ... FROM cat.ns.t.branches`):
-  * one row per live branch with its head version and the staged
-  * snapshot's part/visible-row counts — the audit-side "what is
-  * waiting to publish" view of write-audit-publish, again pure
-  * manifest metadata through a [[LocalRowsScan]]. */
-private[sources] class ManifestBranchesTable(path: String)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.{Scan, ScanBuilder => SB}
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  private val branchesSchema = StructType.fromDDL(
-    "branch STRING, head_version INT, n_parts BIGINT, n_rows BIGINT")
-
-  override def name(): String = s"manifest($path).branches"
-  override def schema(): StructType = branchesSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): SB =
-    new SB {
-      override def build(): Scan = {
-        val conf = ManifestSink.driverConf()
-        val rows = ManifestSink.listBranches(conf, path).sorted.map { b =>
-          val head = ManifestSink.listBranchVersions(conf, path, b).last
-          val parts = ManifestSink.readBranchMeta(conf, path, b, Some(head))
-          new GenericInternalRow(Array[Any](UTF8String.fromString(b),
-            head, parts.size.toLong, parts.map(_.visibleRows).sum)):
-            org.apache.spark.sql.catalyst.InternalRow
-        }.toArray
-        new LocalRowsScan(branchesSchema, rows)
+    },
+    // per data part of the head snapshot (Iceberg's `.files`): physical
+    // and mask-aware visible row counts, key range, deletion-vector
+    // state, bytes — "which parts carry vectors, how skewed is the
+    // layout". New stat columns APPEND at the schema end, so ordinal
+    // consumers never see earlier columns shift:
+    //  - key_sum: the key's exact sum (NULL = untracked or a per-part
+    //    Long overflow), the stat behind metadata-only SUM pushdown;
+    //  - split_value: on an identity-partitioned table, the single
+    //    value the part PROVABLY holds on the split column (stats
+    //    min == max, zero nulls), else NULL — Iceberg's
+    //    `.files.partition`;
+    //  - is_sorted: the writer's key-sortedness flag (the WRITE
+    //    ORDERED BY / compaction layout audit q_write_ordered folds).
+    // visible_rows is NULL (unknown) while equality-delete clauses are
+    // pending — honesty over an over-estimate in an audit view.
+    "files" -> table("part INT, file STRING, n_rows BIGINT, " +
+      "visible_rows BIGINT, key_min BIGINT, key_max BIGINT, " +
+      "has_dv BOOLEAN, dv_count BIGINT, bytes BIGINT, bucket INT, " +
+      "col_stats STRING, key_sum BIGINT, split_value STRING, " +
+      "eq_clauses INT, is_sorted BOOLEAN") { (conf, path) =>
+      val splitCol = ManifestSink.readTableSpec(conf, path).layout
+        .collect { case (0, c) => c }
+      val (parts, snap) = ManifestSink.readSnapshot(conf, path)
+      val key = keyOf(snap.map(_._1))
+      // the key and first string have their own view columns
+      val ownCols = snap.fold(Set.empty[String])(s =>
+        ManifestSink.keyAndFirstStr(s._1))
+      parts.zipWithIndex.map { case (m, i) =>
+        val k = key.flatMap(m.cstats.get)
+        Seq(i, new Path(m.path).getName, m.rows,
+          if (m.countsExact) m.visibleRows else null,
+          k.fold(Long.MaxValue)(_.lMin), k.fold(Long.MinValue)(_.lMax),
+          m.hasDv, m.dvCount, m.bytes, m.bucket,
+          // the other columns' stats, name-sorted ("c:[min..max] …")
+          // so the view is deterministic
+          m.cstats.toSeq.sortBy(_._1)
+            .collect { case (c, st) if st.hasValues && !ownCols.contains(c) =>
+              s"$c:[${st.min}..${st.max}]" }
+            .mkString(" "),
+          k.flatMap(_.sum).map(java.lang.Long.valueOf).orNull,
+          splitCol.flatMap(singleValue(m, _)).orNull, m.eq.size, m.sorted)
       }
-    }
-}
-
-/** ALL NAMED REFS in one relation (`SELECT * FROM cat.ns.t.refs` —
-  * Iceberg's `.refs`): branches (mutable heads, each the staged line
-  * of a write-audit-publish) and tags (immutable expiry-pinned
-  * snapshots) side by side — the one audit view answering "what
-  * names does this table resolve, and to which version?". `main` is
-  * listed explicitly with the head version so the view is total.
-  * Pure driver metadata: a directory listing plus KB-sized version
-  * headers at any table size. */
-private[sources] class ManifestRefsTable(path: String)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.{Scan, ScanBuilder => SB}
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  private val refsSchema = StructType.fromDDL(
-    "name STRING, type STRING, version INT")
-
-  override def name(): String = s"manifest($path).refs"
-  override def schema(): StructType = refsSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): SB =
-    new SB {
-      override def build(): Scan = {
-        val conf = ManifestSink.driverConf()
-        val main = ManifestSink.listVersions(conf, path).lastOption
-          .map(v => ("main", "branch", v)).toSeq
-        val branches = ManifestSink.listBranches(conf, path).map(b =>
-          (b, "branch",
-            ManifestSink.listBranchVersions(conf, path, b).last))
-        val tags = ManifestSink.listTags(conf, path).map {
-          case (t, v) => (t, "tag", v)
+    },
+    // per-PARTITION rollup of the head (Iceberg's `.partitions`): one
+    // row per layout value — a bucket id, a PROVABLY single split
+    // value (the `.files.split_value` rule), or the NULL/"none" row
+    // of unpartitioned-generation parts — with part count, physical
+    // and VISIBLE rows, bytes, key range and merge-on-read debt.
+    // Under layout EVOLUTION the `spec` column separates generations,
+    // so a migration's progress is itself queryable. visible_rows
+    // goes NULL as soon as one part carries a pending eq clause.
+    "partitions" -> table("partition STRING, spec STRING, parts INT, " +
+      "n_rows BIGINT, visible_rows BIGINT, bytes BIGINT, key_min BIGINT, " +
+      "key_max BIGINT, dv_parts INT, eq_parts INT") { (conf, path) =>
+      val splitCol = ManifestSink.readTableSpec(conf, path).layout
+        .collect { case (0, c) => c }
+      val (metas, snap) = ManifestSink.readSnapshot(conf, path)
+      val key = keyOf(snap.map(_._1))
+      def keyStat(m: PartMeta) = key.flatMap(m.cstats.get)
+      def ident(m: PartMeta): (String, String) =
+        if (m.nbuckets > 0)
+          (s"bucket=${m.bucket}", s"bucket(${m.nbuckets})")
+        else splitCol.flatMap(c => singleValue(m, c)
+            .map(v => (s"$c=$v", s"identity($c)")))
+          .getOrElse((null, "none"))
+      metas.groupBy(ident).toSeq
+        .sortBy { case ((p, s), _) => (s, Option(p).getOrElse("")) }
+        .map { case ((part, spec), ms) =>
+          Seq(part, spec, ms.size, ms.map(_.rows).sum,
+            if (ms.forall(_.countsExact)) ms.map(_.visibleRows).sum
+            else null,
+            ms.map(_.bytes).sum,
+            ms.map(keyStat(_).fold(Long.MaxValue)(_.lMin)).min,
+            ms.map(keyStat(_).fold(Long.MinValue)(_.lMax)).max,
+            ms.count(_.hasDv), ms.count(_.eq.nonEmpty))
         }
-        val rows = (main ++ branches ++ tags)
-          .sortBy { case (n, t, _) => (t, n) }
-          .map { case (n, t, v) =>
-            new GenericInternalRow(Array[Any](UTF8String.fromString(n),
-              UTF8String.fromString(t), v)):
-              org.apache.spark.sql.catalyst.InternalRow
-          }.toArray
-        new LocalRowsScan(refsSchema, rows)
+    },
+    // one row per live branch with its head version and the staged
+    // snapshot's part/visible-row counts — "what is waiting to
+    // publish" in write-audit-publish
+    "branches" -> table("branch STRING, head_version INT, n_parts BIGINT, " +
+      "n_rows BIGINT") { (conf, path) =>
+      ManifestSink.listBranches(conf, path).sorted.map { b =>
+        val head = ManifestSink.listBranchVersions(conf, path, b).last
+        val parts = ManifestSink.readBranchMeta(conf, path, b, Some(head))
+        Seq(b, head, parts.size.toLong, parts.map(_.visibleRows).sum)
       }
-    }
+    },
+    // one row per tag (immutable named ref) with its pinned version and
+    // that snapshot's visible row count
+    "tags" -> table("name STRING, version INT, n_rows BIGINT") { (conf, path) =>
+      ManifestSink.listTags(conf, path).map { case (n, v) =>
+        Seq(n, v, ManifestSink.readManifestMeta(conf, path, Some(v))
+          .map(_.visibleRows).sum)
+      }
+    },
+    // ALL named refs (Iceberg's `.refs`): branches and tags side by
+    // side, with `main` listed explicitly at the head version so the
+    // view is total
+    "refs" -> table("name STRING, type STRING, version INT") { (conf, path) =>
+      val main = ManifestSink.listVersions(conf, path).lastOption
+        .map(v => ("main", "branch", v)).toSeq
+      val branches = ManifestSink.listBranches(conf, path).map(b =>
+        (b, "branch", ManifestSink.listBranchVersions(conf, path, b).last))
+      val tags = ManifestSink.listTags(conf, path).map {
+        case (t, v) => (t, "tag", v)
+      }
+      (main ++ branches ++ tags).sortBy { case (n, t, _) => (t, n) }
+        .map { case (n, t, v) => Seq(n, t, v) }
+    },
+    // the column-mapping ledger: one row per LIVE column (position,
+    // name, type, stable field id, stats role) plus one per RETIRED
+    // name (dropped or renamed-away — unreusable forever): "which
+    // physical column does this name bind to, which names are burned"
+    "columns" -> table("position INT, name STRING, type STRING, " +
+      "field_id INT, stats_role STRING, retired BOOLEAN") { (conf, path) =>
+      val (schema, cm) = ManifestSink.readSchemaAndColMap(conf, path)
+        .getOrElse(throw new IllegalStateException(
+          s"no committed schema at $path"))
+      val keyIdx = schema.fields.indexWhere(_.dataType == LongType)
+      val strIdx = schema.fields.indexWhere(_.dataType == StringType)
+      val live = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        val role =
+          if (i == keyIdx) "key"
+          else if (i == strIdx) "string"
+          else if (f.dataType == LongType || f.dataType == StringType)
+            "column" // tracked via ColStat when within the writer cap
+          else ""
+        Seq(i, f.name, f.dataType.simpleString, cm.ids(i), role, false)
+      }
+      live ++ cm.retired.sorted.map(n => Seq(null, n, null, null, "", true))
+    })
 }
 
 /** The catalog face of [[graft.functions.GraftBucket]] — what Spark's
@@ -2250,92 +2143,4 @@ private[sources] class GraftTimeOrdinalFunction(transform: String)
 private[sources] object GraftTimeOrdinalFunction {
   val Days = new GraftTimeOrdinalFunction(TimeSplit.Days)
   val Hours = new GraftTimeOrdinalFunction(TimeSplit.Hours)
-}
-
-/** The column-mapping ledger as a TABLE (`SELECT ... FROM
-  * cat.ns.t.columns`): one row per LIVE column (position, name, type,
-  * stable field id, whether it serves key or string stats) plus one
-  * per RETIRED name (dropped or renamed-away — unreusable forever).
-  * This is how an operator audits schema evolution: "which physical
-  * column does this name bind to, and which names are burned" —
-  * answered from the head manifest, zero data files. */
-private[sources] class ManifestColumnsTable(path: String)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.{Scan, ScanBuilder => SB}
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  private val columnsSchema = StructType.fromDDL(
-    "position INT, name STRING, type STRING, field_id INT, " +
-      "stats_role STRING, retired BOOLEAN")
-
-  override def name(): String = s"manifest($path).columns"
-  override def schema(): StructType = columnsSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): SB =
-    new SB {
-      override def build(): Scan = {
-        val conf = ManifestSink.driverConf()
-        val (schema, cm) = ManifestSink.readSchemaAndColMap(conf, path)
-          .getOrElse(throw new IllegalStateException(
-            s"no committed schema at $path"))
-        val keyIdx = schema.fields.indexWhere(_.dataType == LongType)
-        val strIdx = schema.fields.indexWhere(_.dataType == StringType)
-        val live = schema.fields.zipWithIndex.map { case (f, i) =>
-          val role =
-            if (i == keyIdx) "key"
-            else if (i == strIdx) "string"
-            else if (f.dataType == LongType || f.dataType == StringType)
-              "column" // tracked via ColStat when within the writer cap
-            else ""
-          new GenericInternalRow(Array[Any](i,
-            UTF8String.fromString(f.name),
-            UTF8String.fromString(f.dataType.simpleString),
-            cm.ids(i), UTF8String.fromString(role), false)):
-            org.apache.spark.sql.catalyst.InternalRow
-        }
-        val retired = cm.retired.sorted.map { n =>
-          new GenericInternalRow(Array[Any](null,
-            UTF8String.fromString(n), null, null,
-            UTF8String.fromString(""), true)):
-            org.apache.spark.sql.catalyst.InternalRow
-        }
-        new LocalRowsScan(columnsSchema, (live ++ retired).toArray)
-      }
-    }
-}
-
-/** Tags as a TABLE (`SELECT ... FROM cat.ns.t.tags`): one row per
-  * immutable named ref with its pinned version and that snapshot's
-  * visible row count — "what releases exist and what do they hold",
-  * answered from manifest metadata through a [[LocalRowsScan]]. */
-private[sources] class ManifestTagsTable(path: String)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.{Scan, ScanBuilder => SB}
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  private val tagsSchema = StructType.fromDDL(
-    "name STRING, version INT, n_rows BIGINT")
-
-  override def name(): String = s"manifest($path).tags"
-  override def schema(): StructType = tagsSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): SB =
-    new SB {
-      override def build(): Scan = {
-        val conf = ManifestSink.driverConf()
-        val rows = ManifestSink.listTags(conf, path).map { case (n, v) =>
-          val parts = ManifestSink.readManifestMeta(conf, path, Some(v))
-          new GenericInternalRow(Array[Any](UTF8String.fromString(n), v,
-            parts.map(_.visibleRows).sum)):
-            org.apache.spark.sql.catalyst.InternalRow
-        }.toArray
-        new LocalRowsScan(tagsSchema, rows)
-      }
-    }
 }

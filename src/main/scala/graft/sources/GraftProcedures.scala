@@ -101,24 +101,30 @@ private[sources] abstract class GraftProcedure(
     dir
   }
 
-  protected def result(values: Any*): JIterator[Scan] = {
-    val row = InternalRow.fromSeq(values.map {
-      case s: String => UTF8String.fromString(s)
-      case v => v
-    })
+  protected def result(values: Any*): JIterator[Scan] =
     Collections.singletonList[Scan](
-      new LocalRowsScan(outputSchema, Array(row))).iterator()
-  }
+      LocalRowsScan(outputSchema, Seq(values))).iterator()
 }
 
 /** Driver-side metadata rows; Spark plans a LocalTableScan over them.
-  * Shared by procedure results and the `.files`/`.branches` metadata
-  * tables — in both cases the content IS driver metadata (KBs), so a
-  * distributed scan would only add scheduling overhead. */
+  * Shared by procedure results and the metadata tables
+  * ([[ManifestMetaTable]]) — in both cases the content IS driver
+  * metadata (KBs), so a distributed scan would only add scheduling
+  * overhead. */
 private[sources] final class LocalRowsScan(
     schema: StructType, rowData: Array[InternalRow]) extends LocalScan {
   override def rows(): Array[InternalRow] = rowData
   override def readSchema(): StructType = schema
+}
+
+private[sources] object LocalRowsScan {
+  /** Rows of plain cells: a String cell becomes UTF8String, every
+    * other cell is already its internal value. */
+  def apply(schema: StructType, rows: Seq[Seq[Any]]): LocalRowsScan =
+    new LocalRowsScan(schema, rows.map(r => InternalRow.fromSeq(r.map {
+      case s: String => UTF8String.fromString(s)
+      case v => v
+    })).toArray)
 }
 
 /** Bin-packing OPTIMIZE: rewrite the head's data parts into

@@ -69,8 +69,8 @@ object ManifestSource {
       case _ => Map.empty
     }
 
-  /** DEPTH-1 STRUCT decode plans, shared by the batch and CDF
-    * readers: for each required struct field, resolve every REQUIRED
+  /** DEPTH-1 STRUCT decode plans for [[ManifestReaderFactory]]: for
+    * each required struct field, resolve every REQUIRED
     * sub-field (possibly nested-pruned, so by NAME against the full
     * struct) -> stable nested id (identity when the struct never
     * evolved) -> the part's recorded sub-layout (identity when
@@ -529,16 +529,17 @@ private[sources] class ManifestScanBuilder(
     else None
 
   override def build(): Scan = {
-    // change-feed reads bypass the batch machinery entirely: the
-    // stream plans snapshot DIFFS, not head parts (filters stay
-    // residual — Spark re-applies them on the emitted change rows)
+    // a change-feed read IS its stream: it plans snapshot DIFFS, not
+    // head parts (filters stay residual — Spark re-applies them on the
+    // emitted change rows)
     if (cdf) {
       val base = StructType(schema.fields.filterNot(f =>
         ManifestCdf.MetaNames.contains(f.name)))
-      return new ManifestCdfScan(path, base, required, conf,
+      return new ManifestMicroBatchStream(path, base, required, conf,
         startingVersion, maxPartsPerTrigger,
         colMapIdsFor(base,
-          ManifestSink.readSchemaAndColMap(conf.value, path)))
+          ManifestSink.readSchemaAndColMap(conf.value, path)),
+        changeFeed = true)
     }
     // plan against the manifest on the DRIVER: only committed parts,
     // and only those whose column stats can satisfy the pushed
@@ -814,7 +815,7 @@ private[sources] class ManifestScan(
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new ManifestMicroBatchStream(tablePath, schema, required, conf,
-      startingVersion, maxPartsPerTrigger, ids)
+      startingVersion, maxPartsPerTrigger, ids, changeFeed = false)
 
   // narrowed in place by runtime filters before partition planning
   private var parts: Seq[PartMeta] = initialParts
@@ -1009,81 +1010,110 @@ private[sources] class ManifestScan(
   }
 }
 
-/** `dvRef` (sidecar path) wins over inline `dvHex` when both could
-  * exist — the reader resolves through [[DeleteVector.load]]'s rule.
-  * `bucket` is the part's storage-bucket ordinal (−1 = unbucketed);
-  * Spark only consults [[org.apache.spark.sql.connector.read.HasPartitionKey]]
-  * when the scan reported KeyGroupedPartitioning, which it does only
-  * when EVERY planned part carries a consistent bucket. */
+/** One data part to decode, for a batch scan, the append stream or
+  * the change feed. `dvRef` (a sidecar path, read on the executor)
+  * wins over inline `dvHex`. `bucket` is the part's storage-bucket
+  * ordinal (−1 = unbucketed); Spark only consults
+  * [[org.apache.spark.sql.connector.read.HasPartitionKey]] when the
+  * scan reported KeyGroupedPartitioning, which it does only when EVERY
+  * planned part carries a consistent bucket.
+  *
+  * The change fields default to a plain read. On a change-feed part:
+  *  - `changeType` / `commitVersion` are served as the constant
+  *    `_change_type` / `_commit_version` columns;
+  *  - `emitOnlyMask` inverts line selection to exactly the ordinals
+  *    the vector flags — a vector commit's newly-deleted rows, whose
+  *    DELTA vector the driver ships inline;
+  *  - `eq` holds the clauses as of the REPLAYED state, so rows an
+  *    earlier eq commit removed never replay;
+  *  - a non-empty `emitOnlyEq` keeps only the rows its (new) clauses
+  *    match — an eq commit's row-level deletes, found by evaluating
+  *    the clauses against each line. */
 private[sources] case class ManifestPartition(
     path: String, rows: Long, dvHex: String = "", dvRef: String = "",
     bucket: Int = -1, cols: Seq[Int] = Seq.empty,
-    eq: Seq[EqClause] = Seq.empty, ncols: Map[Int, Seq[Int]] = Map.empty)
+    eq: Seq[EqClause] = Seq.empty, ncols: Map[Int, Seq[Int]] = Map.empty,
+    changeType: String = "", commitVersion: Int = 0,
+    emitOnlyMask: Boolean = false, emitOnlyEq: Seq[EqClause] = Seq.empty)
     extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucket))
 }
 
-/** Incremental (micro-batch) read over the snapshot log: OFFSETS ARE
-  * SNAPSHOT VERSIONS. Batch (start, end] plans exactly the parts that
-  * snapshot `end` lists and snapshot `start` did not — the manifest
-  * diff, the same algebra the batch changelog (`q_cdc_diff`) exposes.
-  * Part files are immutable and manifests are published atomically
-  * AFTER their parts, so a version observed by `latestOffset` is
-  * always fully readable — no listing races, no partially-visible
-  * commits (the property file-glob streaming sources have to
-  * approximate with modification times).
-  *
-  * Semantics are APPEND-DRIVEN, like Delta's streaming reads: parts
-  * removed by an overwrite are simply never re-planned (their rows
-  * were already delivered from the snapshot that introduced them);
-  * rewritten history (vacuumed versions below the checkpointed
+/** Micro-batch read over the snapshot log, for the append stream and
+  * the change feed (`option("changeFeed", "true")`). OFFSETS ARE
+  * SNAPSHOT VERSIONS: part files are immutable and a version file is
+  * claimed only AFTER its parts, so a version `latestOffset` observes
+  * is always fully readable — no listing races, no partially-visible
+  * commits. Rewritten history (vacuumed versions below a checkpointed
   * offset) fails loudly via readManifestMeta rather than silently
-  * re-serving the head. AvailableNow and continuous restarts both
-  * resume from the checkpointed version offset.
+  * re-serving the head; AvailableNow and continuous restarts resume
+  * from the checkpointed version.
   *
-  * At 100 TB this is the ingestion pattern: writers commit snapshots,
-  * readers tail the snapshot log and each micro-batch reads only the
-  * newly-committed parts — O(new data) per batch, never O(table).
-  */
-/** Version-granular streaming ADMISSION CONTROL
-  * (`option("maxPartsPerTrigger", n)` — the Delta maxFilesPerTrigger
-  * analog): a fresh consumer of a 100 TB table must NOT plan the
-  * entire backlog as one micro-batch — one giant batch means one
-  * giant shuffle, no incremental checkpoints, and a restart that
-  * loses everything. With a part budget, `latestOffset(start, limit)`
-  * advances the end version only while the cumulative count of
-  * newly-added parts stays within the budget — always admitting at
-  * least ONE version per trigger (offsets are snapshot versions, so
-  * a commit can't be split below version granularity; a single
-  * oversized commit still lands whole, exactly like Delta rounding
-  * maxFilesPerTrigger up to a full commit). Cost per trigger is one
-  * small manifest JSON per admitted version — never data files.
+  * Only the planner differs between the two feeds:
+  *  - APPEND stream: batch (s, e] plans the parts snapshot e lists and
+  *    snapshot s did not — append-driven like Delta's streaming reads.
+  *    Parts an overwrite removed are never re-planned (their rows were
+  *    delivered from the snapshot that introduced them); each batch
+  *    costs O(new data), never O(table).
+  *  - CHANGE FEED, the `readChangeFeed` analog: one diff per commit in
+  *    (s, e], so every row carries ITS commit's `_commit_version`,
+  *    tagged `_change_type` 'insert' | 'delete'. Added parts replay as
+  *    inserts and removed parts as deletes — so a COW DELETE restates
+  *    each rewritten part (deletes for all its rows, inserts for the
+  *    survivors), the shape Delta serves from add/remove actions when
+  *    no _change_data files exist; keyed consumers reconcile restated
+  *    rows idempotently. A grown deletion vector or eq-clause list
+  *    replays exactly the newly-deleted rows.
   *
-  * Implements SupportsTriggerAvailableNow, so Trigger.AvailableNow
-  * pins the end version at query start and then drains it in
-  * budgeted batches — the bounded-backfill shape
-  * (ManifestStreamSpec pins the batch count; q_stream_backfill
-  * gates the rate-limited catch-up end to end). */
-private[sources] trait VersionAdmission
-    extends org.apache.spark.sql.connector.read.streaming
-      .SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxFiles}
+  * ADMISSION CONTROL (`option("maxPartsPerTrigger", n)`, Delta's
+  * maxFilesPerTrigger): a fresh consumer of a large table must not
+  * plan its whole backlog as one micro-batch (one giant shuffle, no
+  * incremental checkpoint). `latestOffset(start, limit)` advances the
+  * end version only while the count of newly-added parts fits the
+  * budget, always admitting at least ONE version — a commit cannot be
+  * split, so an oversized one lands whole. Cost per trigger is one
+  * small manifest per admitted version, never data files.
+  * Trigger.AvailableNow pins the end version at query start and
+  * drains it in budgeted batches (ManifestStreamSpec pins the batch
+  * counts; q_stream_backfill gates the catch-up end to end).
+  *
+  * The change feed's [[ManifestScanBuilder.build]] returns this stream
+  * as its scan; the append stream comes from
+  * [[ManifestScan.toMicroBatchStream]]. Either way `required` is the
+  * pushed column set, so `readStream.select(...)` prunes the decoder. */
+private[sources] class ManifestMicroBatchStream(
+    path: String, schema: StructType, required: StructType,
+    conf: SerializableConfiguration, startingVersion: Option[Int],
+    maxPartsPerTrigger: Option[Int], ids: Seq[Int], changeFeed: Boolean)
+    extends Scan
+    with org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+  import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles}
 
-  protected def admissionPath: String
-  protected def admissionConf: SerializableConfiguration
-  protected def maxPartsPerTrigger: Option[Int]
-  protected def mkOffset(v: Int): Offset
-  protected def offsetVersion(o: Offset): Int
+  private case class V(v: Int) extends Offset {
+    override def json: String = v.toString
+  }
+
+  override def readSchema(): StructType = required
+  override def description(): String =
+    s"graft.ManifestMicroBatchStream($path${if (changeFeed) "@changes" else ""})"
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = this
 
   private var availableEnd: Option[Int] = None
   private def headVersion: Int =
-    ManifestSink.listVersions(admissionConf.value, admissionPath)
-      .lastOption.getOrElse(0)
-  private def pathsAt(v: Int): Set[String] =
-    ManifestSink.readManifestMeta(admissionConf.value, admissionPath,
-      Some(v)).map(_.path).toSet
+    ManifestSink.listVersions(conf.value, path).lastOption.getOrElse(0)
+  private def metaAt(v: Int): Seq[PartMeta] =
+    if (v == 0) Seq.empty
+    else ManifestSink.readManifestMeta(conf.value, path, Some(v))
+  private def pathsAt(v: Int): Set[String] = metaAt(v).map(_.path).toSet
+
+  /** Only consulted when no checkpoint exists; resume always wins. */
+  override def initialOffset(): Offset =
+    V(startingVersion.map(_ - 1).getOrElse(0))
+  override def latestOffset(): Offset = V(headVersion)
+  override def deserializeOffset(json: String): Offset = V(json.trim.toInt)
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableEnd = Some(headVersion)
@@ -1094,7 +1124,7 @@ private[sources] trait VersionAdmission
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val head = availableEnd.getOrElse(headVersion)
-    val s = offsetVersion(start)
+    val s = start.asInstanceOf[V].v
     limit match {
       case f: ReadMaxFiles if s < head =>
         var v = s
@@ -1109,55 +1139,78 @@ private[sources] trait VersionAdmission
           if (used + added > f.maxFiles && v > s) full = true
           else { used += added; v += 1; prev = next }
         }
-        mkOffset(v)
-      case _ => mkOffset(head)
+        V(v)
+      case _ => V(head)
     }
   }
-}
-
-private[sources] class ManifestMicroBatchStream(
-    path: String, schema: StructType, required: StructType,
-    conf: SerializableConfiguration, startingVersion: Option[Int] = None,
-    protected val maxPartsPerTrigger: Option[Int] = None,
-    ids: Seq[Int] = Seq.empty)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with VersionAdmission {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private case class V(v: Int) extends Offset {
-    override def json: String = v.toString
-  }
-  protected def admissionPath: String = path
-  protected def admissionConf: SerializableConfiguration = conf
-  protected def mkOffset(v: Int): Offset = V(v)
-  protected def offsetVersion(o: Offset): Int = o.asInstanceOf[V].v
-
-  /** Version 0 = "before the first committed snapshot"; a fresh
-    * consumer with `option("startingVersion", n)` tails from snapshot
-    * n (inclusive) instead of replaying the whole log. Only consulted
-    * when no checkpoint exists; resume always wins. */
-  override def initialOffset(): Offset =
-    V(startingVersion.map(_ - 1).getOrElse(0))
-
-  override def latestOffset(): Offset =
-    V(ManifestSink.listVersions(conf.value, path).lastOption.getOrElse(0))
-
-  override def deserializeOffset(json: String): Offset = V(json.trim.toInt)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[V].v
     val e = end.asInstanceOf[V].v
-    if (e <= s) return Array.empty
-    val before: Set[String] =
-      if (s == 0) Set.empty
-      else ManifestSink.readManifestMeta(conf.value, path, Some(s)).map(_.path).toSet
-    ManifestSink.readManifestMeta(conf.value, path, Some(e))
-      .filterNot(m => before.contains(m.path))
-      .map(m =>
-        ManifestPartition(m.path, m.rows, m.dvHex, m.dvRef,
-          cols = m.cols, eq = m.eq,
-          ncols = m.ncols): InputPartition)
-      .toArray
+    if (e <= s) Array.empty
+    else if (changeFeed) (s + 1 to e).flatMap(changesAt).toArray
+    else {
+      val before = pathsAt(s)
+      metaAt(e).filterNot(m => before.contains(m.path))
+        .map(m => ManifestPartition(m.path, m.rows, m.dvHex, m.dvRef,
+          cols = m.cols, eq = m.eq, ncols = m.ncols): InputPartition)
+        .toArray
+    }
+  }
+
+  /** The change-feed diff of commit `v` against `v - 1`. Insert and
+    * delete replays mask with the part's own vector (`dvHex`/`dvRef`,
+    * read on the executor) and its clauses as of the replayed state
+    * (`eq`), so they never leak rows an earlier delete removed. */
+  private def changesAt(v: Int): Seq[InputPartition] = {
+    val prev = metaAt(v - 1).map(m => m.path -> m).toMap
+    val cur = metaAt(v)
+    val curPaths = cur.map(_.path).toSet
+    def replay(m: PartMeta, changeType: String) =
+      ManifestPartition(m.path, m.rows, m.dvHex, m.dvRef, cols = m.cols,
+        eq = m.eq, ncols = m.ncols, changeType = changeType,
+        commitVersion = v)
+    val inserts = cur.filterNot(m => prev.contains(m.path))
+      .map(replay(_, "insert"))
+    val deletes = prev.valuesIterator.filterNot(m => curPaths(m.path))
+      .map(replay(_, "delete")).toSeq
+    // a retained part whose DELETION VECTOR grew: replay exactly the
+    // newly-flagged ordinals as deletes — true row-level CDC for
+    // merge-on-read deletes, no restatement of survivors. The delta is
+    // computed here; a sidecar is content-immutable once written (each
+    // delete publishes a NEW token-named file), so "same (dvHex, dvRef)
+    // pair" ⇔ "same vector". (A RESTORE that rolls a vector BACK emits
+    // nothing for the un-deleted rows — restore is a head replacement,
+    // not a change event; Delta's CDF has the same blind spot.)
+    def vecHex(m: PartMeta): String =
+      if (m.dvRef.nonEmpty)
+        DeleteVector.toHex(DeleteVector.readRef(conf.value, m.dvRef))
+      else m.dvHex
+    val dvDeletes = cur.flatMap { m =>
+      prev.get(m.path) match {
+        case Some(old) if m.dvHex != old.dvHex || m.dvRef != old.dvRef =>
+          val delta = DeleteVector.minus(DeleteVector.fromHex(vecHex(m)),
+            DeleteVector.fromHex(vecHex(old)))
+          if (DeleteVector.popCount(delta) == 0) None
+          else Some(replay(m, "delete").copy(dvHex = DeleteVector.toHex(delta),
+            dvRef = "", eq = old.eq, emitOnlyMask = true))
+        case _ => None
+      }
+    }
+    // a retained part whose EQUALITY-DELETE clause list grew: the
+    // newly-deleted rows are exactly those matching the NEW clauses
+    // among the rows visible before. The line mask is the NEW vector:
+    // if one commit grows both, the vector delta's rows are already
+    // emitted by dvDeletes, so no row's delete double-emits
+    val eqDeletes = cur.flatMap { m =>
+      prev.get(m.path) match {
+        case Some(old) if m.eq.size > old.eq.size =>
+          Some(replay(m, "delete").copy(eq = old.eq,
+            emitOnlyEq = m.eq.drop(old.eq.size)))
+        case _ => None
+      }
+    }
+    inserts ++ deletes ++ dvDeletes ++ eqDeletes
   }
 
   // ONE colmap snapshot for the stream's whole life, captured with
@@ -1172,7 +1225,8 @@ private[sources] class ManifestMicroBatchStream(
   override def createReaderFactory(): PartitionReaderFactory =
     new ManifestReaderFactory(schema, required, conf, ids = ids,
       initDefaults = ColDefaults.byName(schema, snapCm),
-      nestedIds = ManifestSource.nestedIdsFor(snapCm))
+      nestedIds = ManifestSource.nestedIdsFor(snapCm),
+      changeFeed = changeFeed)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -1219,7 +1273,7 @@ private[sources] object StreamOptions {
     })
   }
 
-  /** Streaming admission control (see [[VersionAdmission]]). */
+  /** Streaming admission control (see [[ManifestMicroBatchStream]]). */
   def maxPartsPerTrigger(options: CaseInsensitiveStringMap): Option[Int] = {
     val v = Option(options.get("maxPartsPerTrigger")).map(_.toInt)
     v.foreach(n => require(n >= 1,
@@ -1228,8 +1282,7 @@ private[sources] object StreamOptions {
   }
 }
 
-/** Change-data-feed plumbing shared by schema inference, the scan and
-  * the readers. */
+/** The change feed's metadata columns (schema inference, the reader). */
 private[sources] object ManifestCdf {
   val ChangeTypeCol = "_change_type"
   val CommitVersionCol = "_commit_version"
@@ -1237,284 +1290,6 @@ private[sources] object ManifestCdf {
   val MetaFields: Array[StructField] = Array(
     StructField(ChangeTypeCol, StringType, nullable = false),
     StructField(CommitVersionCol, LongType, nullable = false))
-}
-
-/** CHANGE DATA FEED over the snapshot log (`option("changeFeed",
-  * "true")` on a streaming read) — the `readChangeFeed` analog: each
-  * micro-batch emits the row-level deltas BETWEEN consecutive
-  * snapshots, tagged `_change_type` ('insert' | 'delete') and
-  * `_commit_version`.
-  *
-  * Granularity is the PART FILE — exactly what the snapshot algebra
-  * records: a version's added parts replay as inserts, its removed
-  * parts replay as deletes. An append therefore feeds pure inserts
-  * (O(new data)); a COW DELETE feeds deletes for every row of each
-  * rewritten part plus inserts for its survivors — a part-level
-  * restatement, the CDF a format without per-commit CDC files can
-  * serve from metadata alone (Delta reads this same shape out of
-  * add/remove actions when no _change_data files exist). Downstream
-  * keyed consumers reconcile restated rows idempotently — the same
-  * contract every upsert sink in this repo already implements.
-  *
-  * Offsets are snapshot versions (shared with the append-only
-  * stream), so checkpointed consumers resume across a COW delete and
-  * receive exactly that commit's changes — ManifestStreamSpec pins
-  * the resume; the oracle-gated q_stream_cdf pins the feed itself. */
-private[sources] class ManifestCdfScan(
-    path: String, baseSchema: StructType, required: StructType,
-    conf: SerializableConfiguration,
-    startingVersion: Option[Int] = None,
-    maxPartsPerTrigger: Option[Int] = None,
-    ids: Seq[Int] = Seq.empty) extends Scan {
-  override def readSchema(): StructType = required
-  override def description(): String = s"graft.ManifestCdfScan($path)"
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ManifestChangeFeedStream(path, baseSchema, required, conf,
-      startingVersion, maxPartsPerTrigger, ids)
-}
-
-/** `maskHex` + `emitOnlyMask` select which line ordinals replay:
-  * `emitOnlyMask=false` emits lines NOT in the mask (the part's
-  * visible rows under a deletion vector), `=true` emits exactly the
-  * lines IN the mask (the newly-deleted ordinals of a vector commit —
-  * precise row-level CDC without reading a single surviving row).
-  * `eq` carries the part's equality-delete clauses as of the
-  * REPLAYED state — matching rows are excluded from any replay (they
-  * were already deleted); `emitOnlyEq` inverts it for the eq
-  * commit's own diff: emit exactly the rows the NEW clauses remove —
-  * row-level CDC for equality deletes, enumerated at read time by
-  * evaluating the clause against each line. */
-private[sources] case class ManifestCdfPartition(
-    path: String, changeType: String, version: Int,
-    maskHex: String = "", emitOnlyMask: Boolean = false,
-    cols: Seq[Int] = Seq.empty,
-    eq: Seq[EqClause] = Seq.empty, emitOnlyEq: Seq[EqClause] = Seq.empty,
-    ncols: Map[Int, Seq[Int]] = Map.empty)
-    extends InputPartition
-
-private[sources] class ManifestChangeFeedStream(
-    path: String, baseSchema: StructType, required: StructType,
-    conf: SerializableConfiguration, startingVersion: Option[Int] = None,
-    protected val maxPartsPerTrigger: Option[Int] = None,
-    ids: Seq[Int] = Seq.empty)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with VersionAdmission {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private case class V(v: Int) extends Offset {
-    override def json: String = v.toString
-  }
-  protected def admissionPath: String = path
-  protected def admissionConf: SerializableConfiguration = conf
-  protected def mkOffset(v: Int): Offset = V(v)
-  protected def offsetVersion(o: Offset): Int = o.asInstanceOf[V].v
-
-  /** A fresh consumer replays from `startingVersion` (inclusive) when
-    * set — Delta's readChangeFeed startingVersion: nobody wants a new
-    * dashboard to re-consume a year of history. Only consulted when
-    * no checkpoint exists; resume always wins. */
-  override def initialOffset(): Offset =
-    V(startingVersion.map(_ - 1).getOrElse(0))
-  override def latestOffset(): Offset =
-    V(ManifestSink.listVersions(conf.value, path).lastOption.getOrElse(0))
-  override def deserializeOffset(json: String): Offset = V(json.trim.toInt)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[V].v
-    val e = end.asInstanceOf[V].v
-    // one diff per commit in (s, e]: versions must be replayed
-    // individually so every change row carries ITS commit's version,
-    // even when a trigger spans several commits
-    // sidecar vectors resolve here (driver, one part at a time) so the
-    // mask a change partition carries is always plain hex; a sidecar
-    // is content-immutable once written (each delete publishes a NEW
-    // token-named file), so "same (dvHex, dvRef) pair" ⇔ "same vector"
-    def vecHex(m: PartMeta): String =
-      if (m.dvRef.nonEmpty)
-        DeleteVector.toHex(DeleteVector.readRef(conf.value, m.dvRef))
-      else m.dvHex
-    (s + 1 to e).flatMap { v =>
-      val prev: Map[String, PartMeta] =
-        if (v == 1) Map.empty
-        else ManifestSink.readManifestMeta(conf.value, path, Some(v - 1))
-          .map(m => m.path -> m).toMap
-      val cur = ManifestSink.readManifestMeta(conf.value, path, Some(v))
-      val curPaths = cur.map(_.path).toSet
-      // replays always honor the part's EQUALITY-DELETE clauses as of
-      // the replayed state (`eq` masks matching rows out), so
-      // inserts/deletes never leak rows an earlier eq commit removed
-      val inserts = cur.filterNot(m => prev.contains(m.path))
-        .map(m => ManifestCdfPartition(m.path, "insert", v, vecHex(m),
-          cols = m.cols, eq = m.eq,
-          ncols = m.ncols))
-      val deletes = prev.valuesIterator.filterNot(m => curPaths(m.path))
-        .map(m => ManifestCdfPartition(m.path, "delete", v, vecHex(m),
-          cols = m.cols, eq = m.eq,
-          ncols = m.ncols)).toSeq
-      // a retained part whose DELETION VECTOR grew: replay exactly
-      // the newly-flagged ordinals as deletes — true row-level CDC
-      // for merge-on-read deletes, no restatement of survivors.
-      // (A RESTORE that rolls a vector BACK emits nothing for the
-      // un-deleted rows — restore is a head replacement, not a
-      // change event; Delta's CDF has the same blind spot across
-      // RESTORE and documents it identically.)
-      val dvDeletes = cur.flatMap { m =>
-        prev.get(m.path) match {
-          case Some(old)
-              if m.dvHex != old.dvHex || m.dvRef != old.dvRef =>
-            val delta = DeleteVector.minus(
-              DeleteVector.fromHex(vecHex(m)),
-              DeleteVector.fromHex(vecHex(old)))
-            if (DeleteVector.popCount(delta) == 0) None
-            else Some(ManifestCdfPartition(m.path, "delete", v,
-              DeleteVector.toHex(delta), emitOnlyMask = true,
-              cols = m.cols, eq = old.eq,
-              ncols = m.ncols))
-          case _ => None
-        }
-      }
-      // a retained part whose EQUALITY-DELETE clause list grew: the
-      // newly-deleted rows ARE enumerable — they are exactly the rows
-      // matching the NEW clauses among those visible before (old DV,
-      // old clauses) — so the feed emits true row-level deletes for
-      // an eq commit by evaluating the clause at read time
-      // drop-mask is the NEW vector, not the old: if one commit grows
-      // both the DV and the clause list, the DV delta's rows are
-      // already emitted by dvDeletes above — masking eqDeletes with
-      // the new vector keeps the two partitions disjoint (no row's
-      // delete double-emits)
-      val eqDeletes = cur.flatMap { m =>
-        prev.get(m.path) match {
-          case Some(old) if m.eq.size > old.eq.size =>
-            Some(ManifestCdfPartition(m.path, "delete", v, vecHex(m),
-              cols = m.cols, eq = old.eq,
-              emitOnlyEq = m.eq.drop(old.eq.size),
-              ncols = m.ncols))
-          case _ => None
-        }
-      }
-      inserts ++ deletes ++ dvDeletes ++ eqDeletes
-    }.toArray
-  }
-
-  // pinned once at stream construction, same rationale as
-  // ManifestMicroBatchStream: nested ids must describe the stream's
-  // fixed schema, not whatever the head evolves to mid-stream
-  private val snapCm = ManifestSink.readSchemaAndColMap(conf.value, path)
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ManifestCdfReaderFactory(baseSchema, required, conf, ids,
-      ColDefaults.byName(baseSchema, snapCm),
-      ManifestSource.nestedIdsFor(snapCm))
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-/** Decodes a part's lines through the BASE schema and appends the
-  * constant change-metadata columns, honoring column pruning (a
-  * pruned-away metadata or data column is never materialized). */
-private[sources] class ManifestCdfReaderFactory(
-    baseSchema: StructType, required: StructType,
-    conf: SerializableConfiguration, ids: Seq[Int] = Seq.empty,
-    initDefaults: Map[String, Any] = Map.empty,
-    nestedIds: Map[Int, Seq[Int]] = Map.empty)
-    extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[ManifestCdfPartition]
-    // per required field: Right(meta constant) or Left(line slot) —
-    // the slot resolves through column mapping exactly like the batch
-    // reader (logical field -> stable id -> the part's layout), so a
-    // change feed replays correctly across RENAME/DROP commits
-    val plan: Array[Either[(Int, DataType), Any]] =
-      required.fields.map { f =>
-        if (f.name == ManifestCdf.ChangeTypeCol)
-          Right(UTF8String.fromString(part.changeType))
-        else if (f.name == ManifestCdf.CommitVersionCol)
-          Right(part.version.toLong)
-        else {
-          val li = baseSchema.fieldIndex(f.name)
-          val id = if (ids.nonEmpty) ids(li) else li
-          val slot =
-            if (part.cols.isEmpty) id
-            else {
-              val s = part.cols.indexOf(id)
-              if (s < 0) Int.MaxValue else s
-            }
-          Left((slot, baseSchema(f.name).dataType))
-        }
-      }
-    // depth-1 struct sub-plans, the batch reader's shared resolution
-    // ([[ManifestSource.structPlansFor]]) — a change feed replays
-    // structs correctly across nested DDL
-    val structPlans: Array[(Array[Int], Array[DataType])] =
-      ManifestSource.structPlansFor(required, baseSchema, ids, nestedIds,
-        part.ncols,
-        Set(ManifestCdf.ChangeTypeCol, ManifestCdf.CommitVersionCol))
-    new PartitionReader[InternalRow] {
-      private val path = new Path(part.path)
-      private val mask = DeleteVector.fromHex(part.maskHex)
-      // equality-delete masks (see [[EqMask]]): `dropEq` excludes rows
-      // an earlier eq commit already removed from ANY replay;
-      // `onlyEq` inverts selection for an eq commit's own delete
-      // diff — emit exactly the rows its new clauses match
-      private val eqDflts =
-        EqMask.defaultToks(baseSchema, ids, initDefaults)
-      private val dropEq = EqMask.matchers(part.eq, part.cols, eqDflts)
-      private val onlyEq =
-        EqMask.matchers(part.emitOnlyEq, part.cols, eqDflts)
-      private val in = path.getFileSystem(conf.value).open(path)
-      private val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      private var current: InternalRow = _
-      private var lineNo = -1L
-
-      override def next(): Boolean = {
-        var line: String = null
-        while (line == null && lines.hasNext) {
-          val candidate = lines.next()
-          lineNo += 1
-          // emitOnlyMask: replay exactly the masked ordinals (a
-          // vector commit's newly-deleted rows); otherwise replay the
-          // VISIBLE rows (mask = the part's deletion vector)
-          val masked = DeleteVector.isDeleted(mask, lineNo)
-          if (if (part.emitOnlyMask) masked else !masked) {
-            if (dropEq.isEmpty && onlyEq.isEmpty) line = candidate
-            else {
-              val toks = candidate.split(",", -1)
-              if (!EqMask.matches(dropEq, toks) &&
-                  (onlyEq.isEmpty || EqMask.matches(onlyEq, toks)))
-                line = candidate
-            }
-          }
-        }
-        if (line == null) return false
-        val cols = line.split(",", -1)
-        val vals = new Array[Any](plan.length)
-        var j = 0
-        while (j < plan.length) {
-          vals(j) = plan(j) match {
-            case Right(const) => const
-            case Left((ord, dt)) =>
-              if (ord >= cols.length)
-                initDefaults.getOrElse(required.fields(j).name, null)
-              else {
-                val sp = structPlans(j)
-                if (sp == null) ManifestCodec.decode(cols(ord), dt)
-                else ManifestCodec.decodeNested(cols(ord), sp._1, sp._2)
-              }
-          }
-          j += 1
-        }
-        current = new GenericInternalRow(vals)
-        true
-      }
-
-      override def get(): InternalRow = current
-      override def close(): Unit = in.close()
-    }
-  }
 }
 
 /** OBSERVABILITY (DSv2 custom metrics, surfaced in the SQL UI next
@@ -1579,8 +1354,8 @@ private[sources] object ColDefaults {
     } catch { case scala.util.control.NonFatal(_) => None }
 }
 
-/** Shared equality-clause line matching for the batch and CDF
-  * readers: clauses compile ONCE per part to (line slot, token set,
+/** Equality-clause line matching for [[ManifestReaderFactory]]:
+  * clauses compile ONCE per part to (line slot, token set,
   * default-matches) — slot through the part's recorded layout by
   * stable field id, values to the exact line-token form — so the
   * per-row check is a raw-token set probe, zero decode.
@@ -1679,31 +1454,45 @@ private[sources] case class LongTaskMetric(metricName: String, v: Long)
   override def value(): Long = v
 }
 
+/** The one part reader: batch scans, the append stream and the change
+  * feed all decode through it.
+  *
+  * Per line, in order: the deletion-vector test (a line replays when
+  * its bit equals the partition's `emitOnlyMask` — so a plain read
+  * keeps the unflagged lines), then, only for parts with equality
+  * clauses, one split and the clause masks (see [[EqMask]]).
+  *
+  * Column mapping resolves per part: logical field -> stable field id
+  * (`ids`, identity when absent) -> the part's recorded line slot
+  * (`part.cols`; absent = the identity layout). A field the part never
+  * wrote (added later, or its slot was dropped before the part was
+  * written) resolves past the line's width and serves its initial
+  * default — NULL unless the column was added with one (see
+  * [[ColDefaults]]). Struct columns decode through
+  * [[ManifestSource.structPlansFor]].
+  *
+  * Constant columns come from the partition, never from the line
+  * (negative ordinals): `_part` / `_pos` (path / line ordinal) on a
+  * plain read, `_change_type` / `_commit_version` on a change-feed
+  * factory. On the other kind of read a column of that name is data. */
 private[sources] class ManifestReaderFactory(
     schema: StructType, required: StructType,
     conf: SerializableConfiguration, rowCap: Long = Long.MaxValue,
     ids: Seq[Int] = Seq.empty,
     initDefaults: Map[String, Any] = Map.empty,
-    nestedIds: Map[Int, Seq[Int]] = Map.empty)
+    nestedIds: Map[Int, Seq[Int]] = Map.empty,
+    changeFeed: Boolean = false)
     extends PartitionReaderFactory {
 
   private val fields: Array[String] = required.fieldNames
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[ManifestPartition]
-    // required-field ordinals into the full written row; the `_part`
-    // and `_pos` METADATA columns are served from the partition
-    // itself (path constant / line ordinal), never decoded from the
-    // line (sentinels -1 / -2). With COLUMN MAPPING the resolution is
-    // per part: logical field -> stable field id (`ids`, identity
-    // when absent) -> the part's recorded line slot (`part.cols`;
-    // absent = the legacy identity layout, slot = id). A field the
-    // part never wrote (added later, or its slot was dropped before
-    // the part was written) resolves past the line's width and reads
-    // NULL — same rule additive evolution always used.
     val ordinals = fields.map {
-      case PartMetaColumn.Name => -1
-      case PosMetaColumn.Name  => -2
+      case PartMetaColumn.Name if !changeFeed => -1
+      case PosMetaColumn.Name if !changeFeed => -2
+      case ManifestCdf.ChangeTypeCol if changeFeed => -3
+      case ManifestCdf.CommitVersionCol if changeFeed => -4
       case f =>
         val li = schema.fieldIndex(f)
         val id = if (ids.nonEmpty) ids(li) else li
@@ -1713,22 +1502,18 @@ private[sources] class ManifestReaderFactory(
           if (slot < 0) Int.MaxValue else slot
         }
     }
-    val types = fields.map(f =>
-      if (f == PartMetaColumn.Name || f == PosMetaColumn.Name)
-        org.apache.spark.sql.types.StringType
-      else schema(f).dataType)
-    // DEPTH-1 STRUCT decode plans (shared resolution — see
-    // [[ManifestSource.structPlansFor]])
+    val types = fields.zip(ordinals).map { case (f, o) =>
+      if (o < 0) null else schema(f).dataType }
     val structPlans: Array[(Array[Int], Array[DataType])] =
       ManifestSource.structPlansFor(required, schema, ids, nestedIds,
-        part.ncols, Set(PartMetaColumn.Name, PosMetaColumn.Name))
-    // INITIAL DEFAULTS: the fallback a missing line slot serves —
-    // NULL for ordinary additive evolution, the frozen EXISTS default
-    // for columns added with one (see [[ColDefaults]])
+        part.ncols, fields.zip(ordinals).collect {
+          case (f, o) if o < 0 => f }.toSet)
     val dflts: Array[Any] = fields.map(f => initDefaults.getOrElse(f, null))
     new PartitionReader[InternalRow] {
       private val path = new Path(part.path)
       private val partConst = UTF8String.fromString(part.path)
+      private val changeConst = UTF8String.fromString(part.changeType)
+      private val versionConst = part.commitVersion.toLong
       // merge-on-read: the part's deletion vector masks flagged line
       // ordinals — data files are never rewritten by a MOR delete.
       // Sidecar vectors are read ON THE EXECUTOR (one small file next
@@ -1736,14 +1521,14 @@ private[sources] class ManifestReaderFactory(
       private val dv =
         if (part.dvRef.nonEmpty) DeleteVector.readRef(conf.value, part.dvRef)
         else DeleteVector.fromHex(part.dvHex)
-      // EQUALITY-DELETE masking (see [[EqMask]]): rename/drop-proof
-      // by stable field id, zero per-row decode; default-aware so a
-      // clause on a defaulted later-added column still drops the
-      // pre-ADD rows that serve the frozen default
-      private val eqMatchers = EqMask.matchers(part.eq, part.cols,
-        EqMask.defaultToks(schema, ids, initDefaults))
-      private def eqDeleted(cols: Array[String]): Boolean =
-        EqMask.matches(eqMatchers, cols)
+      // EQUALITY-DELETE masking: rename/drop-proof by stable field id,
+      // zero per-row decode; default-aware so a clause on a defaulted
+      // later-added column still drops the pre-ADD rows that serve the
+      // frozen default. `onlyEq` is the change feed's inverse mask.
+      private val eqDflts = EqMask.defaultToks(schema, ids, initDefaults)
+      private val eqMatchers = EqMask.matchers(part.eq, part.cols, eqDflts)
+      private val onlyEq = EqMask.matchers(part.emitOnlyEq, part.cols, eqDflts)
+      private val plainLines = eqMatchers.isEmpty && onlyEq.isEmpty
       private val in = path.getFileSystem(conf.value).open(path)
       private val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       private var current: InternalRow = _
@@ -1765,10 +1550,14 @@ private[sources] class ManifestReaderFactory(
         while (line == null && lines.hasNext) {
           val candidate = lines.next()
           lineNo += 1
-          if (!DeleteVector.isDeleted(dv, lineNo)) {
-            if (eqMatchers.isEmpty) line = candidate
-            else if (!eqDeleted(candidate.split(",", -1))) line = candidate
-            else eqMasked += 1
+          if (DeleteVector.isDeleted(dv, lineNo) == part.emitOnlyMask) {
+            if (plainLines) line = candidate
+            else {
+              val toks = candidate.split(",", -1)
+              if (EqMask.matches(eqMatchers, toks)) eqMasked += 1
+              else if (onlyEq.isEmpty || EqMask.matches(onlyEq, toks))
+                line = candidate
+            }
           } else masked += 1
         }
         if (line == null) return false
@@ -1777,12 +1566,11 @@ private[sources] class ManifestReaderFactory(
         val vals = new Array[Any](ordinals.length)
         var j = 0
         while (j < ordinals.length) {
-          // additive schema evolution: a part committed before a
-          // column was added has a shorter line — the missing
-          // trailing columns read as NULL, no data rewrite
           vals(j) = ordinals(j) match {
             case -1 => partConst
             case -2 => lineNo
+            case -3 => changeConst
+            case -4 => versionConst
             case o if o >= cols.length => dflts(j)
             case o =>
               val sp = structPlans(j)

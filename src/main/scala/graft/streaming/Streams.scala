@@ -773,30 +773,34 @@ ORDER BY p.user_id, p_id, c_id NULLS FIRST""")),
     QueryDef("q_stream_sink_manifest",
       (spark, dir) => {
         val target = Files.createTempDirectory("graft-stream-sink-").toString
-        val q = eventsStream(spark, dir).writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft-ssink-ckpt-").toString)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.select(col("event_id"), col("event_type"), col("value"))
-              .write.format("graft.sources.ManifestSink")
-              .option("path", s"$target/batch-$batchId")
-              .mode("overwrite")
-              .save()
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        val conf = spark.sparkContext.hadoopConfiguration
-        val parts = new java.io.File(target).listFiles()
-          .filter(_.getName.startsWith("batch-")).toSeq
-          .flatMap(b => graft.sources.ManifestSink.readManifest(conf, b.toString))
-        val nonEmpty = parts.filter(_._2 > 0)
-        import spark.implicits._
-        Seq((parts.map(_._2).sum,
-          nonEmpty.map(_._3).min, nonEmpty.map(_._4).max))
-          .toDF("total_rows", "key_min", "key_max")
+        val ckpt = Files.createTempDirectory("graft-ssink-ckpt-").toString
+        // the result is a local relation, so both dirs go before return
+        try {
+          val q = eventsStream(spark, dir).writeStream
+            .outputMode("append")
+            .trigger(Trigger.AvailableNow())
+            .option("checkpointLocation", ckpt)
+            .foreachBatch { (batch: DataFrame, batchId: Long) =>
+              batch.select(col("event_id"), col("event_type"), col("value"))
+                .write.format("graft.sources.ManifestSink")
+                .option("path", s"$target/batch-$batchId")
+                .mode("overwrite")
+                .save()
+              ()
+            }
+            .start()
+          q.awaitTermination()
+          val conf = spark.sparkContext.hadoopConfiguration
+          val parts = new java.io.File(target).listFiles()
+            .filter(_.getName.startsWith("batch-")).toSeq
+            .flatMap(b => graft.sources.ManifestSink.readManifest(conf, b.toString))
+          val nonEmpty = parts.filter(_._2 > 0)
+          import spark.implicits._
+          Seq((parts.map(_._2).sum,
+            nonEmpty.map(_._3).min, nonEmpty.map(_._4).max))
+            .toDF("total_rows", "key_min", "key_max")
+        } finally Seq(target, ckpt).foreach(d =>
+          org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d)))
       },
       Some("""SELECT CAST(count(*) AS BIGINT) AS total_rows,
   min(event_id) AS key_min, max(event_id) AS key_max

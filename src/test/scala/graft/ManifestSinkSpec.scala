@@ -91,6 +91,15 @@ class ManifestSinkSpec extends SparkSpec {
       s"disk/manifest divergence: disk=$onDisk manifest=$listed")
   }
 
+  test("a fixed-path query table rerun starts over at version 1") {
+    val q = SparkEntry.queries("q_sink_manifest")
+    q(spark, Sf0001).collect()
+    q(spark, Sf0001).collect()
+    val target = graft.queries.QueryDef.tablePath(spark, Sf0001, "sink")
+    assert(ManifestSink.listVersions(
+      spark.sparkContext.hadoopConfiguration, target) === Seq(1))
+  }
+
   test("clusterBy: the SINK demands the sorted layout; parts own disjoint ranges") {
     import org.apache.spark.sql.functions._
     import graft.model.Tables

@@ -228,6 +228,21 @@ class StreamingSpec extends SparkSpec {
     assert(matched > 0, "no matched rows: join condition never fired")
   }
 
+  test("q_stream_sink_manifest leaves no temp directory behind") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def sinkDirs(): Int = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("graft-stream-sink-") || n.startsWith("graft-ssink-ckpt-")
+      }.count().toInt
+      finally ls.close()
+    }
+    val before = sinkDirs()
+    SparkEntry.queries("q_stream_sink_manifest")(spark, Sf0001).collect()
+    assert(sinkDirs() === before)
+  }
+
   test("stateful streams run unchanged on the RocksDB state store") {
     // The HDFS-backed store holds every key in executor heap; RocksDB
     // is the production backend once keyed state outgrows memory

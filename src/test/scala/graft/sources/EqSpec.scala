@@ -303,6 +303,53 @@ class EqSpec extends SparkSpec {
       (0L until 400L).count(_ % 23 != 11).toLong)
   }
 
+  test("change-feed projections equal the same projection of the full " +
+    "feed across append, COW, MOR and eq commits") {
+    val dir = mkTable("t9")
+    spark.sql("DELETE FROM geq.ns.t9 WHERE k < 40")
+    spark.conf.set("graft.delete.mode", "mor")
+    try spark.sql("DELETE FROM geq.ns.t9 WHERE k BETWEEN 100 AND 119")
+    finally spark.conf.unset("graft.delete.mode")
+    eqMode { spark.sql("DELETE FROM geq.ns.t9 WHERE s = 's2'") }
+    def feed(name: String, cols: String*): Seq[String] = {
+      val q = spark.readStream.format("graft.sources.ManifestSource")
+        .option("path", dir).option("changeFeed", "true").load()
+        .selectExpr(cols: _*)
+        .writeStream.format("memory").queryName(name)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(60000); q.stop()
+      spark.table(name).selectExpr(cols: _*).collect().map(_.toString)
+        .toSeq.sorted
+    }
+    feed("geq_cdf9_all", "*")
+    def fullAs(cols: String*): Seq[String] =
+      spark.table("geq_cdf9_all").selectExpr(cols: _*).collect()
+        .map(_.toString).toSeq.sorted
+    // v2 INSERT, v3 COW, v4 MOR (vector delta), v5 eq: each commit
+    // feeds deletes
+    val deletes = spark.sql("SELECT DISTINCT _commit_version FROM " +
+      "geq_cdf9_all WHERE _change_type = 'delete'").collect()
+      .map(_.getLong(0)).toSet
+    assert(deletes === Set(3L, 4L, 5L), s"got $deletes")
+    for ((name, cols) <- Seq(
+        "geq_cdf9_meta" -> Seq("_change_type", "_commit_version"),
+        "geq_cdf9_v" -> Seq("v", "_commit_version")))
+      assert(feed(name, cols: _*) === fullAs(cols: _*), cols.mkString(", "))
+  }
+
+  test("a plain read serves a data column named _change_type as data") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-cdfname").toString
+    Seq((1L, "a"), (2L, "b")).toDF("k", "_change_type")
+      .write.format("graft.sources.ManifestSink")
+      .option("path", dir).mode("overwrite").save()
+    val got = spark.read.format("graft.sources.ManifestSource")
+      .option("path", dir).load().orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(got === Seq((1L, "a"), (2L, "b")))
+  }
+
   test("translateRange at the Long extremes: x < MinValue / x > MaxValue " +
     "canonicalize to the EMPTY interval, never the one-point extreme") {
     import org.apache.spark.sql.sources.{GreaterThan, LessThan}
