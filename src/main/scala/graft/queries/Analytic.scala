@@ -376,8 +376,8 @@ ORDER BY p.user_id, p.event_id""")),
     // partition-independent).
     QueryDef("q_incremental_agg",
       (spark, dir) => {
-        val partialsDir = java.nio.file.Files
-          .createTempDirectory("graft-incr-").toString + "/partials"
+        val partialsDir = QueryDef.freshTable(spark, dir,
+          "incremental_agg-partials")
         def partialsOf(df: org.apache.spark.sql.DataFrame) =
           df.groupBy(col("event_type"))
             .agg(sum(col("value").cast("decimal(32,10)")).as("s"),

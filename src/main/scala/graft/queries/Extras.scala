@@ -114,7 +114,7 @@ FROM anc GROUP BY depth ORDER BY depth"""
     // (path, modificationTime, length, content).
     QueryDef("q_binary_source",
       (spark, dir) => {
-        val out = Files.createTempDirectory("graft-bin-").toString
+        val out = QueryDef.freshDir(spark, dir, "binary_source-objects")
         writeStationObjects(spark, dir, out)
         val basicTs = Estimate.parseStationTs(col("path"))
         spark.read.format("binaryFile")
@@ -184,9 +184,11 @@ FROM keys""")),
     // a separate plan that starts from the materialized scan.
     QueryDef("q_checkpoint_reuse",
       (spark, dir) => {
-        val target = Files.createTempDirectory("graft-ckpt-").toString + "/hourly"
+        val target = QueryDef.freshTable(spark, dir, "checkpoint_reuse-hourly")
+        val targetPath = new org.apache.hadoop.fs.Path(target)
+        val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         def stage1(): Unit =
-          if (!new java.io.File(target).exists) {
+          if (!fs.exists(targetPath)) {
             Tables.events(spark, dir)
               .groupBy(col("user_id"),
                 date_trunc("hour", col("ts")).as("hour"))
@@ -218,7 +220,7 @@ FROM hourly ORDER BY user_id, hour_us""")),
     // original), so the oracle gates the round-trip itself.
     QueryDef("q_format_roundtrip",
       (spark, dir) => {
-        val tmp = Files.createTempDirectory("graft-fmt-").toString
+        val tmp = QueryDef.freshTable(spark, dir, "format_roundtrip-files")
         val ev = Tables.events(spark, dir)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), unix_micros(col("ts")).as("ts_us"))
@@ -246,7 +248,7 @@ FROM events""")),
     // data and all of it.
     QueryDef("q_partitioned_scan",
       (spark, dir) => {
-        val tmp = Files.createTempDirectory("graft-part-").toString + "/events_by_type"
+        val tmp = QueryDef.freshTable(spark, dir, "partitioned_scan-events")
         Tables.events(spark, dir)
           .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
           .write.mode("overwrite").partitionBy("event_type").parquet(tmp)

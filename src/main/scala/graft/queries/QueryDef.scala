@@ -36,4 +36,12 @@ object QueryDef {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     path
   }
+
+  /** [[freshTable]] created as an empty directory, as a plain local
+    * path for bodies that also touch it through java.io / java.nio. */
+  def freshDir(spark: SparkSession, dir: String, tag: String): String = {
+    val p = new Path(freshTable(spark, dir, tag))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
+    p.toUri.getPath
+  }
 }

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.functions.Exact
@@ -200,7 +198,7 @@ GROUP BY iv_id ORDER BY iv_id""")),
     QueryDef("q_dpp_join",
       (spark, dir) => {
         import spark.implicits._
-        val base = Files.createTempDirectory("graft-dpp-").toString
+        val base = QueryDef.freshTable(spark, dir, "dpp_join-facts")
         val tmp = s"$base/events_by_type"
         Tables.events(spark, dir)
           .select(col("event_id"), col("user_id"), col("value"),
@@ -242,7 +240,7 @@ GROUP BY event_type ORDER BY event_type""")),
     // the sort order.
     QueryDef("q_bucketed_join",
       (spark, dir) => {
-        val tmp = Files.createTempDirectory("graft-bucket-").toString
+        val tmp = QueryDef.freshTable(spark, dir, "bucketed_join-tables")
         val nb = 8
         spark.sql("DROP TABLE IF EXISTS graft_li_bucketed")
         spark.sql("DROP TABLE IF EXISTS graft_ord_bucketed")
@@ -436,7 +434,7 @@ FROM d ORDER BY zval, o_orderkey"""
     // the CBO estimate is the only variable.
     QueryDef("q_cbo_hist",
       (spark, dir) => {
-        val base = Files.createTempDirectory("graft-cbohist-").toString
+        val base = QueryDef.freshTable(spark, dir, "cbo_hist-wh")
         spark.conf.set("spark.sql.catalog.gch", "graft.sources.GraftCatalog")
         spark.conf.set("spark.sql.catalog.gch.warehouse", base)
         val fact = Tables.events(spark, dir).select(

@@ -407,7 +407,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
           .filter(col("price") > 1000.0)
           .writeStream
           .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("graft-medal-ckpt-").toString)
+            freshTable(spark, dir, "stream_medallion-ckpt"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             // the txn gate: a marker per delivered batch makes the
@@ -508,12 +508,13 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     AS n_rolled_over,
   CAST(3 AS INT) AS restored_as_version""")),
 
-    // --- COPY-ON-WRITE DELETE (ManifestCow): the retention job the
-    // metadata-only fast path rejects — `event_id < 677` is NOT
-    // aligned to part boundaries on the range-partitioned layout, so
-    // the straddling part is REWRITTEN (rows where the predicate is
-    // false survive into a new part file), parts provably inside the
-    // range are dropped metadata-only, parts provably outside carry
+    // --- COPY-ON-WRITE DELETE (the row-level rewrite,
+    // ManifestRowLevelOp): the retention job the metadata-only fast
+    // path rejects — `event_id < 677` is NOT aligned to part
+    // boundaries on the range-partitioned layout, so the straddling
+    // part is REWRITTEN (rows where the predicate is false survive
+    // into a new part file), parts provably inside the range re-emit
+    // nothing and leave the snapshot, parts provably outside carry
     // their files forward by reference. The commit is one new history
     // snapshot; reading snapshot v1 afterwards still returns every
     // pre-delete row — COW never destroys data files (CatalogSpec
@@ -745,8 +746,8 @@ feed AS (
 SELECT _commit_version, _change_type, event_id, event_type
 FROM feed ORDER BY _commit_version, _change_type, event_id""")),
 
-    // --- MERGE-ON-READ DELETE via deletion vectors
-    // (sources/ManifestMor): the metadata-commit alternative to
+    // --- MERGE-ON-READ DELETE via deletion vectors (the row-level
+    // delta write, sources/ManifestDelta): the alternative to
     // q_delete_cow's rewrite — each DELETE flips per-part ordinal
     // bitmaps and publishes ONE tiny snapshot; data files are never
     // touched (MorSpec pins the file inventory), every reader masks.
@@ -2571,8 +2572,8 @@ ORDER BY event_type NULLS FIRST""")),
           .format("graft.sources.ManifestSource").option("path", feed)
           .option("maxPartsPerTrigger", "2").load()
           .writeStream
-          .option("checkpointLocation", java.nio.file.Files
-            .createTempDirectory("graft-smv-ckpt-").toString)
+          .option("checkpointLocation",
+            freshTable(spark, dir, "stream_mv-ckpt"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
               batchId: Long) =>
@@ -3823,8 +3824,8 @@ FROM events""")),
           .load()
           .filter(col("price") > 1000.0)
           .writeStream
-          .option("checkpointLocation", java.nio.file.Files
-            .createTempDirectory("graft-ssink-ckpt-").toString)
+          .option("checkpointLocation",
+            freshTable(spark, dir, "stream_sink-ckpt"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable("graftss.wh.silver")
         q.awaitTermination()
@@ -5159,8 +5160,8 @@ WHERE event_id % 2 <> 0 ORDER BY event_id""")),
           .option("maxPartsPerTrigger", "4").load()
           .filter(col("price") > 1000.0)
           .writeStream
-          .option("checkpointLocation", java.nio.file.Files
-            .createTempDirectory("graft-stxn-ckpt-").toString)
+          .option("checkpointLocation",
+            freshTable(spark, dir, "stream_txn-ckpt"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val id = f"ep$batchId%05d"

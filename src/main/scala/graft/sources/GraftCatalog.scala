@@ -1327,18 +1327,16 @@ private[sources] class GraftCatalogTable(
   override def metadataColumns(): Array[MetadataColumn] =
     Array(PartMetaColumn, PosMetaColumn)
 
-  /** SQL UPDATE / MERGE INTO / non-translatable DELETE land here as
-    * group-based copy-on-write rewrites ([[ManifestRowLevelOp]]) by
-    * default, or as MERGE-ON-READ deltas ([[ManifestDeltaOp]],
-    * Spark's SupportsDelta) under `graft.delete.mode=mor` — matched
-    * rows become deletion-vector bits + appended row images instead
-    * of part rewrites, the Iceberg-v2/Delta-DV shape for sparse DML
-    * against wide tables. Stats-decidable DELETEs still take the
-    * metadata fast path and translatable row-level DELETEs the
-    * [[ManifestCow]]/[[ManifestMor]] paths — Spark's
-    * OptimizeMetadataOnlyDeleteFromTable consults canDeleteWhere
-    * before falling back to the rewrite, so adding row-level support
-    * widens the DML surface without demoting the cheap paths. */
+  /** SQL UPDATE / MERGE INTO / every DELETE not answered from
+    * metadata land here as group-based copy-on-write rewrites
+    * ([[ManifestRowLevelOp]]) by default, or as MERGE-ON-READ deltas
+    * ([[ManifestDeltaOp]], Spark's SupportsDelta) under
+    * `graft.delete.mode=mor` — matched rows become deletion-vector
+    * bits + appended row images instead of part rewrites, the
+    * Iceberg-v2/Delta-DV shape for sparse DML against wide tables.
+    * Equality deletes and stats-decidable DELETEs still take their
+    * commit-only paths — Spark's OptimizeMetadataOnlyDeleteFromTable
+    * consults canDeleteWhere before falling back to the rewrite. */
   /** BRANCH-SCOPED DML (`spark.conf.set("graft.branch", "audit")` —
     * Iceberg's `spark.wap.branch` session routing): with a branch
     * set, UPDATE / DELETE / MERGE read the BRANCH head and commit to
@@ -1358,7 +1356,7 @@ private[sources] class GraftCatalogTable(
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation = {
         val branch = sessionBranch
-        if (ManifestMor.morEnabled(
+        if (ManifestDeltaOp.morEnabled(
             org.apache.spark.sql.SparkSession.active))
           new ManifestDeltaOp(path, tableSchema, info.command, branch)
         else new ManifestRowLevelOp(path, tableSchema, info.command, branch)
@@ -1390,52 +1388,37 @@ private[sources] class GraftCatalogTable(
     decideOn(ManifestSink.readManifestMeta(
       ManifestSink.driverConf(), path, None), filters)
 
-  /** Metadata fast path when every part is stats-decidable; otherwise
-    * the copy-on-write rewrite ([[ManifestCow]]) — accepted exactly
-    * when the predicate is row-evaluable, so unsupported shapes are
-    * still rejected at analysis rather than half-applied. */
+  /** The DELETEs answered by a commit alone: equality deletes under
+    * `graft.delete.mode=eq`, and the metadata fast path when every
+    * part is stats-decidable. Every other DELETE is declined here and
+    * Spark plans the row-level rewrite ([[newRowLevelOperationBuilder]]),
+    * which also rejects unsupported shapes at analysis. */
   override def canDeleteWhere(filters: Array[V1Filter]): Boolean =
-    // branch-routed sessions decline the metadata/COW fast paths
-    // (both commit to MAIN); Spark then plans the row-level rewrite,
-    // which routes to the branch line. EQUALITY deletes are the
-    // exception — their commit is branch-aware, so they accept under
-    // a session branch too.
+    // branch-routed sessions decline the metadata fast path (it
+    // commits to MAIN); the row-level rewrite routes to the branch
+    // line. EQUALITY deletes are the exception — their commit is
+    // branch-aware, so they accept under a session branch too.
     ManifestEq.canDelete(org.apache.spark.sql.SparkSession.active,
       path, tableSchema, filters) ||
-      (sessionBranch.isEmpty &&
-        (decide(filters).isDefined ||
-          filters.forall(ManifestCow.translatable)))
+      (sessionBranch.isEmpty && decide(filters).isDefined)
 
   override def deleteWhere(filters: Array[V1Filter]): Unit = {
-    // EQUALITY mode first (branch-aware; under a session branch the
-    // other fast paths were declined at canDeleteWhere)
-    val sparkNow = org.apache.spark.sql.SparkSession.active
-    if (ManifestEq.canDelete(sparkNow, path, tableSchema, filters)) {
+    if (ManifestEq.canDelete(org.apache.spark.sql.SparkSession.active,
+        path, tableSchema, filters)) {
       ManifestEq.deleteWhere(path, tableSchema, filters, sessionBranch)
       return
     }
-    decide(filters) match {
-      case Some(_) =>
-        // the keep list is recomputed from the head INSIDE the commit
-        // loop, so a commit racing this delete keeps its parts; if the
-        // new head makes the delete stats-undecidable, fail loudly
-        // rather than half-apply (the caller re-plans → COW path)
-        ManifestSink.publishRebase(ManifestSink.driverConf(), path,
-          tableSchema,
-          rebase = head => decideOn(head, filters).getOrElse(
-            throw new java.util.ConcurrentModificationException(
-              s"metadata DELETE on $path no longer stats-decidable " +
-                "after a concurrent commit; re-plan (copy-on-write)")),
-          strictBase = None, op = "delete")
-      case None =>
-        // row-level half, by session mode: deletion-vector commit
-        // (graft.delete.mode=mor) or the copy-on-write rewrite
-        // default — same answer, opposite cost shapes (the equality
-        // path was dispatched above)
-        if (ManifestMor.morEnabled(sparkNow))
-          ManifestMor.deleteWhere(path, tableSchema, filters)
-        else ManifestCow.deleteWhere(path, tableSchema, filters)
-    }
+    // the keep list is recomputed from the head INSIDE the commit
+    // loop, so a commit racing this delete keeps its parts; if the
+    // new head makes the delete stats-undecidable, fail loudly rather
+    // than half-apply (the caller re-plans → row-level rewrite)
+    ManifestSink.publishRebase(ManifestSink.driverConf(), path,
+      tableSchema,
+      rebase = head => decideOn(head, filters).getOrElse(
+        throw new java.util.ConcurrentModificationException(
+          s"metadata DELETE on $path no longer stats-decidable " +
+            "after a concurrent commit; re-plan (row-level rewrite)")),
+      strictBase = None, op = "delete")
   }
 
   override def name(): String = ident.toString

@@ -6,40 +6,34 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, not}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{LongType, StructType}
 
-/** Copy-on-write DELETE for the manifest format — the row-level half
-  * the metadata-only fast path (GraftCatalogTable.decide) cannot
-  * serve: a predicate that straddles part boundaries, or touches
-  * non-key columns, rewrites ONLY the parts whose stats overlap it
-  * and commits a new snapshot listing `untouched ++ rewritten`
-  * (the Delta/Iceberg COW default; Armbrust et al., VLDB 2020 §4.1).
+/** Copy-on-write survivor kernel for REPLACE WHERE: a predicate that
+  * straddles part boundaries, or touches non-key columns, rewrites
+  * ONLY the parts whose stats overlap it (the Delta/Iceberg COW
+  * shape; Armbrust et al., VLDB 2020 §4.1). The caller folds
+  * `untouched ++ rewritten ++ itsNewParts` into one snapshot.
   *
-  * Protocol (all through the format's own machinery — nothing
-  * bypasses the commit path):
+  * Protocol (all through the format's own machinery):
   *   1. classify parts from manifest stats: `untouched` (key range
   *      provably disjoint from the predicate's key conjuncts — a
-  *      NULL key never satisfies a range conjunct, so null-key rows
-  *      can't be deleted by one), `dropped` (pure key-range
-  *      predicate, part fully inside with zero null keys — every row
-  *      provably matches), `affected` (the rest — must be rewritten),
+  *      NULL key never satisfies a range conjunct), `dropped` (pure
+  *      key-range predicate, part fully inside with zero null keys —
+  *      every row provably matches), `affected` (the rest),
   *   2. stage a temp read-manifest listing ONLY the affected parts
   *      (absolute paths: no data is copied to stage a read),
   *   3. distributed rewrite: scan those parts through the normal
   *      source, keep rows where the predicate is FALSE or NULL (SQL
   *      DELETE semantics), write them through the normal sink,
-  *   4. move the new part files into the table dir and commit
-  *      `untouched ++ rewritten` as the next snapshot.
+  *   4. move the new part files into the table dir.
   *
   * Time travel is untouched by construction: prior snapshots still
-  * list the pre-delete part files, which COW never deletes (VACUUM
-  * owns their retirement). At 100 TB the rewrite cost is proportional
-  * to the parts the predicate actually touches — on a range-
-  * partitioned layout a retention delete rewrites exactly the one
-  * boundary-straddling part.
+  * list the replaced part files (VACUUM owns their retirement).
+  * SQL DELETE does not come here: it runs through the row-level
+  * rewrite ([[ManifestRowLevelOp]]).
   */
 private[sources] object ManifestCow {
 
   /** The V1 filter subset this path can evaluate row-wise. Kept in
-    * sync with [[toColumn]]; canDeleteWhere advertises exactly this,
+    * sync with [[toColumn]]; canOverwrite advertises exactly this,
     * so unsupported predicates are rejected at ANALYSIS, not midway
     * through a rewrite. */
   def translatable(f: Filter): Boolean = f match {
@@ -70,38 +64,16 @@ private[sources] object ManifestCow {
     case Or(l, r)                 => toColumn(l) || toColumn(r)
     case Not(c)                   => !toColumn(c)
     case other => throw new UnsupportedOperationException(
-      s"DELETE predicate not supported for copy-on-write: $other")
+      s"predicate not supported for copy-on-write: $other")
   }
 
-  def deleteWhere(path: String, schema: StructType,
-      filters: Array[Filter]): Unit = {
-    val conf = ManifestSink.driverConf()
-    // Pin the BASE snapshot: the part classification below (and the
-    // rewrite built on it) is only valid against this exact head. The
-    // final publish passes strictBase so a commit that lands mid-COW
-    // fails this delete loudly (ConcurrentModificationException)
-    // instead of publishing a snapshot that silently drops the racing
-    // commit's parts — a COW rewrite can't be mechanically re-applied
-    // the way an append can.
-    val baseVersion = ManifestSink.listVersions(conf, path)
-      .lastOption.getOrElse(0)
-    val parts = ManifestSink.readManifestMeta(conf, path, Some(baseVersion))
-    val (touched, rewritten) = rewriteSurvivors(path, schema, filters, parts)
-    if (touched.isEmpty) return // predicate provably matches no row
-    ManifestSink.publishRebase(conf, path, schema,
-      head => head.filterNot(p => touched.contains(p.path)) ++ rewritten,
-      strictBase = Some(baseVersion), footprint = Some(touched),
-      op = "delete")
-  }
-
-  /** The COW kernel shared by DELETE and REPLACE WHERE: classify the
-    * pinned base `parts` against the predicate's key conjuncts, run
-    * the distributed survivor rewrite for the straddling parts, and
-    * return (touched part paths, rewritten survivor parts) — WITHOUT
-    * publishing. The caller owns the commit, so a REPLACE WHERE can
-    * fold `filterNot(touched) ++ rewritten ++ itsNewParts` into ONE
-    * atomic snapshot (delete-half and append-half never visible
-    * separately). */
+  /** The REPLACE WHERE kernel: classify the pinned base `parts`
+    * against the predicate's key conjuncts, run the distributed
+    * survivor rewrite for the straddling parts, and return (touched
+    * part paths, rewritten survivor parts) — WITHOUT publishing. The
+    * caller owns the commit, so a REPLACE WHERE can fold
+    * `filterNot(touched) ++ rewritten ++ itsNewParts` into ONE atomic
+    * snapshot (delete-half and append-half never visible separately). */
   private[sources] def rewriteSurvivors(path: String, schema: StructType,
       filters: Array[Filter],
       parts: Seq[PartMeta]): (Set[String], Seq[PartMeta]) = {

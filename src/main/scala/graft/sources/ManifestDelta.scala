@@ -10,12 +10,13 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 /** DELTA-BASED (merge-on-read) row-level operations — what
-  * `graft.delete.mode=mor` routes SQL UPDATE / MERGE INTO / row-level
-  * DELETE through instead of [[ManifestRowLevelOp]]'s copy-on-write
-  * part rewrite. This is Spark's `SupportsDelta` contract (the
-  * Iceberg v2 position-delta shape): the rewrite plans a WriteDelta
-  * that hands the connector ONLY the changed rows, each addressed by
-  * the row ID (`_part`, `_pos`), with updates split into
+  * `graft.delete.mode=mor` routes SQL UPDATE / MERGE INTO / every
+  * DELETE not answered from metadata through instead of
+  * [[ManifestRowLevelOp]]'s copy-on-write part rewrite; the engine's
+  * one deletion-vector writer. This is Spark's `SupportsDelta`
+  * contract (the Iceberg v2 position-delta shape): the rewrite plans
+  * a WriteDelta that hands the connector ONLY the changed rows, each
+  * addressed by the row ID (`_part`, `_pos`), with updates split into
   * delete + reinsert pairs (`representUpdateAsDeleteAndInsert`).
   *
   * Cost shape vs COW: a sparse MERGE touching 100k parts rewrites
@@ -42,7 +43,26 @@ import org.apache.spark.util.SerializableConfiguration
   * the commit pins the planned base and proves its touched-part
   * footprint unchanged (publishRebase footprint guard), so disjoint
   * concurrent DML composes and overlapping DML fails loudly.
+  *
+  * The change feed replays a vector commit as exactly the
+  * newly-flagged ordinals ('delete' rows); time travel reads the old
+  * manifest and therefore the old (or no) vector.
   */
+private[sources] object ManifestDeltaOp {
+
+  /** Session conf choosing the DELETE mode: unset = copy-on-write,
+    * `mor` = deletion vectors through this operation, `eq` =
+    * equality-delete clauses ([[ManifestEq]]). */
+  val ModeConf = "graft.delete.mode"
+
+  /** The session's DELETE mode, lower-cased; None = copy-on-write. */
+  def deleteMode(spark: org.apache.spark.sql.SparkSession): Option[String] =
+    spark.conf.getOption(ModeConf).map(_.toLowerCase(java.util.Locale.ROOT))
+
+  def morEnabled(spark: org.apache.spark.sql.SparkSession): Boolean =
+    deleteMode(spark).contains("mor")
+}
+
 private[sources] class ManifestDeltaOp(
     path: String, schema: StructType,
     cmd: RowLevelOperation.Command,
@@ -129,15 +149,18 @@ private[sources] class ManifestDeltaBatchWrite(
         p -> (DeleteVector.writeRef(conf.value, path, name, sized), card)
       }
 
-    ManifestSink.publishRebase(conf.value, path, schema,
-      head => head.map(p => updated.get(p.path)
-        .map { case (ref, card) =>
-          p.copy(dvHex = "", dvRef = ref, dvCard = card)
-        }.getOrElse(p)) ++ newParts,
-      strictBase = Some(base),
-      footprint = Some(updated.keySet),
-      branch = op.branch,
-      op = op.command().toString.toLowerCase)
+    // a statement that flagged and inserted nothing changes nothing:
+    // no empty version
+    if (updated.nonEmpty || newParts.nonEmpty)
+      ManifestSink.publishRebase(conf.value, path, schema,
+        head => head.map(p => updated.get(p.path)
+          .map { case (ref, card) =>
+            p.copy(dvRef = ref, dvCard = card)
+          }.getOrElse(p)) ++ newParts,
+        strictBase = Some(base),
+        footprint = Some(updated.keySet),
+        branch = op.branch,
+        op = op.command().toString.toLowerCase)
 
     // fragments are never referenced by a manifest — reclaim eagerly
     commits.flatMap(_.frags).foreach { case (_, ref, _) =>

@@ -47,15 +47,14 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
 private[sources] object ManifestEq {
 
   def eqEnabled(spark: SparkSession): Boolean =
-    try spark.conf.get(ManifestMor.ModeConf, "") == "eq"
-    catch { case scala.util.control.NonFatal(_) => false }
+    ManifestDeltaOp.deleteMode(spark).contains("eq")
 
   /** The single-column equality clause these deletes accept: exactly
     * one `=` or `IN` filter on a BIGINT/STRING column. Values are
     * canonicalized to raw form ('l' = decimal string); NULLs in an
     * IN-list drop (`col = NULL` never matches a row). Range deletes
     * take [[translateRange]] instead; anything else returns None and
-    * the session falls back to COW/MOR. */
+    * the session falls back to the row-level rewrite. */
   def translate(schema: StructType,
       filters: Array[V1Filter]): Option[(String, Seq[Any])] =
     filters match {

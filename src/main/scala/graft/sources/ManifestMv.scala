@@ -329,7 +329,7 @@ private[sources] object ManifestMv {
     // a vector change: minus the old line's rows, plus the new
     // (eq-masked) read — the snapshot algebra needs no special case
     def vectorChanged(a: PartMeta, b: PartMeta): Boolean =
-      a.dvHex != b.dvHex || a.dvRef != b.dvRef || a.eq != b.eq
+      a.dvRef != b.dvRef || a.eq != b.eq
     // plus = new-only parts + new state of vector-changed parts;
     // minus = old-only parts + OLD state of vector-changed parts
     val plus = newParts.valuesIterator.filter(p =>

@@ -40,12 +40,13 @@ private[sources] object PosMetaColumn extends MetadataColumn {
 }
 
 /** GROUP-BASED (copy-on-write) row-level operations for the manifest
-  * format — what turns SQL `UPDATE`, `MERGE INTO`, and arbitrary
-  * `DELETE` into first-class DML on catalog tables (the Iceberg
-  * copy-on-write shape; Spark's `RewriteUpdateTable` /
+  * format — what turns SQL `UPDATE`, `MERGE INTO`, and every `DELETE`
+  * not answered from metadata into first-class DML on catalog tables
+  * (the Iceberg copy-on-write shape; Spark's `RewriteUpdateTable` /
   * `RewriteMergeIntoTable` / `RewriteDeleteFromTable` plan a
-  * ReplaceData over this operation when the metadata/COW fast paths
-  * don't apply).
+  * ReplaceData over this operation when canDeleteWhere declines). A
+  * DELETE whose scan finds a part wholly matched re-emits nothing for
+  * it, so the part simply leaves the snapshot.
   *
   * The "group" is the PART FILE. The contract with Spark's
   * group-based rewrite:
@@ -55,18 +56,20 @@ private[sources] object PosMetaColumn extends MetadataColumn {
   *     at RUNTIME by the matched-key dynamic filter
   *     (`RowLevelOperationRuntimeGroupFiltering` feeds the scan's
   *     SupportsRuntimeV2Filtering, so parts that provably hold no
-  *     matched row are never read OR rewritten);
+  *     matched row are never read OR rewritten) — except a DELETE
+  *     whose key range or points already bound the parts, which
+  *     declines that second scan;
   *  2. Spark re-emits EVERY surviving row of the scanned parts
   *     (changed and carried-over alike) into this operation's write;
   *  3. commit publishes `head − scannedParts + newParts` as the next
   *     snapshot — unscanned parts carry forward BY REFERENCE, the
   *     superseded files stay on disk for time travel (vacuum owns
-  *     their retirement), exactly like [[ManifestCow]].
+  *     their retirement).
   *
   * Concurrency: the rewrite is planned against one head, so the
   * commit pins that base version (`strictBase`) — a commit racing the
   * rewrite fails THIS operation loudly instead of silently dropping
-  * either side's rows (same policy as the COW DELETE path).
+  * either side's rows.
   *
   * At 100 TB this is the difference between "UPDATE rewrites the
   * table" and "UPDATE rewrites the handful of parts that contain
@@ -131,15 +134,26 @@ private[sources] class ManifestReplaceWrite(
     dir.getFileSystem(conf.value).mkdirs(dir)
     val f = new ManifestWriterFactory(path, schema, token, conf)
     // MERGE INSERT cannot generate identity/generated values on this
-    // path; a NULL in a computed slot refuses rather than landing
-    val guard = ComputedColumns.guardSlots(conf.value, path, schema)
+    // path; a NULL in a computed slot refuses rather than landing. A
+    // DELETE only carries committed rows back, whose generated slots
+    // may hold a computed NULL (`x * 2` of a NULL x): no guard
+    val guard =
+      if (op.command() == RowLevelOperation.Command.DELETE) Seq.empty
+      else ComputedColumns.guardSlots(conf.value, path, schema)
     if (guard.isEmpty) f else ComputedNullGuardFactory(f, schema, guard)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val newParts = messages.toSeq.map { case m: PartMeta => m }
-      .filter(_.rows > 0) // an all-deleted group needs no empty part
+    // an all-deleted group re-emits nothing: its task staged an empty
+    // part file, which no snapshot lists — remove it, not leave it
+    val (newParts, empty) = messages.toSeq.map { case m: PartMeta => m }
+      .partition(_.rows > 0)
+    val fs = new Path(path).getFileSystem(conf.value)
+    empty.foreach(m => fs.delete(new Path(m.path), false))
     val (replaced, base) = op.scannedOrFail
+    // nothing scanned and nothing inserted changes nothing: no empty
+    // version
+    if (replaced.isEmpty && newParts.isEmpty) return
     val replacedPaths = replaced.map(_.path).toSet
     // footprint = the scanned (replaced) parts: a concurrent commit
     // that only touched OTHER parts composes — its parts carry

@@ -249,8 +249,8 @@ private[sources] final case class ColStat(kind: Char, min: String,
 
 /** BIGINT/TIMESTAMP predicates as canonical INCLUSIVE intervals, and a
   * part's place against one — the single rule the scan, the
-  * metadata-only and copy-on-write DELETE paths and range equality
-  * deletes share. An empty interval (lo > hi) matches nothing:
+  * metadata-only DELETE path, the REPLACE WHERE kernel and range
+  * equality deletes share. An empty interval (lo > hi) matches nothing:
   * `c > Long.MaxValue` and `c < Long.MinValue` map to it, never to the
   * one-point interval at the extreme, which would skip (or delete) the
   * rows stored there. */
@@ -314,14 +314,12 @@ private[sources] object LongRange {
 }
 
 /** DELETION VECTOR codec: a bitmap over a part's row ORDINALS (line
-  * numbers 0..rows-1), hex-encoded in the manifest line — the
-  * merge-on-read DELETE representation (Delta deletion vectors /
-  * Iceberg positional deletes): a delete is a METADATA commit that
-  * flips bits instead of rewriting data files; every reader masks the
-  * flagged ordinals. A production format spills big vectors to side
-  * files (the same note as [[PartBloom]]); inline hex keeps the
-  * sandbox manifest self-contained (8 KiB per 64k-row part, and only
-  * on parts that actually have deletes). */
+  * numbers 0..rows-1) — the merge-on-read DELETE representation
+  * (Delta deletion vectors / Iceberg positional deletes): a delete is
+  * a METADATA commit that flips bits instead of rewriting data files;
+  * every reader masks the flagged ordinals. A committed vector lives
+  * in a hex SIDECAR file next to the part; the manifest line carries
+  * only its reference and cardinality ([[PartMeta.dvRef]]). */
 private[sources] object DeleteVector {
   def empty: Array[Long] = Array.empty
 
@@ -332,15 +330,6 @@ private[sources] object DeleteVector {
 
   def popCount(bits: Array[Long]): Long =
     bits.foldLeft(0L)((acc, w) => acc + java.lang.Long.bitCount(w))
-
-  def fromOrdinals(ordinals: Iterable[Long], rows: Long): Array[Long] = {
-    val bits = new Array[Long]((((rows - 1) >>> 6) + 1).toInt)
-    ordinals.foreach { o =>
-      require(o >= 0 && o < rows, s"ordinal $o outside part of $rows rows")
-      bits((o >>> 6).toInt) |= 1L << (o & 63)
-    }
-    bits
-  }
 
   /** Bitwise OR — merging a new delete into an existing vector. */
   def union(a: Array[Long], b: Array[Long]): Array[Long] = {
@@ -383,10 +372,10 @@ private[sources] object DeleteVector {
     fromHex(hex)
   }
 
-  /** The one vector resolver every consumer routes through: sidecar
-    * reference if present, else the inline hex. */
+  /** The part's committed vector: its sidecar, or empty when the part
+    * has none. */
   def load(conf: Configuration, m: PartMeta): Array[Long] =
-    if (m.dvRef.nonEmpty) readRef(conf, m.dvRef) else m.dvBits
+    if (m.hasDv) readRef(conf, m.dvRef) else empty
 }
 
 /** EQUALITY-DELETE clause pending on a part (the Iceberg v2
@@ -413,15 +402,16 @@ private[sources] final case class EqClause(
   * statistics live in `cstats`, one [[ColStat]] per tracked column
   * keyed by name. `bytes` is the part file's exact on-disk size (the
   * planner-facing size statistic); `sorted` certifies the rows arrived
-  * in non-decreasing key order with no null key. `dvHex` is the part's
-  * DELETION VECTOR ("" = nothing deleted); `rows` stays the PHYSICAL
-  * line count — [[visibleRows]] is the served count, and all other
-  * stats become safe OVER-approximations once a vector exists (pruning
-  * may only over-include; exact metadata answers must consult
-  * [[visibleRows]] or decline). */
+  * in non-decreasing key order with no null key. `dvRef` is the part's
+  * DELETION VECTOR sidecar ("" = nothing deleted) and `dvCard` its
+  * cached cardinality, so metadata answers never open the sidecar;
+  * `rows` stays the PHYSICAL line count — [[visibleRows]] is the
+  * served count, and all other stats become safe OVER-approximations
+  * once a vector exists (pruning may only over-include; exact
+  * metadata answers must consult [[visibleRows]] or decline). */
 private[sources] final case class PartMeta(
     path: String, rows: Long,
-    dvHex: String = "", dvRef: String = "", dvCard: Long = 0L,
+    dvRef: String = "", dvCard: Long = 0L,
     bytes: Long = 0L, bucket: Int = -1, nbuckets: Int = 0,
     sorted: Boolean = false,
     cstats: Map[String, ColStat] = Map.empty,
@@ -432,15 +422,8 @@ private[sources] final case class PartMeta(
       * identity (sub-slot = nested id) — the legacy rule one level
       * down; see [[ColMap.nested]]. */
     ncols: Map[Int, Seq[Int]] = Map.empty) extends WriterCommitMessage {
-  lazy val dvBits: Array[Long] = DeleteVector.fromHex(dvHex)
-  /** A vector exists — inline (`dvHex`) or as a SIDECAR file
-    * (`dvRef` + its cached cardinality `dvCard`). The sidecar is the
-    * at-scale shape: executors write the bitmap, the manifest carries
-    * only the reference, and metadata answers (visibleRows) come from
-    * the cardinality without opening the sidecar. */
-  def hasDv: Boolean = dvHex.nonEmpty || dvRef.nonEmpty
-  def dvCount: Long =
-    if (dvRef.nonEmpty) dvCard else DeleteVector.popCount(dvBits)
+  def hasDv: Boolean = dvRef.nonEmpty
+  def dvCount: Long = dvCard
   /** Served row count — EXACT unless equality-delete clauses are
     * pending ([[eq]] non-empty), in which case it is an
     * OVER-approximation (matches are unknown without a scan): safe

@@ -635,10 +635,16 @@ private[sources] class ManifestScanBuilder(
               }
           }
         }
+        // a row-level DELETE whose key range or points already bound
+        // the parts gains little from Spark's runtime group filter,
+        // which costs a second scan of those parts: decline it
+        val keyBoundDelete = rowLevelOwner.exists(_.command() ==
+          org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE) &&
+          keyCol.exists(c => longBounds.contains(c) || longPoints.contains(c))
         new ManifestScan(kept, schema, required, conf, all.size, limit, keyCol,
           path, rowLevelOwner, startingVersion, baseVersion,
           maxPartsPerTrigger, ids = colMapIdsFor(schema, snapCm),
-          branched = branch.isDefined,
+          branched = branch.isDefined, runtimeFiltered = !keyBoundDelete,
           initDefaults = ColDefaults.byName(schema, snapCm),
           nestedIds = ManifestSource.nestedIdsFor(snapCm))
     }
@@ -722,7 +728,8 @@ private[sources] class ManifestScan(
     ids: Seq[Int] = Seq.empty,
     branched: Boolean = false,
     initDefaults: Map[String, Any] = Map.empty,
-    nestedIds: Map[Int, Seq[Int]] = Map.empty)
+    nestedIds: Map[Int, Seq[Int]] = Map.empty,
+    runtimeFiltered: Boolean = true)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
@@ -847,9 +854,11 @@ private[sources] class ManifestScan(
     * ANY stats-tracked dimension column narrows the fact scan at
     * execution. Only columns surviving column pruning are advertised
     * (advertising a pruned-away column makes Spark's PartitionPruning
-    * throw at resolution — pinned by ManifestSourceSpec). */
+    * throw at resolution — pinned by ManifestSourceSpec). None when
+    * the builder declined runtime filtering (`runtimeFiltered`). */
   override def filterAttributes(): Array[NamedReference] =
-    initialParts.iterator.flatMap(_.cstats.keysIterator).distinct
+    if (!runtimeFiltered) Array.empty
+    else initialParts.iterator.flatMap(_.cstats.keysIterator).distinct
       .filter(required.fieldNames.contains)
       .map(c => Expressions.column(c)).toArray
 
@@ -880,8 +889,8 @@ private[sources] class ManifestScan(
     // version the part list was read at (same head read, see build())
     rowLevelOwner.foreach(_.recordScan(parts, baseVersion))
     parts.map(p =>
-      ManifestPartition(p.path, p.rows, p.dvHex, p.dvRef, p.bucket,
-        p.cols, p.eq, p.ncols)).toArray
+      ManifestPartition(p.path, p.rows, dvRef = p.dvRef, bucket = p.bucket,
+        cols = p.cols, eq = p.eq, ncols = p.ncols)).toArray
   }
 
   override def supportedCustomMetrics()
@@ -1011,9 +1020,10 @@ private[sources] class ManifestScan(
 }
 
 /** One data part to decode, for a batch scan, the append stream or
-  * the change feed. `dvRef` (a sidecar path, read on the executor)
-  * wins over inline `dvHex`. `bucket` is the part's storage-bucket
-  * ordinal (−1 = unbucketed); Spark only consults
+  * the change feed. `dvRef` is the part's vector sidecar, read on the
+  * executor; `dvHex` is an inline vector only the change feed fills
+  * (the delta a vector commit added). `bucket` is the part's
+  * storage-bucket ordinal (−1 = unbucketed); Spark only consults
   * [[org.apache.spark.sql.connector.read.HasPartitionKey]] when the
   * scan reported KeyGroupedPartitioning, which it does only when EVERY
   * planned part carries a consistent bucket.
@@ -1148,26 +1158,36 @@ private[sources] class ManifestMicroBatchStream(
     val s = start.asInstanceOf[V].v
     val e = end.asInstanceOf[V].v
     if (e <= s) Array.empty
-    else if (changeFeed) (s + 1 to e).flatMap(changesAt).toArray
-    else {
+    else if (changeFeed) {
+      // each version's manifest is decoded once: it is `cur` for its
+      // own diff and `prev` for the next
+      var prev = metaAt(s)
+      (s + 1 to e).flatMap { v =>
+        val cur = metaAt(v)
+        val out = changesAt(v, prev, cur)
+        prev = cur
+        out
+      }.toArray
+    } else {
       val before = pathsAt(s)
       metaAt(e).filterNot(m => before.contains(m.path))
-        .map(m => ManifestPartition(m.path, m.rows, m.dvHex, m.dvRef,
+        .map(m => ManifestPartition(m.path, m.rows, dvRef = m.dvRef,
           cols = m.cols, eq = m.eq, ncols = m.ncols): InputPartition)
         .toArray
     }
   }
 
-  /** The change-feed diff of commit `v` against `v - 1`. Insert and
-    * delete replays mask with the part's own vector (`dvHex`/`dvRef`,
-    * read on the executor) and its clauses as of the replayed state
-    * (`eq`), so they never leak rows an earlier delete removed. */
-  private def changesAt(v: Int): Seq[InputPartition] = {
-    val prev = metaAt(v - 1).map(m => m.path -> m).toMap
-    val cur = metaAt(v)
+  /** The change-feed diff of commit `v` (parts `cur`) against `v - 1`
+    * (parts `prevParts`). Insert and delete replays mask with the
+    * part's own vector (`dvRef`, read on the executor) and its clauses
+    * as of the replayed state (`eq`), so they never leak rows an
+    * earlier delete removed. */
+  private def changesAt(v: Int, prevParts: Seq[PartMeta],
+      cur: Seq[PartMeta]): Seq[InputPartition] = {
+    val prev = prevParts.map(m => m.path -> m).toMap
     val curPaths = cur.map(_.path).toSet
     def replay(m: PartMeta, changeType: String) =
-      ManifestPartition(m.path, m.rows, m.dvHex, m.dvRef, cols = m.cols,
+      ManifestPartition(m.path, m.rows, dvRef = m.dvRef, cols = m.cols,
         eq = m.eq, ncols = m.ncols, changeType = changeType,
         commitVersion = v)
     val inserts = cur.filterNot(m => prev.contains(m.path))
@@ -1178,19 +1198,15 @@ private[sources] class ManifestMicroBatchStream(
     // newly-flagged ordinals as deletes — true row-level CDC for
     // merge-on-read deletes, no restatement of survivors. The delta is
     // computed here; a sidecar is content-immutable once written (each
-    // delete publishes a NEW token-named file), so "same (dvHex, dvRef)
-    // pair" ⇔ "same vector". (A RESTORE that rolls a vector BACK emits
+    // delete publishes a NEW token-named file), so "same `dvRef`" ⇔
+    // "same vector". (A RESTORE that rolls a vector BACK emits
     // nothing for the un-deleted rows — restore is a head replacement,
     // not a change event; Delta's CDF has the same blind spot.)
-    def vecHex(m: PartMeta): String =
-      if (m.dvRef.nonEmpty)
-        DeleteVector.toHex(DeleteVector.readRef(conf.value, m.dvRef))
-      else m.dvHex
     val dvDeletes = cur.flatMap { m =>
       prev.get(m.path) match {
-        case Some(old) if m.dvHex != old.dvHex || m.dvRef != old.dvRef =>
-          val delta = DeleteVector.minus(DeleteVector.fromHex(vecHex(m)),
-            DeleteVector.fromHex(vecHex(old)))
+        case Some(old) if m.dvRef != old.dvRef =>
+          val delta = DeleteVector.minus(DeleteVector.load(conf.value, m),
+            DeleteVector.load(conf.value, old))
           if (DeleteVector.popCount(delta) == 0) None
           else Some(replay(m, "delete").copy(dvHex = DeleteVector.toHex(delta),
             dvRef = "", eq = old.eq, emitOnlyMask = true))
@@ -1459,8 +1475,9 @@ private[sources] case class LongTaskMetric(metricName: String, v: Long)
   *
   * Per line, in order: the deletion-vector test (a line replays when
   * its bit equals the partition's `emitOnlyMask` — so a plain read
-  * keeps the unflagged lines), then, only for parts with equality
-  * clauses, one split and the clause masks (see [[EqMask]]).
+  * keeps the unflagged lines), then one split, whose tokens feed the
+  * equality-clause masks (see [[EqMask]]; none on most parts) and
+  * then the decoder.
   *
   * Column mapping resolves per part: logical field -> stable field id
   * (`ids`, identity when absent) -> the part's recorded line slot
@@ -1517,7 +1534,7 @@ private[sources] class ManifestReaderFactory(
       // merge-on-read: the part's deletion vector masks flagged line
       // ordinals — data files are never rewritten by a MOR delete.
       // Sidecar vectors are read ON THE EXECUTOR (one small file next
-      // to the part), inline hex decodes from the partition itself.
+      // to the part); a change-feed delta ships inline as `dvHex`.
       private val dv =
         if (part.dvRef.nonEmpty) DeleteVector.readRef(conf.value, part.dvRef)
         else DeleteVector.fromHex(part.dvHex)
@@ -1528,7 +1545,6 @@ private[sources] class ManifestReaderFactory(
       private val eqDflts = EqMask.defaultToks(schema, ids, initDefaults)
       private val eqMatchers = EqMask.matchers(part.eq, part.cols, eqDflts)
       private val onlyEq = EqMask.matchers(part.emitOnlyEq, part.cols, eqDflts)
-      private val plainLines = eqMatchers.isEmpty && onlyEq.isEmpty
       private val in = path.getFileSystem(conf.value).open(path)
       private val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       private var current: InternalRow = _
@@ -1546,23 +1562,19 @@ private[sources] class ManifestReaderFactory(
         // a pushed limit caps every partition: one partition can
         // satisfy at most the whole limit, so stop reading past it
         if (emitted >= rowCap) return false
-        var line: String = null
-        while (line == null && lines.hasNext) {
-          val candidate = lines.next()
+        var cols: Array[String] = null
+        while (cols == null && lines.hasNext) {
+          val line = lines.next()
           lineNo += 1
           if (DeleteVector.isDeleted(dv, lineNo) == part.emitOnlyMask) {
-            if (plainLines) line = candidate
-            else {
-              val toks = candidate.split(",", -1)
-              if (EqMask.matches(eqMatchers, toks)) eqMasked += 1
-              else if (onlyEq.isEmpty || EqMask.matches(onlyEq, toks))
-                line = candidate
-            }
+            val toks = line.split(",", -1)
+            if (EqMask.matches(eqMatchers, toks)) eqMasked += 1
+            else if (onlyEq.isEmpty || EqMask.matches(onlyEq, toks))
+              cols = toks
           } else masked += 1
         }
-        if (line == null) return false
+        if (cols == null) return false
         emitted += 1
-        val cols = line.split(",", -1)
         val vals = new Array[Any](ordinals.length)
         var j = 0
         while (j < ordinals.length) {

@@ -186,7 +186,6 @@ private[sources] object MetaJson {
 
   def encodePart(m: PartMeta): String = render(obj(
     "path" -> JString(m.path), "rows" -> JLong(m.rows),
-    "dv" -> when(m.dvHex.nonEmpty)(JString(m.dvHex)),
     "dvref" -> when(m.dvRef.nonEmpty)(JString(m.dvRef)),
     "dvrows" -> when(m.dvRef.nonEmpty)(JLong(m.dvCard)),
     "bytes" -> when(m.bytes > 0)(JLong(m.bytes)),
@@ -199,8 +198,12 @@ private[sources] object MetaJson {
       .map { case (pid, sids) => pid.toString -> ints(sids) })),
     "eq" -> when(m.eq.nonEmpty)(JArray(m.eq.map(eqJson).toList))))
 
-  private def partOf(f: Map[String, JValue]): PartMeta =
-    PartMeta(f.text("path"), f.long("rows"), f.textOr("dv", ""),
+  private def partOf(f: Map[String, JValue]): PartMeta = {
+    // earlier builds wrote inline vectors here; loading such a part
+    // without its vector would resurrect deleted rows
+    require(!f.contains("dv"), "inline deletion vectors are no longer " +
+      s"read; rewrite the table (part ${f.text("path")})")
+    PartMeta(f.text("path"), f.long("rows"),
       f.textOr("dvref", ""), f.longOr("dvrows", 0L),
       f.longOr("bytes", 0L), f.longOr("bucket", -1L).toInt,
       f.longOr("nbuckets", 0L).toInt,
@@ -213,6 +216,7 @@ private[sources] object MetaJson {
       },
       ncols = f.get("ncols").fold(Map.empty[Int, Seq[Int]])(v =>
         fields(v).map { case (pid, sids) => pid.toInt -> asInts(sids) }))
+  }
 
   def decodePart(line: String): PartMeta = partOf(fields(parse(line)))
 

@@ -322,10 +322,10 @@ ORDER BY c.user_id""")),
         // GETTER (expired reads absent), not in background cleanup
         spark.conf.set(nd, "false")
         try {
-          val stage = Files.createTempDirectory("graft-ttl-stage-").toString
-          val ckpt = Files.createTempDirectory("graft-ttl-ckpt-").toString
-          val out1 = Files.createTempDirectory("graft-ttl-o1-").toString
-          val out2 = Files.createTempDirectory("graft-ttl-o2-").toString
+          val stage = QueryDef.freshTable(spark, dir, "stream_ttl-stage")
+          val ckpt = QueryDef.freshTable(spark, dir, "stream_ttl-ckpt")
+          val out1 = QueryDef.freshTable(spark, dir, "stream_ttl-out1")
+          val out2 = QueryDef.freshTable(spark, dir, "stream_ttl-out2")
           val src = Tables.events(spark, dir)
             .select(col("user_id"), col("event_id"), col("value"))
           src.coalesce(1).write.mode("append").parquet(stage)
@@ -426,14 +426,7 @@ GROUP BY user_id ORDER BY user_id""")),
     // not just sink output, are exactly right.
     QueryDef("q_state_reader",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#statereader").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val ckpt = s"${spark.conf.get("spark.sql.warehouse.dir")}" +
-          s"/graft-state-ckpt/$key"
-        val p = new org.apache.hadoop.fs.Path(ckpt)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true) // idempotent reruns
+        val ckpt = QueryDef.freshTable(spark, dir, "state_reader-ckpt")
         val agg = eventsStream(spark, dir)
           .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
         val q = agg.writeStream.format("memory")
@@ -719,7 +712,9 @@ ORDER BY p.user_id, p_id, c_id NULLS FIRST""")),
     // explicit, so any merge order converges.
     QueryDef("q_stream_upsert",
       (spark, dir) => {
-        val target = Files.createTempDirectory("graft-upsert-").toString + "/state"
+        val target = QueryDef.freshTable(spark, dir, "stream_upsert-state")
+        val targetPath = new org.apache.hadoop.fs.Path(target)
+        val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val latest = (df: DataFrame) => df
           .groupBy(col("user_id"))
           .agg(max_by(struct(col("ts"), col("event_id"), col("value")),
@@ -730,13 +725,13 @@ ORDER BY p.user_id, p_id, c_id NULLS FIRST""")),
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
           .option("checkpointLocation",
-            Files.createTempDirectory("graft-upsert-ckpt-").toString)
+            QueryDef.freshTable(spark, dir, "stream_upsert-ckpt"))
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val spark0 = batch.sparkSession
             val proj = batch.select(col("user_id"), col("ts"),
               col("event_id"), col("value"))
             val existing =
-              if (new java.io.File(target).exists)
+              if (fs.exists(targetPath))
                 spark0.read.parquet(target)
               else proj.limit(0)
             val merged = latest(existing.unionByName(proj)).cache()
@@ -848,7 +843,7 @@ FROM events""")),
           .as("mx"))))
           .withColumn("cut", col("mx") - expr("INTERVAL 15 DAYS"))
         def stageOne(df: DataFrame, name: String): Unit = {
-          val tmp = Files.createTempDirectory("graft-late-").toString
+          val tmp = QueryDef.freshDir(spark, dir, "stream_late_audit-part")
           df.coalesce(1).write.mode("overwrite").parquet(tmp)
           val part = new java.io.File(tmp).listFiles()
             .map(_.toString).filter(_.endsWith(".parquet")).head
@@ -934,7 +929,7 @@ ORDER BY window_start_us, event_type""")),
     // commits deltas.
     QueryDef("q_stream_merge_mor",
       (spark, dir) => {
-        val wh = Files.createTempDirectory("graft-smm-").toString
+        val wh = QueryDef.freshTable(spark, dir, "stream_merge_mor-wh")
         val stageDir = s"$wh/stage"
         spark.conf.set("spark.sql.catalog.graftsmm",
           "graft.sources.GraftCatalog")
@@ -956,7 +951,7 @@ ORDER BY window_start_us, event_type""")),
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
           .option("checkpointLocation",
-            Files.createTempDirectory("graft-smm-ckpt-").toString)
+            QueryDef.freshTable(spark, dir, "stream_merge_mor-ckpt"))
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val s0 = batch.sparkSession
             // dedupe the batch to its own latest-per-key first (MERGE

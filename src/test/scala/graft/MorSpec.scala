@@ -5,8 +5,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Merge-on-read DELETE via deletion vectors (sources/ManifestMor,
-  * DeleteVector): data files untouched, one metadata snapshot per
+/** Merge-on-read DELETE via deletion vectors (the row-level delta
+  * write in sources/ManifestDelta, DeleteVector sidecars): data files
+  * untouched, one metadata snapshot per
   * delete, vectors merge across deletes, every read path masks
   * (batch, limit, metadata-COUNT, streaming CDF), and compaction/COW
   * clears the vectors. */
@@ -156,5 +157,22 @@ class MorSpec extends SparkSpec {
     val conf = spark.sessionState.newHadoopConf()
     val metas = graft.sources.ManifestSink.readManifest(conf, path)
     assert(metas.nonEmpty)
+  }
+
+  test("a DELETE that matches no row commits no version") {
+    val path = mkTable("noop")
+    def versions = graft.sources.ManifestSink.listVersions(
+      spark.sessionState.newHadoopConf(), path)
+    val before = versions
+    withMor {
+      // scanned parts, no matched row: no vector to write
+      spark.sql("DELETE FROM gmor.ns.noop WHERE s = 'v5000'")
+      // the key range prunes every part before the scan
+      spark.sql("DELETE FROM gmor.ns.noop WHERE k >= 5000 AND s = 'x'")
+    }
+    // copy-on-write: nothing scanned, nothing re-emitted
+    spark.sql("DELETE FROM gmor.ns.noop WHERE k >= 5000 AND s = 'x'")
+    assert(versions === before)
+    assert(spark.sql("SELECT count(*) FROM gmor.ns.noop").head.getLong(0) === 1000)
   }
 }

@@ -88,30 +88,58 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("COW DELETE == anti-filter ground truth on generated cut points") {
-    // For arbitrary (non-part-aligned) retention cuts the COW path
-    // must agree with the plain filter, and v1 must stay intact —
-    // the property CatalogSpec's fixed-layout cases can't sweep.
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-cowprop-").toString
-    spark.conf.set("spark.sql.catalog.gcp", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gcp.warehouse", wh)
-    val n = 1000L
+  /** Generated DELETE predicates as (SQL, in-memory twin) over rows
+    * (k, s = "v" + k), k in [0, n): the range cut, equality on the
+    * non-key string, IN on the key, and a conjunct mixing a key range
+    * with `s`. */
+  private def deleteCases(n: Long): Seq[(String, (Long, String) => Boolean)] = {
     val cuts = samples(Gen.choose(1L, n - 1), 4).distinct
-    for ((cut, i) <- cuts.zipWithIndex) {
-      val table = s"$wh/ns/t$i"
-      (0L until n).map(j => (j, s"v$j")).toDF("k", "s")
-        .repartitionByRange(5, col("k"))
-        .write.format("graft.sources.ManifestSink")
-        .option("path", table)
-        .mode("overwrite").save()
-      spark.sql(s"DELETE FROM gcp.ns.t$i WHERE k >= $cut")
-      val got = spark.sql(s"SELECT k FROM gcp.ns.t$i")
-        .collect().map(_.getLong(0)).sorted.toSeq
-      assert(got === (0L until cut), s"cut=$cut")
-      assert(spark.sql(s"SELECT * FROM gcp.ns.t$i VERSION AS OF 1")
-        .count() === n, s"cut=$cut must not disturb v1")
-    }
+    val picks = samples(Gen.choose(0L, n - 1), 8)
+    cuts.map(c => (s"k >= $c", (k: Long, _: String) => k >= c)) ++
+      picks.take(2).map(x =>
+        (s"s = 'v$x'", (_: Long, v: String) => v == s"v$x")) ++
+      picks.slice(2, 8).grouped(3).map { ks =>
+        (s"k IN (${ks.mkString(", ")})", (k: Long, _: String) => ks.contains(k))
+      } ++
+      cuts.take(2).map(c =>
+        (s"k >= $c AND s < 'v5'", (k: Long, v: String) => k >= c && v < "v5"))
   }
+
+  // Every DELETE path (copy-on-write, deletion vectors, equality
+  // clauses, and the metadata fast path wherever stats decide a case)
+  // must agree with the plain anti-filter on arbitrary, non-part-aligned
+  // predicates, and v1 must stay intact — the property CatalogSpec's
+  // fixed-layout cases can't sweep.
+  private lazy val deleteWh = {
+    val d = java.nio.file.Files.createTempDirectory("graft-cowprop-").toString
+    spark.conf.set("spark.sql.catalog.gcp", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gcp.warehouse", d)
+    d
+  }
+
+  for ((label, mode) <- Seq("COW" -> None, "MOR" -> Some("mor"),
+      "EQ" -> Some("eq")))
+    test(s"$label DELETE == anti-filter ground truth on generated cut points") {
+      import org.apache.spark.sql.functions.col
+      import spark.implicits._
+      val n = 1000L
+      val rows = (0L until n).map(j => (j, s"v$j"))
+      for (((pred, matches), i) <- deleteCases(n).zipWithIndex) {
+        val name = s"${label.toLowerCase}$i"
+        rows.toDF("k", "s")
+          .repartitionByRange(5, col("k"))
+          .write.format("graft.sources.ManifestSink")
+          .option("path", s"$deleteWh/ns/$name")
+          .mode("overwrite").save()
+        mode.foreach(spark.conf.set("graft.delete.mode", _))
+        try spark.sql(s"DELETE FROM gcp.ns.$name WHERE $pred")
+        finally spark.conf.unset("graft.delete.mode")
+        val got = spark.sql(s"SELECT k FROM gcp.ns.$name")
+          .collect().map(_.getLong(0)).sorted.toSeq
+        val want = rows.filterNot { case (k, v) => matches(k, v) }.map(_._1)
+        assert(got === want, s"$label: $pred")
+        assert(spark.sql(s"SELECT * FROM gcp.ns.$name VERSION AS OF 1")
+          .count() === n, s"$label: $pred must not disturb v1")
+      }
+    }
 }

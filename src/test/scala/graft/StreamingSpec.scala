@@ -228,20 +228,26 @@ class StreamingSpec extends SparkSpec {
     assert(matched > 0, "no matched rows: join condition never fired")
   }
 
-  test("q_stream_sink_manifest leaves no temp directory behind") {
+  /** The `graft-*` entries of the JVM temp directory. */
+  private def graftTempEntries(): Set[String] = {
+    import scala.jdk.CollectionConverters._
     val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    def sinkDirs(): Int = {
-      val ls = java.nio.file.Files.list(tmp)
-      try ls.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("graft-stream-sink-") || n.startsWith("graft-ssink-ckpt-")
-      }.count().toInt
-      finally ls.close()
-    }
-    val before = sinkDirs()
-    SparkEntry.queries("q_stream_sink_manifest")(spark, Sf0001).collect()
-    assert(sinkDirs() === before)
+    val ls = java.nio.file.Files.list(tmp)
+    try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("graft-")).toSet
+    finally ls.close()
   }
+
+  // query bodies keep their scratch tables and checkpoints under the
+  // session warehouse (QueryDef.freshTable), so a session that runs
+  // them for hours does not fill the temp directory
+  for (q <- Seq("q_stream_sink_manifest", "q_stream_upsert",
+      "q_format_roundtrip", "q_dpp_join", "q_stream_medallion"))
+    test(s"$q leaves no temp directory behind") {
+      val before = graftTempEntries()
+      SparkEntry.queries(q)(spark, Sf0001).collect()
+      assert(graftTempEntries() -- before === Set.empty[String])
+    }
 
   test("stateful streams run unchanged on the RocksDB state store") {
     // The HDFS-backed store holds every key in executor heap; RocksDB

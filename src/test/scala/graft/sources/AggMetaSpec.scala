@@ -22,6 +22,20 @@ class AggMetaSpec extends graft.SparkSpec {
     spark.read.format("graft.sources.ManifestSource")
       .option("path", t).load()
 
+  /** Catalog over a temp warehouse: vectored tables are written at
+    * `$wh/ns/<name>` and deleted from through `gagg.ns.<name>`. */
+  private lazy val wh = {
+    val d = Files.createTempDirectory("graft-aggmeta").toString
+    spark.conf.set("spark.sql.catalog.gagg", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gagg.warehouse", d)
+    d
+  }
+
+  private def morDelete(sql: String): Unit = {
+    spark.conf.set("graft.delete.mode", "mor")
+    try spark.sql(sql) finally spark.conf.unset("graft.delete.mode")
+  }
+
   private def metaOnly(df: DataFrame): Boolean =
     PlanProbes.aggPushedDown(df.queryExecution.executedPlan)
 
@@ -70,10 +84,9 @@ class AggMetaSpec extends graft.SparkSpec {
     val q = readBack(t).agg(sum($"k").as("sk"))
     assert(!metaOnly(q), "overflowed per-part sum must decline")
     // a fresh table with a DV: exact sums exist but are PHYSICAL
-    val t2 = Files.createTempDirectory("graft-aggmeta").toString + "/t"
+    val t2 = s"$wh/ns/sumdv"
     (0L until 100L).toDF("k").coalesce(1).pipe(df => write(df, t2))
-    ManifestMor.deleteWhere(t2, readBack(t2).schema,
-      Array(org.apache.spark.sql.sources.LessThan("k", 10L)))
+    morDelete("DELETE FROM gagg.ns.sumdv WHERE k < 10")
     val q2 = readBack(t2).agg(sum($"k").as("sk"))
     assert(!metaOnly(q2), "DV must decline SUM")
     assert(q2.head.getLong(0) === (10L until 100L).sum)
@@ -160,10 +173,9 @@ class AggMetaSpec extends graft.SparkSpec {
     assert(qp.orderBy($"cat").collect().map(_.getLong(1)).toSeq
       === Seq(100L, 100L, 100L))
     // split table with a DV: layout fine, counts now physical → decline
-    val split = s"$base/split"
+    val split = s"$wh/ns/split"
     write(df.repartition(4), split, opts = Map("splitBy" -> "cat"))
-    ManifestMor.deleteWhere(split, readBack(split).schema,
-      Array(org.apache.spark.sql.sources.EqualTo("k", 0L)))
+    morDelete("DELETE FROM gagg.ns.split WHERE k = 0")
     val qd = readBack(split).groupBy($"cat").agg(count(lit(1)).as("n"))
     assert(!metaOnly(qd), "deletion vectors must decline grouped aggs")
     assert(qd.orderBy($"cat").collect().map(_.getLong(1)).toSeq

@@ -93,4 +93,27 @@ class GeneratedSpec extends SparkSpec {
     assert(chain(ex).exists(m =>
       m != null && m.contains("may not reference")))
   }
+
+  test("a range DELETE keeps survivors whose generated slot is NULL") {
+    val c = freshCat("d")
+    // `x * 2` of a NULL x commits a NULL g; a DELETE that rewrites
+    // the part holding it carries the row back unchanged
+    for (mode <- Seq("", "mor", "eq")) {
+      val t = s"$c.wh.t${if (mode.isEmpty) "cow" else mode}"
+      spark.sql(s"""CREATE TABLE $t (k BIGINT, x BIGINT,
+        g BIGINT GENERATED ALWAYS AS (x * 2))""")
+      // one part per INSERT, so the cut at 4 straddles the second
+      for (vs <- Seq("(1, 1), (2, NULL)", "(3, NULL), (4, 4), (5, NULL)"))
+        spark.sql(s"INSERT INTO $t (k, x) SELECT /*+ COALESCE(1) */ * " +
+          s"FROM VALUES $vs AS v(k, x)")
+      assert(spark.sql(s"SELECT DISTINCT _part FROM $t").count() === 2)
+      if (mode.nonEmpty) spark.conf.set("graft.delete.mode", mode)
+      try spark.sql(s"DELETE FROM $t WHERE k >= 4")
+      finally spark.conf.unset("graft.delete.mode")
+      val rows = spark.sql(s"SELECT k, x, g FROM $t ORDER BY k").collect()
+        .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSeq
+      assert(rows === Seq((1L, Some(1L), Some(2L)), (2L, None, None),
+        (3L, None, None)), s"mode '$mode'")
+    }
+  }
 }

@@ -63,7 +63,6 @@ class MetaJsonSpec extends AnyFunSuite {
   private val part: Gen[PartMeta] = for {
     path <- str
     rows <- anyLong
-    dv <- Gen.oneOf(Gen.const(""), hex)
     dvRef <- Gen.oneOf(Gen.const(""), str)
     dvCard <- Gen.choose(0L, Long.MaxValue)
     bytes <- Gen.oneOf(Gen.const(0L), Gen.choose(1L, Long.MaxValue))
@@ -73,7 +72,7 @@ class MetaJsonSpec extends AnyFunSuite {
     cols <- small(id)
     eq <- small(eqClause)
     ncols <- small(Gen.zip(id, small(id))).map(_.toMap)
-  } yield PartMeta(path, rows, dv, dvRef,
+  } yield PartMeta(path, rows, dvRef,
     if (dvRef.isEmpty) 0L else dvCard, bytes,
     bucket.fold(-1)(_._1), bucket.fold(0)(_._2), sorted, cstats, cols,
     eq, ncols)
@@ -94,6 +93,12 @@ class MetaJsonSpec extends AnyFunSuite {
     check("part", Prop.forAll(part) { m =>
       MetaJson.decodePart(MetaJson.encodePart(m)) == m
     })
+  }
+
+  test("a part line carrying an inline vector is refused, not read without it") {
+    val ex = intercept[IllegalArgumentException](
+      MetaJson.decodePart("""{"path":"part-0.csv","rows":3,"dv":"ff"}"""))
+    assert(ex.getMessage.contains("inline deletion vectors"))
   }
 
   test("manifest: schema, colmap and version headers and parts round-trip") {

@@ -116,7 +116,7 @@ class PublishRebaseSpec extends AnyFunSuite {
       _ => Seq(pm("a"), pm("b")), strictBase = None) // v1
     // interleaved commit re-vectors part a (a MOR delete's shape)
     ManifestSink.publishRebase(conf, dir, schema,
-      h => h.map(p => if (p.path == "a") p.copy(dvHex = "ff") else p),
+      h => h.map(p => if (p.path == "a") p.copy(dvRef = "dv-a.hex", dvCard = 1L) else p),
       strictBase = None) // v2
     val ex = intercept[java.util.ConcurrentModificationException] {
       ManifestSink.publishRebase(conf, dir, schema,
