@@ -800,7 +800,7 @@ ORDER BY source, cum_tokens, doc_id""")),
         // join once instead of once per consumer (guide §5)
         val pairs = SimOps.levPairs(spark, dir)
           .select(col("a_id"), col("b_id"))
-          .localCheckpoint()
+          .pinned()
         val nodes = Tables.documents(spark, dir)
           .select(col("doc_id").as("id"))
         val labels = connectedComponents(nodes, pairs.toDF("s", "t"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Exact, OracleHash}
 import graft.model.Tables
+import graft.util.Pin.PinOps
 
 /** Similarity search + near-duplicate detection + multimodal columns
   * over the `embeddings` feature vectors and `documents` corpus.
@@ -399,7 +400,7 @@ FROM cand ORDER BY id_a, id_b""")),
         // ONE shingle materialization feeds the signature build AND
         // both exact-intersection join sides (md5 per token runs once,
         // not twice).
-        val sh = shingleRows(spark, dir).localCheckpoint()
+        val sh = shingleRows(spark, dir).pinned()
         val cand = minhashPairs(spark, dir, Some(sh))
         val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         val inter = cand.select(col("id_a"), col("id_b"))
@@ -988,7 +989,7 @@ FROM documents GROUP BY lang ORDER BY lang""")),
             lshBucket(col("embedding")).as("bucket"),
             sqrt(Exact.sumSq(col("embedding"))).as("norm"))
           .join(cellOf, "vec_id")
-          .localCheckpoint() // both self-join sides + the rollup reuse it
+          .pinned() // both self-join sides + the rollup reuse it
         val a = z.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
           col("cell"), col("bucket"), col("norm").as("norm_a"))
         val b = z.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
@@ -1141,7 +1142,7 @@ FROM b GROUP BY vec_id ORDER BY vec_id""")),
         // cannot dedupe them)
         val cents = centroidArrays(spark, dir)
           .select(col("label").as("cell"), col("centroid"))
-          .localCheckpoint()
+          .pinned()
         def cellD2(df: org.apache.spark.sql.DataFrame, idCol: String) =
           df.crossJoin(broadcast(cents))
             .select(col(idCol),
@@ -1169,7 +1170,7 @@ FROM b GROUP BY vec_id ORDER BY vec_id""")),
             expr("dim % 8").as("j"), col("x"))
         // 80-entry codebook, consumed by the probe distance tables AND
         // the corpus code assignment — computed once
-        val codebook = pqCodebook(spark, dir).localCheckpoint()
+        val codebook = pqCodebook(spark, dir).pinned()
         val dt = psub.join(broadcast(codebook), Seq("m", "j"))
           .select(col("probe_id"), col("m"), col("k"),
             ((xd - col("c")) * (xd - col("c")))
@@ -1521,7 +1522,7 @@ WHERE rn <= 5 ORDER BY probe_id, d2, vec_id""")),
         // q_ann_adc's shared codebook; measured ~2x on this query)
         val cents = centroidArrays(spark, dir)
           .select(col("label").as("cell"), col("centroid"))
-          .localCheckpoint()
+          .pinned()
         // (cell, vec_id, code) index rows for a corpus slice: cell =
         // nearest label-seeded centroid (exact-decimal d2), code =
         // 63-bit sign word. Computed ONLY over the slice — that is
@@ -1681,7 +1682,7 @@ WHERE rn <= 5 ORDER BY probe_id, hamming, vec_id""")),
           .agg(minCols.head, minCols.tail: _*)
           .select(col("doc_id"),
             array((0 until MinhashK).map(i => col(s"m$i")): _*).as("sig"))
-          .localCheckpoint()
+          .pinned()
         val bandKeys = transform(sequence(lit(0), lit(MinhashBands - 1)),
           b => concat_ws(",",
             transform(slice(col("sig"), b * lit(MinhashR) + lit(1),
@@ -1894,7 +1895,7 @@ FROM cand ORDER BY id_b, id_h"""
       .agg(minCols.head, minCols.tail: _*)
       .select(col("doc_id"),
         array((0 until MinhashK).map(i => col(s"m$i")): _*).as("sig"))
-      .localCheckpoint()
+      .pinned()
     val bandKeys = transform(sequence(lit(0), lit(MinhashBands - 1)),
       b => concat_ws(",",
         transform(slice(col("sig"), b * lit(MinhashR) + lit(1), lit(MinhashR)),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Exact
 import graft.model.Tables
+import graft.util.Pin.PinOps
 
 /** Classic statistical aggregates the reference's analytics consumers
   * expect from any engine (reference: estimate_queue.py aggregates its
@@ -340,7 +341,7 @@ FROM orders GROUP BY 1 ORDER BY 1""")),
             col("l_partkey") === col("p_partkey"))
           .select(col("ok"), col("p_brand").as("item"))
           .distinct()
-          .localCheckpoint() // supports + pairs + basket count share it
+          .pinned() // supports + pairs + basket count share it
         // basket count rides the plan as a broadcast 1-row frame —
         // no driver-side count() action
         val nBaskets = items.select(col("ok")).distinct()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Exact
 import graft.model.Tables
+import graft.util.Pin.PinOps
 
 /** LLM-training-data text operators over the `documents` corpus:
   * exact deduplication, corpus tokenization/word count, token
@@ -170,7 +171,7 @@ FROM documents GROUP BY md5(text) ORDER BY keeper_id""")),
         // contains the batch — an unpinned anti-join would then count
         // zero new fingerprints (same trap q_merge_upsert documents).
         val newUnique = batch.join(index.select(col("fp")), Seq("fp"),
-          "left_anti").localCheckpoint()
+          "left_anti").pinned()
         newUnique.select(col("fp"), col("keeper_id"))
           .write.format("graft.sources.ManifestSink")
           .option("path", t)
@@ -750,7 +751,7 @@ FROM pp GROUP BY pair ORDER BY n DESC, pair LIMIT 20""")),
           .filter(length(col("w")) >= 1)
           .groupBy(col("w")).agg(count(lit(1)).as("wc"))
           .select(split(col("w"), "").as("toks"), col("wc"))
-          .localCheckpoint()
+          .pinned()
         val merges = Seq.newBuilder[(Int, String, String, Long)]
         var exhausted = false
         for (round <- 1 to K if !exhausted) {
@@ -782,7 +783,7 @@ FROM pp GROUP BY pair ORDER BY n DESC, pair LIMIT 20""")),
                 array(lit(lv + rv))))
               .otherwise(concat(acc, array(t))))
           words = words.select(fold.as("toks"), col("wc"))
-            .localCheckpoint()
+            .pinned()
           }
         }
         merges.result().toDF("round", "l", "r", "n")
@@ -1026,13 +1027,13 @@ ORDER BY score DESC, doc_id LIMIT 20""")),
           .agg(count(lit(1)).as("tf"))
           .select(xxhash64(col("tok")).as("term_hash"), col("tok"),
             col("doc_id"), col("tf"))
-          .localCheckpoint()
+          .pinned()
         // dl = ALL whitespace tokens (q_bm25's definition), not just
         // the non-empty ones the postings index; same double-consume
         // under the range write → same pin
         def doclen(slice: org.apache.spark.sql.DataFrame) = slice
           .select(col("doc_id"), size(toks(col("text"))).cast("long").as("dl"))
-          .localCheckpoint()
+          .pinned()
         val docs = Tables.documents(spark, dir)
         val base = docs.filter(col("doc_id") % 5 =!= 0)
         val delta = docs.filter(col("doc_id") % 5 === 0)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Exact
 import graft.model.Tables
 import graft.sources.ManifestMaintenance
+import graft.util.Pin.PinOps
 
 /** Snapshot-history table operations over the manifest format — the
   * Iceberg/Delta-shaped warehouse surface assembled from the engine's
@@ -2136,7 +2137,7 @@ ORDER BY event_type NULLS FIRST""")),
               _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate])
             q.withColumn("phase", lit(name))
               .withColumn("used_mv", lit(usedMv))
-              .localCheckpoint()
+              .pinned()
           }
           val fresh = phase("fresh")
           // an un-refreshed append: the MV is now stale — full fallback
@@ -2786,7 +2787,7 @@ FROM events""")),
             .withColumn("fold_minus_parts", lit(r1.getInt(3)))
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("event_type"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
@@ -2856,7 +2857,7 @@ GROUP BY event_type ORDER BY event_type NULLS FIRST""")),
             .withColumn("fold_minus_parts", lit(r1.getInt(3)))
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("etype"), col("par"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT etype, par, CAST(count(*) AS BIGINT) AS n_rows,
@@ -2928,7 +2929,7 @@ ORDER BY etype NULLS FIRST, par NULLS FIRST""")),
               !graft.sources.MvRewrite.readsManifestDir(plan, s"$wh/wh/src")
           q.withColumn("used_mv", lit(usedMv))
             .orderBy(col("etype"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT etype, CAST(count(*) AS BIGINT) AS n_rows,
@@ -2996,7 +2997,7 @@ ORDER BY etype NULLS FIRST""")),
         val truth = spark.sql("""SELECT etype,
             hll_sketch_estimate(hll_sketch_agg(user_id)) AS direct_est,
             count(DISTINCT user_id) AS ndv_exact
-          FROM graftmvnd.wh.src GROUP BY etype""").localCheckpoint()
+          FROM graftmvnd.wh.src GROUP BY etype""").pinned()
         spark.conf.set("graft.mv.rewrite", s"$wh/wh/mv")
         try {
           val q = spark.sql("""SELECT etype, count(*) AS n_rows,
@@ -3019,7 +3020,7 @@ ORDER BY etype NULLS FIRST""")),
             .withColumn("fold_minus_parts", lit(r1.getInt(3)))
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("etype"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT etype, CAST(count(*) AS BIGINT) AS n_rows,
@@ -3091,7 +3092,7 @@ GROUP BY etype ORDER BY etype NULLS FIRST""")),
             .withColumn("fold_minus_parts", lit(r1.getInt(3)))
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("day_ts"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_ts,
@@ -3378,7 +3379,7 @@ GROUP BY region, src ORDER BY region, src""")),
           .withColumn("meta_declined_pending", lit(!metaPending))
           .withColumn("meta_rearmed_after", lit(metaAfter))
           .withColumn("clauses_after_compact", lit(clausesAfter))
-          .localCheckpoint()
+          .pinned()
       },
       Some(s"""SELECT CAST(count(*) AS BIGINT) AS n_rows,
   ${Exact.decSumSql("value", 6)} AS sum_value,
@@ -3474,7 +3475,7 @@ WHERE event_id NOT IN (5, 6) AND event_type <> 'error'""")),
           .withColumn("one_commit", lit(oneCommit))
           .withColumn("n_pre_delete", lit(preDelete))
           .withColumn("meta_declined_pending", lit(metaDeclined))
-          .localCheckpoint()
+          .pinned()
       },
       Some(s"""SELECT CAST(count(*) AS BIGINT) AS n_rows,
   ${Exact.decSumSql("value", 6)} AS sum_value,
@@ -5269,7 +5270,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
             .withColumn("routed", lit(routed))
             .withColumn("nonkey_declines", lit(nonkeyDeclines))
             .orderBy(col("par"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT user_id % 4 AS par, CAST(count(*) AS BIGINT) AS n,
@@ -5328,7 +5329,7 @@ GROUP BY user_id % 4 ORDER BY par""")),
             .withColumn("routed", lit(routed))
             .withColumn("nonkey_declines", lit(nonkeyDeclines))
             .orderBy(col("event_type"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
 import org.apache.spark.sql.connector.expressions
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, Write, WriteBuilder}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
@@ -204,7 +204,6 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             }
           })
         val spec = ManifestSink.readTableSpec(conf, p)
-        val order = spec.orderBy
         val props = ManifestSink.readTableProps(conf, p)
         // identity spec re-attaches as field metadata so DESCRIBE and
         // write-side validation see it (the DDL codec stores schemas
@@ -222,24 +221,17 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           })
           case None => withDefaults
         }
+        // identity-split tables expose SHOW PARTITIONS / ALTER TABLE
+        // DROP PARTITION (partition values ARE manifest metadata there
+        // — see [[GraftSplitCatalogTable]]); a days()/hours() spec gets
+        // the TIME-transform face (the partition values are DERIVED
+        // day/hour ordinals)
         spec.layout match {
-          // identity-split tables expose SHOW PARTITIONS / ALTER
-          // TABLE DROP PARTITION (partition values ARE manifest
-          // metadata there — see [[GraftSplitCatalogTable]]); a
-          // days()/hours() spec gets the TIME-transform face (the
-          // partition values are DERIVED day/hour ordinals)
-          case Some((0, c)) =>
-            spec.transform match {
-              case Some(tf) =>
-                new GraftTimeSplitCatalogTable(ident, p, loaded, c, tf,
-                  order, props)
-              case None =>
-                new GraftSplitCatalogTable(ident, p, loaded, c,
-                  order, props)
-            }
-          case layout =>
-            new GraftCatalogTable(ident, p, loaded, layout,
-              order, props)
+          case Some((0, _)) if spec.transform.isDefined =>
+            new GraftTimeSplitCatalogTable(ident, p, loaded, spec, props)
+          case Some((0, _)) =>
+            new GraftSplitCatalogTable(ident, p, loaded, spec, props)
+          case _ => new GraftCatalogTable(ident, p, loaded, spec, props)
         }
       case None =>
         // METADATA TABLES (the Iceberg `db.table.history` shape):
@@ -314,78 +306,6 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     new ManifestReadTable(p, schema, Some(v))
   }
 
-  /** The TWO layout transforms the format persists:
-    *
-    *  - `PARTITIONED BY (bucket(n, col))` writes the table-level
-    *    bucket spec; every later INSERT routes through the bucketed
-    *    writer + clustered distribution with no per-write options —
-    *    the storage layout that makes scans report
-    *    KeyGroupedPartitioning (shuffle-free joins and aggregations
-    *    on the key; see [[graft.functions.GraftBucket]]).
-    *  - `PARTITIONED BY (col)` (identity) writes the split spec
-    *    (encoded as bucket count 0); every INSERT routes through the
-    *    value-split writer + clustered distribution, committing one
-    *    SINGLE-VALUED part per distinct value — point predicates
-    *    prune to the value's parts and GROUP BY the column answers
-    *    from the manifest alone (grouped metadata aggregates). */
-  /** Shared by CREATE TABLE and the staged CTAS path: the layout
-    * transform list → the persisted (buckets, column, time-transform)
-    * spec (0 encodes the identity/time split; the transform slot is
-    * "days"/"hours" for hidden time partitioning, see
-    * [[TimeSplit]]). */
-  private def parseLayout(schema: StructType,
-      partitions: Array[Transform]): Option[(Int, String, Option[String])] =
-    partitions.toSeq match {
-      case Seq() => None
-      case Seq(t) if TimeSplit.valid(t.name()) &&
-          t.arguments().length == 1 =>
-        val name = t.arguments()(0) match {
-          case r: expressions.NamedReference => r.fieldNames().mkString(".")
-          case a => throw new IllegalArgumentException(
-            s"${t.name()}(col): col must be a column reference, got $a")
-        }
-        val f = schema.fields.find(_.name.equalsIgnoreCase(name))
-        require(f.exists(_.dataType ==
-          org.apache.spark.sql.types.TimestampType),
-          s"${t.name()}-partition column '$name' must be a TIMESTAMP " +
-            s"column of ${schema.fieldNames.mkString("(", ",", ")")}")
-        Some((0, f.get.name, Some(t.name())))
-      case Seq(t) if t.name() == "identity" && t.arguments().length == 1 =>
-        val name = t.arguments()(0) match {
-          case r: expressions.NamedReference => r.fieldNames().mkString(".")
-          case a => throw new IllegalArgumentException(
-            s"PARTITIONED BY (col): col must be a column reference, got $a")
-        }
-        require(schema.fields.exists(f => f.name.equalsIgnoreCase(name) &&
-          (f.dataType == LongType ||
-            f.dataType == org.apache.spark.sql.types.StringType)),
-          s"identity-partition column '$name' must be a BIGINT or " +
-            s"STRING column of ${schema.fieldNames.mkString("(", ",", ")")}")
-        Some((0, name, None))
-      case Seq(t) if t.name() == "bucket" && t.arguments().length == 2 =>
-        val n = t.arguments()(0) match {
-          case l: expressions.Literal[_] =>
-            l.value().asInstanceOf[Number].intValue()
-          case a => throw new IllegalArgumentException(
-            s"bucket(n, col): n must be a literal, got $a")
-        }
-        val name = t.arguments()(1) match {
-          case r: expressions.NamedReference => r.fieldNames().mkString(".")
-          case a => throw new IllegalArgumentException(
-            s"bucket(n, col): col must be a column reference, got $a")
-        }
-        val keyed = schema.fields.find(_.dataType == LongType).map(_.name)
-        require(keyed.contains(name),
-          s"bucket column '$name' must be the table's first BIGINT " +
-            s"column (${keyed.getOrElse("none present")}) — bucket " +
-            "routing and stats pruning share that column")
-        Some((n, name, None))
-      case other => throw new UnsupportedOperationException(
-        s"graft tables support PARTITIONED BY (bucket(n, col)), " +
-          s"PARTITIONED BY (days(col) | hours(col)) or " +
-          s"PARTITIONED BY (col), got ${other.mkString(", ")}")
-    }
-
   /** The v2 `Column[]` create path: Spark delivers identity specs as
     * first-class [[Column]] attributes (NOT re-encoded into field
     * metadata by the default bridge), so capture them here before
@@ -421,42 +341,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       partitions: Array[Transform],
       properties: util.Map[String, String]): Table = {
     validateStructDepth(schema)
-    // CLUSTER BY (c) — the liquid-clustering DDL spelling: maps to
-    // the WRITE ORDERED BY layout (every INSERT range-distributes and
-    // sorts on the column, parts land with disjoint ranges → tight
-    // min/max pruning from the first write, no OPTIMIZE needed).
-    // Same machinery as CALL set_layout(spec => 'none', order_by =>
-    // c), declared at birth.
-    val (clusterBy, layoutTransforms) =
-      partitions.partition(_.name() == "cluster_by")
-    val clusterCol: Option[String] = clusterBy.headOption.map { t =>
-      val cols = t.arguments().collect {
-        case r: expressions.NamedReference => r.fieldNames().mkString(".")
-      }
-      require(cols.length == 1,
-        s"CLUSTER BY supports exactly one column here (multi-dimension " +
-          s"clustering is CALL system.compact(zorder => '...')), got " +
-          cols.mkString("(", ", ", ")"))
-      val f = schema.fields.find(_.name.equalsIgnoreCase(cols.head))
-      require(f.exists(x => x.dataType == LongType ||
-        x.dataType == org.apache.spark.sql.types.StringType),
-        s"CLUSTER BY column '${cols.head}' must be a BIGINT or STRING " +
-          s"column of ${schema.fieldNames.mkString("(", ",", ")")}")
-      f.get.name
-    }
-    val bucketSpec: Option[(Int, String, Option[String])] =
-      parseLayout(schema, layoutTransforms)
-    require(clusterCol.isEmpty || bucketSpec.isEmpty,
-      "CLUSTER BY cannot combine with PARTITIONED BY — one layout " +
-        "owns row placement")
+    val spec = TableLayout.fromDdl(partitions, schema)
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    bucketSpec.foreach { case (n, col, tf) =>
-      require(n >= 0, s"bucket count must be >= 0, got $n")
-      ManifestSink.writeTableSpec(conf, tablePath(ident),
-        TableSpec(Some((n, col)), transform = tf))
-    }
-    clusterCol.foreach(c => ManifestSink.writeTableSpec(conf,
-      tablePath(ident), TableSpec(orderBy = Some(c))))
+    if (spec != TableSpec())
+      ManifestSink.writeTableSpec(conf, tablePath(ident), spec)
     // COLUMN DEFAULTS at create: Spark delivers them as the field-
     // metadata pair (CURRENT_DEFAULT, EXISTS_DEFAULT) — capture into
     // the snapshot's colmap header keyed by field id, then store the
@@ -573,7 +461,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     validateStructDepth(schema)
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
     new GraftStagedTable(ident, tablePath(ident), schema,
-      parseLayout(schema, partitions), replace = false,
+      TableLayout.fromDdl(partitions, schema),
+      replace = false,
       tableProps = stagedProps(properties))
   }
 
@@ -585,7 +474,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     validateStructDepth(schema)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     new GraftStagedTable(ident, tablePath(ident), schema,
-      parseLayout(schema, partitions), replace = true,
+      TableLayout.fromDdl(partitions, schema),
+      replace = true,
       tableProps = stagedProps(properties))
   }
 
@@ -596,7 +486,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     val schema = org.apache.spark.sql.graftbridge.GraftCatalogV2.toStructType(columns)
     validateStructDepth(schema)
     new GraftStagedTable(ident, tablePath(ident), schema,
-      parseLayout(schema, partitions), replace = tableExists(ident),
+      TableLayout.fromDdl(partitions, schema),
+      replace = tableExists(ident),
       tableProps = stagedProps(properties))
   }
 
@@ -1036,23 +927,11 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       // INSERTs range-distribute + sort on the new column. Same
       // machinery as CALL set_layout(spec => 'none', order_by => c).
       case (s, cb: TableChange.ClusterBy) =>
-        val cols = cb.clusteringColumns().map(_.fieldNames().mkString("."))
-        require(ManifestSink.readTableSpec(conf, p).layout.isEmpty,
-          s"ALTER TABLE CLUSTER BY: a bucket/identity layout owns row " +
-            s"placement on $ident — replace it via CALL set_layout")
-        if (cols.isEmpty) ManifestSink.clearTableSpec(conf, p)
-        else {
-          require(cols.length == 1,
-            "CLUSTER BY supports exactly one column here " +
-              "(multi-dimension clustering is CALL compact(zorder))")
-          val f = s.fields.find(_.name.equalsIgnoreCase(cols.head))
-          require(f.exists(x => x.dataType == LongType ||
-            x.dataType == org.apache.spark.sql.types.StringType),
-            s"CLUSTER BY column '${cols.head}' must be a BIGINT or " +
-              s"STRING column of ${s.fieldNames.mkString("(", ",", ")")}")
-          ManifestSink.writeTableSpec(conf, p,
-            TableSpec(orderBy = Some(f.get.name)))
-        }
+        val spec = TableLayout.check(ManifestSink.readTableSpec(conf, p)
+          .copy(orderBy = TableLayout.clusterCol(
+            cb.clusteringColumns().map(_.fieldNames().mkString(".")))), s)
+        if (spec == TableSpec()) ManifestSink.clearTableSpec(conf, p)
+        else ManifestSink.writeTableSpec(conf, p, spec)
         s
       case (_, c) => throw new UnsupportedOperationException(
         s"unsupported ALTER TABLE change $c — schema evolves " +
@@ -1267,6 +1146,110 @@ private[sources] object H64Function extends UnboundFunction {
   }
 }
 
+/** THE LAYOUT RULES: one [[TableSpec]] names a table's row placement
+  * (hash buckets, an identity or days/hours split, or a write order),
+  * and [[check]] is the one place it is validated against a schema —
+  * for CREATE / CTAS / RTAS, ALTER … CLUSTER BY, `set_layout` and the
+  * path sink's `buckets` / `splitBy` / `clusterBy` options alike. The
+  * spellings only parse into a spec; every write then plans from it
+  * ([[ManifestSink.writePlan]]). */
+private[sources] object TableLayout {
+  import org.apache.spark.sql.types.TimestampType
+
+  /** `bucket(n, col)`: 0 buckets encodes the identity split, so a
+    * bucket spelling is refused here, before its count is encoded. */
+  def bucket(n: Int, col: String): TableSpec = {
+    require(n >= 1, s"bucket count must be >= 1, got $n")
+    TableSpec(Some((n, col)))
+  }
+
+  /** The column of a `CLUSTER BY` list: none clears, one orders. */
+  def clusterCol(cols: Seq[String]): Option[String] = {
+    require(cols.length <= 1,
+      s"CLUSTER BY supports exactly one column here (multi-dimension " +
+        s"clustering is CALL system.compact(zorder => '...')), got " +
+        cols.mkString("(", ", ", ")"))
+    cols.headOption
+  }
+
+  /** The DDL spelling — `PARTITIONED BY (bucket(n, col) | col |
+    * days(col) | hours(col))` and `CLUSTER BY (col)` — checked
+    * against the table schema. */
+  def fromDdl(partitions: Array[Transform], schema: StructType): TableSpec = {
+    def colOf(t: Transform, e: expressions.Expression): String = e match {
+      case r: expressions.NamedReference => r.fieldNames().mkString(".")
+      case a => throw new IllegalArgumentException(
+        s"${t.name()}: expected a column reference, got $a")
+    }
+    val (cluster, placement) = partitions.partition(_.name() == "cluster_by")
+    val layout = placement.toSeq match {
+      case Seq() => TableSpec()
+      case Seq(t) if TimeSplit.valid(t.name()) && t.arguments().length == 1 =>
+        TableSpec(Some((0, colOf(t, t.arguments()(0)))),
+          transform = Some(t.name()))
+      case Seq(t) if t.name() == "identity" && t.arguments().length == 1 =>
+        TableSpec(Some((0, colOf(t, t.arguments()(0)))))
+      case Seq(t) if t.name() == "bucket" && t.arguments().length == 2 =>
+        bucket(t.arguments()(0) match {
+          case l: expressions.Literal[_] =>
+            l.value().asInstanceOf[Number].intValue()
+          case a => throw new IllegalArgumentException(
+            s"bucket(n, col): n must be a literal, got $a")
+        }, colOf(t, t.arguments()(1)))
+      case other => throw new UnsupportedOperationException(
+        s"graft tables support PARTITIONED BY (bucket(n, col)), " +
+          s"PARTITIONED BY (days(col) | hours(col)), " +
+          s"PARTITIONED BY (col) or CLUSTER BY (col), got " +
+          other.mkString(", "))
+    }
+    check(layout.copy(orderBy = clusterCol(cluster.toSeq.flatMap(
+      t => t.arguments().toSeq.map(colOf(t, _))))), schema)
+  }
+
+  /** The spec with its column names resolved (case-insensitively) to
+    * the schema's, or a refusal: at most one layout; a bucket column
+    * is the first BIGINT (bucket routing and stats pruning share it);
+    * an identity-split or order column is BIGINT or STRING; a
+    * days/hours split column is TIMESTAMP. */
+  def check(spec: TableSpec, schema: StructType): TableSpec = {
+    def cols = schema.fieldNames.mkString("(", ",", ")")
+    def field(c: String) = schema.fields.find(_.name.equalsIgnoreCase(c))
+    def keyLike(c: String, role: String): String = {
+      val f = field(c)
+      require(f.exists(x => x.dataType == LongType || x.dataType == StringType),
+        s"$role column '$c' must be a BIGINT or STRING column of $cols")
+      f.get.name
+    }
+    require(spec.layout.isEmpty || spec.orderBy.isEmpty,
+      "one layout owns row placement: a bucket, identity-partitioned or " +
+        "time-split layout cannot combine with a write order " +
+        "(CLUSTER BY / order_by) — replace the layout via CALL set_layout")
+    require(spec.transform.isEmpty || spec.layout.exists(_._1 == 0),
+      s"time transform ${spec.transform.get} needs a split column")
+    val layout = spec.layout.map {
+      case (0, c) => spec.transform match {
+        case Some(tf) =>
+          require(TimeSplit.valid(tf),
+            s"time transform must be 'days' or 'hours', got '$tf'")
+          val f = field(c)
+          require(f.exists(_.dataType == TimestampType),
+            s"$tf-partition column '$c' must be a TIMESTAMP column of $cols")
+          (0, f.get.name)
+        case None => (0, keyLike(c, "identity-partition"))
+      }
+      case (n, c) =>
+        require(n >= 1, s"bucket count must be >= 1, got $n")
+        val key = schema.fields.find(_.dataType == LongType).map(_.name)
+        require(key.exists(_.equalsIgnoreCase(c)),
+          s"bucket column '$c' must be the table's first BIGINT column " +
+            s"(${key.getOrElse("none present")}) — bucket routing and " +
+            "stats pruning share that column")
+        (n, key.get)
+    }
+    TableSpec(layout, spec.transform, spec.orderBy.map(keyLike(_, "order")))
+  }
+}
+
 /** A catalog-loaded manifest table: batch read (full pushdown
   * surface), streaming read (snapshot offsets), versioned batch
   * write (INSERT INTO appends a snapshot; INSERT OVERWRITE is a
@@ -1287,9 +1270,7 @@ private[sources] object H64Function extends UnboundFunction {
   * construction — CatalogSpec pins both paths. */
 private[sources] class GraftCatalogTable(
     ident: Identifier, path: String, tableSchema: StructType,
-    bucketSpec: Option[(Int, String)] = None,
-    writeOrder: Option[String] = None,
-    tableProps: Map[String, String] = Map.empty)
+    spec: TableSpec, tableProps: Map[String, String])
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
@@ -1300,13 +1281,6 @@ private[sources] class GraftCatalogTable(
     * TRAVEL loads a [[ManifestReadTable]] instead, so this class
     * always means "head". */
   private[sources] def tableDir: String = path
-
-  /** Hidden time transform of a (0, col) split spec ("days"/"hours")
-    * — None for plain identity splits. Overridden by
-    * [[GraftTimeSplitCatalogTable]]; the write builder consults it to
-    * cluster by the DERIVED ordinal and route the transform split
-    * writer. */
-  protected def splitTransform: Option[String] = None
 
   /** SQL `TRUNCATE TABLE` — a LOGICAL truncate: one empty-part-list
     * snapshot (same schema), so pre-truncate versions stay
@@ -1454,7 +1428,7 @@ private[sources] class GraftCatalogTable(
   /** Bucketed / identity-partitioned tables advertise their layout
     * (bucket count 0 encodes the identity split spec). */
   override def partitioning(): Array[Transform] =
-    bucketSpec.map {
+    spec.layout.map {
       case (0, c) => expressions.Expressions.identity(c)
       case (n, c) => expressions.Expressions.bucket(n, c)
     }.toArray
@@ -1484,7 +1458,7 @@ private[sources] class GraftCatalogTable(
     * clustered by `bucket(n, col)` — resolved through this catalog's
     * own function, so Spark plans one exchange that co-locates each
     * bucket's rows in one task and the writer emits ~one file per
-    * bucket — and (b) routes rows through the bucketed writer, which
+    * bucket — and (b) routes rows through the layout writer, which
     * records the bucket ordinals the SPJ-reporting scan needs. Layout
     * policy lives with the table; writers stay ignorant. */
   /** Identity-column spec parsed once from the props sidecar —
@@ -1498,166 +1472,57 @@ private[sources] class GraftCatalogTable(
   private val generatedSpecs: Seq[(String, String)] =
     ManifestGenerated.parse(tableProps)
 
+  /** INSERT INTO / OVERWRITE / REPLACE WHERE ([[ManifestWriteBuilder]])
+    * and streaming appends, planned from the table's layout. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder
-      with org.apache.spark.sql.connector.write.SupportsOverwrite {
-      private var doTruncate = false
-      private var replaceFilters: Option[Array[V1Filter]] = None
-      override def truncate(): WriteBuilder = { doTruncate = true; this }
-      /** SQL `INSERT INTO t REPLACE WHERE pred SELECT ...` /
-        * `df.writeTo(t).overwrite(cond)` — OverwriteByExpression.
-        * AlwaysTrue degenerates to the logical truncate; anything
-        * else must be row-evaluable (same contract as DELETE), so an
-        * untranslatable condition is rejected at ANALYSIS via
-        * canOverwrite, never half-applied. */
-      override def canOverwrite(filters: Array[V1Filter]): Boolean =
-        filters.forall {
-          case _: org.apache.spark.sql.sources.AlwaysTrue => true
-          case f => ManifestCow.translatable(f)
-        }
-      override def overwrite(filters: Array[V1Filter]): WriteBuilder = {
-        if (filters.forall(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue]))
-          doTruncate = true
+    new ManifestWriteBuilder((doTruncate, replaceFilters) => {
+      val branch = Option(info.options.get("branch")).filter(_.nonEmpty)
+      val sconf = new SerializableConfiguration(ManifestSink.driverConf())
+      // generated columns bind against THIS write's schema (insert
+      // projections land in table order) on the driver, once
+      val genFills: Seq[(Int, org.apache.spark.sql.catalyst.expressions.Expression)] =
+        if (generatedSpecs.isEmpty) Seq.empty
         else {
-          require(canOverwrite(filters),
-            "REPLACE WHERE condition not row-evaluable: " +
-              filters.mkString(", "))
-          replaceFilters = Some(filters)
-        }
-        this
-      }
-      override def build(): Write = {
-        val branch = Option(info.options.get("branch")).filter(_.nonEmpty)
-        val sconf = new SerializableConfiguration(ManifestSink.driverConf())
-        // generated columns bind against THIS write's schema (insert
-        // projections land in table order) on the driver, once
-        val genFills: Seq[(Int, org.apache.spark.sql.catalyst.expressions.Expression)] =
-          if (generatedSpecs.isEmpty) Seq.empty
-          else {
-            val session = org.apache.spark.sql.SparkSession.active
-            val banned = generatedSpecs.map(_._1).toSet ++
-              identitySpec.map(_.col)
-            generatedSpecs.flatMap { case (c, e) =>
-              val slot = info.schema().fields.indexWhere(f =>
-                ManifestGenerated.sameName(f.name, c))
-              require(slot >= 0, s"generated column '$c' missing from " +
-                s"the write schema ${info.schema().simpleString} — " +
-                "select it as NULL (the sink computes it)")
-              Seq(slot -> ManifestGenerated.bind(session, info.schema(),
-                c, e, banned))
-            }
+          val session = org.apache.spark.sql.SparkSession.active
+          val banned = generatedSpecs.map(_._1).toSet ++
+            identitySpec.map(_.col)
+          generatedSpecs.flatMap { case (c, e) =>
+            val slot = info.schema().fields.indexWhere(f =>
+              ManifestGenerated.sameName(f.name, c))
+            require(slot >= 0, s"generated column '$c' missing from " +
+              s"the write schema ${info.schema().simpleString} — " +
+              "select it as NULL (the sink computes it)")
+            Seq(slot -> ManifestGenerated.bind(session, info.schema(),
+              c, e, banned))
           }
-        // df.writeStream.toTable: exactly-once epoch appends through
-        // [[ManifestStreamingWrite]] — append-mode only (a streaming
-        // truncate/replace-where is not a log-structured sink shape)
-        def streaming(buckets: Option[Int] = None,
-            splitBy: Option[String] = None,
-            splitTransform: Option[String] = None)
-            : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-          require(!doTruncate && replaceFilters.isEmpty,
-            "streaming writes append only (use foreachBatch for " +
-              "overwrite/replace-where shapes)")
-          require(branch.isEmpty,
-            "streaming writes target main (stage on a branch in batch)")
-          require(identitySpec.isEmpty && generatedSpecs.isEmpty,
-            "streaming writes into identity/generated-column tables " +
-              "are not " +
-              "supported (epoch replay would need the idempotence " +
-              "marker to carry the issued range); generate ids in " +
-              "foreachBatch or write to a staging table")
-          new ManifestStreamingWrite(path, info.schema(), info.queryId(),
-            sconf, buckets, splitBy, splitTransform)
         }
-        bucketSpec match {
-          case None if writeOrder.isDefined =>
-            // WRITE ORDERED BY c (set_layout order_by): every INSERT
-            // range-distributes on the column and sorts within each
-            // task, so parts land key-sorted with DISJOINT ranges —
-            // min/max pruning on c is tight from the first write, no
-            // OPTIMIZE needed. Metadata-only: existing parts keep
-            // whatever order they were written with.
-            new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-              import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-              import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
-              private val ord = Array(Expressions.sort(
-                Expressions.column(writeOrder.get),
-                org.apache.spark.sql.connector.expressions.SortDirection
-                  .ASCENDING))
-              override def requiredDistribution(): Distribution =
-                Distributions.ordered(ord.map(_.asInstanceOf[org.apache.spark.sql.connector.expressions.SortOrder]))
-              override def requiredOrdering(): Array[SortOrder] = ord
-              override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-                new ManifestBatchWrite(path, info.schema(), doTruncate,
-                  sconf, branch,
-                  replaceFilters = replaceFilters, identity = identitySpec,
-                  generated = genFills)
-              override def toStreaming
-                  : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-                streaming()
-            }
-          case None => new Write {
-            override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-              new ManifestBatchWrite(path, info.schema(), doTruncate,
-                sconf, branch,
-                replaceFilters = replaceFilters, identity = identitySpec,
-                  generated = genFills)
-            override def toStreaming
-                : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-              streaming()
-          }
-          case Some((0, c)) =>
-            // identity/time split spec: cluster each (possibly
-            // DERIVED — days/hours ordinal) value into one task,
-            // split per value in the writer — single-valued parts.
-            // The time transforms resolve through this catalog's own
-            // days()/hours() functions, so Spark plans ONE exchange
-            // that co-locates each ordinal's rows.
-            import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-            import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
-            new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-              override def requiredDistribution(): Distribution =
-                Distributions.clustered(Array(splitTransform match {
-                  case Some(TimeSplit.Days) => Expressions.days(c)
-                  case Some(TimeSplit.Hours) => Expressions.hours(c)
-                  case _ => Expressions.identity(c)
-                }))
-              override def requiredOrdering(): Array[SortOrder] = Array.empty
-              override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-                new ManifestBatchWrite(path, info.schema(), doTruncate,
-                  sconf, branch,
-                  replaceFilters = replaceFilters, splitBy = Some(c),
-                  splitTransform = splitTransform,
-                  identity = identitySpec, generated = genFills)
-              override def toStreaming
-                  : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-                streaming(splitBy = Some(c), splitTransform = splitTransform)
-            }
-          case Some((n, c)) =>
-            import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-            import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
-            new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-              override def requiredDistribution(): Distribution =
-                Distributions.clustered(Array(Expressions.bucket(n, c)))
-              // sort by the key WITHIN each bucket task: parts land
-              // key-sorted (the writer detects and records it), so
-              // scans can report per-partition ordering and a
-              // co-bucketed join skips its sorts too
-              override def requiredOrdering(): Array[SortOrder] =
-                Array(Expressions.sort(Expressions.column(c),
-                  org.apache.spark.sql.connector.expressions.SortDirection
-                    .ASCENDING))
-              override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-                new ManifestBatchWrite(path, info.schema(), doTruncate,
-                  sconf, branch, buckets = Some(n),
-                  replaceFilters = replaceFilters, identity = identitySpec,
-                  generated = genFills)
-              override def toStreaming
-                  : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-                streaming(buckets = Some(n))
-            }
-        }
+      // df.writeStream.toTable: exactly-once epoch appends through
+      // [[ManifestStreamingWrite]] — append-mode only (a streaming
+      // truncate/replace-where is not a log-structured sink shape)
+      def streaming()
+          : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+        require(!doTruncate && replaceFilters.isEmpty,
+          "streaming writes append only (use foreachBatch for " +
+            "overwrite/replace-where shapes)")
+        require(branch.isEmpty,
+          "streaming writes target main (stage on a branch in batch)")
+        require(identitySpec.isEmpty && generatedSpecs.isEmpty,
+          "streaming writes into identity/generated-column tables " +
+            "are not " +
+            "supported (epoch replay would need the idempotence " +
+            "marker to carry the issued range); generate ids in " +
+            "foreachBatch or write to a staging table")
+        new ManifestStreamingWrite(path, info.schema(), info.queryId(),
+          sconf, spec)
       }
-    }
+      // the catalog resolves bucket()/days()/hours(), so every
+      // layout plans its one-exchange distribution here
+      ManifestSink.writePlan(spec, resolvesTransforms = true)(
+        () => new ManifestBatchWrite(path, info.schema(), doTruncate,
+          sconf, branch, spec, replaceFilters = replaceFilters,
+          identity = identitySpec, generated = genFills),
+        () => streaming())
+    })
 }
 
 /** Identity-split tables with Spark's PARTITION MANAGEMENT surface:
@@ -1675,14 +1540,14 @@ private[sources] class GraftCatalogTable(
   * from data by design — INSERT rows instead. */
 private[sources] class GraftSplitCatalogTable(
     ident: Identifier, path: String, tableSchema: StructType,
-    splitCol: String, writeOrder: Option[String],
-    tableProps: Map[String, String])
-    extends GraftCatalogTable(ident, path, tableSchema,
-      Some((0, splitCol)), writeOrder, tableProps)
+    spec: TableSpec, tableProps: Map[String, String])
+    extends GraftCatalogTable(ident, path, tableSchema, spec, tableProps)
     with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
 
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
   import org.apache.spark.unsafe.types.UTF8String
+
+  private val splitCol = spec.layout.get._2
 
   private def conf = ManifestSink.driverConf()
   private def field: StructField =
@@ -1780,15 +1645,14 @@ private[sources] class GraftSplitCatalogTable(
   * partitioning, the failure mode Hive's string date columns had). */
 private[sources] class GraftTimeSplitCatalogTable(
     ident: Identifier, path: String, tableSchema: StructType,
-    splitCol: String, transform: String, writeOrder: Option[String],
-    tableProps: Map[String, String])
-    extends GraftCatalogTable(ident, path, tableSchema,
-      Some((0, splitCol)), writeOrder, tableProps)
+    spec: TableSpec, tableProps: Map[String, String])
+    extends GraftCatalogTable(ident, path, tableSchema, spec, tableProps)
     with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
 
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
-  override protected def splitTransform: Option[String] = Some(transform)
+  private val splitCol = spec.layout.get._2
+  private val transform = spec.transform.get
 
   private def conf = ManifestSink.driverConf()
   private val isDays = transform == TimeSplit.Days
@@ -2091,7 +1955,7 @@ private[sources] object GraftBucketFunction extends UnboundFunction {
   * transforms ([[TimeSplit]]): Spark resolves a clustered write
   * distribution's `days(ts)` through this FunctionCatalog, so the
   * ingest exchange co-locates each UTC day's (hour's) rows in one
-  * task and the split writer commits one single-ordinal part per
+  * task and the layout writer commits one single-ordinal part per
   * ordinal per write — the Iceberg hidden-partition write shape.
   * Deterministic pure arithmetic (floorDiv of the internal micros),
   * identical to the writer's routing and the DDL faces' derivation,

@@ -767,62 +767,22 @@ private[sources] final class SetLayoutProcedure(warehouse: String)
       else Some(input.getUTF8String(2).toString.trim).filter(_.nonEmpty)
     val schema = ManifestSink.readSchema(conf, dir).get
     val old = render(conf, dir)
-    spec match {
-      // HIDDEN TIME-TRANSFORM layout evolution (`spec =>
-      // 'days(ts)'`): metadata-only like every set_layout — existing
-      // parts keep their generation (scans stay correct; DROP
-      // PARTITION refuses while straddlers exist), the next compact
-      // migrates, and every later INSERT routes by the derived
-      // day/hour ordinal.
-      case TimeRe(kind, col) =>
-        require(orderBy.isEmpty,
-          "set_layout: order_by only composes with spec => 'none' " +
-            "(a time split already clusters per ordinal)")
-        val tf = kind.toLowerCase(java.util.Locale.ROOT)
-        val f = schema.fields.find(_.name.equalsIgnoreCase(col))
-        require(f.exists(_.dataType ==
-          org.apache.spark.sql.types.TimestampType),
-          s"set_layout: $tf column '$col' must be a TIMESTAMP column " +
-            s"of ${schema.fieldNames.mkString("(", ",", ")")}")
-        ManifestSink.writeTableSpec(conf, dir,
-          TableSpec(Some((0, f.get.name)), transform = Some(tf)))
-      case BucketRe(n, col) =>
-        require(orderBy.isEmpty,
-          "set_layout: order_by only composes with spec => 'none' " +
-            "(bucketed writes sort within buckets already)")
-        val keyed = schema.fields
-          .find(_.dataType == org.apache.spark.sql.types.LongType).map(_.name)
-        require(keyed.exists(_.equalsIgnoreCase(col)),
-          s"set_layout: bucket column '$col' must be the table's first " +
-            s"BIGINT column (${keyed.getOrElse("none present")})")
-        require(n.toInt >= 1, s"set_layout: bucket count must be >= 1")
-        ManifestSink.writeTableSpec(conf, dir,
-          TableSpec(Some((n.toInt, keyed.get))))
-      case "none" | "NONE" =>
-        orderBy match {
-          case Some(c) =>
-            val f = schema.fields.find(_.name.equalsIgnoreCase(c))
-            require(f.exists(x =>
-              x.dataType == org.apache.spark.sql.types.LongType ||
-                x.dataType == org.apache.spark.sql.types.StringType),
-              s"set_layout: order_by column '$c' must be a BIGINT or " +
-                s"STRING column of ${schema.fieldNames.mkString("(", ",", ")")}")
-            ManifestSink.writeTableSpec(conf, dir,
-              TableSpec(orderBy = Some(f.get.name)))
-          case None => ManifestSink.clearTableSpec(conf, dir)
-        }
-      case col =>
-        require(orderBy.isEmpty,
-          "set_layout: order_by only composes with spec => 'none' " +
-            "(an identity split already clusters per value)")
-        val f = schema.fields.find(_.name.equalsIgnoreCase(col))
-        require(f.exists(x =>
-          x.dataType == org.apache.spark.sql.types.LongType ||
-            x.dataType == org.apache.spark.sql.types.StringType),
-          s"set_layout: identity column '$col' must be a BIGINT or " +
-            s"STRING column of ${schema.fieldNames.mkString("(", ",", ")")}")
-        ManifestSink.writeTableSpec(conf, dir, TableSpec(Some((0, f.get.name))))
+    // metadata-only like every layout change: existing parts keep
+    // their generation (scans stay correct; DROP PARTITION refuses
+    // while straddlers exist), the next compact migrates them, and
+    // every later INSERT routes by the new spec. order_by only
+    // composes with spec => 'none' (every other layout already
+    // places rows), which the layout check refuses.
+    val layout = spec match {
+      case TimeRe(kind, col) => TableSpec(Some((0, col)),
+        transform = Some(kind.toLowerCase(java.util.Locale.ROOT)))
+      case BucketRe(n, col) => TableLayout.bucket(n.toInt, col)
+      case "none" | "NONE" => TableSpec()
+      case col => TableSpec(Some((0, col)))
     }
+    val checked = TableLayout.check(layout.copy(orderBy = orderBy), schema)
+    if (checked == TableSpec()) ManifestSink.clearTableSpec(conf, dir)
+    else ManifestSink.writeTableSpec(conf, dir, checked)
     result(old, render(conf, dir))
   }
 }

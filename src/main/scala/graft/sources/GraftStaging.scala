@@ -5,11 +5,13 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException
 import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable, SupportsWrite, TableCapability}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.catalyst.plans.logical.AppendData
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftbridge.GraftDatasets
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -35,14 +37,17 @@ import org.apache.spark.util.SerializableConfiguration
   *    query leaves the old head untouched, and every pre-replace
   *    version stays time-travelable (`VERSION AS OF`).
   *
-  * Layout transforms (`PARTITIONED BY (bucket(n, col))` / identity
-  * split) route the staged write through the same clustered
-  * distribution + bucketed/split writers a live table uses, so a CTAS
-  * target is born with its layout — no create-then-insert two-step. */
+  * The layout (`PARTITIONED BY (…)` / `CLUSTER BY (c)`, one
+  * [[TableSpec]]) plans the staged write through the same
+  * [[ManifestSink.writePlan]] and routed writer a live table uses, so
+  * a CTAS target is born with its layout — no create-then-insert
+  * two-step. Compaction and REPLACE WHERE stage their rewrites through
+  * the same write ([[GraftStagedTable.stageRewrite]]). */
 private[sources] class GraftStagedTable(
     ident: Identifier, path: String, tableSchema: StructType,
-    bucketSpec: Option[(Int, String, Option[String])], replace: Boolean,
-    tableProps: Map[String, String] = Map.empty)
+    spec: TableSpec, replace: Boolean,
+    tableProps: Map[String, String] = Map.empty,
+    resolvesTransforms: Boolean = true)
     extends StagedTable with SupportsWrite {
 
   private val conf = ManifestSink.driverConf()
@@ -58,72 +63,34 @@ private[sources] class GraftStagedTable(
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE).asJava
 
+  // REPLACE's write arrives as a truncate of the (notionally fresh)
+  // staged table — truncation is inherent to staging
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder
-      with org.apache.spark.sql.connector.write.SupportsTruncate {
-      // REPLACE's write arrives as a truncate of the (notionally
-      // fresh) staged table — truncation is inherent to staging
-      override def truncate(): WriteBuilder = this
-      override def build(): Write = bucketSpec match {
-        case None => new Write {
-          override def toBatch: BatchWrite = new StagingWrite(info.schema())
-        }
-        case Some((0, c, tf)) => new Write with RequiresDistributionAndOrdering {
-          override def requiredDistribution(): Distribution =
-            Distributions.clustered(Array(tf match {
-              case Some(TimeSplit.Days) => Expressions.days(c)
-              case Some(TimeSplit.Hours) => Expressions.hours(c)
-              case _ => Expressions.identity(c)
-            }))
-          override def requiredOrdering(): Array[SortOrder] = Array.empty
-          override def toBatch: BatchWrite =
-            new StagingWrite(info.schema(), splitBy = Some(c),
-              splitTransform = tf)
-        }
-        case Some((n, c, _)) => new Write with RequiresDistributionAndOrdering {
-          override def requiredDistribution(): Distribution =
-            Distributions.clustered(Array(Expressions.bucket(n, c)))
-          override def requiredOrdering(): Array[SortOrder] =
-            Array(Expressions.sort(Expressions.column(c),
-              SortDirection.ASCENDING))
-          override def toBatch: BatchWrite =
-            new StagingWrite(info.schema(), buckets = Some(n))
-        }
-      }
-    }
+    new ManifestWriteBuilder((_, _) =>
+      ManifestSink.writePlan(spec, resolvesTransforms)(
+        () => new StagingWrite(info.schema())))
 
   /** Same task-side writers as a live table ([[ManifestWriterFactory]]
-    * — stats, blooms, bucket/split routing); the DRIVER-side commit
-    * only stashes the part list. Nothing is published until
+    * — stats, blooms, layout routing); the DRIVER-side commit only
+    * stashes the part list. Nothing is published until
     * [[commitStagedChanges]]. */
-  private class StagingWrite(writeSchema: StructType,
-      buckets: Option[Int] = None, splitBy: Option[String] = None,
-      splitTransform: Option[String] = None)
-      extends BatchWrite {
+  private class StagingWrite(writeSchema: StructType) extends BatchWrite {
     private val token = java.util.UUID.randomUUID().toString.take(8)
 
     override def createBatchWriterFactory(
         info: PhysicalWriteInfo): DataWriterFactory = {
       val dir = new Path(path)
       dir.getFileSystem(sconf.value).mkdirs(dir)
-      new ManifestWriterFactory(path, writeSchema, token, sconf,
-        buckets, splitBy, splitTransform)
+      new ManifestWriterFactory(path, writeSchema, token, sconf, spec)
     }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      staged = ManifestSink.committedParts(messages.toSeq, buckets)
+      staged = ManifestSink.committedParts(messages.toSeq, spec)
       publishSchema = writeSchema
     }
 
-    override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(path).getFileSystem(sconf.value)
-      messages.foreach {
-        case m: PartMeta => fs.delete(new Path(m.path), false)
-        case m: MultiPartCommit =>
-          m.parts.foreach(p => fs.delete(new Path(p.path), false))
-        case _ => ()
-      }
-    }
+    override def abort(messages: Array[WriterCommitMessage]): Unit =
+      ManifestSink.abortParts(sconf.value, messages.toSeq)
   }
 
   override def commitStagedChanges(): Unit = {
@@ -144,17 +111,11 @@ private[sources] class GraftStagedTable(
     val cm =
       if (defaults.isEmpty) None
       else Some(ColMap.identity(clean.fields.length).copy(defaults = defaults))
-    bucketSpec match {
-      case Some((n, c, tf)) =>
-        ManifestSink.writeTableSpec(conf, path,
-          TableSpec(Some((n, c)), transform = tf))
-      case None if replace =>
-        // the replaced table's layout does not survive into the new
-        // one: an unpartitioned RTAS over a bucketed table must not
-        // keep routing inserts through the dead spec
-        ManifestSink.clearTableSpec(conf, path)
-      case None => ()
-    }
+    // the replaced table's layout does not survive into the new one:
+    // an unpartitioned RTAS over a bucketed table must not keep
+    // routing inserts through the dead spec
+    if (spec != TableSpec()) ManifestSink.writeTableSpec(conf, path, spec)
+    else if (replace) ManifestSink.clearTableSpec(conf, path)
     // TBLPROPERTIES travel with the definition: CTAS persists them,
     // RTAS REPLACES them (stale comments must not describe new data)
     if (replace || tableProps.nonEmpty)
@@ -187,5 +148,44 @@ private[sources] class GraftStagedTable(
     // committed here, the directory is pure staging debris
     if (!replace && ManifestSink.readSchema(conf, path).isEmpty)
       fs.delete(new Path(path), true)
+  }
+}
+
+private[sources] object GraftStagedTable {
+
+  /** THE STAGED REWRITE shared by compaction and the REPLACE WHERE
+    * survivor rewrite: publish a by-reference read snapshot
+    * `<dir>/<prefix>read-<token>` over `parts` (with the table's
+    * column mapping, so mixed-generation parts decode — and through
+    * the masking source, so deletion vectors apply), read it, apply
+    * `f`, and stage the result straight into `dir` through the CTAS
+    * staged write under `spec`. There is no function catalog behind
+    * the rewrite, so bucket and days/hours layouts declare no
+    * distribution: the caller pre-clusters. Returns the staged parts
+    * with rows, UNPUBLISHED — invisible until the caller's own
+    * `publishRebase` lists them. After a crash, vacuum reclaims the
+    * orphaned parts and `expire_snapshots` the stale read snapshot
+    * (by its prefix). */
+  def stageRewrite(spark: SparkSession, dir: String, schema: StructType,
+      parts: Seq[PartMeta], prefix: String, spec: TableSpec)(
+      f: DataFrame => DataFrame): Seq[PartMeta] = {
+    val conf = ManifestSink.driverConf()
+    val read = new Path(dir,
+      s"${prefix}read-${java.util.UUID.randomUUID().toString.take(8)}")
+    val fs = read.getFileSystem(conf)
+    try {
+      ManifestSink.publishSnapshot(conf, read.toString, schema, parts,
+        colmap = ManifestSink.alignedColMap(conf, dir, schema))
+      val df = f(spark.read.format("graft.sources.ManifestSource")
+        .option("path", read.toString).load())
+      val table = new GraftStagedTable(Identifier.of(Array.empty, dir), dir,
+        df.schema, spec, replace = true, resolvesTransforms = false)
+      GraftDatasets.ofRows(spark, AppendData.byPosition(
+        DataSourceV2Relation.create(table, None, None),
+        df.queryExecution.logical))
+      val (kept, empty) = table.staged.partition(_.rows > 0)
+      empty.foreach(p => fs.delete(new Path(p.path), false))
+      kept
+    } finally fs.delete(read, true)
   }
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, not}
 import org.apache.spark.sql.sources._
@@ -18,12 +17,10 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *      NULL key never satisfies a range conjunct), `dropped` (pure
   *      key-range predicate, part fully inside with zero null keys —
   *      every row provably matches), `affected` (the rest),
-  *   2. stage a temp read-manifest listing ONLY the affected parts
-  *      (absolute paths: no data is copied to stage a read),
-  *   3. distributed rewrite: scan those parts through the normal
-  *      source, keep rows where the predicate is FALSE or NULL (SQL
-  *      DELETE semantics), write them through the normal sink,
-  *   4. move the new part files into the table dir.
+  *   2. distributed rewrite ([[GraftStagedTable.stageRewrite]]): scan
+  *      ONLY the affected parts through a by-reference read snapshot,
+  *      keep rows where the predicate is FALSE or NULL (SQL DELETE
+  *      semantics), and stage them into the table dir, unpublished.
   *
   * Time travel is untouched by construction: prior snapshots still
   * list the replaced part files (VACUUM owns their retirement).
@@ -78,7 +75,6 @@ private[sources] object ManifestCow {
       filters: Array[Filter],
       parts: Seq[PartMeta]): (Set[String], Seq[PartMeta]) = {
     val spark = SparkSession.active
-    val conf = ManifestSink.driverConf()
 
     // Classify on the key interval of the TOP-LEVEL key conjuncts
     // (the filters array is a conjunction; see [[LongRange]]). It only
@@ -107,39 +103,13 @@ private[sources] object ManifestCow {
     // head rather than re-rendering the stale base capture
     val droppedPaths = dropped.map(_.path).toSet
     if (affected.isEmpty) return (droppedPaths, Seq.empty)
-    val fs = new Path(path).getFileSystem(conf)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmpRead = s"$path/_cow-read-$token"
-    val tmpWrite = s"$path/_cow-write-$token"
-    try {
-      // stage 2: a manifest over the affected parts, by reference —
-      // carrying the table's column mapping so mixed-generation part
-      // layouts decode correctly through the staging read
-      ManifestSink.publishSnapshot(conf, tmpRead, schema, affected,
-        colmap = ManifestSink.alignedColMap(conf, path, schema))
-      // stage 3: DELETE keeps rows where the predicate is FALSE or
-      // NULL — the three-valued-logic contract a naive `!pred` breaks
-      val pred = filters.map(toColumn).reduceOption(_ && _).getOrElse(lit(true))
-      spark.read.format("graft.sources.ManifestSource")
-        .option("path", tmpRead).load()
-        .filter(not(coalesce(pred, lit(false))))
-        .write.format("graft.sources.ManifestSink")
-        .option("path", tmpWrite).mode("overwrite").save()
-      // stage 4: adopt the surviving parts into the table dir
-      val rewritten = ManifestSink.readManifestMeta(conf, tmpWrite, None)
-        .filter(_.rows > 0)
-        .map { p =>
-          val src = new Path(p.path)
-          val dst = new Path(path, src.getName)
-          if (!fs.rename(src, dst)) throw new java.io.IOException(
-            s"COW part adoption failed: $src -> $dst")
-          p.copy(path = dst.toString)
-        }
-      // dropped parts stay referenced only by prior snapshots
-      (droppedPaths ++ affected.map(_.path), rewritten)
-    } finally {
-      fs.delete(new Path(tmpRead), true)
-      fs.delete(new Path(tmpWrite), true)
-    }
+    // DELETE keeps rows where the predicate is FALSE or NULL — the
+    // three-valued-logic contract a naive `!pred` breaks. Survivors
+    // stage unlaid-out: REPLACE WHERE leaves placement to compaction.
+    val pred = filters.map(toColumn).reduceOption(_ && _).getOrElse(lit(true))
+    val rewritten = GraftStagedTable.stageRewrite(spark, path, schema,
+      affected, "_cow-", TableSpec())(_.filter(not(coalesce(pred, lit(false)))))
+    // dropped parts stay referenced only by prior snapshots
+    (droppedPaths ++ affected.map(_.path), rewritten)
   }
 }

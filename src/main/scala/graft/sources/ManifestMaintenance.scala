@@ -536,12 +536,11 @@ object ManifestMaintenance {
   }
 
   /** Shared rewrite machinery for [[compactVectors]] and
-    * [[compactFiles]]: stage a manifest over `selected` (vectors
-    * included — the masking read defines the surviving rows), read it
-    * back through the normal source, re-lay it out, write fresh parts,
-    * adopt them into the table directory, and publish
+    * [[compactFiles]]: stage `selected` (vectors included — the
+    * masking read defines the surviving rows) re-laid out by `layout`
+    * through [[GraftStagedTable.stageRewrite]], and publish
     * `head − selected + rewritten` pinned to `baseVersion` with
-    * `selected` as the conflict footprint. Returns the adopted part
+    * `selected` as the conflict footprint. Returns the rewritten part
     * metas and the committed version. */
   private def rewriteAndSwap(spark: org.apache.spark.sql.SparkSession,
       conf: Configuration, dir: String, baseVersion: Int,
@@ -550,103 +549,60 @@ object ManifestMaintenance {
       forcePlainLayout: Boolean = false,
       scopedSplitLayout: Boolean = false)
       : (Seq[PartMeta], Int) = {
+    import org.apache.spark.sql.functions.{col, expr}
     val schema = ManifestSink.readSchema(conf, dir, Some(baseVersion))
       .getOrElse(throw new IllegalStateException(s"no schema at $dir"))
-    val fs = new Path(dir).getFileSystem(conf)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmpRead = s"$dir/_compact-read-$token"
-    val tmpWrite = s"$dir/_compact-write-$token"
     // HEAD-SPEC-TARGETING: compaction is the layout MIGRATOR. The
     // target layout is the TABLE's head spec (_TABLE.json) — after
     // `set_layout` evolves the spec, the very next compact rewrites
     // mixed-generation parts into the new layout and SPJ re-arms.
-    // Tables without a spec fall back to the parts' own recorded
-    // bucketing (path-written bucketed tables stay bucket-preserving:
+    // Tables without a spec keep the parts' own recorded bucketing
+    // (path-written bucketed tables stay bucket-preserving:
     // compaction settles MOR debt and packs small files WITHOUT
-    // demoting the table out of storage-partitioned joins).
-    val headSpec =
-      if (forcePlainLayout) TableSpec() else ManifestSink.readTableSpec(conf, dir)
-    val bucketSpec: Option[Int] = headSpec.layout.collect { case (n, _) if n > 0 => n }
-      .orElse(selected.headOption.map(_.nbuckets)
-        .filter(n => !forcePlainLayout && n > 0 &&
-          selected.forall(_.nbuckets == n)))
-    // SPLIT-TARGETING: an identity-partitioned table (_TABLE.json
-    // spec with bucket count 0) re-routes the rewrite through the
-    // value-split writer, so compaction settles MOR debt without
-    // breaking single-valued parts — grouped metadata aggregates and
-    // point-predicate pruning survive maintenance
-    val splitSpec: Option[String] = headSpec.layout.collect { case (0, c) => c }
-    // days()/hours() split layouts migrate through compaction exactly
-    // like identity splits — the writer routes by the DERIVED ordinal
-    val splitTf: Option[String] =
-      if (splitSpec.isDefined) headSpec.transform else None
+    // demoting the table out of storage-partitioned joins). A write
+    // order is laid out by `layout` itself, at the target part count.
     val keyCol = schema.fields.find(
       _.dataType == org.apache.spark.sql.types.LongType).map(_.name)
-    try {
-      ManifestSink.publishSnapshot(conf, tmpRead, schema, selected,
-        colmap = ManifestSink.alignedColMap(conf, dir, schema))
-      val df = spark.read.format("graft.sources.ManifestSource")
-        .option("path", tmpRead).load()
-      val (laidOut, writeOpts) = (bucketSpec, keyCol) match {
-        case (Some(n), Some(k)) =>
-          // sortWithinPartitions: the compacted one-file-per-bucket
-          // layout comes out key-sorted, so post-compaction scans
-          // report ordering and co-bucketed joins skip their sorts
-          (df.repartition(n, graft.functions.GraftBucket.bucketId(
-            org.apache.spark.sql.functions.col(k), n))
-            .sortWithinPartitions(org.apache.spark.sql.functions.col(k)),
-            Map("buckets" -> n.toString))
-        case _ => splitSpec match {
-          // the split write's own clustered distribution lays rows
-          // out; the writer splits per value — one part per value.
-          // A partition-SCOPED rewrite additionally applies the
-          // requested layout first (the scope holds one value, so
-          // repartition(target) IS the file-count control)
-          case Some(c) =>
-            // transform layouts pre-cluster by the DERIVED ordinal
-            // here (the path sink can't demand a days()/hours()
-            // distribution — no function catalog behind a path), so
-            // the rewrite lands ~one part per ordinal; identity
-            // splits rely on the sink's own identity clustering
-            val clustered = splitTf match {
-              case Some(tf) if !scopedSplitLayout =>
-                df.repartition(org.apache.spark.sql.functions.expr(
-                  s"unix_micros(`$c`) div ${TimeSplit.unit(tf)}"))
-              case _ => if (scopedSplitLayout) layout(df) else df
-            }
-            (clustered,
-              Map("splitBy" -> c) ++
-                splitTf.map("splitTransform" -> _).toMap)
-          case None    => (layout(df), Map.empty[String, String])
-        }
+    val spec =
+      if (forcePlainLayout) TableSpec()
+      else {
+        val head = ManifestSink.readTableSpec(conf, dir).copy(orderBy = None)
+        val n = selected.headOption.fold(0)(_.nbuckets)
+        if (head.layout.isEmpty && n > 0 && keyCol.isDefined &&
+            selected.forall(_.nbuckets == n)) TableSpec(Some((n, keyCol.get)))
+        else head
       }
-      laidOut.write.format("graft.sources.ManifestSink")
-        .option("path", tmpWrite).options(writeOpts)
-        .mode("overwrite").save()
-      val rewritten = ManifestSink.readManifestMeta(conf, tmpWrite, None)
-        .filter(_.rows > 0)
-        .map { p =>
-          val src = new Path(p.path)
-          val dst = new Path(dir, src.getName)
-          if (!fs.rename(src, dst)) throw new java.io.IOException(
-            s"compaction part adoption failed: $src -> $dst")
-          p.copy(path = dst.toString)
-        }
-      // footprint = the parts this compaction replaces: an interleaved
-      // append (or DML on an unselected part) composes via the
-      // head-aware rebase; one that touched a selected part mid-
-      // compaction conflicts loudly — compaction is always safe to
-      // retry
-      val selectedPaths = selected.map(_.path).toSet
-      val v = ManifestSink.publishRebase(conf, dir, schema,
-        head => head.filterNot(p => selectedPaths.contains(p.path)) ++ rewritten,
-        strictBase = Some(baseVersion), footprint = Some(selectedPaths),
-        op = "optimize")
-      (rewritten, v)
-    } finally {
-      fs.delete(new Path(tmpRead), true)
-      fs.delete(new Path(tmpWrite), true)
-    }
+    // no function catalog behind the rewrite: pre-cluster what the
+    // staged write cannot ask Spark for. Buckets: one task per bucket,
+    // key-sorted, so the compacted layout is one sorted file per
+    // bucket and co-bucketed joins skip their sorts. Time splits: by
+    // the DERIVED ordinal, ~one part per ordinal. Identity splits get
+    // the write's own identity clustering; a partition-SCOPED rewrite
+    // applies the requested layout first (the scope holds one value,
+    // so repartition(target) IS the file-count control).
+    val laidOut: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+      (spec.layout, spec.transform) match {
+        case (Some((n, k)), _) if n > 0 =>
+          _.repartition(n, graft.functions.GraftBucket.bucketId(col(k), n))
+            .sortWithinPartitions(col(k))
+        case (Some((_, c)), Some(tf)) if !scopedSplitLayout =>
+          _.repartition(expr(s"unix_micros(`$c`) div ${TimeSplit.unit(tf)}"))
+        case (Some(_), _) if !scopedSplitLayout => identity
+        case _ => layout
+      }
+    val rewritten = GraftStagedTable.stageRewrite(spark, dir, schema,
+      selected, "_compact-", spec)(laidOut)
+    // footprint = the parts this compaction replaces: an interleaved
+    // append (or DML on an unselected part) composes via the
+    // head-aware rebase; one that touched a selected part mid-
+    // compaction conflicts loudly — compaction is always safe to
+    // retry
+    val selectedPaths = selected.map(_.path).toSet
+    val v = ManifestSink.publishRebase(conf, dir, schema,
+      head => head.filterNot(p => selectedPaths.contains(p.path)) ++ rewritten,
+      strictBase = Some(baseVersion), footprint = Some(selectedPaths),
+      op = "optimize")
+    (rewritten, v)
   }
 
   /** Default orphan grace: a never-referenced staged file younger than
@@ -925,12 +881,12 @@ object ManifestMaintenance {
       val reclaimable =
         (name.startsWith("part-") && name.endsWith(".csv")) ||
           (name.startsWith(DeleteVector.SidecarPrefix) && name.endsWith(".hex"))
-      // crashed-maintenance DEBRIS: compaction / MV-refresh staging
-      // directories are deleted by their own finally blocks, so one
-      // still present is a crash leftover — reclaimable once past the
-      // same grace gate. The gate is the NEWEST mtime among the dir's
-      // children, not the dir's own (which only moves on entry
-      // create/delete): a live compaction or MV refresh legitimately
+      // crashed-maintenance DEBRIS: compaction / REPLACE WHERE / MV-
+      // refresh staging directories are deleted by their own finally
+      // blocks, so one still present is a crash leftover — reclaimable
+      // once past the same grace gate. The gate is the NEWEST mtime
+      // among the dir's children, not the dir's own (which only moves
+      // on entry create/delete): a live compaction or MV refresh legitimately
       // running longer than a caller-shortened grace keeps touching
       // its staged files, and must not lose its stage mid-run.
       def liveliest(p: Path, own: Long): Long =
@@ -942,7 +898,7 @@ object ManifestMaintenance {
           case scala.util.control.NonFatal(_) => now // racing: not stale
         }
       val staleTmpDir = st.isDirectory &&
-        (name.startsWith("_compact-") || name.startsWith("_mv-")) &&
+        Seq("_compact-", "_cow-", "_mv-").exists(name.startsWith) &&
         now - liveliest(st.getPath, st.getModificationTime) > orphanGraceMs
       if (reclaimable && !referenced.contains(name) &&
           (expiredRefs.contains(name) ||

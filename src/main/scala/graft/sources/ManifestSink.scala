@@ -61,14 +61,23 @@ class ManifestSink extends TableProvider {
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
+      properties: util.Map[String, String]): Table = {
+    def opt(k: String) = Option(properties.get(k)).filter(_.nonEmpty)
+    // the path spelling of a layout: `buckets` hashes the first BIGINT
+    // column, `splitBy` splits by value, `clusterBy` orders the write
+    val layouts =
+      opt("buckets").map(n => TableLayout.bucket(n.toInt, schema.fields
+        .find(_.dataType == LongType).fold("")(_.name))).toSeq ++
+        opt("splitBy").map(c => TableSpec(Some((0, c)))) ++
+        opt("clusterBy").map(c => TableSpec(orderBy = Some(c)))
+    require(layouts.length <= 1,
+      "options 'buckets', 'clusterBy' and 'splitBy' are mutually " +
+        "exclusive (hash-bucketed vs range-clustered vs " +
+        "identity-partitioned layout)")
     new ManifestTable(properties.get("path"), schema,
-      Option(properties.get("clusterBy")).filter(_.nonEmpty),
-      Option(properties.get("writePartitions")).map(_.toInt),
-      Option(properties.get("branch")).filter(_.nonEmpty),
-      Option(properties.get("buckets")).map(_.toInt),
-      Option(properties.get("splitBy")).filter(_.nonEmpty),
-      Option(properties.get("splitTransform")).filter(_.nonEmpty))
+      TableLayout.check(layouts.headOption.getOrElse(TableSpec()), schema),
+      opt("writePartitions").map(_.toInt), opt("branch"))
+  }
 }
 
 /** Per-part bloom filter over the key column, stored hex-encoded in
@@ -581,12 +590,84 @@ object ManifestSink {
   /** The parts a write's task messages committed, each bucketed part
     * stamped with the table's bucket count. */
   private[sources] def committedParts(messages: Seq[WriterCommitMessage],
-      buckets: Option[Int]): Seq[PartMeta] =
+      spec: TableSpec): Seq[PartMeta] =
     messages.flatMap {
       case m: PartMeta        => Seq(m)
       case m: MultiPartCommit => m.parts
     }.map(m =>
-      if (m.bucket >= 0) m.copy(nbuckets = buckets.getOrElse(0)) else m)
+      if (m.bucket >= 0) m.copy(nbuckets = spec.layout.fold(0)(_._1)) else m)
+
+  /** Abort of a write that never published: delete the part files its
+    * task messages staged (best effort — unreferenced parts are
+    * invisible, and vacuum reclaims what this misses). */
+  private[sources] def abortParts(conf: Configuration,
+      messages: Seq[WriterCommitMessage]): Unit =
+    messages.collect {
+      case m: PartMeta        => Seq(m)
+      case m: MultiPartCommit => m.parts
+    }.flatten.foreach { p =>
+      val f = new Path(p.path)
+      f.getFileSystem(conf).delete(f, false)
+    }
+
+  /** THE WRITE PLAN: the one mapping from a table's layout to the
+    * Spark `Write` every manifest write goes through (path, catalog,
+    * CTAS/RTAS, streaming, compaction and REPLACE WHERE staging). The
+    * layout's distribution is Spark's RequiresDistributionAndOrdering
+    * contract — layout policy lives with the TABLE, not with every
+    * writer:
+    *
+    *  - `orderBy` c: a globally SORTED distribution plus a sort, so
+    *    every part owns a disjoint, sorted key range (Iceberg's
+    *    write.distribution-mode=range) — tight min/max pruning;
+    *  - identity split c: CLUSTERED by c, so each value lands in one
+    *    task and the routed writer commits one single-valued part per
+    *    value (GROUP BY c answers from the manifest, `c = v` prunes to
+    *    the value's parts);
+    *  - `bucket(n, c)` plus a sort by c, and `days`/`hours(c)`:
+    *    CLUSTERED by the transform, one exchange that co-locates each
+    *    bucket's (ordinal's) rows — only where a function catalog
+    *    resolves the transform (catalog and CTAS tables). A bare path
+    *    has none, so it declares no distribution: the routed writer
+    *    still commits correct per-bucket / per-ordinal parts, just
+    *    possibly more of them (compaction pre-clusters its own).
+    *
+    * `writePartitions` (path option) fixes the exchange's width; 0 or
+    * absent leaves it to the planner. */
+  private[sources] def writePlan(spec: TableSpec, resolvesTransforms: Boolean,
+      writePartitions: Option[Int] = None)(
+      batch: () => BatchWrite,
+      stream: () => streaming.StreamingWrite = () =>
+        throw new UnsupportedOperationException("streaming write")): Write = {
+    import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+    import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
+    def asc(c: String): Array[SortOrder] =
+      Array(Expressions.sort(Expressions.column(c), SortDirection.ASCENDING))
+    def clustered(t: Transform) = Distributions.clustered(Array(t))
+    val plan: Option[(Distribution, Array[SortOrder])] =
+      (spec.layout, spec.transform) match {
+        case (None, _) =>
+          spec.orderBy.map(c => (Distributions.ordered(asc(c)), asc(c)))
+        case (Some((0, c)), None) =>
+          Some((clustered(Expressions.identity(c)), Array.empty))
+        case (Some((0, c)), Some(tf)) if resolvesTransforms =>
+          Some((clustered(if (tf == TimeSplit.Days) Expressions.days(c)
+            else Expressions.hours(c)), Array.empty))
+        case (Some((n, c)), _) if n > 0 && resolvesTransforms =>
+          Some((clustered(Expressions.bucket(n, c)), asc(c)))
+        case _ => None
+      }
+    new Write with RequiresDistributionAndOrdering {
+      override def requiredDistribution(): Distribution =
+        plan.fold(Distributions.unspecified(): Distribution)(_._1)
+      override def requiredOrdering(): Array[SortOrder] =
+        plan.fold(Array.empty[SortOrder])(_._2)
+      override def requiredNumPartitions(): Int =
+        plan.flatMap(_ => writePartitions).getOrElse(0)
+      override def toBatch: BatchWrite = batch()
+      override def toStreaming: streaming.StreamingWrite = stream()
+    }
+  }
 
   /** The columns whose per-part [[ColStat]] the writer records, as
     * schema indices: ('l' columns, 's' columns). The key (first
@@ -640,7 +721,7 @@ object ManifestSink {
   /** TABLE-LEVEL LAYOUT SPEC (`_TABLE.json`): created by `CREATE
     * TABLE … PARTITIONED BY (bucket(n, col))` / `(col)` and read by
     * every catalog load — layout policy lives with the TABLE, so
-    * every INSERT INTO routes through the bucketed/split writer
+    * every INSERT INTO routes through the layout writer
     * without the writer ever being told. EVOLVABLE after create
     * (`CALL cat.system.set_layout(...)` — the Iceberg partition-spec
     * evolution shape): the replace is metadata-only, EXISTING parts
@@ -1230,134 +1311,56 @@ object ManifestSink {
 }
 
 private[sources] class ManifestTable(
-    path: String, schema: StructType,
-    clusterBy: Option[String] = None, writePartitions: Option[Int] = None,
-    branch: Option[String] = None, buckets: Option[Int] = None,
-    splitBy: Option[String] = None,
-    splitTransform: Option[String] = None)
+    path: String, schema: StructType, spec: TableSpec,
+    writePartitions: Option[Int], branch: Option[String])
     extends Table with SupportsWrite {
   require(path != null && path.nonEmpty, "option 'path' is required")
-  require(Seq(buckets, clusterBy, splitBy).count(_.isDefined) <= 1,
-    "options 'buckets', 'clusterBy' and 'splitBy' are mutually " +
-      "exclusive (hash-bucketed vs range-clustered vs " +
-      "identity-partitioned layout)")
-  require(splitTransform.isEmpty || splitBy.isDefined,
-    "option 'splitTransform' requires 'splitBy' (the TIMESTAMP column " +
-      "the days/hours transform derives from)")
-  splitTransform.foreach(t => require(TimeSplit.valid(t),
-    s"option 'splitTransform' must be 'days' or 'hours', got '$t'"))
-  splitBy.foreach { c =>
-    if (splitTransform.isDefined)
-      require(schema.fields.exists(f => f.name == c &&
-        f.dataType == org.apache.spark.sql.types.TimestampType),
-        s"splitBy column '$c' with a time transform must be a " +
-          s"TIMESTAMP column of the write schema " +
-          schema.fieldNames.mkString("(", ",", ")"))
-    else require(schema.fields.exists(f => f.name == c &&
-      (f.dataType == LongType ||
-        f.dataType == org.apache.spark.sql.types.StringType)),
-      s"splitBy column '$c' must be a BIGINT or STRING column of the " +
-        s"write schema ${schema.fieldNames.mkString("(", ",", ")")}")
-  }
-  buckets.foreach { n =>
-    require(n >= 1, s"option 'buckets' must be >= 1, got $n")
-    require(schema.fields.exists(_.dataType == LongType),
-      "bucketed writes need a BIGINT key column (buckets hash the " +
-        "first BIGINT column — the same column the stats prune on)")
-  }
   override def name(): String = s"manifest($path)"
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE).asJava
 
+  // capture the session conf HERE — newWriteBuilder/build run on the
+  // driver; executors only ever see the serialized copy
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with SupportsTruncate {
-      private var doTruncate = false
-      override def truncate(): WriteBuilder = { doTruncate = true; this }
-      override def build(): Write = clusterBy match {
-        // time-transform split via the PATH spelling: the sink cannot
-        // demand a days()/hours() clustered distribution (transform
-        // resolution needs a function catalog; a bare path has none),
-        // so the write takes the caller's partitioning as-is — every
-        // part is still single-ordinal (the writer splits by the
-        // derived value), just possibly more parts per ordinal. The
-        // CATALOG spelling plans the proper one-exchange layout;
-        // compaction re-clusters by the ordinal when it migrates.
-        case None if splitBy.isDefined && splitTransform.isDefined =>
-          new Write {
-            override def toBatch: BatchWrite =
-              new ManifestBatchWrite(path, info.schema(), doTruncate,
-                new SerializableConfiguration(ManifestSink.driverConf()),
-                branch, splitBy = splitBy, splitTransform = splitTransform)
-          }
-        case None if splitBy.isDefined =>
-          // IDENTITY-PARTITIONED WRITE (`option("splitBy", c)`): the
-          // sink demands a CLUSTERED distribution on the column —
-          // Spark shuffles each distinct value to exactly one write
-          // task — and the task writer then opens one part file per
-          // value it sees, so EVERY COMMITTED PART IS SINGLE-VALUED
-          // on the column (min==max per-part stats). That layout is
-          // what turns `GROUP BY c` into a metadata-only pushed
-          // aggregate and makes `c = v` predicates prune to exactly
-          // the value's parts — the Hive/Iceberg identity-partition
-          // shape, carried by stats instead of directory names.
-          import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-          import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
-          val col = splitBy.get
-          require(info.schema().fieldNames.contains(col),
-            s"splitBy column '$col' not in write schema " +
-              info.schema().fieldNames.mkString("(", ",", ")"))
-          new Write with RequiresDistributionAndOrdering {
-            override def requiredDistribution(): Distribution =
-              Distributions.clustered(Array(Expressions.identity(col)))
-            override def requiredOrdering(): Array[SortOrder] =
-              Array.empty
-            override def requiredNumPartitions(): Int =
-              writePartitions.getOrElse(0)
-            override def toBatch: BatchWrite =
-              new ManifestBatchWrite(path, info.schema(), doTruncate,
-                new SerializableConfiguration(ManifestSink.driverConf()),
-                branch, splitBy = splitBy, splitTransform = splitTransform)
-          }
-        case None => new Write {
-          override def toBatch: BatchWrite =
-            // capture the session conf HERE — newWriteBuilder/build run
-            // on the driver; executors only ever see the serialized copy
-            new ManifestBatchWrite(path, info.schema(), doTruncate,
-              new SerializableConfiguration(ManifestSink.driverConf()), branch,
-              buckets)
-        }
-        case Some(col) =>
-          // DECLARATIVE CLUSTERED WRITE (`option("clusterBy", "k")`
-          // [+ `writePartitions`]): the SINK demands a globally
-          // SORTED distribution on the key, so Spark plans the range
-          // exchange + sort and every committed part owns a disjoint
-          // key range — the stats-prunable layout — without the
-          // caller hand-rolling repartitionByRange. This is the
-          // RequiresDistributionAndOrdering contract Iceberg uses for
-          // its write.distribution-mode=range: layout policy lives
-          // with the TABLE, not with every writer. At 100 TB the
-          // ordered exchange is one extra shuffle at ingest that buys
-          // every later keyed read its part pruning.
-          import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-          import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
-          require(info.schema().fieldNames.contains(col),
-            s"clusterBy column '$col' not in write schema " +
-              info.schema().fieldNames.mkString("(", ",", ")"))
-          val order = Array[SortOrder](
-            Expressions.sort(Expressions.column(col), SortDirection.ASCENDING))
-          new Write with RequiresDistributionAndOrdering {
-            override def requiredDistribution(): Distribution =
-              Distributions.ordered(order)
-            override def requiredOrdering(): Array[SortOrder] = order
-            override def requiredNumPartitions(): Int =
-              writePartitions.getOrElse(0) // 0 = planner's choice
-            override def toBatch: BatchWrite =
-              new ManifestBatchWrite(path, info.schema(), doTruncate,
-                new SerializableConfiguration(ManifestSink.driverConf()), branch)
-          }
-      }
+    new ManifestWriteBuilder((doTruncate, _) =>
+      ManifestSink.writePlan(spec, resolvesTransforms = false,
+        writePartitions)(() => new ManifestBatchWrite(path, info.schema(),
+        doTruncate, new SerializableConfiguration(ManifestSink.driverConf()),
+        branch, spec)))
+}
+
+/** The one write builder of the manifest tables: records a truncate
+  * (INSERT OVERWRITE, `mode("overwrite")`) or a REPLACE WHERE
+  * condition and hands both to `plan`. SQL `INSERT INTO t REPLACE
+  * WHERE pred SELECT ...` / `df.writeTo(t).overwrite(cond)` arrive as
+  * OverwriteByExpression: AlwaysTrue degenerates to the logical
+  * truncate; anything else must be row-evaluable (same contract as
+  * DELETE), so an untranslatable condition is rejected at ANALYSIS via
+  * canOverwrite, never half-applied. Only catalog tables declare
+  * OVERWRITE_BY_FILTER, so only they ever see a condition. */
+private[sources] class ManifestWriteBuilder(
+    plan: (Boolean, Option[Array[org.apache.spark.sql.sources.Filter]]) => Write)
+    extends SupportsOverwrite {
+  import org.apache.spark.sql.sources.{AlwaysTrue, Filter}
+  private var doTruncate = false
+  private var replaceFilters: Option[Array[Filter]] = None
+  override def truncate(): WriteBuilder = { doTruncate = true; this }
+  override def canOverwrite(filters: Array[Filter]): Boolean =
+    filters.forall {
+      case _: AlwaysTrue => true
+      case f => ManifestCow.translatable(f)
     }
+  override def overwrite(filters: Array[Filter]): WriteBuilder = {
+    if (filters.forall(_.isInstanceOf[AlwaysTrue])) doTruncate = true
+    else {
+      require(canOverwrite(filters),
+        "REPLACE WHERE condition not row-evaluable: " + filters.mkString(", "))
+      replaceFilters = Some(filters)
+    }
+    this
+  }
+  override def build(): Write = plan(doTruncate, replaceFilters)
 }
 
 /** Driver-side commit coordinator.
@@ -1385,11 +1388,9 @@ private[sources] class ManifestTable(
 private[sources] class ManifestBatchWrite(
     path: String, schema: StructType, truncate: Boolean,
     conf: SerializableConfiguration, branch: Option[String] = None,
-    buckets: Option[Int] = None,
+    spec: TableSpec = TableSpec(),
     replaceFilters: Option[Array[org.apache.spark.sql.sources.Filter]] = None,
     opLabel: Option[String] = None,
-    splitBy: Option[String] = None,
-    splitTransform: Option[String] = None,
     identity: Option[ManifestIdentity.Spec] = None,
     generated: Seq[(Int, org.apache.spark.sql.catalyst.expressions.Expression)] =
       Seq.empty)
@@ -1430,9 +1431,7 @@ private[sources] class ManifestBatchWrite(
     // truncate is logical (snapshots own their part files)
     val dir = new Path(path)
     dir.getFileSystem(conf.value).mkdirs(dir)
-    val factory0 =
-      new ManifestWriterFactory(path, schema, token, conf, buckets, splitBy,
-        splitTransform)
+    val factory0 = new ManifestWriterFactory(path, schema, token, conf, spec)
     // generated wraps INNER (sees identity-filled rows were it to
     // reference them — banned at create, so order only matters for
     // the refusal messages); identity wraps OUTER so its fill sees
@@ -1550,7 +1549,7 @@ private[sources] class ManifestBatchWrite(
         case (f, _) => f.copy(nullable = true)
       })
     }
-    val newParts = ManifestSink.committedParts(messages.toSeq, buckets)
+    val newParts = ManifestSink.committedParts(messages.toSeq, spec)
     replaceFilters match {
       case Some(filters) =>
         // REPLACE WHERE (OverwriteByExpression): ONE atomic snapshot
@@ -1603,15 +1602,8 @@ private[sources] class ManifestBatchWrite(
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    messages.foreach {
-      case m: PartMeta => fs.delete(new Path(m.path), false)
-      case m: MultiPartCommit =>
-        m.parts.foreach(p => fs.delete(new Path(p.path), false))
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    ManifestSink.abortParts(conf.value, messages.toSeq)
 }
 
 /** NATIVE STREAMING SINK (`df.writeStream.toTable("cat.ns.t")` —
@@ -1640,9 +1632,7 @@ private[sources] class ManifestBatchWrite(
   * foreachBatch, not a log-structured sink. */
 private[sources] class ManifestStreamingWrite(
     path: String, schema: StructType, queryId: String,
-    conf: SerializableConfiguration, buckets: Option[Int] = None,
-    splitBy: Option[String] = None,
-    splitTransform: Option[String] = None)
+    conf: SerializableConfiguration, spec: TableSpec)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   private def opToken(epochId: Long) = s"stream:$queryId:$epochId"
@@ -1655,8 +1645,7 @@ private[sources] class ManifestStreamingWrite(
     // fresh file token per epoch attempt: replayed epochs write new
     // files, which the skipped commit then deletes
     ManifestStreamingWriterFactory(new ManifestWriterFactory(path, schema,
-      java.util.UUID.randomUUID().toString.take(8), conf, buckets, splitBy,
-      splitTransform))
+      java.util.UUID.randomUUID().toString.take(8), conf, spec))
   }
 
   /** True iff some committed version already carries this epoch's
@@ -1675,21 +1664,14 @@ private[sources] class ManifestStreamingWrite(
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     if (alreadyCommitted(epochId)) { abort(epochId, messages); return }
-    val newParts = ManifestSink.committedParts(messages.toSeq, buckets)
+    val newParts = ManifestSink.committedParts(messages.toSeq, spec)
     ManifestSink.publishRebase(conf.value, path, schema,
       head => head ++ newParts, strictBase = None, op = opToken(epochId))
   }
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    messages.foreach {
-      case m: PartMeta => fs.delete(new Path(m.path), false)
-      case m: MultiPartCommit =>
-        m.parts.foreach(p => fs.delete(new Path(p.path), false))
-      case _ => ()
-    }
-  }
+      messages: Array[WriterCommitMessage]): Unit =
+    ManifestSink.abortParts(conf.value, messages.toSeq)
 }
 
 /** Task-side adapter: streaming epochs reuse the batch writers
@@ -1711,9 +1693,7 @@ private[sources] case class MultiPartCommit(parts: Seq[PartMeta])
 private[sources] class ManifestWriterFactory(
     path: String, schema: StructType, token: String,
     private[sources] val conf: SerializableConfiguration,
-    buckets: Option[Int] = None,
-    splitBy: Option[String] = None,
-    splitTransform: Option[String] = None)
+    spec: TableSpec = TableSpec())
     extends DataWriterFactory {
   // SECONDARY-COLUMN BLOOMS (`graft.bloom_cols` table property):
   // resolved HERE because every factory is constructed on the DRIVER
@@ -1725,156 +1705,88 @@ private[sources] class ManifestWriterFactory(
   private val bloomBitsN: Int = ManifestSink.bloomBits(conf.value, path)
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    buckets match {
-      case Some(n) =>
-        new BucketedManifestWriter(path, schema, token, partitionId, taskId,
-          conf.value, n, bloomCols, bloomBitsN)
-      case None => splitBy match {
-        case Some(c) =>
-          new SplitManifestWriter(path, schema, token, partitionId, taskId,
-            conf.value, c, bloomCols, bloomBitsN, splitTransform)
-        case None =>
-          new ManifestDataWriter(path, schema, token, partitionId, taskId,
-            conf.value, bloomCols = bloomCols, bloomBits = bloomBitsN)
-      }
-    }
+    if (spec.layout.isEmpty)
+      new ManifestDataWriter(path, schema, token, partitionId, taskId,
+        conf.value, bloomCols = bloomCols, bloomBits = bloomBitsN)
+    else new RoutedManifestWriter(path, schema, token, partitionId, taskId,
+      conf.value, spec, bloomCols, bloomBitsN)
 }
 
-/** HASH-BUCKETED writer (`option("buckets", n)`): routes each row to
-  * its [[graft.functions.GraftBucket]] ordinal on the first BIGINT
-  * column and writes ONE PART FILE PER BUCKET TOUCHED — the storage
-  * layout behind scan-reported KeyGroupedPartitioning and hence
-  * storage-partitioned joins. An ingest job pre-clustered with
-  * `repartition(n, GraftBucket.bucketId(col, n))` writes exactly one
-  * file per bucket; an arbitrary layout still commits CORRECT bucket
-  * metadata, just more files (compaction packs them later — the read
-  * side groups by bucket ordinal either way). */
-private[sources] class BucketedManifestWriter(
+/** The LAYOUT writer: routes each row to a sub-writer keyed by the
+  * spec's routing key and writes ONE PART FILE PER KEY the task sees:
+  *
+  *  - `bucket(n, c)`: the row's [[graft.functions.GraftBucket]]
+  *    ordinal (NULL keys → bucket 0); each part is stamped with its
+  *    bucket — the storage layout behind scan-reported
+  *    KeyGroupedPartitioning and hence storage-partitioned joins. An
+  *    ingest pre-clustered by bucket writes exactly one file per
+  *    bucket; any other layout still commits CORRECT bucket metadata,
+  *    just more files (compaction packs them later);
+  *  - identity split c: the column's VALUE (NULL is its own
+  *    partition); with the write's clustered distribution the table
+  *    commits one single-valued part per value per write, which the
+  *    per-part stats prove (min == max);
+  *  - `days`/`hours(c)`: the DERIVED day/hour ordinal of the
+  *    TIMESTAMP (floorDiv of the internal micros, [[TimeSplit]]) —
+  *    one ordinal spans one micros range, so the recorded stats prove
+  *    each part single-ordinal.
+  *
+  * The split cardinality cap fails LOUDLY: identity-partitioning a
+  * high-cardinality column is a layout bug at any scale (millions of
+  * tiny files), not something to paper over. */
+private[sources] class RoutedManifestWriter(
     dir: String, schema: StructType, token: String,
-    partitionId: Int, taskId: Long, conf: Configuration, n: Int,
-    bloomCols: Seq[String] = Nil, bloomBits: Int = PartBloom.MaxBits)
-    extends DataWriter[InternalRow] {
-
-  private val keyIdx = schema.fields.indexWhere(_.dataType == LongType)
-  private val writers =
-    new java.util.HashMap[Int, ManifestDataWriter]()
-
-  private def writerFor(b: Int): ManifestDataWriter = {
-    var w = writers.get(b)
-    if (w == null) {
-      w = new ManifestDataWriter(dir, schema, token, partitionId, taskId,
-        conf, suffix = s"-b$b", bloomCols = bloomCols,
-        bloomBits = bloomBits)
-      writers.put(b, w)
-    }
-    w
-  }
-
-  override def write(metadata: InternalRow, row: InternalRow): Unit =
-    write(row)
-
-  override def write(row: InternalRow): Unit = {
-    val b =
-      if (row.isNullAt(keyIdx)) 0
-      else graft.functions.GraftBucket.id(row.getLong(keyIdx), n)
-    writerFor(b).write(row)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    val parts = writers.entrySet().iterator()
-    val out = Seq.newBuilder[PartMeta]
-    while (parts.hasNext) {
-      val e = parts.next()
-      out += e.getValue.commit().copy(bucket = e.getKey)
-    }
-    MultiPartCommit(out.result())
-  }
-
-  override def abort(): Unit = {
-    val it = writers.values().iterator()
-    while (it.hasNext) it.next().abort()
-  }
-
-  override def close(): Unit = ()
-}
-
-/** IDENTITY-PARTITIONED writer (`option("splitBy", c)`): routes each
-  * row to a sub-writer keyed by the column's VALUE and writes ONE PART
-  * FILE PER DISTINCT VALUE the task sees — combined with the write's
-  * clustered distribution (each value shuffled to one task) the table
-  * commits exactly one single-valued part per value per write. The
-  * per-part stats then record min==max on the column, which is what
-  * lets the scan answer `GROUP BY c` from the manifest alone and
-  * prune `c = v` to the value's parts. NULL is its own partition
-  * (SQL GROUP BY groups nulls together). The cardinality cap fails
-  * LOUDLY: identity-partitioning a high-cardinality column is a
-  * layout bug at any scale (millions of tiny files), not something to
-  * paper over. */
-private[sources] class SplitManifestWriter(
-    dir: String, schema: StructType, token: String,
-    partitionId: Int, taskId: Long, conf: Configuration, splitCol: String,
-    bloomCols: Seq[String] = Nil, bloomBits: Int = PartBloom.MaxBits,
-    transform: Option[String] = None)
+    partitionId: Int, taskId: Long, conf: Configuration, spec: TableSpec,
+    bloomCols: Seq[String], bloomBits: Int)
     extends DataWriter[InternalRow] {
 
   private val MaxValuesPerTask = 512
-  private val idx = schema.fields.indexWhere(_.name == splitCol)
-  require(idx >= 0, s"splitBy column '$splitCol' not in schema")
-  // time-transform split: route by the DERIVED day/hour ordinal of
-  // the TIMESTAMP column (micros are the internal long) — every part
-  // lands single-valued in the ordinal domain, which the column's
-  // recorded micros stats prove (one ordinal spans one micros range)
-  private val unit: Long = transform.map(TimeSplit.unit).getOrElse(0L)
-  transform.foreach { t =>
-    require(schema.fields(idx).dataType ==
-      org.apache.spark.sql.types.TimestampType,
-      s"time transform '$t' needs a TIMESTAMP splitBy column, " +
-        s"'$splitCol' is ${schema.fields(idx).dataType.simpleString}")
-  }
+  private val (buckets, col) = spec.layout.get
+  private val idx = schema.fields.indexWhere(_.name == col)
+  require(idx >= 0, s"layout column '$col' not in the write schema " +
+    schema.fieldNames.mkString("(", ",", ")"))
+  private val unit: Long = spec.transform.map(TimeSplit.unit).getOrElse(0L)
   private val isLong = schema.fields(idx).dataType == LongType
-  private val writers =
-    new java.util.HashMap[Any, ManifestDataWriter]()
+  private val writers = new java.util.HashMap[Any, ManifestDataWriter]()
 
-  private def writerFor(v: Any): ManifestDataWriter = {
-    var w = writers.get(v)
-    if (w == null) {
-      require(writers.size() < MaxValuesPerTask,
-        s"splitBy column '$splitCol' exceeded $MaxValuesPerTask distinct " +
-          "values in one write task — identity partitioning needs a " +
-          "low-cardinality column (bucket or cluster high-cardinality ones)")
-      w = new ManifestDataWriter(dir, schema, token, partitionId, taskId,
-        conf, suffix = s"-v${writers.size()}", bloomCols = bloomCols,
-        bloomBits = bloomBits)
-      writers.put(v, w)
-    }
-    w
-  }
+  private def keyOf(row: InternalRow): Any =
+    if (buckets > 0) {
+      if (row.isNullAt(idx)) 0
+      else graft.functions.GraftBucket.id(row.getLong(idx), buckets)
+    } else if (row.isNullAt(idx)) null
+    else if (unit > 0L) Math.floorDiv(row.getLong(idx), unit)
+    else if (isLong) row.getLong(idx)
+    else row.getUTF8String(idx).toString
 
   override def write(metadata: InternalRow, row: InternalRow): Unit =
     write(row)
 
   override def write(row: InternalRow): Unit = {
-    val v: Any =
-      if (row.isNullAt(idx)) null
-      else if (unit > 0L)
-        java.lang.Long.valueOf(Math.floorDiv(row.getLong(idx), unit))
-      else if (isLong) java.lang.Long.valueOf(row.getLong(idx))
-      else row.getUTF8String(idx).toString
-    writerFor(v).write(row)
+    val k = keyOf(row)
+    var w = writers.get(k)
+    if (w == null) {
+      require(buckets > 0 || writers.size() < MaxValuesPerTask,
+        s"splitBy column '$col' exceeded $MaxValuesPerTask distinct " +
+          "values in one write task — identity partitioning needs a " +
+          "low-cardinality column (bucket or cluster high-cardinality ones)")
+      w = new ManifestDataWriter(dir, schema, token, partitionId, taskId,
+        conf, suffix = if (buckets > 0) s"-b$k" else s"-v${writers.size()}",
+        bloomCols = bloomCols, bloomBits = bloomBits)
+      writers.put(k, w)
+    }
+    w.write(row)
   }
 
   override def commit(): WriterCommitMessage = {
-    val parts = writers.values().iterator()
     val out = Seq.newBuilder[PartMeta]
-    while (parts.hasNext)
-      out += parts.next().commit()
+    writers.forEach { (k, w) =>
+      out += (if (buckets > 0) w.commit().copy(bucket = k.asInstanceOf[Int])
+        else w.commit())
+    }
     MultiPartCommit(out.result())
   }
 
-  override def abort(): Unit = {
-    val it = writers.values().iterator()
-    while (it.hasNext) it.next().abort()
-  }
+  override def abort(): Unit = writers.values().forEach(_.abort())
 
   override def close(): Unit = ()
 }

@@ -15,7 +15,9 @@ import org.json4s.jackson.JsonMethods
   * (buckets, column) placement — 0 buckets = identity split, with
   * `transform` ("days" | "hours") naming a hidden time transform —
   * and `orderBy` the WRITE ORDERED BY column of an unpartitioned
-  * table. Absent file ⇒ all None. */
+  * table. Absent file ⇒ all None. The one layout value every manifest
+  * write takes: checked by [[TableLayout.check]], planned by
+  * [[ManifestSink.writePlan]]. */
 private[sources] final case class TableSpec(
     layout: Option[(Int, String)] = None,
     transform: Option[String] = None,

@@ -52,7 +52,8 @@ class GraphOpsSpec extends SparkSpec {
     // for iterative loops. Results must be IDENTICAL in both modes
     // (the pin is a materialization strategy, never a semantics knob).
     def results(): Seq[Seq[Seq[Any]]] =
-      Seq("q_pagerank", "q_dup_components").map(n =>
+      Seq("q_pagerank", "q_dup_components", "q_semdedup", "q_bm25_idx",
+        "q_assoc_rules").map(n =>
         SparkEntry.queries(n)(spark, Sf0001)
           .collect().map(_.toSeq).toSeq)
     val local = results()

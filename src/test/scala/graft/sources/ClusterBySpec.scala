@@ -68,4 +68,30 @@ class ClusterBySpec extends SparkSpec {
     }
     assert(ex2.getMessage.contains("zorder"))
   }
+
+  test("CTAS … CLUSTER BY records the write order and lands sorted, " +
+    "disjoint parts") {
+    val c = freshCat("c")
+    spark.range(0, 4000).selectExpr("id AS k", "id * 2 AS v")
+      .createOrReplaceTempView("graft_cbs_ctas_src")
+    // AQE would coalesce this tiny fixture into one range partition,
+    // voiding the >1-part disjointness claim — hold it off here
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
+      "false")
+    try spark.sql(s"CREATE TABLE $c.wh.t CLUSTER BY (k) " +
+      "AS SELECT * FROM graft_cbs_ctas_src")
+    finally spark.conf.unset(
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val wh = spark.conf.get(s"spark.sql.catalog.$c.warehouse")
+    val conf = spark.sessionState.newHadoopConf()
+    assert(ManifestSink.readTableSpec(conf, s"$wh/wh/t") ===
+      TableSpec(orderBy = Some("k")))
+    assert(spark.sql(s"SELECT count(*) FROM $c.wh.t").head.getLong(0)
+      === 4000L)
+    assert(overlaps(c, "t") === 0L, "CTAS must land disjoint key ranges")
+    val parts = ManifestSink.readManifestMeta(conf, s"$wh/wh/t", None)
+      .filter(_.rows > 0)
+    assert(parts.size > 1, "the disjointness claim needs >1 part")
+    assert(parts.forall(_.sorted), "CTAS parts must be key-sorted")
+  }
 }

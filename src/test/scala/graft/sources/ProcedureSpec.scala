@@ -401,22 +401,26 @@ class ProcedureSpec extends graft.SparkSpec {
 
   test("expire_snapshots reclaims crashed-maintenance staging dirs past " +
     "the grace gate, never young ones") {
-    val t = writeTable("tmpdirs", 50, 1)
-    val fs = new org.apache.hadoop.fs.Path(t).getFileSystem(conf)
-    // plant crash debris: a compaction stage and an MV-refresh stage
-    val stale = new org.apache.hadoop.fs.Path(t, "_compact-write-deadbeef")
-    val young = new org.apache.hadoop.fs.Path(t, "_mv-plus-cafebabe")
-    fs.mkdirs(stale); fs.mkdirs(young)
-    fs.setTimes(stale, System.currentTimeMillis() - 7L * 86400000L, -1)
-    val r = spark.sql("CALL gps.system.expire_snapshots(" +
-      "table => 'ns.tmpdirs', keep_last => 1, " +
-      "orphan_grace_ms => 86400000)").head
-    assert(r.getAs[Int]("files_deleted") === 1, "only the STALE dir")
-    assert(!fs.exists(stale), "week-old crash debris reclaimed")
-    assert(fs.exists(young), "a possibly-live stage survives the gate")
-    assert(spark.sql("SELECT count(*) FROM gps.ns.tmpdirs")
-      .head.getLong(0) === 50L)
-    fs.delete(young, true)
+    // plant crash debris — a compaction or REPLACE WHERE stage — and
+    // an MV-refresh stage
+    for ((debris, i) <- Seq("_compact-write-deadbeef", "_cow-read-deadbeef")
+        .zipWithIndex) {
+      val t = writeTable(s"tmpdirs$i", 50, 1)
+      val fs = new org.apache.hadoop.fs.Path(t).getFileSystem(conf)
+      val stale = new org.apache.hadoop.fs.Path(t, debris)
+      val young = new org.apache.hadoop.fs.Path(t, "_mv-plus-cafebabe")
+      fs.mkdirs(stale); fs.mkdirs(young)
+      fs.setTimes(stale, System.currentTimeMillis() - 7L * 86400000L, -1)
+      val r = spark.sql("CALL gps.system.expire_snapshots(" +
+        s"table => 'ns.tmpdirs$i', keep_last => 1, " +
+        "orphan_grace_ms => 86400000)").head
+      assert(r.getAs[Int]("files_deleted") === 1, s"only the STALE $debris")
+      assert(!fs.exists(stale), s"week-old crash debris $debris reclaimed")
+      assert(fs.exists(young), "a possibly-live stage survives the gate")
+      assert(spark.sql(s"SELECT count(*) FROM gps.ns.tmpdirs$i")
+        .head.getLong(0) === 50L)
+      fs.delete(young, true)
+    }
   }
 
   test("clone: zero-copy fork — by reference, version-pinned, divergent, vacuum-independent") {

@@ -222,6 +222,29 @@ class SpjSpec extends graft.SparkSpec {
     }
   }
 
+  test("bucket(0, k) is refused at CREATE and CTAS, leaving no layout record") {
+    wh
+    val fs = new org.apache.hadoop.fs.Path(wh)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    // 0 buckets is how the layout record encodes an identity split: a
+    // bucket spelling that reached it would silently split per value
+    val create = intercept[Exception] {
+      spark.sql("CREATE TABLE gsp.ns.b0 (k BIGINT, v BIGINT) " +
+        "PARTITIONED BY (bucket(0, k))")
+    }
+    assert(create.getMessage.contains("bucket count"), create.getMessage)
+    val ctas = intercept[Exception] {
+      spark.sql("CREATE TABLE gsp.ns.b0ctas PARTITIONED BY (bucket(0, k)) " +
+        "AS SELECT id AS k, id AS v FROM range(40)")
+    }
+    assert(ctas.getMessage.contains("bucket count"), ctas.getMessage)
+    for (t <- Seq("b0", "b0ctas")) {
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$wh/ns/$t/_TABLE.json")),
+        s"$t: a refused layout must leave no _TABLE.json")
+      assert(!spark.catalog.tableExists(s"gsp.ns.$t"))
+    }
+  }
+
   test("layout evolution: mixed generations demote SPJ safely; " +
     "compaction migrates to the head spec and SPJ re-arms") {
     wh
