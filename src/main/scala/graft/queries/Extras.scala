@@ -225,12 +225,13 @@ FROM hourly ORDER BY user_id, hour_us""")),
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), unix_micros(col("ts")).as("ts_us"))
         ev.write.mode("overwrite").json(s"$tmp/json")
-        ev.write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
+        ev.write.mode("overwrite").option("header", "true").format("csv")
+          .save(s"$tmp/csv")
         ev.write.mode("overwrite").orc(s"$tmp/orc")
         val schema = "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts_us LONG"
         val fromJson = spark.read.schema(schema).json(s"$tmp/json")
         val fromCsv = spark.read.schema(schema)
-          .option("header", "true").csv(s"$tmp/csv")
+          .option("header", "true").format("csv").load(s"$tmp/csv")
         val fromOrc = spark.read.schema(schema).orc(s"$tmp/orc")
         ev.agg(count(lit(1)).as("n_rows")).crossJoin(
           fromJson.exceptAll(ev).agg(count(lit(1)).as("json_mismatch"))).crossJoin(

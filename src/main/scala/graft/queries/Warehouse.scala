@@ -1545,8 +1545,8 @@ ORDER BY retired, position, name""")),
     // side: pre-DDL parts resolve the renamed sub-field through its
     // unchanged nested id, read NULL for the post-drop addition
     // (fresh id — the dropped sub-bytes still sitting at their
-    // sub-slot can never resurrect), and each generation decodes
-    // through its stamped sub-layout ([[PartMeta.ncols]]). Zero data
+    // sub-column can never resurrect), and each generation reads its
+    // sub-columns by nested id (`c<id>` in the part file). Zero data
     // files are read or written by any of the three ALTERs — at
     // 100 TB the only viable shape for evolving a payload struct.
     QueryDef("q_nested_evolve",
@@ -2244,8 +2244,8 @@ FROM orders""")),
         val filesCopied = {
           val p = new org.apache.hadoop.fs.Path(s"$wh/wh/ev_clone")
           p.getFileSystem(spark.sessionState.newHadoopConf())
-            .listStatus(p).count(st => st.getPath.getName.startsWith("part-")
-              && st.getPath.getName.endsWith(".csv"))
+            .listStatus(p).count(st =>
+              graft.sources.ManifestSink.isPartFile(st.getPath.getName))
         }
         // the tables diverge independently from here
         write(base.filter(col("event_id") % 4 === 1), s"$wh/wh/ev_t",
@@ -3257,7 +3257,7 @@ FROM events WHERE event_type IN ('click', 'view')""")),
     // omitted INSERT columns at write; `ALTER TABLE ADD COLUMN c
     // DEFAULT v` additionally FREEZES v as the column's EXISTS
     // default — every pre-existing row serves it for the missing
-    // line slot, so adding a defaulted column to a petabyte is ONE
+    // column, so adding a defaulted column to a petabyte is ONE
     // metadata commit, never a backfill (no_new_files gates it).
     // `ALTER COLUMN SET DEFAULT` changes only FUTURE writes; rows
     // predating the column keep the value promised when it was
@@ -4430,7 +4430,8 @@ GROUP BY prio ORDER BY prio""")),
         writeHistory(base.filter(col("event_id") % 2 =!= 0), t, "append")
         val fs = new Path(t).getFileSystem(
           spark.sparkContext.hadoopConfiguration)
-        val orphan = new Path(t, "part-orphan00-0-0.csv")
+        val orphan = new Path(t,
+          graft.sources.ManifestSink.partFileName("orphan00-0-0"))
         val os = fs.create(orphan, true)
         try os.write("junk\n".getBytes("UTF-8")) finally os.close()
         fs.setTimes(orphan, System.currentTimeMillis() - 7200000L, -1L)

@@ -431,11 +431,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * readable (RTAS). Spark routes here automatically because the
     * catalog implements StagingTableCatalog. */
   /** STRUCT columns are supported at DEPTH 1 (atomic sub-fields
-    * only — the line codec is flat; see ManifestCodec's struct
-    * token). Deeper nesting is rejected at CREATE TIME — shared by
-    * CREATE TABLE and every staged CTAS/RTAS path, so no create
-    * spelling can smuggle a schema the codec would garble into a
-    * committed snapshot (the write path re-checks in
+    * only — column mapping names one level of nested ids). Deeper
+    * nesting is rejected at CREATE TIME — shared by CREATE TABLE and
+    * every staged CTAS/RTAS path, so no create spelling can smuggle
+    * such a schema into a committed snapshot (the write path re-checks in
     * [[ManifestBatchWrite]] for the path-based spelling).
     * Generalizes the reference's progressively-enriched prediction
     * record (estimate_queue.py:80-88) to a typed, evolvable struct
@@ -524,7 +523,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     *
     * Schema-changing commits pin `strictBase` to the head they read —
     * a racing commit fails the DDL loudly rather than composing a
-    * half-stale schema. Type changes stay rejected: committed lines
+    * half-stale schema. Type changes stay rejected: committed parts
     * would be re-interpreted. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val p = tablePath(ident)
@@ -576,7 +575,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     val widened = changes.foldLeft(schema) {
       // ADD COLUMN parent.child — appended at the struct's end with a
       // FRESH nested id: parts written before read NULL for the new
-      // sub-slot, and a previously dropped sub-field's bytes can
+      // sub-column, and a previously dropped sub-field's bytes can
       // never resurrect under the new name
       case (s, add: TableChange.AddColumn)
           if add.fieldNames().length == 2 =>
@@ -585,7 +584,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         val (pIdx, pid, st, nm) = nestedTarget(s, parent)
         require(atomicType(add.dataType()),
           s"nested field '$parent.$child' must be an atomic type " +
-            "(depth-1 structs only — the line codec is flat)")
+            "(depth-1 structs only)")
         require(!st.fieldNames.exists(_.equalsIgnoreCase(child)),
           s"field '$parent.$child' already exists in $ident")
         require(!nm.isRetired(child),
@@ -595,8 +594,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           s"added field '$parent.$child' must be nullable " +
             "(existing rows have no value for it)")
         require(add.position() == null,
-          "nested fields can only be added at the end (struct tokens " +
-            "are positional; reordering would re-interpret committed data)")
+          "nested fields can only be added at the end")
         require(add.defaultValue() == null,
           "nested DEFAULT is not supported — added struct fields read " +
             "NULL for pre-existing rows")
@@ -621,8 +619,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           s"added column '$colName' must be nullable " +
             "(existing rows have no value for it)")
         require(add.position() == null,
-          "columns can only be added at the end (part files are " +
-            "positional; reordering would re-interpret committed data)")
+          "columns can only be added at the end (the stats key, the " +
+            "first BIGINT, and the first STRING are found by position)")
         schemaChanged = true
         val newId = colmap.nextId
         colmap = colmap.copy(ids = colmap.ids :+ newId,
@@ -641,22 +639,19 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         }
         val f = StructField(colName, add.dataType(), nullable = true)
         s.add(Option(add.comment()).fold(f)(f.withComment))
-      // ALTER COLUMN TYPE — WIDENING only, metadata-only: the line
-      // codec is textual, so "5" decodes as BIGINT exactly as it
-      // decoded as INT, and a DECIMAL widens at the same scale with
-      // no re-render. Float→double is REJECTED: the text round-trip
-      // would widen by decimal value where Spark's cast widens by
-      // binary value — two different answers, so the change must not
-      // pretend to be free. Field ids are untouched (same column,
-      // same slots); time travel reads each snapshot under its own
-      // committed type.
+      // ALTER COLUMN TYPE — WIDENING only, metadata-only: the Parquet
+      // reader widens a committed INT column to BIGINT, and a DECIMAL
+      // at the same scale, value-exactly with no rewrite. Float→double
+      // stays REJECTED: a widened float reads back by binary value,
+      // which need not be the decimal value users saw, so the change
+      // must not pretend to be free. Field ids are untouched (same
+      // column, same file column); time travel reads each snapshot
+      // under its own committed type.
       // ALTER COLUMN parent.child TYPE — the same value-exact WIDENING
-      // set as the top level (textual line codec: "5" decodes as
-      // BIGINT exactly as it decoded as INT; DECIMAL widens at the
-      // same scale with no re-render), metadata-only. Nested fields
+      // set as the top level, metadata-only. Nested fields
       // carry NO per-part stats, so the top level's stats-identity
       // guards are vacuous here; nested ids are untouched (same
-      // sub-column, same sub-slots). Time travel reads each snapshot
+      // sub-column, same file column). Time travel reads each snapshot
       // under its own committed sub-type.
       case (s, ut: TableChange.UpdateColumnType)
           if ut.fieldNames().length == 2 =>
@@ -679,7 +674,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           s"unsupported type change ${from.simpleString} -> " +
             s"${to.simpleString} on '$parent.$name': only integral " +
             "widening and same-scale DECIMAL precision growth are " +
-            "value-exact under the text codec")
+            "value-exact without a rewrite")
         schemaChanged = true
         StructType(s.fields.updated(pIdx, s.fields(pIdx).copy(
           dataType = StructType(st.fields.updated(fIdx,
@@ -705,7 +700,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           s"unsupported type change ${from.simpleString} -> " +
             s"${to.simpleString} on '$name': only integral widening " +
             "and same-scale DECIMAL precision growth are value-exact " +
-            "under the text codec (committed lines are never rewritten)")
+            "without a rewrite (committed parts are never rewritten)")
         // stats-identity guard: committed parts' key ranges/blooms
         // describe the first BIGINT column of their write schema — a
         // widening that CHANGES which column that is would misapply
@@ -721,7 +716,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         schemaChanged = true
         StructType(s.fields.updated(idx, s.fields(idx).copy(dataType = to)))
       // RENAME COLUMN parent.child TO new — metadata-only: the nested
-      // field id (and every committed sub-slot) is untouched; only
+      // field id (and every committed sub-column) is untouched; only
       // the logical name changes. The old name retires so stats or
       // constraints recorded under it can never bind a different
       // physical sub-column later.
@@ -772,14 +767,15 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             s"cannot rename '$from': referenced by CHECK constraint(s) " +
               s"${refs.mkString(", ")} — drop them first")
         }
-        // the bucket layout routes by this name in the write
-        // distribution and the reported partitioning — follow it
+        // the layout routes (bucket, split) and orders (CLUSTER BY) by
+        // this name in the write distribution and the reported
+        // partitioning — follow it
         val spec = ManifestSink.readTableSpec(conf, p)
-        spec.layout.foreach { case (n, c) =>
-          if (c.equalsIgnoreCase(from))
-            ManifestSink.writeTableSpec(conf, p,
-              spec.copy(layout = Some((n, to))))
-        }
+        def moved(c: String) = if (c.equalsIgnoreCase(from)) to else c
+        val renamed = spec.copy(
+          layout = spec.layout.map { case (n, c) => (n, moved(c)) },
+          orderBy = spec.orderBy.map(moved))
+        if (renamed != spec) ManifestSink.writeTableSpec(conf, p, renamed)
         schemaChanged = true
         colmap = colmap.copy(retired = colmap.retired :+ s.fields(idx).name)
         if (ManifestSink.keyAndFirstStr(s).contains(s.fields(idx).name))
@@ -836,9 +832,15 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
               s"cannot drop '$name': referenced by CHECK constraint(s) " +
                 s"${refs.mkString(", ")} — drop them first")
           }
-          ManifestSink.readTableSpec(conf, p).layout.foreach { case (_, c) =>
+          val spec = ManifestSink.readTableSpec(conf, p)
+          spec.layout.foreach { case (_, c) =>
             require(!c.equalsIgnoreCase(name),
               s"cannot drop '$name': it is the bucket column of $ident")
+          }
+          spec.orderBy.foreach { c =>
+            require(!c.equalsIgnoreCase(name),
+              s"cannot drop '$name': it is the CLUSTER BY column of " +
+                s"$ident — ALTER TABLE … CLUSTER BY NONE first")
           }
           // stats-identity guards: committed parts carry key (first
           // BIGINT) and string (first STRING) min/max positionally —

@@ -47,7 +47,8 @@ private[sources] class GraftStagedTable(
     ident: Identifier, path: String, tableSchema: StructType,
     spec: TableSpec, replace: Boolean,
     tableProps: Map[String, String] = Map.empty,
-    resolvesTransforms: Boolean = true)
+    resolvesTransforms: Boolean = true,
+    rewrite: Boolean = false)
     extends StagedTable with SupportsWrite {
 
   private val conf = ManifestSink.driverConf()
@@ -73,7 +74,9 @@ private[sources] class GraftStagedTable(
   /** Same task-side writers as a live table ([[ManifestWriterFactory]]
     * — stats, blooms, layout routing); the DRIVER-side commit only
     * stashes the part list. Nothing is published until
-    * [[commitStagedChanges]]. */
+    * [[commitStagedChanges]]. A CTAS/RTAS writes under the fresh
+    * identity mapping it publishes; a staged rewrite under the table's
+    * own. */
   private class StagingWrite(writeSchema: StructType) extends BatchWrite {
     private val token = java.util.UUID.randomUUID().toString.take(8)
 
@@ -81,7 +84,9 @@ private[sources] class GraftStagedTable(
         info: PhysicalWriteInfo): DataWriterFactory = {
       val dir = new Path(path)
       dir.getFileSystem(sconf.value).mkdirs(dir)
-      new ManifestWriterFactory(path, writeSchema, token, sconf, spec)
+      new ManifestWriterFactory(path, writeSchema, token, sconf, spec,
+        if (rewrite) ManifestSink.writeColMap(conf, path, writeSchema)
+        else ColMap.identity(writeSchema.fields.length))
     }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -128,7 +133,7 @@ private[sources] class GraftStagedTable(
         rebase = _ => staged, strictBase = None,
         colmapOverride = Some(cm.getOrElse(
           ColMap.identity(clean.fields.length))),
-        stampNew = false, op = "replace")
+        checkWritten = false, op = "replace")
     else {
       if (ManifestSink.readSchema(conf, path).isDefined)
         throw new TableAlreadyExistsException(ident)
@@ -161,8 +166,8 @@ private[sources] object GraftStagedTable {
     * `f`, and stage the result straight into `dir` through the CTAS
     * staged write under `spec`. There is no function catalog behind
     * the rewrite, so bucket and days/hours layouts declare no
-    * distribution: the caller pre-clusters. Returns the staged parts
-    * with rows, UNPUBLISHED — invisible until the caller's own
+    * distribution: the caller pre-clusters. Returns the staged parts,
+    * UNPUBLISHED — invisible until the caller's own
     * `publishRebase` lists them. After a crash, vacuum reclaims the
     * orphaned parts and `expire_snapshots` the stale read snapshot
     * (by its prefix). */
@@ -179,13 +184,12 @@ private[sources] object GraftStagedTable {
       val df = f(spark.read.format("graft.sources.ManifestSource")
         .option("path", read.toString).load())
       val table = new GraftStagedTable(Identifier.of(Array.empty, dir), dir,
-        df.schema, spec, replace = true, resolvesTransforms = false)
+        df.schema, spec, replace = true, resolvesTransforms = false,
+        rewrite = true)
       GraftDatasets.ofRows(spark, AppendData.byPosition(
         DataSourceV2Relation.create(table, None, None),
         df.queryExecution.logical))
-      val (kept, empty) = table.staged.partition(_.rows > 0)
-      empty.foreach(p => fs.delete(new Path(p.path), false))
-      kept
+      table.staged
     } finally fs.delete(read, true)
   }
 }

@@ -118,12 +118,13 @@ private[sources] class ManifestDeltaBatchWrite(
     // MERGE INSERT cannot generate identity/generated values on this
     // path; a NULL in a computed slot refuses rather than landing
     new ManifestDeltaWriterFactory(path, schema, token, conf,
+      ManifestSink.writeColMap(conf.value, path, schema, op.branch),
       ComputedColumns.guardSlots(conf.value, path, schema).toArray)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val commits = messages.toSeq.map { case m: DeltaCommit => m }
-    val newParts = commits.flatMap(_.newPart).filter(_.rows > 0)
+    val newParts = commits.flatMap(_.newPart)
     val (scanned, base) = op.scannedOrFail
     val byPath = scanned.map(m => m.path -> m).toMap
     val fs = new Path(path).getFileSystem(conf.value)
@@ -181,16 +182,17 @@ private[sources] class ManifestDeltaBatchWrite(
 
 private[sources] class ManifestDeltaWriterFactory(
     path: String, schema: StructType, token: String,
-    conf: SerializableConfiguration,
+    conf: SerializableConfiguration, cm: ColMap,
     guardSlots: Array[Int] = Array.empty) extends DeltaWriterFactory {
-  // constructed on the driver: resolve declared secondary-bloom
-  // columns once, so MOR-appended image parts carry the same
-  // per-column blooms as batch appends
+  // constructed on the driver: prepare the part format and resolve
+  // declared secondary-bloom columns once, so MOR-appended image
+  // parts are written and indexed exactly like batch appends
+  private val format = PartFormat(conf.value, schema, cm)
   private val bloomCols: Seq[String] = ManifestSink.bloomCols(conf.value, path)
   private val bloomBitsN: Int = ManifestSink.bloomBits(conf.value, path)
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new ManifestDeltaWriter(path, schema, token, partitionId, taskId, conf,
-      guardSlots, bloomCols, bloomBitsN)
+      format, guardSlots, bloomCols, bloomBitsN)
 }
 
 /** Executor-side delta writer: deletes accumulate into per-part
@@ -201,7 +203,7 @@ private[sources] class ManifestDeltaWriterFactory(
 private[sources] class ManifestDeltaWriter(
     dir: String, schema: StructType, token: String,
     partitionId: Int, taskId: Long, conf: SerializableConfiguration,
-    guardSlots: Array[Int] = Array.empty,
+    format: PartFormat, guardSlots: Array[Int] = Array.empty,
     bloomCols: Seq[String] = Nil,
     bloomBits: Int = PartBloom.MaxBits)
     extends DeltaWriter[InternalRow] {
@@ -244,7 +246,7 @@ private[sources] class ManifestDeltaWriter(
   private def doInsert(row: InternalRow): Unit = {
     if (inserts == null)
       inserts = new ManifestDataWriter(
-        dir, schema, s"$token-d", partitionId, taskId, conf.value,
+        dir, schema, s"$token-d", partitionId, taskId, format,
         bloomCols = bloomCols, bloomBits = bloomBits)
     inserts.write(row)
   }
@@ -261,7 +263,7 @@ private[sources] class ManifestDeltaWriter(
         val ref = DeleteVector.writeRef(conf.value, dir, name, arr)
         (part, ref, DeleteVector.popCount(arr))
     }
-    val newPart = Option(inserts).map(_.commit())
+    val newPart = Option(inserts).flatMap(_.finish())
     DeltaCommit(newPart, frags)
   }
 

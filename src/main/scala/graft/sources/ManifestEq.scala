@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   *  - an EQ delete is O(parts) DRIVER METADATA regardless of table
   *    size — the GDPR/right-to-be-forgotten shape at 100 TB: deleting
   *    one user from a petabyte costs one manifest commit; READERS pay
-  *    (a per-row token probe on clause-bearing parts) until
+  *    (a per-row value probe on clause-bearing parts) until
   *    compaction materializes the clauses away.
   *
   * Honesty ledger (what pending clauses DEMOTE, all spec-pinned):
@@ -90,11 +90,8 @@ private[sources] object ManifestEq {
     }
 
   /** Kind-'L' clause for the canonical inclusive range — BIGINT
-    * columns only. Strings are excluded deliberately: range masking
-    * compares the LINE TOKEN, and string tokens are URL-encoded, so
-    * token order ≠ value order ('a%2Fb' vs 'ab'); a wrong mask is a
-    * silent wrong answer, and string-range retention deletes are not
-    * a shape anyone ships. */
+    * columns only (string-range retention deletes are not a shape
+    * anyone ships). */
   private def rangeClauseOf(schema: StructType, cm: ColMap, col: String,
       lo: Long, hi: Long): Option[EqClause] = {
     val idx = schema.fields.indexWhere(_.name == col)
@@ -157,7 +154,8 @@ private[sources] object ManifestEq {
       // layout never wrote the column: every row serves the frozen
       // initial default — all match when it lands inside the range,
       // none otherwise (no default = NULL = never matches)
-      if (p.rows > 0L && defaultTok.exists(d => EqMask.inRange(d, lo, hi))) 'd'
+      if (p.rows > 0L && defaultTok.flatMap(_.toLongOption)
+          .exists(d => d >= lo && d <= hi)) 'd'
       else 'u'
     } else LongRange.classify(p, c.col, lo, hi)
 
@@ -232,4 +230,39 @@ private[sources] object ManifestEq {
           strictBase = None, branch = branch, op = "delete")
     }
   }
+}
+
+/** INITIAL column defaults (`EXISTS_DEFAULT`) as evaluated values: a
+  * part written before a defaulted column was added serves the
+  * default frozen at ADD COLUMN time for every row (the Parquet reader
+  * fills it; see [[ManifestSink.physicalField]]), so an equality
+  * delete must judge such parts by that value. Parsed and evaluated
+  * once on the driver (literal SQL → internal value, cast to the
+  * column type); a non-literal or unparsable default degrades to NULL
+  * rather than failing the delete. */
+private[sources] object ColDefaults {
+  /** field name -> evaluated internal default value, from the
+    * snapshot's colmap header. */
+  def byName(schema: StructType,
+      snapCm: Option[(StructType, ColMap)]): Map[String, Any] =
+    snapCm match {
+      case Some((snap, cm)) if cm.defaults.nonEmpty =>
+        snap.fields.zipWithIndex.flatMap { case (f, i) =>
+          val id = cm.ids.lift(i).getOrElse(i)
+          cm.defaults.get(id).map(_._2).filter(_.nonEmpty)
+            .flatMap(sql => eval(sql, f.dataType))
+            .map(v => f.name -> v)
+        }.toMap
+      case _ => Map.empty
+    }
+
+  private def eval(sql: String,
+      dt: org.apache.spark.sql.types.DataType): Option[Any] =
+    try {
+      val e = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+        .parseExpression(sql)
+      if (!e.foldable) None
+      else Option(org.apache.spark.sql.catalyst.expressions
+        .Cast(e, dt, Some("UTC")).eval(null))
+    } catch { case scala.util.control.NonFatal(_) => None }
 }

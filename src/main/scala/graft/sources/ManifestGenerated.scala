@@ -44,8 +44,8 @@ private[sources] object ManifestGenerated {
     * wrong columns. */
   val PropKey = "graft.generated"
 
-  private def enc(s: String): String = ManifestCodec.encodeString(s)
-  private def dec(s: String): String = ManifestCodec.decodeString(s)
+  private def enc(s: String): String = ManifestSink.encodeString(s)
+  private def dec(s: String): String = ManifestSink.decodeString(s)
 
   def render(specs: Seq[(String, String)]): String =
     specs.map { case (c, e) => s"${enc(c)}=${enc(e)}" }.mkString(";")

@@ -782,7 +782,7 @@ object ManifestMaintenance {
             s"committed on main at $dir (double publish?)")
         head ++ delta
       },
-      strictBase = None, colmapOverride = Some(mCm), stampNew = false,
+      strictBase = None, colmapOverride = Some(mCm), checkWritten = false,
       op = "cherrypick")
     CherrypickStats(newVersion, delta.size, delta.map(_.rows).sum)
   }
@@ -800,7 +800,8 @@ object ManifestMaintenance {
   }
 
   /** Expire all but the newest `keepLast` snapshot versions at `dir`,
-    * then delete every `part-*.csv` no retained manifest references.
+    * then delete every `part-*` data file no retained manifest
+    * references.
     *
     * Unreferenced files split into two safety classes:
     *  - files listed by an EXPIRED manifest were committed — their
@@ -879,7 +880,7 @@ object ManifestMaintenance {
     fs.listStatus(d).foreach { st =>
       val name = st.getPath.getName
       val reclaimable =
-        (name.startsWith("part-") && name.endsWith(".csv")) ||
+        name.startsWith("part-") ||
           (name.startsWith(DeleteVector.SidecarPrefix) && name.endsWith(".hex"))
       // crashed-maintenance DEBRIS: compaction / REPLACE WHERE / MV-
       // refresh staging directories are deleted by their own finally

@@ -26,7 +26,7 @@ private[sources] object PartMetaColumn extends MetadataColumn {
     "committed part file this row was read from"
 }
 
-/** `_pos` — the row's ordinal within its part file (line number).
+/** `_pos` — the row's ordinal within its part file (row position).
   * (`_part`, `_pos`) is a stable physical row address: the
   * merge-on-read DELETE builds its deletion vectors from exactly
   * these two columns (Delta's `_metadata.row_index` analog). */
@@ -132,7 +132,8 @@ private[sources] class ManifestReplaceWrite(
       info: PhysicalWriteInfo): DataWriterFactory = {
     val dir = new Path(path)
     dir.getFileSystem(conf.value).mkdirs(dir)
-    val f = new ManifestWriterFactory(path, schema, token, conf)
+    val f = new ManifestWriterFactory(path, schema, token, conf, TableSpec(),
+      ManifestSink.writeColMap(conf.value, path, schema, op.branch))
     // MERGE INSERT cannot generate identity/generated values on this
     // path; a NULL in a computed slot refuses rather than landing. A
     // DELETE only carries committed rows back, whose generated slots
@@ -144,12 +145,8 @@ private[sources] class ManifestReplaceWrite(
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // an all-deleted group re-emits nothing: its task staged an empty
-    // part file, which no snapshot lists — remove it, not leave it
-    val (newParts, empty) = messages.toSeq.map { case m: PartMeta => m }
-      .partition(_.rows > 0)
-    val fs = new Path(path).getFileSystem(conf.value)
-    empty.foreach(m => fs.delete(new Path(m.path), false))
+    // an all-deleted group re-emits nothing, and its task stages no part
+    val newParts = ManifestSink.committedParts(messages.toSeq)
     val (replaced, base) = op.scannedOrFail
     // nothing scanned and nothing inserted changes nothing: no empty
     // version
@@ -166,11 +163,6 @@ private[sources] class ManifestReplaceWrite(
       op = op.command().toString.toLowerCase)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    messages.foreach {
-      case m: PartMeta => fs.delete(new Path(m.path), false)
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    ManifestSink.abortParts(conf.value, messages.toSeq)
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, Metadata, MetadataBuilder, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
@@ -46,10 +46,11 @@ import org.apache.spark.util.SerializableConfiguration
   * warehouse and writing nothing.
   *
   * At 100 TB this protocol is the difference between "a job died and
-  * the table is half-visible" and exactly-once table semantics. The
-  * sandbox writer serializes rows as escaped text (atomic column
-  * types — see [[ManifestCodec]]); the protocol, not the encoding, is
-  * the operator. [[ManifestSource]] is the matching read path: it
+  * the table is half-visible" and exactly-once table semantics. Part
+  * files are Parquet, written by Spark's own Parquet writer with each
+  * column named by its stable field id ([[PartFormat]]); the protocol,
+  * not the encoding, is the operator. [[ManifestSource]] is the
+  * matching read path: it
   * plans one input partition per committed part and prunes parts
   * whose column stats cannot satisfy the pushed filters.
   */
@@ -322,8 +323,8 @@ private[sources] object LongRange {
     }
 }
 
-/** DELETION VECTOR codec: a bitmap over a part's row ORDINALS (line
-  * numbers 0..rows-1) — the merge-on-read DELETE representation
+/** DELETION VECTOR codec: a bitmap over a part's row ORDINALS (row
+  * positions 0..rows-1 in the part file) — the merge-on-read DELETE representation
   * (Delta deletion vectors / Iceberg positional deletes): a delete is
   * a METADATA commit that flips bits instead of rewriting data files;
   * every reader masks the flagged ordinals. A committed vector lives
@@ -394,11 +395,10 @@ private[sources] object DeleteVector {
   * row-level mask on top of the deletion vector. `col` is the logical
   * name AT COMMIT TIME (audit display only); resolution is by STABLE
   * FIELD ID so the mask survives later RENAME/DROP (a part never
-  * gains clauses after commit, so its recorded layout fully resolves
-  * the id). `values` are RAW decoded strings ('l' = canonical decimal
-  * for a BIGINT column, 's' = the string itself); readers canonicalize
-  * to the line-token form once per part, then compare raw tokens —
-  * zero per-row decode. Kind 'L' is the RANGE clause (BIGINT only):
+  * gains clauses after commit, and ids are never reused). `values`
+  * are RAW strings ('l' = canonical decimal for a BIGINT column, 's' =
+  * the string itself); readers parse them once per part and compare
+  * decoded column values. Kind 'L' is the RANGE clause (BIGINT only):
   * `values` = Seq(lo, hi), the canonical INCLUSIVE interval — "rows
   * whose value ∈ [lo, hi] are deleted" (the `ts < cutoff` retention
   * shape; see [[ManifestEq.translateRange]]). Clauses COMPOSE: each
@@ -406,15 +406,15 @@ private[sources] object DeleteVector {
 private[sources] final case class EqClause(
     col: String, fieldId: Int, kind: Char, values: Seq[String])
 
-/** One committed part's full manifest record — also the message a
-  * writer task commits (the driver only stamps `nbuckets`). Per-column
+/** One committed part's full manifest record — what a writer task
+  * commits (the driver only stamps `nbuckets`). Per-column
   * statistics live in `cstats`, one [[ColStat]] per tracked column
   * keyed by name. `bytes` is the part file's exact on-disk size (the
   * planner-facing size statistic); `sorted` certifies the rows arrived
   * in non-decreasing key order with no null key. `dvRef` is the part's
   * DELETION VECTOR sidecar ("" = nothing deleted) and `dvCard` its
   * cached cardinality, so metadata answers never open the sidecar;
-  * `rows` stays the PHYSICAL line count — [[visibleRows]] is the
+  * `rows` stays the PHYSICAL row count — [[visibleRows]] is the
   * served count, and all other stats become safe OVER-approximations
   * once a vector exists (pruning may only over-include; exact
   * metadata answers must consult [[visibleRows]] or decline). */
@@ -424,13 +424,12 @@ private[sources] final case class PartMeta(
     bytes: Long = 0L, bucket: Int = -1, nbuckets: Int = 0,
     sorted: Boolean = false,
     cstats: Map[String, ColStat] = Map.empty,
+    /** The field ids the part's columns were written under, in write
+      * order; empty = the identity `0 until n`. Stamped by the writer
+      * when its mapping is not the identity, and read by
+      * [[ManifestEq]] to tell which ids a part holds. */
     cols: Seq[Int] = Seq.empty,
-    eq: Seq[EqClause] = Seq.empty,
-    /** NESTED line sub-layouts: parent field id -> the nested field
-      * ids of the struct token's sub-slots as written. Absent entry ⇒
-      * identity (sub-slot = nested id) — the legacy rule one level
-      * down; see [[ColMap.nested]]. */
-    ncols: Map[Int, Seq[Int]] = Map.empty) extends WriterCommitMessage {
+    eq: Seq[EqClause] = Seq.empty) {
   def hasDv: Boolean = dvRef.nonEmpty
   def dvCount: Long = dvCard
   /** Served row count — EXACT unless equality-delete clauses are
@@ -448,10 +447,9 @@ private[sources] final case class PartMeta(
   * commits — no data file is read or written by either.
   *
   *  - `ids(i)` is the field id of logical field i of the snapshot's
-  *    schema; readers resolve a logical column to a part's line slot
-  *    through the part's own recorded layout ([[PartMeta.cols]]), so
-  *    parts written under different schema generations decode
-  *    correctly side by side.
+  *    schema; a part stores that column as `c<id>`
+  *    ([[ManifestSink.physicalSchema]]), so parts written under
+  *    different schema generations read correctly side by side.
   *  - `nextId` is the allocation high-water mark: an ADD COLUMN after
   *    a DROP gets a FRESH id, so the dropped column's bytes still
   *    sitting in old parts can never resurrect under the new name.
@@ -527,13 +525,12 @@ object ManifestSink {
   private[sources] def driverConf(): Configuration =
     SparkSession.active.sessionState.newHadoopConf()
 
-  /** STRUCT columns carry atomic sub-fields only (the line codec is
-    * flat — one struct token level). Rejected wherever a schema can
+  /** STRUCT columns carry atomic sub-fields only (column mapping
+    * names one level of nested ids). Rejected wherever a schema can
     * first enter the format: CREATE TABLE, staged CTAS/RTAS, and the
     * write path itself ([[ManifestBatchWrite]]) — a deep-nested
-    * struct must fail loudly at schema admission, never reach
-    * ManifestCodec's generic fallback and write `InternalRow.toString`
-    * garbage into a committed part. */
+    * struct must fail loudly at schema admission, never reach a
+    * committed part. */
   private[sources] def validateStructDepth(schema: StructType): Unit =
     schema.fields.foreach { f =>
       f.dataType match {
@@ -590,11 +587,8 @@ object ManifestSink {
   /** The parts a write's task messages committed, each bucketed part
     * stamped with the table's bucket count. */
   private[sources] def committedParts(messages: Seq[WriterCommitMessage],
-      spec: TableSpec): Seq[PartMeta] =
-    messages.flatMap {
-      case m: PartMeta        => Seq(m)
-      case m: MultiPartCommit => m.parts
-    }.map(m =>
+      spec: TableSpec = TableSpec()): Seq[PartMeta] =
+    messages.flatMap { case m: MultiPartCommit => m.parts }.map(m =>
       if (m.bucket >= 0) m.copy(nbuckets = spec.layout.fold(0)(_._1)) else m)
 
   /** Abort of a write that never published: delete the part files its
@@ -602,13 +596,27 @@ object ManifestSink {
     * invisible, and vacuum reclaims what this misses). */
   private[sources] def abortParts(conf: Configuration,
       messages: Seq[WriterCommitMessage]): Unit =
-    messages.collect {
-      case m: PartMeta        => Seq(m)
-      case m: MultiPartCommit => m.parts
-    }.flatten.foreach { p =>
+    messages.collect { case m: MultiPartCommit => m.parts }
+      .flatten.foreach { p =>
       val f = new Path(p.path)
       f.getFileSystem(conf).delete(f, false)
     }
+
+  /** The file name of a data part: `part-<stem>.parquet`, where the
+    * stem is `<commit token>-<partition>-<task>[-<route>]`. */
+  def partFileName(stem: String): String = s"part-$stem.parquet"
+
+  /** Is `name` a data-part file name ([[partFileName]])? */
+  def isPartFile(name: String): Boolean =
+    name.startsWith("part-") && name.endsWith(".parquet")
+
+  /** URL-encode a name for the `;`/`:`/`=`-separated property
+    * encodings (`graft.ndv`, `graft.hist`, generated columns). */
+  private[sources] def encodeString(s: String): String =
+    java.net.URLEncoder.encode(s, "UTF-8")
+
+  private[sources] def decodeString(s: String): String =
+    java.net.URLDecoder.decode(s, "UTF-8")
 
   /** THE WRITE PLAN: the one mapping from a table's layout to the
     * Spark `Write` every manifest write goes through (path, catalog,
@@ -792,13 +800,13 @@ object ManifestSink {
   private[sources] val NdvProp = "graft.ndv"
   private[sources] def encodeNdv(pairs: Seq[(String, Long)]): String =
     pairs.map { case (c, d) =>
-      s"${ManifestCodec.encodeString(c)}:$d" }.mkString(";")
+      s"${encodeString(c)}:$d" }.mkString(";")
   private[sources] def readNdv(conf: Configuration,
       dir: String): Map[String, Long] =
     readTableProps(conf, dir).get(NdvProp).toSeq
       .flatMap(_.split(";")).filter(_.nonEmpty).map { kv =>
         val i = kv.lastIndexOf(':')
-        ManifestCodec.decodeString(kv.substring(0, i)) ->
+        decodeString(kv.substring(0, i)) ->
           kv.substring(i + 1).toLong
       }.toMap
 
@@ -814,7 +822,7 @@ object ManifestSink {
   private[sources] def encodeHist(
       hists: Seq[(String, Double, Seq[(Long, Long, Long)])]): String =
     hists.map { case (c, height, bins) =>
-      s"${ManifestCodec.encodeString(c)}=$height:" +
+      s"${encodeString(c)}=$height:" +
         bins.map { case (lo, hi, ndv) => s"$lo,$hi,$ndv" }.mkString("|")
     }.mkString(";")
   private[sources] def readHist(conf: Configuration, dir: String)
@@ -823,7 +831,7 @@ object ManifestSink {
       .flatMap(_.split(";")).filter(_.nonEmpty).flatMap { kv =>
         scala.util.Try {
           val eq = kv.indexOf('=')
-          val c = ManifestCodec.decodeString(kv.substring(0, eq))
+          val c = decodeString(kv.substring(0, eq))
           val rest = kv.substring(eq + 1)
           val colon = rest.indexOf(':')
           val height = rest.substring(0, colon).toDouble
@@ -980,28 +988,77 @@ object ManifestSink {
       schema: StructType, parts: Seq[PartMeta],
       colmap: Option[ColMap] = None, op: String = ""): Int =
     // fixed-part publishes (staging reads, restore, fast-forward,
-    // clone, truncate) re-reference EXISTING parts: their recorded
-    // layouts are already correct, so never stamp — and when the
-    // caller hands the snapshot's mapping, publish it verbatim
+    // clone, truncate) re-reference EXISTING parts, written under
+    // earlier mappings — and when the caller hands the snapshot's
+    // mapping, publish it verbatim
     publishRebase(conf, path, schema, _ => parts,
-      strictBase = None, colmapOverride = colmap, stampNew = false,
+      strictBase = None, colmapOverride = colmap, checkWritten = false,
       op = op)
 
   /** The table's [[ColMap]] aligned BY NAME to `schema` (None when
     * trivially identity) — what a temp staging manifest over a mapped
-    * table's parts must carry so mixed-generation layouts decode
+    * table's parts must carry so mixed-generation parts read
     * correctly through the staging read. */
   private[sources] def alignedColMap(conf: Configuration, dir: String,
       schema: StructType, version: Option[Int] = None,
-      branch: Option[String] = None): Option[ColMap] =
-    readSchemaAndColMap(conf, dir, version, branch).collect {
-      case (snap, cm) if !cm.isPlain || cm.retired.nonEmpty =>
-        val byName = snap.fields.map(_.name).zip(cm.ids).toMap
-        ColMap(schema.fields.toSeq.map(f => byName.getOrElse(f.name,
-          throw new IllegalStateException(
-            s"column '${f.name}' has no field id at $dir"))),
-          cm.nextId, cm.retired, cm.defaults, cm.nested)
+      branch: Option[String] = None): Option[ColMap] = {
+    val snapCm = readSchemaAndColMap(conf, dir, version, branch)
+    snapCm.collect { case (_, cm) if !cm.isPlain || cm.retired.nonEmpty =>
+      alignColMap(snapCm, schema, dir)
     }
+  }
+
+  /** A snapshot's mapping with its ids aligned BY NAME to `s` (the
+    * identity when the snapshot has none). The `_part` / `_pos`
+    * metadata columns map to -1: they are served by the reader, never
+    * stored. */
+  private[sources] def alignColMap(snapCm: Option[(StructType, ColMap)],
+      s: StructType, dir: String): ColMap = snapCm match {
+    case Some((snap, cm)) =>
+      val byName = snap.fields.map(_.name).zip(cm.ids).toMap
+      cm.copy(ids = s.fields.toSeq.map { f =>
+        if (f.name == PartMetaColumn.Name || f.name == PosMetaColumn.Name) -1
+        else byName.getOrElse(f.name, throw new IllegalStateException(
+          s"column '${f.name}' has no field id in the snapshot mapping of $dir"))
+      })
+    case None => ColMap.identity(s.fields.length)
+  }
+
+  /** The mapping a write of `schema` into `dir` stores its columns
+    * under, taken at plan time: the head's mapping aligned to the
+    * write schema — what the commit derives when no DDL lands in
+    * between ([[publishRebase]] refuses the commit otherwise). */
+  private[sources] def writeColMap(conf: Configuration, dir: String,
+      schema: StructType, branch: Option[String] = None): ColMap =
+    deriveColMap(readSchemaAndColMap(conf, dir, None, branch), schema)
+
+  /** The Parquet column of logical field `f` with field id `id`: named
+    * `c<id>`, each depth-1 struct sub-field `c<nested id>`, nullable;
+    * a column with an initial default carries it as `EXISTS_DEFAULT`,
+    * which the Parquet reader serves for parts written before the
+    * column existed. Ids are never reused, so one physical schema
+    * reads every part generation: a RENAME changes no name, a dropped
+    * id is never requested, a later id is missing from older files,
+    * and INT -> BIGINT / same-scale DECIMAL growth is widened by the
+    * reader. */
+  private[sources] def physicalField(f: StructField, id: Int,
+      cm: ColMap): StructField = {
+    val dt = f.dataType match {
+      case st: StructType =>
+        StructType(st.fields.zip(cm.nestedOf(id, st.fields.length).ids)
+          .map { case (sf, nid) => StructField(s"c$nid", sf.dataType) })
+      case other => other
+    }
+    val exists = cm.defaults.get(id).map(_._2).filter(_.nonEmpty)
+    StructField(s"c$id", dt, nullable = true, exists.fold(Metadata.empty)(
+      new MetadataBuilder().putString("EXISTS_DEFAULT", _).build()))
+  }
+
+  /** [[physicalField]] of every column of `schema` (`cm` aligned to it). */
+  private[sources] def physicalSchema(schema: StructType,
+      cm: ColMap): StructType =
+    StructType(schema.fields.zip(cm.ids).map { case (f, id) =>
+      physicalField(f, id, cm) })
 
   /** The commit loop proper. `rebase` maps the CURRENT head's part
     * list to the list to publish, and is re-applied on EVERY claim
@@ -1040,7 +1097,7 @@ object ManifestSink {
       footprint: Option[Set[String]] = None,
       branch: Option[String] = None,
       colmapOverride: Option[ColMap] = None,
-      stampNew: Boolean = true,
+      checkWritten: Boolean = true,
       op: String = "",
       strictForkBase: Option[Int] = None): Int = {
     branch.foreach(b => require(validBranch(b), s"invalid branch name " +
@@ -1082,30 +1139,26 @@ object ManifestSink {
         // vacuously) — see ManifestMaintenance.cherrypick
         Some((version, op, fork)), parts)
 
-    // column mapping bookkeeping: resolve
-    // the mapping (override from DDL, else derive from the head), and
-    // stamp every NEWLY-ADDED part with its line layout (the published
-    // schema's field ids) — but only once the mapping is non-identity;
-    // under identity the absent-cols legacy rule IS the layout
+    // column mapping bookkeeping: resolve the mapping (override from
+    // DDL, else derive from the head). A NEWLY-ADDED part stores its
+    // columns under the ids its writer took at plan time
+    // ([[writeColMap]], recorded in `cols`); a DDL commit that landed
+    // since would read them under other ids, so the commit refuses
     def finish(head: Seq[PartMeta],
         headSchemaCm: Option[(StructType, ColMap)],
         parts: Seq[PartMeta]): (Seq[PartMeta], ColMap) = {
       val cm = colmapOverride.getOrElse(deriveColMap(headSchemaCm, schema))
-      if ((cm.isIdentity && cm.nested.isEmpty) || !stampNew) (parts, cm)
-      else {
+      if (checkWritten) {
         val headPaths = head.map(_.path).toSet
-        val nestedLayout = cm.nested.map { case (pid, n) => pid -> n.ids }
-        (parts.map { p =>
-          if (headPaths(p.path)) p
-          else {
-            var q = p
-            if (!cm.isIdentity && q.cols.isEmpty) q = q.copy(cols = cm.ids)
-            if (cm.nested.nonEmpty && q.ncols.isEmpty)
-              q = q.copy(ncols = nestedLayout)
-            q
+        parts.find(p => !headPaths(p.path) &&
+            (if (p.cols.isEmpty) cm.ids.indices else p.cols) != cm.ids)
+          .foreach { p =>
+            throw new java.util.ConcurrentModificationException(
+              s"table $dir changed its column mapping while ${p.path} was " +
+                "being written; re-run the write against the new head")
           }
-        }, cm)
       }
+      (parts, cm)
     }
     // OPTIMISTIC CONCURRENCY (the Iceberg commit loop): a commit
     // CLAIMS its immutable version file — exists-check + rename,
@@ -1377,8 +1430,8 @@ private[sources] class ManifestWriteBuilder(
   * `append` (SaveMode.Append — no truncate) carries the current head's
   * part list into the new snapshot, so a commit is O(new data); the
   * incoming schema must extend the committed one additively (equal, or
-  * adding trailing columns — old parts then decode the missing
-  * trailing columns as NULL; see [[ManifestCodec]]).
+  * adding trailing columns — old parts then read the missing columns
+  * as NULL; see [[ManifestSink.physicalField]]).
   *
   * Part files are staged as `part-<commitToken>-<partition>-<task>`:
   * the per-commit token (chosen once on the driver) makes part names
@@ -1431,7 +1484,8 @@ private[sources] class ManifestBatchWrite(
     // truncate is logical (snapshots own their part files)
     val dir = new Path(path)
     dir.getFileSystem(conf.value).mkdirs(dir)
-    val factory0 = new ManifestWriterFactory(path, schema, token, conf, spec)
+    val factory0 = new ManifestWriterFactory(path, schema, token, conf, spec,
+      ManifestSink.writeColMap(conf.value, path, schema, branch))
     // generated wraps INNER (sees identity-filled rows were it to
     // reference them — banned at create, so order only matters for
     // the refusal messages); identity wraps OUTER so its fill sees
@@ -1645,7 +1699,8 @@ private[sources] class ManifestStreamingWrite(
     // fresh file token per epoch attempt: replayed epochs write new
     // files, which the skipped commit then deletes
     ManifestStreamingWriterFactory(new ManifestWriterFactory(path, schema,
-      java.util.UUID.randomUUID().toString.take(8), conf, spec))
+      java.util.UUID.randomUUID().toString.take(8), conf, spec,
+      ManifestSink.writeColMap(conf.value, path, schema)))
   }
 
   /** True iff some committed version already carries this epoch's
@@ -1690,26 +1745,29 @@ private[sources] final case class ManifestStreamingWriterFactory(
 private[sources] case class MultiPartCommit(parts: Seq[PartMeta])
     extends WriterCommitMessage
 
+/** The task-side writer factory of every manifest write, built on the
+  * DRIVER: it prepares the write's [[PartFormat]] over the field ids of
+  * `cm` (the plan-time mapping, aligned to `schema`) and resolves the
+  * declared secondary-bloom columns, so executors never re-read table
+  * metadata. */
 private[sources] class ManifestWriterFactory(
     path: String, schema: StructType, token: String,
     private[sources] val conf: SerializableConfiguration,
-    spec: TableSpec = TableSpec())
+    spec: TableSpec, cm: ColMap)
     extends DataWriterFactory {
-  // SECONDARY-COLUMN BLOOMS (`graft.bloom_cols` table property):
-  // resolved HERE because every factory is constructed on the DRIVER
-  // (batch, streaming, staging, row-level rewrite) — executors get
-  // the list via the serialized factory, never re-reading the props
-  // sidecar per task. Capped at 4 columns: each bloom costs up to
-  // 8 KB of manifest line per part, the same budget as the key bloom.
+  private val format = PartFormat(conf.value, schema, cm)
+  // SECONDARY-COLUMN BLOOMS (`graft.bloom_cols` table property),
+  // capped at 4 columns: each bloom costs up to 8 KB of manifest line
+  // per part, the same budget as the key bloom.
   private val bloomCols: Seq[String] = ManifestSink.bloomCols(conf.value, path)
   private val bloomBitsN: Int = ManifestSink.bloomBits(conf.value, path)
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     if (spec.layout.isEmpty)
       new ManifestDataWriter(path, schema, token, partitionId, taskId,
-        conf.value, bloomCols = bloomCols, bloomBits = bloomBitsN)
+        format, bloomCols = bloomCols, bloomBits = bloomBitsN)
     else new RoutedManifestWriter(path, schema, token, partitionId, taskId,
-      conf.value, spec, bloomCols, bloomBitsN)
+      format, spec, bloomCols, bloomBitsN)
 }
 
 /** The LAYOUT writer: routes each row to a sub-writer keyed by the
@@ -1736,7 +1794,7 @@ private[sources] class ManifestWriterFactory(
   * tiny files), not something to paper over. */
 private[sources] class RoutedManifestWriter(
     dir: String, schema: StructType, token: String,
-    partitionId: Int, taskId: Long, conf: Configuration, spec: TableSpec,
+    partitionId: Int, taskId: Long, format: PartFormat, spec: TableSpec,
     bloomCols: Seq[String], bloomBits: Int)
     extends DataWriter[InternalRow] {
 
@@ -1770,7 +1828,7 @@ private[sources] class RoutedManifestWriter(
           "values in one write task — identity partitioning needs a " +
           "low-cardinality column (bucket or cluster high-cardinality ones)")
       w = new ManifestDataWriter(dir, schema, token, partitionId, taskId,
-        conf, suffix = if (buckets > 0) s"-b$k" else s"-v${writers.size()}",
+        format, suffix = if (buckets > 0) s"-b$k" else s"-v${writers.size()}",
         bloomCols = bloomCols, bloomBits = bloomBits)
       writers.put(k, w)
     }
@@ -1780,8 +1838,8 @@ private[sources] class RoutedManifestWriter(
   override def commit(): WriterCommitMessage = {
     val out = Seq.newBuilder[PartMeta]
     writers.forEach { (k, w) =>
-      out += (if (buckets > 0) w.commit().copy(bucket = k.asInstanceOf[Int])
-        else w.commit())
+      w.finish().foreach(p => out += (if (buckets > 0)
+        p.copy(bucket = k.asInstanceOf[Int]) else p))
     }
     MultiPartCommit(out.result())
   }
@@ -1791,23 +1849,24 @@ private[sources] class RoutedManifestWriter(
   override def close(): Unit = ()
 }
 
-/** Executor-side writer: stages `part-<token>-<partition>-<task>` and
-  * tracks the part's per-column [[ColStat]]s while writing. */
+/** Executor-side writer: stages one part file (named by
+  * [[ManifestSink.partFileName]]) through the write's [[PartFormat]]
+  * and tracks the part's per-column [[ColStat]]s while writing. The
+  * file is created on the first row: a writer that sees none stages
+  * and commits nothing. */
 private[sources] class ManifestDataWriter(
     dir: String, schema: StructType, token: String,
-    partitionId: Int, taskId: Long, conf: Configuration,
+    partitionId: Int, taskId: Long, format: PartFormat,
     suffix: String = "", bloomCols: Seq[String] = Nil,
     bloomBits: Int = PartBloom.MaxBits)
     extends DataWriter[InternalRow] {
   import org.apache.spark.unsafe.types.UTF8String
 
-  private val file =
-    new Path(dir, s"part-$token-$partitionId-$taskId$suffix.csv")
-  private val fs = file.getFileSystem(conf)
-  private val out = fs.create(file, true)
+  private val file = new Path(dir,
+    ManifestSink.partFileName(s"$token-$partitionId-$taskId$suffix"))
+  private var out: org.apache.spark.sql.execution.datasources.OutputWriter = _
   private val keyIdx = schema.fields.indexWhere(_.dataType == LongType)
   private var rows = 0L
-  private var bytes = 0L
   // DETECTED sortedness: the part is key-sorted iff every key arrived
   // non-decreasing and none was null — detection beats declaration
   // (any write path that happens to produce sorted runs gets the
@@ -1851,10 +1910,9 @@ private[sources] class ManifestDataWriter(
     write(row)
 
   override def write(row: InternalRow): Unit = {
-    val line = (ManifestCodec.encode(row, schema) + "\n").getBytes("UTF-8")
-    out.write(line)
+    if (out == null) out = format.open(file)
+    out.write(row)
     rows += 1
-    bytes += line.length
     if (keyIdx >= 0) {
       if (row.isNullAt(keyIdx)) sorted = false
       else {
@@ -1890,7 +1948,11 @@ private[sources] class ManifestDataWriter(
     }
   }
 
-  override def commit(): PartMeta = {
+  override def commit(): WriterCommitMessage = MultiPartCommit(finish().toSeq)
+
+  /** The staged part's record; None when no row arrived. */
+  def finish(): Option[PartMeta] = {
+    if (out == null) return None
     out.close()
     // an all-null column writes no bloom
     def hexOf(bits: Array[Long]): String =
@@ -1915,14 +1977,66 @@ private[sources] class ManifestDataWriter(
             Option(maxS(i)).map(_.toString).orNull, nullsS(i),
             bloom = hexOf(bloomS(i)))
       }).toMap
-    PartMeta(file.toString, rows, bytes = bytes,
-      sorted = keyIdx >= 0 && rows > 0 && sorted, cstats = cstats)
+    Some(PartMeta(file.toString, rows,
+      bytes = file.getFileSystem(format.conf).getFileStatus(file).getLen,
+      sorted = keyIdx >= 0 && sorted, cstats = cstats,
+      cols = format.cols))
   }
 
-  override def abort(): Unit = {
-    out.close()
-    fs.delete(file, false)
-  }
+  override def abort(): Unit =
+    if (out != null) {
+      out.close()
+      file.getFileSystem(format.conf).delete(file, false)
+    }
 
   override def close(): Unit = ()
+}
+
+/** How part files are written: Spark's own Parquet writer
+  * (`ParquetFileFormat.prepareWrite`), prepared once on the driver over
+  * the physical schema of the write ([[ManifestSink.physicalSchema]]:
+  * columns named by field id) and shipped with its job conf. The file
+  * encoding never follows session settings: the conf pins microsecond
+  * timestamps and CORRECTED (proleptic, un-rebased) dates and
+  * timestamps, which the writer reads when it opens. `cols` is what a
+  * part records of its ids ([[PartMeta.cols]]). */
+private[sources] final class PartFormat private (
+    physical: StructType,
+    factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+    jobConf: SerializableConfiguration, val cols: Seq[Int])
+    extends Serializable {
+  import org.apache.spark.sql.internal.SQLConf
+
+  def conf: Configuration = jobConf.value
+
+  def open(file: Path): org.apache.spark.sql.execution.datasources.OutputWriter = {
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    // the writer takes its rebase modes from the task's SQL conf
+    val sql = new SQLConf
+    PartFormat.Rebase.foreach(k => sql.setConfString(k, conf.get(k)))
+    SQLConf.withExistingConf(sql)(
+      factory.newInstance(file.toString, physical, ctx))
+  }
+}
+
+private[sources] object PartFormat {
+  import org.apache.spark.sql.internal.SQLConf
+
+  private val Rebase = Seq(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key,
+    SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key)
+
+  def apply(conf: Configuration, schema: StructType, cm: ColMap): PartFormat = {
+    val physical =
+      ManifestSink.physicalSchema(schema, cm.copy(defaults = Map.empty))
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(conf)
+    val factory = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().prepareWrite(SparkSession.active, job, Map.empty,
+        physical)
+    val jc = job.getConfiguration
+    jc.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
+    Rebase.foreach(jc.set(_, "CORRECTED"))
+    new PartFormat(physical, factory, new SerializableConfiguration(jc),
+      if (cm.isIdentity) Seq.empty else cm.ids)
+  }
 }

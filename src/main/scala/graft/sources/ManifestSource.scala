@@ -5,13 +5,18 @@ import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -41,8 +46,8 @@ import org.apache.spark.util.SerializableConfiguration
   *    spans the full key range and zone maps are useless, absence
   *    proofs still skip parts. Bloom answers are only ever "surely
   *    absent" — same residual-filter safety as the range stats.
-  *  - Column pruning reaches the decoder: an unused column is split
-  *    but never parsed/allocated.
+  *  - Column pruning reaches the file: parts are Parquet, and an
+  *    unused column is never read.
   *  - `estimateStatistics` reports the POST-PRUNING row count from the
   *    manifest, so the planner can (e.g.) pick a broadcast join for a
   *    selectively-scanned table.
@@ -55,53 +60,6 @@ import org.apache.spark.util.SerializableConfiguration
   * difference between "scan 100k files to answer a keyed lookup" and
   * "open the three parts whose range can match".
   */
-object ManifestSource {
-  /** NESTED field ids per parent field id from a snapshot's column
-    * mapping — the logical side of depth-1 struct resolution
-    * (logical sub-field position -> stable nested id; the part's
-    * recorded sub-layout maps the id to a sub-token slot). Empty ⇒
-    * identity everywhere (no struct ever evolved). */
-  private[sources] def nestedIdsFor(
-      snapCm: Option[(StructType, ColMap)]): Map[Int, Seq[Int]] =
-    snapCm match {
-      case Some((_, cm)) if cm.nested.nonEmpty =>
-        cm.nested.map { case (pid, n) => pid -> n.ids }
-      case _ => Map.empty
-    }
-
-  /** DEPTH-1 STRUCT decode plans for [[ManifestReaderFactory]]: for
-    * each required struct field, resolve every REQUIRED
-    * sub-field (possibly nested-pruned, so by NAME against the full
-    * struct) -> stable nested id (identity when the struct never
-    * evolved) -> the part's recorded sub-layout (identity when
-    * absent) — the top-level column-mapping rule one level down.
-    * `null` at non-struct / meta positions. */
-  private[sources] def structPlansFor(required: StructType,
-      schema: StructType, ids: Seq[Int],
-      nestedIds: Map[Int, Seq[Int]], partNcols: Map[Int, Seq[Int]],
-      metaCols: Set[String]): Array[(Array[Int], Array[DataType])] =
-    required.fields.map { f =>
-      f.dataType match {
-        case reqSt: StructType if !metaCols.contains(f.name) =>
-          val li = schema.fieldIndex(f.name)
-          val fullSt = schema.fields(li).dataType.asInstanceOf[StructType]
-          val id = if (ids.nonEmpty) ids(li) else li
-          val curIds = nestedIds.getOrElse(id, fullSt.fields.indices.toSeq)
-          val layout = partNcols.getOrElse(id, Seq.empty)
-          val slots = reqSt.fields.map { sf =>
-            val sid = curIds(fullSt.fieldIndex(sf.name))
-            if (layout.isEmpty) sid
-            else {
-              val sl = layout.indexOf(sid)
-              if (sl < 0) Int.MaxValue else sl
-            }
-          }
-          (slots, reqSt.fields.map(_.dataType))
-        case _ => null
-      }
-    }
-}
-
 class ManifestSource extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
@@ -537,8 +495,8 @@ private[sources] class ManifestScanBuilder(
         ManifestCdf.MetaNames.contains(f.name)))
       return new ManifestMicroBatchStream(path, base, required, conf,
         startingVersion, maxPartsPerTrigger,
-        colMapIdsFor(base,
-          ManifestSink.readSchemaAndColMap(conf.value, path)),
+        ManifestSink.alignColMap(
+          ManifestSink.readSchemaAndColMap(conf.value, path), base, path),
         changeFeed = true)
     }
     // plan against the manifest on the DRIVER: only committed parts,
@@ -643,33 +601,10 @@ private[sources] class ManifestScanBuilder(
           keyCol.exists(c => longBounds.contains(c) || longPoints.contains(c))
         new ManifestScan(kept, schema, required, conf, all.size, limit, keyCol,
           path, rowLevelOwner, startingVersion, baseVersion,
-          maxPartsPerTrigger, ids = colMapIdsFor(schema, snapCm),
-          branched = branch.isDefined, runtimeFiltered = !keyBoundDelete,
-          initDefaults = ColDefaults.byName(schema, snapCm),
-          nestedIds = ManifestSource.nestedIdsFor(snapCm))
+          maxPartsPerTrigger, ManifestSink.alignColMap(snapCm, schema, path),
+          branched = branch.isDefined, runtimeFiltered = !keyBoundDelete)
     }
   }
-
-  /** Field ids aligned to `s` from the pinned snapshot's column
-    * mapping (empty = identity — the overwhelmingly common case,
-    * where the reader skips mapping entirely). Aligned by NAME
-    * against the snapshot schema the mapping was committed with —
-    * robust to meta-column additions on `s`. */
-  private def colMapIdsFor(s: StructType,
-      snapCm: Option[(StructType, ColMap)]): Seq[Int] =
-    snapCm match {
-      case Some((snap, cm)) if !cm.isIdentity =>
-        val byName = snap.fields.map(_.name).zip(cm.ids).toMap
-        s.fields.toSeq.map { f =>
-          if (f.name == PartMetaColumn.Name || f.name == PosMetaColumn.Name)
-            -1 // metadata columns are served from the partition, not a slot
-          else byName.getOrElse(f.name,
-            throw new IllegalStateException(
-              s"column '${f.name}' has no field id in the snapshot " +
-                s"mapping of $path"))
-        }
-      case _ => Seq.empty
-    }
 }
 
 /** Metadata-only scan: the FINAL aggregate rows were already computed
@@ -725,10 +660,8 @@ private[sources] class ManifestScan(
     startingVersion: Option[Int] = None,
     baseVersion: Int = 0,
     maxPartsPerTrigger: Option[Int] = None,
-    ids: Seq[Int] = Seq.empty,
+    cm: ColMap,
     branched: Boolean = false,
-    initDefaults: Map[String, Any] = Map.empty,
-    nestedIds: Map[Int, Seq[Int]] = Map.empty,
     runtimeFiltered: Boolean = true)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering
@@ -818,11 +751,11 @@ private[sources] class ManifestScan(
   /** Streaming read: snapshot versions ARE the offsets (see
     * [[ManifestMicroBatchStream]]); the stream shares this scan's
     * pruned column set, so `readStream.select(...)` still prunes the
-    * line decoder. */
+    * columns read. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new ManifestMicroBatchStream(tablePath, schema, required, conf,
-      startingVersion, maxPartsPerTrigger, ids, changeFeed = false)
+      startingVersion, maxPartsPerTrigger, cm, changeFeed = false)
 
   // narrowed in place by runtime filters before partition planning
   private var parts: Seq[PartMeta] = initialParts
@@ -890,7 +823,7 @@ private[sources] class ManifestScan(
     rowLevelOwner.foreach(_.recordScan(parts, baseVersion))
     parts.map(p =>
       ManifestPartition(p.path, p.rows, dvRef = p.dvRef, bucket = p.bucket,
-        cols = p.cols, eq = p.eq, ncols = p.ncols)).toArray
+        eq = p.eq)).toArray
   }
 
   override def supportedCustomMetrics()
@@ -903,10 +836,14 @@ private[sources] class ManifestScan(
     Array(LongTaskMetric("partsPlanned", parts.size.toLong),
       LongTaskMetric("partsSkipped", (totalParts - parts.size).toLong))
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ManifestReaderFactory(schema, required, conf,
-      limit.map(_.toLong).getOrElse(Long.MaxValue), ids, initDefaults,
-      nestedIds)
+  // ONE factory per scan: the planner asks again for every copy of
+  // the scan node, and each factory broadcasts its reader's conf. It
+  // covers every clause a planned part may carry (runtime filtering
+  // only narrows `initialParts`)
+  private lazy val readerFactory = new ManifestReaderFactory(schema,
+    required, conf, cm, initialParts.flatMap(_.eq),
+    limit.map(_.toLong).getOrElse(Long.MaxValue))
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** Post-pruning stats straight from the manifest — exact row count;
     * bytes from the parts' TRUE on-disk sizes (committed with each
@@ -1031,18 +968,17 @@ private[sources] class ManifestScan(
   * The change fields default to a plain read. On a change-feed part:
   *  - `changeType` / `commitVersion` are served as the constant
   *    `_change_type` / `_commit_version` columns;
-  *  - `emitOnlyMask` inverts line selection to exactly the ordinals
+  *  - `emitOnlyMask` inverts row selection to exactly the ordinals
   *    the vector flags — a vector commit's newly-deleted rows, whose
   *    DELTA vector the driver ships inline;
   *  - `eq` holds the clauses as of the REPLAYED state, so rows an
   *    earlier eq commit removed never replay;
   *  - a non-empty `emitOnlyEq` keeps only the rows its (new) clauses
   *    match — an eq commit's row-level deletes, found by evaluating
-  *    the clauses against each line. */
+  *    the clauses against each row. */
 private[sources] case class ManifestPartition(
     path: String, rows: Long, dvHex: String = "", dvRef: String = "",
-    bucket: Int = -1, cols: Seq[Int] = Seq.empty,
-    eq: Seq[EqClause] = Seq.empty, ncols: Map[Int, Seq[Int]] = Map.empty,
+    bucket: Int = -1, eq: Seq[EqClause] = Seq.empty,
     changeType: String = "", commitVersion: Int = 0,
     emitOnlyMask: Boolean = false, emitOnlyEq: Seq[EqClause] = Seq.empty)
     extends InputPartition
@@ -1092,11 +1028,11 @@ private[sources] case class ManifestPartition(
   * The change feed's [[ManifestScanBuilder.build]] returns this stream
   * as its scan; the append stream comes from
   * [[ManifestScan.toMicroBatchStream]]. Either way `required` is the
-  * pushed column set, so `readStream.select(...)` prunes the decoder. */
+  * pushed column set, so `readStream.select(...)` prunes the columns read. */
 private[sources] class ManifestMicroBatchStream(
     path: String, schema: StructType, required: StructType,
     conf: SerializableConfiguration, startingVersion: Option[Int],
-    maxPartsPerTrigger: Option[Int], ids: Seq[Int], changeFeed: Boolean)
+    maxPartsPerTrigger: Option[Int], cm: ColMap, changeFeed: Boolean)
     extends Scan
     with org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
@@ -1154,9 +1090,19 @@ private[sources] class ManifestMicroBatchStream(
     }
   }
 
+  // the equality clauses of the batch planned last: Spark plans a
+  // batch's partitions before it asks for their reader factory
+  @volatile private var plannedClauses: Seq[EqClause] = Seq.empty
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[V].v
-    val e = end.asInstanceOf[V].v
+    val planned = plan(start.asInstanceOf[V].v, end.asInstanceOf[V].v)
+    plannedClauses = planned.toSeq.flatMap {
+      case m: ManifestPartition => m.eq ++ m.emitOnlyEq
+    }.distinct
+    planned
+  }
+
+  private def plan(s: Int, e: Int): Array[InputPartition] = {
     if (e <= s) Array.empty
     else if (changeFeed) {
       // each version's manifest is decoded once: it is `cur` for its
@@ -1172,7 +1118,7 @@ private[sources] class ManifestMicroBatchStream(
       val before = pathsAt(s)
       metaAt(e).filterNot(m => before.contains(m.path))
         .map(m => ManifestPartition(m.path, m.rows, dvRef = m.dvRef,
-          cols = m.cols, eq = m.eq, ncols = m.ncols): InputPartition)
+          eq = m.eq): InputPartition)
         .toArray
     }
   }
@@ -1187,9 +1133,8 @@ private[sources] class ManifestMicroBatchStream(
     val prev = prevParts.map(m => m.path -> m).toMap
     val curPaths = cur.map(_.path).toSet
     def replay(m: PartMeta, changeType: String) =
-      ManifestPartition(m.path, m.rows, dvRef = m.dvRef, cols = m.cols,
-        eq = m.eq, ncols = m.ncols, changeType = changeType,
-        commitVersion = v)
+      ManifestPartition(m.path, m.rows, dvRef = m.dvRef, eq = m.eq,
+        changeType = changeType, commitVersion = v)
     val inserts = cur.filterNot(m => prev.contains(m.path))
       .map(replay(_, "insert"))
     val deletes = prev.valuesIterator.filterNot(m => curPaths(m.path))
@@ -1215,7 +1160,7 @@ private[sources] class ManifestMicroBatchStream(
     }
     // a retained part whose EQUALITY-DELETE clause list grew: the
     // newly-deleted rows are exactly those matching the NEW clauses
-    // among the rows visible before. The line mask is the NEW vector:
+    // among the rows visible before. The row mask is the NEW vector:
     // if one commit grows both, the vector delta's rows are already
     // emitted by dvDeletes, so no row's delete double-emits
     val eqDeletes = cur.flatMap { m =>
@@ -1229,19 +1174,13 @@ private[sources] class ManifestMicroBatchStream(
     inserts ++ deletes ++ dvDeletes ++ eqDeletes
   }
 
-  // ONE colmap snapshot for the stream's whole life, captured with
-  // the same head the stream's schema/ids came from: a nested DROP
-  // COLUMN committed mid-stream would otherwise shift the HEAD's
-  // positional nested ids against this stream's older fixed schema
-  // and structPlansFor would misalign sub-slots. EXISTS defaults are
-  // frozen at ADD COLUMN, so the pinned view stays valid for every
-  // replayed part (nested ids likewise).
-  private val snapCm = ManifestSink.readSchemaAndColMap(conf.value, path)
-
+  // `cm` is ONE mapping for the stream's whole life, captured with the
+  // head its schema came from: a nested DROP COLUMN committed
+  // mid-stream must not shift nested ids under this stream's fixed
+  // schema. EXISTS defaults are frozen at ADD COLUMN, so the pinned
+  // view stays valid for every replayed part.
   override def createReaderFactory(): PartitionReaderFactory =
-    new ManifestReaderFactory(schema, required, conf, ids = ids,
-      initDefaults = ColDefaults.byName(schema, snapCm),
-      nestedIds = ManifestSource.nestedIdsFor(snapCm),
+    new ManifestReaderFactory(schema, required, conf, cm, plannedClauses,
       changeFeed = changeFeed)
 
   override def commit(end: Offset): Unit = ()
@@ -1335,128 +1274,6 @@ private[sources] class DvMaskedRowsMetric
     "rows skipped by deletion vectors (merge-on-read debt)"
 }
 
-/** INITIAL column defaults (`EXISTS_DEFAULT`) for the read path: a
-  * part written before a defaulted column was added has a shorter
-  * line — its missing slot serves the default FROZEN at ADD COLUMN
-  * time instead of NULL, making "add a defaulted column to a
-  * petabyte" a metadata commit with no backfill. Values are parsed
-  * and evaluated ONCE on the driver (literal SQL → internal value,
-  * cast to the column type); a non-literal or unparsable default
-  * degrades to NULL rather than failing the scan. */
-private[sources] object ColDefaults {
-  /** field name -> evaluated internal default value, from the
-    * snapshot's colmap header. */
-  def byName(schema: StructType,
-      snapCm: Option[(StructType, ColMap)]): Map[String, Any] =
-    snapCm match {
-      case Some((snap, cm)) if cm.defaults.nonEmpty =>
-        snap.fields.zipWithIndex.flatMap { case (f, i) =>
-          val id = cm.ids.lift(i).getOrElse(i)
-          cm.defaults.get(id).map(_._2).filter(_.nonEmpty)
-            .flatMap(sql => eval(sql, f.dataType))
-            .map(v => f.name -> v)
-        }.toMap
-      case _ => Map.empty
-    }
-
-  private def eval(sql: String,
-      dt: org.apache.spark.sql.types.DataType): Option[Any] =
-    try {
-      val e = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-        .parseExpression(sql)
-      if (!e.foldable) None
-      else Option(org.apache.spark.sql.catalyst.expressions
-        .Cast(e, dt, Some("UTC")).eval(null))
-    } catch { case scala.util.control.NonFatal(_) => None }
-}
-
-/** Equality-clause line matching for [[ManifestReaderFactory]]:
-  * clauses compile ONCE per part to (line slot, token set,
-  * default-matches) — slot through the part's recorded layout by
-  * stable field id, values to the exact line-token form — so the
-  * per-row check is a raw-token set probe, zero decode.
-  *
-  * A clause whose field the part never wrote (slot missing from the
-  * layout, or past a short line's width) does NOT simply never-match:
-  * the reader serves those rows the column's frozen EXISTS default
-  * (see [[ColDefaults]]), so the mask must drop them exactly when
-  * that default equals a clause value — otherwise `DELETE WHERE c =
-  * v` on a defaulted column silently leaves pre-ADD rows visible,
-  * a failed delete in the eq path's own GDPR use case. With no
-  * default the missing slot reads NULL, which a non-null clause
-  * value never matches — the old never-match behavior. */
-private[sources] object EqMask {
-  /** fieldId -> RAW default string (pre line-token encoding) for
-    * every schema column carrying an evaluated initial default. */
-  def defaultToks(schema: StructType, ids: Seq[Int],
-      initDefaults: Map[String, Any]): Map[Int, String] =
-    if (initDefaults.isEmpty) Map.empty
-    else schema.fields.zipWithIndex.flatMap { case (f, i) =>
-      val id = if (ids.nonEmpty) ids(i) else i
-      initDefaults.get(f.name).filter(_ != null)
-        .map(v => id -> v.toString)
-    }.toMap
-
-  /** One compiled clause: an IN-set probe (kinds 'l'/'s') or, for
-    * kind 'L', a canonical-inclusive numeric range [lo, hi] on a
-    * BIGINT column's decimal token (the retention-delete shape —
-    * `DELETE WHERE ts < cutoff`). Ranges pay one Long parse per row
-    * on clause-bearing parts; set probes stay raw-token. */
-  final case class Matcher(slot: Int, vals: Set[String],
-      isRange: Boolean, lo: Long, hi: Long, defaultMatches: Boolean)
-
-  /** A long token falls inside the clause range. NULL rows (and any
-    * non-numeric token — impossible for a well-formed BIGINT line)
-    * never match: `ts < cutoff` is NULL for a NULL ts. */
-  def inRange(tok: String, lo: Long, hi: Long): Boolean =
-    tok != ManifestCodec.NullToken && {
-      try { val v = java.lang.Long.parseLong(tok); v >= lo && v <= hi }
-      catch { case _: NumberFormatException => false }
-    }
-
-  def matchers(clauses: Seq[EqClause], partCols: Seq[Int],
-      defaults: Map[Int, String] = Map.empty): Array[Matcher] =
-    clauses.map { c =>
-      val slot =
-        if (partCols.isEmpty) c.fieldId
-        else {
-          val s = partCols.indexOf(c.fieldId)
-          if (s < 0) Int.MaxValue else s
-        }
-      if (c.kind == 'L') {
-        val lo = c.values.head.toLong
-        val hi = c.values(1).toLong
-        Matcher(slot, Set.empty, isRange = true, lo, hi,
-          defaultMatches = defaults.get(c.fieldId)
-            .exists(d => inRange(d, lo, hi)))
-      } else {
-        val vals = c.values.map(v =>
-          if (c.kind == 's') ManifestCodec.encodeString(v) else v).toSet
-        val dfltTok = defaults.get(c.fieldId).map(v =>
-          if (c.kind == 's') ManifestCodec.encodeString(v) else v)
-        Matcher(slot, vals, isRange = false, 0L, 0L,
-          defaultMatches = dfltTok.exists(vals.contains))
-      }
-    }.toArray
-
-  def matches(ms: Array[Matcher], toks: Array[String]): Boolean = {
-    var i = 0
-    while (i < ms.length) {
-      val m = ms(i)
-      // slot past the line (short pre-ADD line, or missing from the
-      // part's layout — Int.MaxValue): the row serves the column's
-      // initial default, so it matches iff the default does
-      if (m.slot >= toks.length) { if (m.defaultMatches) return true }
-      else if (m.isRange) {
-        if (inRange(toks(m.slot), m.lo, m.hi)) return true
-      }
-      else if (m.vals.contains(toks(m.slot))) return true
-      i += 1
-    }
-    false
-  }
-}
-
 private[sources] class EqMaskedRowsMetric
     extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = "eqMaskedRows"
@@ -1470,86 +1287,132 @@ private[sources] case class LongTaskMetric(metricName: String, v: Long)
   override def value(): Long = v
 }
 
+/** One equality clause compiled against a reader's row: the clause
+  * column's index and its values parsed once per part — a Long or
+  * UTF8 set ('l' / 's'), or the inclusive range [lo, hi] ('L'). A NULL
+  * never matches (`c = v` and `ts < cutoff` are NULL for a NULL c). */
+private[sources] final class EqMatch(c: EqClause, idx: Int) {
+  private val longs: Set[Long] =
+    if (c.kind == 'l') c.values.map(_.toLong).toSet else Set.empty
+  private val strs: Set[UTF8String] =
+    if (c.kind == 's') c.values.map(UTF8String.fromString).toSet else Set.empty
+  private val (lo, hi) =
+    if (c.kind == 'L') (c.values.head.toLong, c.values(1).toLong) else (0L, -1L)
+
+  def matches(r: InternalRow): Boolean = !r.isNullAt(idx) && (c.kind match {
+    case 's' => strs.contains(r.getUTF8String(idx))
+    case 'l' => longs.contains(r.getLong(idx))
+    case _ => val v = r.getLong(idx); v >= lo && v <= hi
+  })
+}
+
 /** The one part reader: batch scans, the append stream and the change
-  * feed all decode through it.
+  * feed all read parts through it, with Spark's own Parquet reader,
+  * built once on the driver.
   *
-  * Per line, in order: the deletion-vector test (a line replays when
-  * its bit equals the partition's `emitOnlyMask` — so a plain read
-  * keeps the unflagged lines), then one split, whose tokens feed the
-  * equality-clause masks (see [[EqMask]]; none on most parts) and
-  * then the decoder.
+  * Columns resolve by stable field id: logical field -> id (`cm`,
+  * aligned to `schema`) -> the part's Parquet column `c<id>`, struct
+  * sub-fields likewise by nested id ([[ManifestSink.physicalField]]).
+  * The Parquet reader serves a column a part never wrote with its
+  * initial default (or NULL) and widens INT -> BIGINT and same-scale
+  * DECIMAL growth, so one read schema serves every part generation.
   *
-  * Column mapping resolves per part: logical field -> stable field id
-  * (`ids`, identity when absent) -> the part's recorded line slot
-  * (`part.cols`; absent = the identity layout). A field the part never
-  * wrote (added later, or its slot was dropped before the part was
-  * written) resolves past the line's width and serves its initial
-  * default — NULL unless the column was added with one (see
-  * [[ColDefaults]]). Struct columns decode through
-  * [[ManifestSource.structPlansFor]].
+  * Per row, in order: the deletion-vector test (a row replays when its
+  * bit equals the partition's `emitOnlyMask`, so a plain read keeps
+  * the unflagged rows), then the equality-clause masks ([[EqMatch]]).
+  * `clauses` lists every clause a planned partition may carry; their
+  * columns join the read schema. No filter reaches Parquet, so the
+  * row position is the `_pos` ordinal and the vector's bit index.
   *
-  * Constant columns come from the partition, never from the line
-  * (negative ordinals): `_part` / `_pos` (path / line ordinal) on a
-  * plain read, `_change_type` / `_commit_version` on a change-feed
-  * factory. On the other kind of read a column of that name is data. */
+  * Constant columns come from the partition, never from the file
+  * (negative slots): `_part` / `_pos` on a plain read, `_change_type`
+  * / `_commit_version` on a change-feed factory. On the other kind of
+  * read a column of that name is data. */
 private[sources] class ManifestReaderFactory(
     schema: StructType, required: StructType,
-    conf: SerializableConfiguration, rowCap: Long = Long.MaxValue,
-    ids: Seq[Int] = Seq.empty,
-    initDefaults: Map[String, Any] = Map.empty,
-    nestedIds: Map[Int, Seq[Int]] = Map.empty,
+    conf: SerializableConfiguration, cm: ColMap,
+    clauses: Seq[EqClause] = Seq.empty, rowCap: Long = Long.MaxValue,
     changeFeed: Boolean = false)
     extends PartitionReaderFactory {
 
-  private val fields: Array[String] = required.fieldNames
+  private val fields = required.fields
+  private val constants: Array[Int] = fields.map(_.name match {
+    case PartMetaColumn.Name if !changeFeed => -1
+    case PosMetaColumn.Name if !changeFeed => -2
+    case ManifestCdf.ChangeTypeCol if changeFeed => -3
+    case ManifestCdf.CommitVersionCol if changeFeed => -4
+    case _ => 0
+  })
+
+  // the Parquet read schema: the required data columns, then each
+  // clause column not among them
+  private val read: StructType = {
+    val data = fields.zip(constants).collect { case (f, 0) =>
+      val i = schema.fieldIndex(f.name)
+      val p = ManifestSink.physicalField(schema.fields(i), cm.ids(i), cm)
+      (f.dataType, p.dataType, schema.fields(i).dataType) match {
+        // a nested-pruned struct reads only its required sub-fields
+        case (req: StructType, phys: StructType, full: StructType) =>
+          p.copy(dataType = StructType(req.fields.map(sf =>
+            phys.fields(full.fieldIndex(sf.name)))))
+        case _ => p
+      }
+    }
+    val extra = clauses.map(c => StructField(s"c${c.fieldId}",
+      if (c.kind == 's') StringType else LongType)).distinct
+      .filterNot(c => data.exists(_.name == c.name))
+      .map(c => cm.ids.indexOf(c.name.drop(1).toInt) match {
+        case -1 => c
+        case i => ManifestSink.physicalField(schema.fields(i), cm.ids(i), cm)
+      })
+    StructType(data ++ extra)
+  }
+  // output slot j -> read column (constants stay negative)
+  private val slots: Array[Int] = {
+    var k = -1
+    constants.map(c => if (c < 0) c else { k += 1; k })
+  }
+  private val types: Array[DataType] = fields.map(_.dataType)
+  // the Parquet row IS the output row
+  private val direct = constants.forall(_ == 0) && read.length == fields.length
+
+  // built on the driver; it broadcasts its Hadoop conf
+  private val parquet: PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(
+      SparkSession.active, read, new StructType(), read, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      new Configuration(conf.value))
+
+  private def compile(cs: Seq[EqClause]): Array[EqMatch] = cs.map { c =>
+    val i = read.fieldIndex(s"c${c.fieldId}")
+    new EqMatch(c, i)
+  }.toArray
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[ManifestPartition]
-    val ordinals = fields.map {
-      case PartMetaColumn.Name if !changeFeed => -1
-      case PosMetaColumn.Name if !changeFeed => -2
-      case ManifestCdf.ChangeTypeCol if changeFeed => -3
-      case ManifestCdf.CommitVersionCol if changeFeed => -4
-      case f =>
-        val li = schema.fieldIndex(f)
-        val id = if (ids.nonEmpty) ids(li) else li
-        if (part.cols.isEmpty) id
-        else {
-          val slot = part.cols.indexOf(id)
-          if (slot < 0) Int.MaxValue else slot
-        }
-    }
-    val types = fields.zip(ordinals).map { case (f, o) =>
-      if (o < 0) null else schema(f).dataType }
-    val structPlans: Array[(Array[Int], Array[DataType])] =
-      ManifestSource.structPlansFor(required, schema, ids, nestedIds,
-        part.ncols, fields.zip(ordinals).collect {
-          case (f, o) if o < 0 => f }.toSet)
-    val dflts: Array[Any] = fields.map(f => initDefaults.getOrElse(f, null))
+    val path = new Path(part.path)
+    val size = path.getFileSystem(conf.value).getFileStatus(path).getLen
+    val rows = parquet(PartitionedFile(InternalRow.empty, SparkPath.fromPath(path),
+      0L, size, Array.empty, 0L, size, Map.empty))
     new PartitionReader[InternalRow] {
-      private val path = new Path(part.path)
       private val partConst = UTF8String.fromString(part.path)
       private val changeConst = UTF8String.fromString(part.changeType)
       private val versionConst = part.commitVersion.toLong
-      // merge-on-read: the part's deletion vector masks flagged line
-      // ordinals — data files are never rewritten by a MOR delete.
+      // merge-on-read: the part's deletion vector masks flagged row
+      // positions — data files are never rewritten by a MOR delete.
       // Sidecar vectors are read ON THE EXECUTOR (one small file next
       // to the part); a change-feed delta ships inline as `dvHex`.
       private val dv =
         if (part.dvRef.nonEmpty) DeleteVector.readRef(conf.value, part.dvRef)
         else DeleteVector.fromHex(part.dvHex)
-      // EQUALITY-DELETE masking: rename/drop-proof by stable field id,
-      // zero per-row decode; default-aware so a clause on a defaulted
-      // later-added column still drops the pre-ADD rows that serve the
-      // frozen default. `onlyEq` is the change feed's inverse mask.
-      private val eqDflts = EqMask.defaultToks(schema, ids, initDefaults)
-      private val eqMatchers = EqMask.matchers(part.eq, part.cols, eqDflts)
-      private val onlyEq = EqMask.matchers(part.emitOnlyEq, part.cols, eqDflts)
-      private val in = path.getFileSystem(conf.value).open(path)
-      private val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      // EQUALITY-DELETE masking by stable field id; `onlyEq` is the
+      // change feed's inverse mask
+      private val eqMatchers = compile(part.eq)
+      private val onlyEq = compile(part.emitOnlyEq)
+      private val out = new GenericInternalRow(fields.length)
       private var current: InternalRow = _
       private var emitted = 0L
-      private var lineNo = -1L
+      private var pos = -1L
       private var masked = 0L
       private var eqMasked = 0L
 
@@ -1562,175 +1425,41 @@ private[sources] class ManifestReaderFactory(
         // a pushed limit caps every partition: one partition can
         // satisfy at most the whole limit, so stop reading past it
         if (emitted >= rowCap) return false
-        var cols: Array[String] = null
-        while (cols == null && lines.hasNext) {
-          val line = lines.next()
-          lineNo += 1
-          if (DeleteVector.isDeleted(dv, lineNo) == part.emitOnlyMask) {
-            val toks = line.split(",", -1)
-            if (EqMask.matches(eqMatchers, toks)) eqMasked += 1
-            else if (onlyEq.isEmpty || EqMask.matches(onlyEq, toks))
-              cols = toks
+        var row: InternalRow = null
+        while (row == null && rows.hasNext) {
+          val r = rows.next()
+          pos += 1
+          if (DeleteVector.isDeleted(dv, pos) == part.emitOnlyMask) {
+            if (eqMatchers.exists(_.matches(r))) eqMasked += 1
+            else if (onlyEq.isEmpty || onlyEq.exists(_.matches(r))) row = r
           } else masked += 1
         }
-        if (cols == null) return false
+        if (row == null) return false
         emitted += 1
-        val vals = new Array[Any](ordinals.length)
-        var j = 0
-        while (j < ordinals.length) {
-          vals(j) = ordinals(j) match {
-            case -1 => partConst
-            case -2 => lineNo
-            case -3 => changeConst
-            case -4 => versionConst
-            case o if o >= cols.length => dflts(j)
-            case o =>
-              val sp = structPlans(j)
-              if (sp == null) ManifestCodec.decode(cols(o), types(j))
-              else ManifestCodec.decodeNested(cols(o), sp._1, sp._2)
+        // the Parquet reader reuses its row: `current` is read before
+        // the next call, never held past it
+        current = if (direct) row else {
+          var j = 0
+          while (j < slots.length) {
+            out.update(j, slots(j) match {
+              case -1 => partConst
+              case -2 => pos
+              case -3 => changeConst
+              case -4 => versionConst
+              case k => if (row.isNullAt(k)) null else row.get(k, types(j))
+            })
+            j += 1
           }
-          j += 1
+          out
         }
-        current = new GenericInternalRow(vals)
         true
       }
 
       override def get(): InternalRow = current
-      override def close(): Unit = in.close()
-    }
-  }
-}
-
-/** Line codec shared by [[ManifestSink]]'s writer and
-  * [[ManifestSource]]'s reader. Atomic types only (the repo-wide
-  * scalar-output convention). Strings are URL-encoded so the comma
-  * separator, newlines, and arbitrary unicode round-trip; NULL is the
-  * `\N` sentinel (which an encoded string can never produce — the
-  * encoder escapes backslash), so NULL and empty string stay
-  * distinct. */
-private[sources] object ManifestCodec {
-  private[sources] val NullToken = "\\N"
-
-  /** URL-safe chars that URLEncoder passes through UNCHANGED — a
-    * string of only these needs no encoding (and, containing neither
-    * '%' nor '+', no decoding either), so the overwhelmingly common
-    * identifier-ish values ('click', 'URGENT', part keys) skip the
-    * URLEncoder allocation + charset machinery on BOTH sides of every
-    * row. The fast path is exact: it reproduces URLEncoder's output
-    * byte-for-byte on exactly this alphabet, so fast-written lines
-    * decode on any reader and vice versa. */
-  private def urlSafe(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      val ok = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-        (c >= '0' && c <= '9') || c == '.' || c == '-' || c == '_' || c == '*'
-      if (!ok) return false
-      i += 1
-    }
-    true
-  }
-
-  /** The exact line-token form of a string value — shared by the row
-    * writer and by equality-delete readers canonicalizing clause
-    * values, so token comparison needs zero per-row decode. */
-  def encodeString(s: String): String =
-    if (urlSafe(s)) s else java.net.URLEncoder.encode(s, "UTF-8")
-
-  /** Inverse of [[encodeString]]: no escape bytes ⇒ the encoded form
-    * IS the value. */
-  def decodeString(s: String): String =
-    if (s.indexOf('%') < 0 && s.indexOf('+') < 0) s
-    else java.net.URLDecoder.decode(s, "UTF-8")
-
-  def encode(row: InternalRow, schema: StructType): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < schema.fields.length) {
-      if (i > 0) sb.append(',')
-      if (row.isNullAt(i)) sb.append(NullToken)
-      else schema.fields(i).dataType match {
-        case StringType =>
-          sb.append(encodeString(row.getUTF8String(i).toString))
-        case BinaryType =>
-          // Base64 (comma-free alphabet, so the line split is safe);
-          // decode below is type-directed, so '+'/'=' never collide
-          // with the string fast-path check
-          sb.append(java.util.Base64.getEncoder.encodeToString(
-            row.getBinary(i)))
-        // DEPTH-1 STRUCT column (the reference's progressively
-        // enriched prediction record, estimate_queue.py:80-88): one
-        // line token = '!' + sub-tokens joined by ';'. Both chars are
-        // produced by NO atomic encoding (URLEncoder escapes them,
-        // Base64's alphabet lacks them, numbers can't contain them),
-        // so the split is safe and the '!' prefix keeps a non-null
-        // single-field struct of a NULL value distinct from a NULL
-        // struct. Sub-fields must be atomic (enforced at CREATE/DDL).
-        case st: StructType =>
-          val sub = row.getStruct(i, st.fields.length)
-          sb.append('!')
-          var k = 0
-          while (k < st.fields.length) {
-            if (k > 0) sb.append(';')
-            if (sub.isNullAt(k)) sb.append(NullToken)
-            else st.fields(k).dataType match {
-              case StringType =>
-                sb.append(encodeString(sub.getUTF8String(k).toString))
-              case BinaryType =>
-                sb.append(java.util.Base64.getEncoder.encodeToString(
-                  sub.getBinary(k)))
-              case dt => sb.append(sub.get(k, dt).toString)
-            }
-            k += 1
-          }
-        case dt => sb.append(row.get(i, dt).toString)
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ => ()
       }
-      i += 1
     }
-    sb.toString
   }
-
-  /** Decode a depth-1 struct token through its NESTED column mapping:
-    * `slots(k)` is the sub-token index serving required sub-field k
-    * (resolved logical path -> stable nested field id -> the part's
-    * recorded sub-layout, exactly the top-level rule one level down).
-    * A slot past the token's width — a sub-field added after the part
-    * was written, or whose slot was dropped before — reads NULL. */
-  def decodeNested(token: String, slots: Array[Int],
-      types: Array[DataType]): Any =
-    if (token == NullToken || token.isEmpty) null
-    else {
-      val toks = token.substring(1).split(";", -1)
-      val vals = new Array[Any](slots.length)
-      var k = 0
-      while (k < slots.length) {
-        val s = slots(k)
-        vals(k) =
-          if (s < 0 || s >= toks.length) null
-          else decode(toks(s), types(k))
-        k += 1
-      }
-      new GenericInternalRow(vals)
-    }
-
-  def decode(s: String, dt: DataType): Any =
-    if (s == NullToken) null
-    else dt match {
-      case LongType      => s.toLong
-      case IntegerType   => s.toInt
-      case ShortType     => s.toShort
-      case ByteType      => s.toByte
-      case DoubleType    => s.toDouble
-      case FloatType     => s.toFloat
-      case BooleanType   => s.toBoolean
-      case TimestampType => s.toLong // micros, as the writer printed it
-      case DateType      => s.toInt  // days
-      case StringType    => UTF8String.fromString(decodeString(s))
-      case d: DecimalType =>
-        Decimal(new java.math.BigDecimal(s), d.precision, d.scale)
-      case BinaryType    => java.util.Base64.getDecoder.decode(s)
-      case other =>
-        throw new UnsupportedOperationException(
-          s"manifest codec supports atomic types only, got $other")
-    }
 }

@@ -147,7 +147,7 @@ object ManifestTxn {
               s"txn '$id': branch '$branch' at ${e.dir} has no schema"))
         ManifestSink.publishRebase(conf, e.dir, schema,
           _ => parts, strictBase = Some(e.forkBase),
-          colmapOverride = Some(cm), stampNew = false, op = label)
+          colmapOverride = Some(cm), checkWritten = false, op = label)
         published += 1
       }
     }

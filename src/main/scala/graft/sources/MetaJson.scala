@@ -41,8 +41,8 @@ private[sources] final case class ManifestHeader(
   *
   * Records are JSON objects, one per line in line-oriented files.
   * Strings use JSON escaping, nested values are JSON objects or
-  * arrays, and unset optional fields are left out. The data-row codec
-  * of `part-*.csv` files is a different format ([[ManifestCodec]]). */
+  * arrays, and unset optional fields are left out. Data parts are
+  * Parquet files ([[PartFormat]]), not records of this format. */
 private[sources] object MetaJson {
 
   // ---- publish ------------------------------------------------------
@@ -196,8 +196,6 @@ private[sources] object MetaJson {
     "sorted" -> when(m.sorted)(JBool(true)),
     "cstats" -> when(m.cstats.nonEmpty)(colStatsJson(m.cstats)),
     "cols" -> when(m.cols.nonEmpty)(ints(m.cols)),
-    "ncols" -> when(m.ncols.nonEmpty)(JObject(m.ncols.toList.sortBy(_._1)
-      .map { case (pid, sids) => pid.toString -> ints(sids) })),
     "eq" -> when(m.eq.nonEmpty)(JArray(m.eq.map(eqJson).toList))))
 
   private def partOf(f: Map[String, JValue]): PartMeta = {
@@ -215,9 +213,7 @@ private[sources] object MetaJson {
       eq = f.get("eq").fold(Seq.empty[EqClause]) {
         case JArray(cs) => cs.map(eqOf)
         case other => bad("array", other)
-      },
-      ncols = f.get("ncols").fold(Map.empty[Int, Seq[Int]])(v =>
-        fields(v).map { case (pid, sids) => pid.toInt -> asInts(sids) }))
+      })
   }
 
   def decodePart(line: String): PartMeta = partOf(fields(parse(line)))

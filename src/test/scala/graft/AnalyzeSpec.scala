@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import graft.sources.ManifestSink
 
 /** `CALL system.analyze` (sources/ManifestMaintenance.analyzeTable):
   * per-part statistics recomputed from the VISIBLE rows in one
@@ -23,7 +24,7 @@ class AnalyzeSpec extends SparkSpec {
   private def dataFiles(table: String): Seq[String] = {
     val dir = new java.io.File(s"$wh/ns/$table")
     dir.listFiles().toSeq.map(_.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".csv")).sorted
+      .filter(ManifestSink.isPartFile).sorted
   }
 
   private def keyRanges(table: String): Seq[(Long, Long, Long)] =

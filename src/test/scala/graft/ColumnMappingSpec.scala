@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.sources.ManifestSink
 
 /** COLUMN MAPPING (sources/ManifestSink.scala `ColMap`,
   * GraftCatalog.alterTable): RENAME and DROP COLUMN as metadata-only
@@ -25,7 +26,7 @@ class ColumnMappingSpec extends SparkSpec {
   private def dataFiles(table: String): Seq[String] = {
     val dir = new java.io.File(s"$wh/ns/$table")
     dir.listFiles().toSeq.map(_.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".csv")).sorted
+      .filter(ManifestSink.isPartFile).sorted
   }
 
   test("RENAME COLUMN is metadata-only; old parts read under the new name") {

@@ -137,7 +137,7 @@ class ManifestHistorySpec extends SparkSpec {
     val listed = ManifestSink.readManifest(conf, target)
       .map(p => Paths.get(p._1.stripPrefix("file:")).getFileName.toString).toSet
     val onDisk = Files.list(Paths.get(target)).toArray.map(_.toString)
-      .filter(_.endsWith(".csv"))
+      .filter(p => ManifestSink.isPartFile(Paths.get(p).getFileName.toString))
       .map(p => Paths.get(p).getFileName.toString).toSet
     assert(onDisk === listed)
   }
@@ -160,13 +160,13 @@ class ManifestHistorySpec extends SparkSpec {
     val before = ManifestSink.readManifest(conf, target)
     assert(before.size === 4)
     val filesBefore = Files.list(Paths.get(target)).toArray.map(_.toString)
-      .count(_.endsWith(".csv"))
+      .count(p => ManifestSink.isPartFile(Paths.get(p).getFileName.toString))
 
     spark.sql("DELETE FROM gcv.ns.cowvac WHERE k >= 600")
     assert(spark.sql("SELECT * FROM gcv.ns.cowvac").count() === 600)
     // COW never deletes: v1's files all still present, plus the rewrite
     assert(Files.list(Paths.get(target)).toArray.map(_.toString)
-      .count(_.endsWith(".csv")) === filesBefore + 1)
+      .count(p => ManifestSink.isPartFile(Paths.get(p).getFileName.toString)) === filesBefore + 1)
 
     val stats = ManifestMaintenance.expireSnapshots(conf, target,
       keepLast = 1, orphanGraceMs = 0L)
@@ -180,7 +180,7 @@ class ManifestHistorySpec extends SparkSpec {
     val listed = ManifestSink.readManifest(conf, target)
       .map(p => Paths.get(p._1.stripPrefix("file:")).getFileName.toString).toSet
     val onDisk = Files.list(Paths.get(target)).toArray.map(_.toString)
-      .filter(_.endsWith(".csv"))
+      .filter(p => ManifestSink.isPartFile(Paths.get(p).getFileName.toString))
       .map(p => Paths.get(p).getFileName.toString).toSet
     assert(onDisk === listed)
     assert(listed.intersect(before.map(p =>

@@ -35,6 +35,21 @@ class ManifestSinkSpec extends SparkSpec {
     assert(nonEmpty.map(_._3).min === 0L, "global key min via per-file stats")
   }
 
+  test("a task that writes no row commits no part") {
+    val target = Files.createTempDirectory("graft-sink-spec-").toString
+    spark.range(0, 3, 1, 8).write.format("graft.sources.ManifestSink")
+      .option("path", target).mode("overwrite").save()
+    val m = ManifestSink.readManifest(
+      spark.sparkContext.hadoopConfiguration, target)
+    assert(m.size === 3, m.toString)
+    assert(m.forall(_._2 > 0), "no empty part is listed")
+    assert(Files.list(Paths.get(target)).toArray.map(_.toString)
+      .count(p => ManifestSink.isPartFile(Paths.get(p).getFileName.toString))
+      === 3, "no empty part file is staged")
+    assert(spark.read.format("graft.sources.ManifestSource")
+      .option("path", target).load().count() === 3L)
+  }
+
   test("orphan files are invisible: the manifest is the commit point") {
     val target = Files.createTempDirectory("graft-sink-spec-").toString
     writeOnce(target, 2)
@@ -82,7 +97,7 @@ class ManifestSinkSpec extends SparkSpec {
     val m = ManifestSink.readManifest(conf, target)
     assert(m.size === 2)
     def onDisk = Files.list(Paths.get(target)).toArray.map(_.toString)
-      .filter(_.endsWith(".csv")).toSet
+      .filter(p => ManifestSink.isPartFile(Paths.get(p).getFileName.toString)).toSet
     val listed = m.map(_._1.stripPrefix("file:")).toSet
     assert(onDisk.size === 6, "superseded parts stay until expiry")
     graft.sources.ManifestMaintenance.expireSnapshots(conf, target,

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.model.Tables
+import graft.sources.ManifestSink
 
 /** A local filesystem under a scheme that exists ONLY in the session
   * Hadoop configuration — the probe for the sink/source conf plumbing.
@@ -75,6 +76,36 @@ class ManifestSourceSpec extends SparkSpec {
     // NULL and empty string stay distinct through the codec
     assert(back.filter(col("s").isNull).select("k").as[Long].collect().toSeq === Seq(5L))
     assert(back.filter(col("s") === "").select("k").as[Long].collect().toSeq === Seq(4L))
+
+    // type extremes: integral bounds, NaN and -0.0, full-width
+    // decimals, dates and timestamps before the 1582 Gregorian cutover
+    // and at the ends of the range, empty and non-empty binaries, and
+    // a struct with a NULL sub-field next to a NULL struct
+    val extremes = spark.sql("""SELECT * FROM VALUES
+      (1L, CAST(-128 AS TINYINT), CAST(-32768 AS SMALLINT), -2147483648,
+        CAST('NaN' AS FLOAT), CAST('NaN' AS DOUBLE),
+        CAST('-12345678901234567890.123456789012345678' AS DECIMAL(38,18)),
+        DATE'0001-01-01', TIMESTAMP'0001-01-01 00:00:00',
+        X'', named_struct('a', 1, 'b', CAST(NULL AS STRING))),
+      (2L, CAST(127 AS TINYINT), CAST(32767 AS SMALLINT), 2147483647,
+        CAST(-0.0 AS FLOAT), CAST(-0.0 AS DOUBLE),
+        CAST('99999999999999999999.999999999999999999' AS DECIMAL(38,18)),
+        DATE'9999-12-31', TIMESTAMP'9999-12-31 23:59:59.999999',
+        X'00FF2C0A', CAST(NULL AS STRUCT<a: INT, b: STRING>)),
+      (3L, CAST(0 AS TINYINT), CAST(0 AS SMALLINT), 0,
+        CAST('Infinity' AS FLOAT), CAST('-Infinity' AS DOUBLE),
+        CAST(NULL AS DECIMAL(38,18)),
+        DATE'1000-03-01', TIMESTAMP'1500-06-15 12:34:56.789012',
+        CAST(NULL AS BINARY), named_struct('a', CAST(NULL AS INT), 'b', 'x'))
+      AS t(k, ti, si, i, f, d, dec, dt, ts, bin, st)""")
+    val target2 = Files.createTempDirectory("graft-src-spec-").toString
+    extremes.write.format("graft.sources.ManifestSink")
+      .option("path", target2).mode("overwrite").save()
+    val back2 = readBack(target2)
+    assert(back2.schema.map(_.dataType.simpleString) ===
+      extremes.schema.map(_.dataType.simpleString))
+    assert(back2.orderBy("k").collect().toSeq ===
+      extremes.orderBy("k").collect().toSeq, "extremes must round-trip")
   }
 
   test("key-range predicates prune part files against manifest stats") {
@@ -233,7 +264,7 @@ class ManifestSourceSpec extends SparkSpec {
         min("event_type"), max("event_type")).head
     // remove every part file — only the version manifest remains
     Files.list(Paths.get(target)).toArray.map(_.toString)
-      .filter(_.endsWith(".csv")).foreach(f => Files.delete(Paths.get(f)))
+      .filter(p => ManifestSink.isPartFile(Paths.get(p).getFileName.toString)).foreach(f => Files.delete(Paths.get(f)))
     val agg = readBack(target)
       .agg(count(lit(1)).as("n"), min("event_id").as("lo"),
         max("event_id").as("hi"),

@@ -94,4 +94,25 @@ class ClusterBySpec extends SparkSpec {
     assert(parts.size > 1, "the disjointness claim needs >1 part")
     assert(parts.forall(_.sorted), "CTAS parts must be key-sorted")
   }
+
+  test("RENAME COLUMN moves the CLUSTER BY column; DROP COLUMN refuses it") {
+    val c = freshCat("r")
+    spark.sql(s"CREATE TABLE $c.wh.t (k BIGINT, v BIGINT) CLUSTER BY (k)")
+    spark.sql(s"ALTER TABLE $c.wh.t RENAME COLUMN k TO k2")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
+      "false")
+    try spark.sql(s"INSERT INTO $c.wh.t SELECT id AS k2, id * 2 AS v " +
+      "FROM range(0, 4000, 1, 4)")
+    finally spark.conf.unset(
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    assert(spark.sql(s"SELECT count(*) FROM $c.wh.t").head.getLong(0)
+      === 4000L)
+    assert(spark.sql(s"SELECT count(*) FROM $c.wh.t.files WHERE NOT is_sorted")
+      .head.getLong(0) === 0L, "the insert still sorts by the renamed column")
+    assert(overlaps(c, "t") === 0L)
+    val e = intercept[Exception](
+      spark.sql(s"ALTER TABLE $c.wh.t DROP COLUMN k2"))
+    assert(e.getMessage.contains("CLUSTER BY NONE"), e.getMessage)
+    assert(spark.table(s"$c.wh.t").columns.toSeq === Seq("k2", "v"))
+  }
 }

@@ -71,11 +71,10 @@ class MetaJsonSpec extends AnyFunSuite {
     cstats <- small(Gen.zip(str, colStat)).map(_.toMap)
     cols <- small(id)
     eq <- small(eqClause)
-    ncols <- small(Gen.zip(id, small(id))).map(_.toMap)
   } yield PartMeta(path, rows, dvRef,
     if (dvRef.isEmpty) 0L else dvCard, bytes,
     bucket.fold(-1)(_._1), bucket.fold(0)(_._2), sorted, cstats, cols,
-    eq, ncols)
+    eq)
 
   private val colMap: Gen[ColMap] = for {
     ids <- small(id)
@@ -89,7 +88,7 @@ class MetaJsonSpec extends AnyFunSuite {
     } yield ColMap.Nested(nids, nnext, nret))).map(_.toMap)
   } yield ColMap(ids, next, retired, defaults, nested)
 
-  test("part records (ColStat, EqClause, ncols) round-trip") {
+  test("part records (ColStat, EqClause) round-trip") {
     check("part", Prop.forAll(part) { m =>
       MetaJson.decodePart(MetaJson.encodePart(m)) == m
     })

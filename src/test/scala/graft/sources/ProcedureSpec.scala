@@ -380,7 +380,7 @@ class ProcedureSpec extends graft.SparkSpec {
       .option("path", t).mode("overwrite").save()
     def files() = new org.apache.hadoop.fs.Path(t).getFileSystem(conf)
       .listStatus(new org.apache.hadoop.fs.Path(t))
-      .count(_.getPath.getName.endsWith(".csv"))
+      .count(st => ManifestSink.isPartFile(st.getPath.getName))
     val before = files()
     val dry = spark.sql("CALL gps.system.expire_snapshots(" +
       "table => 'ns.dryrun', keep_last => 1, " +
@@ -437,8 +437,7 @@ class ProcedureSpec extends graft.SparkSpec {
     // zero data files under the clone dir: the snapshot is references
     val cloneDir = new org.apache.hadoop.fs.Path(s"$wh/ns/clfork")
     def cloneFiles() = cloneDir.getFileSystem(conf).listStatus(cloneDir)
-      .count(st => st.getPath.getName.startsWith("part-") &&
-        st.getPath.getName.endsWith(".csv"))
+      .count(st => ManifestSink.isPartFile(st.getPath.getName))
     assert(cloneFiles() === 0, "shallow clone must copy no data")
     assert(spark.sql("SELECT count(*) FROM gps.ns.clfork").head.getLong(0)
       === 300L, "clone serves the pinned snapshot, not the source head")
@@ -456,12 +455,12 @@ class ProcedureSpec extends graft.SparkSpec {
     // files under the clone dir — the referenced source files survive
     val srcFiles = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
       .listStatus(new org.apache.hadoop.fs.Path(src))
-      .count(_.getPath.getName.endsWith(".csv"))
+      .count(st => ManifestSink.isPartFile(st.getPath.getName))
     spark.sql("CALL gps.system.expire_snapshots(table => 'ns.clfork', " +
       "keep_last => 1, orphan_grace_ms => 86400000)").collect()
     assert(new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
       .listStatus(new org.apache.hadoop.fs.Path(src))
-      .count(_.getPath.getName.endsWith(".csv")) === srcFiles,
+      .count(st => ManifestSink.isPartFile(st.getPath.getName)) === srcFiles,
       "clone maintenance must never reclaim source data")
     assert(spark.sql("SELECT count(*) FROM gps.ns.clfork").head.getLong(0)
       === 400L)
