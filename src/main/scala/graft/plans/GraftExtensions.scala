@@ -40,10 +40,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // ResolveSessionCatalog can reject them (see GraftViewRules)
     ext.injectHintResolutionRule(s => new graft.sources.RewriteGraftViewCommands(s))
     ext.injectHintResolutionRule(s => new graft.sources.ResolveGraftViews(s))
-    // row-level MERGE/UPDATE/DELETE group filtering: re-point the
-    // struct-valued matched-key subquery at one prunable column so
-    // the rewrite footprint is bounded by manifest stats (see
-    // sources/SplitRowLevelDpp)
-    ext.injectQueryStagePrepRule(s => graft.sources.SplitRowLevelDpp(s))
   }
 }

@@ -4045,12 +4045,12 @@ ORDER BY partition""")),
 FROM events""")),
 
     // --- TABLE PROPERTIES (TBLPROPERTIES / COMMENT ON TABLE —
-    // GraftCatalog SetProperty/RemoveProperty + the _PROPS.json
-    // sidecar): the operational key-value surface every warehouse
+    // GraftCatalog SetProperty/RemoveProperty into the version log's
+    // table record): the operational key-value surface every warehouse
     // table carries — ownership tags, policy knobs, comments. The
     // ladder drives create-with-properties → SET (add + overwrite) →
-    // UNSET → data commits and a metadata-only ADD COLUMN (property
-    // storage is table-level, snapshot commits must not disturb it) →
+    // UNSET → data commits and a metadata-only ADD COLUMN (every
+    // commit carries the head's properties forward) →
     // SHOW TBLPROPERTIES read back, gated row-for-row. Properties
     // are pure driver metadata at any table size.
     QueryDef("q_tblproperties",

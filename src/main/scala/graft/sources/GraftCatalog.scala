@@ -53,12 +53,21 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   // ---- NAMESPACE DDL (SupportsNamespaces): a namespace is a
   // warehouse directory that is NOT a table (no committed manifest
   // schema). CREATE NAMESPACE materializes the directory plus a
-  // `_PROPS.json` sidecar (the same property codec tables use), so
-  // empty namespaces survive listing; DROP refuses a non-empty
-  // namespace unless CASCADE. All operations are O(children) driver
-  // metadata — no data moves.
+  // `_PROPS.json` properties file (a namespace has no version log to
+  // carry them), so empty namespaces survive listing; DROP refuses a
+  // non-empty namespace unless CASCADE. All operations are
+  // O(children) driver metadata — no data moves.
   private def nsPath(ns: Array[String]): Path =
     new Path((warehouse +: ns).mkString("/"))
+
+  private val NsPropsFile = "_PROPS.json"
+
+  private def readNsProps(dir: Path): Map[String, String] =
+    MetaJson.read(conf, new Path(dir, NsPropsFile))
+      .fold(Map.empty[String, String])(MetaJson.decodeProps)
+
+  private def writeNsProps(dir: Path, props: Map[String, String]): Unit =
+    MetaJson.replace(conf, dir, NsPropsFile, MetaJson.encodeProps(props))
 
   private def isTableDir(ns: Array[String]): Boolean =
     ManifestSink.readSchema(conf, (warehouse +: ns).mkString("/")).isDefined
@@ -96,8 +105,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     if (!nsExists(namespace))
       throw new org.apache.spark.sql.catalyst.analysis
         .NoSuchNamespaceException(namespace)
-    ManifestSink.readTableProps(conf,
-      nsPath(namespace).toString).asJava
+    readNsProps(nsPath(namespace)).asJava
   }
 
   override def createNamespace(namespace: Array[String],
@@ -109,9 +117,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         .NamespaceAlreadyExistsException(namespace)
     val p = nsPath(namespace)
     p.getFileSystem(conf).mkdirs(p)
-    // persist properties (empty map still writes the sidecar — the
+    // persist properties (an empty map still writes the file — the
     // marker is what makes a fresh empty namespace listable)
-    ManifestSink.writeTableProps(conf, p.toString,
+    writeNsProps(p,
       metadata.asScala.toMap -- Seq(SupportsNamespaces.PROP_OWNER))
   }
 
@@ -120,15 +128,15 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     if (!nsExists(namespace))
       throw new org.apache.spark.sql.catalyst.analysis
         .NoSuchNamespaceException(namespace)
-    val dir = nsPath(namespace).toString
-    val props = changes.foldLeft(ManifestSink.readTableProps(conf, dir)) {
+    val dir = nsPath(namespace)
+    val props = changes.foldLeft(readNsProps(dir)) {
       case (m, s: NamespaceChange.SetProperty) =>
         m + (s.property() -> s.value())
       case (m, r: NamespaceChange.RemoveProperty) => m - r.property()
       case (_, other) => throw new UnsupportedOperationException(
         s"namespace change $other is not supported")
     }
-    ManifestSink.writeTableProps(conf, dir, props)
+    writeNsProps(dir, props)
   }
 
   override def dropNamespace(namespace: Array[String],
@@ -184,7 +192,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
 
   override def loadTable(ident: Identifier): Table = {
     val p = tablePath(ident)
-    ManifestSink.readSchemaAndColMap(conf, p) match {
+    val head = ManifestSink.readHeader(conf, p)
+    head.schemaCm match {
       case Some((schema, cm)) =>
         // re-attach COLUMN DEFAULTS as the field-metadata pair Spark's
         // default resolution consumes (the DDL codec stores the schema
@@ -203,12 +212,12 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
               case None => f
             }
           })
-        val spec = ManifestSink.readTableSpec(conf, p)
-        val props = ManifestSink.readTableProps(conf, p)
+        val table = head.table
         // identity spec re-attaches as field metadata so DESCRIBE and
         // write-side validation see it (the DDL codec stores schemas
-        // clean; the props sidecar is the spec's canonical store)
-        val loaded = ManifestIdentity.parse(props) match {
+        // clean; the table record's props are the spec's canonical
+        // store)
+        val loaded = ManifestIdentity.parse(table.props) match {
           case Some(s) => StructType(withDefaults.fields.map { f =>
             if (f.name != s.col) f
             else f.copy(metadata =
@@ -221,18 +230,11 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           })
           case None => withDefaults
         }
-        // identity-split tables expose SHOW PARTITIONS / ALTER TABLE
-        // DROP PARTITION (partition values ARE manifest metadata there
-        // — see [[GraftSplitCatalogTable]]); a days()/hours() spec gets
-        // the TIME-transform face (the partition values are DERIVED
-        // day/hour ordinals)
-        spec.layout match {
-          case Some((0, _)) if spec.transform.isDefined =>
-            new GraftTimeSplitCatalogTable(ident, p, loaded, spec, props)
-          case Some((0, _)) =>
-            new GraftSplitCatalogTable(ident, p, loaded, spec, props)
-          case _ => new GraftCatalogTable(ident, p, loaded, spec, props)
-        }
+        // split tables expose SHOW PARTITIONS / ALTER TABLE DROP
+        // PARTITION (partition values ARE manifest metadata there —
+        // see [[GraftPartitionedCatalogTable]])
+        GraftPartitionedCatalogTable.of(ident, p, loaded, table)
+          .getOrElse(new GraftCatalogTable(ident, p, loaded, table))
       case None =>
         // METADATA TABLES (the Iceberg `db.table.history` shape):
         // `SELECT * FROM cat.ns.t.history|files|branches` parses as
@@ -343,8 +345,6 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     validateStructDepth(schema)
     val spec = TableLayout.fromDdl(partitions, schema)
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    if (spec != TableSpec())
-      ManifestSink.writeTableSpec(conf, tablePath(ident), spec)
     // COLUMN DEFAULTS at create: Spark delivers them as the field-
     // metadata pair (CURRENT_DEFAULT, EXISTS_DEFAULT) — capture into
     // the snapshot's colmap header keyed by field id, then store the
@@ -412,14 +412,12 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       (if (genSpecs.isEmpty) Map.empty[String, String]
        else Map(ManifestGenerated.PropKey ->
          ManifestGenerated.render(genSpecs)))
-    if (userProps.nonEmpty)
-      ManifestSink.writeTableProps(conf, tablePath(ident), userProps)
-    // a table is born as a schema-only snapshot: same commit protocol,
-    // zero parts — readers see an empty versioned table immediately
+    // a table is born as a schema-only snapshot carrying its record:
+    // same commit protocol, zero parts — readers see an empty
+    // versioned table immediately
     ManifestSink.publishSnapshot(conf, tablePath(ident), clean, Seq.empty,
-      colmap = if (defaults.isEmpty) None
-        else Some(ColMap.identity(clean.fields.length)
-          .copy(defaults = defaults)),
+      restate = Some((ColMap.identity(clean.fields.length)
+        .copy(defaults = defaults), TableRecord(spec, userProps))),
       op = "create")
     loadTable(ident)
   }
@@ -460,9 +458,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     validateStructDepth(schema)
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
     new GraftStagedTable(ident, tablePath(ident), schema,
-      TableLayout.fromDdl(partitions, schema),
-      replace = false,
-      tableProps = stagedProps(properties))
+      stagedRecord(partitions, schema, properties), replace = false)
   }
 
   override def stageReplace(ident: Identifier, columns: Array[Column],
@@ -473,9 +469,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     validateStructDepth(schema)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     new GraftStagedTable(ident, tablePath(ident), schema,
-      TableLayout.fromDdl(partitions, schema),
-      replace = true,
-      tableProps = stagedProps(properties))
+      stagedRecord(partitions, schema, properties), replace = true)
   }
 
   override def stageCreateOrReplace(ident: Identifier,
@@ -485,18 +479,20 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     val schema = org.apache.spark.sql.graftbridge.GraftCatalogV2.toStructType(columns)
     validateStructDepth(schema)
     new GraftStagedTable(ident, tablePath(ident), schema,
-      TableLayout.fromDdl(partitions, schema),
-      replace = tableExists(ident),
-      tableProps = stagedProps(properties))
+      stagedRecord(partitions, schema, properties),
+      replace = tableExists(ident))
   }
 
-  /** User-facing TBLPROPERTIES of a staged CTAS/RTAS (engine-reserved
-    * keys stripped, COMMENT kept on its 'comment' key). */
-  private def stagedProps(
-      properties: util.Map[String, String]): Map[String, String] =
-    properties.asScala.toMap -- Seq(
-      TableCatalog.PROP_PROVIDER, TableCatalog.PROP_LOCATION,
-      TableCatalog.PROP_OWNER, TableCatalog.PROP_EXTERNAL)
+  /** The record a staged CTAS/RTAS publishes: its layout and its
+    * user-facing TBLPROPERTIES (engine-reserved keys stripped, COMMENT
+    * kept on its 'comment' key). A replaced table's layout,
+    * properties and constraints do not survive into the new one. */
+  private def stagedRecord(partitions: Array[Transform], schema: StructType,
+      properties: util.Map[String, String]): TableRecord =
+    TableRecord(TableLayout.fromDdl(partitions, schema),
+      properties.asScala.toMap -- Seq(
+        TableCatalog.PROP_PROVIDER, TableCatalog.PROP_LOCATION,
+        TableCatalog.PROP_OWNER, TableCatalog.PROP_EXTERNAL))
 
   /** `ALTER TABLE t ADD | RENAME | DROP COLUMN` — the DDL face of the
     * format's schema evolution, every variant a METADATA-ONLY commit
@@ -521,23 +517,26 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     *    dropped when no LATER column of the same type would silently
     *    inherit their per-part min/max.
     *
-    * Schema-changing commits pin `strictBase` to the head they read —
-    * a racing commit fails the DDL loudly rather than composing a
-    * half-stale schema. Type changes stay rejected: committed parts
-    * would be re-interpreted. */
+    * The whole ALTER folds into ONE commit of the new schema, mapping
+    * and [[TableRecord]] (layout, properties, constraints), pinned by
+    * `strictBase` to the head it read — a racing commit fails the DDL
+    * loudly rather than composing a half-stale table, and a change
+    * that fails mid-fold publishes nothing. Type changes stay
+    * rejected: committed parts would be re-interpreted. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val p = tablePath(ident)
     val baseVersion = ManifestSink.listVersions(conf, p)
       .lastOption.getOrElse(0)
-    val (schema, colmap0) = ManifestSink
-      .readSchemaAndColMap(conf, p, Some(baseVersion))
+    val head = ManifestSink.readHeader(conf, p, Some(baseVersion))
+    val (schema, colmap0) = head.schemaCm
       .getOrElse(throw new NoSuchTableException(ident))
-    var constraints = ManifestSink.readConstraints(conf, p)
+    var constraints = head.table.constraints
     var colmap = colmap0
-    var props = ManifestSink.readTableProps(conf, p)
+    var props = head.table.props
+    var spec = head.table.spec
     var schemaChanged = false
-    var constraintsChanged = false
-    var propsChanged = false
+    // the operation label of each kind of change, in order
+    var ops = Seq.empty[String]
     // renames (from, to) of the key / first string, in order: the
     // commit moves every head part's record of them to the new name
     // (see ManifestSink.keyAndFirstStr)
@@ -770,12 +769,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         // the layout routes (bucket, split) and orders (CLUSTER BY) by
         // this name in the write distribution and the reported
         // partitioning — follow it
-        val spec = ManifestSink.readTableSpec(conf, p)
         def moved(c: String) = if (c.equalsIgnoreCase(from)) to else c
-        val renamed = spec.copy(
+        spec = spec.copy(
           layout = spec.layout.map { case (n, c) => (n, moved(c)) },
           orderBy = spec.orderBy.map(moved))
-        if (renamed != spec) ManifestSink.writeTableSpec(conf, p, renamed)
         schemaChanged = true
         colmap = colmap.copy(retired = colmap.retired :+ s.fields(idx).name)
         if (ManifestSink.keyAndFirstStr(s).contains(s.fields(idx).name))
@@ -832,7 +829,6 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
               s"cannot drop '$name': referenced by CHECK constraint(s) " +
                 s"${refs.mkString(", ")} — drop them first")
           }
-          val spec = ManifestSink.readTableSpec(conf, p)
           spec.layout.foreach { case (_, c) =>
             require(!c.equalsIgnoreCase(name),
               s"cannot drop '$name': it is the bucket column of $ident")
@@ -896,7 +892,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             require(!constraints.exists(_._1.equalsIgnoreCase(c.name())),
               s"constraint '${c.name()}' already exists on $ident")
             constraints = constraints :+ (c.name() -> c.predicateSql())
-            constraintsChanged = true
+            ops :+= "add-constraint"
             s
           case other => throw new UnsupportedOperationException(
             s"only CHECK constraints are supported, got ${other.toDDL}")
@@ -908,49 +904,46 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             s"(have: ${constraints.map(_._1).mkString(", ")})")
         if (exists) {
           constraints = constraints.filterNot(_._1.equalsIgnoreCase(dc.name()))
-          constraintsChanged = true
+          ops :+= "drop-constraint"
         }
         s
       // ALTER TABLE SET/UNSET TBLPROPERTIES (COMMENT ON TABLE rides
       // the 'comment' key): operational key-value metadata in the
-      // props sidecar — no snapshot commit, data untouched
+      // table record — a metadata-only commit, data untouched
       case (s, sp: TableChange.SetProperty) =>
         props = props + (sp.property -> sp.value)
-        propsChanged = true
+        ops :+= "set-properties"
         s
       case (s, rp: TableChange.RemoveProperty) =>
         props = props - rp.property
-        propsChanged = true
+        ops :+= "unset-properties"
         s
       // ALTER TABLE ... CLUSTER BY (c) / CLUSTER BY NONE: the
       // clustering lifecycle's other half — replaces (or clears) the
-      // write-ordered layout as pure sidecar metadata; existing parts
-      // keep their committed placement (compaction migrates), new
-      // INSERTs range-distribute + sort on the new column. Same
-      // machinery as CALL set_layout(spec => 'none', order_by => c).
+      // write-ordered layout in the table record; existing parts keep
+      // their committed placement (compaction migrates), new INSERTs
+      // range-distribute + sort on the new column. Same machinery as
+      // CALL set_layout(spec => 'none', order_by => c).
       case (s, cb: TableChange.ClusterBy) =>
-        val spec = TableLayout.check(ManifestSink.readTableSpec(conf, p)
-          .copy(orderBy = TableLayout.clusterCol(
-            cb.clusteringColumns().map(_.fieldNames().mkString(".")))), s)
-        if (spec == TableSpec()) ManifestSink.clearTableSpec(conf, p)
-        else ManifestSink.writeTableSpec(conf, p, spec)
+        spec = TableLayout.check(spec.copy(orderBy = TableLayout.clusterCol(
+          cb.clusteringColumns().map(_.fieldNames().mkString(".")))), s)
+        ops :+= "cluster-by"
         s
       case (_, c) => throw new UnsupportedOperationException(
         s"unsupported ALTER TABLE change $c — schema evolves " +
           "additively (ADD COLUMN / append commits) only")
     }
-    if (propsChanged)
-      ManifestSink.writeTableProps(conf, p, props)
-    if (constraintsChanged)
-      ManifestSink.writeConstraints(conf, p, constraints)
-    if (schemaChanged)
+    val table = TableRecord(spec, props, constraints)
+    if (schemaChanged || table != head.table)
       ManifestSink.publishRebase(conf, p, widened,
-        rebase = head => head.map(m => m.copy(cstats =
+        rebase = parts => parts.map(m => m.copy(cstats =
           renames.foldLeft(m.cstats) { case (cs, (from, to)) =>
             cs.get(from).fold(cs)(st => cs - from + (to -> st))
           })),
         strictBase = if (baseVersion > 0) Some(baseVersion) else None,
-        colmapOverride = Some(colmap), op = "alter")
+        restate = Some((colmap, table)),
+        op = ((if (schemaChanged) Seq("alter") else Nil) ++ ops).distinct
+          .mkString(","))
     loadTable(ident)
   }
 
@@ -962,8 +955,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
 
   /** `ALTER TABLE t RENAME TO u` — one filesystem rename plus an
     * O(versions) manifest re-point: every table artifact (version
-    * manifests, part files, branch/tag refs, layout spec, properties,
-    * constraints) lives INSIDE the table directory, so the move
+    * manifests with their table records, part files, branch/tag refs)
+    * lives INSIDE the table directory, so the move
     * itself carries everything — but manifests record part and
     * sidecar paths ABSOLUTELY (shallow clones depend on that), so
     * after the move each version/branch/head manifest has the `path`
@@ -1272,7 +1265,7 @@ private[sources] object TableLayout {
   * construction — CatalogSpec pins both paths. */
 private[sources] class GraftCatalogTable(
     ident: Identifier, path: String, tableSchema: StructType,
-    spec: TableSpec, tableProps: Map[String, String])
+    table: TableRecord)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
@@ -1403,7 +1396,7 @@ private[sources] class GraftCatalogTable(
   /** Stored TBLPROPERTIES (`SHOW TBLPROPERTIES` / `DESCRIBE EXTENDED`
     * read this; `COMMENT ON TABLE` rides the 'comment' key). */
   override def properties(): util.Map[String, String] =
-    tableProps.asJava
+    table.props.asJava
 
   // AUTOMATIC_SCHEMA_EVOLUTION opts into Spark's
   // ResolveMergeIntoSchemaEvolution: `MERGE … WITH SCHEMA EVOLUTION`
@@ -1430,28 +1423,27 @@ private[sources] class GraftCatalogTable(
   /** Bucketed / identity-partitioned tables advertise their layout
     * (bucket count 0 encodes the identity split spec). */
   override def partitioning(): Array[Transform] =
-    spec.layout.map {
+    table.spec.layout.map {
       case (0, c) => expressions.Expressions.identity(c)
       case (n, c) => expressions.Expressions.bucket(n, c)
     }.toArray
 
-  /** Stored CHECK constraints, reported ENFORCED — Spark's
+  /** The head record's CHECK constraints, reported ENFORCED — Spark's
     * ResolveTableConstraints wraps every write to this table in a
     * CheckInvariant over these predicates, so a violating INSERT /
     * UPDATE / MERGE fails before any part commits. VALID because
     * ALTER TABLE ADD CONSTRAINT validated the existing rows before
-    * the constraint was persisted. */
+    * the constraint was committed. */
   override def constraints():
       Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    ManifestSink.readConstraints(ManifestSink.driverConf(), path)
-      .map { case (n, sql) =>
-        org.apache.spark.sql.connector.catalog.constraints.Constraint
-          .check(n).predicateSql(sql).enforced(true)
-          .validationStatus(org.apache.spark.sql.connector.catalog
-            .constraints.Constraint.ValidationStatus.VALID)
-          .rely(true).build()
-          : org.apache.spark.sql.connector.catalog.constraints.Constraint
-      }.toArray
+    table.constraints.map { case (n, sql) =>
+      org.apache.spark.sql.connector.catalog.constraints.Constraint
+        .check(n).predicateSql(sql).enforced(true)
+        .validationStatus(org.apache.spark.sql.connector.catalog
+          .constraints.Constraint.ValidationStatus.VALID)
+        .rely(true).build()
+        : org.apache.spark.sql.connector.catalog.constraints.Constraint
+    }.toArray
 
   /** `df.writeTo(...).option("branch", "audit").append()` stages the
     * commit on the branch — invisible to main readers until
@@ -1463,16 +1455,16 @@ private[sources] class GraftCatalogTable(
     * bucket — and (b) routes rows through the layout writer, which
     * records the bucket ordinals the SPJ-reporting scan needs. Layout
     * policy lives with the table; writers stay ignorant. */
-  /** Identity-column spec parsed once from the props sidecar —
+  /** Identity-column spec parsed once from the record's props —
     * the write side generates values (see [[ManifestIdentity]]). */
   private val identitySpec: Option[ManifestIdentity.Spec] =
-    ManifestIdentity.parse(tableProps)
+    ManifestIdentity.parse(table.props)
 
-  /** Generated-column expression SQL, parsed once from the props
-    * sidecar; bound per write against the write schema (see
+  /** Generated-column expression SQL, parsed once from the record's
+    * props; bound per write against the write schema (see
     * [[ManifestGenerated]]). */
   private val generatedSpecs: Seq[(String, String)] =
-    ManifestGenerated.parse(tableProps)
+    ManifestGenerated.parse(table.props)
 
   /** INSERT INTO / OVERWRITE / REPLACE WHERE ([[ManifestWriteBuilder]])
     * and streaming appends, planned from the table's layout. */
@@ -1515,101 +1507,83 @@ private[sources] class GraftCatalogTable(
             "marker to carry the issued range); generate ids in " +
             "foreachBatch or write to a staging table")
         new ManifestStreamingWrite(path, info.schema(), info.queryId(),
-          sconf, spec)
+          sconf, table.spec)
       }
       // the catalog resolves bucket()/days()/hours(), so every
       // layout plans its one-exchange distribution here
-      ManifestSink.writePlan(spec, resolvesTransforms = true)(
+      ManifestSink.writePlan(table.spec, resolvesTransforms = true)(
         () => new ManifestBatchWrite(path, info.schema(), doTruncate,
-          sconf, branch, spec, replaceFilters = replaceFilters,
+          sconf, branch, table.spec, replaceFilters = replaceFilters,
           identity = identitySpec, generated = genFills),
         () => streaming())
     })
 }
 
-/** Identity-split tables with Spark's PARTITION MANAGEMENT surface:
-  * `SHOW PARTITIONS t [PARTITION (c = v)]` lists the distinct split
-  * values straight off the head manifest (every split part is
-  * PROVABLY single-valued — min == max, zero nulls — so the listing
-  * is exact metadata, no data file opened), and `ALTER TABLE t DROP
-  * PARTITION (c = v)` is a METADATA-ONLY delete: one snapshot that
-  * stops listing the value's parts (time travel intact, files stay
-  * until vacuum — the Hive DROP PARTITION idiom on the snapshot
-  * log). Mixed-generation safety: if any PRE-LAYOUT part (not
-  * single-valued) may still hold the value, the drop REFUSES and
-  * names the fix (compact migrates the layout) rather than
-  * half-applying. Partition CREATION/metadata mutation are derived
-  * from data by design — INSERT rows instead. */
-private[sources] class GraftSplitCatalogTable(
+/** Split tables with Spark's PARTITION MANAGEMENT surface, one class
+  * for both split layouts; they differ only in three parameters:
+  *
+  *  - `valueOf`, the partition value a part PROVABLY holds: an
+  *    identity split's single value (min == max, zero nulls,
+  *    [[MetaTables.singleValue]]), or a `days`/`hours` split's DERIVED
+  *    ordinal (the column's micros stats fall inside one UTC
+  *    day/hour, [[TimeSplit.partOrdinal]]) — the user never maintains
+  *    a date column, so a query on `ts` itself prunes;
+  *  - `codec`, the partition column and its row form: the split
+  *    column itself, `<col>_day DATE` (epoch day IS the DATE's
+  *    internal value) or `<col>_hour BIGINT`;
+  *  - `mayHold`, the straddler veto: could a part whose value is not
+  *    provable (a pre-layout generation) still hold the value?
+  *
+  * `SHOW PARTITIONS t [PARTITION (c = v)]` lists the distinct
+  * provable values straight off the head manifest (no data file
+  * opened), and `ALTER TABLE t DROP PARTITION (c = v)` is a
+  * METADATA-ONLY delete: one snapshot that stops listing the value's
+  * parts (time travel intact, files stay until vacuum — the Hive DROP
+  * PARTITION idiom on the snapshot log). While a straddler may still
+  * hold the value the drop REFUSES and names the fix (compact
+  * migrates the layout) rather than half-applying. Partitions are
+  * derived from data by design — INSERT rows instead of creating
+  * them. */
+private[sources] class GraftPartitionedCatalogTable[V: Ordering](
     ident: Identifier, path: String, tableSchema: StructType,
-    spec: TableSpec, tableProps: Map[String, String])
-    extends GraftCatalogTable(ident, path, tableSchema, spec, tableProps)
+    table: TableRecord, valueOf: PartMeta => Option[V],
+    codec: GraftPartitionedCatalogTable.Codec[V],
+    mayHold: (PartMeta, V) => Boolean)
+    extends GraftCatalogTable(ident, path, tableSchema, table)
     with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
 
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  private val splitCol = spec.layout.get._2
-
   private def conf = ManifestSink.driverConf()
-  private def field: StructField =
-    tableSchema.fields.find(_.name.equalsIgnoreCase(splitCol)).getOrElse(
-      throw new IllegalStateException(
-        s"split column '$splitCol' missing from ${tableSchema.sql}"))
+  private def partCol: String = codec.field.name
 
-  override def partitionSchema(): StructType =
-    StructType(Seq(StructField(field.name, field.dataType, field.nullable)))
-
-  private def toRow(raw: String): InternalRow = field.dataType match {
-    case LongType => new GenericInternalRow(Array[Any](raw.toLong))
-    case _ => new GenericInternalRow(Array[Any](UTF8String.fromString(raw)))
-  }
-
-  private def rawOf(id: InternalRow): String = field.dataType match {
-    case LongType => id.getLong(0).toString
-    case _ => id.getUTF8String(0).toString
-  }
+  override def partitionSchema(): StructType = StructType(Seq(codec.field))
 
   override def listPartitionIdentifiers(names: Array[String],
       id: InternalRow): Array[InternalRow] = {
     val vals = ManifestSink.readManifestMeta(conf, path, None)
-      .flatMap(MetaTables.singleValue(_, field.name))
-      .distinct.sorted
+      .flatMap(valueOf(_)).distinct.sorted
     val filtered =
       if (names.isEmpty) vals
       else {
-        require(names.length == 1 && names(0).equalsIgnoreCase(field.name),
+        require(names.length == 1 && names(0).equalsIgnoreCase(partCol),
           s"unknown partition column(s) ${names.mkString(", ")} — the " +
-            s"split layout partitions by '${field.name}' only")
-        val want = rawOf(id)
+            s"layout partitions by '$partCol' only")
+        val want = codec.fromRow(id)
         vals.filter(_ == want)
       }
-    filtered.map(toRow).toArray
+    filtered.map(codec.toRow).toArray
   }
 
-  /** Could a part whose single-valuedness is NOT provable still hold
-    * the value? (pre-layout generation parts; stats get a veto) */
-  private def mayHold(m: PartMeta, want: String): Boolean =
-    m.cstats.get(field.name) match {
-      case Some(st) if st.kind == 'l' => st.mayContain(want.toLong)
-      case Some(st) => st.mayContainStr(want)
-      case None => true // untracked: cannot exonerate
-    }
-
   override def dropPartition(id: InternalRow): Boolean = {
-    val want = rawOf(id)
+    val want = codec.fromRow(id)
     var dropped = false
     ManifestSink.publishRebase(conf, path, tableSchema,
       rebase = head => {
-        val straddlers = head.filter(m =>
-          MetaTables.singleValue(m, field.name).isEmpty &&
-            mayHold(m, want))
+        val straddlers = head.filter(m => valueOf(m).isEmpty && mayHold(m, want))
         require(straddlers.isEmpty,
-          s"DROP PARTITION (${field.name} = $want): ${straddlers.size} " +
-            "pre-layout part(s) may still hold the value — CALL " +
+          s"DROP PARTITION ($partCol = $want): ${straddlers.size} " +
+            "pre-layout part(s) may still hold it — CALL " +
             "system.compact to migrate the layout first")
-        val (hit, keep) = head.partition(m =>
-          MetaTables.singleValue(m, field.name).contains(want))
+        val (hit, keep) = head.partition(m => valueOf(m).contains(want))
         dropped = dropped || hit.nonEmpty
         keep
       },
@@ -1631,101 +1605,57 @@ private[sources] class GraftSplitCatalogTable(
     java.util.Collections.emptyMap[String, String]()
 }
 
-/** HIDDEN TIME-TRANSFORM tables (`PARTITIONED BY (days(ts))` /
-  * `(hours(ts))`, [[TimeSplit]]) with the partition-management
-  * surface in the DERIVED domain: `SHOW PARTITIONS` lists the
-  * distinct day (DATE) / hour (epoch-hour BIGINT) ordinals whose
-  * parts are PROVABLY single-ordinal (the column's micros stats fall
-  * inside one ordinal, zero nulls — exact metadata, no data file
-  * opened), and `ALTER TABLE t DROP PARTITION (<col>_day = DATE
-  * '...')` is the same metadata-only snapshot delete the identity
-  * split serves. Mixed-generation safety: a pre-layout part that may
-  * still intersect the ordinal (straddling or stat-less) REFUSES the
-  * drop and names the fix (compact migrates the layout). The user
-  * never maintains a date column — the partition value is DERIVED
-  * from the timestamp, so a query on `ts` itself prunes (hidden
-  * partitioning, the failure mode Hive's string date columns had). */
-private[sources] class GraftTimeSplitCatalogTable(
-    ident: Identifier, path: String, tableSchema: StructType,
-    spec: TableSpec, tableProps: Map[String, String])
-    extends GraftCatalogTable(ident, path, tableSchema, spec, tableProps)
-    with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
-
+private[sources] object GraftPartitionedCatalogTable {
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  import org.apache.spark.unsafe.types.UTF8String
 
-  private val splitCol = spec.layout.get._2
-  private val transform = spec.transform.get
+  /** The partition column and the row form of its values. */
+  final case class Codec[V](field: StructField, toRow: V => InternalRow,
+      fromRow: InternalRow => V)
 
-  private def conf = ManifestSink.driverConf()
-  private val isDays = transform == TimeSplit.Days
-  private def partCol: String =
-    if (isDays) s"${splitCol}_day" else s"${splitCol}_hour"
+  private def row(v: Any): InternalRow = new GenericInternalRow(Array[Any](v))
 
-  /** days → `<col>_day DATE` (epoch day IS the DATE's internal
-    * value), hours → `<col>_hour BIGINT` (UTC epoch-hour ordinal). */
-  override def partitionSchema(): StructType =
-    StructType(Seq(StructField(partCol,
-      if (isDays) org.apache.spark.sql.types.DateType else LongType,
-      nullable = false)))
-
-  private def wantOf(id: InternalRow): Long =
-    if (isDays) id.getInt(0).toLong else id.getLong(0)
-
-  private def toRow(d: Long): InternalRow =
-    if (isDays) new GenericInternalRow(Array[Any](d.toInt))
-    else new GenericInternalRow(Array[Any](d))
-
-  private def partOrd(m: PartMeta): Option[Long] =
-    TimeSplit.partOrdinal(m.cstats.get(splitCol), m.rows, transform)
-
-  override def listPartitionIdentifiers(names: Array[String],
-      id: InternalRow): Array[InternalRow] = {
-    val vals = ManifestSink.readManifestMeta(conf, path, None)
-      .filter(_.rows > 0).flatMap(partOrd(_)).distinct.sorted
-    val filtered =
-      if (names.isEmpty) vals
-      else {
-        require(names.length == 1 && names(0).equalsIgnoreCase(partCol),
-          s"unknown partition column(s) ${names.mkString(", ")} — the " +
-            s"$transform layout partitions by '$partCol' only")
-        val want = wantOf(id)
-        vals.filter(_ == want)
+  /** The partition-management face of a split layout, None for every
+    * other layout. */
+  def of(ident: Identifier, path: String, schema: StructType,
+      table: TableRecord): Option[GraftCatalogTable] =
+    table.spec.layout.collect { case (0, splitCol) =>
+      val field = schema.fields.find(_.name.equalsIgnoreCase(splitCol))
+        .getOrElse(throw new IllegalStateException(
+          s"split column '$splitCol' missing from ${schema.sql}"))
+      table.spec.transform match {
+        case Some(tf) =>
+          val isDays = tf == TimeSplit.Days
+          val codec = Codec[Long](
+            if (isDays) StructField(s"${field.name}_day",
+              org.apache.spark.sql.types.DateType, nullable = false)
+            else StructField(s"${field.name}_hour", LongType, nullable = false),
+            d => row(if (isDays) d.toInt else d),
+            id => if (isDays) id.getInt(0).toLong else id.getLong(0))
+          new GraftPartitionedCatalogTable[Long](ident, path, schema, table,
+            m => if (m.rows > 0)
+              TimeSplit.partOrdinal(m.cstats.get(field.name), m.rows, tf)
+            else None,
+            codec,
+            (m, want) => m.rows > 0 && TimeSplit.mayHoldOrdinal(
+              m.cstats.get(field.name), m.rows, want, tf))
+        case None =>
+          val isLong = field.dataType == LongType
+          val codec = Codec[String](
+            StructField(field.name, field.dataType, field.nullable),
+            raw => row(if (isLong) raw.toLong else UTF8String.fromString(raw)),
+            id => if (isLong) id.getLong(0).toString
+              else id.getUTF8String(0).toString)
+          new GraftPartitionedCatalogTable[String](ident, path, schema, table,
+            MetaTables.singleValue(_, field.name), codec,
+            // stats get a veto; an untracked column cannot exonerate
+            (m, want) => m.cstats.get(field.name) match {
+              case Some(st) if st.kind == 'l' => st.mayContain(want.toLong)
+              case Some(st) => st.mayContainStr(want)
+              case None => true
+            })
       }
-    filtered.map(toRow).toArray
-  }
-
-  override def dropPartition(id: InternalRow): Boolean = {
-    val want = wantOf(id)
-    var dropped = false
-    ManifestSink.publishRebase(conf, path, tableSchema,
-      rebase = head => {
-        val straddlers = head.filter(m => m.rows > 0 &&
-          partOrd(m).isEmpty && TimeSplit.mayHoldOrdinal(
-            m.cstats.get(splitCol), m.rows, want, transform))
-        require(straddlers.isEmpty,
-          s"DROP PARTITION ($partCol = $want): ${straddlers.size} " +
-            "pre-layout part(s) may still hold the ordinal — CALL " +
-            "system.compact to migrate the layout first")
-        val (hit, keep) = head.partition(m => partOrd(m).contains(want))
-        dropped = dropped || hit.nonEmpty
-        keep
-      },
-      strictBase = None, op = "drop-partition")
-    dropped
-  }
-
-  override def createPartition(id: InternalRow,
-      props: util.Map[String, String]): Unit =
-    throw new UnsupportedOperationException(
-      "time-split partitions are derived from data — INSERT rows " +
-        "carrying timestamps in the new ordinal instead")
-  override def replacePartitionMetadata(id: InternalRow,
-      props: util.Map[String, String]): Unit =
-    throw new UnsupportedOperationException(
-      "time-split partitions carry no mutable metadata")
-  override def loadPartitionMetadata(id: InternalRow)
-      : util.Map[String, String] =
-    java.util.Collections.emptyMap[String, String]()
+    }
 }
 
 /** A METADATA TABLE (`SELECT * FROM cat.ns.t.<suffix>`, the Iceberg
@@ -1807,13 +1737,12 @@ private[sources] object MetaTables {
       "has_dv BOOLEAN, dv_count BIGINT, bytes BIGINT, bucket INT, " +
       "col_stats STRING, key_sum BIGINT, split_value STRING, " +
       "eq_clauses INT, is_sorted BOOLEAN") { (conf, path) =>
-      val splitCol = ManifestSink.readTableSpec(conf, path).layout
-        .collect { case (0, c) => c }
-      val (parts, snap) = ManifestSink.readSnapshot(conf, path)
-      val key = keyOf(snap.map(_._1))
+      val (parts, head) = ManifestSink.readSnapshot(conf, path)
+      val splitCol = head.table.spec.layout.collect { case (0, c) => c }
+      val key = keyOf(head.schema)
       // the key and first string have their own view columns
-      val ownCols = snap.fold(Set.empty[String])(s =>
-        ManifestSink.keyAndFirstStr(s._1))
+      val ownCols = head.schema.fold(Set.empty[String])(
+        ManifestSink.keyAndFirstStr)
       parts.zipWithIndex.map { case (m, i) =>
         val k = key.flatMap(m.cstats.get)
         Seq(i, new Path(m.path).getName, m.rows,
@@ -1841,10 +1770,9 @@ private[sources] object MetaTables {
     "partitions" -> table("partition STRING, spec STRING, parts INT, " +
       "n_rows BIGINT, visible_rows BIGINT, bytes BIGINT, key_min BIGINT, " +
       "key_max BIGINT, dv_parts INT, eq_parts INT") { (conf, path) =>
-      val splitCol = ManifestSink.readTableSpec(conf, path).layout
-        .collect { case (0, c) => c }
-      val (metas, snap) = ManifestSink.readSnapshot(conf, path)
-      val key = keyOf(snap.map(_._1))
+      val (metas, head) = ManifestSink.readSnapshot(conf, path)
+      val splitCol = head.table.spec.layout.collect { case (0, c) => c }
+      val key = keyOf(head.schema)
       def keyStat(m: PartMeta) = key.flatMap(m.cstats.get)
       def ident(m: PartMeta): (String, String) =
         if (m.nbuckets > 0)

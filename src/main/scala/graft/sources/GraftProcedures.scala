@@ -643,9 +643,12 @@ private[sources] final class RefreshMvProcedure(warehouse: String)
   * applies symmetrically and is the user's retention contract:
   * expiring + vacuuming the SOURCE can reclaim files the clone still
   * references — retain the cloned snapshot (tag it) for as long as
-  * clones of it live. Data-snapshot only: table-level layout policy
-  * (bucket spec), CHECK constraints, and tags are NOT copied — they
-  * are declarations about the source's future, not its data.
+  * clones of it live. The clone copies the snapshot's table record
+  * with its schema and column mapping — layout, properties (identity
+  * and generated columns included) and CHECK constraints, Delta's
+  * shallow-clone semantics — so it writes like the source did at
+  * that version. Tags are NOT copied: they name the source's
+  * history, not the clone's.
   * The dev/test fork workflow this buys at scale: clone prod, run
   * the migration against the clone, diff, drop — minutes, not a
   * 100 TB copy. */
@@ -686,12 +689,11 @@ private[sources] final class CloneProcedure(warehouse: String)
           s"clone: source has no snapshot $n (history: $versions)")
         n
     }
-    val parts = ManifestSink.readManifestMeta(conf, srcDir, Some(v))
-    val (schema, cm) = ManifestSink.readSchemaAndColMap(conf, srcDir, Some(v))
-      .getOrElse(throw new IllegalStateException(
-        s"clone: unreadable source schema at $srcDir"))
+    val (parts, head) = ManifestSink.readSnapshot(conf, srcDir, Some(v))
+    val (schema, cm) = head.schemaCm.getOrElse(throw new IllegalStateException(
+      s"clone: unreadable source schema at $srcDir"))
     ManifestSink.publishSnapshot(conf, targetDir, schema, parts,
-      colmap = Some(cm), op = "clone")
+      Some((cm, head.table)), op = "clone")
     result(v, parts.size, parts.map(_.visibleRows).sum)
   }
 }
@@ -748,15 +750,12 @@ private[sources] final class SetLayoutProcedure(warehouse: String)
   private val BucketRe = """(?i)bucket\s*\(\s*(\d+)\s*,\s*([^)\s]+)\s*\)""".r
   private val TimeRe = """(?i)(days|hours)\s*\(\s*([^)\s]+)\s*\)""".r
 
-  private def render(conf: org.apache.hadoop.conf.Configuration,
-      dir: String): String = {
-    val spec = ManifestSink.readTableSpec(conf, dir)
+  private def render(spec: TableSpec): String =
     spec.layout match {
       case Some((0, c)) => spec.transform.fold(s"identity($c)")(tf => s"$tf($c)")
       case Some((n, c)) => s"bucket($n,$c)"
       case None => spec.orderBy.map(c => s"ordered($c)").getOrElse("none")
     }
-  }
 
   override def call(input: InternalRow): JIterator[Scan] = {
     val conf = ManifestSink.driverConf()
@@ -765,14 +764,16 @@ private[sources] final class SetLayoutProcedure(warehouse: String)
     val orderBy =
       if (input.isNullAt(2)) None
       else Some(input.getUTF8String(2).toString.trim).filter(_.nonEmpty)
-    val schema = ManifestSink.readSchema(conf, dir).get
-    val old = render(conf, dir)
-    // metadata-only like every layout change: existing parts keep
-    // their generation (scans stay correct; DROP PARTITION refuses
-    // while straddlers exist), the next compact migrates them, and
-    // every later INSERT routes by the new spec. order_by only
-    // composes with spec => 'none' (every other layout already
-    // places rows), which the layout check refuses.
+    val base = ManifestSink.listVersions(conf, dir).lastOption.getOrElse(0)
+    val head = ManifestSink.readHeader(conf, dir, Some(base))
+    val (schema, cm) = head.schemaCm.get
+    // metadata-only like every layout change — one commit of the new
+    // record, pinned to the head it read: existing parts keep their
+    // generation (scans stay correct; DROP PARTITION refuses while
+    // straddlers exist), the next compact migrates them, and every
+    // later INSERT routes by the new spec. order_by only composes
+    // with spec => 'none' (every other layout already places rows),
+    // which the layout check refuses.
     val layout = spec match {
       case TimeRe(kind, col) => TableSpec(Some((0, col)),
         transform = Some(kind.toLowerCase(java.util.Locale.ROOT)))
@@ -781,9 +782,12 @@ private[sources] final class SetLayoutProcedure(warehouse: String)
       case col => TableSpec(Some((0, col)))
     }
     val checked = TableLayout.check(layout.copy(orderBy = orderBy), schema)
-    if (checked == TableSpec()) ManifestSink.clearTableSpec(conf, dir)
-    else ManifestSink.writeTableSpec(conf, dir, checked)
-    result(old, render(conf, dir))
+    if (checked != head.table.spec)
+      ManifestSink.publishRebase(conf, dir, schema, parts => parts,
+        strictBase = Some(base),
+        restate = Some((cm, head.table.copy(spec = checked))),
+        op = "set-layout")
+    result(render(head.table.spec), render(checked))
   }
 }
 

@@ -28,16 +28,17 @@ import org.apache.spark.util.SerializableConfiguration
   * until a manifest snapshot lists them, so
   *
   *  - CTAS writes every part first and publishes ONE snapshot
-  *    (schema + parts, `op=ctas`) at the end — a failed query leaves
-  *    no table (no manifest ⇒ not a table; abort removes the debris);
+  *    (schema, table record + parts, `op=ctas`) at the end — a failed
+  *    query leaves no table (no manifest ⇒ not a table; abort removes
+  *    the debris);
   *  - RTAS writes its parts next to the LIVE table's (unreferenced),
   *    then publishes ONE truncate-style snapshot that lists only the
-  *    new parts under the new schema with a FRESH column mapping —
-  *    readers see the old table until that commit lands, a failed
-  *    query leaves the old head untouched, and every pre-replace
-  *    version stays time-travelable (`VERSION AS OF`).
+  *    new parts under the new schema and record with a FRESH column
+  *    mapping — readers see the old table until that commit lands, a
+  *    failed query leaves the old head untouched, and every
+  *    pre-replace version stays time-travelable (`VERSION AS OF`).
   *
-  * The layout (`PARTITIONED BY (…)` / `CLUSTER BY (c)`, one
+  * The layout (`PARTITIONED BY (…)` / `CLUSTER BY (c)`, the record's
   * [[TableSpec]]) plans the staged write through the same
   * [[ManifestSink.writePlan]] and routed writer a live table uses, so
   * a CTAS target is born with its layout — no create-then-insert
@@ -45,11 +46,12 @@ import org.apache.spark.util.SerializableConfiguration
   * the same write ([[GraftStagedTable.stageRewrite]]). */
 private[sources] class GraftStagedTable(
     ident: Identifier, path: String, tableSchema: StructType,
-    spec: TableSpec, replace: Boolean,
-    tableProps: Map[String, String] = Map.empty,
+    table: TableRecord, replace: Boolean,
     resolvesTransforms: Boolean = true,
     rewrite: Boolean = false)
     extends StagedTable with SupportsWrite {
+
+  private def spec = table.spec
 
   private val conf = ManifestSink.driverConf()
   private val sconf = new SerializableConfiguration(conf)
@@ -74,9 +76,9 @@ private[sources] class GraftStagedTable(
   /** Same task-side writers as a live table ([[ManifestWriterFactory]]
     * — stats, blooms, layout routing); the DRIVER-side commit only
     * stashes the part list. Nothing is published until
-    * [[commitStagedChanges]]. A CTAS/RTAS writes under the fresh
-    * identity mapping it publishes; a staged rewrite under the table's
-    * own. */
+    * [[commitStagedChanges]]. A CTAS/RTAS writes onto the table it
+    * publishes (fresh identity mapping, its own record); a staged
+    * rewrite onto the table's head. */
   private class StagingWrite(writeSchema: StructType) extends BatchWrite {
     private val token = java.util.UUID.randomUUID().toString.take(8)
 
@@ -85,8 +87,8 @@ private[sources] class GraftStagedTable(
       val dir = new Path(path)
       dir.getFileSystem(sconf.value).mkdirs(dir)
       new ManifestWriterFactory(path, writeSchema, token, sconf, spec,
-        if (rewrite) ManifestSink.writeColMap(conf, path, writeSchema)
-        else ColMap.identity(writeSchema.fields.length))
+        if (rewrite) ManifestSink.readHeader(conf, path)
+        else ManifestHeader(table = table))
     }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -113,32 +115,24 @@ private[sources] class GraftStagedTable(
       val g = StructField(f.name, f.dataType, f.nullable)
       f.getComment().fold(g)(g.withComment)
     })
-    val cm =
-      if (defaults.isEmpty) None
-      else Some(ColMap.identity(clean.fields.length).copy(defaults = defaults))
-    // the replaced table's layout does not survive into the new one:
-    // an unpartitioned RTAS over a bucketed table must not keep
-    // routing inserts through the dead spec
-    if (spec != TableSpec()) ManifestSink.writeTableSpec(conf, path, spec)
-    else if (replace) ManifestSink.clearTableSpec(conf, path)
-    // TBLPROPERTIES travel with the definition: CTAS persists them,
-    // RTAS REPLACES them (stale comments must not describe new data)
-    if (replace || tableProps.nonEmpty)
-      ManifestSink.writeTableProps(conf, path, tableProps)
+    // a FRESH identity mapping (a replaced table's field ids described
+    // the replaced schema) and the new definition's record: the
+    // replaced table's layout, properties and constraints do not
+    // survive into the new one — an unpartitioned RTAS over a bucketed
+    // table must not keep routing inserts through the dead spec, nor
+    // stale comments describe new data
+    val restate = Some((ColMap.identity(clean.fields.length)
+      .copy(defaults = defaults), table))
     if (replace)
       // one truncate-style snapshot: new schema, only the staged
-      // parts, FRESH identity mapping (old field ids described the
-      // replaced schema) — history keeps every pre-replace version
-      ManifestSink.publishRebase(conf, path, clean,
-        rebase = _ => staged, strictBase = None,
-        colmapOverride = Some(cm.getOrElse(
-          ColMap.identity(clean.fields.length))),
-        checkWritten = false, op = "replace")
+      // parts — history keeps every pre-replace version
+      ManifestSink.publishSnapshot(conf, path, clean, staged, restate,
+        op = "replace")
     else {
       if (ManifestSink.readSchema(conf, path).isDefined)
         throw new TableAlreadyExistsException(ident)
-      ManifestSink.publishSnapshot(conf, path, clean, staged,
-        colmap = cm, op = "ctas")
+      ManifestSink.publishSnapshot(conf, path, clean, staged, restate,
+        op = "ctas")
     }
   }
 
@@ -166,7 +160,8 @@ private[sources] object GraftStagedTable {
     * `f`, and stage the result straight into `dir` through the CTAS
     * staged write under `spec`. There is no function catalog behind
     * the rewrite, so bucket and days/hours layouts declare no
-    * distribution: the caller pre-clusters. Returns the staged parts,
+    * distribution: the caller pre-clusters. The parts are written
+    * onto the table's head (its mapping and bloom settings). Returns the staged parts,
     * UNPUBLISHED — invisible until the caller's own
     * `publishRebase` lists them. After a crash, vacuum reclaims the
     * orphaned parts and `expire_snapshots` the stale read snapshot
@@ -180,12 +175,12 @@ private[sources] object GraftStagedTable {
     val fs = read.getFileSystem(conf)
     try {
       ManifestSink.publishSnapshot(conf, read.toString, schema, parts,
-        colmap = ManifestSink.alignedColMap(conf, dir, schema))
+        ManifestSink.alignedColMap(conf, dir, schema).map(_ -> TableRecord()))
       val df = f(spark.read.format("graft.sources.ManifestSource")
         .option("path", read.toString).load())
       val table = new GraftStagedTable(Identifier.of(Array.empty, dir), dir,
-        df.schema, spec, replace = true, resolvesTransforms = false,
-        rewrite = true)
+        df.schema, TableRecord(spec), replace = true,
+        resolvesTransforms = false, rewrite = true)
       GraftDatasets.ofRows(spark, AppendData.byPosition(
         DataSourceV2Relation.create(table, None, None),
         df.queryExecution.logical))

@@ -117,9 +117,9 @@ private[sources] class ManifestDeltaBatchWrite(
     dir.getFileSystem(conf.value).mkdirs(dir)
     // MERGE INSERT cannot generate identity/generated values on this
     // path; a NULL in a computed slot refuses rather than landing
-    new ManifestDeltaWriterFactory(path, schema, token, conf,
-      ManifestSink.writeColMap(conf.value, path, schema, op.branch),
-      ComputedColumns.guardSlots(conf.value, path, schema).toArray)
+    val head = ManifestSink.readHeader(conf.value, path, None, op.branch)
+    new ManifestDeltaWriterFactory(path, schema, token, conf, head,
+      ComputedColumns.guardSlots(head.table.props, schema).toArray)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -182,14 +182,16 @@ private[sources] class ManifestDeltaBatchWrite(
 
 private[sources] class ManifestDeltaWriterFactory(
     path: String, schema: StructType, token: String,
-    conf: SerializableConfiguration, cm: ColMap,
+    conf: SerializableConfiguration, head: ManifestHeader,
     guardSlots: Array[Int] = Array.empty) extends DeltaWriterFactory {
-  // constructed on the driver: prepare the part format and resolve
-  // declared secondary-bloom columns once, so MOR-appended image
-  // parts are written and indexed exactly like batch appends
-  private val format = PartFormat(conf.value, schema, cm)
-  private val bloomCols: Seq[String] = ManifestSink.bloomCols(conf.value, path)
-  private val bloomBitsN: Int = ManifestSink.bloomBits(conf.value, path)
+  // constructed on the driver from the head it writes onto: prepare
+  // the part format and resolve declared secondary-bloom columns
+  // once, so MOR-appended image parts are written and indexed exactly
+  // like batch appends
+  private val format = PartFormat(conf.value, schema,
+    ManifestSink.writeColMap(head, schema))
+  private val bloomCols: Seq[String] = ManifestSink.bloomCols(head.table.props)
+  private val bloomBitsN: Int = ManifestSink.bloomBits(head.table.props)
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new ManifestDeltaWriter(path, schema, token, partitionId, taskId, conf,
       format, guardSlots, bloomCols, bloomBitsN)

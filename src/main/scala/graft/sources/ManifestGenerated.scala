@@ -116,10 +116,8 @@ private[sources] object ManifestGenerated {
   * columns (the factory is not wrapped at all). */
 private[sources] object ComputedColumns {
   /** Write-schema slots of identity + generated columns, resolved
-    * from the table's props sidecar; empty when none apply. */
-  def guardSlots(conf: org.apache.hadoop.conf.Configuration,
-      dir: String, schema: StructType): Seq[Int] = {
-    val props = ManifestSink.readTableProps(conf, dir)
+    * from the table record's `props`; empty when none apply. */
+  def guardSlots(props: Map[String, String], schema: StructType): Seq[Int] = {
     val names = ManifestIdentity.parse(props).map(_.col).toSeq ++
       ManifestGenerated.parse(props).map(_._1)
     names.map(n => schema.fields.indexWhere(f =>

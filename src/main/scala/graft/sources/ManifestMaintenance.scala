@@ -69,10 +69,9 @@ object ManifestMaintenance {
     val conf = ManifestSink.driverConf()
     val baseVersion = ManifestSink.listVersions(conf, dir)
       .lastOption.getOrElse(0)
-    val schema = ManifestSink.readSchema(conf, dir, Some(baseVersion))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no manifest table at $dir"))
-    val parts = ManifestSink.readManifestMeta(conf, dir, Some(baseVersion))
+    val (parts, head) = ManifestSink.readSnapshot(conf, dir, Some(baseVersion))
+    val (schema, cm) = head.schemaCm.getOrElse(
+      throw new IllegalArgumentException(s"no manifest table at $dir"))
     if (parts.isEmpty) return (0, baseVersion)
     val (longCols, strCols) = ManifestSink.statCols(schema)
     val keepEmpty = ManifestSink.keyAndFirstStr(schema)
@@ -185,11 +184,11 @@ object ManifestMaintenance {
         // STRING blooms honor the table's `graft.bloom_bits` (shrinkFor
         // caps at the ALLOCATED size, so allocating the default here
         // would silently shrink a declared 2^18 filter on rebuild)
-        val bloomBitsN = ManifestSink.bloomBits(conf, dir)
+        val bloomBitsN = ManifestSink.bloomBits(head.table.props)
         val keyBloom = schema.fields.find(_.dataType == LongType).map(f =>
           f.name -> rebuild(visible(f.name).as[(String, Long)],
             PartBloom.MaxBits))
-        val strBlooms = ManifestSink.bloomCols(conf, dir).flatMap(c =>
+        val strBlooms = ManifestSink.bloomCols(head.table.props).flatMap(c =>
           schema.fields.find(f => f.name.equalsIgnoreCase(c) &&
             f.dataType == StringType)).map(_.name).distinct.map(c =>
           c -> rebuild(visible(c).as[(String, String)]
@@ -202,11 +201,12 @@ object ManifestMaintenance {
         }
       }
     // TABLE-LEVEL NDV per tracked column (one approx_count_distinct
-    // pass over the same visible rows) into the props sidecar: the
-    // CBO's join-reorder food — distinct counts size join outputs
+    // pass over the same visible rows) into the table record's props:
+    // the CBO's join-reorder food — distinct counts size join outputs
     // (JoinEstimation), which rowCount alone cannot. O(1) to read at
     // plan time via ManifestSource.columnStats; refreshed here like
     // every engine's ANALYZE-maintained catalog stats.
+    var props = head.table.props
     locally {
       import org.apache.spark.sql.functions.approx_count_distinct
       val ndvRow = df.select(tracked.map { i =>
@@ -214,9 +214,7 @@ object ManifestMaintenance {
       }: _*).head()
       val pairs = tracked.zipWithIndex.map { case (i, j) =>
         schema.fields(i).name -> ndvRow.getLong(j) }
-      ManifestSink.writeTableProps(conf, dir,
-        ManifestSink.readTableProps(conf, dir) +
-          (ManifestSink.NdvProp -> ManifestSink.encodeNdv(pairs)))
+      props += ManifestSink.NdvProp -> ManifestSink.encodeNdv(pairs)
     }
     // OPT-IN equi-depth histograms (`histograms => true`) per tracked
     // LONG column: the CBO's range-selectivity food — NDV + [min,max]
@@ -282,16 +280,18 @@ object ManifestMaintenance {
             }
           }
           if (hists.nonEmpty)
-            ManifestSink.writeTableProps(conf, dir,
-              ManifestSink.readTableProps(conf, dir) +
-                (ManifestSink.HistProp -> ManifestSink.encodeHist(hists)))
+            props += ManifestSink.HistProp -> ManifestSink.encodeHist(hists)
         }
       }
     }
+    // the stats commit carries the record with the new NDV/histogram
+    // keys; a concurrent schema or record change conflicts (see
+    // publishRebase)
     val v = ManifestSink.publishRebase(conf, dir, schema,
-      head => head.map(p => withBlooms.getOrElse(p.path, p)),
+      ps => ps.map(p => withBlooms.getOrElse(p.path, p)),
       strictBase = Some(baseVersion),
       footprint = Some(parts.map(_.path).toSet),
+      restate = Some((cm, head.table.copy(props = props))),
       op = "analyze")
     (withBlooms.size, v)
   }
@@ -358,14 +358,14 @@ object ManifestMaintenance {
     val conf = ManifestSink.driverConf()
     require(zorder.isEmpty || clusterBy.forall(_.isEmpty),
       "compact: zorder and cluster_by are mutually exclusive")
-    val spec = ManifestSink.readTableSpec(conf, dir)
+    val baseVersion = ManifestSink.listVersions(conf, dir)
+      .lastOption.getOrElse(0)
+    val (allParts, head) = ManifestSink.readSnapshot(conf, dir, Some(baseVersion))
+    val spec = head.table.spec
     require(zorder.isEmpty || spec.layout.isEmpty,
       "compact: OPTIMIZE ZORDER requires an unpartitioned table layout " +
         "(a bucket/identity spec owns the row placement — CALL " +
         "set_layout(spec => 'none') first)")
-    val baseVersion = ManifestSink.listVersions(conf, dir)
-      .lastOption.getOrElse(0)
-    val allParts = ManifestSink.readManifestMeta(conf, dir, Some(baseVersion))
     // PARTITION-SCOPED compaction (Delta `OPTIMIZE ... WHERE part =
     // v` / Iceberg rewrite_data_files(where)): only the named
     // identity partition's parts rewrite; every other part carries by
@@ -550,10 +550,11 @@ object ManifestMaintenance {
       scopedSplitLayout: Boolean = false)
       : (Seq[PartMeta], Int) = {
     import org.apache.spark.sql.functions.{col, expr}
-    val schema = ManifestSink.readSchema(conf, dir, Some(baseVersion))
+    val head = ManifestSink.readHeader(conf, dir, Some(baseVersion))
+    val schema = head.schema
       .getOrElse(throw new IllegalStateException(s"no schema at $dir"))
     // HEAD-SPEC-TARGETING: compaction is the layout MIGRATOR. The
-    // target layout is the TABLE's head spec (_TABLE.json) — after
+    // target layout is the base version's record spec — after
     // `set_layout` evolves the spec, the very next compact rewrites
     // mixed-generation parts into the new layout and SPJ re-arms.
     // Tables without a spec keep the parts' own recorded bucketing
@@ -566,11 +567,11 @@ object ManifestMaintenance {
     val spec =
       if (forcePlainLayout) TableSpec()
       else {
-        val head = ManifestSink.readTableSpec(conf, dir).copy(orderBy = None)
+        val target = head.table.spec.copy(orderBy = None)
         val n = selected.headOption.fold(0)(_.nbuckets)
-        if (head.layout.isEmpty && n > 0 && keyCol.isDefined &&
+        if (target.layout.isEmpty && n > 0 && keyCol.isDefined &&
             selected.forall(_.nbuckets == n)) TableSpec(Some((n, keyCol.get)))
-        else head
+        else target
       }
     // no function catalog behind the rewrite: pre-cluster what the
     // staged write cannot ask Spark for. Buckets: one task per bucket,
@@ -622,16 +623,14 @@ object ManifestMaintenance {
     * readable in history like everything else the restore rolls over.
     * Returns the new head version. */
   def restore(conf: Configuration, dir: String, version: Int): Int = {
-    val parts = ManifestSink.readManifestMeta(conf, dir, Some(version))
-    // schema AND column mapping travel together: the restored head is
-    // the old snapshot verbatim, never a derivation from the current
-    // head (which may have renamed/dropped since)
-    val (schema, cm) = ManifestSink.readSchemaAndColMap(conf, dir,
-        Some(version))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no snapshot $version at $dir"))
+    val (parts, head) = ManifestSink.readSnapshot(conf, dir, Some(version))
+    // schema, column mapping and table record travel together: the
+    // restored head is the old snapshot verbatim, never a derivation
+    // from the current head (which may have renamed/dropped since)
+    val (schema, cm) = head.schemaCm.getOrElse(
+      throw new IllegalArgumentException(s"no snapshot $version at $dir"))
     ManifestSink.publishSnapshot(conf, dir, schema, parts,
-      colmap = Some(cm), op = "restore")
+      Some((cm, head.table)), op = "restore")
   }
 
   /** FAST-FORWARD the main line to a branch head — the publish step of
@@ -648,13 +647,11 @@ object ManifestMaintenance {
   def fastForward(conf: Configuration, dir: String, branch: String): Int = {
     require(ManifestSink.listBranchVersions(conf, dir, branch).nonEmpty,
       s"branch '$branch' has no commits at $dir — nothing to publish")
-    val parts = ManifestSink.readBranchMeta(conf, dir, branch)
-    val (schema, cm) = ManifestSink.readSchemaAndColMap(conf, dir, None,
-        Some(branch))
-      .getOrElse(throw new IllegalStateException(
-        s"branch '$branch' at $dir has no schema header"))
+    val (parts, head) = ManifestSink.readSnapshot(conf, dir, None, Some(branch))
+    val (schema, cm) = head.schemaCm.getOrElse(throw new IllegalStateException(
+      s"branch '$branch' at $dir has no schema header"))
     ManifestSink.publishSnapshot(conf, dir, schema, parts,
-      colmap = Some(cm), op = "publish")
+      Some((cm, head.table)), op = "publish")
   }
 
   /** Result of one cherry-pick: the new main version, plus what the
@@ -782,8 +779,7 @@ object ManifestMaintenance {
             s"committed on main at $dir (double publish?)")
         head ++ delta
       },
-      strictBase = None, colmapOverride = Some(mCm), checkWritten = false,
-      op = "cherrypick")
+      strictBase = None, checkWritten = false, op = "cherrypick")
     CherrypickStats(newVersion, delta.size, delta.map(_.rows).sum)
   }
 

@@ -349,8 +349,8 @@ private[sources] object ManifestMv {
         // stage a read by REFERENCE (absolute paths, no data copied);
         // an empty side still needs the rollup's shape
         ManifestSink.publishSnapshot(conf, tmp, schema, parts,
-          colmap = ManifestSink.alignedColMap(conf,
-            m.source, schema, Some(head)))
+          ManifestSink.alignedColMap(conf, m.source, schema, Some(head))
+            .map(_ -> TableRecord()))
         val base = spark.read.format("graft.sources.ManifestSource")
           .option("path", tmp).load()
         // FK-LOCAL join-MV delta: the fact slice joins only the

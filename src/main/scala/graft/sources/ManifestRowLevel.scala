@@ -132,15 +132,16 @@ private[sources] class ManifestReplaceWrite(
       info: PhysicalWriteInfo): DataWriterFactory = {
     val dir = new Path(path)
     dir.getFileSystem(conf.value).mkdirs(dir)
+    val head = ManifestSink.readHeader(conf.value, path, None, op.branch)
     val f = new ManifestWriterFactory(path, schema, token, conf, TableSpec(),
-      ManifestSink.writeColMap(conf.value, path, schema, op.branch))
+      head)
     // MERGE INSERT cannot generate identity/generated values on this
     // path; a NULL in a computed slot refuses rather than landing. A
     // DELETE only carries committed rows back, whose generated slots
     // may hold a computed NULL (`x * 2` of a NULL x): no guard
     val guard =
       if (op.command() == RowLevelOperation.Command.DELETE) Seq.empty
-      else ComputedColumns.guardSlots(conf.value, path, schema)
+      else ComputedColumns.guardSlots(head.table.props, schema)
     if (guard.isEmpty) f else ComputedNullGuardFactory(f, schema, guard)
   }
 

@@ -30,7 +30,8 @@ import org.apache.spark.util.SerializableConfiguration
   *    modern table format keeps;
   *  - the driver's BatchWrite.commit() claims the next immutable
   *    version file `_MANIFEST.v<N>.json` LAST, listing the table schema
-  *    plus exactly the committed attempts — the claim is the atomic
+  *    and record ([[TableRecord]]) plus exactly the committed attempts
+  *    — the claim is the atomic
   *    publish point, so readers either see the full dataset or none of
   *    it, and orphaned files from failed attempts are invisible
   *    (abort() deletes what it can; correctness never depends on that
@@ -560,8 +561,8 @@ object ManifestSink {
     * correctness bug. */
   def readManifest(conf: Configuration, dir: String,
       version: Option[Int]): Seq[(String, Long, Long, Long)] = {
-    val (parts, snap) = readSnapshot(conf, dir, version)
-    val key = snap.flatMap(_._1.fields.find(_.dataType == LongType))
+    val (parts, head) = readSnapshot(conf, dir, version)
+    val key = head.schema.flatMap(_.fields.find(_.dataType == LongType))
       .map(_.name)
     parts.map { m =>
       val st = key.flatMap(m.cstats.get)
@@ -703,63 +704,29 @@ object ManifestSink {
     * version files yet, i.e. a genuinely-empty fork base). */
   private[sources] def readBranchFork(conf: Configuration, dir: String,
       branch: String): Option[Int] =
-    MetaJson.decodeHeader(manifestLines(conf, dir, Some(1), Some(branch))).fork
+    readHeader(conf, dir, Some(1), Some(branch)).fork
 
   /** The snapshot's operation label ("" for pre-label snapshots). */
   private[sources] def readOp(conf: Configuration, dir: String,
       version: Option[Int]): String =
-    MetaJson.decodeHeader(manifestLines(conf, dir, version)).op
+    readHeader(conf, dir, version).op
 
-  /** Parts + (schema, column mapping) from ONE manifest read — the
-    * scan planner's shape (a second read of a 100k-part manifest just
-    * for the header would double planning IO). */
+  /** Parts + header from ONE manifest read — the scan planner's
+    * shape (a second read of a 100k-part manifest just for the header
+    * would double planning IO). */
   private[sources] def readSnapshot(conf: Configuration, dir: String,
       version: Option[Int] = None, branch: Option[String] = None)
-      : (Seq[PartMeta], Option[(StructType, ColMap)]) = {
+      : (Seq[PartMeta], ManifestHeader) = {
     val lines = manifestLines(conf, dir, version, branch)
-    (MetaJson.decodeParts(lines), withColMap(MetaJson.decodeHeader(lines)))
+    (MetaJson.decodeParts(lines), MetaJson.decodeHeader(lines))
   }
 
-  /** The header's (schema, column mapping) pair; an absent mapping is
-    * the identity over the schema's fields. */
-  private def withColMap(h: ManifestHeader): Option[(StructType, ColMap)] =
-    h.schema.map(s =>
-      (s, h.colmap.getOrElse(ColMap.identity(s.fields.length))))
-
-  /** TABLE-LEVEL LAYOUT SPEC (`_TABLE.json`): created by `CREATE
-    * TABLE … PARTITIONED BY (bucket(n, col))` / `(col)` and read by
-    * every catalog load — layout policy lives with the TABLE, so
-    * every INSERT INTO routes through the layout writer
-    * without the writer ever being told. EVOLVABLE after create
-    * (`CALL cat.system.set_layout(...)` — the Iceberg partition-spec
-    * evolution shape): the replace is metadata-only, EXISTING parts
-    * keep the generation they were written under (the scan demotes
-    * SPJ while generations are mixed), and compaction migrates data
-    * to the head spec. An optional `orderBy` field carries the
-    * table's WRITE ORDERED BY column for unpartitioned layouts
-    * (range-distributed, sorted parts → tight min/max pruning). */
-  private[sources] def writeTableSpec(conf: Configuration, dir: String,
-      spec: TableSpec): Unit =
-    MetaJson.replace(conf, new Path(dir), TableFile,
-      MetaJson.encodeTableSpec(spec))
-
-  private val TableFile = "_TABLE.json"
-
-  /** The table's layout spec, read once; all None when absent. */
-  private[sources] def readTableSpec(conf: Configuration,
-      dir: String): TableSpec =
-    MetaJson.read(conf, new Path(dir, TableFile))
-      .fold(TableSpec())(MetaJson.decodeTableSpec)
-
-  /** Drop the layout spec entirely (`set_layout(..., spec =>
-    * 'none')`): later INSERTs take the plain unpartitioned write
-    * path; existing parts keep their recorded layout. */
-  private[sources] def clearTableSpec(conf: Configuration,
-      dir: String): Unit = {
-    val p = new Path(dir, TableFile)
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) fs.delete(p, false)
-  }
+  /** A snapshot's header (schema, column mapping, version record and
+    * table record), read up to its first part line. */
+  private[sources] def readHeader(conf: Configuration, dir: String,
+      version: Option[Int] = None,
+      branch: Option[String] = None): ManifestHeader =
+    MetaJson.decodeHeader(manifestLines(conf, dir, version, branch))
 
   /** Declared secondary-bloom columns (the `graft.bloom_cols` table
     * property, comma-separated STRING column names): each listed
@@ -769,9 +736,8 @@ object ManifestSink {
     * Capped at 4 — each bloom costs up to 8 KB of manifest line per
     * part, the key bloom's budget. */
   private[sources] val BloomColsProp = "graft.bloom_cols"
-  private[sources] def bloomCols(conf: Configuration,
-      dir: String): Seq[String] =
-    readTableProps(conf, dir).get(BloomColsProp).toSeq
+  private[sources] def bloomCols(props: Map[String, String]): Seq[String] =
+    props.get(BloomColsProp).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).take(4)
 
   /** Optional secondary-bloom SIZE knob (`graft.bloom_bits`, bits,
@@ -783,8 +749,8 @@ object ManifestSink {
     * parts carry high-cardinality bloom columns declare a larger
     * filter knowingly (2^18 ≈ 64 KB hex per part per column). */
   private[sources] val BloomBitsProp = "graft.bloom_bits"
-  private[sources] def bloomBits(conf: Configuration, dir: String): Int = {
-    val v = readTableProps(conf, dir).get(BloomBitsProp)
+  private[sources] def bloomBits(props: Map[String, String]): Int = {
+    val v = props.get(BloomBitsProp)
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
       .getOrElse(PartBloom.MaxBits)
     val clamped = math.max(PartBloom.MinBits, math.min(1 << 20, v))
@@ -801,9 +767,8 @@ object ManifestSink {
   private[sources] def encodeNdv(pairs: Seq[(String, Long)]): String =
     pairs.map { case (c, d) =>
       s"${encodeString(c)}:$d" }.mkString(";")
-  private[sources] def readNdv(conf: Configuration,
-      dir: String): Map[String, Long] =
-    readTableProps(conf, dir).get(NdvProp).toSeq
+  private[sources] def ndv(props: Map[String, String]): Map[String, Long] =
+    props.get(NdvProp).toSeq
       .flatMap(_.split(";")).filter(_.nonEmpty).map { kv =>
         val i = kv.lastIndexOf(':')
         decodeString(kv.substring(0, i)) ->
@@ -825,9 +790,9 @@ object ManifestSink {
       s"${encodeString(c)}=$height:" +
         bins.map { case (lo, hi, ndv) => s"$lo,$hi,$ndv" }.mkString("|")
     }.mkString(";")
-  private[sources] def readHist(conf: Configuration, dir: String)
+  private[sources] def hist(props: Map[String, String])
       : Map[String, (Double, Seq[(Long, Long, Long)])] =
-    readTableProps(conf, dir).get(HistProp).toSeq
+    props.get(HistProp).toSeq
       .flatMap(_.split(";")).filter(_.nonEmpty).flatMap { kv =>
         scala.util.Try {
           val eq = kv.indexOf('=')
@@ -843,53 +808,6 @@ object ManifestSink {
           c -> (height, bins)
         }.toOption
       }.toMap
-
-  /** TABLE PROPERTIES (`TBLPROPERTIES` / `COMMENT ON TABLE` — the
-    * Delta/Iceberg free-form key-value surface): stored in their own
-    * `_PROPS.json` sidecar, replaced atomically like the layout spec.
-    * Properties are TABLE-level operational metadata (comments,
-    * team ownership tags, policy knobs), not snapshot state — they
-    * deliberately do not version with the data. */
-  private[sources] def writeTableProps(conf: Configuration, dir: String,
-      props: Map[String, String]): Unit = {
-    val d = new Path(dir)
-    if (props.isEmpty) {
-      val fs = d.getFileSystem(conf)
-      val target = new Path(d, PropsFile)
-      if (fs.exists(target)) fs.delete(target, false)
-    } else MetaJson.replace(conf, d, PropsFile, MetaJson.encodeProps(props))
-  }
-
-  private val PropsFile = "_PROPS.json"
-
-  private[sources] def readTableProps(conf: Configuration,
-      dir: String): Map[String, String] =
-    MetaJson.read(conf, new Path(dir, PropsFile))
-      .fold(Map.empty[String, String])(MetaJson.decodeProps)
-
-  /** CHECK CONSTRAINTS (`_CONSTRAINTS.json`, one record line per
-    * constraint): stored by `ALTER TABLE ADD CONSTRAINT … CHECK (…)`,
-    * reported by the loaded table's `constraints()`, and from there
-    * ENFORCED BY THE ENGINE — Spark's ResolveTableConstraints injects
-    * a CheckInvariant over every write to the table, so a violating
-    * INSERT fails before a single part commits (the write is atomic:
-    * no partial data lands). The file is replaced atomically as a
-    * whole — constraint sets are tiny and change rarely. */
-  private[sources] def writeConstraints(conf: Configuration, dir: String,
-      constraints: Seq[(String, String)]): Unit = {
-    val d = new Path(dir)
-    if (constraints.isEmpty)
-      d.getFileSystem(conf).delete(new Path(d, ConstraintsFile), false)
-    else MetaJson.replace(conf, d, ConstraintsFile,
-      MetaJson.encodeConstraints(constraints))
-  }
-
-  private val ConstraintsFile = "_CONSTRAINTS.json"
-
-  private[sources] def readConstraints(conf: Configuration,
-      dir: String): Seq[(String, String)] =
-    MetaJson.read(conf, new Path(dir, ConstraintsFile))
-      .fold(Seq.empty[(String, String)])(MetaJson.decodeConstraints)
 
   /** SNAPSHOT TAGS — immutable named refs (`_TAG.<name>.json`
     * holding the version number): `VERSION AS OF 'name'` resolves
@@ -946,7 +864,7 @@ object ManifestSink {
     * (additive evolution never rewrites history). */
   def readSchema(conf: Configuration, dir: String,
       version: Option[Int]): Option[StructType] =
-    MetaJson.decodeHeader(manifestLines(conf, dir, version)).schema
+    readHeader(conf, dir, version).schema
 
   /** Snapshot schema + column mapping, read from ONE manifest
     * resolution (the pair is only consistent when both come from the
@@ -954,13 +872,12 @@ object ManifestSink {
   private[sources] def readSchemaAndColMap(conf: Configuration,
       dir: String, version: Option[Int] = None,
       branch: Option[String] = None): Option[(StructType, ColMap)] =
-    withColMap(MetaJson.decodeHeader(manifestLines(conf, dir, version, branch)))
+    readHeader(conf, dir, version, branch).schemaCm
 
-  /** The mapping the published snapshot carries: an explicit override
-    * (DDL — rename/drop/add know their exact result), or derivation
-    * from the head by NAME — a field the head already maps keeps its
-    * id; a new field (additive append evolution) allocates the next
-    * one. The identity default means tables that never rename or drop
+  /** The mapping a commit derives from the head by NAME (DDL and
+    * restating commits hand theirs instead, see [[publishRebase]]) —
+    * a field the head already maps keeps its id; a new field
+    * (additive append evolution) allocates the next one. The identity default means tables that never rename or drop
     * never even materialize a header. */
   private def deriveColMap(headSchemaCm: Option[(StructType, ColMap)],
       published: StructType): ColMap = headSchemaCm match {
@@ -986,14 +903,13 @@ object ManifestSink {
     * readable at the old head. Returns the committed version. */
   private[sources] def publishSnapshot(conf: Configuration, path: String,
       schema: StructType, parts: Seq[PartMeta],
-      colmap: Option[ColMap] = None, op: String = ""): Int =
+      restate: Option[(ColMap, TableRecord)] = None, op: String = ""): Int =
     // fixed-part publishes (staging reads, restore, fast-forward,
     // clone, truncate) re-reference EXISTING parts, written under
     // earlier mappings — and when the caller hands the snapshot's
-    // mapping, publish it verbatim
+    // mapping and record, publish them verbatim
     publishRebase(conf, path, schema, _ => parts,
-      strictBase = None, colmapOverride = colmap, checkWritten = false,
-      op = op)
+      strictBase = None, restate = restate, checkWritten = false, op = op)
 
   /** The table's [[ColMap]] aligned BY NAME to `schema` (None when
     * trivially identity) — what a temp staging manifest over a mapped
@@ -1024,13 +940,14 @@ object ManifestSink {
     case None => ColMap.identity(s.fields.length)
   }
 
-  /** The mapping a write of `schema` into `dir` stores its columns
-    * under, taken at plan time: the head's mapping aligned to the
-    * write schema — what the commit derives when no DDL lands in
-    * between ([[publishRebase]] refuses the commit otherwise). */
-  private[sources] def writeColMap(conf: Configuration, dir: String,
-      schema: StructType, branch: Option[String] = None): ColMap =
-    deriveColMap(readSchemaAndColMap(conf, dir, None, branch), schema)
+  /** The mapping a write of `schema` stores its columns under, taken
+    * at plan time from the `head` it writes onto: the head's mapping
+    * aligned to the write schema — what the commit derives when no
+    * DDL lands in between ([[publishRebase]] refuses the commit
+    * otherwise). */
+  private[sources] def writeColMap(head: ManifestHeader,
+      schema: StructType): ColMap =
+    deriveColMap(head.schemaCm, schema)
 
   /** The Parquet column of logical field `f` with field id `id`: named
     * `c<id>`, each depth-1 struct sub-field `c<nested id>`, nullable;
@@ -1089,14 +1006,21 @@ object ManifestSink {
     * exactly one side. (Appends that add rows MATCHING the
     * operation's predicate are NOT conflicts — those rows were not in
     * the operation's snapshot: snapshot isolation, not
-    * serializability, same as the lakehouse defaults.) */
+    * serializability, same as the lakehouse defaults.)
+    *
+    * The header travels the same way: the column mapping is derived
+    * from the head and the head's [[TableRecord]] carried forward, on
+    * every attempt — so a commit that loses its slot to a DDL keeps
+    * that DDL's layout, properties and constraints. `restate` hands
+    * both verbatim instead: DDL (its exact result) and the commits
+    * that restate another version (restore, fast-forward, clone). */
   private[sources] def publishRebase(conf: Configuration, path: String,
       schema: StructType,
       rebase: Seq[PartMeta] => Seq[PartMeta],
       strictBase: Option[Int],
       footprint: Option[Set[String]] = None,
       branch: Option[String] = None,
-      colmapOverride: Option[ColMap] = None,
+      restate: Option[(ColMap, TableRecord)] = None,
       checkWritten: Boolean = true,
       op: String = "",
       strictForkBase: Option[Int] = None): Int = {
@@ -1121,7 +1045,7 @@ object ManifestSink {
     })
     val ddl = ddlSchema.toDDL
     def render(version: Int, parts: Seq[PartMeta], cm: ColMap,
-        fork: Option[Int] = None): String =
+        table: TableRecord, fork: Option[Int]): String =
       MetaJson.encodeManifest(ddl,
         // written only once non-trivial: a table that never renames
         // or drops carries no mapping line
@@ -1137,17 +1061,18 @@ object ManifestSink {
         // fork-from-empty from a branch commit that rewrote every fork
         // part (both are "contained" in an empty main snapshot
         // vacuously) — see ManifestMaintenance.cherrypick
-        Some((version, op, fork)), parts)
+        Some((version, op, fork)), parts, table)
 
-    // column mapping bookkeeping: resolve the mapping (override from
-    // DDL, else derive from the head). A NEWLY-ADDED part stores its
-    // columns under the ids its writer took at plan time
-    // ([[writeColMap]], recorded in `cols`); a DDL commit that landed
-    // since would read them under other ids, so the commit refuses
-    def finish(head: Seq[PartMeta],
-        headSchemaCm: Option[(StructType, ColMap)],
-        parts: Seq[PartMeta]): (Seq[PartMeta], ColMap) = {
-      val cm = colmapOverride.getOrElse(deriveColMap(headSchemaCm, schema))
+    // header bookkeeping: resolve the mapping and the record (restated
+    // by the caller, else derived/carried from the head). A
+    // NEWLY-ADDED part stores its columns under the ids its writer
+    // took at plan time ([[writeColMap]], recorded in `cols`); a DDL
+    // commit that landed since would read them under other ids, so
+    // the commit refuses
+    def finish(head: Seq[PartMeta], headHeader: ManifestHeader,
+        parts: Seq[PartMeta]): (Seq[PartMeta], ColMap, TableRecord) = {
+      val (cm, table) = restate.getOrElse(
+        (deriveColMap(headHeader.schemaCm, schema), headHeader.table))
       if (checkWritten) {
         val headPaths = head.map(_.path).toSet
         parts.find(p => !headPaths(p.path) &&
@@ -1158,7 +1083,7 @@ object ManifestSink {
                 "being written; re-run the write against the new head")
           }
       }
-      (parts, cm)
+      (parts, cm, table)
     }
     // OPTIMISTIC CONCURRENCY (the Iceberg commit loop): a commit
     // CLAIMS its immutable version file — exists-check + rename,
@@ -1169,12 +1094,14 @@ object ManifestSink {
     // itself refuses an existing destination, making the claim fully
     // atomic; on a raw local fs the exists-check shrinks the window.)
     // Readers resolve HEAD as the newest version file (manifestLines).
-    // The part list at version v of the line this commit targets; a
-    // branch with no commits forks IMPLICITLY from the main head.
-    def metaAt(v: Int): Seq[PartMeta] = branch match {
-      case Some(b) if v > 0 => readBranchMeta(conf, path, b, Some(v))
-      case Some(_) => readManifestMeta(conf, path, None)
-      case None => readManifestMeta(conf, path, Some(v))
+    // The part list and header at version v of the line this commit
+    // targets, from one read (version files are immutable once
+    // claimed, so re-reads are consistent); a branch with no commits
+    // forks IMPLICITLY from the main head.
+    def snapshotAt(v: Int): (Seq[PartMeta], ManifestHeader) = branch match {
+      case Some(b) if v > 0 => readSnapshot(conf, path, Some(v), Some(b))
+      case Some(_) => readSnapshot(conf, path)
+      case None => readSnapshot(conf, path, Some(v))
     }
     var attempts = 0
     var committed = -1
@@ -1186,7 +1113,7 @@ object ManifestSink {
         case Some(b) => listBranchVersions(conf, path, b).lastOption.getOrElse(0)
         case None    => listVersions(conf, path).lastOption.getOrElse(0)
       }
-      val head = metaAt(latest)
+      val (head, headHeader) = snapshotAt(latest)
       strictBase.foreach { base =>
         if (latest != base) footprint match {
           case None => throw new java.util.ConcurrentModificationException(
@@ -1195,7 +1122,8 @@ object ManifestSink {
           case Some(touched) =>
             // conflict check: every touched part must survive into the
             // advanced head BIT-IDENTICAL to the base snapshot's record
-            val baseParts = metaAt(base).map(m => m.path -> m).toMap
+            val (baseMeta, baseHeader) = snapshotAt(base)
+            val baseParts = baseMeta.map(m => m.path -> m).toMap
             val headParts = head.map(m => m.path -> m).toMap
             val conflicted = touched.filter(p =>
               !headParts.get(p).exists(baseParts.get(p).contains(_)))
@@ -1206,17 +1134,17 @@ object ManifestSink {
                   s"operation read-and-modified (${conflicted.take(3).mkString(", ")}" +
                   s"${if (conflicted.size > 3) ", …" else ""}); re-plan " +
                   "against the new head")
+            // a restated header was derived from the base's: an
+            // interleaved schema or table-record change conflicts too
+            def state(h: ManifestHeader) = (h.schemaDdl, h.colmap, h.table)
+            if (restate.isDefined && state(baseHeader) != state(headHeader))
+              throw new java.util.ConcurrentModificationException(
+                s"table $dir advanced from snapshot $base to $latest and a " +
+                  "concurrent commit changed its schema or table record; " +
+                  "re-plan against the new head")
         }
       }
-      // head schema + mapping from the SAME resolved version (version
-      // files are immutable once claimed, so the re-read is consistent)
-      val headSchemaCm = branch match {
-        case Some(b) if latest > 0 =>
-          readSchemaAndColMap(conf, path, Some(latest), Some(b))
-        case Some(_) => readSchemaAndColMap(conf, path)
-        case None => readSchemaAndColMap(conf, path, Some(latest))
-      }
-      val (parts, cm) = finish(head, headSchemaCm, rebase(head))
+      val (parts, cm, table) = finish(head, headHeader, rebase(head))
       val version = latest + 1
       val fork: Option[Int] =
         if (branch.isDefined && latest == 0)
@@ -1235,7 +1163,8 @@ object ManifestSink {
       }
       val claim = branch.map(branchVersionFile(_, version))
         .getOrElse(versionFile(version))
-      if (MetaJson.claim(conf, dir, claim, render(version, parts, cm, fork)))
+      if (MetaJson.claim(conf, dir, claim,
+          render(version, parts, cm, table, fork)))
         committed = version
     }
     committed
@@ -1360,7 +1289,7 @@ object ManifestSink {
 
   def readBranchSchema(conf: Configuration, dir: String,
       branch: String): Option[StructType] =
-    MetaJson.decodeHeader(manifestLines(conf, dir, None, Some(branch))).schema
+    readHeader(conf, dir, None, Some(branch)).schema
 }
 
 private[sources] class ManifestTable(
@@ -1485,7 +1414,7 @@ private[sources] class ManifestBatchWrite(
     val dir = new Path(path)
     dir.getFileSystem(conf.value).mkdirs(dir)
     val factory0 = new ManifestWriterFactory(path, schema, token, conf, spec,
-      ManifestSink.writeColMap(conf.value, path, schema, branch))
+      ManifestSink.readHeader(conf.value, path, None, branch))
     // generated wraps INNER (sees identity-filled rows were it to
     // reference them — banned at create, so order only matters for
     // the refusal messages); identity wraps OUTER so its fill sees
@@ -1700,7 +1629,7 @@ private[sources] class ManifestStreamingWrite(
     // files, which the skipped commit then deletes
     ManifestStreamingWriterFactory(new ManifestWriterFactory(path, schema,
       java.util.UUID.randomUUID().toString.take(8), conf, spec,
-      ManifestSink.writeColMap(conf.value, path, schema)))
+      ManifestSink.readHeader(conf.value, path)))
   }
 
   /** True iff some committed version already carries this epoch's
@@ -1746,21 +1675,23 @@ private[sources] case class MultiPartCommit(parts: Seq[PartMeta])
     extends WriterCommitMessage
 
 /** The task-side writer factory of every manifest write, built on the
-  * DRIVER: it prepares the write's [[PartFormat]] over the field ids of
-  * `cm` (the plan-time mapping, aligned to `schema`) and resolves the
-  * declared secondary-bloom columns, so executors never re-read table
-  * metadata. */
+  * DRIVER from the `head` header the write plans onto: it prepares the
+  * write's [[PartFormat]] over the plan-time field ids
+  * ([[ManifestSink.writeColMap]]) and resolves the declared
+  * secondary-bloom columns from the head's table record, so executors
+  * never re-read table metadata. */
 private[sources] class ManifestWriterFactory(
     path: String, schema: StructType, token: String,
     private[sources] val conf: SerializableConfiguration,
-    spec: TableSpec, cm: ColMap)
+    spec: TableSpec, head: ManifestHeader)
     extends DataWriterFactory {
-  private val format = PartFormat(conf.value, schema, cm)
+  private val format = PartFormat(conf.value, schema,
+    ManifestSink.writeColMap(head, schema))
   // SECONDARY-COLUMN BLOOMS (`graft.bloom_cols` table property),
   // capped at 4 columns: each bloom costs up to 8 KB of manifest line
   // per part, the same budget as the key bloom.
-  private val bloomCols: Seq[String] = ManifestSink.bloomCols(conf.value, path)
-  private val bloomBitsN: Int = ManifestSink.bloomBits(conf.value, path)
+  private val bloomCols: Seq[String] = ManifestSink.bloomCols(head.table.props)
+  private val bloomBitsN: Int = ManifestSink.bloomBits(head.table.props)
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     if (spec.layout.isEmpty)

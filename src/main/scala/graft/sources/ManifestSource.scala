@@ -511,7 +511,7 @@ private[sources] class ManifestScanBuilder(
     // records is one consistent snapshot — resolving the version at
     // execution time could capture a commit that landed after this
     // plan and void the strictBase lost-update guard.
-    val (all, baseVersion, snapCm) = branch match {
+    val (all, baseVersion, head) = branch match {
       case Some(b) =>
         // pin the BRANCH head version the same way the main line is
         // pinned: a branch-routed row-level rewrite records (parts,
@@ -519,14 +519,14 @@ private[sources] class ManifestScanBuilder(
         // strictBase guards the branch line, not a meaningless 0
         val latest = ManifestSink.listBranchVersions(conf.value, path, b)
           .lastOption.getOrElse(0)
-        val (m, sc) = ManifestSink.readSnapshot(conf.value, path,
+        val (m, h) = ManifestSink.readSnapshot(conf.value, path,
           if (latest == 0) None else Some(latest), Some(b))
-        (m, latest, sc)
+        (m, latest, h)
       case None =>
         val v = version.getOrElse(ManifestSink.listVersions(conf.value, path)
           .lastOption.getOrElse(0))
-        val (m, sc) = ManifestSink.readSnapshot(conf.value, path, Some(v))
-        (m, v, sc)
+        val (m, h) = ManifestSink.readSnapshot(conf.value, path, Some(v))
+        (m, v, h)
     }
     aggResult match {
       case Some((aggSchema, aggRows)) =>
@@ -601,8 +601,9 @@ private[sources] class ManifestScanBuilder(
           keyCol.exists(c => longBounds.contains(c) || longPoints.contains(c))
         new ManifestScan(kept, schema, required, conf, all.size, limit, keyCol,
           path, rowLevelOwner, startingVersion, baseVersion,
-          maxPartsPerTrigger, ManifestSink.alignColMap(snapCm, schema, path),
-          branched = branch.isDefined, runtimeFiltered = !keyBoundDelete)
+          maxPartsPerTrigger, ManifestSink.alignColMap(head.schemaCm, schema, path),
+          branched = branch.isDefined, runtimeFiltered = !keyBoundDelete,
+          tableProps = head.table.props)
     }
   }
 }
@@ -662,16 +663,12 @@ private[sources] class ManifestScan(
     maxPartsPerTrigger: Option[Int] = None,
     cm: ColMap,
     branched: Boolean = false,
-    runtimeFiltered: Boolean = true)
+    runtimeFiltered: Boolean = true,
+    tableProps: Map[String, String] = Map.empty)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
-
-  /** For [[SplitRowLevelDpp]]: the stats-keyed column (bloom + range
-    * pruning) and whether this scan drives a row-level rewrite. */
-  private[sources] def keyColName: Option[String] = keyCol
-  private[sources] def isRowLevelScan: Boolean = rowLevelOwner.isDefined
 
   /** The table directory this scan reads, regardless of pin flags —
     * for [[MvRewrite.readsManifestDir]]'s structural routing probe. */
@@ -788,12 +785,27 @@ private[sources] class ManifestScan(
     * execution. Only columns surviving column pruning are advertised
     * (advertising a pruned-away column makes Spark's PartitionPruning
     * throw at resolution — pinned by ManifestSourceSpec). None when
-    * the builder declined runtime filtering (`runtimeFiltered`). */
-  override def filterAttributes(): Array[NamedReference] =
-    if (!runtimeFiltered) Array.empty
-    else initialParts.iterator.flatMap(_.cstats.keysIterator).distinct
-      .filter(required.fieldNames.contains)
-      .map(c => Expressions.column(c)).toArray
+    * the builder declined runtime filtering (`runtimeFiltered`).
+    *
+    * A ROW-LEVEL rewrite's scan advertises ONE column: the key when
+    * it has stats (range + bloom), else the first column that does.
+    * Spark's group filter then plans a single-column `IN` over the
+    * matched target rows, which `BatchScanExec` translates into the
+    * [[In]] that [[filter]] prunes by — a multi-column struct would
+    * never translate. One column is enough: the subquery's rows ARE
+    * the matched rows, so any column's values are consistent with
+    * exactly the parts those rows live in. */
+  override def filterAttributes(): Array[NamedReference] = {
+    val cols =
+      if (!runtimeFiltered) Seq.empty
+      else initialParts.iterator.flatMap(_.cstats.keysIterator).distinct
+        .filter(required.fieldNames.contains).toSeq
+    val advertised =
+      if (rowLevelOwner.isEmpty) cols
+      else keyCol.filter(cols.contains)
+        .orElse(required.fieldNames.find(cols.contains)).toSeq
+    advertised.map(c => Expressions.column(c)).toArray
+  }
 
   // runtime sets are point sets: each value must pass the column's
   // range AND bloom; a part with no entry is kept (absent ⇒ cannot
@@ -899,8 +911,8 @@ private[sources] class ManifestScan(
       // predicate on a SKEWED column — NDV + [min,max] alone assume
       // uniformity. transformV2Stats converts these bins verbatim
       // into the catalyst Histogram the estimator reads.
-      val hists = ManifestSink.readHist(conf.value, tablePath)
-      ManifestSink.readNdv(conf.value, tablePath).foreach { case (c, d) =>
+      val hists = ManifestSink.hist(tableProps)
+      ManifestSink.ndv(tableProps).foreach { case (c, d) =>
         if (schema.fields.exists(_.name == c)) {
           val nulls = nullsFor(c)
           val isLong = schema.fields.exists(f =>

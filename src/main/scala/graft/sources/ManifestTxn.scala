@@ -137,17 +137,16 @@ object ManifestTxn {
               s"${e.forkBase} before roll-forward claimed $target — the " +
               "txn is durably committed but cannot complete on this " +
               "table; resolve the foreign commit and re-run recovery")
-        // publish the STAGED branch head (pinned: readBranchMeta at
-        // the recorded version — later branch debris never leaks in)
-        val parts = ManifestSink.readBranchMeta(conf, e.dir, branch,
-          Some(e.branchHead))
-        val (schema, cm) = ManifestSink.readSchemaAndColMap(conf, e.dir,
-          Some(e.branchHead), Some(branch)).getOrElse(
-            throw new IllegalStateException(
-              s"txn '$id': branch '$branch' at ${e.dir} has no schema"))
+        // publish the STAGED branch head (pinned at the recorded
+        // version — later branch debris never leaks in)
+        val (parts, staged) = ManifestSink.readSnapshot(conf, e.dir,
+          Some(e.branchHead), Some(branch))
+        val (schema, cm) = staged.schemaCm.getOrElse(
+          throw new IllegalStateException(
+            s"txn '$id': branch '$branch' at ${e.dir} has no schema"))
         ManifestSink.publishRebase(conf, e.dir, schema,
           _ => parts, strictBase = Some(e.forkBase),
-          colmapOverride = Some(cm), checkWritten = false, op = label)
+          restate = Some((cm, staged.table)), checkWritten = false, op = label)
         published += 1
       }
     }

@@ -11,33 +11,51 @@ import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-/** The table-layout sidecar (`_TABLE.json`): `layout` is the
-  * (buckets, column) placement — 0 buckets = identity split, with
-  * `transform` ("days" | "hours") naming a hidden time transform —
-  * and `orderBy` the WRITE ORDERED BY column of an unpartitioned
-  * table. Absent file ⇒ all None. The one layout value every manifest
-  * write takes: checked by [[TableLayout.check]], planned by
+/** A table's layout: `layout` is the (buckets, column) placement —
+  * 0 buckets = identity split, with `transform` ("days" | "hours")
+  * naming a hidden time transform — and `orderBy` the WRITE ORDERED
+  * BY column of an unpartitioned table. All None = unpartitioned,
+  * unordered. The one layout value every manifest write takes:
+  * checked by [[TableLayout.check]], planned by
   * [[ManifestSink.writePlan]]. */
 private[sources] final case class TableSpec(
     layout: Option[(Int, String)] = None,
     transform: Option[String] = None,
     orderBy: Option[String] = None)
 
+/** THE TABLE RECORD a version carries beside its schema and column
+  * mapping: the layout, the table properties (TBLPROPERTIES and
+  * COMMENT, plus the engine's identity, generated-column, bloom, NDV
+  * and histogram keys) and the CHECK constraints as (name, predicate
+  * SQL). It travels with the (schema, mapping) pair: a commit carries
+  * the head's record forward, a DDL or a restating commit (restore,
+  * fast-forward, clone) hands its own — Delta's `metaData` action, so
+  * one claim publishes a table-state change atomically. */
+private[sources] final case class TableRecord(
+    spec: TableSpec = TableSpec(),
+    props: Map[String, String] = Map.empty,
+    constraints: Seq[(String, String)] = Seq.empty)
+
 /** A snapshot manifest's header lines: the schema DDL, the column
-  * mapping (absent ⇒ identity) and the version record with its
-  * operation label and a branch's fork base. */
+  * mapping (absent ⇒ identity), the version record with its
+  * operation label and a branch's fork base, and the table record
+  * (absent ⇒ empty). */
 private[sources] final case class ManifestHeader(
     schemaDdl: Option[String] = None, colmap: Option[ColMap] = None,
     version: Option[Int] = None, op: String = "",
-    fork: Option[Int] = None) {
+    fork: Option[Int] = None, table: TableRecord = TableRecord()) {
   lazy val schema: Option[StructType] = schemaDdl.map(StructType.fromDDL)
+  /** The (schema, column mapping) pair; an absent mapping is the
+    * identity over the schema's fields. */
+  lazy val schemaCm: Option[(StructType, ColMap)] =
+    schema.map(s => (s, colmap.getOrElse(ColMap.identity(s.fields.length))))
 }
 
 /** THE TABLE-METADATA FORMAT, owned in one place: the json4s encoding
   * and decoding of every metadata record the `sources` package writes
-  * (snapshot manifests, the `_TABLE.json` / `_PROPS.json` /
-  * `_CONSTRAINTS.json` / `_TAG.*.json` sidecars, view records, txn
-  * markers, MV meta) and the one atomic publish they all go through.
+  * (snapshot manifests with their table record, `_TAG.*.json` tags,
+  * namespace properties, view records, txn markers, MV meta) and the
+  * one atomic publish they all go through.
   *
   * Records are JSON objects, one per line in line-oriented files.
   * Strings use JSON escaping, nested values are JSON objects or
@@ -55,8 +73,8 @@ private[sources] object MetaJson {
       body: String): Boolean =
     publish(conf, dir, name, body, overwrite = false)
 
-  /** REPLACE `dir/name` atomically (table sidecars, view records, MV
-    * meta): readers see the old file or the new one, never a
+  /** REPLACE `dir/name` atomically (namespace properties, view
+    * records, MV meta): readers see the old file or the new one, never a
     * partly-written one. */
   def replace(conf: Configuration, dir: Path, name: String,
       body: String): Unit =
@@ -247,15 +265,44 @@ private[sources] object MetaJson {
             asStrs(nf("retired")))
         }))
 
+  private def encodeTable(t: TableRecord): String = render(obj(
+    "table" -> obj(
+      "buckets" -> t.spec.layout.fold[JValue](JNothing)(l => JLong(l._1.toLong)),
+      "bucketCol" -> t.spec.layout.fold[JValue](JNothing)(l => JString(l._2)),
+      "transform" -> optStr(t.spec.transform),
+      "orderBy" -> optStr(t.spec.orderBy),
+      "props" -> when(t.props.nonEmpty)(strMap(t.props)),
+      "constraints" -> when(t.constraints.nonEmpty)(JArray(
+        t.constraints.map { case (n, sql) =>
+          obj("name" -> JString(n), "sql" -> JString(sql)): JValue
+        }.toList)))))
+
+  private def tableOf(v: JValue): TableRecord = {
+    val f = fields(v)
+    TableRecord(
+      TableSpec(
+        for (n <- f.optInt("buckets"); c <- f.optText("bucketCol")) yield (n, c),
+        f.optText("transform"), f.optText("orderBy")),
+      f.get("props").fold(Map.empty[String, String])(asStrMap),
+      f.get("constraints").fold(Seq.empty[(String, String)]) {
+        case JArray(cs) => cs.map { c =>
+          val cf = fields(c)
+          (cf.text("name"), cf.text("sql"))
+        }
+        case other => bad("array", other)
+      })
+  }
+
   /** A whole snapshot manifest: schema line, the column-mapping line
-    * (only when given), the version line, then one
-    * line per part. */
+    * (only when given), the table record (only when non-empty), the
+    * version line, then one line per part. */
   def encodeManifest(ddl: String, colmap: Option[ColMap],
       version: Option[(Int, String, Option[Int])],
-      parts: Seq[PartMeta]): String = {
+      parts: Seq[PartMeta], table: TableRecord = TableRecord()): String = {
     val sb = new StringBuilder
     sb.append(render(obj("schema" -> JString(ddl)))).append('\n')
     colmap.foreach(cm => sb.append(encodeColMap(cm)).append('\n'))
+    if (table != TableRecord()) sb.append(encodeTable(table)).append('\n')
     version.foreach { case (v, op, fork) =>
       sb.append(render(obj("version" -> JLong(v.toLong),
         "op" -> when(op.nonEmpty)(JString(op)),
@@ -277,6 +324,8 @@ private[sources] object MetaJson {
         h = h.copy(schemaDdl = Some(ddl))
       case o @ JObject(("colmap", _) :: _) =>
         h = h.copy(colmap = Some(colMapOf(fields(o))))
+      case JObject(("table", t) :: _) =>
+        h = h.copy(table = tableOf(t))
       case o @ JObject(("version", _) :: _) =>
         val f = fields(o)
         h = h.copy(version = Some(f.int("version")),
@@ -304,36 +353,13 @@ private[sources] object MetaJson {
       case _ => line
     }
 
-  // ---- table sidecars -----------------------------------------------
-
-  def encodeTableSpec(s: TableSpec): String = render(obj(
-    "buckets" -> s.layout.fold[JValue](JNothing)(l => JLong(l._1.toLong)),
-    "bucketCol" -> s.layout.fold[JValue](JNothing)(l => JString(l._2)),
-    "orderBy" -> optStr(s.orderBy), "transform" -> optStr(s.transform)))
-
-  def decodeTableSpec(text: String): TableSpec = {
-    val f = fields(parse(text))
-    TableSpec(
-      for (n <- f.optInt("buckets"); c <- f.optText("bucketCol")) yield (n, c),
-      f.optText("transform"), f.optText("orderBy"))
-  }
+  // ---- tags and namespace properties --------------------------------
 
   def encodeProps(props: Map[String, String]): String =
     render(obj("props" -> strMap(props)))
 
   def decodeProps(text: String): Map[String, String] =
     asStrMap(fields(parse(text))("props"))
-
-  def encodeConstraints(cs: Seq[(String, String)]): String =
-    cs.map { case (n, sql) =>
-      render(obj("name" -> JString(n), "sql" -> JString(sql))) + "\n"
-    }.mkString
-
-  def decodeConstraints(text: String): Seq[(String, String)] =
-    lines(text).map { l =>
-      val f = fields(parse(l))
-      (f.text("name"), f.text("sql"))
-    }
 
   def encodeTag(version: Int): String =
     render(obj("version" -> JLong(version.toLong)))

@@ -136,10 +136,10 @@ class RowLevelSpec extends SparkSpec {
     assert(before.size === 5)
     Seq((2010L, "hit"), (2020L, "hit2")).toDF("sk2", "ns")
       .createOrReplaceTempView("mrg2_src")
-    // the matched-row group filter (SplitRowLevelDpp re-points the
-    // struct subquery at the key column) hands the MATCHED rows' key
-    // set to the scan at runtime; bloom + range admit only part 2 —
-    // the rewrite footprint is 1 part, not the table
+    // the matched-row group filter (the row-level scan advertises
+    // the key column alone) hands the MATCHED rows' key set to the
+    // scan at runtime; bloom + range admit only part 2 — the rewrite
+    // footprint is 1 part, not the table
     spark.sql("""MERGE INTO grl.ns.mrg2 t USING mrg2_src s
       ON t.k2 = s.sk2
       WHEN MATCHED AND s.ns = 'hit2' THEN DELETE

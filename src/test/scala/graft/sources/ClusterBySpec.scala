@@ -84,7 +84,7 @@ class ClusterBySpec extends SparkSpec {
       "spark.sql.adaptive.coalescePartitions.enabled")
     val wh = spark.conf.get(s"spark.sql.catalog.$c.warehouse")
     val conf = spark.sessionState.newHadoopConf()
-    assert(ManifestSink.readTableSpec(conf, s"$wh/wh/t") ===
+    assert(ManifestSink.readHeader(conf, s"$wh/wh/t").table.spec ===
       TableSpec(orderBy = Some("k")))
     assert(spark.sql(s"SELECT count(*) FROM $c.wh.t").head.getLong(0)
       === 4000L)

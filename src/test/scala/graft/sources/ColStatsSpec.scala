@@ -19,6 +19,14 @@ class ColStatsSpec extends graft.SparkSpec {
     spark.read.format("graft.sources.ManifestSource")
       .option("path", t).load()
 
+  /** Declare table properties on a path table before its first
+    * write: a schema-only version carrying them in its record, which
+    * the write plans onto and carries forward. */
+  private def declare(dir: String, props: Map[String, String]): Unit =
+    ManifestSink.publishSnapshot(conf, dir,
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, u STRING"),
+      Seq.empty, Some((ColMap.identity(2), TableRecord(props = props))))
+
   private def scanParts(df: DataFrame): Int =
     df.queryExecution.executedPlan.collectFirst {
       case b: BatchScanExec => b.inputPartitions.length
@@ -66,8 +74,7 @@ class ColStatsSpec extends graft.SparkSpec {
     "filter keeps its width where the default 2^16 saturates") {
     import spark.implicits._
     def bloomHexLen(dir: String, extraProps: Map[String, String]): Int = {
-      ManifestSink.writeTableProps(conf, dir,
-        Map("graft.bloom_cols" -> "u") ++ extraProps)
+      declare(dir, Map("graft.bloom_cols" -> "u") ++ extraProps)
       (0L until 20000L).map(i => (i, s"u$i")).toDF("k", "u")
         .coalesce(1)
         .write.format("graft.sources.ManifestSink")
@@ -91,7 +98,7 @@ class ColStatsSpec extends graft.SparkSpec {
     "keeps the declared 2^18 secondary width instead of shrinking it") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-bbits-rb").toString
-    ManifestSink.writeTableProps(conf, dir,
+    declare(dir,
       Map("graft.bloom_cols" -> "u", "graft.bloom_bits" -> "262144"))
     (0L until 20000L).map(i => (i, s"u$i")).toDF("k", "u")
       .coalesce(1)
@@ -115,8 +122,8 @@ class ColStatsSpec extends graft.SparkSpec {
     "admits; absent value prunes everything; missing bloom never prunes") {
     val dir = Files.createTempDirectory("graft-cbloom").toString
     // declare the bloom BEFORE the write: the writer factory resolves
-    // graft.bloom_cols from the props sidecar on the driver
-    ManifestSink.writeTableProps(conf, dir, Map("graft.bloom_cols" -> "u"))
+    // graft.bloom_cols from the head's table record on the driver
+    declare(dir, Map("graft.bloom_cols" -> "u"))
     import spark.implicits._
     (0L until 400L).map(i => (i, "h" + ((i * 37) % 400)))
       .toDF("k", "u").repartition(4, col("k"))

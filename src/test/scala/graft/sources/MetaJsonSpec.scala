@@ -124,20 +124,28 @@ class MetaJsonSpec extends AnyFunSuite {
     })
   }
 
+  // The layout spec, props and constraints travel in the manifest header's
+  // table record; namespace props and tags keep their own records.
   test("table sidecars round-trip: layout spec, props, constraints, tags") {
     val spec = for {
       layout <- Gen.option(Gen.zip(Gen.choose(0, 4096), str))
       tf <- someStr
       order <- someStr
     } yield TableSpec(layout, tf, order)
-    check("spec", Prop.forAll(spec) { s =>
-      MetaJson.decodeTableSpec(MetaJson.encodeTableSpec(s)) == s
+    val props = small(Gen.zip(str, str)).map(_.toMap)
+    val record = for {
+      s <- spec
+      p <- props
+      cs <- small(Gen.zip(str, str))
+    } yield TableRecord(s, p, cs)
+    check("record", Prop.forAll(record, Gen.option(colMap)) { (t, cm) =>
+      val lines = MetaJson.lines(MetaJson.encodeManifest("k BIGINT", cm,
+        Some((1, "create", None)), Seq.empty, t))
+      MetaJson.decodeHeader(lines) == ManifestHeader(Some("k BIGINT"), cm,
+        Some(1), "create", None, t)
     })
-    check("props", Prop.forAll(small(Gen.zip(str, str)).map(_.toMap)) { p =>
+    check("props", Prop.forAll(props) { p =>
       MetaJson.decodeProps(MetaJson.encodeProps(p)) == p
-    })
-    check("constraints", Prop.forAll(small(Gen.zip(str, str))) { cs =>
-      MetaJson.decodeConstraints(MetaJson.encodeConstraints(cs)) == cs
     })
     check("tag", Prop.forAll(Gen.choose(0, Int.MaxValue)) { v =>
       MetaJson.decodeTag(MetaJson.encodeTag(v)) == v
