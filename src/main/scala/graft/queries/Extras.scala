@@ -396,8 +396,8 @@ GROUP BY 1 ORDER BY 1""")),
           .select(col("event_id"), col("event_type"), col("value"))
           .write.format("graft.sources.ManifestSink")
           .option("path", target).mode("overwrite").save()
-        val parts = graft.sources.ManifestSink.readManifest(
-          spark.sparkContext.hadoopConfiguration, target)
+        val parts = graft.sources.ManifestLog(
+          spark.sparkContext.hadoopConfiguration, target).snapshot().partRanges
         val nonEmpty = parts.filter(_._2 > 0)
         import spark.implicits._
         Seq((parts.map(_._2).sum,
@@ -525,8 +525,8 @@ FROM events WHERE event_type = 'purchase'""")),
           .write.format("graft.sources.ManifestSink")
           .option("path", packed).mode("overwrite").save()
         val conf = spark.sessionState.newHadoopConf()
-        val before = graft.sources.ManifestSink.readManifest(conf, small)
-        val after = graft.sources.ManifestSink.readManifest(conf, packed)
+        val before = graft.sources.ManifestLog(conf, small).snapshot().partRanges
+        val after = graft.sources.ManifestLog(conf, packed).snapshot().partRanges
         val nonEmpty = after.filter(_._2 > 0)
         import spark.implicits._
         Seq((before.size, after.size, after.map(_._2).sum,

@@ -5102,10 +5102,9 @@ FROM events""")),
           "overwrite")
         writeHistory(base.filter(col("event_id") % 2 =!= 0), tbl,
           "append")
-        val d = new Path(tbl)
-        val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def mtime(v: Int): Long = fs.getFileStatus(new Path(d,
-          graft.sources.ManifestSink.versionFile(v))).getModificationTime
+        val log = graft.sources.ManifestLog(
+          spark.sparkContext.hadoopConfiguration, tbl)
+        def mtime(v: Int): Long = log.commitTime(v)
         val cutoff =
           new java.sql.Timestamp((mtime(1) + mtime(2)) / 2 + 1).toString
         val q = spark.readStream

@@ -70,7 +70,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     MetaJson.replace(conf, dir, NsPropsFile, MetaJson.encodeProps(props))
 
   private def isTableDir(ns: Array[String]): Boolean =
-    ManifestSink.readSchema(conf, (warehouse +: ns).mkString("/")).isDefined
+    isTable((warehouse +: ns).mkString("/"))
 
   private def nsExists(ns: Array[String]): Boolean = {
     val p = nsPath(ns)
@@ -171,11 +171,15 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
 
   private def conf = ManifestSink.driverConf()
 
+  /** Does `dir` hold a table (a committed snapshot with a schema)? */
+  private def isTable(dir: String): Boolean =
+    ManifestLog(conf, dir).snapshot().schema.isDefined
+
   private def tablePath(ident: Identifier): String =
     (warehouse +: ident.namespace() :+ ident.name()).mkString("/")
 
   override def tableExists(ident: Identifier): Boolean =
-    ManifestSink.readSchema(conf, tablePath(ident)).isDefined
+    isTable(tablePath(ident))
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val ns = new Path((warehouse +: namespace).mkString("/"))
@@ -184,15 +188,14 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     fs.listStatus(ns).toSeq
       .filter(_.isDirectory)
       .map(_.getPath.getName)
-      .filter(t => ManifestSink
-        .readSchema(conf, (warehouse +: namespace :+ t).mkString("/")).isDefined)
+      .filter(t => isTable((warehouse +: namespace :+ t).mkString("/")))
       .map(t => Identifier.of(namespace, t))
       .toArray
   }
 
   override def loadTable(ident: Identifier): Table = {
     val p = tablePath(ident)
-    val head = ManifestSink.readHeader(conf, p)
+    val head = ManifestLog(conf, p).snapshot().header
     head.schemaCm match {
       case Some((schema, cm)) =>
         // re-attach COLUMN DEFAULTS as the field-metadata pair Spark's
@@ -244,7 +247,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         // files.
         if (ident.namespace().nonEmpty) {
           val parent = (warehouse +: ident.namespace()).mkString("/")
-          if (ManifestSink.readSchema(conf, parent).isDefined)
+          if (isTable(parent))
             MetaTables.forName(parent, ident.name()).foreach(t => return t)
         }
         throw new NoSuchTableException(ident)
@@ -261,25 +264,31 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * Returns the read-only table (history is not writable). */
   override def loadTable(ident: Identifier, version: String): Table = {
     val p = tablePath(ident)
-    val v = try version.toInt catch {
+    val log = ManifestLog(conf, p)
+    val ref = try Ref.At(version.toInt) catch {
       case _: NumberFormatException =>
-        ManifestSink.readTag(conf, p, version).getOrElse {
-          if (ManifestSink.listBranches(conf, p).contains(version)) {
-            val schema = ManifestSink.readBranchSchema(conf, p, version)
-              .getOrElse(throw new NoSuchTableException(ident))
-            return new ManifestReadTable(p, schema, None,
-              branch = Some(version))
-          }
-          throw new IllegalArgumentException(
+        ManifestSink.readTag(conf, p, version).map(Ref.At).getOrElse {
+          if (log.branches.contains(version)) Ref.Branch(version)
+          else throw new IllegalArgumentException(
             s"'$version' is neither a snapshot version, a tag, nor a " +
               s"branch of $ident (tags: ${ManifestSink.listTags(conf, p)
                 .map(_._1).mkString(", ")}; branches: " +
-              s"${ManifestSink.listBranches(conf, p).mkString(", ")})")
+              s"${log.branches.mkString(", ")})")
         }
     }
-    val schema = ManifestSink.readSchema(conf, p, Some(v))
-      .getOrElse(throw new NoSuchTableException(ident))
-    new ManifestReadTable(p, schema, Some(v))
+    readTable(ident, log, ref)
+  }
+
+  /** The read-only table of one resolved snapshot (history is not
+    * writable). */
+  private def readTable(ident: Identifier, log: ManifestLog, ref: Ref): Table = {
+    val snap = log.snapshot(ref)
+    val schema = snap.schema.getOrElse(throw new NoSuchTableException(ident))
+    ref match {
+      case Ref.Branch(b, _) => new ManifestReadTable(log.dir, schema, None,
+        branch = Some(b))
+      case _ => new ManifestReadTable(log.dir, schema, Some(snap.version))
+    }
   }
 
   /** SQL time travel by TIME: `… TIMESTAMP AS OF '2026-01-01 00:00:00'`
@@ -288,25 +297,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * claimed, so their modification time IS the commit time; an
     * instant older than the first commit fails loudly rather than
     * serving an empty table. Spark hands micros since epoch. */
-  override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val p = tablePath(ident)
-    val ms = timestampMicros / 1000L
-    val dir = new org.apache.hadoop.fs.Path(p)
-    val fs = dir.getFileSystem(conf)
-    val versions = ManifestSink.listVersions(conf, p)
-    val atOrBefore = versions.filter { v =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(dir,
-        ManifestSink.versionFile(v))).getModificationTime <= ms
-    }
-    val v = atOrBefore.lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no snapshot of $ident committed at or before " +
-          s"timestamp_micros=$timestampMicros (versions: " +
-          s"${versions.mkString(",")})"))
-    val schema = ManifestSink.readSchema(conf, p, Some(v))
-      .getOrElse(throw new NoSuchTableException(ident))
-    new ManifestReadTable(p, schema, Some(v))
-  }
+  override def loadTable(ident: Identifier, timestampMicros: Long): Table =
+    readTable(ident, ManifestLog(conf, tablePath(ident)),
+      Ref.AsOf(timestampMicros / 1000L))
 
   /** The v2 `Column[]` create path: Spark delivers identity specs as
     * first-class [[Column]] attributes (NOT re-encoded into field
@@ -415,9 +408,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     // a table is born as a schema-only snapshot carrying its record:
     // same commit protocol, zero parts — readers see an empty
     // versioned table immediately
-    ManifestSink.publishSnapshot(conf, tablePath(ident), clean, Seq.empty,
-      restate = Some((ColMap.identity(clean.fields.length)
-        .copy(defaults = defaults), TableRecord(spec, userProps))),
+    ManifestSink.publishRebase(conf, tablePath(ident), _ => Seq.empty,
+      HeaderChange.Restate(clean, ColMap.identity(clean.fields.length)
+        .copy(defaults = defaults), TableRecord(spec, userProps)),
       op = "create")
     loadTable(ident)
   }
@@ -518,16 +511,15 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     *    inherit their per-part min/max.
     *
     * The whole ALTER folds into ONE commit of the new schema, mapping
-    * and [[TableRecord]] (layout, properties, constraints), pinned by
-    * `strictBase` to the head it read — a racing commit fails the DDL
+    * and [[TableRecord]] (layout, properties, constraints), pinned to
+    * the snapshot it read — a racing commit fails the DDL
     * loudly rather than composing a half-stale table, and a change
     * that fails mid-fold publishes nothing. Type changes stay
     * rejected: committed parts would be re-interpreted. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val p = tablePath(ident)
-    val baseVersion = ManifestSink.listVersions(conf, p)
-      .lastOption.getOrElse(0)
-    val head = ManifestSink.readHeader(conf, p, Some(baseVersion))
+    val base = ManifestLog(conf, p).snapshot()
+    val head = base.header
     val (schema, colmap0) = head.schemaCm
       .getOrElse(throw new NoSuchTableException(ident))
     var constraints = head.table.constraints
@@ -935,13 +927,12 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     }
     val table = TableRecord(spec, props, constraints)
     if (schemaChanged || table != head.table)
-      ManifestSink.publishRebase(conf, p, widened,
+      ManifestSink.publishRebase(conf, p,
         rebase = parts => parts.map(m => m.copy(cstats =
           renames.foldLeft(m.cstats) { case (cs, (from, to)) =>
             cs.get(from).fold(cs)(st => cs - from + (to -> st))
           })),
-        strictBase = if (baseVersion > 0) Some(baseVersion) else None,
-        restate = Some((colmap, table)),
+        HeaderChange.Restate(widened, colmap, table), base = Some(base),
         op = ((if (schemaChanged) Seq("alter") else Nil) ++ ops).distinct
           .mkString(","))
     loadTable(ident)
@@ -989,13 +980,11 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           if p == from || p.startsWith(from + "/") =>
         to + p.substring(from.length)
       }.getOrElse(p)
-    fs.listStatus(dst).map(_.getPath.getName).filter { n =>
-      n.startsWith("_MANIFEST.") && n.endsWith(".json")
-    }.foreach { n =>
-      val body = MetaJson.read(conf, new Path(dst, n)).getOrElse("")
+    ManifestLog(conf, dst.toString).files.foreach { f =>
+      val body = MetaJson.read(conf, f).getOrElse("")
       val repointed = MetaJson.lines(body)
         .map(MetaJson.repointLine(_, repoint)).mkString("", "\n", "\n")
-      if (repointed != body) MetaJson.replace(conf, dst, n, repointed)
+      if (repointed != body) MetaJson.replace(conf, dst, f.getName, repointed)
     }
   }
 
@@ -1282,8 +1271,8 @@ private[sources] class GraftCatalogTable(
     * time-travelable and the data files stay until vacuum. Same
     * semantics as INSERT OVERWRITE of zero rows. */
   override def truncateTable(): Boolean = {
-    ManifestSink.publishSnapshot(ManifestSink.driverConf(), path,
-      tableSchema, Seq.empty, op = "truncate")
+    ManifestSink.publishRebase(ManifestSink.driverConf(), path,
+      _ => Seq.empty, HeaderChange.Keep, op = "truncate")
     true
   }
 
@@ -1311,7 +1300,7 @@ private[sources] class GraftCatalogTable(
     * set, UPDATE / DELETE / MERGE read the BRANCH head and commit to
     * the branch line — the audit half of write-audit-publish gains
     * full DML, main stays untouched until fast_forward. Conflict
-    * detection (strictBase + footprint) pins the branch's own
+    * detection (base + footprint) pins the branch's own
     * version line. Resolved per OPERATION, not per table load, so
     * one session can interleave branch and main statements. */
   private def sessionBranch: Option[String] =
@@ -1354,8 +1343,8 @@ private[sources] class GraftCatalogTable(
   }
 
   private def decide(filters: Array[V1Filter]): Option[Seq[PartMeta]] =
-    decideOn(ManifestSink.readManifestMeta(
-      ManifestSink.driverConf(), path, None), filters)
+    decideOn(ManifestLog(ManifestSink.driverConf(), path).snapshot().parts,
+      filters)
 
   /** The DELETEs answered by a commit alone: equality deletes under
     * `graft.delete.mode=eq`, and the metadata fast path when every
@@ -1382,12 +1371,11 @@ private[sources] class GraftCatalogTable(
     // new head makes the delete stats-undecidable, fail loudly rather
     // than half-apply (the caller re-plans → row-level rewrite)
     ManifestSink.publishRebase(ManifestSink.driverConf(), path,
-      tableSchema,
       rebase = head => decideOn(head, filters).getOrElse(
         throw new java.util.ConcurrentModificationException(
           s"metadata DELETE on $path no longer stats-decidable " +
             "after a concurrent commit; re-plan (row-level rewrite)")),
-      strictBase = None, op = "delete")
+      HeaderChange.Keep, op = "delete")
   }
 
   override def name(): String = ident.toString
@@ -1559,7 +1547,7 @@ private[sources] class GraftPartitionedCatalogTable[V: Ordering](
 
   override def listPartitionIdentifiers(names: Array[String],
       id: InternalRow): Array[InternalRow] = {
-    val vals = ManifestSink.readManifestMeta(conf, path, None)
+    val vals = ManifestLog(conf, path).snapshot().parts
       .flatMap(valueOf(_)).distinct.sorted
     val filtered =
       if (names.isEmpty) vals
@@ -1576,7 +1564,7 @@ private[sources] class GraftPartitionedCatalogTable[V: Ordering](
   override def dropPartition(id: InternalRow): Boolean = {
     val want = codec.fromRow(id)
     var dropped = false
-    ManifestSink.publishRebase(conf, path, tableSchema,
+    ManifestSink.publishRebase(conf, path,
       rebase = head => {
         val straddlers = head.filter(m => valueOf(m).isEmpty && mayHold(m, want))
         require(straddlers.isEmpty,
@@ -1587,7 +1575,7 @@ private[sources] class GraftPartitionedCatalogTable[V: Ordering](
         dropped = dropped || hit.nonEmpty
         keep
       },
-      strictBase = None, op = "drop-partition")
+      HeaderChange.Keep, op = "drop-partition")
     dropped
   }
 
@@ -1706,15 +1694,13 @@ private[sources] object MetaTables {
     "history" -> table("version INT, operation STRING, n_parts BIGINT, " +
       "n_rows BIGINT, n_vectored BIGINT, total_bytes BIGINT, " +
       "commit_time_ms BIGINT") { (conf, path) =>
-      val dir = new Path(path)
-      val fs = dir.getFileSystem(conf)
-      ManifestSink.listVersions(conf, path).map { v =>
-        val parts = ManifestSink.readManifestMeta(conf, path, Some(v))
-        Seq(v, ManifestSink.readOp(conf, path, Some(v)),
-          parts.size.toLong, parts.map(_.visibleRows).sum,
+      val log = ManifestLog(conf, path)
+      log.versions.map { v =>
+        val snap = log.snapshot(Ref.At(v))
+        val parts = snap.parts
+        Seq(v, snap.op, parts.size.toLong, parts.map(_.visibleRows).sum,
           parts.count(_.hasDv).toLong, parts.map(_.bytes).sum,
-          fs.getFileStatus(new Path(dir, ManifestSink.versionFile(v)))
-            .getModificationTime)
+          log.commitTime(v))
       }
     },
     // per data part of the head snapshot (Iceberg's `.files`): physical
@@ -1737,7 +1723,8 @@ private[sources] object MetaTables {
       "has_dv BOOLEAN, dv_count BIGINT, bytes BIGINT, bucket INT, " +
       "col_stats STRING, key_sum BIGINT, split_value STRING, " +
       "eq_clauses INT, is_sorted BOOLEAN") { (conf, path) =>
-      val (parts, head) = ManifestSink.readSnapshot(conf, path)
+      val snap = ManifestLog(conf, path).snapshot()
+      val (parts, head) = (snap.parts, snap.header)
       val splitCol = head.table.spec.layout.collect { case (0, c) => c }
       val key = keyOf(head.schema)
       // the key and first string have their own view columns
@@ -1770,7 +1757,8 @@ private[sources] object MetaTables {
     "partitions" -> table("partition STRING, spec STRING, parts INT, " +
       "n_rows BIGINT, visible_rows BIGINT, bytes BIGINT, key_min BIGINT, " +
       "key_max BIGINT, dv_parts INT, eq_parts INT") { (conf, path) =>
-      val (metas, head) = ManifestSink.readSnapshot(conf, path)
+      val snap = ManifestLog(conf, path).snapshot()
+      val (metas, head) = (snap.parts, snap.header)
       val splitCol = head.table.spec.layout.collect { case (0, c) => c }
       val key = keyOf(head.schema)
       def keyStat(m: PartMeta) = key.flatMap(m.cstats.get)
@@ -1797,28 +1785,29 @@ private[sources] object MetaTables {
     // publish" in write-audit-publish
     "branches" -> table("branch STRING, head_version INT, n_parts BIGINT, " +
       "n_rows BIGINT") { (conf, path) =>
-      ManifestSink.listBranches(conf, path).sorted.map { b =>
-        val head = ManifestSink.listBranchVersions(conf, path, b).last
-        val parts = ManifestSink.readBranchMeta(conf, path, b, Some(head))
-        Seq(b, head, parts.size.toLong, parts.map(_.visibleRows).sum)
+      val log = ManifestLog(conf, path)
+      log.branches.map { b =>
+        val snap = log.snapshot(Ref.Branch(b))
+        Seq(b, snap.version, snap.parts.size.toLong,
+          snap.parts.map(_.visibleRows).sum)
       }
     },
     // one row per tag (immutable named ref) with its pinned version and
     // that snapshot's visible row count
     "tags" -> table("name STRING, version INT, n_rows BIGINT") { (conf, path) =>
+      val log = ManifestLog(conf, path)
       ManifestSink.listTags(conf, path).map { case (n, v) =>
-        Seq(n, v, ManifestSink.readManifestMeta(conf, path, Some(v))
-          .map(_.visibleRows).sum)
+        Seq(n, v, log.snapshot(Ref.At(v)).parts.map(_.visibleRows).sum)
       }
     },
     // ALL named refs (Iceberg's `.refs`): branches and tags side by
     // side, with `main` listed explicitly at the head version so the
     // view is total
     "refs" -> table("name STRING, type STRING, version INT") { (conf, path) =>
-      val main = ManifestSink.listVersions(conf, path).lastOption
-        .map(v => ("main", "branch", v)).toSeq
-      val branches = ManifestSink.listBranches(conf, path).map(b =>
-        (b, "branch", ManifestSink.listBranchVersions(conf, path, b).last))
+      val log = ManifestLog(conf, path)
+      val main = log.versions.lastOption.map(v => ("main", "branch", v)).toSeq
+      val branches = log.branches.map(b =>
+        (b, "branch", log.branchVersions(b).last))
       val tags = ManifestSink.listTags(conf, path).map {
         case (t, v) => (t, "tag", v)
       }
@@ -1831,7 +1820,7 @@ private[sources] object MetaTables {
     // physical column does this name bind to, which names are burned"
     "columns" -> table("position INT, name STRING, type STRING, " +
       "field_id INT, stats_role STRING, retired BOOLEAN") { (conf, path) =>
-      val (schema, cm) = ManifestSink.readSchemaAndColMap(conf, path)
+      val (schema, cm) = ManifestLog(conf, path).snapshot().header.schemaCm
         .getOrElse(throw new IllegalStateException(
           s"no committed schema at $path"))
       val keyIdx = schema.fields.indexWhere(_.dataType == LongType)

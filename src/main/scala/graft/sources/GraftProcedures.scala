@@ -96,7 +96,7 @@ private[sources] abstract class GraftProcedure(
   protected def tableDir(table: String): String = {
     require(table.nonEmpty, s"$procName: 'table' must be non-empty")
     val dir = (warehouse +: table.split('.').toSeq).mkString("/")
-    require(ManifestSink.readSchema(ManifestSink.driverConf(), dir).isDefined,
+    require(ManifestLog(ManifestSink.driverConf(), dir).snapshot().schema.isDefined,
       s"$procName: no manifest table '$table' under $warehouse")
     dir
   }
@@ -189,8 +189,7 @@ private[sources] final class CompactProcedure(warehouse: String)
         // derive the file count from the HEAD's committed byte stats
         // (legacy parts without a bytes field contribute 0 — the
         // derived count only shrinks, never inflates)
-        val head = ManifestSink.readManifestMeta(
-          ManifestSink.driverConf(), dir, None)
+        val head = ManifestLog(ManifestSink.driverConf(), dir).snapshot().parts
         val total = head.map(p => math.max(0L, p.bytes)).sum
         math.min(Int.MaxValue.toLong,
           math.max(1L, (total + targetBytes - 1) / targetBytes)).toInt
@@ -334,7 +333,7 @@ private[sources] final class RemoveOrphanFilesProcedure(warehouse: String)
     val dir = tableDir(input.getUTF8String(0).toString)
     val conf = ManifestSink.driverConf()
     val keepAll =
-      math.max(1, ManifestSink.listVersions(conf, dir).length)
+      math.max(1, ManifestLog(conf, dir).versions.length)
     val stats = ManifestMaintenance.expireSnapshots(conf, dir,
       keepLast = keepAll, orphanGraceMs = input.getLong(1),
       dryRun = !input.isNullAt(2) && input.getBoolean(2))
@@ -471,7 +470,7 @@ private[sources] final class TagProcedure(warehouse: String)
     val tagName = input.getUTF8String(1).toString
     val conf = ManifestSink.driverConf()
     val v = input.getInt(2) match {
-      case -1 => ManifestSink.listVersions(conf, dir).lastOption.getOrElse(
+      case -1 => ManifestLog(conf, dir).versions.lastOption.getOrElse(
         throw new IllegalStateException(s"no snapshots to tag at $dir"))
       case n => n
     }
@@ -679,22 +678,22 @@ private[sources] final class CloneProcedure(warehouse: String)
     val targetRel = input.getUTF8String(1).toString
     require(targetRel.nonEmpty, "clone: 'target_table' must be non-empty")
     val targetDir = (warehouse +: targetRel.split('.').toSeq).mkString("/")
-    require(ManifestSink.readSchema(conf, targetDir).isEmpty,
+    require(ManifestLog(conf, targetDir).snapshot().schema.isEmpty,
       s"clone: target table '$targetRel' already exists")
-    val versions = ManifestSink.listVersions(conf, srcDir)
-    val v = input.getInt(2) match {
-      case 0 => versions.lastOption.getOrElse(0)
+    val log = ManifestLog(conf, srcDir)
+    val src = log.snapshot(input.getInt(2) match {
+      case 0 => Ref.Head
       case n =>
-        require(versions.contains(n),
-          s"clone: source has no snapshot $n (history: $versions)")
-        n
-    }
-    val (parts, head) = ManifestSink.readSnapshot(conf, srcDir, Some(v))
-    val (schema, cm) = head.schemaCm.getOrElse(throw new IllegalStateException(
-      s"clone: unreadable source schema at $srcDir"))
-    ManifestSink.publishSnapshot(conf, targetDir, schema, parts,
-      Some((cm, head.table)), op = "clone")
-    result(v, parts.size, parts.map(_.visibleRows).sum)
+        require(log.versions.contains(n),
+          s"clone: source has no snapshot $n (history: ${log.versions})")
+        Ref.At(n)
+    })
+    val (schema, cm) = src.header.schemaCm.getOrElse(
+      throw new IllegalStateException(
+        s"clone: unreadable source schema at $srcDir"))
+    ManifestSink.publishRebase(conf, targetDir, _ => src.parts,
+      HeaderChange.Restate(schema, cm, src.header.table), op = "clone")
+    result(src.version, src.parts.size, src.parts.map(_.visibleRows).sum)
   }
 }
 
@@ -764,8 +763,8 @@ private[sources] final class SetLayoutProcedure(warehouse: String)
     val orderBy =
       if (input.isNullAt(2)) None
       else Some(input.getUTF8String(2).toString.trim).filter(_.nonEmpty)
-    val base = ManifestSink.listVersions(conf, dir).lastOption.getOrElse(0)
-    val head = ManifestSink.readHeader(conf, dir, Some(base))
+    val base = ManifestLog(conf, dir).snapshot()
+    val head = base.header
     val (schema, cm) = head.schemaCm.get
     // metadata-only like every layout change — one commit of the new
     // record, pinned to the head it read: existing parts keep their
@@ -783,10 +782,9 @@ private[sources] final class SetLayoutProcedure(warehouse: String)
     }
     val checked = TableLayout.check(layout.copy(orderBy = orderBy), schema)
     if (checked != head.table.spec)
-      ManifestSink.publishRebase(conf, dir, schema, parts => parts,
-        strictBase = Some(base),
-        restate = Some((cm, head.table.copy(spec = checked))),
-        op = "set-layout")
+      ManifestSink.publishRebase(conf, dir, parts => parts,
+        HeaderChange.Restate(schema, cm, head.table.copy(spec = checked)),
+        base = Some(base), op = "set-layout")
     result(render(head.table.spec), render(checked))
   }
 }

@@ -48,7 +48,7 @@ private[sources] class GraftStagedTable(
     ident: Identifier, path: String, tableSchema: StructType,
     table: TableRecord, replace: Boolean,
     resolvesTransforms: Boolean = true,
-    rewrite: Boolean = false)
+    onto: Option[ManifestHeader] = None)
     extends StagedTable with SupportsWrite {
 
   private def spec = table.spec
@@ -78,7 +78,7 @@ private[sources] class GraftStagedTable(
     * stashes the part list. Nothing is published until
     * [[commitStagedChanges]]. A CTAS/RTAS writes onto the table it
     * publishes (fresh identity mapping, its own record); a staged
-    * rewrite onto the table's head. */
+    * rewrite `onto` the header of the snapshot it rewrites. */
   private class StagingWrite(writeSchema: StructType) extends BatchWrite {
     private val token = java.util.UUID.randomUUID().toString.take(8)
 
@@ -87,8 +87,7 @@ private[sources] class GraftStagedTable(
       val dir = new Path(path)
       dir.getFileSystem(sconf.value).mkdirs(dir)
       new ManifestWriterFactory(path, writeSchema, token, sconf, spec,
-        if (rewrite) ManifestSink.readHeader(conf, path)
-        else ManifestHeader(table = table))
+        onto.getOrElse(ManifestHeader(table = table)))
     }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -121,19 +120,14 @@ private[sources] class GraftStagedTable(
     // survive into the new one — an unpartitioned RTAS over a bucketed
     // table must not keep routing inserts through the dead spec, nor
     // stale comments describe new data
-    val restate = Some((ColMap.identity(clean.fields.length)
-      .copy(defaults = defaults), table))
-    if (replace)
-      // one truncate-style snapshot: new schema, only the staged
-      // parts — history keeps every pre-replace version
-      ManifestSink.publishSnapshot(conf, path, clean, staged, restate,
-        op = "replace")
-    else {
-      if (ManifestSink.readSchema(conf, path).isDefined)
-        throw new TableAlreadyExistsException(ident)
-      ManifestSink.publishSnapshot(conf, path, clean, staged, restate,
-        op = "ctas")
-    }
+    val restate = HeaderChange.Restate(clean,
+      ColMap.identity(clean.fields.length).copy(defaults = defaults), table)
+    // RTAS: one truncate-style snapshot — new schema, only the staged
+    // parts; history keeps every pre-replace version
+    if (!replace && ManifestLog(conf, path).snapshot().schema.isDefined)
+      throw new TableAlreadyExistsException(ident)
+    ManifestSink.publishRebase(conf, path, _ => staged, restate,
+      op = if (replace) "replace" else "ctas")
   }
 
   override def abortStagedChanges(): Unit = {
@@ -145,7 +139,7 @@ private[sources] class GraftStagedTable(
     staged = Seq.empty
     // a failed CREATE leaves no table — if no manifest was ever
     // committed here, the directory is pure staging debris
-    if (!replace && ManifestSink.readSchema(conf, path).isEmpty)
+    if (!replace && ManifestLog(conf, path).snapshot().schema.isEmpty)
       fs.delete(new Path(path), true)
   }
 }
@@ -161,26 +155,27 @@ private[sources] object GraftStagedTable {
     * staged write under `spec`. There is no function catalog behind
     * the rewrite, so bucket and days/hours layouts declare no
     * distribution: the caller pre-clusters. The parts are written
-    * onto the table's head (its mapping and bloom settings). Returns the staged parts,
+    * onto the `base` snapshot they come from (its mapping and bloom
+    * settings), which the caller's commit pins. Returns the staged parts,
     * UNPUBLISHED — invisible until the caller's own
     * `publishRebase` lists them. After a crash, vacuum reclaims the
     * orphaned parts and `expire_snapshots` the stale read snapshot
     * (by its prefix). */
-  def stageRewrite(spark: SparkSession, dir: String, schema: StructType,
-      parts: Seq[PartMeta], prefix: String, spec: TableSpec)(
+  def stageRewrite(spark: SparkSession, dir: String, base: Snapshot,
+      schema: StructType, parts: Seq[PartMeta], prefix: String,
+      spec: TableSpec)(
       f: DataFrame => DataFrame): Seq[PartMeta] = {
     val conf = ManifestSink.driverConf()
     val read = new Path(dir,
       s"${prefix}read-${java.util.UUID.randomUUID().toString.take(8)}")
     val fs = read.getFileSystem(conf)
     try {
-      ManifestSink.publishSnapshot(conf, read.toString, schema, parts,
-        ManifestSink.alignedColMap(conf, dir, schema).map(_ -> TableRecord()))
+      ManifestSink.publishReadCopy(conf, read.toString, base, schema, parts)
       val df = f(spark.read.format("graft.sources.ManifestSource")
         .option("path", read.toString).load())
       val table = new GraftStagedTable(Identifier.of(Array.empty, dir), dir,
         df.schema, TableRecord(spec), replace = true,
-        resolvesTransforms = false, rewrite = true)
+        resolvesTransforms = false, onto = Some(base.header))
       GraftDatasets.ofRows(spark, AppendData.byPosition(
         DataSourceV2Relation.create(table, None, None),
         df.queryExecution.logical))

@@ -64,16 +64,15 @@ private[sources] object ManifestCow {
       s"predicate not supported for copy-on-write: $other")
   }
 
-  /** The REPLACE WHERE kernel: classify the pinned base `parts`
-    * against the predicate's key conjuncts, run the distributed
+  /** The REPLACE WHERE kernel: classify the pinned `base` snapshot's
+    * parts against the predicate's key conjuncts, run the distributed
     * survivor rewrite for the straddling parts, and return (touched
     * part paths, rewritten survivor parts) — WITHOUT publishing. The
     * caller owns the commit, so a REPLACE WHERE can fold
     * `filterNot(touched) ++ rewritten ++ itsNewParts` into ONE atomic
     * snapshot (delete-half and append-half never visible separately). */
   private[sources] def rewriteSurvivors(path: String, schema: StructType,
-      filters: Array[Filter],
-      parts: Seq[PartMeta]): (Set[String], Seq[PartMeta]) = {
+      filters: Array[Filter], base: Snapshot): (Set[String], Seq[PartMeta]) = {
     val spark = SparkSession.active
 
     // Classify on the key interval of the TOP-LEVEL key conjuncts
@@ -93,7 +92,7 @@ private[sources] object ManifestCow {
         }
       case None => 'm'
     }
-    val (dropped, affected) = parts.filter(disposition(_) != 'u')
+    val (dropped, affected) = base.parts.filter(disposition(_) != 'u')
       .partition(disposition(_) == 'd')
 
     // head-aware rebases + footprints from here on: the parts this
@@ -107,7 +106,7 @@ private[sources] object ManifestCow {
     // three-valued-logic contract a naive `!pred` breaks. Survivors
     // stage unlaid-out: REPLACE WHERE leaves placement to compaction.
     val pred = filters.map(toColumn).reduceOption(_ && _).getOrElse(lit(true))
-    val rewritten = GraftStagedTable.stageRewrite(spark, path, schema,
+    val rewritten = GraftStagedTable.stageRewrite(spark, path, base, schema,
       affected, "_cow-", TableSpec())(_.filter(not(coalesce(pred, lit(false)))))
     // dropped parts stay referenced only by prior snapshots
     (droppedPaths ++ affected.map(_.path), rewritten)

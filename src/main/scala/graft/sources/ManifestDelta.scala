@@ -88,8 +88,7 @@ private[sources] class ManifestDeltaOp(
       override def build(): DeltaWrite = new DeltaWrite {
         override def toBatch: DeltaBatchWrite =
           // a pure DELETE projects no data columns (empty write
-          // schema) — the committed snapshot must still carry the
-          // TABLE schema in its header
+          // schema): its writers are prepared over the TABLE schema
           new ManifestDeltaBatchWrite(path,
             if (info.schema().fields.isEmpty) schema else info.schema(),
             ManifestDeltaOp.this,
@@ -117,7 +116,7 @@ private[sources] class ManifestDeltaBatchWrite(
     dir.getFileSystem(conf.value).mkdirs(dir)
     // MERGE INSERT cannot generate identity/generated values on this
     // path; a NULL in a computed slot refuses rather than landing
-    val head = ManifestSink.readHeader(conf.value, path, None, op.branch)
+    val head = op.scannedOrFail._2.header
     new ManifestDeltaWriterFactory(path, schema, token, conf, head,
       ComputedColumns.guardSlots(head.table.props, schema).toArray)
   }
@@ -153,12 +152,12 @@ private[sources] class ManifestDeltaBatchWrite(
     // a statement that flagged and inserted nothing changes nothing:
     // no empty version
     if (updated.nonEmpty || newParts.nonEmpty)
-      ManifestSink.publishRebase(conf.value, path, schema,
+      ManifestSink.publishRebase(conf.value, path,
         head => head.map(p => updated.get(p.path)
           .map { case (ref, card) =>
             p.copy(dvRef = ref, dvCard = card)
           }.getOrElse(p)) ++ newParts,
-        strictBase = Some(base),
+        HeaderChange.Keep, base = Some(base),
         footprint = Some(updated.keySet),
         branch = op.branch,
         op = op.command().toString.toLowerCase)

@@ -164,9 +164,8 @@ private[sources] object ManifestEq {
   def canDelete(spark: SparkSession, path: String, schema: StructType,
       filters: Array[V1Filter]): Boolean =
     eqEnabled(spark) && {
-      lazy val cm = ManifestSink.readSchemaAndColMap(
-        ManifestSink.driverConf(), path)
-        .map(_._2).getOrElse(ColMap.identity(schema.fields.length))
+      lazy val cm = ManifestLog(ManifestSink.driverConf(), path).snapshot()
+        .header.schemaCm.map(_._2).getOrElse(ColMap.identity(schema.fields.length))
       translate(schema, filters).exists { case (col, vs) =>
         clauseOf(schema, cm, col, vs).isDefined
       } || translateRange(schema, filters).exists { case (col, lo, hi) =>
@@ -183,13 +182,13 @@ private[sources] object ManifestEq {
       filters: Array[V1Filter],
       branch: Option[String] = None): Unit = {
     val conf = ManifestSink.driverConf()
-    val cm = ManifestSink.readSchemaAndColMap(conf, path).map(_._2)
-      .getOrElse(ColMap.identity(schema.fields.length))
+    val snapCm = ManifestLog(conf, path).snapshot(Ref.of(None, branch))
+      .header.schemaCm
+    val cm = snapCm.map(_._2).getOrElse(ColMap.identity(schema.fields.length))
     // the clause column's frozen initial default, raw form — parts
     // whose layout predates the column serve it for every row
     def dfltTok(col: String): Option[String] =
-      ColDefaults.byName(schema, ManifestSink.readSchemaAndColMap(conf, path))
-        .get(col).map(_.toString)
+      ColDefaults.byName(schema, snapCm).get(col).map(_.toString)
     translate(schema, filters) match {
       case Some((col, vs)) =>
         val clause = clauseOf(schema, cm, col, vs).getOrElse(
@@ -198,13 +197,13 @@ private[sources] object ManifestEq {
         val dflt = dfltTok(col)
         // an IN-list of only NULLs matches nothing: commit nothing
         if (clause.values.isEmpty) return
-        ManifestSink.publishRebase(conf, path, schema,
+        ManifestSink.publishRebase(conf, path,
           rebase = head => head.map { p =>
             if (mayMatch(p, clause, dflt))
               p.copy(eq = p.eq :+ clause)
             else p
           },
-          strictBase = None, branch = branch, op = "delete")
+          HeaderChange.Keep, branch = branch, op = "delete")
       case None =>
         // RANGE delete (`ts < cutoff`, BETWEEN): one metadata commit —
         // provably-inside parts DROP, straddlers gain the 'L' clause,
@@ -219,7 +218,7 @@ private[sources] object ManifestEq {
           throw new IllegalArgumentException(
             s"range delete: unsupported column '$col' (BIGINT only)"))
         val dflt = dfltTok(col)
-        ManifestSink.publishRebase(conf, path, schema,
+        ManifestSink.publishRebase(conf, path,
           rebase = head => head.flatMap { p =>
             rangeDisposition(p, clause, lo, hi, dflt) match {
               case 'd' => None
@@ -227,7 +226,7 @@ private[sources] object ManifestEq {
               case _   => Some(p)
             }
           },
-          strictBase = None, branch = branch, op = "delete")
+          HeaderChange.Keep, branch = branch, op = "delete")
     }
   }
 }

@@ -56,8 +56,8 @@ object ManifestMaintenance {
     * they stay supersets of the visible ones — sound, just not
     * tightened. A part with zero visible rows keeps only its key and
     * first-string records, with no value and no null (prunes against
-    * any bound on them). Committed with
-    * `strictBase` + the analyzed parts as footprint: stats computed
+    * any bound on them). Committed pinned to the analyzed snapshot
+    * with its parts as footprint: stats computed
     * against this snapshot's vectors must not overwrite a
     * concurrently re-vectored part. Returns (parts updated, new
     * version). */
@@ -67,9 +67,9 @@ object ManifestMaintenance {
     import org.apache.spark.sql.functions.{col, count, max, min}
     import org.apache.spark.sql.types.{LongType, StringType}
     val conf = ManifestSink.driverConf()
-    val baseVersion = ManifestSink.listVersions(conf, dir)
-      .lastOption.getOrElse(0)
-    val (parts, head) = ManifestSink.readSnapshot(conf, dir, Some(baseVersion))
+    val base = ManifestLog(conf, dir).snapshot()
+    val baseVersion = base.version
+    val (parts, head) = (base.parts, base.header)
     val (schema, cm) = head.schemaCm.getOrElse(
       throw new IllegalArgumentException(s"no manifest table at $dir"))
     if (parts.isEmpty) return (0, baseVersion)
@@ -287,11 +287,10 @@ object ManifestMaintenance {
     // the stats commit carries the record with the new NDV/histogram
     // keys; a concurrent schema or record change conflicts (see
     // publishRebase)
-    val v = ManifestSink.publishRebase(conf, dir, schema,
+    val v = ManifestSink.publishRebase(conf, dir,
       ps => ps.map(p => withBlooms.getOrElse(p.path, p)),
-      strictBase = Some(baseVersion),
-      footprint = Some(parts.map(_.path).toSet),
-      restate = Some((cm, head.table.copy(props = props))),
+      HeaderChange.Restate(schema, cm, head.table.copy(props = props)),
+      base = Some(base), footprint = Some(parts.map(_.path).toSet),
       op = "analyze")
     (withBlooms.size, v)
   }
@@ -306,22 +305,21 @@ object ManifestMaintenance {
     * any COW leftovers. The rewrite reads the vectored parts through
     * the normal masking source (staged temp manifest, the
     * [[ManifestCow]] pattern), so "visible rows" has exactly one
-    * definition in the codebase. Pinned to the base version
-    * (strictBase): a commit racing the compaction fails IT loudly —
+    * definition in the codebase. Pinned to the base snapshot: a
+    * commit racing the compaction fails IT loudly —
     * compaction is always safe to retry. Returns the number of parts
     * rewritten. */
   def compactVectors(spark: org.apache.spark.sql.SparkSession,
       dir: String): Int = {
     val conf = ManifestSink.driverConf()
-    val baseVersion = ManifestSink.listVersions(conf, dir)
-      .lastOption.getOrElse(0)
-    val parts = ManifestSink.readManifestMeta(conf, dir, Some(baseVersion))
+    val base = ManifestLog(conf, dir).snapshot()
+    val parts = base.parts
     // merge-on-read debt = deletion vectors AND pending equality-
     // delete clauses; both settle the same way (read masked, write
     // plain parts)
     val vectored = parts.filter(p => p.hasDv || p.eq.nonEmpty)
     if (vectored.isEmpty) return 0
-    rewriteAndSwap(spark, conf, dir, baseVersion, vectored, identity)
+    rewriteAndSwap(spark, conf, dir, base, vectored, identity)
     vectored.size
   }
 
@@ -358,10 +356,9 @@ object ManifestMaintenance {
     val conf = ManifestSink.driverConf()
     require(zorder.isEmpty || clusterBy.forall(_.isEmpty),
       "compact: zorder and cluster_by are mutually exclusive")
-    val baseVersion = ManifestSink.listVersions(conf, dir)
-      .lastOption.getOrElse(0)
-    val (allParts, head) = ManifestSink.readSnapshot(conf, dir, Some(baseVersion))
-    val spec = head.table.spec
+    val base = ManifestLog(conf, dir).snapshot()
+    val allParts = base.parts
+    val spec = base.header.table.spec
     require(zorder.isEmpty || spec.layout.isEmpty,
       "compact: OPTIMIZE ZORDER requires an unpartitioned table layout " +
         "(a bucket/identity spec owns the row placement — CALL " +
@@ -391,7 +388,7 @@ object ManifestMaintenance {
             MetaTables.singleValue(m, sc).contains(v))
         }
     }
-    if (parts.isEmpty) return CompactStats(0, 0, baseVersion)
+    if (parts.isEmpty) return CompactStats(0, 0, base.version)
     val layout: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       if (zorder.nonEmpty) zorderLayout(zorder, targetParts)
       else clusterBy.filter(_.nonEmpty) match {
@@ -414,7 +411,7 @@ object ManifestMaintenance {
         }
       }
     val (rewritten, v) =
-      rewriteAndSwap(spark, conf, dir, baseVersion, parts, layout,
+      rewriteAndSwap(spark, conf, dir, base, parts, layout,
         forcePlainLayout = zorder.nonEmpty,
         scopedSplitLayout = splitValue.isDefined)
     CompactStats(parts.size, rewritten.size, v)
@@ -539,18 +536,18 @@ object ManifestMaintenance {
     * [[compactFiles]]: stage `selected` (vectors included — the
     * masking read defines the surviving rows) re-laid out by `layout`
     * through [[GraftStagedTable.stageRewrite]], and publish
-    * `head − selected + rewritten` pinned to `baseVersion` with
-    * `selected` as the conflict footprint. Returns the rewritten part
+    * `head − selected + rewritten` pinned to `base` with `selected`
+    * as the conflict footprint. Returns the rewritten part
     * metas and the committed version. */
   private def rewriteAndSwap(spark: org.apache.spark.sql.SparkSession,
-      conf: Configuration, dir: String, baseVersion: Int,
+      conf: Configuration, dir: String, base: Snapshot,
       selected: Seq[PartMeta],
       layout: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       forcePlainLayout: Boolean = false,
       scopedSplitLayout: Boolean = false)
       : (Seq[PartMeta], Int) = {
     import org.apache.spark.sql.functions.{col, expr}
-    val head = ManifestSink.readHeader(conf, dir, Some(baseVersion))
+    val head = base.header
     val schema = head.schema
       .getOrElse(throw new IllegalStateException(s"no schema at $dir"))
     // HEAD-SPEC-TARGETING: compaction is the layout MIGRATOR. The
@@ -591,7 +588,7 @@ object ManifestMaintenance {
         case (Some(_), _) if !scopedSplitLayout => identity
         case _ => layout
       }
-    val rewritten = GraftStagedTable.stageRewrite(spark, dir, schema,
+    val rewritten = GraftStagedTable.stageRewrite(spark, dir, base, schema,
       selected, "_compact-", spec)(laidOut)
     // footprint = the parts this compaction replaces: an interleaved
     // append (or DML on an unselected part) composes via the
@@ -599,9 +596,9 @@ object ManifestMaintenance {
     // compaction conflicts loudly — compaction is always safe to
     // retry
     val selectedPaths = selected.map(_.path).toSet
-    val v = ManifestSink.publishRebase(conf, dir, schema,
+    val v = ManifestSink.publishRebase(conf, dir,
       head => head.filterNot(p => selectedPaths.contains(p.path)) ++ rewritten,
-      strictBase = Some(baseVersion), footprint = Some(selectedPaths),
+      HeaderChange.Keep, base = Some(base), footprint = Some(selectedPaths),
       op = "optimize")
     (rewritten, v)
   }
@@ -623,14 +620,11 @@ object ManifestMaintenance {
     * readable in history like everything else the restore rolls over.
     * Returns the new head version. */
   def restore(conf: Configuration, dir: String, version: Int): Int = {
-    val (parts, head) = ManifestSink.readSnapshot(conf, dir, Some(version))
     // schema, column mapping and table record travel together: the
     // restored head is the old snapshot verbatim, never a derivation
     // from the current head (which may have renamed/dropped since)
-    val (schema, cm) = head.schemaCm.getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $version at $dir"))
-    ManifestSink.publishSnapshot(conf, dir, schema, parts,
-      Some((cm, head.table)), op = "restore")
+    republish(conf, dir, ManifestLog(conf, dir).snapshot(Ref.At(version)),
+      s"no snapshot $version at $dir", "restore")
   }
 
   /** FAST-FORWARD the main line to a branch head — the publish step of
@@ -645,13 +639,21 @@ object ManifestMaintenance {
     * on a branch with no commits — publishing "nothing" silently would
     * hide a broken staging pipeline. Returns the new main version. */
   def fastForward(conf: Configuration, dir: String, branch: String): Int = {
-    require(ManifestSink.listBranchVersions(conf, dir, branch).nonEmpty,
+    val log = ManifestLog(conf, dir)
+    require(log.branchVersions(branch).nonEmpty,
       s"branch '$branch' has no commits at $dir — nothing to publish")
-    val (parts, head) = ManifestSink.readSnapshot(conf, dir, None, Some(branch))
-    val (schema, cm) = head.schemaCm.getOrElse(throw new IllegalStateException(
-      s"branch '$branch' at $dir has no schema header"))
-    ManifestSink.publishSnapshot(conf, dir, schema, parts,
-      Some((cm, head.table)), op = "publish")
+    republish(conf, dir, log.snapshot(Ref.Branch(branch)),
+      s"branch '$branch' at $dir has no schema header", "publish")
+  }
+
+  /** Publish `snap` verbatim — parts, schema, mapping and record — as
+    * the next main version. */
+  private def republish(conf: Configuration, dir: String, snap: Snapshot,
+      noSchema: String, op: String): Int = {
+    val (schema, cm) = snap.header.schemaCm.getOrElse(
+      throw new IllegalArgumentException(noSchema))
+    ManifestSink.publishRebase(conf, dir, _ => snap.parts,
+      HeaderChange.Restate(schema, cm, snap.header.table), op = op)
   }
 
   /** Result of one cherry-pick: the new main version, plus what the
@@ -695,19 +697,20 @@ object ManifestMaintenance {
     * work at any table size. */
   def cherrypick(conf: Configuration, dir: String, branch: String,
       version: Int = -1): CherrypickStats = {
-    val bvs = ManifestSink.listBranchVersions(conf, dir, branch)
+    val log = ManifestLog(conf, dir)
+    val bvs = log.branchVersions(branch)
     require(bvs.nonEmpty,
       s"branch '$branch' has no commits at $dir — nothing to cherry-pick")
     val v = if (version == -1) bvs.last else version
     require(bvs.contains(v),
       s"branch '$branch' has no snapshot $v at $dir " +
         s"(has: ${bvs.mkString(", ")})")
-    val picked = ManifestSink.readBranchMeta(conf, dir, branch, Some(v))
-    val (bSchema, bCm) = ManifestSink
-      .readSchemaAndColMap(conf, dir, Some(v), Some(branch))
+    val pickedSnap = log.snapshot(Ref.Branch(branch, Some(v)))
+    val picked = pickedSnap.parts
+    val (bSchema, bCm) = pickedSnap.header.schemaCm
       .getOrElse(throw new IllegalStateException(
         s"branch '$branch' snapshot $v at $dir has no schema header"))
-    val (mSchema, mCm) = ManifestSink.readSchemaAndColMap(conf, dir)
+    val (mSchema, mCm) = log.snapshot().header.schemaCm
       .getOrElse(throw new IllegalStateException(
         s"table $dir has no main schema header"))
     require(bSchema.toDDL == mSchema.toDDL && bCm == mCm,
@@ -715,15 +718,16 @@ object ManifestMaintenance {
         s"diverged from main at $dir — fast_forward or re-stage instead")
     val pickedByPath = picked.map(p => p.path -> p).toMap
     val prev: Seq[PartMeta] = bvs.filter(_ < v).lastOption match {
-      case Some(pv) => ManifestSink.readBranchMeta(conf, dir, branch, Some(pv))
-      case None => ManifestSink.readBranchFork(conf, dir, branch) match {
+      case Some(pv) => log.snapshot(Ref.Branch(branch, Some(pv))).parts
+      // the picked snapshot is the branch's first: it recorded its fork
+      case None => pickedSnap.header.fork match {
         // RECORDED FORK (branch v1 carries the main version it forked
         // from): the exact base, no reconstruction — the pure-append
         // proof below is then the sole (and sufficient) guard against
         // branch commits that dropped or rewrote fork parts. fork=0
         // means main had no version files at fork time: a genuinely
         // empty base, which main version 0 reads as.
-        case Some(f) => ManifestSink.readManifestMeta(conf, dir, Some(f))
+        case Some(f) => log.snapshot(Ref.At(f)).parts
         case None =>
           // LEGACY FORK-POINT RECONSTRUCTION (branches committed before
           // fork recording): main version manifests are immutable, so
@@ -741,8 +745,7 @@ object ManifestMaintenance {
           // parts carry new paths). A legacy branch genuinely forked
           // from empty is indistinguishable from that corruption case,
           // so it refuses too — re-stage or fast_forward.
-          ManifestSink.listVersions(conf, dir).reverse
-            .map(m => ManifestSink.readManifestMeta(conf, dir, Some(m)))
+          log.versions.reverse.map(m => log.snapshot(Ref.At(m)).parts)
             .find(ps => ps.nonEmpty &&
               ps.forall(p => pickedByPath.get(p.path).contains(p)))
             .getOrElse(throw new IllegalArgumentException(
@@ -770,7 +773,9 @@ object ManifestMaintenance {
     require(delta.nonEmpty,
       s"cherry-pick refused: branch '$branch' snapshot $v adds no " +
         s"parts over its base at $dir")
-    val newVersion = ManifestSink.publishRebase(conf, dir, mSchema,
+    // the pick lands on main's header as of its claim (a column main
+    // gained since the check above stays)
+    val newVersion = ManifestSink.publishRebase(conf, dir,
       rebase = head => {
         val headPaths = head.map(_.path).toSet
         val dup = delta.filter(p => headPaths(p.path))
@@ -779,7 +784,7 @@ object ManifestMaintenance {
             s"committed on main at $dir (double publish?)")
         head ++ delta
       },
-      strictBase = None, checkWritten = false, op = "cherrypick")
+      HeaderChange.Keep, op = "cherrypick")
     CherrypickStats(newVersion, delta.size, delta.map(_.rows).sum)
   }
 
@@ -787,13 +792,8 @@ object ManifestMaintenance {
     * a failed audit). Data files the branch staged stay until vacuum
     * decides they are unreferenced. Returns the number of version
     * files removed. */
-  def dropBranch(conf: Configuration, dir: String, branch: String): Int = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    val versions = ManifestSink.listBranchVersions(conf, dir, branch)
-    versions.count(v => fs.delete(
-      new Path(d, ManifestSink.branchVersionFile(branch, v)), false))
-  }
+  def dropBranch(conf: Configuration, dir: String, branch: String): Int =
+    ManifestLog(conf, dir).dropBranch(branch)
 
   /** Expire all but the newest `keepLast` snapshot versions at `dir`,
     * then delete every `part-*` data file no retained manifest
@@ -818,7 +818,8 @@ object ManifestMaintenance {
     require(keepLast >= 1, "must retain at least the head snapshot")
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
-    val versions = ManifestSink.listVersions(conf, dir)
+    val log = ManifestLog(conf, dir)
+    val versions = log.versions
     // a TAG is a promise its snapshot stays readable: tagged versions
     // are pulled out of the expiry set regardless of age (drop the
     // tag to release the pin — Iceberg tag semantics)
@@ -832,9 +833,8 @@ object ManifestMaintenance {
     // resolves against). Composes with keep_last (the newest
     // keep_last survive regardless of age) and tag pins; a cutoff in
     // the future degenerates to pure keep_last retention.
-    def committedBefore(v: Int): Boolean = olderThanMs.forall(ms =>
-      fs.getFileStatus(new Path(d, ManifestSink.versionFile(v)))
-        .getModificationTime < ms)
+    def committedBefore(v: Int): Boolean =
+      olderThanMs.forall(log.commitTime(v) < _)
     val expire = old.filterNot(tagged.contains).filter(committedBefore)
     val retain = versions.filterNot(expire.contains)
 
@@ -849,27 +849,22 @@ object ManifestMaintenance {
     // plus every live BRANCH head's parts: a staged-but-unpublished
     // audit branch references files no main snapshot lists yet, and
     // vacuuming them would corrupt the branch before its publish
-    val branchRefs: Seq[String] =
-      ManifestSink.listBranches(conf, dir).flatMap(b =>
-        ManifestSink.listBranchVersions(conf, dir, b).map(v =>
-          refs(ManifestSink.readBranchMeta(conf, dir, b, Some(v))))).flatten
+    val branchRefs: Seq[String] = log.branches.flatMap(b =>
+      log.branchVersions(b).flatMap(v =>
+        refs(log.snapshot(Ref.Branch(b, Some(v))).parts)))
     val referenced: Set[String] =
-      ((retain.map(v => ManifestSink.readManifestMeta(conf, dir, Some(v))) :+
-        ManifestSink.readManifestMeta(conf, dir, None))
-        .flatMap(refs) ++ branchRefs).toSet
+      ((retain :+ log.head).flatMap(v => refs(log.snapshot(Ref.At(v)).parts)) ++
+        branchRefs).toSet
     // files the expired snapshots committed — read BEFORE deleting them
     val expiredRefs: Set[String] =
-      expire.flatMap(v =>
-        refs(ManifestSink.readManifestMeta(conf, dir, Some(v)))).toSet
+      expire.flatMap(v => refs(log.snapshot(Ref.At(v)).parts)).toSet
 
     // DRY RUN: report exactly what a real run would do — versions it
     // would expire, files it would reclaim — touching NOTHING. The
     // operational "how much does this retention policy buy, and does
     // it eat anything a reader still needs?" question answered before
     // committing to it.
-    if (!dryRun)
-      expire.foreach(v =>
-        fs.delete(new Path(d, ManifestSink.versionFile(v)), false))
+    if (!dryRun) expire.foreach(log.expire)
 
     val now = System.currentTimeMillis()
     var deleted = 0

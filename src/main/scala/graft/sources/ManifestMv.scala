@@ -174,7 +174,7 @@ private[sources] object ManifestMv {
       ndvCol: Option[String] = None,
       keyExpr: Option[String] = None): (Int, Long) = {
     val conf = ManifestSink.driverConf()
-    val srcVersion = ManifestSink.listVersions(conf, sourceDir).lastOption
+    val srcVersion = ManifestLog(conf, sourceDir).versions.lastOption
       .getOrElse(throw new IllegalArgumentException(
         s"create_mv: source $sourceDir has no committed snapshot " +
           "(MVs track the snapshot log)"))
@@ -222,13 +222,13 @@ private[sources] object ManifestMv {
     }
     writeMv(rollup(src, keyCol, sumCol, scale, mmCol, ndvCol, keyExpr),
       mvDir)
-    val mvVersion = ManifestSink.listVersions(conf, mvDir).last
+    val mvVersion = ManifestLog(conf, mvDir).head
     writeMeta(conf, mvDir, MvMeta(sourceDir, keyCol, sumCol, scale,
       srcVersion, mvVersion, mmCol, ndvCol,
       keyExpr = keyExpr,
       keyTz = keyExpr.map(_ =>
         spark.sessionState.conf.sessionLocalTimeZone)))
-    val groups = ManifestSink.readManifest(conf, mvDir).map(_._2).sum
+    val groups = ManifestLog(conf, mvDir).snapshot().parts.map(_.rows).sum
     (srcVersion, groups)
   }
 
@@ -255,7 +255,7 @@ private[sources] object ManifestMv {
       sumCol: String, scale: Int): (Int, Long) = {
     val conf = ManifestSink.driverConf()
     def headOf(d: String, what: String): Int =
-      ManifestSink.listVersions(conf, d).lastOption.getOrElse(
+      ManifestLog(conf, d).versions.lastOption.getOrElse(
         throw new IllegalArgumentException(
           s"create_mv: $what $d has no committed snapshot"))
     val srcVersion = headOf(factDir, "fact source")
@@ -278,11 +278,11 @@ private[sources] object ManifestMv {
       org.apache.spark.sql.functions.broadcast(dim),
       col(fk) === col(dimKey))
     writeMv(rollup(joined, keyCol, sumCol, scale), mvDir)
-    val mvVersion = ManifestSink.listVersions(conf, mvDir).last
+    val mvVersion = ManifestLog(conf, mvDir).head
     writeMeta(conf, mvDir, MvMeta(factDir, keyCol, sumCol, scale,
       srcVersion, mvVersion,
       join = Some(MvJoin(dimDir, fk, dimKey, dimVersion))))
-    val groups = ManifestSink.readManifest(conf, mvDir).map(_._2).sum
+    val groups = ManifestLog(conf, mvDir).snapshot().parts.map(_.rows).sum
     (srcVersion, groups)
   }
 
@@ -299,34 +299,34 @@ private[sources] object ManifestMv {
           s"timezone ${m.keyTz.getOrElse("?")}, current is $cur — " +
           "refresh under the creating timezone")
     }
-    val head = ManifestSink.listVersions(conf, m.source).lastOption.getOrElse(0)
+    val srcLog = ManifestLog(conf, m.source)
+    val head = srcLog.head
     // a MOVED DIM re-attributes arbitrarily many fact rows: no local
     // delta exists, so the join MV recomputes fully (documented; the
     // dim is the broadcast-small side, the cost driver stays the fact
     // scan — exactly what a create paid)
     m.join.foreach { j =>
-      val dimHead = ManifestSink.listVersions(conf, j.dimSource)
-        .lastOption.getOrElse(0)
+      val dimHead = ManifestLog(conf, j.dimSource).head
       if (dimHead != j.dimVersion) {
         val fact = spark.read.format("graft.sources.ManifestSource")
           .option("path", m.source).option("version", head.toString).load()
         writeMv(rollup(fact.join(dimSide(spark, j, dimHead),
           col(j.fk) === col(j.dimKey)), m.keyCol, m.sumCol, m.scale), mvDir)
-        val mvVersion = ManifestSink.listVersions(conf, mvDir).last
+        val mvVersion = ManifestLog(conf, mvDir).head
         writeMeta(conf, mvDir, m.copy(sourceVersion = head,
           mvVersion = mvVersion, join = Some(j.copy(dimVersion = dimHead))))
         return RefreshStats(m.sourceVersion, head, -1, -1,
-          ManifestSink.readManifest(conf, mvDir).map(_._2).sum)
+          ManifestLog(conf, mvDir).snapshot().parts.map(_.rows).sum)
       }
     }
     if (head == m.sourceVersion)
       return RefreshStats(m.sourceVersion, head, 0, 0,
-        ManifestSink.readManifest(conf, mvDir).map(_._2).sum)
+        ManifestLog(conf, mvDir).snapshot().parts.map(_.rows).sum)
 
-    val oldParts = ManifestSink.readManifestMeta(conf, m.source,
-      Some(m.sourceVersion)).map(p => p.path -> p).toMap
-    val newParts = ManifestSink.readManifestMeta(conf, m.source,
-      Some(head)).map(p => p.path -> p).toMap
+    val oldParts = srcLog.snapshot(Ref.At(m.sourceVersion)).parts
+      .map(p => p.path -> p).toMap
+    val headSnap = srcLog.snapshot(Ref.At(head))
+    val newParts = headSnap.parts.map(p => p.path -> p).toMap
     // an EQUALITY-DELETE clause change is a restatement exactly like
     // a vector change: minus the old line's rows, plus the new
     // (eq-masked) read — the snapshot algebra needs no special case
@@ -339,7 +339,7 @@ private[sources] object ManifestMv {
     val minus = oldParts.valuesIterator.filter(p =>
       newParts.get(p.path).forall(n => vectorChanged(p, n))).toSeq
 
-    val schema = ManifestSink.readSchema(conf, m.source, Some(head)).get
+    val schema = headSnap.schema.get
     val fs = new Path(mvDir).getFileSystem(conf)
     val token = java.util.UUID.randomUUID().toString.take(8)
     val tmpPlus = s"$mvDir/_mv-plus-$token"
@@ -348,9 +348,7 @@ private[sources] object ManifestMv {
       def side(tmp: String, parts: Seq[PartMeta]): DataFrame = {
         // stage a read by REFERENCE (absolute paths, no data copied);
         // an empty side still needs the rollup's shape
-        ManifestSink.publishSnapshot(conf, tmp, schema, parts,
-          ManifestSink.alignedColMap(conf, m.source, schema, Some(head))
-            .map(_ -> TableRecord()))
+        ManifestSink.publishReadCopy(conf, tmp, headSnap, schema, parts)
         val base = spark.read.format("graft.sources.ManifestSource")
           .option("path", tmp).load()
         // FK-LOCAL join-MV delta: the fact slice joins only the
@@ -476,9 +474,9 @@ private[sources] object ManifestMv {
       fs.delete(new Path(tmpPlus), true)
       fs.delete(new Path(tmpMinus), true)
     }
-    val mvVersion = ManifestSink.listVersions(conf, mvDir).last
+    val mvVersion = ManifestLog(conf, mvDir).head
     writeMeta(conf, mvDir, m.copy(sourceVersion = head, mvVersion = mvVersion))
     RefreshStats(m.sourceVersion, head, plus.size, minus.size,
-      ManifestSink.readManifest(conf, mvDir).map(_._2).sum)
+      ManifestLog(conf, mvDir).snapshot().parts.map(_.rows).sum)
   }
 }

@@ -66,10 +66,10 @@ private[sources] object PosMetaColumn extends MetadataColumn {
   *     superseded files stay on disk for time travel (vacuum owns
   *     their retirement).
   *
-  * Concurrency: the rewrite is planned against one head, so the
-  * commit pins that base version (`strictBase`) — a commit racing the
-  * rewrite fails THIS operation loudly instead of silently dropping
-  * either side's rows.
+  * Concurrency: the rewrite is planned against one snapshot, so the
+  * commit pins it (`base` + the scanned parts as footprint) — a commit
+  * racing the rewrite over the same parts, or a DDL, fails THIS
+  * operation loudly instead of silently dropping either side's rows.
   *
   * At 100 TB this is the difference between "UPDATE rewrites the
   * table" and "UPDATE rewrites the handful of parts that contain
@@ -81,19 +81,19 @@ private[sources] class ManifestRowLevelOp(
     cmd: RowLevelOperation.Command,
     val branch: Option[String] = None) extends RowLevelOperation {
 
-  // (scanned parts, base version) recorded by the scan at plan time —
+  // (scanned parts, base snapshot) recorded by the scan at plan time —
   // volatile: planInputPartitions runs on a scheduler thread.
-  // The base version is resolved by ManifestScanBuilder.build() from
-  // the SAME head read that produced the part list — re-reading the
-  // log here (execution time) could observe a commit that landed
-  // after the plan, making strictBase pin the WRONG (newer) version
-  // and silently voiding the lost-update guard.
-  @volatile private var scanState: Option[(Seq[PartMeta], Int)] = None
+  // The base is the snapshot ManifestScanBuilder.build() planned the
+  // part list from — re-reading the log here (execution time) could
+  // observe a commit that landed after the plan, pinning the WRONG
+  // (newer) snapshot and silently voiding the lost-update guard. The
+  // writers are built onto its header for the same reason.
+  @volatile private var scanState: Option[(Seq[PartMeta], Snapshot)] = None
 
-  private[sources] def recordScan(parts: Seq[PartMeta], base: Int): Unit =
+  private[sources] def recordScan(parts: Seq[PartMeta], base: Snapshot): Unit =
     scanState = Some((parts, base))
 
-  private[sources] def scannedOrFail: (Seq[PartMeta], Int) =
+  private[sources] def scannedOrFail: (Seq[PartMeta], Snapshot) =
     scanState.getOrElse(throw new IllegalStateException(
       s"row-level write on $path committed before its scan planned"))
 
@@ -132,7 +132,7 @@ private[sources] class ManifestReplaceWrite(
       info: PhysicalWriteInfo): DataWriterFactory = {
     val dir = new Path(path)
     dir.getFileSystem(conf.value).mkdirs(dir)
-    val head = ManifestSink.readHeader(conf.value, path, None, op.branch)
+    val head = op.scannedOrFail._2.header
     val f = new ManifestWriterFactory(path, schema, token, conf, TableSpec(),
       head)
     // MERGE INSERT cannot generate identity/generated values on this
@@ -157,9 +157,9 @@ private[sources] class ManifestReplaceWrite(
     // that only touched OTHER parts composes — its parts carry
     // forward through the head-aware rebase; one that dropped or
     // re-vectored a scanned part conflicts loudly
-    ManifestSink.publishRebase(conf.value, path, schema,
+    ManifestSink.publishRebase(conf.value, path,
       head => head.filterNot(p => replacedPaths.contains(p.path)) ++ newParts,
-      strictBase = Some(base), footprint = Some(replacedPaths),
+      HeaderChange.Keep, base = Some(base), footprint = Some(replacedPaths),
       branch = op.branch,
       op = op.command().toString.toLowerCase)
   }

@@ -503,24 +503,120 @@ private[sources] object ColMap {
   }
 }
 
+/** A commit's ONE header change, applied to the head each attempt of
+  * [[ManifestSink.publishRebase]] lands on (Delta's `metaData` action:
+  * every commit inherits the head's or states its own). */
+private[sources] sealed trait HeaderChange {
+  /** The (schema DDL, column mapping, table record) to publish onto
+    * a head with header `head`. */
+  def onto(head: ManifestHeader, dir: Path): (String, ColMap, TableRecord)
+}
+
+private[sources] object HeaderChange {
+  /** The head's schema, mapping and record, unchanged: row-level,
+    * delta, compaction, metadata and equality DELETE, DROP PARTITION,
+    * truncate and cherry-pick. */
+  case object Keep extends HeaderChange {
+    def onto(head: ManifestHeader, dir: Path): (String, ColMap, TableRecord) =
+      head.schemaCm match {
+        case Some((_, cm)) => (head.schemaDdl.get, cm, head.table)
+        case None => throw new IllegalStateException(
+          s"no committed schema at $dir")
+      }
+  }
+
+  /** A write of `schema` onto the head: its columns must extend the
+    * head's additively (equal, or trailing columns added — old parts
+    * read those as NULL or their default, see
+    * [[ManifestSink.physicalField]]), and the mapping is derived by
+    * name (a new column gets a fresh id). `replace` (an overwrite)
+    * drops every head row, so the write's schema replaces the head's. */
+  final case class Append(schema: StructType, replace: Boolean = false)
+      extends HeaderChange {
+    /** The schema this write publishes onto `head`. */
+    def published(head: ManifestHeader): StructType =
+      head.schema.filterNot(_ => replace).fold(schema)(extend(_, schema))
+    def onto(head: ManifestHeader, dir: Path): (String, ColMap, TableRecord) = {
+      val s = published(head)
+      (ddlOf(s), ManifestSink.deriveColMap(head.schemaCm, s), head.table)
+    }
+  }
+
+  /** The exact schema, mapping and record: DDL, restore,
+    * fast-forward, clone, txn roll-forward and ANALYZE. */
+  final case class Restate(schema: StructType, cm: ColMap, table: TableRecord)
+      extends HeaderChange {
+    def onto(head: ManifestHeader, dir: Path): (String, ColMap, TableRecord) =
+      (ddlOf(schema), cm, table)
+  }
+
+  /** The schema header is plain name+type(+comment): the catalog
+    * re-attaches CURRENT_DEFAULT/EXISTS_DEFAULT on loadTable (Spark's
+    * default resolution reads it), and Spark 4's toDDL renders that
+    * metadata as a `DEFAULT v` clause that fromDDL cannot parse back.
+    * The colmap header is the canonical default store. */
+  private def ddlOf(schema: StructType): String =
+    StructType(schema.fields.map { f =>
+      if (f.metadata.contains("CURRENT_DEFAULT") ||
+          f.metadata.contains("EXISTS_DEFAULT")) {
+        val b = new MetadataBuilder().withMetadata(f.metadata)
+        b.remove("CURRENT_DEFAULT")
+        b.remove("EXISTS_DEFAULT")
+        f.copy(metadata = b.build())
+      } else f
+    }).toDDL
+
+  /** `old` extended by the write schema `incoming`: the name+type
+    * prefix must match, and the committed schema never lets a write's
+    * tighter nullability stomp the table's. An INSERT of literals
+    * arrives with every field NOT NULL, but (a) nullability is STICKY —
+    * rows committed under a nullable column may hold nulls forever —
+    * and (b) a column the committed schema does not have yet is missing
+    * from every old part and reads back NULL, so it publishes nullable
+    * whatever the writer claims. */
+  private def extend(old: StructType, incoming: StructType): StructType = {
+    // struct columns compare nullability-INSENSITIVELY one level
+    // down: an INSERT of named_struct literals arrives with every
+    // sub-field NOT NULL, but the committed struct's sub-nullability
+    // is the table's
+    def sameType(a: DataType, b: DataType): Boolean = (a, b) match {
+      case (x: StructType, y: StructType) =>
+        x.fields.length == y.fields.length &&
+          x.fields.zip(y.fields).forall { case (fa, fb) =>
+            fa.name == fb.name && sameType(fa.dataType, fb.dataType)
+          }
+      case _ => a == b
+    }
+    val prefixOk = old.fields.length <= incoming.fields.length &&
+      old.fields.zip(incoming.fields).forall { case (a, b) =>
+        a.name == b.name && sameType(a.dataType, b.dataType)
+      }
+    if (!prefixOk) throw new IllegalArgumentException(
+      s"append schema must extend the committed schema additively; " +
+        s"committed=${old.toDDL} incoming=${incoming.toDDL}")
+    StructType(incoming.fields.zipWithIndex.map {
+      case (f, i) if i < old.fields.length =>
+        // the committed DATATYPE is sticky, but nullability — at BOTH
+        // levels — may only WIDEN with the write: a struct append
+        // carrying genuinely-null sub-values must publish those
+        // sub-fields nullable, or readers would decode NULL at a slot
+        // the schema declares non-null (silently wrong under codegen)
+        val merged = (old.fields(i).dataType, f.dataType) match {
+          case (os: StructType, ns: StructType)
+              if os.fields.length == ns.fields.length =>
+            StructType(os.fields.zip(ns.fields).map { case (of, nf) =>
+              of.copy(nullable = of.nullable || nf.nullable)
+            })
+          case (o, _) => o
+        }
+        if (old.fields(i).nullable) old.fields(i).copy(dataType = merged)
+        else f.copy(dataType = merged)
+      case (f, _) => f.copy(nullable = true)
+    })
+  }
+}
+
 object ManifestSink {
-  /** Immutable snapshot manifest name for version `v`. */
-  def versionFile(v: Int): String = f"_MANIFEST.v$v%05d.json"
-  private val VersionRe = """_MANIFEST\.v(\d+)\.json""".r
-
-  /** BRANCH snapshot manifest (write-audit-publish): commits to a
-    * named branch claim `_MANIFEST.<branch>.vNNNNN.json` files — their
-    * own version sequence, invisible to main-head resolution (the main
-    * pattern has no branch segment), sharing the directory and the
-    * part files. A branch forks IMPLICITLY from the main head at its
-    * first commit and costs one JSON file per commit, never a data
-    * copy — the Iceberg named-ref shape. */
-  def branchVersionFile(branch: String, v: Int): String =
-    f"_MANIFEST.$branch%s.v$v%05d.json"
-  private val BranchVersionRe = """_MANIFEST\.([A-Za-z0-9_-]+)\.v(\d+)\.json""".r
-  private[sources] def validBranch(b: String): Boolean =
-    b.nonEmpty && b.forall(c => c.isLetterOrDigit || c == '_' || c == '-')
-
   /** The session Hadoop conf, captured on the driver. This is the ONLY
     * conf constructor in the manifest code paths. */
   private[sources] def driverConf(): Configuration =
@@ -549,27 +645,6 @@ object ManifestSink {
         case _ => ()
       }
     }
-
-  /** One committed part's stats: (path, rows, key min, key max). */
-  def readManifest(conf: Configuration, dir: String): Seq[(String, Long, Long, Long)] =
-    readManifest(conf, dir, None)
-
-  /** Same, against a specific snapshot version. A request for a
-    * version whose manifest file is missing (never committed, or
-    * expired by [[ManifestMaintenance]]) fails loudly —
-    * silently serving the head instead would be a time-travel
-    * correctness bug. */
-  def readManifest(conf: Configuration, dir: String,
-      version: Option[Int]): Seq[(String, Long, Long, Long)] = {
-    val (parts, head) = readSnapshot(conf, dir, version)
-    val key = head.schema.flatMap(_.fields.find(_.dataType == LongType))
-      .map(_.name)
-    parts.map { m =>
-      val st = key.flatMap(m.cstats.get)
-      (m.path, m.rows, st.fold(Long.MaxValue)(_.lMin),
-        st.fold(Long.MinValue)(_.lMax))
-    }
-  }
 
   /** Names of the key (first BIGINT) and the first STRING column: the
     * two whose [[ColStat]] a part keeps even when it holds no non-null
@@ -694,40 +769,6 @@ object ManifestSink {
         .take(9).toArray)
   }
 
-  /** Full per-part records. */
-  private[sources] def readManifestMeta(conf: Configuration, dir: String,
-      version: Option[Int]): Seq[PartMeta] =
-    MetaJson.decodeParts(manifestLines(conf, dir, version))
-
-  /** The MAIN version a branch's first commit forked from (None for
-    * legacy branches predating fork recording; 0 = main had no
-    * version files yet, i.e. a genuinely-empty fork base). */
-  private[sources] def readBranchFork(conf: Configuration, dir: String,
-      branch: String): Option[Int] =
-    readHeader(conf, dir, Some(1), Some(branch)).fork
-
-  /** The snapshot's operation label ("" for pre-label snapshots). */
-  private[sources] def readOp(conf: Configuration, dir: String,
-      version: Option[Int]): String =
-    readHeader(conf, dir, version).op
-
-  /** Parts + header from ONE manifest read — the scan planner's
-    * shape (a second read of a 100k-part manifest just for the header
-    * would double planning IO). */
-  private[sources] def readSnapshot(conf: Configuration, dir: String,
-      version: Option[Int] = None, branch: Option[String] = None)
-      : (Seq[PartMeta], ManifestHeader) = {
-    val lines = manifestLines(conf, dir, version, branch)
-    (MetaJson.decodeParts(lines), MetaJson.decodeHeader(lines))
-  }
-
-  /** A snapshot's header (schema, column mapping, version record and
-    * table record), read up to its first part line. */
-  private[sources] def readHeader(conf: Configuration, dir: String,
-      version: Option[Int] = None,
-      branch: Option[String] = None): ManifestHeader =
-    MetaJson.decodeHeader(manifestLines(conf, dir, version, branch))
-
   /** Declared secondary-bloom columns (the `graft.bloom_cols` table
     * property, comma-separated STRING column names): each listed
     * column gets a per-part membership bloom in its [[ColStat]],
@@ -821,7 +862,7 @@ object ManifestSink {
       name: String, version: Int): Unit = {
     require(name.matches("[A-Za-z0-9_-]+"),
       s"invalid tag name '$name' (letters, digits, '_', '-' only)")
-    require(listVersions(conf, dir).contains(version),
+    require(ManifestLog(conf, dir).versions.contains(version),
       s"cannot tag version $version at $dir: no such snapshot")
     // the claim fails for an existing tag, including one a concurrent
     // tagger published first
@@ -855,31 +896,12 @@ object ManifestSink {
     fs.exists(p) && fs.delete(p, false)
   }
 
-  /** The committed table schema (manifest header line), if present. */
-  def readSchema(conf: Configuration, dir: String): Option[StructType] =
-    readSchema(conf, dir, None)
-
-  /** Snapshot-version-aware schema read: each snapshot carries ITS OWN
-    * schema header, so time travel sees the schema as of that commit
-    * (additive evolution never rewrites history). */
-  def readSchema(conf: Configuration, dir: String,
-      version: Option[Int]): Option[StructType] =
-    readHeader(conf, dir, version).schema
-
-  /** Snapshot schema + column mapping, read from ONE manifest
-    * resolution (the pair is only consistent when both come from the
-    * same lines). */
-  private[sources] def readSchemaAndColMap(conf: Configuration,
-      dir: String, version: Option[Int] = None,
-      branch: Option[String] = None): Option[(StructType, ColMap)] =
-    readHeader(conf, dir, version, branch).schemaCm
-
   /** The mapping a commit derives from the head by NAME (DDL and
     * restating commits hand theirs instead, see [[publishRebase]]) —
     * a field the head already maps keeps its id; a new field
     * (additive append evolution) allocates the next one. The identity default means tables that never rename or drop
     * never even materialize a header. */
-  private def deriveColMap(headSchemaCm: Option[(StructType, ColMap)],
+  private[sources] def deriveColMap(headSchemaCm: Option[(StructType, ColMap)],
       published: StructType): ColMap = headSchemaCm match {
     case None => ColMap.identity(published.fields.length)
     case Some((hs, hcm)) =>
@@ -895,33 +917,18 @@ object ManifestSink {
         hcm.nested.filter { case (pid, _) => ids.contains(pid) })
   }
 
-  /** Publish a snapshot whose part list is exactly `parts` (commit
-    * path for writes, and the metadata-only path for DDL/DELETE: a
-    * new version is one small JSON file — no data is copied). Atomic:
-    * content lands under a temp name and is claimed as the next
-    * version file, so a crash before the claim leaves the table
-    * readable at the old head. Returns the committed version. */
-  private[sources] def publishSnapshot(conf: Configuration, path: String,
-      schema: StructType, parts: Seq[PartMeta],
-      restate: Option[(ColMap, TableRecord)] = None, op: String = ""): Int =
-    // fixed-part publishes (staging reads, restore, fast-forward,
-    // clone, truncate) re-reference EXISTING parts, written under
-    // earlier mappings — and when the caller hands the snapshot's
-    // mapping and record, publish them verbatim
-    publishRebase(conf, path, schema, _ => parts,
-      strictBase = None, restate = restate, checkWritten = false, op = op)
-
-  /** The table's [[ColMap]] aligned BY NAME to `schema` (None when
-    * trivially identity) — what a temp staging manifest over a mapped
-    * table's parts must carry so mixed-generation parts read
-    * correctly through the staging read. */
-  private[sources] def alignedColMap(conf: Configuration, dir: String,
-      schema: StructType, version: Option[Int] = None,
-      branch: Option[String] = None): Option[ColMap] = {
-    val snapCm = readSchemaAndColMap(conf, dir, version, branch)
-    snapCm.collect { case (_, cm) if !cm.isPlain || cm.retired.nonEmpty =>
-      alignColMap(snapCm, schema, dir)
-    }
+  /** Publish a by-reference READ COPY at `tmp`: `parts` of snapshot
+    * `snap` under `schema`, with the snapshot's mapping aligned by name
+    * (identity when it has none) so mixed-generation parts decode
+    * through the staged read. */
+  private[sources] def publishReadCopy(conf: Configuration, tmp: String,
+      snap: Snapshot, schema: StructType, parts: Seq[PartMeta]): Int = {
+    val snapCm = snap.header.schemaCm
+    val cm = snapCm.collect { case (_, cm) if !cm.isPlain || cm.retired.nonEmpty =>
+      alignColMap(snapCm, schema, tmp)
+    }.getOrElse(ColMap.identity(schema.fields.length))
+    publishRebase(conf, tmp, _ => parts,
+      HeaderChange.Restate(schema, cm, TableRecord()))
   }
 
   /** A snapshot's mapping with its ids aligned BY NAME to `s` (the
@@ -979,102 +986,81 @@ object ManifestSink {
 
   /** The commit loop proper. `rebase` maps the CURRENT head's part
     * list to the list to publish, and is re-applied on EVERY claim
-    * attempt against a freshly-read head — the Iceberg
+    * attempt against a freshly-resolved head — the Iceberg
     * refresh-and-reapply loop. This is what makes a racing append
     * safe: a committer that lands between our base-snapshot read and
     * our claim advances the head, our claim of its slot fails, and
     * the next attempt recomputes the part list ON TOP OF the winner's
     * snapshot instead of re-rendering a stale capture (which would
     * silently drop the winner's parts — the classic lost update).
+    * Each attempt is one [[ManifestLog]] listing plus the claim.
     *
-    * `strictBase = Some(v)`: the operation was planned against
-    * snapshot v and CANNOT be mechanically re-applied (e.g. a
-    * copy-on-write rewrite whose part classification is baked into
-    * already-written files) — fail loudly if the head is no longer v
-    * rather than publish a half-stale snapshot.
+    * `header` is the commit's one header change ([[HeaderChange]]):
+    * keep the head's schema, mapping and record, append trailing
+    * columns to them, or restate them. Like the part list it applies
+    * to the head of each attempt, so a commit that loses its slot to
+    * a DDL keeps that DDL.
     *
-    * `footprint = Some(paths)` RELAXES strictBase to snapshot-
-    * isolation conflict detection (the Delta/Iceberg commit-conflict
-    * loop): when the head has advanced past the base, the commit may
-    * still proceed IF every part the operation read-and-modified is
-    * provably untouched — listed in the new head with bit-identical
-    * metadata (same stats, same deletion vector). The rebase then
-    * re-applies against the advanced head, carrying the interleaved
-    * commits' parts forward; a footprint part that was dropped,
-    * rewritten, or re-vectored by the interleaved commit conflicts
-    * loudly. Disjoint concurrent DML composes; overlapping DML fails
-    * exactly one side. (Appends that add rows MATCHING the
+    * `base = Some(s)`: the operation was planned against snapshot `s`
+    * and CANNOT be mechanically re-applied (e.g. a copy-on-write
+    * rewrite whose part classification is baked into already-written
+    * files) — fail loudly if the head is no longer `s` rather than
+    * publish a half-stale snapshot. A base that is an empty branch's
+    * snapshot also pins its fork: main advancing moves what the first
+    * branch commit forks from without moving the branch line.
+    *
+    * `footprint = Some(paths)` RELAXES the pin to snapshot-isolation
+    * conflict detection (the Delta/Iceberg commit-conflict loop): when
+    * the head has advanced past the base, the commit may still proceed
+    * IF every part the operation read-and-modified is provably
+    * untouched — listed in the new head with bit-identical metadata
+    * (same stats, same deletion vector) — AND the head's header (schema,
+    * mapping, record) is the base's. The rebase then re-applies against
+    * the advanced head, carrying the interleaved commits' parts
+    * forward; a footprint part that was dropped, rewritten, or
+    * re-vectored by the interleaved commit, or an interleaved DDL,
+    * conflicts loudly. Disjoint concurrent DML composes; overlapping
+    * DML fails exactly one side. (Appends that add rows MATCHING the
     * operation's predicate are NOT conflicts — those rows were not in
     * the operation's snapshot: snapshot isolation, not
-    * serializability, same as the lakehouse defaults.)
-    *
-    * The header travels the same way: the column mapping is derived
-    * from the head and the head's [[TableRecord]] carried forward, on
-    * every attempt — so a commit that loses its slot to a DDL keeps
-    * that DDL's layout, properties and constraints. `restate` hands
-    * both verbatim instead: DDL (its exact result) and the commits
-    * that restate another version (restore, fast-forward, clone). */
+    * serializability, same as the lakehouse defaults.) */
   private[sources] def publishRebase(conf: Configuration, path: String,
-      schema: StructType,
       rebase: Seq[PartMeta] => Seq[PartMeta],
-      strictBase: Option[Int],
+      header: HeaderChange,
+      base: Option[Snapshot] = None,
       footprint: Option[Set[String]] = None,
       branch: Option[String] = None,
-      restate: Option[(ColMap, TableRecord)] = None,
-      checkWritten: Boolean = true,
-      op: String = "",
-      strictForkBase: Option[Int] = None): Int = {
-    branch.foreach(b => require(validBranch(b), s"invalid branch name " +
-      s"'$b' (letters, digits, '_', '-' only)"))
+      op: String = ""): Int = {
+    branch.foreach(b => require(ManifestLog.validBranch(b), s"invalid " +
+      s"branch name '$b' (letters, digits, '_', '-' only)"))
     val dir = new Path(path)
-    // strip default-value field metadata before rendering: the catalog
-    // re-attaches CURRENT_DEFAULT/EXISTS_DEFAULT on loadTable (Spark's
-    // default resolution reads it), and Spark 4's toDDL renders that
-    // metadata as a `DEFAULT v` clause that fromDDL cannot parse back.
-    // The colmap header is the canonical default store; the schema
-    // header stays plain name+type(+comment).
-    val ddlSchema = StructType(schema.fields.map { f =>
-      if (f.metadata.contains("CURRENT_DEFAULT") ||
-          f.metadata.contains("EXISTS_DEFAULT")) {
-        val b = new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f.metadata)
-        b.remove("CURRENT_DEFAULT")
-        b.remove("EXISTS_DEFAULT")
-        f.copy(metadata = b.build())
-      } else f
-    })
-    val ddl = ddlSchema.toDDL
-    def render(version: Int, parts: Seq[PartMeta], cm: ColMap,
-        table: TableRecord, fork: Option[Int]): String =
-      MetaJson.encodeManifest(ddl,
-        // written only once non-trivial: a table that never renames
-        // or drops carries no mapping line
-        Some(cm).filter(cm => !cm.isIdentity || cm.retired.nonEmpty ||
-          cm.nextId != schema.fields.length || cm.defaults.nonEmpty ||
-          cm.nested.nonEmpty),
-        // the OPERATION KIND rides the version record (Delta's
-        // DESCRIBE HISTORY `operation` / Iceberg's snapshot summary):
-        // pure lineage metadata, parsed by `.history` only. A branch's
-        // FIRST commit records the MAIN version it forked from: the
-        // implicit fork would otherwise be reconstructible only by
-        // containment search, which cannot distinguish a genuine
-        // fork-from-empty from a branch commit that rewrote every fork
-        // part (both are "contained" in an empty main snapshot
-        // vacuously) — see ManifestMaintenance.cherrypick
-        Some((version, op, fork)), parts, table)
-
-    // header bookkeeping: resolve the mapping and the record (restated
-    // by the caller, else derived/carried from the head). A
-    // NEWLY-ADDED part stores its columns under the ids its writer
-    // took at plan time ([[writeColMap]], recorded in `cols`); a DDL
-    // commit that landed since would read them under other ids, so
-    // the commit refuses
-    def finish(head: Seq[PartMeta], headHeader: ManifestHeader,
-        parts: Seq[PartMeta]): (Seq[PartMeta], ColMap, TableRecord) = {
-      val (cm, table) = restate.getOrElse(
-        (deriveColMap(headHeader.schemaCm, schema), headHeader.table))
-      if (checkWritten) {
-        val headPaths = head.map(_.path).toSet
+    // OPTIMISTIC CONCURRENCY (the Iceberg commit loop): a commit
+    // CLAIMS its immutable version file — exists-check + rename,
+    // never an overwrite — so two racing committers cannot both land
+    // on version N and silently drop a snapshot; the loser re-resolves
+    // the head, RE-APPLIES its operation via `rebase`, and retries at
+    // the next free slot. (On HDFS the rename itself refuses an
+    // existing destination, making the claim fully atomic; on a raw
+    // local fs the exists-check shrinks the window.) A branch with no
+    // commits forks IMPLICITLY from the main head, and its first
+    // commit records that main version.
+    var attempts = 0
+    var committed = -1
+    while (committed < 0) {
+      attempts += 1
+      if (attempts > 1000) throw new java.io.IOException(
+        s"cannot claim a snapshot version at $dir after $attempts attempts")
+      val head = ManifestLog(conf, path).snapshot(Ref.of(None, branch))
+      base.foreach(checkBase(dir, _, head, footprint))
+      val (ddl, cm, table) = header.onto(head.header, dir)
+      val parts = rebase(head.parts)
+      // a NEWLY-ADDED part stores its columns under the ids its writer
+      // took at plan time ([[writeColMap]], recorded in `cols`); a DDL
+      // that landed since would read them under other ids, so the
+      // commit refuses. Restated commits re-reference EXISTING parts,
+      // written under earlier mappings.
+      if (!header.isInstanceOf[HeaderChange.Restate]) {
+        val headPaths = head.parts.map(_.path).toSet
         parts.find(p => !headPaths(p.path) &&
             (if (p.cols.isEmpty) cm.ids.indices else p.cols) != cm.ids)
           .foreach { p =>
@@ -1083,213 +1069,58 @@ object ManifestSink {
                 "being written; re-run the write against the new head")
           }
       }
-      (parts, cm, table)
-    }
-    // OPTIMISTIC CONCURRENCY (the Iceberg commit loop): a commit
-    // CLAIMS its immutable version file — exists-check + rename,
-    // never an overwrite — so two racing committers cannot both land
-    // on version N and silently drop a snapshot; the loser re-reads
-    // the log, RE-APPLIES its operation against the new head via
-    // `rebase`, and retries at the next free slot. (On HDFS the rename
-    // itself refuses an existing destination, making the claim fully
-    // atomic; on a raw local fs the exists-check shrinks the window.)
-    // Readers resolve HEAD as the newest version file (manifestLines).
-    // The part list and header at version v of the line this commit
-    // targets, from one read (version files are immutable once
-    // claimed, so re-reads are consistent); a branch with no commits
-    // forks IMPLICITLY from the main head.
-    def snapshotAt(v: Int): (Seq[PartMeta], ManifestHeader) = branch match {
-      case Some(b) if v > 0 => readSnapshot(conf, path, Some(v), Some(b))
-      case Some(_) => readSnapshot(conf, path)
-      case None => readSnapshot(conf, path, Some(v))
-    }
-    var attempts = 0
-    var committed = -1
-    while (committed < 0) {
-      attempts += 1
-      if (attempts > 1000) throw new java.io.IOException(
-        s"cannot claim a snapshot version at $dir after $attempts attempts")
-      val latest = branch match {
-        case Some(b) => listBranchVersions(conf, path, b).lastOption.getOrElse(0)
-        case None    => listVersions(conf, path).lastOption.getOrElse(0)
-      }
-      val (head, headHeader) = snapshotAt(latest)
-      strictBase.foreach { base =>
-        if (latest != base) footprint match {
-          case None => throw new java.util.ConcurrentModificationException(
-            s"table $dir advanced from snapshot $base to $latest during an " +
-              "operation that cannot be re-applied; re-plan against the new head")
-          case Some(touched) =>
-            // conflict check: every touched part must survive into the
-            // advanced head BIT-IDENTICAL to the base snapshot's record
-            val (baseMeta, baseHeader) = snapshotAt(base)
-            val baseParts = baseMeta.map(m => m.path -> m).toMap
-            val headParts = head.map(m => m.path -> m).toMap
-            val conflicted = touched.filter(p =>
-              !headParts.get(p).exists(baseParts.get(p).contains(_)))
-            if (conflicted.nonEmpty)
-              throw new java.util.ConcurrentModificationException(
-                s"table $dir advanced from snapshot $base to $latest and a " +
-                  s"concurrent commit touched ${conflicted.size} part(s) this " +
-                  s"operation read-and-modified (${conflicted.take(3).mkString(", ")}" +
-                  s"${if (conflicted.size > 3) ", …" else ""}); re-plan " +
-                  "against the new head")
-            // a restated header was derived from the base's: an
-            // interleaved schema or table-record change conflicts too
-            def state(h: ManifestHeader) = (h.schemaDdl, h.colmap, h.table)
-            if (restate.isDefined && state(baseHeader) != state(headHeader))
-              throw new java.util.ConcurrentModificationException(
-                s"table $dir advanced from snapshot $base to $latest and a " +
-                  "concurrent commit changed its schema or table record; " +
-                  "re-plan against the new head")
-        }
-      }
-      val (parts, cm, table) = finish(head, headHeader, rebase(head))
-      val version = latest + 1
-      val fork: Option[Int] =
-        if (branch.isDefined && latest == 0)
-          Some(listVersions(conf, path).lastOption.getOrElse(0))
-        else None
-      // fork-base pin (first-branch-commit shape): the caller derived
-      // state from MAIN at `strictForkBase`; a concurrent main commit
-      // moves the base this branch commit rebases onto without moving
-      // the (still-empty) branch line that strictBase watches
-      strictForkBase.foreach { fb =>
-        fork.foreach { f =>
-          if (f != fb) throw new java.util.ConcurrentModificationException(
-            s"main at $dir advanced from snapshot $fb to $f while staging " +
-              "the branch's first commit; re-plan against the new fork base")
-        }
-      }
-      val claim = branch.map(branchVersionFile(_, version))
-        .getOrElse(versionFile(version))
-      if (MetaJson.claim(conf, dir, claim,
-          render(version, parts, cm, table, fork)))
+      val version = head.version + 1
+      // the OPERATION KIND rides the version record (Delta's DESCRIBE
+      // HISTORY `operation` / Iceberg's snapshot summary); a branch's
+      // FIRST commit records the MAIN version it forked from, which
+      // containment search could not tell from a branch commit that
+      // rewrote every fork part (see ManifestMaintenance.cherrypick).
+      // The mapping line is written only once non-trivial: a table
+      // that never renames or drops carries none.
+      val body = MetaJson.encodeManifest(ddl,
+        Some(cm).filter(cm => !cm.isIdentity || cm.retired.nonEmpty ||
+          cm.nextId != cm.ids.length || cm.defaults.nonEmpty ||
+          cm.nested.nonEmpty),
+        Some((version, op, if (branch.isDefined) head.fork else None)),
+        parts, table)
+      if (MetaJson.claim(conf, dir, ManifestLog.claimName(version, branch), body))
         committed = version
     }
     committed
   }
 
-  /** Committed snapshot versions present at `dir`, ascending. */
-  def listVersions(conf: Configuration, dir: String): Seq[Int] = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return Seq.empty
-    fs.listStatus(d).toSeq.map(_.getPath.getName).collect {
-      case VersionRe(v) => v.toInt
-    }.sorted
-  }
-
-  /** Committed versions of a named BRANCH at `dir`, ascending. */
-  def listBranchVersions(conf: Configuration, dir: String,
-      branch: String): Seq[Int] = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return Seq.empty
-    fs.listStatus(d).toSeq.map(_.getPath.getName).collect {
-      case BranchVersionRe(b, v) if b == branch => v.toInt
-    }.sorted
-  }
-
-  /** All branch names with at least one committed snapshot at `dir`. */
-  def listBranches(conf: Configuration, dir: String): Seq[String] = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return Seq.empty
-    fs.listStatus(d).toSeq.map(_.getPath.getName).collect {
-      case BranchVersionRe(b, _) => b
-    }.distinct.sorted
-  }
-
-  /** DRIVER-SIDE SNAPSHOT CACHE. Version manifests are claimed
-    * exclusively at commit and never rewritten, so (dir, version
-    * file) → lines is safe to cache for the life of the process; at
-    * 100k parts a manifest is ~10 MB of JSON, and planning reads it
-    * on every scan build, every streaming trigger, and every CDF
-    * version diff — the cache turns all but the first into memory
-    * hits. A cheap existence probe guards each hit so an EXPIRED
-    * snapshot (ManifestMaintenance deletes its file) still fails
-    * loudly instead of serving from memory. Byte-bounded LRU. */
-  private object LinesCache {
-    private val MaxBytes = 64L << 20
-    private val map =
-      new java.util.LinkedHashMap[String, Seq[String]](64, 0.75f, true)
-    private var bytes = 0L
-    private def sizeOf(ls: Seq[String]): Long =
-      ls.foldLeft(0L)(_ + _.length + 16)
-    def get(k: String): Seq[String] = synchronized { map.get(k) }
-    def put(k: String, v: Seq[String]): Unit = synchronized {
-      if (!map.containsKey(k)) {
-        bytes += sizeOf(v)
-        map.put(k, v)
-        val it = map.entrySet().iterator()
-        while (bytes > MaxBytes && it.hasNext) {
-          val e = it.next()
-          if (e.getKey != k) { bytes -= sizeOf(e.getValue); it.remove() }
-        }
-      }
+  /** The pinned commit's conflict check: the head must still be
+    * `base`, or — with a footprint — have left every footprint part
+    * and the header as `base` had them. */
+  private def checkBase(dir: Path, base: Snapshot, head: Snapshot,
+      footprint: Option[Set[String]]): Unit = {
+    def advanced(why: String) = new java.util.ConcurrentModificationException(
+      s"table $dir advanced from snapshot ${base.version} to ${head.version}" +
+        why)
+    if (head.version != base.version) footprint match {
+      case None => throw advanced(" during an operation that cannot be " +
+        "re-applied; re-plan against the new head")
+      case Some(touched) =>
+        val baseParts = base.parts.map(m => m.path -> m).toMap
+        val headParts = head.parts.map(m => m.path -> m).toMap
+        val conflicted = touched.filter(p =>
+          !headParts.get(p).exists(baseParts.get(p).contains(_)))
+        if (conflicted.nonEmpty) throw advanced(" and a concurrent commit " +
+          s"touched ${conflicted.size} part(s) this operation " +
+          s"read-and-modified (${conflicted.take(3).mkString(", ")}" +
+          s"${if (conflicted.size > 3) ", …" else ""}); re-plan against " +
+          "the new head")
+        def state(h: ManifestHeader) = (h.schemaDdl, h.colmap, h.table)
+        if (state(base.header) != state(head.header)) throw advanced(
+          " and a concurrent commit changed its schema or table record; " +
+            "re-plan against the new head")
     }
+    for (fb <- base.fork; f <- head.fork if f != fb)
+      throw new java.util.ConcurrentModificationException(
+        s"main at $dir advanced from snapshot $fb to $f while staging " +
+          "the branch's first commit; re-plan against the new fork base")
   }
 
-  private def manifestLines(conf: Configuration, dir: String,
-      version: Option[Int] = None,
-      branch: Option[String] = None): Seq[String] = {
-    // HEAD = the NEWEST immutable version file: version files are
-    // claimed exclusively at commit (publishRebase), so a committer
-    // never leaves a half-published head behind. Main version 0 is the
-    // empty table before its first commit, so a directory with no
-    // version file reads as empty. A BRANCH head is the newest branch
-    // version file; a branch with no commits yet has not diverged and
-    // reads as the main head.
-    val name: Option[String] = branch match {
-      case Some(b) =>
-        val bv = version.orElse(listBranchVersions(conf, dir, b).lastOption)
-        bv match {
-          case Some(v) => Some(branchVersionFile(b, v))
-          case None    => listVersions(conf, dir).lastOption.map(versionFile)
-        }
-      case None => version.orElse(listVersions(conf, dir).lastOption)
-        .filter(_ != 0).map(versionFile)
-    }
-    if (name.isEmpty) return Seq.empty
-    val p = new Path(dir, name.get)
-    val fs = p.getFileSystem(conf)
-    // the status probe doubles as the staleness guard: the cache key
-    // carries (length, mtime), so a table dir that was DELETED AND
-    // REBUILT at the same path (test/bench fixtures) misses instead
-    // of serving lines that reference reclaimed part files, and an
-    // EXPIRED snapshot (file gone) still fails loudly below
-    val status = try fs.getFileStatus(p) catch {
-      case _: java.io.FileNotFoundException => null
-    }
-    if (status == null) {
-      if (version.isDefined) throw new IllegalArgumentException(
-        s"no snapshot ${version.get}${branch.map(b => s" on branch $b")
-          .getOrElse("")} at $dir (committed versions: " +
-          s"${branch.map(listBranchVersions(conf, dir, _))
-            .getOrElse(listVersions(conf, dir)).mkString(",")})")
-      return Seq.empty
-    }
-    val cacheKey = s"$p#${status.getLen}#${status.getModificationTime}"
-    val hit = LinesCache.get(cacheKey)
-    if (hit != null) return hit
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    LinesCache.put(cacheKey, lines)
-    lines
-  }
-
-  /** Branch-head reads (write-audit-publish): the branch's part list
-    * and schema — main-head fallback while the branch has no commits. */
-  def readBranchMeta(conf: Configuration, dir: String,
-      branch: String, version: Option[Int] = None): Seq[PartMeta] =
-    MetaJson.decodeParts(manifestLines(conf, dir, version, Some(branch)))
-
-  def readBranchSchema(conf: Configuration, dir: String,
-      branch: String): Option[StructType] =
-    readHeader(conf, dir, None, Some(branch)).schema
 }
 
 private[sources] class ManifestTable(
@@ -1389,23 +1220,15 @@ private[sources] class ManifestBatchWrite(
 
   private val token = java.util.UUID.randomUUID().toString.take(8)
 
-  /** Identity-table appends derive the id high-water mark from the
-    * committed head ONCE, in createBatchWriterFactory — so the commit
-    * must pin that exact base: publishRebase's optimistic merge would
-    * otherwise happily interleave two concurrent identity appends that
-    * both derived the same mark and issued OVERLAPPING ids, silently
-    * breaking the uniqueness contract IdentitySpec pins. Set when the
-    * factory resolves the mark. */
-  @volatile private var identityBaseVersion: Option[Int] = None
-
-  /** For a branch's FIRST identity append (empty branch log) the id
-    * mark is derived from MAIN's head — strictBase = Some(0) only
-    * pins the branch line, so a concurrent MAIN commit between plan
-    * and commit would advance the fork base (which the branch commit
-    * rebases onto) without tripping the check, landing overlapping
-    * ids. Record the main version the mark came from and have the
-    * commit loop verify the fork base is unchanged. */
-  @volatile private var identityForkBase: Option[Int] = None
+  /** The head this write plans onto, resolved once in
+    * createBatchWriterFactory: its header prepares the writers, and an
+    * identity-table append derives its id high-water mark from its
+    * parts — so the commit must pin that exact snapshot. The optimistic
+    * merge would otherwise interleave two concurrent identity appends
+    * that both derived the same mark and issued OVERLAPPING ids,
+    * breaking the uniqueness contract IdentitySpec pins; on an empty
+    * branch the pin covers the main version the mark came from. */
+  @volatile private var planned: Option[Snapshot] = None
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
@@ -1413,8 +1236,10 @@ private[sources] class ManifestBatchWrite(
     // truncate is logical (snapshots own their part files)
     val dir = new Path(path)
     dir.getFileSystem(conf.value).mkdirs(dir)
+    val head = ManifestLog(conf.value, path).snapshot(Ref.of(None, branch))
+    planned = Some(head)
     val factory0 = new ManifestWriterFactory(path, schema, token, conf, spec,
-      ManifestSink.readHeader(conf.value, path, None, branch))
+      head.header)
     // generated wraps INNER (sees identity-filled rows were it to
     // reference them — banned at create, so order only matters for
     // the refusal messages); identity wraps OUTER so its fill sees
@@ -1434,104 +1259,18 @@ private[sources] class ManifestBatchWrite(
           "as NULL (or a value, under GENERATED BY DEFAULT)")
         // high-water is DERIVED from committed stats at plan time —
         // head parts even under logical truncate, so ids never reuse
-        // across a time-travelable overwrite. Resolve the version
-        // FIRST and read the head AT that version (version files are
-        // immutable once claimed): the commit pins this base, so a
-        // concurrent commit between here and our commit fails loudly
-        // instead of landing overlapping ids.
-        val latestV = branch match {
-          case Some(b) =>
-            ManifestSink.listBranchVersions(conf.value, path, b)
-              .lastOption.getOrElse(0)
-          case None =>
-            ManifestSink.listVersions(conf.value, path)
-              .lastOption.getOrElse(0)
-        }
-        identityBaseVersion = Some(latestV)
-        val head = branch match {
-          case Some(b) =>
-            if (latestV == 0) {
-              // empty branch log: the mark derives from MAIN. Resolve
-              // the main version FIRST and read AT it (version files
-              // are immutable) so the recorded fork base and the head
-              // the mark was derived from are the same snapshot.
-              val mainV = ManifestSink.listVersions(conf.value, path)
-                .lastOption.getOrElse(0)
-              identityForkBase = Some(mainV)
-              ManifestSink.readManifestMeta(conf.value, path, Some(mainV))
-            }
-            else ManifestSink.readBranchMeta(conf.value, path, b, Some(latestV))
-          case None =>
-            ManifestSink.readManifestMeta(conf.value, path, Some(latestV))
-        }
+        // across a time-travelable overwrite
         IdentityFillFactory(factory, schema, slot, spec.step,
-          spec.allowExplicit,
-          ManifestIdentity.nextBase(head, spec))
+          spec.allowExplicit, ManifestIdentity.nextBase(head.parts, spec))
       case None => factory
     }
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // append: check the schema only evolved additively (name+type
-    // prefix match) before carrying the head's parts forward — for a
-    // branch commit, against the BRANCH head's schema
-    val committed = if (truncate) None else branch
-      .map(b => ManifestSink.readBranchSchema(conf.value, path, b))
-      .getOrElse(ManifestSink.readSchema(conf.value, path))
-    committed.foreach { old =>
-      // struct columns compare nullability-INSENSITIVELY one level
-      // down: an INSERT of named_struct literals arrives with every
-      // sub-field NOT NULL, but the committed struct's sub-nullability
-      // is the table's (and sticky — see `published` below)
-      def sameType(a: DataType, b: DataType): Boolean = (a, b) match {
-        case (x: StructType, y: StructType) =>
-          x.fields.length == y.fields.length &&
-            x.fields.zip(y.fields).forall { case (fa, fb) =>
-              fa.name == fb.name && sameType(fa.dataType, fb.dataType)
-            }
-        case _ => a == b
-      }
-      val prefixOk = old.fields.length <= schema.fields.length &&
-        old.fields.zip(schema.fields).forall { case (a, b) =>
-          a.name == b.name && sameType(a.dataType, b.dataType)
-        }
-      if (!prefixOk) throw new IllegalArgumentException(
-        s"append schema must extend the committed schema additively; " +
-          s"committed=${old.toDDL} incoming=${schema.toDDL}")
-    }
-    // The published schema must never let a WRITE's tighter nullability
-    // stomp the table's: an INSERT of literals arrives with every field
-    // NOT NULL, but (a) nullability is STICKY — rows committed under a
-    // nullable column may hold nulls forever — and (b) a column the
-    // committed schema doesn't have yet (this append is the widening,
-    // or ALTER TABLE added it) is missing from every old part and reads
-    // back NULL, so it must publish nullable regardless of what the
-    // writer claims.
-    val published = committed match {
-      case None => schema
-      case Some(old) => StructType(schema.fields.zipWithIndex.map {
-        case (f, i) if i < old.fields.length =>
-          // the committed DATATYPE is sticky, but nullability — at
-          // BOTH levels — may only WIDEN with the write: a struct
-          // append carrying genuinely-null sub-values must publish
-          // those sub-fields nullable, or readers would decode NULL
-          // at a slot the schema declares non-null (silently wrong
-          // under codegen). Narrowing never happens: committed rows
-          // under a nullable field may hold nulls forever.
-          def widenNulls(o: DataType, n: DataType): DataType = (o, n) match {
-            case (os: StructType, ns: StructType)
-                if os.fields.length == ns.fields.length =>
-              StructType(os.fields.zip(ns.fields).map { case (of, nf) =>
-                of.copy(nullable = of.nullable || nf.nullable)
-              })
-            case _ => o
-          }
-          val merged = widenNulls(old.fields(i).dataType, f.dataType)
-          if (old.fields(i).nullable) old.fields(i).copy(dataType = merged)
-          else f.copy(dataType = merged)
-        case (f, _) => f.copy(nullable = true)
-      })
-    }
+    // the write's columns extend the head's additively (checked and
+    // nullability-widened against the head of every claim attempt);
+    // an overwrite's replace the head's
+    val header = HeaderChange.Append(schema, replace = truncate)
     val newParts = ManifestSink.committedParts(messages.toSeq, spec)
     replaceFilters match {
       case Some(filters) =>
@@ -1542,22 +1281,20 @@ private[sources] class ManifestBatchWrite(
         // straddling parts get the COW survivor rewrite
         // (ManifestCow.rewriteSurvivors, FALSE/NULL rows survive),
         // and the staged new parts append. Pinned to the base read
-        // HERE (strictBase): the classification and the rewrite are
-        // valid only against this exact head, so a racing commit
-        // fails this overwrite loudly unless footprints are disjoint.
+        // HERE: the classification and the rewrite are valid only
+        // against this exact head, so a racing commit fails this
+        // overwrite loudly unless footprints are disjoint.
         require(branch.isEmpty, "REPLACE WHERE cannot target a branch " +
           "(its base pin and COW rewrite address the main version line); " +
           "replace on main, or stage plain appends on the branch")
-        val baseVersion =
-          ManifestSink.listVersions(conf.value, path).lastOption.getOrElse(0)
-        val baseParts =
-          ManifestSink.readManifestMeta(conf.value, path, Some(baseVersion))
+        val base = ManifestLog(conf.value, path).snapshot()
         val (touched, rewritten) =
-          ManifestCow.rewriteSurvivors(path, published, filters, baseParts)
-        ManifestSink.publishRebase(conf.value, path, published,
+          ManifestCow.rewriteSurvivors(path, header.published(base.header),
+            filters, base)
+        ManifestSink.publishRebase(conf.value, path,
           head => head.filterNot(p => touched.contains(p.path)) ++
             rewritten ++ newParts,
-          strictBase = Some(baseVersion), footprint = Some(touched),
+          header, base = Some(base), footprint = Some(touched),
           branch = branch, op = opName)
       case None =>
         // The prior part list is NOT captured here: it is re-read from
@@ -1565,20 +1302,19 @@ private[sources] class ManifestBatchWrite(
         // append racing another committer re-applies `head ++ newParts`
         // on top of whatever actually won — never dropping the winner's
         // parts. EXCEPTION: identity tables pin the snapshot their id
-        // mark was derived from (identityBaseVersion) — merging there
-        // would issue overlapping ids, so the loser fails and retries
-        // with a freshly-derived mark instead.
-        try ManifestSink.publishRebase(conf.value, path, published,
+        // mark was derived from — merging there would issue
+        // overlapping ids, so the loser fails and retries with a
+        // freshly-derived mark instead.
+        val pin = planned.filter(_ => identity.isDefined)
+        try ManifestSink.publishRebase(conf.value, path,
           head => (if (truncate) Seq.empty else head) ++ newParts,
-          strictBase = identityBaseVersion, branch = branch, op = opName,
-          strictForkBase = identityForkBase)
+          header, base = pin, branch = branch, op = opName)
         catch {
-          case e: java.util.ConcurrentModificationException
-              if identityBaseVersion.isDefined =>
+          case e: java.util.ConcurrentModificationException if pin.isDefined =>
             throw new java.util.ConcurrentModificationException(
               s"identity-column append to $path lost a commit race: the id " +
                 "high-water mark was derived from snapshot " +
-                s"${identityBaseVersion.get}, which is no longer the head — " +
+                s"${pin.get.version}, which is no longer the head — " +
                 "retry the write (it re-derives the mark); committing anyway " +
                 s"would issue overlapping ids. (${e.getMessage})")
         }
@@ -1629,7 +1365,7 @@ private[sources] class ManifestStreamingWrite(
     // files, which the skipped commit then deletes
     ManifestStreamingWriterFactory(new ManifestWriterFactory(path, schema,
       java.util.UUID.randomUUID().toString.take(8), conf, spec,
-      ManifestSink.readHeader(conf.value, path)))
+      ManifestLog(conf.value, path).snapshot().header))
   }
 
   /** True iff some committed version already carries this epoch's
@@ -1637,8 +1373,8 @@ private[sources] class ManifestStreamingWrite(
     * same query). */
   private def alreadyCommitted(epochId: Long): Boolean = {
     val prefix = s"stream:$queryId:"
-    ManifestSink.listVersions(conf.value, path).reverseIterator
-      .map(v => ManifestSink.readOp(conf.value, path, Some(v)))
+    val log = ManifestLog(conf.value, path)
+    log.versions.reverseIterator.map(v => log.snapshot(Ref.At(v)).op)
       .collectFirst {
         case op if op.startsWith(prefix) =>
           op.stripPrefix(prefix).toLong >= epochId
@@ -1649,8 +1385,8 @@ private[sources] class ManifestStreamingWrite(
       messages: Array[WriterCommitMessage]): Unit = {
     if (alreadyCommitted(epochId)) { abort(epochId, messages); return }
     val newParts = ManifestSink.committedParts(messages.toSeq, spec)
-    ManifestSink.publishRebase(conf.value, path, schema,
-      head => head ++ newParts, strictBase = None, op = opToken(epochId))
+    ManifestSink.publishRebase(conf.value, path, head => head ++ newParts,
+      HeaderChange.Append(schema), op = opToken(epochId))
   }
 
   override def abort(epochId: Long,

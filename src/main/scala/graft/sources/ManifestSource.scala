@@ -76,10 +76,8 @@ class ManifestSource extends TableProvider {
     val branch = Option(options.get("branch")).filter(_.nonEmpty)
     require(branch.isEmpty || version.isEmpty,
       "options 'branch' and 'version' are mutually exclusive")
-    val base = branch
-      .map(b => ManifestSink.readBranchSchema(ManifestSink.driverConf(), path, b))
-      .getOrElse(
-        ManifestSink.readSchema(ManifestSink.driverConf(), path, version))
+    val base = ManifestLog(ManifestSink.driverConf(), path)
+      .snapshot(Ref.of(version, branch)).schema
       .getOrElse(throw new IllegalArgumentException(
         s"no committed manifest (with schema header) at $path"))
     // CHANGE FEED: `option("changeFeed", "true")` widens the schema
@@ -181,6 +179,11 @@ private[sources] class ManifestScanBuilder(
   private var aggResult: Option[(StructType, Seq[Array[Any]])] = None
   private var limit: Option[Int] = None
 
+  // the one snapshot this builder plans: its metadata-aggregate
+  // answer and its scan read the same resolution
+  private lazy val snapshot: Snapshot =
+    ManifestLog(conf.value, path).snapshot(Ref.of(version, branch))
+
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
@@ -234,10 +237,7 @@ private[sources] class ManifestScanBuilder(
     def fieldOf(n: String): Option[StructField] =
       schema.fields.find(_.name == n)
     // a branch read must answer from the BRANCH head, never main's
-    val meta: Seq[PartMeta] =
-      if (branch.isDefined)
-        ManifestSink.readSnapshot(conf.value, path, None, branch)._1
-      else ManifestSink.readManifestMeta(conf.value, path, version)
+    val meta: Seq[PartMeta] = snapshot.parts
     // MIN/MAX/SUM stats are stale once a deletion vector exists (the
     // extreme/summed rows may be the deleted ones) — COUNT(*) stays
     // exact via visibleRows, so it alone survives DVs
@@ -495,8 +495,8 @@ private[sources] class ManifestScanBuilder(
         ManifestCdf.MetaNames.contains(f.name)))
       return new ManifestMicroBatchStream(path, base, required, conf,
         startingVersion, maxPartsPerTrigger,
-        ManifestSink.alignColMap(
-          ManifestSink.readSchemaAndColMap(conf.value, path), base, path),
+        ManifestSink.alignColMap(ManifestLog(conf.value, path).snapshot()
+          .header.schemaCm, base, path),
         changeFeed = true)
     }
     // plan against the manifest on the DRIVER: only committed parts,
@@ -506,28 +506,14 @@ private[sources] class ManifestScanBuilder(
     // whose column is all NULL is pruned by any bound on it; with no
     // pushed predicates nothing is pruned.
     //
-    // The head version is resolved HERE and the meta read PINNED to
-    // it, so the (part list, base version) pair a row-level rewrite
-    // records is one consistent snapshot — resolving the version at
-    // execution time could capture a commit that landed after this
-    // plan and void the strictBase lost-update guard.
-    val (all, baseVersion, head) = branch match {
-      case Some(b) =>
-        // pin the BRANCH head version the same way the main line is
-        // pinned: a branch-routed row-level rewrite records (parts,
-        // branch version) as one consistent snapshot, so its commit's
-        // strictBase guards the branch line, not a meaningless 0
-        val latest = ManifestSink.listBranchVersions(conf.value, path, b)
-          .lastOption.getOrElse(0)
-        val (m, h) = ManifestSink.readSnapshot(conf.value, path,
-          if (latest == 0) None else Some(latest), Some(b))
-        (m, latest, h)
-      case None =>
-        val v = version.getOrElse(ManifestSink.listVersions(conf.value, path)
-          .lastOption.getOrElse(0))
-        val (m, h) = ManifestSink.readSnapshot(conf.value, path, Some(v))
-        (m, v, h)
-    }
+    // The scan plans ONE snapshot (`snapshot`, shared with the
+    // metadata-aggregate answer), so the part list a row-level rewrite
+    // records and the base its commit pins are consistent — resolving
+    // at execution time could capture a commit that landed after this
+    // plan and void the lost-update guard. A branch read pins the
+    // BRANCH head the same way.
+    val all = snapshot.parts
+    val head = snapshot.header
     aggResult match {
       case Some((aggSchema, aggRows)) =>
         new ManifestAggScan(aggSchema, aggRows)
@@ -600,7 +586,7 @@ private[sources] class ManifestScanBuilder(
           org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE) &&
           keyCol.exists(c => longBounds.contains(c) || longPoints.contains(c))
         new ManifestScan(kept, schema, required, conf, all.size, limit, keyCol,
-          path, rowLevelOwner, startingVersion, baseVersion,
+          path, rowLevelOwner, startingVersion, snapshot,
           maxPartsPerTrigger, ManifestSink.alignColMap(head.schemaCm, schema, path),
           branched = branch.isDefined, runtimeFiltered = !keyBoundDelete,
           tableProps = head.table.props)
@@ -659,7 +645,7 @@ private[sources] class ManifestScan(
     tablePath: String = "",
     rowLevelOwner: Option[ManifestRowLevelOp] = None,
     startingVersion: Option[Int] = None,
-    baseVersion: Int = 0,
+    base: Snapshot,
     maxPartsPerTrigger: Option[Int] = None,
     cm: ColMap,
     branched: Boolean = false,
@@ -742,7 +728,7 @@ private[sources] class ManifestScan(
     * relation and the rewrite's adjacency match fails. */
   private[sources] def mvRewriteTarget: Option[(String, Int)] =
     if (tablePath.nonEmpty && limit.isEmpty && rowLevelOwner.isEmpty &&
-      startingVersion.isEmpty && !branched) Some((tablePath, baseVersion))
+      startingVersion.isEmpty && !branched) Some((tablePath, base.version))
     else None
 
   /** Streaming read: snapshot versions ARE the offsets (see
@@ -830,9 +816,9 @@ private[sources] class ManifestScan(
   override def planInputPartitions(): Array[InputPartition] = {
     // a row-level rewrite's commit must replace EXACTLY the parts its
     // scan planned (post static + runtime pruning) — record them on
-    // the shared operation before tasks launch, paired with the base
-    // version the part list was read at (same head read, see build())
-    rowLevelOwner.foreach(_.recordScan(parts, baseVersion))
+    // the shared operation before tasks launch, paired with the
+    // snapshot the part list was read from (see build())
+    rowLevelOwner.foreach(_.recordScan(parts, base))
     parts.map(p =>
       ManifestPartition(p.path, p.rows, dvRef = p.dvRef, bucket = p.bucket,
         eq = p.eq)).toArray
@@ -1005,7 +991,7 @@ private[sources] case class ManifestPartition(
   * claimed only AFTER its parts, so a version `latestOffset` observes
   * is always fully readable — no listing races, no partially-visible
   * commits. Rewritten history (vacuumed versions below a checkpointed
-  * offset) fails loudly via readManifestMeta rather than silently
+  * offset) fails loudly via [[ManifestLog.snapshot]] rather than silently
   * re-serving the head; AvailableNow and continuous restarts resume
   * from the checkpointed version.
   *
@@ -1060,12 +1046,13 @@ private[sources] class ManifestMicroBatchStream(
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = this
 
   private var availableEnd: Option[Int] = None
-  private def headVersion: Int =
-    ManifestSink.listVersions(conf.value, path).lastOption.getOrElse(0)
-  private def metaAt(v: Int): Seq[PartMeta] =
-    if (v == 0) Seq.empty
-    else ManifestSink.readManifestMeta(conf.value, path, Some(v))
-  private def pathsAt(v: Int): Set[String] = metaAt(v).map(_.path).toSet
+  private def headVersion: Int = ManifestLog(conf.value, path).head
+  // the part lists `latestOffset(start, limit)` read for the range it
+  // admitted: planInputPartitions plans that range from them, so a
+  // rate-limited trigger decodes each manifest once
+  @volatile private var admitted: Map[Int, Seq[PartMeta]] = Map.empty
+  private def metaAt(log: => ManifestLog, v: Int): Seq[PartMeta] =
+    admitted.getOrElse(v, log.snapshot(Ref.At(v)).parts)
 
   /** Only consulted when no checkpoint exists; resume always wins. */
   override def initialOffset(): Offset =
@@ -1081,10 +1068,18 @@ private[sources] class ManifestMicroBatchStream(
       .getOrElse(ReadLimit.allAvailable())
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val head = availableEnd.getOrElse(headVersion)
+    val log = ManifestLog(conf.value, path)
+    val head = availableEnd.getOrElse(log.head)
     val s = start.asInstanceOf[V].v
+    admitted = Map.empty
     limit match {
       case f: ReadMaxFiles if s < head =>
+        val read = Map.newBuilder[Int, Seq[PartMeta]]
+        def pathsAt(v: Int): Set[String] = {
+          val parts = log.snapshot(Ref.At(v)).parts
+          read += v -> parts
+          parts.map(_.path).toSet
+        }
         var v = s
         var used = 0
         var prev = pathsAt(s)
@@ -1097,6 +1092,7 @@ private[sources] class ManifestMicroBatchStream(
           if (used + added > f.maxFiles && v > s) full = true
           else { used += added; v += 1; prev = next }
         }
+        admitted = read.result()
         V(v)
       case _ => V(head)
     }
@@ -1115,20 +1111,21 @@ private[sources] class ManifestMicroBatchStream(
   }
 
   private def plan(s: Int, e: Int): Array[InputPartition] = {
+    lazy val log = ManifestLog(conf.value, path)
     if (e <= s) Array.empty
     else if (changeFeed) {
       // each version's manifest is decoded once: it is `cur` for its
       // own diff and `prev` for the next
-      var prev = metaAt(s)
+      var prev = metaAt(log, s)
       (s + 1 to e).flatMap { v =>
-        val cur = metaAt(v)
+        val cur = metaAt(log, v)
         val out = changesAt(v, prev, cur)
         prev = cur
         out
       }.toArray
     } else {
-      val before = pathsAt(s)
-      metaAt(e).filterNot(m => before.contains(m.path))
+      val before = metaAt(log, s).map(_.path).toSet
+      metaAt(log, e).filterNot(m => before.contains(m.path))
         .map(m => ManifestPartition(m.path, m.rows, dvRef = m.dvRef,
           eq = m.eq): InputPartition)
         .toArray
@@ -1190,10 +1187,17 @@ private[sources] class ManifestMicroBatchStream(
   // head its schema came from: a nested DROP COLUMN committed
   // mid-stream must not shift nested ids under this stream's fixed
   // schema. EXISTS defaults are frozen at ADD COLUMN, so the pinned
-  // view stays valid for every replayed part.
+  // view stays valid for every replayed part. ONE reader per distinct
+  // read schema: the clause columns are all a factory takes from the
+  // batch (each partition carries its own clauses), and building a
+  // reader broadcasts its Hadoop conf.
+  private val factories =
+    scala.collection.concurrent.TrieMap.empty[Set[(Int, Boolean)], ManifestReaderFactory]
   override def createReaderFactory(): PartitionReaderFactory =
-    new ManifestReaderFactory(schema, required, conf, cm, plannedClauses,
-      changeFeed = changeFeed)
+    factories.getOrElseUpdate(
+      plannedClauses.map(c => (c.fieldId, c.kind == 's')).toSet,
+      new ManifestReaderFactory(schema, required, conf, cm, plannedClauses,
+        changeFeed = changeFeed))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -1201,7 +1205,7 @@ private[sources] class ManifestMicroBatchStream(
 
 /** Option parsing shared by the path table and the catalog table:
   * `startingVersion` maps to initial offset startingVersion-1, so 0
-  * (or a negative) would plan readManifestMeta(Some(-1)) on the first
+  * (or a negative) would plan snapshot -1 on the first
   * trigger and surface as a raw FileNotFoundException — validate at
   * PARSE time with a message that names the option instead. */
 private[sources] object StreamOptions {
@@ -1231,12 +1235,8 @@ private[sources] object StreamOptions {
         "mutually exclusive")
     sv.orElse(st.map { s =>
       val ms = java.sql.Timestamp.valueOf(s.replace('T', ' ')).getTime
-      val dir = new Path(path)
-      val fs = dir.getFileSystem(conf)
-      val versions = ManifestSink.listVersions(conf, path)
-      versions.find(v => fs.getFileStatus(new Path(dir,
-        ManifestSink.versionFile(v))).getModificationTime >= ms)
-        .getOrElse(versions.lastOption.getOrElse(0) + 1)
+      val log = ManifestLog(conf, path)
+      log.versions.find(log.commitTime(_) >= ms).getOrElse(log.head + 1)
     })
   }
 

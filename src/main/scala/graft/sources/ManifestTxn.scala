@@ -76,19 +76,19 @@ object ManifestTxn {
     * was already committed. Returns the verified entries. */
   def stageMarker(conf: Configuration, warehouse: String, id: String,
       tableDirs: Seq[String]): Seq[TxnEntry] = {
-    require(id.nonEmpty && ManifestSink.validBranch(branchOf(id)),
+    require(id.nonEmpty && ManifestLog.validBranch(branchOf(id)),
       s"invalid txn id '$id'")
     require(tableDirs.nonEmpty, "txn declares no tables")
     val branch = branchOf(id)
     val entries = tableDirs.map { dir =>
-      val bvs = ManifestSink.listBranchVersions(conf, dir, branch)
+      val log = ManifestLog(conf, dir)
+      val bvs = log.branchVersions(branch)
       require(bvs.nonEmpty,
         s"txn '$id': no staged commits on branch '$branch' at $dir — " +
           "aborting BEFORE the commit point; no table has advanced")
-      val fork = ManifestSink.readBranchFork(conf, dir, branch)
+      val fork = log.snapshot(Ref.Branch(branch, Some(1))).header.fork
         .getOrElse(0)
-      val mainHead = ManifestSink.listVersions(conf, dir)
-        .lastOption.getOrElse(0)
+      val mainHead = log.head
       if (mainHead != fork)
         throw new java.util.ConcurrentModificationException(
           s"txn '$id': $dir advanced from fork base $fork to $mainHead " +
@@ -126,10 +126,9 @@ object ManifestTxn {
     var published = 0
     entries.foreach { e =>
       val target = e.forkBase + 1
-      val head = ManifestSink.listVersions(conf, e.dir)
-        .lastOption.getOrElse(0)
-      val applied = head >= target &&
-        ManifestSink.readOp(conf, e.dir, Some(target)) == label
+      val log = ManifestLog(conf, e.dir)
+      val head = log.head
+      val applied = head >= target && log.snapshot(Ref.At(target)).op == label
       if (!applied) {
         if (head != e.forkBase)
           throw new java.util.ConcurrentModificationException(
@@ -138,23 +137,20 @@ object ManifestTxn {
               "txn is durably committed but cannot complete on this " +
               "table; resolve the foreign commit and re-run recovery")
         // publish the STAGED branch head (pinned at the recorded
-        // version — later branch debris never leaks in)
-        val (parts, staged) = ManifestSink.readSnapshot(conf, e.dir,
-          Some(e.branchHead), Some(branch))
-        val (schema, cm) = staged.schemaCm.getOrElse(
+        // version — later branch debris never leaks in) onto the fork
+        // base, pinned
+        val staged = log.snapshot(Ref.Branch(branch, Some(e.branchHead)))
+        val (schema, cm) = staged.header.schemaCm.getOrElse(
           throw new IllegalStateException(
             s"txn '$id': branch '$branch' at ${e.dir} has no schema"))
-        ManifestSink.publishRebase(conf, e.dir, schema,
-          _ => parts, strictBase = Some(e.forkBase),
-          restate = Some((cm, staged.table)), checkWritten = false, op = label)
+        ManifestSink.publishRebase(conf, e.dir, _ => staged.parts,
+          HeaderChange.Restate(schema, cm, staged.header.table),
+          base = Some(log.snapshot(Ref.At(e.forkBase))), op = label)
         published += 1
       }
     }
     // completion: drop the now-published branches, archive the marker
-    entries.foreach { e =>
-      if (ManifestSink.listBranchVersions(conf, e.dir, branch).nonEmpty)
-        ManifestMaintenance.dropBranch(conf, e.dir, branch)
-    }
+    entries.foreach(e => ManifestMaintenance.dropBranch(conf, e.dir, branch))
     val fs = txnRoot(warehouse).getFileSystem(conf)
     val (marker, archived) =
       (markerPath(warehouse, id), appliedPath(warehouse, id))
@@ -196,14 +192,7 @@ object ManifestTxn {
         s"txn '$id' already committed — its staged branches are " +
           "needed by roll-forward; run txn_recover instead of abort")
     val branch = branchOf(id)
-    var dropped = 0
-    tableDirs.foreach { d =>
-      if (ManifestSink.listBranchVersions(conf, d, branch).nonEmpty) {
-        ManifestMaintenance.dropBranch(conf, d, branch)
-        dropped += 1
-      }
-    }
-    dropped
+    tableDirs.count(d => ManifestMaintenance.dropBranch(conf, d, branch) > 0)
   }
 
   /** True when txn `id` has already claimed its commit point (marker

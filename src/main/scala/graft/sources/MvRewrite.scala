@@ -97,12 +97,9 @@ object MvRewrite extends Rule[LogicalPlan] {
     val targets = dirs.flatMap { d =>
       try {
         val m = ManifestMv.readMeta(conf, d)
-        val head = ManifestSink.listVersions(conf, m.source)
-          .lastOption.getOrElse(0)
+        val head = ManifestLog(conf, m.source).head
         // join MVs also resolve the dim head once per pass
-        val dimHead = m.join.map(j =>
-          ManifestSink.listVersions(conf, j.dimSource)
-            .lastOption.getOrElse(0)).getOrElse(0)
+        val dimHead = m.join.fold(0)(j => ManifestLog(conf, j.dimSource).head)
         if (m.sourceVersion > 0) Some((Target(m, d), head, dimHead))
         else None
       } catch { case scala.util.control.NonFatal(_) => None }

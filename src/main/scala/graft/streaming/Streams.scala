@@ -788,7 +788,8 @@ ORDER BY p.user_id, p_id, c_id NULLS FIRST""")),
           val conf = spark.sparkContext.hadoopConfiguration
           val parts = new java.io.File(target).listFiles()
             .filter(_.getName.startsWith("batch-")).toSeq
-            .flatMap(b => graft.sources.ManifestSink.readManifest(conf, b.toString))
+            .flatMap(b => graft.sources.ManifestLog(conf, b.toString).snapshot()
+              .partRanges)
           val nonEmpty = parts.filter(_._2 > 0)
           import spark.implicits._
           Seq((parts.map(_._2).sum,

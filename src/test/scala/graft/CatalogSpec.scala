@@ -314,7 +314,7 @@ class CatalogSpec extends SparkSpec {
       .option("path", s"$wh/ns/del")
       .mode("overwrite").save()
     val conf = spark.sessionState.newHadoopConf()
-    val partsBefore = graft.sources.ManifestSink.readManifest(conf, s"$wh/ns/del")
+    val partsBefore = graft.sources.ManifestLog(conf, s"$wh/ns/del").snapshot().partRanges
     assert(partsBefore.size === 4)
     // cut at the last part's kMin: that part is provably all-match,
     // every other part provably none-match
@@ -337,8 +337,7 @@ class CatalogSpec extends SparkSpec {
     // their files forward BY REFERENCE (same paths in the new
     // snapshot), and the superseded file stays on disk for time travel
     val straddle = partsBefore.map(_._3).filter(_ < cut).max + 1
-    def headParts() = graft.sources.ManifestSink
-      .readManifest(conf, s"$wh/ns/del").map(_._1).toSet
+    def headParts() = graft.sources.ManifestLog(conf, s"$wh/ns/del").snapshot().partRanges.map(_._1).toSet
     val untouchedExpected = headParts().filter { p =>
       partsBefore.exists(b => b._1 == p && b._4 < straddle)
     }
@@ -421,10 +420,10 @@ class CatalogSpec extends SparkSpec {
     val dir = s"$wh/ns/tt"
     val now = System.currentTimeMillis()
     JFiles.setLastModifiedTime(
-      Paths.get(dir, graft.sources.ManifestSink.versionFile(1)),
+      Paths.get(dir, graft.sources.ManifestLog.versionFile(1)),
       FileTime.fromMillis(now - 20 * 60 * 1000))
     JFiles.setLastModifiedTime(
-      Paths.get(dir, graft.sources.ManifestSink.versionFile(2)),
+      Paths.get(dir, graft.sources.ManifestLog.versionFile(2)),
       FileTime.fromMillis(now - 10 * 60 * 1000))
     def atMinus(min: Int): Long = {
       val ts = new java.sql.Timestamp(now - min * 60 * 1000)
@@ -532,7 +531,7 @@ class CatalogSpec extends SparkSpec {
     assert(serve(committed()) === serve(indexRows(base.union(delta1))),
       "serve from committed head after first append must match in-memory")
     write(delta2, "append", 2)  // v3
-    assert(graft.sources.ManifestSink.listVersions(conf, t) === Seq(1, 2, 3))
+    assert(graft.sources.ManifestLog(conf, t).versions === Seq(1, 2, 3))
     assert(serve(committed()) ===
       serve(indexRows(emb.filter(col("vec_id") >= 8))),
       "serve after second append must cover the whole corpus")

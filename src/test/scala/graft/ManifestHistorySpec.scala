@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
-import graft.sources.{ManifestMaintenance, ManifestSink}
+import graft.sources.{ManifestLog, ManifestMaintenance, ManifestSink, Ref}
 
 /** Snapshot-history guarantees of the manifest table format: immutable
   * versioned commits (time travel), append as an O(new-data) manifest
@@ -39,14 +39,14 @@ class ManifestHistorySpec extends SparkSpec {
     val target = Files.createTempDirectory("graft-hist-spec-").toString
     writeSlice(target, 0, "overwrite")
     writeSlice(target, 1, "overwrite")
-    assert(ManifestSink.listVersions(conf, target) === Seq(1, 2))
+    assert(ManifestLog(conf, target).versions === Seq(1, 2))
     val n0 = base.filter(col("event_id") % 10 === 0).count()
     val n1 = base.filter(col("event_id") % 10 === 1).count()
     assert(readVersion(target, Some(1)).count() === n0, "v1 = first write")
     assert(readVersion(target, Some(2)).count() === n1, "v2 = second write")
     assert(readVersion(target, None).count() === n1, "head = latest")
     // logical truncate: v1's data files remain on disk, owned by v1
-    val v1Parts = ManifestSink.readManifest(conf, target, Some(1))
+    val v1Parts = ManifestLog(conf, target).snapshot(Ref.At(1)).partRanges
     assert(v1Parts.nonEmpty)
     v1Parts.foreach { case (p, _, _, _) =>
       assert(Files.exists(Paths.get(p.stripPrefix("file:"))),
@@ -57,9 +57,9 @@ class ManifestHistorySpec extends SparkSpec {
   test("append merges the head's parts: commit is O(new data)") {
     val target = Files.createTempDirectory("graft-hist-spec-").toString
     writeSlice(target, 0, "overwrite")
-    val v1Parts = ManifestSink.readManifest(conf, target).map(_._1).toSet
+    val v1Parts = ManifestLog(conf, target).snapshot().partRanges.map(_._1).toSet
     writeSlice(target, 1, "append")
-    val v2Parts = ManifestSink.readManifest(conf, target).map(_._1).toSet
+    val v2Parts = ManifestLog(conf, target).snapshot().partRanges.map(_._1).toSet
     assert(v1Parts.subsetOf(v2Parts), "appended snapshot reuses v1's files")
     assert(v2Parts.size === v1Parts.size + 4, "plus exactly the new parts")
     val expect = base.filter(col("event_id") % 10 === 0 ||
@@ -128,13 +128,13 @@ class ManifestHistorySpec extends SparkSpec {
     assert(stats.versionsExpired === 2)
     assert(stats.versionsRetained === 1)
     assert(stats.filesDeleted === 9, "4 parts × 2 expired versions + 1 orphan")
-    assert(ManifestSink.listVersions(conf, target) === Seq(3))
+    assert(ManifestLog(conf, target).versions === Seq(3))
     val headAfter = readVersion(target, None)
       .agg(count(lit(1)), sum(col("value"))).collect().head
     assert(headAfter === headBefore, "head must survive vacuum bit-for-bit")
     intercept[Exception] { readVersion(target, Some(1)).count() }
     // every retained part still on disk; nothing unreferenced remains
-    val listed = ManifestSink.readManifest(conf, target)
+    val listed = ManifestLog(conf, target).snapshot().partRanges
       .map(p => Paths.get(p._1.stripPrefix("file:")).getFileName.toString).toSet
     val onDisk = Files.list(Paths.get(target)).toArray.map(_.toString)
       .filter(p => ManifestSink.isPartFile(Paths.get(p).getFileName.toString))
@@ -157,7 +157,7 @@ class ManifestHistorySpec extends SparkSpec {
       .write.format("graft.sources.ManifestSink")
       .option("path", target)
       .mode("overwrite").save()
-    val before = ManifestSink.readManifest(conf, target)
+    val before = ManifestLog(conf, target).snapshot().partRanges
     assert(before.size === 4)
     val filesBefore = Files.list(Paths.get(target)).toArray.map(_.toString)
       .count(p => ManifestSink.isPartFile(Paths.get(p).getFileName.toString))
@@ -177,7 +177,7 @@ class ManifestHistorySpec extends SparkSpec {
     assert(stats.filesDeleted === 2, stats.toString)
     assert(spark.sql("SELECT * FROM gcv.ns.cowvac").count() === 600)
     intercept[Exception] { readVersion(target, Some(1)).count() }
-    val listed = ManifestSink.readManifest(conf, target)
+    val listed = ManifestLog(conf, target).snapshot().partRanges
       .map(p => Paths.get(p._1.stripPrefix("file:")).getFileName.toString).toSet
     val onDisk = Files.list(Paths.get(target)).toArray.map(_.toString)
       .filter(p => ManifestSink.isPartFile(Paths.get(p).getFileName.toString))
@@ -203,8 +203,8 @@ class ManifestHistorySpec extends SparkSpec {
     // the restore is itself a snapshot: travel back to it explicitly
     assert(readVersion(target, Some(3)).count() === n1)
     // a restore references data files, never copies them
-    val v1Parts = ManifestSink.readManifest(conf, target, Some(1)).map(_._1).toSet
-    val v3Parts = ManifestSink.readManifest(conf, target, Some(3)).map(_._1).toSet
+    val v1Parts = ManifestLog(conf, target).snapshot(Ref.At(1)).partRanges.map(_._1).toSet
+    val v3Parts = ManifestLog(conf, target).snapshot(Ref.At(3)).partRanges.map(_._1).toSet
     assert(v1Parts === v3Parts)
   }
 
@@ -216,14 +216,14 @@ class ManifestHistorySpec extends SparkSpec {
     val target = Files.createTempDirectory("graft-occ-").toString
     writeSlice(target, 0, "overwrite") // v1
     val v1Bytes = Files.readAllBytes(Paths.get(target,
-      ManifestSink.versionFile(1)))
+      ManifestLog.versionFile(1)))
     // the "racer": v2 exists before our commit computes its slot
-    Files.write(Paths.get(target, ManifestSink.versionFile(2)),
+    Files.write(Paths.get(target, ManifestLog.versionFile(2)),
       new String(v1Bytes, "UTF-8").replace("\"version\":1", "\"version\":2")
         .getBytes("UTF-8"))
     writeSlice(target, 1, "append") // must land at v3, not overwrite v2
-    assert(ManifestSink.listVersions(conf, target) === Seq(1, 2, 3))
-    assert(Files.readAllBytes(Paths.get(target, ManifestSink.versionFile(2)))
+    assert(ManifestLog(conf, target).versions === Seq(1, 2, 3))
+    assert(Files.readAllBytes(Paths.get(target, ManifestLog.versionFile(2)))
       .length > 0, "the raced snapshot must survive")
     val n1 = base.filter(col("event_id") % 10 === 0).count()
     val n2 = base.filter(col("event_id") % 10 === 1).count()
@@ -268,7 +268,7 @@ class ManifestHistorySpec extends SparkSpec {
       .agg(count(lit(1)).cast("long"), sum(col("value"))).collect().head
     assert(got === want, "stats+paths must decode exactly from the manifest")
     // and the parsed manifest paths point at real files
-    ManifestSink.readManifest(conf, hostile).foreach { case (p, _, _, _) =>
+    ManifestLog(conf, hostile).snapshot().partRanges.foreach { case (p, _, _, _) =>
       assert(Files.exists(Paths.get(p.stripPrefix("file:"))), s"bad path $p")
     }
   }

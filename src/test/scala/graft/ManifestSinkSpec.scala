@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
-import graft.sources.ManifestSink
+import graft.sources.{ManifestLog, ManifestSink}
 
 /** DSv2 sink commit-protocol guarantees (the parts an oracle can't
   * see): staged files match the manifest exactly, the manifest is the
@@ -23,8 +23,7 @@ class ManifestSinkSpec extends SparkSpec {
   test("manifest totals equal the written data; every listed file exists") {
     val target = Files.createTempDirectory("graft-sink-spec-").toString
     writeOnce(target, 4)
-    val m = ManifestSink.readManifest(
-      spark.sparkContext.hadoopConfiguration, target)
+    val m = ManifestLog(spark.sparkContext.hadoopConfiguration, target).snapshot().partRanges
     assert(m.size === 4, "one manifest entry per writer task")
     val expected = Tables.events(spark, Sf0001).count()
     assert(m.map(_._2).sum === expected)
@@ -39,8 +38,7 @@ class ManifestSinkSpec extends SparkSpec {
     val target = Files.createTempDirectory("graft-sink-spec-").toString
     spark.range(0, 3, 1, 8).write.format("graft.sources.ManifestSink")
       .option("path", target).mode("overwrite").save()
-    val m = ManifestSink.readManifest(
-      spark.sparkContext.hadoopConfiguration, target)
+    val m = ManifestLog(spark.sparkContext.hadoopConfiguration, target).snapshot().partRanges
     assert(m.size === 3, m.toString)
     assert(m.forall(_._2 > 0), "no empty part is listed")
     assert(Files.list(Paths.get(target)).toArray.map(_.toString)
@@ -56,8 +54,7 @@ class ManifestSinkSpec extends SparkSpec {
     // simulate a failed/speculative attempt's leftover staging file
     Files.write(Paths.get(target, "part-9-999.csv"),
       "999999,ghost,1.0\n".getBytes("UTF-8"))
-    val m = ManifestSink.readManifest(
-      spark.sparkContext.hadoopConfiguration, target)
+    val m = ManifestLog(spark.sparkContext.hadoopConfiguration, target).snapshot().partRanges
     assert(!m.exists(_._1.contains("part-9-999")),
       "uncommitted attempts must not appear in the manifest")
     assert(m.map(_._2).sum === Tables.events(spark, Sf0001).count(),
@@ -75,7 +72,7 @@ class ManifestSinkSpec extends SparkSpec {
     ev.filter(col("event_id") % 2 === 1).write
       .format("graft.sources.ManifestSink")
       .option("path", target).mode("append").save()
-    assert(ManifestSink.listVersions(conf, target) === Seq(1, 2))
+    assert(ManifestLog(conf, target).versions === Seq(1, 2))
     val v1 = spark.read.format("graft.sources.ManifestSource")
       .option("path", target).option("version", 1).load()
     assert(v1.count() === first.count())
@@ -86,7 +83,7 @@ class ManifestSinkSpec extends SparkSpec {
     val manifests = new java.io.File(target).list()
       .filter(_.startsWith("_MANIFEST")).toSet
     assert(manifests ===
-      Set(ManifestSink.versionFile(1), ManifestSink.versionFile(2)))
+      Set(ManifestLog.versionFile(1), ManifestLog.versionFile(2)))
   }
 
   test("overwrite is logical: expiry reclaims the superseded parts") {
@@ -94,7 +91,7 @@ class ManifestSinkSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     writeOnce(target, 4)
     writeOnce(target, 2)
-    val m = ManifestSink.readManifest(conf, target)
+    val m = ManifestLog(conf, target).snapshot().partRanges
     assert(m.size === 2)
     def onDisk = Files.list(Paths.get(target)).toArray.map(_.toString)
       .filter(p => ManifestSink.isPartFile(Paths.get(p).getFileName.toString)).toSet
@@ -111,8 +108,7 @@ class ManifestSinkSpec extends SparkSpec {
     q(spark, Sf0001).collect()
     q(spark, Sf0001).collect()
     val target = graft.queries.QueryDef.tablePath(spark, Sf0001, "sink")
-    assert(ManifestSink.listVersions(
-      spark.sparkContext.hadoopConfiguration, target) === Seq(1))
+    assert(ManifestLog(spark.sparkContext.hadoopConfiguration, target).versions === Seq(1))
   }
 
   test("clusterBy: the SINK demands the sorted layout; parts own disjoint ranges") {
@@ -130,7 +126,7 @@ class ManifestSinkSpec extends SparkSpec {
       .option("clusterBy", "event_id").option("writePartitions", "6")
       .mode("overwrite").save()
     val conf = spark.sessionState.newHadoopConf()
-    val parts = graft.sources.ManifestSink.readManifest(conf, target)
+    val parts = graft.sources.ManifestLog(conf, target).snapshot().partRanges
       .sortBy(_._3)
     assert(parts.size === 6, s"writePartitions must hold: ${parts.size}")
     // disjoint, ordered key ranges — the stats-prunable layout

@@ -147,7 +147,7 @@ class ManifestSourceSpec extends SparkSpec {
     // touches them
     val conf = spark.sessionState.newHadoopConf()
     val inPlan = scanOf(one).inputPartitions.map(_.toString).mkString
-    graft.sources.ManifestSink.readManifest(conf, target).foreach { p =>
+    graft.sources.ManifestLog(conf, target).snapshot().partRanges.foreach { p =>
       val name = new java.io.File(p._1).getName
       if (!inPlan.contains(name))
         java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
@@ -188,7 +188,7 @@ class ManifestSourceSpec extends SparkSpec {
     val target = Files.createTempDirectory("graft-src-prov-").toString
     writeEvents(target, parts = 8)
     val conf = spark.sessionState.newHadoopConf()
-    val manifest = graft.sources.ManifestSink.readManifest(conf, target)
+    val manifest = graft.sources.ManifestLog(conf, target).snapshot().partRanges
       .map(p => (p._1, p._2)).toMap
     val byPart = readBack(target).selectExpr("_part")
       .groupBy(col("_part")).count()

@@ -332,7 +332,7 @@ class ManifestStreamSpec extends SparkSpec {
     def silverDf = spark.read
       .format("graft.sources.ManifestSource").option("path", silver).load()
     def silverVersions =
-      graft.sources.ManifestSink.listVersions(hconf, silver).size
+      graft.sources.ManifestLog(hconf, silver).versions.size
 
     val base = Tables.events(spark, Sf0001)
       .select(col("event_id"), col("user_id"), col("value"))
@@ -420,7 +420,7 @@ class ManifestStreamSpec extends SparkSpec {
     val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
     def mtime(v: Int): Long = fs.getFileStatus(
       new org.apache.hadoop.fs.Path(d,
-        graft.sources.ManifestSink.versionFile(v))).getModificationTime
+        graft.sources.ManifestLog.versionFile(v))).getModificationTime
     val cutoff = new java.sql.Timestamp((mtime(1) + mtime(2)) / 2).toString
     def drainFrom(ts: String): Seq[Long] = {
       val sink = freshDir("mstream-ts-sink")

@@ -58,8 +58,7 @@ class MorSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM gmor.ns.dv").head.getLong(0) === 949)
     assert(partFiles(path) === before)
     // snapshot log: base + 2 vector commits; time travel pre-delete
-    assert(graft.sources.ManifestSink.listVersions(
-      spark.sessionState.newHadoopConf(), path) === Seq(1, 2, 3))
+    assert(graft.sources.ManifestLog(spark.sessionState.newHadoopConf(), path).versions === Seq(1, 2, 3))
     assert(spark.sql("SELECT * FROM gmor.ns.dv VERSION AS OF 1").count() === 1000)
     assert(spark.sql("SELECT * FROM gmor.ns.dv VERSION AS OF 2").count() === 950)
     // metadata-only COUNT stays exact under vectors (visibleRows)
@@ -120,8 +119,7 @@ class MorSpec extends SparkSpec {
       spark.sql("DELETE FROM gmor.ns.dvcompact WHERE k < 10")
     }
     val conf = spark.sessionState.newHadoopConf()
-    val vectoredBefore = graft.sources.ManifestSink
-      .readManifest(conf, path).size
+    val vectoredBefore = graft.sources.ManifestLog(conf, path).snapshot().partRanges.size
     assert(vectoredBefore === 4)
     val rewritten = graft.sources.ManifestMaintenance
       .compactVectors(spark, path)
@@ -155,14 +153,13 @@ class MorSpec extends SparkSpec {
       .head.getLong(0) === 0, "COW must not resurrect vector-deleted rows")
     // the rewritten part carries no vector; untouched parts keep theirs
     val conf = spark.sessionState.newHadoopConf()
-    val metas = graft.sources.ManifestSink.readManifest(conf, path)
+    val metas = graft.sources.ManifestLog(conf, path).snapshot().partRanges
     assert(metas.nonEmpty)
   }
 
   test("a DELETE that matches no row commits no version") {
     val path = mkTable("noop")
-    def versions = graft.sources.ManifestSink.listVersions(
-      spark.sessionState.newHadoopConf(), path)
+    def versions = graft.sources.ManifestLog(spark.sessionState.newHadoopConf(), path).versions
     val before = versions
     withMor {
       // scanned parts, no matched row: no vector to write

@@ -48,7 +48,7 @@ class MvSpec extends SparkSpec {
 
   private def srcDf = spark.sql("SELECT k, s, v FROM gmv.ns.src")
   private def mvVersions: Seq[Int] =
-    graft.sources.ManifestSink.listVersions(conf0, s"$wh/ns/mv")
+    graft.sources.ManifestLog(conf0, s"$wh/ns/mv").versions
 
   test("create, refresh across append / MOR delete / compaction") {
     write(rows(0, 1000), s"$wh/ns/src", "overwrite")

@@ -39,9 +39,9 @@ class ReplaceWhereSpec extends SparkSpec {
 
   private def conf0 = spark.sessionState.newHadoopConf()
   private def headParts(path: String): Set[String] =
-    graft.sources.ManifestSink.readManifest(conf0, path).map(_._1).toSet
+    graft.sources.ManifestLog(conf0, path).snapshot().partRanges.map(_._1).toSet
   private def versions(path: String): Seq[Int] =
-    graft.sources.ManifestSink.listVersions(conf0, path)
+    graft.sources.ManifestLog(conf0, path).versions
 
   test("part-aligned REPLACE WHERE drops metadata-only and appends") {
     import spark.implicits._
@@ -60,7 +60,7 @@ class ReplaceWhereSpec extends SparkSpec {
     // the only NEW parts are the appended batch (no survivor rewrite)
     val added = after -- before
     assert(added.nonEmpty)
-    val meta = graft.sources.ManifestSink.readManifest(conf0, path)
+    val meta = graft.sources.ManifestLog(conf0, path).snapshot().partRanges
       .filter(p => added.contains(p._1))
     assert(meta.map(_._2).sum === 2, "new parts carry only the batch")
     assert(spark.sql("SELECT count(*) FROM grw.ns.aligned").head.getLong(0)

@@ -31,8 +31,7 @@ class RowLevelSpec extends SparkSpec {
   }
 
   private def headParts(path: String): Set[String] =
-    graft.sources.ManifestSink.readManifest(
-      spark.sessionState.newHadoopConf(), path).map(_._1).toSet
+    graft.sources.ManifestLog(spark.sessionState.newHadoopConf(), path).snapshot().partRanges.map(_._1).toSet
 
   test("MERGE WITH SCHEMA EVOLUTION auto-adds the source's new column " +
     "as a metadata widening; without the clause the merge fails; time " +
@@ -113,8 +112,7 @@ class RowLevelSpec extends SparkSpec {
       .head.getString(0) === "new")
     assert(spark.sql("SELECT count(*) FROM grl.ns.mrg").head.getLong(0) === 1000)
     // one MERGE = one snapshot; v1 is intact
-    assert(graft.sources.ManifestSink.listVersions(
-      spark.sessionState.newHadoopConf(), s"$wh/ns/mrg") === Seq(1, 2))
+    assert(graft.sources.ManifestLog(spark.sessionState.newHadoopConf(), s"$wh/ns/mrg").versions === Seq(1, 2))
     assert(spark.sql("SELECT * FROM grl.ns.mrg VERSION AS OF 1").count() === 1000)
   }
 
@@ -193,8 +191,7 @@ class RowLevelSpec extends SparkSpec {
       "by-source clauses touch every part with an unmatched row: all " +
         "4 parts rewritten — the honest (unprunable) footprint")
     // one MERGE = one snapshot; time travel predates the sync
-    assert(graft.sources.ManifestSink.listVersions(
-      spark.sessionState.newHadoopConf(), path) === Seq(1, 2))
+    assert(graft.sources.ManifestLog(spark.sessionState.newHadoopConf(), path).versions === Seq(1, 2))
     assert(spark.sql("SELECT count(*) FROM grl.ns.msync VERSION AS OF 1")
       .head.getLong(0) === 1000L)
     // MOR parity: same statement, deletion vectors + appended images,
@@ -265,8 +262,7 @@ class RowLevelSpec extends SparkSpec {
     val fromRows = spark.sql(
       "SELECT _part, count(*) AS n FROM grl.ns.prov GROUP BY _part")
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val fromManifest = graft.sources.ManifestSink.readManifest(
-      spark.sessionState.newHadoopConf(), path)
+    val fromManifest = graft.sources.ManifestLog(spark.sessionState.newHadoopConf(), path).snapshot().partRanges
       .map(p => (p._1, p._2)).toMap
     assert(fromRows === fromManifest,
       "_part provenance must agree with the committed manifest")
@@ -290,7 +286,7 @@ class RowLevelSpec extends SparkSpec {
     assert(spark.sql("SELECT s FROM grl.ns.brdml WHERE k = 123")
       .head.getString(0) === "v123")
     val conf = spark.sessionState.newHadoopConf()
-    val br = graft.sources.ManifestSink.readBranchMeta(conf, path, "audit")
+    val br = graft.sources.ManifestLog(conf, path).snapshot(graft.sources.Ref.Branch("audit")).parts
     assert((br.map(_.path).toSet intersect mainBefore).size === 3,
       "branch UPDATE rewrote exactly one of four parts")
     val brDf = spark.read.format("graft.sources.ManifestSource")
@@ -306,13 +302,13 @@ class RowLevelSpec extends SparkSpec {
     import spark.implicits._
     val path = mkTable("race")
     // plan the rewrite against the current head, then land a racer
-    // commit before the rewrite commits: the strictBase pin must
+    // commit before the rewrite commits: the base pin must
     // refuse to publish a half-stale snapshot. Simulated by claiming
     // the next version slot the way ManifestHistorySpec's racer does.
     val v1 = java.nio.file.Paths.get(path,
-      graft.sources.ManifestSink.versionFile(1))
+      graft.sources.ManifestLog.versionFile(1))
     val racer = java.nio.file.Paths.get(path,
-      graft.sources.ManifestSink.versionFile(2))
+      graft.sources.ManifestLog.versionFile(2))
     java.nio.file.Files.write(racer, new String(
       java.nio.file.Files.readAllBytes(v1), "UTF-8")
       .replace("\"version\":1", "\"version\":2").getBytes("UTF-8"))
@@ -323,8 +319,7 @@ class RowLevelSpec extends SparkSpec {
     // rather than dropping the racer's snapshot. (The commit loop
     // test in PublishRebaseSpec covers the general machinery.)
     spark.sql("UPDATE grl.ns.race SET s = 'x' WHERE k = 5")
-    assert(graft.sources.ManifestSink.listVersions(
-      spark.sessionState.newHadoopConf(), path) === Seq(1, 2, 3),
+    assert(graft.sources.ManifestLog(spark.sessionState.newHadoopConf(), path).versions === Seq(1, 2, 3),
       "rewrite lands after the racer's slot")
     assert(spark.sql("SELECT s FROM grl.ns.race WHERE k = 5")
       .head.getString(0) === "x")

@@ -110,7 +110,7 @@ class AggMetaSpec extends graft.SparkSpec {
       .map(i => (i, Seq("a", "b", "c")(i.toInt % 3), i % 11))
       .toDF("k", "cat", "v").repartition(8)
     write(df, t, opts = Map("splitBy" -> "cat"))
-    val parts = ManifestSink.readManifestMeta(conf, t, None)
+    val parts = ManifestLog(conf, t).snapshot().parts
     assert(parts.length === 3, s"one part per value, got ${parts.length}")
     assert(parts.forall(p => p.cstats.get("cat").exists(st =>
       st.hasValues && st.min == st.max && st.nulls == 0L)),
@@ -190,7 +190,7 @@ class AggMetaSpec extends graft.SparkSpec {
     // simulate a pre-sum manifest: strip the key's sum from the
     // committed snapshot text (additive codec → still readable)
     val fs = new org.apache.hadoop.fs.Path(t).getFileSystem(conf)
-    Seq(ManifestSink.versionFile(1)).foreach { f =>
+    Seq(ManifestLog.versionFile(1)).foreach { f =>
       val p = new org.apache.hadoop.fs.Path(t, f)
       if (fs.exists(p)) {
         val in = fs.open(p)
@@ -223,7 +223,7 @@ class AggMetaSpec extends graft.SparkSpec {
     spark.sql("INSERT INTO gam.ns.t SELECT k, cat FROM gam_src")
     spark.sql("INSERT INTO gam.ns.t SELECT k + 300, cat FROM gam_src")
     val t = s"$wh/ns/t"
-    val before = ManifestSink.readManifestMeta(conf, t, None)
+    val before = ManifestLog(conf, t).snapshot().parts
     assert(before.length === 6, "two split inserts = 3 values x 2")
     assert(before.forall(p => p.cstats.get("cat").exists(st =>
       st.hasValues && st.min == st.max)))
@@ -236,7 +236,7 @@ class AggMetaSpec extends graft.SparkSpec {
       Seq(("p", 200L), ("q", 200L), ("r", 200L)))
     // compaction re-packs per value — the layout survives maintenance
     spark.sql("CALL gam.system.compact(table => 'ns.t', target_parts => 1)")
-    val after = ManifestSink.readManifestMeta(conf, t, None)
+    val after = ManifestLog(conf, t).snapshot().parts
     assert(after.length === 3, s"one part per value, got ${after.length}")
     assert(after.forall(p => p.cstats.get("cat").exists(st =>
       st.hasValues && st.min == st.max)))

@@ -31,17 +31,17 @@ class CherrypickSpec extends AnyFunSuite {
   private val schema = StructType.fromDDL("k BIGINT")
   private def pm(p: String, rows: Long = 1L) = PartMeta(p, rows)
   private def headPaths(dir: String): Set[String] =
-    ManifestSink.readManifestMeta(conf, dir, None).map(_.path).toSet
+    ManifestLog(conf, dir).snapshot().parts.map(_.path).toSet
   private def commit(dir: String, f: Seq[PartMeta] => Seq[PartMeta],
       branch: Option[String] = None): Int =
-    ManifestSink.publishRebase(conf, dir, schema,
-      rebase = f, strictBase = None, branch = branch)
+    ManifestSink.publishRebase(conf, dir, rebase = f,
+      header = HeaderChange.Append(schema), branch = branch)
 
   /** Rewrites a branch's v1 manifest WITHOUT its recorded fork field,
     * simulating a branch committed before fork recording existed. */
   private def stripFork(dir: String, branch: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir,
-      ManifestSink.branchVersionFile(branch, 1))
+      ManifestLog.claimName(1, Some(branch)))
     val fs = p.getFileSystem(conf)
     val in = fs.open(p)
     val content = try scala.io.Source.fromInputStream(in, "UTF-8")
@@ -62,7 +62,7 @@ class CherrypickSpec extends AnyFunSuite {
     assert(st.version === 3 && st.partsAdded === 1 && st.rowsAdded === 7L)
     assert(headPaths(dir) === Set("a", "b", "f1"),
       "interleaved main part b must survive the pick")
-    assert(ManifestSink.readOp(conf, dir, Some(3)) === "cherrypick")
+    assert(ManifestLog(conf, dir).snapshot(Ref.At(3)).op === "cherrypick")
   }
 
   test("second branch snapshot diffs against the previous one, not main") {
@@ -156,7 +156,7 @@ class CherrypickSpec extends AnyFunSuite {
       ManifestMaintenance.cherrypick(conf, dir, "fix")
     }
     assert(ex.getMessage.contains("already committed on main"))
-    assert(ManifestSink.listVersions(conf, dir).last === 2,
+    assert(ManifestLog(conf, dir).versions.last === 2,
       "failed pick must not claim a version")
     // re-pick of a LATER branch snapshot diffs against branch-prev,
     // so its delta survives reconstruction and the already-on-main
@@ -175,9 +175,8 @@ class CherrypickSpec extends AnyFunSuite {
     commit(dir, _ => Seq(pm("a")))
     commit(dir, h => h :+ pm("f1"), Some("fix"))
     // main evolves its schema after the fork
-    ManifestSink.publishRebase(conf, dir,
-      StructType.fromDDL("k BIGINT, s STRING"),
-      rebase = h => h, strictBase = None)
+    ManifestSink.publishRebase(conf, dir, rebase = h => h,
+      header = HeaderChange.Append(StructType.fromDDL("k BIGINT, s STRING")))
     val ex = intercept[IllegalArgumentException] {
       ManifestMaintenance.cherrypick(conf, dir, "fix")
     }

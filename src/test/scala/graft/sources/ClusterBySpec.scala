@@ -84,12 +84,12 @@ class ClusterBySpec extends SparkSpec {
       "spark.sql.adaptive.coalescePartitions.enabled")
     val wh = spark.conf.get(s"spark.sql.catalog.$c.warehouse")
     val conf = spark.sessionState.newHadoopConf()
-    assert(ManifestSink.readHeader(conf, s"$wh/wh/t").table.spec ===
+    assert(ManifestLog(conf, s"$wh/wh/t").snapshot().header.table.spec ===
       TableSpec(orderBy = Some("k")))
     assert(spark.sql(s"SELECT count(*) FROM $c.wh.t").head.getLong(0)
       === 4000L)
     assert(overlaps(c, "t") === 0L, "CTAS must land disjoint key ranges")
-    val parts = ManifestSink.readManifestMeta(conf, s"$wh/wh/t", None)
+    val parts = ManifestLog(conf, s"$wh/wh/t").snapshot().parts
       .filter(_.rows > 0)
     assert(parts.size > 1, "the disjointness claim needs >1 part")
     assert(parts.forall(_.sorted), "CTAS parts must be key-sorted")

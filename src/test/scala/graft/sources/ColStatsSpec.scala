@@ -23,9 +23,9 @@ class ColStatsSpec extends graft.SparkSpec {
     * write: a schema-only version carrying them in its record, which
     * the write plans onto and carries forward. */
   private def declare(dir: String, props: Map[String, String]): Unit =
-    ManifestSink.publishSnapshot(conf, dir,
+    ManifestSink.publishRebase(conf, dir, _ => Seq.empty, HeaderChange.Restate(
       org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, u STRING"),
-      Seq.empty, Some((ColMap.identity(2), TableRecord(props = props))))
+      ColMap.identity(2), TableRecord(props = props)))
 
   private def scanParts(df: DataFrame): Int =
     df.queryExecution.executedPlan.collectFirst {
@@ -41,8 +41,9 @@ class ColStatsSpec extends graft.SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType)))
-    ManifestSink.publishSnapshot(conf, dir, schema, Seq(part))
-    val back = ManifestSink.readManifestMeta(conf, dir, None)
+    ManifestSink.publishRebase(conf, dir, _ => Seq(part),
+      HeaderChange.Append(schema))
+    val back = ManifestLog(conf, dir).snapshot().parts
     assert(back.head.cstats === stats)
   }
 
@@ -80,7 +81,7 @@ class ColStatsSpec extends graft.SparkSpec {
         .write.format("graft.sources.ManifestSink")
         .option("path", dir)
         .mode("overwrite").save()
-      ManifestSink.readManifestMeta(conf, dir, None)
+      ManifestLog(conf, dir).snapshot().parts
         .head.cstats("u").bloom.length
     }
     val small = bloomHexLen(
@@ -105,14 +106,14 @@ class ColStatsSpec extends graft.SparkSpec {
       .write.format("graft.sources.ManifestSink")
       .option("path", dir)
       .mode("overwrite").save()
-    assert(ManifestSink.readManifestMeta(conf, dir, None)
+    assert(ManifestLog(conf, dir).snapshot().parts
       .head.cstats("u").bloom.length === 262144 / 4)
     ManifestMaintenance.analyzeTable(spark, dir, rebuildBlooms = true)
     // the rebuild allocates at the DECLARED width; since shrinkFor
     // caps at the allocated size, a default 2^16 allocation here
     // would silently fold the declared filter to a quarter width
     // and restore the fp saturation the knob exists to avoid
-    val rebuilt = ManifestSink.readManifestMeta(conf, dir, None)
+    val rebuilt = ManifestLog(conf, dir).snapshot().parts
       .head.cstats("u").bloom.length
     assert(rebuilt === 262144 / 4,
       s"rebuild must keep the declared 2^18 width, got $rebuilt hex chars")
@@ -353,7 +354,7 @@ class ColStatsSpec extends graft.SparkSpec {
         .option("path", s"$wh/ns/p")
         .mode("append").save()
     }
-    val paths = ManifestSink.readManifestMeta(conf, s"$wh/ns/p", None)
+    val paths = ManifestLog(conf, s"$wh/ns/p").snapshot().parts
       .map(_.path)
     assert(paths.size === parts.size)
     // literals: every stored value, its neighbours, and the extremes

@@ -76,8 +76,7 @@ class LayoutSpec extends graft.SparkSpec {
 
   /** The head's parts with rows: they hold every row, in the layout. */
   private def headParts(dir: String, l: Layout): Seq[PartMeta] = {
-    val parts = ManifestSink.readManifestMeta(
-      spark.sessionState.newHadoopConf(), dir, None).filter(_.rows > 0)
+    val parts = ManifestLog(spark.sessionState.newHadoopConf(), dir).snapshot().parts.filter(_.rows > 0)
     assert(parts.map(_.rows).sum === N, s"${l.name}: rows lost")
     assert(parts.size > 1, s"${l.name}: the shape check needs > 1 part")
     l.check(parts)

@@ -32,7 +32,7 @@ class MorDeltaSpec extends graft.SparkSpec {
   }
 
   private def headMeta(path: String): Seq[PartMeta] =
-    ManifestSink.readManifestMeta(conf, path, None)
+    ManifestLog(conf, path).snapshot().parts
 
   private def withMor[T](body: => T): T = {
     spark.conf.set("graft.delete.mode", "mor")
@@ -86,7 +86,7 @@ class MorDeltaSpec extends graft.SparkSpec {
     // one vector with two bits; updated+inserted images appended
     assert(after.filter(_.hasDv).map(_.dvCount).sum === 2,
       "exactly the matched old images are masked")
-    assert(ManifestSink.listVersions(conf, path) === Seq(1, 2),
+    assert(ManifestLog(conf, path).versions === Seq(1, 2),
       "one MERGE = one snapshot")
     assert(spark.sql("SELECT * FROM gmd.ns.mrg VERSION AS OF 1").count() === 1000)
   }
@@ -152,7 +152,7 @@ class MorDeltaSpec extends graft.SparkSpec {
     assert(spark.sql("SELECT s FROM gmd.ns.race WHERE k = 990")
       .head.getString(0) === "right")
     assert(spark.sql("SELECT count(*) FROM gmd.ns.race").head.getLong(0) === 1000)
-    assert(ManifestSink.listVersions(conf, path) === Seq(1, 2, 3),
+    assert(ManifestLog(conf, path).versions === Seq(1, 2, 3),
       "each UPDATE lands its own snapshot")
   }
 
@@ -185,7 +185,7 @@ class MorDeltaSpec extends graft.SparkSpec {
       .write.format("graft.sources.ManifestSink")
       .option("path", path)
       .option("branch", "audit").mode("append").save()
-    val staged = ManifestSink.readBranchMeta(conf, path, "audit")
+    val staged = ManifestLog(conf, path).snapshot(Ref.Branch("audit")).parts
       .map(_.path).toSet -- headMeta(path).map(_.path).toSet
     assert(staged.size === 1)
     // aggressive vacuum (no orphan grace): the staged part is listed

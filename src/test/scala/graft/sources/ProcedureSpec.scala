@@ -73,7 +73,7 @@ class ProcedureSpec extends graft.SparkSpec {
     assert(r.getAs[Int]("parts_after") === 2)
     assert(r.getAs[Int]("version") === 2)
     // data identical, layout packed + key-disjoint (range clustering)
-    val metas = ManifestSink.readManifest(conf, t)
+    val metas = ManifestLog(conf, t).snapshot().partRanges
     assert(metas.length === 2)
     assert(metas.map(_._2).sum === 1000L)
     val ranges = metas.map(m => (m._3, m._4)).sortBy(_._1)
@@ -90,7 +90,7 @@ class ProcedureSpec extends graft.SparkSpec {
     val t = writeTable("cmpsz", 1000L, 8)
     // derive the target from the head's own byte stats: asking for
     // half the total per file must resolve to 2 files
-    val total = ManifestSink.readManifestMeta(conf, t, None)
+    val total = ManifestLog(conf, t).snapshot().parts
       .map(_.bytes).sum
     assert(total > 0L, "fixture parts must carry byte stats")
     val r = spark.sql("CALL gps.system.compact(table => 'ns.cmpsz', " +
@@ -125,12 +125,12 @@ class ProcedureSpec extends graft.SparkSpec {
     spark.conf.set("graft.delete.mode", "mor")
     try spark.sql("DELETE FROM gps.ns.cmpdv WHERE k % 5 = 0")
     finally spark.conf.unset("graft.delete.mode")
-    assert(ManifestSink.readManifestMeta(conf, t, None).exists(_.hasDv))
+    assert(ManifestLog(conf, t).snapshot().parts.exists(_.hasDv))
     val r = spark.sql(
       "CALL gps.system.compact(table => 'ns.cmpdv', target_parts => 1)")
       .collect().head
     assert(r.getAs[Int]("parts_after") === 1)
-    val metas = ManifestSink.readManifestMeta(conf, t, None)
+    val metas = ManifestLog(conf, t).snapshot().parts
     assert(!metas.exists(_.hasDv), "compacted parts must be vector-free")
     assert(metas.map(_.rows).sum === 400L)
     assert(spark.sql("SELECT count(*) FROM gps.ns.cmpdv").head.getLong(0)
@@ -145,12 +145,12 @@ class ProcedureSpec extends graft.SparkSpec {
     // delete a single key instead: exactly one part is vectored
     try spark.sql("DELETE FROM gps.ns.cv WHERE k = 123")
     finally spark.conf.unset("graft.delete.mode")
-    val vectored = ManifestSink.readManifestMeta(conf, t, None).count(_.hasDv)
+    val vectored = ManifestLog(conf, t).snapshot().parts.count(_.hasDv)
     assert(vectored === 1)
     val r = spark.sql("CALL gps.system.compact_vectors(table => 'ns.cv')")
       .collect().head
     assert(r.getAs[Int]("parts_rewritten") === 1)
-    val metas = ManifestSink.readManifestMeta(conf, t, None)
+    val metas = ManifestLog(conf, t).snapshot().parts
     assert(metas.length === 6 && !metas.exists(_.hasDv))
     assert(spark.sql("SELECT count(*) FROM gps.ns.cv").head.getLong(0) === 599L)
   }
@@ -306,7 +306,7 @@ class ProcedureSpec extends graft.SparkSpec {
       "CALL gps.system.drop_branch(table => 'ns.wap', branch => 'audit')")
       .collect().head
     assert(db.getAs[Int]("versions_removed") === 1)
-    assert(ManifestSink.listBranches(conf, t).isEmpty)
+    assert(ManifestLog(conf, t).branches.isEmpty)
     // publishing a dropped (now-empty) branch fails loudly
     intercept[Exception] {
       spark.sql(

@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    claim must keep its parts — the retry recomputes the published
   *    list on top of the winner's snapshot (the lost-update Iceberg's
   *    commit loop exists to prevent);
-  *  - an operation that CANNOT be re-applied (strictBase) must fail
-  *    loudly when the head advances, never publish a half-stale list;
+  *  - an operation that CANNOT be re-applied (a pinned base) must
+  *    fail loudly when the head advances, never publish a half-stale
+  *    list;
   *  - string-stat comparisons are UTF-8 byte order on BOTH sides
   *    (StrBin), because Java String order disagrees on supplementary
   *    characters and would mis-prune.
@@ -25,40 +26,41 @@ class PublishRebaseSpec extends AnyFunSuite {
   private val schema = StructType.fromDDL("k BIGINT")
   private def pm(p: String) = PartMeta(p, 1L)
   private def headPaths(dir: String): Set[String] =
-    ManifestSink.readManifestMeta(conf, dir, None).map(_.path).toSet
+    ManifestLog(conf, dir).snapshot().parts.map(_.path).toSet
 
   test("a racer landing between base read and claim is rebased over, not dropped") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema,
-      _ => Seq(pm("a")), strictBase = None) // v1 = {a}
+    ManifestSink.publishRebase(conf, dir,
+      _ => Seq(pm("a")), HeaderChange.Append(schema)) // v1 = {a}
     var raced = false
-    val v = ManifestSink.publishRebase(conf, dir, schema,
+    val v = ManifestSink.publishRebase(conf, dir,
       head => {
         if (!raced) {
           raced = true
           // the racer: commits {a, b} AFTER our head read — our claim
           // of its slot must fail and the retry must see part b
-          ManifestSink.publishRebase(conf, dir, schema,
-            h => h :+ pm("b"), strictBase = None) // v2 = {a, b}
+          ManifestSink.publishRebase(conf, dir,
+            h => h :+ pm("b"), HeaderChange.Append(schema)) // v2 = {a, b}
         }
         head :+ pm("c")
-      }, strictBase = None)
+      }, HeaderChange.Append(schema))
     assert(v === 3, "loser must land at the next free slot")
     assert(headPaths(dir) === Set("a", "b", "c"),
       "the racer's part must survive the rebased commit")
-    assert(ManifestSink.readManifestMeta(conf, dir, Some(2))
+    assert(ManifestLog(conf, dir).snapshot(Ref.At(2)).parts
       .map(_.path).toSet === Set("a", "b"), "racer snapshot intact")
   }
 
   test("strictBase fails loudly when the head advances mid-operation") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema,
-      _ => Seq(pm("a")), strictBase = None) // v1
-    ManifestSink.publishRebase(conf, dir, schema,
-      _ => Seq(pm("b")), strictBase = None) // v2: head moved past base=1
+    ManifestSink.publishRebase(conf, dir,
+      _ => Seq(pm("a")), HeaderChange.Append(schema)) // v1
+    ManifestSink.publishRebase(conf, dir,
+      _ => Seq(pm("b")), HeaderChange.Append(schema)) // v2: head moved past base=1
     val ex = intercept[java.util.ConcurrentModificationException] {
-      ManifestSink.publishRebase(conf, dir, schema,
-        _ => Seq(pm("stale")), strictBase = Some(1))
+      ManifestSink.publishRebase(conf, dir,
+        _ => Seq(pm("stale")), HeaderChange.Append(schema),
+        base = Some(ManifestLog(conf, dir).snapshot(Ref.At(1))))
     }
     assert(ex.getMessage.contains("advanced from snapshot 1 to 2"))
     assert(headPaths(dir) === Set("b"), "failed commit must publish nothing")
@@ -67,44 +69,47 @@ class PublishRebaseSpec extends AnyFunSuite {
   test("strictForkBase: a branch's FIRST commit fails loudly when MAIN " +
     "advanced past the fork base it planned against") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema,
-      _ => Seq(pm("a")), strictBase = None) // main v1
+    ManifestSink.publishRebase(conf, dir,
+      _ => Seq(pm("a")), HeaderChange.Append(schema)) // main v1
     // the committer planned against main v1 (e.g. derived an identity
     // id mark from it); main then advances to v2 — the empty branch
-    // line never moves, so strictBase = Some(0) alone cannot see it
-    ManifestSink.publishRebase(conf, dir, schema,
-      h => h :+ pm("b"), strictBase = None) // main v2
+    // line never moves, so a branch version pin alone cannot see it
+    val planned = ManifestLog(conf, dir).snapshot(Ref.Branch("wap"))
+    ManifestSink.publishRebase(conf, dir,
+      h => h :+ pm("b"), HeaderChange.Append(schema)) // main v2
     val ex = intercept[java.util.ConcurrentModificationException] {
-      ManifestSink.publishRebase(conf, dir, schema,
-        h => h :+ pm("staged"), strictBase = Some(0),
-        branch = Some("wap"), strictForkBase = Some(1))
+      ManifestSink.publishRebase(conf, dir,
+        h => h :+ pm("staged"), HeaderChange.Append(schema),
+        base = Some(planned), branch = Some("wap"))
     }
     assert(ex.getMessage.contains("advanced from snapshot 1 to 2"))
-    assert(ManifestSink.listBranchVersions(conf, dir, "wap").isEmpty,
+    assert(ManifestLog(conf, dir).branchVersions("wap").isEmpty,
       "failed branch commit must publish nothing")
     // re-planned against the CURRENT fork base, the same commit lands
-    val v = ManifestSink.publishRebase(conf, dir, schema,
-      h => h :+ pm("staged"), strictBase = Some(0),
-      branch = Some("wap"), strictForkBase = Some(2))
+    val v = ManifestSink.publishRebase(conf, dir,
+      h => h :+ pm("staged"), HeaderChange.Append(schema),
+      base = Some(ManifestLog(conf, dir).snapshot(Ref.Branch("wap"))),
+      branch = Some("wap"))
     assert(v === 1)
-    assert(ManifestSink.readBranchMeta(conf, dir, "wap", Some(1))
+    assert(ManifestLog(conf, dir).snapshot(Ref.Branch("wap", Some(1))).parts
       .map(_.path).toSet === Set("a", "b", "staged"))
   }
 
   test("footprint: a disjoint interleaved commit composes, not conflicts") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema,
-      _ => Seq(pm("a"), pm("b")), strictBase = None) // v1 = {a, b}
+    ManifestSink.publishRebase(conf, dir,
+      _ => Seq(pm("a"), pm("b")), HeaderChange.Append(schema)) // v1 = {a, b}
     // an operation planned at base=1 that replaces part a; before it
     // commits, an interleaved APPEND lands v2 = {a, b, c}
-    ManifestSink.publishRebase(conf, dir, schema,
-      h => h :+ pm("c"), strictBase = None)
-    // strictBase alone would abort; the footprint proves part a is
+    ManifestSink.publishRebase(conf, dir,
+      h => h :+ pm("c"), HeaderChange.Append(schema))
+    // a bare base pin would abort; the footprint proves part a is
     // bit-identical in the advanced head, so the head-aware rebase
     // re-applies and the interleaved part c survives
-    val v = ManifestSink.publishRebase(conf, dir, schema,
+    val v = ManifestSink.publishRebase(conf, dir,
       h => h.filterNot(_.path == "a") :+ pm("a2"),
-      strictBase = Some(1), footprint = Some(Set("a")))
+      HeaderChange.Append(schema),
+        base = Some(ManifestLog(conf, dir).snapshot(Ref.At(1))), footprint = Some(Set("a")))
     assert(v === 3)
     assert(headPaths(dir) === Set("a2", "b", "c"),
       "disjoint DML and append must both land")
@@ -112,16 +117,17 @@ class PublishRebaseSpec extends AnyFunSuite {
 
   test("footprint: an interleaved commit touching a footprint part conflicts") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema,
-      _ => Seq(pm("a"), pm("b")), strictBase = None) // v1
+    ManifestSink.publishRebase(conf, dir,
+      _ => Seq(pm("a"), pm("b")), HeaderChange.Append(schema)) // v1
     // interleaved commit re-vectors part a (a MOR delete's shape)
-    ManifestSink.publishRebase(conf, dir, schema,
+    ManifestSink.publishRebase(conf, dir,
       h => h.map(p => if (p.path == "a") p.copy(dvRef = "dv-a.hex", dvCard = 1L) else p),
-      strictBase = None) // v2
+      HeaderChange.Append(schema)) // v2
     val ex = intercept[java.util.ConcurrentModificationException] {
-      ManifestSink.publishRebase(conf, dir, schema,
+      ManifestSink.publishRebase(conf, dir,
         h => h.filterNot(_.path == "a") :+ pm("a2"),
-        strictBase = Some(1), footprint = Some(Set("a")))
+        HeaderChange.Append(schema),
+        base = Some(ManifestLog(conf, dir).snapshot(Ref.At(1))), footprint = Some(Set("a")))
     }
     assert(ex.getMessage.contains("concurrent commit touched"))
     assert(headPaths(dir) === Set("a", "b"),
@@ -130,40 +136,41 @@ class PublishRebaseSpec extends AnyFunSuite {
 
   test("footprint: a dropped footprint part conflicts") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema,
-      _ => Seq(pm("a"), pm("b")), strictBase = None) // v1
-    ManifestSink.publishRebase(conf, dir, schema,
-      h => h.filterNot(_.path == "a"), strictBase = None) // v2 drops a
+    ManifestSink.publishRebase(conf, dir,
+      _ => Seq(pm("a"), pm("b")), HeaderChange.Append(schema)) // v1
+    ManifestSink.publishRebase(conf, dir,
+      h => h.filterNot(_.path == "a"), HeaderChange.Append(schema)) // v2 drops a
     intercept[java.util.ConcurrentModificationException] {
-      ManifestSink.publishRebase(conf, dir, schema,
+      ManifestSink.publishRebase(conf, dir,
         h => h.filterNot(_.path == "a") :+ pm("a2"),
-        strictBase = Some(1), footprint = Some(Set("a")))
+        HeaderChange.Append(schema),
+        base = Some(ManifestLog(conf, dir).snapshot(Ref.At(1))), footprint = Some(Set("a")))
     }
     assert(headPaths(dir) === Set("b"))
   }
 
   test("branch commits fork from main, stay invisible, and fast-forward") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema,
-      _ => Seq(pm("a")), strictBase = None) // main v1 = {a}
+    ManifestSink.publishRebase(conf, dir,
+      _ => Seq(pm("a")), HeaderChange.Append(schema)) // main v1 = {a}
     // first branch commit forks from the main head
-    val b1 = ManifestSink.publishRebase(conf, dir, schema,
-      h => h :+ pm("staged1"), strictBase = None, branch = Some("audit"))
+    val b1 = ManifestSink.publishRebase(conf, dir,
+      h => h :+ pm("staged1"), HeaderChange.Append(schema), branch = Some("audit"))
     assert(b1 === 1, "branch versions number independently")
     // second branch commit chains from the BRANCH head
-    ManifestSink.publishRebase(conf, dir, schema,
-      h => h :+ pm("staged2"), strictBase = None, branch = Some("audit"))
-    assert(ManifestSink.readBranchMeta(conf, dir, "audit")
+    ManifestSink.publishRebase(conf, dir,
+      h => h :+ pm("staged2"), HeaderChange.Append(schema), branch = Some("audit"))
+    assert(ManifestLog(conf, dir).snapshot(Ref.Branch("audit")).parts
       .map(_.path).toSet === Set("a", "staged1", "staged2"))
     // main is untouched by branch commits
-    assert(ManifestSink.listVersions(conf, dir) === Seq(1))
+    assert(ManifestLog(conf, dir).versions === Seq(1))
     assert(headPaths(dir) === Set("a"), "branch commits invisible to main")
     // fast-forward publishes the branch head as the next main version
     val v = ManifestMaintenance.fastForward(conf, dir, "audit")
     assert(v === 2)
     assert(headPaths(dir) === Set("a", "staged1", "staged2"))
     assert(ManifestMaintenance.dropBranch(conf, dir, "audit") === 2)
-    assert(ManifestSink.listBranchVersions(conf, dir, "audit").isEmpty)
+    assert(ManifestLog(conf, dir).branchVersions("audit").isEmpty)
     assert(headPaths(dir) === Set("a", "staged1", "staged2"),
       "dropping the branch never touches published snapshots")
   }
@@ -171,49 +178,53 @@ class PublishRebaseSpec extends AnyFunSuite {
   test("branch isolation: conflict detection pins the branch's own " +
     "line; main and branch lines never cross-conflict") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema,
-      _ => Seq(pm("a"), pm("b")), strictBase = None) // main v1 = {a, b}
+    ManifestSink.publishRebase(conf, dir,
+      _ => Seq(pm("a"), pm("b")), HeaderChange.Append(schema)) // main v1 = {a, b}
     // a branch rewrite pinned at branch base 0 (unborn line)
-    ManifestSink.publishRebase(conf, dir, schema,
+    ManifestSink.publishRebase(conf, dir,
       h => h.filterNot(_.path == "a") :+ pm("a2"),
-      strictBase = Some(0), footprint = Some(Set("a")),
+      HeaderChange.Append(schema),
+      base = Some(ManifestLog(conf, dir).snapshot(Ref.Branch("audit"))), footprint = Some(Set("a")),
       branch = Some("audit")) // audit v1 = {a2, b}
     // MAIN advancing does not conflict a BRANCH rewrite pinned at
     // the branch head — the lines are independent
-    ManifestSink.publishRebase(conf, dir, schema,
-      h => h :+ pm("m2"), strictBase = None) // main v2 = {a, b, m2}
-    ManifestSink.publishRebase(conf, dir, schema,
+    ManifestSink.publishRebase(conf, dir,
+      h => h :+ pm("m2"), HeaderChange.Append(schema)) // main v2 = {a, b, m2}
+    ManifestSink.publishRebase(conf, dir,
       h => h.filterNot(_.path == "b") :+ pm("b2"),
-      strictBase = Some(1), footprint = Some(Set("b")),
+      HeaderChange.Append(schema),
+      base = Some(ManifestLog(conf, dir).snapshot(Ref.Branch("audit", Some(1)))), footprint = Some(Set("b")),
       branch = Some("audit")) // audit v2 = {a2, b2}
-    assert(ManifestSink.readBranchMeta(conf, dir, "audit")
+    assert(ManifestLog(conf, dir).snapshot(Ref.Branch("audit")).parts
       .map(_.path).toSet === Set("a2", "b2"))
     assert(headPaths(dir) === Set("a", "b", "m2"),
       "branch DML invisible to main")
     // a STALE branch rewrite whose footprint part was replaced on the
     // branch line (b -> b2 in audit v2) conflicts loudly
     intercept[java.util.ConcurrentModificationException] {
-      ManifestSink.publishRebase(conf, dir, schema,
+      ManifestSink.publishRebase(conf, dir,
         h => h.filterNot(_.path == "b") :+ pm("b3"),
-        strictBase = Some(1), footprint = Some(Set("b")),
+        HeaderChange.Append(schema),
+        base = Some(ManifestLog(conf, dir).snapshot(Ref.Branch("audit", Some(1)))), footprint = Some(Set("b")),
         branch = Some("audit"))
     }
     // ...but a stale-based rewrite over a part that survived the
     // advanced branch head BIT-IDENTICAL composes
-    val v = ManifestSink.publishRebase(conf, dir, schema,
+    val v = ManifestSink.publishRebase(conf, dir,
       h => h.filterNot(_.path == "a2") :+ pm("a3"),
-      strictBase = Some(1), footprint = Some(Set("a2")),
+      HeaderChange.Append(schema),
+      base = Some(ManifestLog(conf, dir).snapshot(Ref.Branch("audit", Some(1)))), footprint = Some(Set("a2")),
       branch = Some("audit"))
     assert(v === 3)
-    assert(ManifestSink.readBranchMeta(conf, dir, "audit")
+    assert(ManifestLog(conf, dir).snapshot(Ref.Branch("audit")).parts
       .map(_.path).toSet === Set("a3", "b2"))
   }
 
   test("an un-forked branch reads as the main head; empty branch cannot publish") {
     val dir = Files.createTempDirectory("graft-rebase-").toString
-    ManifestSink.publishRebase(conf, dir, schema,
-      _ => Seq(pm("a")), strictBase = None)
-    assert(ManifestSink.readBranchMeta(conf, dir, "audit")
+    ManifestSink.publishRebase(conf, dir,
+      _ => Seq(pm("a")), HeaderChange.Append(schema))
+    assert(ManifestLog(conf, dir).snapshot(Ref.Branch("audit")).parts
       .map(_.path) === Seq("a"), "no branch commits yet -> main head")
     intercept[IllegalArgumentException] {
       ManifestMaintenance.fastForward(conf, dir, "audit")

@@ -82,8 +82,7 @@ class SpjSpec extends graft.SparkSpec {
 
   test("bucketed write: one part per bucket when pre-clustered; metadata present") {
     val t = writeBucketed("meta", rows(0, 1000), 4)
-    val metas = ManifestSink.readManifestMeta(
-      spark.sessionState.newHadoopConf(), t, None)
+    val metas = ManifestLog(spark.sessionState.newHadoopConf(), t).snapshot().parts
     assert(metas.forall(_.nbuckets === 4))
     assert(metas.map(_.bucket).toSet === (0 until 4).toSet)
     assert(metas.length === 4, "pre-clustered write must emit one part per bucket")
@@ -164,8 +163,7 @@ class SpjSpec extends graft.SparkSpec {
     spark.sql("INSERT INTO gsp.ns.ddl_f SELECT k, v FROM spj_src")
     spark.sql("INSERT INTO gsp.ns.ddl_d SELECT k, v * 2 FROM spj_src WHERE k < 300")
     // clustered distribution => ~one file per bucket per insert
-    val metas = ManifestSink.readManifestMeta(
-      spark.sessionState.newHadoopConf(), s"$wh/ns/ddl_f", None)
+    val metas = ManifestLog(spark.sessionState.newHadoopConf(), s"$wh/ns/ddl_f").snapshot().parts
     assert(metas.forall(_.nbuckets === 4))
     assert(metas.length === 4)
     // table advertises its layout
@@ -202,8 +200,7 @@ class SpjSpec extends graft.SparkSpec {
     // writer commits exactly one single-valued part per distinct value
     rows(0, 1000).createOrReplaceTempView("spj_id_src")
     spark.sql("INSERT INTO gsp.ns.ddl_id SELECT k % 5, v FROM spj_id_src")
-    val metas = ManifestSink.readManifestMeta(
-      spark.sessionState.newHadoopConf(), s"$wh/ns/ddl_id", None)
+    val metas = ManifestLog(spark.sessionState.newHadoopConf(), s"$wh/ns/ddl_id").snapshot().parts
     assert(metas.length === 5, "one part per distinct identity value")
     assert(metas.forall(m => m.nbuckets === 0))
     // point predicate on the split column plans exactly one part
@@ -237,8 +234,7 @@ class SpjSpec extends graft.SparkSpec {
     }
     assert(ctas.getMessage.contains("bucket count"), ctas.getMessage)
     for (t <- Seq("b0", "b0ctas")) {
-      assert(ManifestSink.listVersions(
-        spark.sessionState.newHadoopConf(), s"$wh/ns/$t").isEmpty,
+      assert(ManifestLog(spark.sessionState.newHadoopConf(), s"$wh/ns/$t").versions.isEmpty,
         s"$t: a refused layout must leave no version, hence no record")
       assert(!spark.catalog.tableExists(s"gsp.ns.$t"))
     }
@@ -259,8 +255,7 @@ class SpjSpec extends graft.SparkSpec {
       "table => 'ns.evo_f', spec => 'bucket(4,k)')").head
     assert(r.getString(0) === "none" && r.getString(1) === "bucket(4,k)")
     spark.sql("INSERT INTO gsp.ns.evo_f SELECT k, v FROM spj_evo_src WHERE k >= 400")
-    val metas = ManifestSink.readManifestMeta(
-      spark.sessionState.newHadoopConf(), s"$wh/ns/evo_f", None)
+    val metas = ManifestLog(spark.sessionState.newHadoopConf(), s"$wh/ns/evo_f").snapshot().parts
     assert(metas.exists(_.nbuckets === 0) && metas.exists(_.nbuckets === 4),
       "both generations must coexist after the spec change")
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
@@ -275,8 +270,7 @@ class SpjSpec extends graft.SparkSpec {
       // MIGRATION: compact rewrites everything under the head spec
       spark.sql("CALL gsp.system.compact(table => 'ns.evo_f', " +
         "target_parts => 4)")
-      val after = ManifestSink.readManifestMeta(
-        spark.sessionState.newHadoopConf(), s"$wh/ns/evo_f", None)
+      val after = ManifestLog(spark.sessionState.newHadoopConf(), s"$wh/ns/evo_f").snapshot().parts
       assert(after.length === 4 && after.forall(_.nbuckets === 4),
         "compaction must migrate every part to the head spec")
       val post = spark.sql("SELECT f.k, f.v, d.w FROM gsp.ns.evo_f f " +
@@ -303,7 +297,7 @@ class SpjSpec extends graft.SparkSpec {
       spark.sql("INSERT INTO gsp.ns.ord SELECT * FROM spj_ord_src")
     }
     val conf = spark.sessionState.newHadoopConf()
-    val metas = ManifestSink.readManifestMeta(conf, s"$wh/ns/ord", None)
+    val metas = ManifestLog(conf, s"$wh/ns/ord").snapshot().parts
     assert(metas.forall(_.sorted), "ordered write must land sorted parts")
     // disjoint ranges: total overlap-free coverage of [0, 1000)
     val ranges = metas.map(m => (m.cstats("k").lMin, m.cstats("k").lMax))
@@ -327,7 +321,7 @@ class SpjSpec extends graft.SparkSpec {
     // interleaved appends blur ranges; OPTIMIZE restores them
     spark.sql("INSERT INTO gsp.ns.ord SELECT k + 1000, v FROM spj_ord_src")
     spark.sql("CALL gsp.system.compact(table => 'ns.ord', target_parts => 4)")
-    val after = ManifestSink.readManifestMeta(conf, s"$wh/ns/ord", None)
+    val after = ManifestLog(conf, s"$wh/ns/ord").snapshot().parts
     assert(after.length === 4 && after.forall(_.sorted))
     val ranges2 = after.map(m => (m.cstats("k").lMin, m.cstats("k").lMax))
       .sortBy(_._1)
@@ -351,9 +345,9 @@ class SpjSpec extends graft.SparkSpec {
     finally spark.conf.unset("graft.delete.mode")
     val t = s"$wh/ns/opt"
     val conf = spark.sessionState.newHadoopConf()
-    assert(ManifestSink.readManifestMeta(conf, t, None).length === 8)
+    assert(ManifestLog(conf, t).snapshot().parts.length === 8)
     val stats = ManifestMaintenance.compactFiles(spark, t, targetParts = 4)
-    val after = ManifestSink.readManifestMeta(conf, t, None)
+    val after = ManifestLog(conf, t).snapshot().parts
     assert(after.length === 4, "compaction must pack to one part per bucket")
     assert(after.forall(p => p.nbuckets === 4 && p.bucket >= 0 && !p.hasDv))
     // still shuffle-free after the rewrite
@@ -378,7 +372,7 @@ class SpjSpec extends graft.SparkSpec {
     spark.sql("CALL gsp.system.compact(table => 'ns.srt_f', target_parts => 4)")
     spark.sql("CALL gsp.system.compact(table => 'ns.srt_d', target_parts => 4)")
     val conf = spark.sessionState.newHadoopConf()
-    assert(ManifestSink.readManifestMeta(conf, s"$wh/ns/srt_f", None)
+    assert(ManifestLog(conf, s"$wh/ns/srt_f").snapshot().parts
       .forall(_.sorted), "compacted bucketed parts must be key-sorted")
     withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",

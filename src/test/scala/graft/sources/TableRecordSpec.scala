@@ -43,18 +43,18 @@ class TableRecordSpec extends SparkSpec {
     val (c, wh) = freshCat("a")
     spark.sql(s"CREATE TABLE $c.ns.t (k BIGINT, v BIGINT) CLUSTER BY (k)")
     val dir = s"$wh/ns/t"
-    val versions = ManifestSink.listVersions(conf, dir)
+    val versions = ManifestLog(conf, dir).versions
     val ex = intercept[IllegalArgumentException] {
       catalog(c).alterTable(Identifier.of(Array("ns"), "t"),
         TableChange.renameColumn(Array("k"), "k2"),
         TableChange.deleteColumn(Array("nope"), false))
     }
     assert(ex.getMessage.contains("no column 'nope'"), ex.getMessage)
-    assert(ManifestSink.listVersions(conf, dir) === versions,
+    assert(ManifestLog(conf, dir).versions === versions,
       "a failed ALTER must commit nothing")
     spark.sql(s"INSERT INTO $c.ns.t VALUES (1, 10), (2, 20)")
     assert(count(s"$c.ns.t") === 2L)
-    assert(ManifestSink.readHeader(conf, dir).table.spec ===
+    assert(ManifestLog(conf, dir).snapshot().header.table.spec ===
       TableSpec(orderBy = Some("k")))
   }
 
@@ -68,7 +68,7 @@ class TableRecordSpec extends SparkSpec {
         TableChange.clusterBy(Array(Expressions.column("v"))),
         TableChange.deleteColumn(Array("nope"), false))
     }
-    assert(ManifestSink.readHeader(conf, dir).table.spec ===
+    assert(ManifestLog(conf, dir).snapshot().header.table.spec ===
       TableSpec(orderBy = Some("k")))
     spark.sql(s"INSERT INTO $c.ns.t VALUES (1, 10)")
     assert(count(s"$c.ns.t") === 1L)
@@ -106,7 +106,6 @@ class TableRecordSpec extends SparkSpec {
     val dir = s"$wh/ns/t"
     var raced = false
     val v = ManifestSink.publishRebase(conf, dir,
-      StructType.fromDDL("k BIGINT, v STRING"),
       head => {
         if (!raced) {
           raced = true
@@ -114,7 +113,8 @@ class TableRecordSpec extends SparkSpec {
           spark.sql(s"ALTER TABLE $c.ns.t SET TBLPROPERTIES ('steward' = 'ops')")
         }
         head
-      }, strictBase = None, op = "append")
+      }, HeaderChange.Append(StructType.fromDDL("k BIGINT, v STRING")),
+      op = "append")
     assert(v === 3, "the property change must claim its own version")
     val props = spark.sql(s"SHOW TBLPROPERTIES $c.ns.t").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap

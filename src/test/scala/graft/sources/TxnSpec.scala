@@ -52,7 +52,7 @@ class TxnSpec extends SparkSpec {
   }
 
   private def headV(dir: String): Int =
-    ManifestSink.listVersions(conf, dir).lastOption.getOrElse(0)
+    ManifestLog(conf, dir).versions.lastOption.getOrElse(0)
 
   test("happy path: one marker, both tables advance exactly one " +
     "txn-labeled version, branches cleaned") {
@@ -65,14 +65,14 @@ class TxnSpec extends SparkSpec {
     assert(published === 2)
     assert(headV(ta) === vA + 1 && headV(tb) === vB + 1,
       "exactly one new version per table")
-    assert(ManifestSink.readOp(conf, ta, Some(vA + 1)) === "txn:e1")
-    assert(ManifestSink.readOp(conf, tb, Some(vB + 1)) === "txn:e1")
+    assert(ManifestLog(conf, ta).snapshot(Ref.At(vA + 1)).op === "txn:e1")
+    assert(ManifestLog(conf, tb).snapshot(Ref.At(vB + 1)).op === "txn:e1")
     assert(spark.sql("SELECT count(*) FROM gtxa.ns.ta").head.getLong(0)
       === 110L)
     assert(spark.sql("SELECT count(*) FROM gtxa.ns.tb").head.getLong(0)
       === 55L)
-    assert(ManifestSink.listBranchVersions(conf, ta, "txn-e1").isEmpty &&
-      ManifestSink.listBranchVersions(conf, tb, "txn-e1").isEmpty,
+    assert(ManifestLog(conf, ta).branchVersions("txn-e1").isEmpty &&
+      ManifestLog(conf, tb).branchVersions("txn-e1").isEmpty,
       "published txn branches are dropped")
     // the id cannot re-commit
     stage(ta, "txn-e1", 1, str = false)
@@ -130,8 +130,8 @@ class TxnSpec extends SparkSpec {
       "marker alone publishes nothing table-side yet")
     assert(ManifestTxn.rollForward(conf, wh, "e4") === 2,
       "recovery completes the committed txn")
-    assert(ManifestSink.readOp(conf, ta, Some(vA + 1)) === "txn:e4")
-    assert(ManifestSink.readOp(conf, tb, Some(vB + 1)) === "txn:e4")
+    assert(ManifestLog(conf, ta).snapshot(Ref.At(vA + 1)).op === "txn:e4")
+    assert(ManifestLog(conf, tb).snapshot(Ref.At(vB + 1)).op === "txn:e4")
     assert(ManifestTxn.rollForward(conf, wh, "e4") === 0,
       "recovery is idempotent (marker archived)")
   }
@@ -145,7 +145,7 @@ class TxnSpec extends SparkSpec {
     // replay protocol: probe committed → abort stale → stage cleanly
     assert(!ManifestTxn.isCommitted(conf, wh, "e6"))
     assert(ManifestTxn.abortStaged(conf, wh, "e6", Seq(ta, tb)) === 1)
-    assert(ManifestSink.listBranchVersions(conf, ta, "txn-e6").isEmpty,
+    assert(ManifestLog(conf, ta).branchVersions("txn-e6").isEmpty,
       "stale staging branch must be gone before the replay stages")
     stage(ta, "txn-e6", 10, str = false)
     stage(tb, "txn-e6", 5, str = true)
