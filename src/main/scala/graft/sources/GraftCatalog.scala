@@ -263,18 +263,15 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * answer as `option("branch", ...)`, no DataFrame API needed).
     * Returns the read-only table (history is not writable). */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val p = tablePath(ident)
-    val log = ManifestLog(conf, p)
+    val log = ManifestLog(conf, tablePath(ident))
     val ref = try Ref.At(version.toInt) catch {
       case _: NumberFormatException =>
-        ManifestSink.readTag(conf, p, version).map(Ref.At).getOrElse {
-          if (log.branches.contains(version)) Ref.Branch(version)
-          else throw new IllegalArgumentException(
-            s"'$version' is neither a snapshot version, a tag, nor a " +
-              s"branch of $ident (tags: ${ManifestSink.listTags(conf, p)
-                .map(_._1).mkString(", ")}; branches: " +
-              s"${log.branches.mkString(", ")})")
-        }
+        if (log.tags.contains(version)) Ref.Tag(version)
+        else if (log.branches.contains(version)) Ref.Branch(version)
+        else throw new IllegalArgumentException(
+          s"'$version' is neither a snapshot version, a tag, nor a " +
+            s"branch of $ident (tags: ${log.tags.keys.mkString(", ")}; " +
+            s"branches: ${log.branches.mkString(", ")})")
     }
     readTable(ident, log, ref)
   }
@@ -925,7 +922,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         s"unsupported ALTER TABLE change $c — schema evolves " +
           "additively (ADD COLUMN / append commits) only")
     }
-    val table = TableRecord(spec, props, constraints)
+    val table = head.table.copy(spec = spec, props = props,
+      constraints = constraints)
     if (schemaChanged || table != head.table)
       ManifestSink.publishRebase(conf, p,
         rebase = parts => parts.map(m => m.copy(cstats =
@@ -1357,12 +1355,12 @@ private[sources] class GraftCatalogTable(
     // line. EQUALITY deletes are the exception — their commit is
     // branch-aware, so they accept under a session branch too.
     ManifestEq.canDelete(org.apache.spark.sql.SparkSession.active,
-      path, tableSchema, filters) ||
+      tableSchema, filters) ||
       (sessionBranch.isEmpty && decide(filters).isDefined)
 
   override def deleteWhere(filters: Array[V1Filter]): Unit = {
     if (ManifestEq.canDelete(org.apache.spark.sql.SparkSession.active,
-        path, tableSchema, filters)) {
+        tableSchema, filters)) {
       ManifestEq.deleteWhere(path, tableSchema, filters, sessionBranch)
       return
     }
@@ -1796,8 +1794,8 @@ private[sources] object MetaTables {
     // that snapshot's visible row count
     "tags" -> table("name STRING, version INT, n_rows BIGINT") { (conf, path) =>
       val log = ManifestLog(conf, path)
-      ManifestSink.listTags(conf, path).map { case (n, v) =>
-        Seq(n, v, log.snapshot(Ref.At(v)).parts.map(_.visibleRows).sum)
+      log.tags.toSeq.map { case (n, v) =>
+        Seq(n, v, log.snapshot(Ref.Tag(n)).parts.map(_.visibleRows).sum)
       }
     },
     // ALL named refs (Iceberg's `.refs`): branches and tags side by
@@ -1808,9 +1806,7 @@ private[sources] object MetaTables {
       val main = log.versions.lastOption.map(v => ("main", "branch", v)).toSeq
       val branches = log.branches.map(b =>
         (b, "branch", log.branchVersions(b).last))
-      val tags = ManifestSink.listTags(conf, path).map {
-        case (t, v) => (t, "tag", v)
-      }
+      val tags = log.tags.map { case (t, v) => (t, "tag", v) }
       (main ++ branches ++ tags).sortBy { case (n, t, _) => (t, n) }
         .map { case (n, t, v) => Seq(n, t, v) }
     },

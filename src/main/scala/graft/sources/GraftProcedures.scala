@@ -468,13 +468,13 @@ private[sources] final class TagProcedure(warehouse: String)
   override def call(input: InternalRow): JIterator[Scan] = {
     val dir = tableDir(input.getUTF8String(0).toString)
     val tagName = input.getUTF8String(1).toString
-    val conf = ManifestSink.driverConf()
+    val log = ManifestLog(ManifestSink.driverConf(), dir)
     val v = input.getInt(2) match {
-      case -1 => ManifestLog(conf, dir).versions.lastOption.getOrElse(
+      case -1 => log.versions.lastOption.getOrElse(
         throw new IllegalStateException(s"no snapshots to tag at $dir"))
       case n => n
     }
-    ManifestSink.writeTag(conf, dir, tagName, v)
+    log.createTag(tagName, v)
     result(tagName, v)
   }
 }
@@ -499,7 +499,7 @@ private[sources] final class DropTagProcedure(warehouse: String)
   override def call(input: InternalRow): JIterator[Scan] = {
     val dir = tableDir(input.getUTF8String(0).toString)
     val tagName = input.getUTF8String(1).toString
-    if (!ManifestSink.dropTag(ManifestSink.driverConf(), dir, tagName))
+    if (!ManifestLog(ManifestSink.driverConf(), dir).dropTag(tagName))
       throw new IllegalArgumentException(
         s"no tag '$tagName' on table at $dir")
     result(tagName)

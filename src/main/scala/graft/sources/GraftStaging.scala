@@ -43,7 +43,8 @@ import org.apache.spark.util.SerializableConfiguration
   * [[ManifestSink.writePlan]] and routed writer a live table uses, so
   * a CTAS target is born with its layout — no create-then-insert
   * two-step. Compaction and REPLACE WHERE stage their rewrites through
-  * the same write ([[GraftStagedTable.stageRewrite]]). */
+  * the same write ([[GraftStagedTable.stageRewrite]]), and a
+  * materialized view its rollup ([[GraftStagedTable.stage]]). */
 private[sources] class GraftStagedTable(
     ident: Identifier, path: String, tableSchema: StructType,
     table: TableRecord, replace: Boolean,
@@ -171,15 +172,23 @@ private[sources] object GraftStagedTable {
     val fs = read.getFileSystem(conf)
     try {
       ManifestSink.publishReadCopy(conf, read.toString, base, schema, parts)
-      val df = f(spark.read.format("graft.sources.ManifestSource")
-        .option("path", read.toString).load())
-      val table = new GraftStagedTable(Identifier.of(Array.empty, dir), dir,
-        df.schema, TableRecord(spec), replace = true,
-        resolvesTransforms = false, onto = Some(base.header))
-      GraftDatasets.ofRows(spark, AppendData.byPosition(
-        DataSourceV2Relation.create(table, None, None),
-        df.queryExecution.logical))
-      table.staged
+      stage(spark, dir, f(spark.read.format("graft.sources.ManifestSource")
+        .option("path", read.toString).load()), spec, Some(base.header))
     } finally fs.delete(read, true)
+  }
+
+  /** Stage `df`'s rows into `dir` through the CTAS staged write under
+    * `spec`, written onto the header `onto` (its mapping and bloom
+    * settings; None = a fresh identity mapping). Returns the staged
+    * parts, UNPUBLISHED — the caller's `publishRebase` lists them. */
+  def stage(spark: SparkSession, dir: String, df: DataFrame,
+      spec: TableSpec, onto: Option[ManifestHeader]): Seq[PartMeta] = {
+    val table = new GraftStagedTable(Identifier.of(Array.empty, dir), dir,
+      df.schema, TableRecord(spec), replace = true,
+      resolvesTransforms = false, onto = onto)
+    GraftDatasets.ofRows(spark, AppendData.byPosition(
+      DataSourceV2Relation.create(table, None, None),
+      df.queryExecution.logical))
+    table.staged
   }
 }

@@ -89,35 +89,15 @@ private[sources] object ManifestEq {
       }
     }
 
-  /** Kind-'L' clause for the canonical inclusive range — BIGINT
-    * columns only (string-range retention deletes are not a shape
-    * anyone ships). */
-  private def rangeClauseOf(schema: StructType, cm: ColMap, col: String,
-      lo: Long, hi: Long): Option[EqClause] = {
-    val idx = schema.fields.indexWhere(_.name == col)
-    if (idx < 0) return None
-    val id = if (cm.ids.nonEmpty) cm.ids(idx) else idx
-    schema.fields(idx).dataType match {
-      case LongType =>
-        Some(EqClause(col, id, 'L', Seq(lo.toString, hi.toString)))
-      case _ => None
+  /** The clause kind column `col` takes — 'l' BIGINT, 's' STRING —
+    * from its presence and type in `schema` alone; a range clause
+    * takes BIGINT only (string-range retention deletes are not a
+    * shape anyone ships). */
+  private def kindOf(schema: StructType, col: String): Option[Char] =
+    schema.fields.find(_.name == col).map(_.dataType).collect {
+      case LongType => 'l'
+      case StringType => 's'
     }
-  }
-
-  private def clauseOf(schema: StructType, cm: ColMap, col: String,
-      values: Seq[Any]): Option[EqClause] = {
-    val idx = schema.fields.indexWhere(_.name == col)
-    if (idx < 0) return None
-    val id = if (cm.ids.nonEmpty) cm.ids(idx) else idx
-    schema.fields(idx).dataType match {
-      case LongType =>
-        Some(EqClause(col, id, 'l',
-          values.map(v => v.asInstanceOf[Number].longValue.toString)))
-      case StringType =>
-        Some(EqClause(col, id, 's', values.map(_.toString)))
-      case _ => None
-    }
-  }
 
   /** Could this part hold a row matching the clause? Range, bloom and
     * null-count stats each get a veto; no stats = must mark (marking
@@ -161,17 +141,14 @@ private[sources] object ManifestEq {
 
   /** True when the session should take — and the predicate can take —
     * the equality-delete path (`=`/IN clause, or a BIGINT range). */
-  def canDelete(spark: SparkSession, path: String, schema: StructType,
+  def canDelete(spark: SparkSession, schema: StructType,
       filters: Array[V1Filter]): Boolean =
-    eqEnabled(spark) && {
-      lazy val cm = ManifestLog(ManifestSink.driverConf(), path).snapshot()
-        .header.schemaCm.map(_._2).getOrElse(ColMap.identity(schema.fields.length))
-      translate(schema, filters).exists { case (col, vs) =>
-        clauseOf(schema, cm, col, vs).isDefined
-      } || translateRange(schema, filters).exists { case (col, lo, hi) =>
-        rangeClauseOf(schema, cm, col, lo, hi).isDefined
-      }
-    }
+    eqEnabled(spark) && (
+      translate(schema, filters).exists { case (col, _) =>
+        kindOf(schema, col).isDefined
+      } || translateRange(schema, filters).exists { case (col, _, _) =>
+        kindOf(schema, col).contains('l')
+      })
 
   /** Commit the clause: one metadata snapshot, no data I/O. With a
     * session branch the clause commits to the BRANCH line (the parts
@@ -184,16 +161,25 @@ private[sources] object ManifestEq {
     val conf = ManifestSink.driverConf()
     val snapCm = ManifestLog(conf, path).snapshot(Ref.of(None, branch))
       .header.schemaCm
-    val cm = snapCm.map(_._2).getOrElse(ColMap.identity(schema.fields.length))
+    // the clause column's stable field id, from the snapshot the
+    // delete commits onto (the session branch's, or main's)
+    def fieldId(col: String): Int = snapCm.fold(schema.fieldIndex(col)) {
+      case (snap, cm) =>
+        val idx = snap.fieldIndex(col)
+        if (cm.ids.nonEmpty) cm.ids(idx) else idx
+    }
     // the clause column's frozen initial default, raw form — parts
     // whose layout predates the column serve it for every row
     def dfltTok(col: String): Option[String] =
       ColDefaults.byName(schema, snapCm).get(col).map(_.toString)
     translate(schema, filters) match {
       case Some((col, vs)) =>
-        val clause = clauseOf(schema, cm, col, vs).getOrElse(
+        val kind = kindOf(schema, col).getOrElse(
           throw new IllegalArgumentException(
             s"equality delete: unsupported column '$col'"))
+        val clause = EqClause(col, fieldId(col), kind,
+          if (kind == 'l') vs.map(_.asInstanceOf[Number].longValue.toString)
+          else vs.map(_.toString))
         val dflt = dfltTok(col)
         // an IN-list of only NULLs matches nothing: commit nothing
         if (clause.values.isEmpty) return
@@ -214,9 +200,10 @@ private[sources] object ManifestEq {
               "BIGINT/STRING column, or a range conjunction on one " +
               "BIGINT column"))
         if (lo > hi) return // empty interval: matches nothing
-        val clause = rangeClauseOf(schema, cm, col, lo, hi).getOrElse(
-          throw new IllegalArgumentException(
-            s"range delete: unsupported column '$col' (BIGINT only)"))
+        require(kindOf(schema, col).contains('l'),
+          s"range delete: unsupported column '$col' (BIGINT only)")
+        val clause = EqClause(col, fieldId(col), 'L',
+          Seq(lo.toString, hi.toString))
         val dflt = dfltTok(col)
         ManifestSink.publishRebase(conf, path,
           rebase = head => head.flatMap { p =>

@@ -4,8 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.types.{LongType, StructType}
 
-/** A name for one snapshot of a table's version log (a tag names a
-  * main version, see [[ManifestSink.readTag]]). */
+/** A name for one snapshot of a table's version log. */
 sealed trait Ref
 
 object Ref {
@@ -20,6 +19,8 @@ object Ref {
   /** The newest main version committed at or before `ms` (epoch
     * millis; a version file's mtime is its commit time). */
   final case class AsOf(ms: Long) extends Ref
+  /** The main version a tag pins (see [[ManifestLog.tags]]). */
+  final case class Tag(name: String) extends Ref
 
   /** The `version` / `branch` read options as one ref. */
   private[sources] def of(version: Option[Int], branch: Option[String]): Ref =
@@ -68,9 +69,11 @@ final class Snapshot private[sources] (val version: Int,
   * Main versions claim `_MANIFEST.v<N>.json`, a branch's
   * `_MANIFEST.<branch>.v<N>.json` (its own sequence, invisible to
   * main-head resolution, sharing the directory and the part files —
-  * the Iceberg named-ref shape). */
+  * the Iceberg named-ref shape), and a tag `_TAG.<name>.json`
+  * holding the main version it pins. */
 final class ManifestLog private (conf: Configuration, val dir: String,
-    main: Map[Int, FileStatus], branchFiles: Map[String, Map[Int, FileStatus]]) {
+    main: Map[Int, FileStatus], branchFiles: Map[String, Map[Int, FileStatus]],
+    tagFiles: Map[String, Path], val listing: Seq[FileStatus]) {
 
   /** Committed main versions, ascending. */
   val versions: Seq[Int] = main.keys.toSeq.sorted
@@ -84,6 +87,20 @@ final class ManifestLog private (conf: Configuration, val dir: String,
   /** A branch's committed versions, ascending. */
   def branchVersions(branch: String): Seq[Int] =
     branchFiles.get(branch).fold(Seq.empty[Int])(_.keys.toSeq.sorted)
+
+  /** SNAPSHOT TAGS by name — immutable named refs to main versions:
+    * `VERSION AS OF 'name'` resolves through them, and expiry RETAINS
+    * tagged versions (a tag is a promise the snapshot stays readable —
+    * the audit/repro/release pin, Iceberg-tag semantics). Tags never
+    * move; retag = drop + create. A tag dropped since the listing is
+    * left out. */
+  lazy val tags: Map[String, Int] = scala.collection.immutable.TreeMap.from(
+    tagFiles.flatMap { case (n, p) =>
+      val text = try MetaJson.read(conf, p) catch {
+        case _: java.io.FileNotFoundException => None
+      }
+      text.map(t => n -> MetaJson.decodeTag(t))
+    })
 
   /** Main version `v`'s commit time (epoch millis): its version file's
     * mtime, immutable once claimed — the clock `TIMESTAMP AS OF`,
@@ -106,6 +123,8 @@ final class ManifestLog private (conf: Configuration, val dir: String,
       .getOrElse(throw new IllegalArgumentException(
         s"no snapshot of $dir committed at or before $ms ms since the " +
           s"epoch (versions: ${versions.mkString(",")})")))
+    case Ref.Tag(t) => at(tags.getOrElse(t, throw new IllegalArgumentException(
+      s"no tag '$t' at $dir (tags: ${tags.keys.mkString(", ")})")))
   }
 
   private def at(v: Int): Snapshot = new Snapshot(v, None, lines(v))
@@ -151,11 +170,30 @@ final class ManifestLog private (conf: Configuration, val dir: String,
   private[sources] def dropBranch(branch: String): Int =
     branchFiles.getOrElse(branch, Map.empty).values.count(st =>
       st.getPath.getFileSystem(conf).delete(st.getPath, false))
+
+  /** Tag main version `version` as `name`. The claim fails for an
+    * existing tag, including one a concurrent tagger published first. */
+  private[sources] def createTag(name: String, version: Int): Unit = {
+    require(ManifestLog.validBranch(name),
+      s"invalid tag name '$name' (letters, digits, '_', '-' only)")
+    require(main.contains(version),
+      s"cannot tag version $version at $dir: no such snapshot")
+    if (!MetaJson.claim(conf, new Path(dir), s"_TAG.$name.json",
+        MetaJson.encodeTag(version)))
+      throw new IllegalStateException(
+        s"tag '$name' already exists at $dir (tags are immutable; " +
+          "drop it first to retag)")
+  }
+
+  /** Delete a tag; false when the log holds no such tag. */
+  private[sources] def dropTag(name: String): Boolean =
+    tagFiles.get(name).exists(p => p.getFileSystem(conf).delete(p, false))
 }
 
 object ManifestLog {
   private val VersionRe = """_MANIFEST\.v(\d+)\.json""".r
   private val BranchVersionRe = """_MANIFEST\.([A-Za-z0-9_-]+)\.v(\d+)\.json""".r
+  private val TagRe = """_TAG\.([A-Za-z0-9_-]+)\.json""".r
 
   /** Main version `v`'s file name. */
   def versionFile(v: Int): String = f"_MANIFEST.v$v%05d.json"
@@ -164,11 +202,13 @@ object ManifestLog {
   private[sources] def claimName(v: Int, branch: Option[String]): String =
     branch.fold(versionFile(v))(b => f"_MANIFEST.$b%s.v$v%05d.json")
 
+  /** A valid branch or tag name. */
   private[sources] def validBranch(b: String): Boolean =
     b.nonEmpty && b.forall(c => c.isLetterOrDigit || c == '_' || c == '-')
 
-  /** The log at `dir`, from ONE directory listing; a missing directory
-    * is an empty log. */
+  /** The log at `dir`, from ONE directory listing (kept whole in
+    * `listing` for the orphan sweep); a missing directory is an empty
+    * log. */
   def apply(conf: Configuration, dir: String): ManifestLog = {
     val d = new Path(dir)
     val listed = try d.getFileSystem(conf).listStatus(d).toSeq catch {
@@ -176,15 +216,18 @@ object ManifestLog {
     }
     val main = Map.newBuilder[Int, FileStatus]
     val branches = Map.newBuilder[(String, Int), FileStatus]
+    val tags = Map.newBuilder[String, Path]
     listed.foreach { st =>
       st.getPath.getName match {
         case VersionRe(v) => main += v.toInt -> st
         case BranchVersionRe(b, v) => branches += (b, v.toInt) -> st
+        case TagRe(t) => tags += t -> st.getPath
         case _ => ()
       }
     }
     new ManifestLog(conf, dir, main.result(), branches.result().groupBy(_._1._1)
-      .map { case (b, vs) => b -> vs.map { case ((_, v), st) => v -> st } })
+      .map { case (b, vs) => b -> vs.map { case ((_, v), st) => v -> st } },
+      tags.result(), listed)
   }
 
   /** DRIVER-SIDE SNAPSHOT CACHE. Version files are claimed exclusively

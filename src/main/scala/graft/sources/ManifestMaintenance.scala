@@ -816,14 +816,14 @@ object ManifestMaintenance {
       dryRun: Boolean = false,
       olderThanMs: Option[Long] = None): ExpireStats = {
     require(keepLast >= 1, "must retain at least the head snapshot")
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
+    val fs = new Path(dir).getFileSystem(conf)
+    // ONE listing serves the versions, the tag pins and the orphan sweep
     val log = ManifestLog(conf, dir)
     val versions = log.versions
     // a TAG is a promise its snapshot stays readable: tagged versions
     // are pulled out of the expiry set regardless of age (drop the
     // tag to release the pin — Iceberg tag semantics)
-    val tagged: Set[Int] = ManifestSink.listTags(conf, dir).map(_._2).toSet
+    val tagged: Set[Int] = log.tags.values.toSet
     val (old, newest) =
       versions.splitAt(math.max(0, versions.length - keepLast))
     // TIME-BASED retention (`older_than => timestamp`, Iceberg's
@@ -868,7 +868,7 @@ object ManifestMaintenance {
 
     val now = System.currentTimeMillis()
     var deleted = 0
-    fs.listStatus(d).foreach { st =>
+    log.listing.foreach { st =>
       val name = st.getPath.getName
       val reclaimable =
         name.startsWith("part-") ||

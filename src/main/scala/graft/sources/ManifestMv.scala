@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,18 +39,20 @@ import graft.util.Pin.PinOps
   * (MvSpec pins it after every mutation kind; the oracle-gated
   * q_mv_refresh restates the lifecycle end to end).
   *
-  * Crash safety: refresh folds against the MV state PINNED at the
-  * watermark's MV version (time travel), not the MV head, and the
-  * `_MV.json` watermark advances only after the new MV snapshot
-  * commits. A crash between commit and watermark leaves an orphan MV
-  * snapshot that the next refresh simply supersedes — replay is
-  * idempotent. Expiring source snapshots below the watermark fails
-  * the next refresh loudly (same contract as the change feed across
-  * expired history); refresh more often than you vacuum.
+  * Crash safety: the definition and the source (and dim) watermark
+  * ride the MV's own version header ([[TableRecord]]`.mv`), so the
+  * rows and the watermark describing them publish in ONE claim — a
+  * crashed refresh leaves the previous head and its watermark intact
+  * (the staged parts are orphans vacuum reclaims). A refresh folds
+  * against the MV head snapshot it read and pins its commit to it: a
+  * refresh that loses a race to another fails loudly instead of
+  * publishing a stale watermark. MV maintenance (compaction, expiry)
+  * carries the record forward like any table's. Expiring source
+  * snapshots below the watermark fails the next refresh loudly (same
+  * contract as the change feed across expired history); refresh more
+  * often than you vacuum.
   */
 private[sources] object ManifestMv {
-
-  val MetaFile = "_MV.json"
 
   /** The pinned lgConfigK of every MV-maintained HLL sketch: routing
     * substitutes a query's `hll_sketch_agg(c)` with the stored sketch
@@ -70,7 +71,7 @@ private[sources] object ManifestMv {
       dimKey: String, dimVersion: Int)
 
   final case class MvMeta(source: String, keyCol: String, sumCol: String,
-      scale: Int, sourceVersion: Int, mvVersion: Int,
+      scale: Int, sourceVersion: Int,
       mmCol: Option[String] = None, ndvCol: Option[String] = None,
       join: Option[MvJoin] = None,
       /** EXPRESSION-KEYED (time-grain) MV: the defining derived-key
@@ -90,14 +91,6 @@ private[sources] object ManifestMv {
 
   final case class RefreshStats(fromVersion: Int, toVersion: Int,
       plusParts: Int, minusParts: Int, groups: Long)
-
-  private def writeMeta(conf: Configuration, mvDir: String, m: MvMeta): Unit =
-    MetaJson.replace(conf, new Path(mvDir), MetaFile, MetaJson.encodeMvMeta(m))
-
-  def readMeta(conf: Configuration, mvDir: String): MvMeta =
-    MetaJson.read(conf, new Path(mvDir, MetaFile)).map(MetaJson.decodeMvMeta)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no materialized view at $mvDir (missing $MetaFile)"))
 
   /** The defining rollup: per-key exact (count, decimal sum). The sum
     * is pinned to the CANONICAL type DECIMAL(38, scale) — Spark's own
@@ -140,17 +133,28 @@ private[sources] object ManifestMv {
     }
   }
 
-  /** MV state write. No forced repartition: the rollup/fold output
-    * arrives already exchange-partitioned by the grouping keys and
-    * AQE-coalesced to size — a fixed `repartition(4)` here (removed,
-    * optimization r20) added one full exchange to EVERY create and
-    * refresh and pinned the file count to a constant that is wrong in
-    * both directions (4 tiny files locally, 4 giant files at scale).
-    * Output sizing now follows AQE's advisory partition size —
-    * scale-adaptive by construction. */
-  private def writeMv(df: DataFrame, mvDir: String): Unit =
-    df.write.format("graft.sources.ManifestSink")
-      .option("path", mvDir).mode("overwrite").save()
+  /** PUBLISH `rows` as the MV's whole content with its record `m` in
+    * one commit: the rollup stages through the CTAS staged write
+    * ([[GraftStagedTable.stage]]), then one claim lists the parts and
+    * carries the definition and watermark. A refresh pins `base`, the
+    * MV head it folded against. Returns the MV's group count.
+    *
+    * No forced repartition: the rollup/fold output arrives already
+    * exchange-partitioned by the grouping keys and AQE-coalesced to
+    * size — a fixed `repartition(4)` here (removed, optimization r20)
+    * added one full exchange to EVERY create and refresh and pinned
+    * the file count to a constant that is wrong in both directions
+    * (4 tiny files locally, 4 giant files at scale). */
+  private def publish(rows: DataFrame, mvDir: String, m: MvMeta,
+      base: Option[Snapshot], op: String): Long = {
+    val parts = GraftStagedTable.stage(rows.sparkSession, mvDir, rows,
+      TableSpec(), onto = None)
+    ManifestSink.publishRebase(ManifestSink.driverConf(), mvDir, _ => parts,
+      HeaderChange.Restate(rows.schema, ColMap.identity(rows.schema.length),
+        TableRecord(mv = Some(m))),
+      base = base, op = op)
+    parts.map(_.rows).sum
+  }
 
   /** The accepted derived-key shape: `date_trunc('<grain>', <col>)`.
     * Grains are the calendar set both the engine and the oracle
@@ -220,16 +224,13 @@ private[sources] object ManifestMv {
         s"create_mv: distinct_col '$c' must be a BIGINT or STRING " +
           "column of " + src.schema.fieldNames.mkString("(", ",", ")"))
     }
-    writeMv(rollup(src, keyCol, sumCol, scale, mmCol, ndvCol, keyExpr),
-      mvDir)
-    val mvVersion = ManifestLog(conf, mvDir).head
-    writeMeta(conf, mvDir, MvMeta(sourceDir, keyCol, sumCol, scale,
-      srcVersion, mvVersion, mmCol, ndvCol,
-      keyExpr = keyExpr,
-      keyTz = keyExpr.map(_ =>
-        spark.sessionState.conf.sessionLocalTimeZone)))
-    val groups = ManifestLog(conf, mvDir).snapshot().parts.map(_.rows).sum
-    (srcVersion, groups)
+    (srcVersion, publish(
+      rollup(src, keyCol, sumCol, scale, mmCol, ndvCol, keyExpr), mvDir,
+      MvMeta(sourceDir, keyCol, sumCol, scale, srcVersion, mmCol, ndvCol,
+        keyExpr = keyExpr,
+        keyTz = keyExpr.map(_ =>
+          spark.sessionState.conf.sessionLocalTimeZone)),
+      base = None, "create-mv"))
   }
 
   /** The pinned broadcast dim side of a join MV. */
@@ -277,18 +278,18 @@ private[sources] object ManifestMv {
     val joined = fact.join(
       org.apache.spark.sql.functions.broadcast(dim),
       col(fk) === col(dimKey))
-    writeMv(rollup(joined, keyCol, sumCol, scale), mvDir)
-    val mvVersion = ManifestLog(conf, mvDir).head
-    writeMeta(conf, mvDir, MvMeta(factDir, keyCol, sumCol, scale,
-      srcVersion, mvVersion,
-      join = Some(MvJoin(dimDir, fk, dimKey, dimVersion))))
-    val groups = ManifestLog(conf, mvDir).snapshot().parts.map(_.rows).sum
-    (srcVersion, groups)
+    (srcVersion, publish(rollup(joined, keyCol, sumCol, scale), mvDir,
+      MvMeta(factDir, keyCol, sumCol, scale, srcVersion,
+        join = Some(MvJoin(dimDir, fk, dimKey, dimVersion))),
+      base = None, "create-mv"))
   }
 
   def refresh(spark: SparkSession, mvDir: String): RefreshStats = {
     val conf = ManifestSink.driverConf()
-    val m = readMeta(conf, mvDir)
+    // the MV head this refresh folds against and pins its commit to
+    val mvSnap = ManifestLog(conf, mvDir).snapshot()
+    val m = mvSnap.header.table.mv.getOrElse(throw
+      new IllegalArgumentException(s"no materialized view at $mvDir"))
     // a time-grain MV's derived key truncates in the SESSION timezone
     // it was created under — folding a delta computed under another
     // tz would merge different instants into one group
@@ -310,18 +311,17 @@ private[sources] object ManifestMv {
       if (dimHead != j.dimVersion) {
         val fact = spark.read.format("graft.sources.ManifestSource")
           .option("path", m.source).option("version", head.toString).load()
-        writeMv(rollup(fact.join(dimSide(spark, j, dimHead),
-          col(j.fk) === col(j.dimKey)), m.keyCol, m.sumCol, m.scale), mvDir)
-        val mvVersion = ManifestLog(conf, mvDir).head
-        writeMeta(conf, mvDir, m.copy(sourceVersion = head,
-          mvVersion = mvVersion, join = Some(j.copy(dimVersion = dimHead))))
-        return RefreshStats(m.sourceVersion, head, -1, -1,
-          ManifestLog(conf, mvDir).snapshot().parts.map(_.rows).sum)
+        return RefreshStats(m.sourceVersion, head, -1, -1, publish(
+          rollup(fact.join(dimSide(spark, j, dimHead),
+            col(j.fk) === col(j.dimKey)), m.keyCol, m.sumCol, m.scale),
+          mvDir, m.copy(sourceVersion = head,
+            join = Some(j.copy(dimVersion = dimHead))),
+          Some(mvSnap), "refresh-mv"))
       }
     }
     if (head == m.sourceVersion)
       return RefreshStats(m.sourceVersion, head, 0, 0,
-        ManifestLog(conf, mvDir).snapshot().parts.map(_.rows).sum)
+        mvSnap.parts.map(_.rows).sum)
 
     val oldParts = srcLog.snapshot(Ref.At(m.sourceVersion)).parts
       .map(p => p.path -> p).toMap
@@ -391,10 +391,11 @@ private[sources] object ManifestMv {
           col("mn").isNotNull.as("affected")) ++
           m.mmCol.toSeq.flatMap(_ => Seq(col("pmin"), col("pmax"))) ++
           m.ndvCol.toSeq.map(_ => col("psk")): _*)
-      // fold against the MV state PINNED at the watermark's version —
-      // idempotent under replay of a crashed refresh (see scaladoc)
+      // fold against the MV head this refresh read — the snapshot the
+      // watermark describes and the commit pins (see scaladoc)
       val mv = spark.read.format("graft.sources.ManifestSource")
-        .option("path", mvDir).option("version", m.mvVersion.toString).load()
+        .option("path", mvDir).option("version", mvSnap.version.toString)
+        .load()
       // the fold can answer counts/sums under ANY delta, but an
       // extreme or a sketch only folds under appends: any group seen
       // on the minus side needs the group-scoped rescan below
@@ -469,14 +470,12 @@ private[sources] object ManifestMv {
               when(col("rhit"), col("rsk")).otherwise(col("fsk"))
                 .as("ndv_sketch")): _*)
       }
-      writeMv(merged, mvDir)
+      RefreshStats(m.sourceVersion, head, plus.size, minus.size,
+        publish(merged, mvDir, m.copy(sourceVersion = head), Some(mvSnap),
+          "refresh-mv"))
     } finally {
       fs.delete(new Path(tmpPlus), true)
       fs.delete(new Path(tmpMinus), true)
     }
-    val mvVersion = ManifestLog(conf, mvDir).head
-    writeMeta(conf, mvDir, m.copy(sourceVersion = head, mvVersion = mvVersion))
-    RefreshStats(m.sourceVersion, head, plus.size, minus.size,
-      ManifestLog(conf, mvDir).snapshot().parts.map(_.rows).sum)
   }
 }

@@ -850,52 +850,6 @@ object ManifestSink {
         }.toOption
       }.toMap
 
-  /** SNAPSHOT TAGS — immutable named refs (`_TAG.<name>.json`
-    * holding the version number): `VERSION AS OF 'name'` resolves
-    * through them, and expire-snapshots RETAINS tagged versions (a
-    * tag is a promise the snapshot stays readable — the
-    * audit/repro/release pin, Iceberg-tag semantics). Tags never
-    * move; retag = drop + create. */
-  private[sources] def tagFile(name: String): String = s"_TAG.$name.json"
-
-  private[sources] def writeTag(conf: Configuration, dir: String,
-      name: String, version: Int): Unit = {
-    require(name.matches("[A-Za-z0-9_-]+"),
-      s"invalid tag name '$name' (letters, digits, '_', '-' only)")
-    require(ManifestLog(conf, dir).versions.contains(version),
-      s"cannot tag version $version at $dir: no such snapshot")
-    // the claim fails for an existing tag, including one a concurrent
-    // tagger published first
-    if (!MetaJson.claim(conf, new Path(dir), tagFile(name),
-        MetaJson.encodeTag(version)))
-      throw new IllegalStateException(
-        s"tag '$name' already exists at $dir (tags are immutable; " +
-          "drop it first to retag)")
-  }
-
-  private[sources] def readTag(conf: Configuration, dir: String,
-      name: String): Option[Int] =
-    MetaJson.read(conf, new Path(dir, tagFile(name))).map(MetaJson.decodeTag)
-
-  private[sources] def listTags(conf: Configuration,
-      dir: String): Seq[(String, Int)] = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return Seq.empty
-    fs.listStatus(d).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("_TAG.") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("_TAG.").stripSuffix(".json"))
-      .sorted
-      .flatMap(n => readTag(conf, dir, n).map(n -> _))
-  }
-
-  private[sources] def dropTag(conf: Configuration, dir: String,
-      name: String): Boolean = {
-    val p = new Path(dir, tagFile(name))
-    val fs = p.getFileSystem(conf)
-    fs.exists(p) && fs.delete(p, false)
-  }
-
   /** The mapping a commit derives from the head by NAME (DDL and
     * restating commits hand theirs instead, see [[publishRebase]]) —
     * a field the head already maps keeps its id; a new field

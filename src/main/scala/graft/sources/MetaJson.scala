@@ -26,15 +26,19 @@ private[sources] final case class TableSpec(
 /** THE TABLE RECORD a version carries beside its schema and column
   * mapping: the layout, the table properties (TBLPROPERTIES and
   * COMMENT, plus the engine's identity, generated-column, bloom, NDV
-  * and histogram keys) and the CHECK constraints as (name, predicate
-  * SQL). It travels with the (schema, mapping) pair: a commit carries
-  * the head's record forward, a DDL or a restating commit (restore,
-  * fast-forward, clone) hands its own — Delta's `metaData` action, so
-  * one claim publishes a table-state change atomically. */
+  * and histogram keys), the CHECK constraints as (name, predicate
+  * SQL) and, on a materialized view, its definition and refresh
+  * watermark ([[ManifestMv.MvMeta]], describing the version that
+  * carries it). It travels with the (schema, mapping) pair: a commit
+  * carries the head's record forward, a DDL or a restating commit
+  * (restore, fast-forward, clone, an MV create or refresh) hands its
+  * own — Delta's `metaData` action, so one claim publishes a
+  * table-state change atomically. */
 private[sources] final case class TableRecord(
     spec: TableSpec = TableSpec(),
     props: Map[String, String] = Map.empty,
-    constraints: Seq[(String, String)] = Seq.empty)
+    constraints: Seq[(String, String)] = Seq.empty,
+    mv: Option[ManifestMv.MvMeta] = None)
 
 /** A snapshot manifest's header lines: the schema DDL, the column
   * mapping (absent ⇒ identity), the version record with its
@@ -53,9 +57,10 @@ private[sources] final case class ManifestHeader(
 
 /** THE TABLE-METADATA FORMAT, owned in one place: the json4s encoding
   * and decoding of every metadata record the `sources` package writes
-  * (snapshot manifests with their table record, `_TAG.*.json` tags,
-  * namespace properties, view records, txn markers, MV meta) and the
-  * one atomic publish they all go through.
+  * (snapshot manifests with their table record — an MV's definition
+  * and watermark included —, tags, namespace properties, view
+  * records, txn markers) and the one atomic publish they all go
+  * through.
   *
   * Records are JSON objects, one per line in line-oriented files.
   * Strings use JSON escaping, nested values are JSON objects or
@@ -74,7 +79,7 @@ private[sources] object MetaJson {
     publish(conf, dir, name, body, overwrite = false)
 
   /** REPLACE `dir/name` atomically (namespace properties, view
-    * records, MV meta): readers see the old file or the new one, never a
+    * records): readers see the old file or the new one, never a
     * partly-written one. */
   def replace(conf: Configuration, dir: Path, name: String,
       body: String): Unit =
@@ -275,7 +280,30 @@ private[sources] object MetaJson {
       "constraints" -> when(t.constraints.nonEmpty)(JArray(
         t.constraints.map { case (n, sql) =>
           obj("name" -> JString(n), "sql" -> JString(sql)): JValue
-        }.toList)))))
+        }.toList)),
+      "mv" -> t.mv.fold[JValue](JNothing)(mvJson))))
+
+  private def mvJson(m: ManifestMv.MvMeta): JValue = obj(
+    "source" -> JString(m.source), "key" -> JString(m.keyCol),
+    "sum" -> JString(m.sumCol), "scale" -> JLong(m.scale.toLong),
+    "srcv" -> JLong(m.sourceVersion.toLong),
+    "mm" -> optStr(m.mmCol), "ndv" -> optStr(m.ndvCol),
+    "kexpr" -> optStr(m.keyExpr), "ktz" -> optStr(m.keyTz),
+    "join" -> m.join.fold[JValue](JNothing)(j => obj(
+      "dim" -> JString(j.dimSource), "fk" -> JString(j.fk),
+      "dimkey" -> JString(j.dimKey), "dimv" -> JLong(j.dimVersion.toLong))))
+
+  private def mvOf(v: JValue): ManifestMv.MvMeta = {
+    val f = fields(v)
+    ManifestMv.MvMeta(f.text("source"), f.text("key"), f.text("sum"),
+      f.int("scale"), f.int("srcv"), f.optText("mm"), f.optText("ndv"),
+      f.get("join").map { v =>
+        val j = fields(v)
+        ManifestMv.MvJoin(j.text("dim"), j.text("fk"), j.text("dimkey"),
+          j.int("dimv"))
+      },
+      f.optText("kexpr"), f.optText("ktz"))
+  }
 
   private def tableOf(v: JValue): TableRecord = {
     val f = fields(v)
@@ -290,7 +318,8 @@ private[sources] object MetaJson {
           (cf.text("name"), cf.text("sql"))
         }
         case other => bad("array", other)
-      })
+      },
+      f.get("mv").map(mvOf))
   }
 
   /** A whole snapshot manifest: schema line, the column-mapping line
@@ -404,28 +433,4 @@ private[sources] object MetaJson {
       ManifestTxn.TxnEntry(f.text("dir"), f.int("branchHead"),
         f.int("forkBase"))
     }
-
-  def encodeMvMeta(m: ManifestMv.MvMeta): String = render(obj(
-    "source" -> JString(m.source), "key" -> JString(m.keyCol),
-    "sum" -> JString(m.sumCol), "scale" -> JLong(m.scale.toLong),
-    "srcv" -> JLong(m.sourceVersion.toLong),
-    "mvv" -> JLong(m.mvVersion.toLong),
-    "mm" -> optStr(m.mmCol), "ndv" -> optStr(m.ndvCol),
-    "kexpr" -> optStr(m.keyExpr), "ktz" -> optStr(m.keyTz),
-    "join" -> m.join.fold[JValue](JNothing)(j => obj(
-      "dim" -> JString(j.dimSource), "fk" -> JString(j.fk),
-      "dimkey" -> JString(j.dimKey), "dimv" -> JLong(j.dimVersion.toLong)))))
-
-  def decodeMvMeta(text: String): ManifestMv.MvMeta = {
-    val f = fields(parse(text))
-    ManifestMv.MvMeta(f.text("source"), f.text("key"), f.text("sum"),
-      f.int("scale"), f.int("srcv"), f.int("mvv"),
-      f.optText("mm"), f.optText("ndv"),
-      f.get("join").map { v =>
-        val j = fields(v)
-        ManifestMv.MvJoin(j.text("dim"), j.text("fk"), j.text("dimkey"),
-          j.int("dimv"))
-      },
-      f.optText("kexpr"), f.optText("ktz"))
-  }
 }

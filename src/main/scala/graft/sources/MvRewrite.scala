@@ -37,8 +37,8 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   *    version at plan time (or, post-pushdown, the exact version the
   *    scan pinned — so `VERSION AS OF <watermark>` rewrites too). A
   *    stale MV falls back to the source; refresh first. The MV side
-  *    is then read PINNED at the watermark's MV version, so a
-  *    concurrent `refresh_mv` cannot tear the answer.
+  *    is then read PINNED at the MV version whose header carries that
+  *    watermark, so a concurrent `refresh_mv` cannot tear the answer.
   *  - **Shape**: the grouping columns are exactly the MV's key list
   *    (any order, bare attributes only); every
   *    aggregate in the output is `count(1)`/`count(*)` (→ `n_rows`)
@@ -85,23 +85,27 @@ object MvRewrite extends Rule[LogicalPlan] {
       case _ => false
     }
 
-  private final case class Target(meta: ManifestMv.MvMeta, mvDir: String)
+  /** A registered MV: its record and the MV version carrying it. */
+  private final case class Target(meta: ManifestMv.MvMeta, mvDir: String,
+      version: Int)
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val spark = SparkSession.active
     val dirs = registered(spark)
     if (dirs.isEmpty || !plan.exists(_.isInstanceOf[Aggregate])) return plan
     val conf = ManifestSink.driverConf()
-    // resolve each registered MV's watermark ONCE per rule pass; a
-    // missing/corrupt meta or an expired source just declines
+    // resolve each registered MV's head — its definition, watermark
+    // and version from ONE snapshot — once per rule pass; a table
+    // that is no MV, a corrupt record or an expired source declines
     val targets = dirs.flatMap { d =>
       try {
-        val m = ManifestMv.readMeta(conf, d)
-        val head = ManifestLog(conf, m.source).head
-        // join MVs also resolve the dim head once per pass
-        val dimHead = m.join.fold(0)(j => ManifestLog(conf, j.dimSource).head)
-        if (m.sourceVersion > 0) Some((Target(m, d), head, dimHead))
-        else None
+        val snap = ManifestLog(conf, d).snapshot()
+        snap.header.table.mv.filter(_.sourceVersion > 0).map { m =>
+          val head = ManifestLog(conf, m.source).head
+          // join MVs also resolve the dim head once per pass
+          val dimHead = m.join.fold(0)(j => ManifestLog(conf, j.dimSource).head)
+          (Target(m, d, snap.version), head, dimHead)
+        }
       } catch { case scala.util.control.NonFatal(_) => None }
     }
     if (targets.isEmpty) return plan
@@ -392,11 +396,11 @@ object MvRewrite extends Rule[LogicalPlan] {
     val subset = !exact && names.nonEmpty &&
       names.toSet.subsetOf(keys.toSet)
     if (!exact && !subset) return None
-    // the MV read is PINNED at the watermark's MV version — the
+    // the MV read is PINNED at the version carrying the watermark — the
     // freshness check and the data served are one snapshot pair
     val mvPlan = spark.read.format("graft.sources.ManifestSource")
       .option("path", t.mvDir)
-      .option("version", t.meta.mvVersion.toString)
+      .option("version", t.version.toString)
       .load().queryExecution.optimizedPlan
     val out = mvPlan.output
     val keyPairs = groupAttrs.flatMap { k =>
@@ -484,7 +488,7 @@ object MvRewrite extends Rule[LogicalPlan] {
     if (!matches) return None
     val mvPlan = spark.read.format("graft.sources.ManifestSource")
       .option("path", t.mvDir)
-      .option("version", t.meta.mvVersion.toString)
+      .option("version", t.version.toString)
       .load().queryExecution.optimizedPlan
     val out = mvPlan.output
     for {

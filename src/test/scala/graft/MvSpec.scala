@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.DecimalType
   * the format can express — append, MOR vector delete, compaction —
   * the refreshed MV must equal the direct rollup BIT-FOR-BIT
   * (decimal partials are associative), caught-up refreshes must
-  * commit nothing, and a crashed refresh (committed but watermark
-  * not advanced) must replay idempotently. */
+  * commit nothing, and a refresh that crashes or loses a race at its
+  * claim must leave the MV and its watermark consistent. */
 class MvSpec extends SparkSpec {
 
   private lazy val wh = {
@@ -145,35 +145,91 @@ class MvSpec extends SparkSpec {
     assert(mv3() === directMM(src3))
   }
 
-  test("a crashed refresh (commit landed, watermark did not) replays idempotently") {
+  /** Arm [[MvClaimFs]] for the MV at `mvDir` around `body`. */
+  private def withClaimHook[T](mvDir: String, hook: MvClaimFs.Hook)(
+      body: => T): T = {
+    spark.conf.set("fs.file.impl", classOf[MvClaimFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    MvClaimFs.dir = new org.apache.hadoop.fs.Path(mvDir).toUri.getPath
+    MvClaimFs.hook.set(hook)
+    try body finally {
+      MvClaimFs.hook.set(null)
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  private def mvHead(mv: String): graft.sources.Snapshot =
+    graft.sources.ManifestLog(conf0, s"$wh/ns/$mv").snapshot()
+
+  private def content(mv: String) =
+    spark.sql(s"SELECT s, n_rows, sum_value FROM gmv.ns.$mv").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2))).toSet
+
+  test("a refresh that fails its MV claim changes nothing; the next one catches up") {
     write(rows(0, 500), s"$wh/ns/src2", "overwrite")
     spark.sql("CALL gmv.system.create_mv(" +
       "mv_table => 'ns.mv2', source_table => 'ns.src2', " +
       "key_col => 's', sum_col => 'v', scale => 2)")
-    val metaPath = java.nio.file.Paths.get(s"$wh/ns/mv2/_MV.json")
-    val preMeta = new String(java.nio.file.Files.readAllBytes(metaPath), "UTF-8")
+    val before = mvHead("mv2")
+    val beforeRows = content("mv2")
 
     write(rows(500, 700), s"$wh/ns/src2", "append")
-    spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv2')")
-    def content() =
-      spark.sql("SELECT s, n_rows, sum_value FROM gmv.ns.mv2").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2))).toSet
-    val refreshed = content()
+    // the crash window: the rollup is staged, the claim never lands
+    val ex = intercept[Exception] {
+      withClaimHook(s"$wh/ns/mv2", MvClaimFs.Hook(after = false,
+        () => throw new java.io.IOException("claim lost"))) {
+        spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv2')")
+      }
+    }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "claim lost"), ex.toString)
+    val after = mvHead("mv2")
+    assert(after.version === before.version)
+    assert(after.op === "create-mv")
+    assert(content("mv2") === beforeRows)
 
-    // simulate the crash window: the MV snapshot committed but the
-    // watermark write was lost — roll _MV.json back to the pre-refresh
-    // record and refresh again; the fold pins the MV state at the
-    // watermark's version, so the replay supersedes the orphan commit
-    // instead of double-applying the delta. (Roll back through the
-    // Hadoop fs so the checksum sidecar stays consistent.)
-    val hp = new org.apache.hadoop.fs.Path(metaPath.toString)
-    val hfs = hp.getFileSystem(conf0)
-    val out = hfs.create(hp, true)
-    try out.write(preMeta.getBytes("UTF-8")) finally out.close()
-    spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv2')")
-    assert(content() === refreshed, "replayed refresh must not double-apply")
+    // the watermark the head carries is still the create's: source v1
+    val r = spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv2')").head
+    assert(r.getInt(0) === 1 && r.getInt(1) === 2, s"$r")
     val src2 = spark.sql("SELECT k, s, v FROM gmv.ns.src2")
-    assert(content() === direct(src2))
+    assert(content("mv2") === direct(src2))
+    assert(spark.sql("SELECT operation FROM gmv.ns.mv2.history " +
+      "ORDER BY version").collect().map(_.getString(0)).toSeq ===
+      Seq("create-mv", "refresh-mv"))
+  }
+
+  test("MV maintenance keeps the watermark: compact and expire_snapshots " +
+    "on the MV, then refresh, equals the direct rollup") {
+    write(rows(0, 500), s"$wh/ns/src7", "overwrite")
+    spark.sql("CALL gmv.system.create_mv(" +
+      "mv_table => 'ns.mv7', source_table => 'ns.src7', " +
+      "key_col => 's', sum_col => 'v', scale => 2)")
+    spark.sql("CALL gmv.system.compact(table => 'ns.mv7', target_parts => 1)")
+    assert(mvHead("mv7").version === 2, "compaction must commit")
+    spark.sql("CALL gmv.system.expire_snapshots(table => 'ns.mv7', " +
+      "keep_last => 1)")
+    assert(graft.sources.ManifestLog(conf0, s"$wh/ns/mv7").versions === Seq(2))
+    write(rows(500, 700), s"$wh/ns/src7", "append")
+    spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv7')")
+    assert(content("mv7") === direct(spark.sql("SELECT k, s, v FROM gmv.ns.src7")))
+  }
+
+  test("a refresh raced at its MV claim by an append and a second " +
+    "refresh leaves the MV equal to the direct rollup") {
+    write(rows(0, 500), s"$wh/ns/src8", "overwrite")
+    spark.sql("CALL gmv.system.create_mv(" +
+      "mv_table => 'ns.mv8', source_table => 'ns.src8', " +
+      "key_col => 's', sum_col => 'v', scale => 2)")
+    write(rows(500, 600), s"$wh/ns/src8", "append")
+    withClaimHook(s"$wh/ns/mv8", MvClaimFs.Hook(after = true, { () =>
+      write(rows(600, 700), s"$wh/ns/src8", "append")
+      spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv8')")
+    })) {
+      spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv8')")
+    }
+    spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv8')")
+    assert(content("mv8") === direct(spark.sql("SELECT k, s, v FROM gmv.ns.src8")))
   }
 
   test("multi-key MV: per-key null-safe folds, group-scoped recompute " +
@@ -381,4 +437,28 @@ class MvSpec extends SparkSpec {
       assert(hasAgg(exact), "COUNT(DISTINCT) must decline (exact answer)")
     } finally spark.conf.unset("graft.mv.rewrite")
   }
+}
+
+/** A checksummed local filesystem that runs one armed hook when a
+  * version claim of the MV at [[MvClaimFs.dir]] renames into place —
+  * before the rename (to fail the claim) or after it (to race it). */
+class MvClaimFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    val hook =
+      if (dst.getName.matches("""_MANIFEST\.v\d+\.json""") &&
+          dst.getParent.toUri.getPath == MvClaimFs.dir)
+        Option(MvClaimFs.hook.getAndSet(null))
+      else None
+    hook.filterNot(_.after).foreach(_.run())
+    val renamed = super.rename(src, dst)
+    hook.filter(_.after).foreach(_.run())
+    renamed
+  }
+}
+
+object MvClaimFs {
+  final case class Hook(after: Boolean, run: () => Unit)
+  @volatile var dir: String = ""
+  val hook = new java.util.concurrent.atomic.AtomicReference[Hook]()
 }

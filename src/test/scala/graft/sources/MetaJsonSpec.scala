@@ -187,14 +187,17 @@ class MetaJsonSpec extends AnyFunSuite {
     })
     val mv = for {
       src <- str; key <- str; sum <- str
-      scale <- Gen.choose(0, 38); srcv <- id; mvv <- id
+      scale <- Gen.choose(0, 38); srcv <- id
       mm <- someStr; ndv <- someStr; kexpr <- someStr; ktz <- someStr
       join <- Gen.option(for { d <- str; fk <- str; dk <- str; dv <- id }
         yield ManifestMv.MvJoin(d, fk, dk, dv))
-    } yield ManifestMv.MvMeta(src, key, sum, scale, srcv, mvv, mm, ndv,
+    } yield ManifestMv.MvMeta(src, key, sum, scale, srcv, mm, ndv,
       join, kexpr, ktz)
     check("mv", Prop.forAll(mv) { m =>
-      MetaJson.decodeMvMeta(MetaJson.encodeMvMeta(m)) == m
+      val t = TableRecord(mv = Some(m))
+      MetaJson.decodeHeader(MetaJson.lines(MetaJson.encodeManifest(
+        "k BIGINT", None, Some((1, "create-mv", None)), Seq.empty, t))) ==
+        ManifestHeader(Some("k BIGINT"), None, Some(1), "create-mv", None, t)
     })
   }
 }

@@ -12,14 +12,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.SparkSpec
 
-/** A local file system that counts directory listings and, when armed,
-  * runs a hook once: the first time a commit probes a main version
-  * file that does not exist yet — between the commit's head read and
-  * its claim. Registered per Configuration through `fs.file.impl`
+/** A local file system that counts and records directory listings
+  * and, when armed, runs a hook once: the first time a commit probes a
+  * main version file that does not exist yet — between the commit's
+  * head read and its claim. Registered per Configuration through `fs.file.impl`
   * (with the cache off), so only the code under test sees it. */
 class ProbeFs extends RawLocalFileSystem {
   override def listStatus(p: Path): Array[FileStatus] = {
     ProbeFs.listings.incrementAndGet()
+    ProbeFs.listed.add(p.toUri.getPath)
     super.listStatus(p)
   }
   override def exists(f: Path): Boolean = {
@@ -34,6 +35,8 @@ class ProbeFs extends RawLocalFileSystem {
 
 object ProbeFs {
   val listings = new AtomicInteger()
+  /** The paths listed, in order. */
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val beforeClaim = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
 
   def conf(): Configuration = {
@@ -173,6 +176,29 @@ class SnapshotLogSpec extends SparkSpec {
     assert(head(dir).parts.map(_.path) === Seq("a", "b", "c"))
   }
 
+  test("expire_snapshots lists the table directory once: versions, " +
+    "tag pins and the orphan sweep share the listing") {
+    val dir = fresh()
+    (1 to 3).foreach(i => ManifestSink.publishRebase(plain, dir,
+      h => h :+ pm(s"p$i"), HeaderChange.Append(kv)))
+    ManifestLog(plain, dir).createTag("keep", 1)
+    // crashed-refresh debris: the sweep probes the staging directory,
+    // which is not a listing of the table directory
+    val stage = new java.io.File(dir, "_mv-plus-dead")
+    assert(stage.mkdir() && stage.setLastModified(1000L))
+    ProbeFs.listed.clear()
+    val stats = ManifestMaintenance.expireSnapshots(ProbeFs.conf(), dir,
+      keepLast = 1)
+    val listed = ProbeFs.listed.asScala.toSeq
+    assert(listed.count(_ == new Path(dir).toUri.getPath) === 1,
+      s"one listing of the table directory: $listed")
+    assert(listed.contains(new Path(stage.toString).toUri.getPath),
+      "the staging probe still runs")
+    assert(stats.versionsExpired === 1 && stats.filesDeleted === 1)
+    assert(ManifestLog(plain, dir).versions === Seq(1, 3),
+      "the tagged version survives expiry")
+  }
+
   test("a stream builds one reader per distinct read schema") {
     val dir = fresh()
     (1 to 3).foreach { i =>
@@ -201,11 +227,13 @@ class SnapshotLogSpec extends SparkSpec {
       "readBranchFork", "readOp", "readHeader", "readSchemaAndColMap",
       "readBranchSchema", "alignedColMap", "listBranchVersions",
       "listBranches", "listVersions", "readSnapshot", "publishSnapshot",
-      "manifestLines", "strictBase", "strictForkBase")
+      "manifestLines", "strictBase", "strictForkBase", "readTag",
+      "listTags", "readMeta", "writeMeta", "mvVersion")
     val forbidden = Seq(
       ("""\b(""" + deleted.mkString("|") + """)\b""").r,
       """\breadSchema\([^)]""".r, // the DSv2 `readSchema()` stays
-      """_MANIFEST""".r, """\bversionFile\b""".r,
+      """_MANIFEST""".r, """\bversionFile\b""".r, """_TAG\.""".r,
+      """_MV\.json""".r,
       """lastOption\.getOrElse\(0\)""".r)
     val files = Files.walk(root)
     val offenders: Seq[String] =

@@ -148,16 +148,35 @@ class TableRecordSpec extends SparkSpec {
     spark.sql(s"REPLACE TABLE $t PARTITIONED BY (bucket(2, k)) " +
       "AS SELECT id AS k, 'x' AS w FROM range(10)")
     assert(count(t) === 10L)
-    val dir = new Path(s"$wh/ns/t")
-    val names = dir.getFileSystem(conf).listStatus(dir).map(_.getPath.getName)
-      // the local filesystem's checksum files
-      .filterNot(n => n.startsWith(".") && n.endsWith(".crc"))
-    val stray = names.filterNot(n =>
+    def files(table: String): Seq[String] = {
+      val dir = new Path(s"$wh/ns/$table")
+      dir.getFileSystem(conf).listStatus(dir).map(_.getPath.getName).toSeq
+        // the local filesystem's checksum files
+        .filterNot(n => n.startsWith(".") && n.endsWith(".crc"))
+    }
+    def strays(names: Seq[String]): Seq[String] = names.filterNot(n =>
       n.matches("_MANIFEST\\.v\\d+\\.json") || ManifestSink.isPartFile(n) ||
         n.startsWith(DeleteVector.SidecarPrefix) ||
         (n.startsWith("_TAG.") && n.endsWith(".json")))
+    val names = files("t")
+    val stray = strays(names)
     assert(stray.isEmpty, s"unexpected table files: ${stray.toSeq}")
     assert(names.exists(_.startsWith(DeleteVector.SidecarPrefix)),
       "the MOR delete must have left a vector sidecar to check against")
+
+    // a materialized view's definition and watermark ride its version
+    // header: its directory holds no file of its own either
+    spark.sql(s"CALL $c.system.create_mv(mv_table => 'ns.mv', " +
+      "source_table => 'ns.t', key_col => 'w', sum_col => 'k', scale => 0)")
+      .collect()
+    // an ALTER of the MV carries its definition forward
+    spark.sql(s"ALTER TABLE $c.ns.mv SET TBLPROPERTIES ('steward' = 'mv')")
+    spark.sql(s"INSERT INTO $t VALUES (11, 'y')")
+    spark.sql(s"CALL $c.system.refresh_mv(mv_table => 'ns.mv')").collect()
+    assert(spark.sql(s"SELECT w, n_rows FROM $c.ns.mv ORDER BY w").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq ===
+      Seq(("x", 10L), ("y", 1L)))
+    val mvStray = strays(files("mv"))
+    assert(mvStray.isEmpty, s"unexpected MV files: $mvStray")
   }
 }
