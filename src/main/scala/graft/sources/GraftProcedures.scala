@@ -457,7 +457,7 @@ private[sources] final class TagProcedure(warehouse: String)
     ProcedureParameter.in("table", StringType)
       .comment("table identifier relative to the catalog warehouse").build(),
     ProcedureParameter.in("name", StringType)
-      .comment("tag name (letters, digits, '_', '-')").build(),
+      .comment("tag name (ASCII letters, digits, '_', '-')").build(),
     ProcedureParameter.in("version", IntegerType).defaultValue("-1")
       .comment("snapshot version to pin; -1 = current head").build())
 

@@ -175,7 +175,7 @@ final class ManifestLog private (conf: Configuration, val dir: String,
     * existing tag, including one a concurrent tagger published first. */
   private[sources] def createTag(name: String, version: Int): Unit = {
     require(ManifestLog.validBranch(name),
-      s"invalid tag name '$name' (letters, digits, '_', '-' only)")
+      s"invalid tag name '$name' (ASCII letters, digits, '_', '-' only)")
     require(main.contains(version),
       s"cannot tag version $version at $dir: no such snapshot")
     if (!MetaJson.claim(conf, new Path(dir), s"_TAG.$name.json",
@@ -192,8 +192,9 @@ final class ManifestLog private (conf: Configuration, val dir: String,
 
 object ManifestLog {
   private val VersionRe = """_MANIFEST\.v(\d+)\.json""".r
-  private val BranchVersionRe = """_MANIFEST\.([A-Za-z0-9_-]+)\.v(\d+)\.json""".r
-  private val TagRe = """_TAG\.([A-Za-z0-9_-]+)\.json""".r
+  private val Name = "[A-Za-z0-9_-]+"
+  private val BranchVersionRe = raw"""_MANIFEST\.($Name)\.v(\d+)\.json""".r
+  private val TagRe = raw"""_TAG\.($Name)\.json""".r
 
   /** Main version `v`'s file name. */
   def versionFile(v: Int): String = f"_MANIFEST.v$v%05d.json"
@@ -202,9 +203,9 @@ object ManifestLog {
   private[sources] def claimName(v: Int, branch: Option[String]): String =
     branch.fold(versionFile(v))(b => f"_MANIFEST.$b%s.v$v%05d.json")
 
-  /** A valid branch or tag name. */
-  private[sources] def validBranch(b: String): Boolean =
-    b.nonEmpty && b.forall(c => c.isLetterOrDigit || c == '_' || c == '-')
+  /** A valid branch or tag name: ASCII only, the names the listing
+    * reads back from file names. */
+  private[sources] def validBranch(b: String): Boolean = b.matches(Name)
 
   /** The log at `dir`, from ONE directory listing (kept whole in
     * `listing` for the orphan sweep); a missing directory is an empty

@@ -137,7 +137,8 @@ private[sources] object ManifestMv {
     * one commit: the rollup stages through the CTAS staged write
     * ([[GraftStagedTable.stage]]), then one claim lists the parts and
     * carries the definition and watermark. A refresh pins `base`, the
-    * MV head it folded against. Returns the MV's group count.
+    * MV head it folded against, and keeps the rest of its record (an
+    * ALTER's properties). Returns the MV's group count.
     *
     * No forced repartition: the rollup/fold output arrives already
     * exchange-partitioned by the grouping keys and AQE-coalesced to
@@ -147,11 +148,12 @@ private[sources] object ManifestMv {
     * (4 tiny files locally, 4 giant files at scale). */
   private def publish(rows: DataFrame, mvDir: String, m: MvMeta,
       base: Option[Snapshot], op: String): Long = {
+    val record = base.fold(TableRecord())(_.header.table).copy(mv = Some(m))
     val parts = GraftStagedTable.stage(rows.sparkSession, mvDir, rows,
-      TableSpec(), onto = None)
+      record.spec, onto = Some(ManifestHeader(table = record)))
     ManifestSink.publishRebase(ManifestSink.driverConf(), mvDir, _ => parts,
       HeaderChange.Restate(rows.schema, ColMap.identity(rows.schema.length),
-        TableRecord(mv = Some(m))),
+        record),
       base = base, op = op)
     parts.map(_.rows).sum
   }
@@ -182,8 +184,7 @@ private[sources] object ManifestMv {
       .getOrElse(throw new IllegalArgumentException(
         s"create_mv: source $sourceDir has no committed snapshot " +
           "(MVs track the snapshot log)"))
-    val src = spark.read.format("graft.sources.ManifestSource")
-      .option("path", sourceDir).option("version", srcVersion.toString).load()
+    val src = readAt(spark, sourceDir, srcVersion)
     keyExpr.foreach { ke =>
       // EXPRESSION-KEYED (time-grain) MV: the rollup groups by the
       // derived truncation — count + exact decimal sum only (the
@@ -233,13 +234,14 @@ private[sources] object ManifestMv {
       base = None, "create-mv"))
   }
 
+  /** Version `v` of the table at `dir`. */
+  private[sources] def readAt(spark: SparkSession, dir: String,
+      v: Int): DataFrame = spark.read.format("graft.sources.ManifestSource")
+    .option("path", dir).option("version", v.toString).load()
+
   /** The pinned broadcast dim side of a join MV. */
   private def dimSide(spark: SparkSession, j: MvJoin,
-      version: Int): DataFrame =
-    org.apache.spark.sql.functions.broadcast(
-      spark.read.format("graft.sources.ManifestSource")
-        .option("path", j.dimSource).option("version", version.toString)
-        .load())
+      version: Int): DataFrame = broadcast(readAt(spark, j.dimSource, version))
 
   /** JOIN-shaped MV: materialize `fact ⋈ dim GROUP BY <dim attr>`
     * (count + exact decimal sum). `keyCol` is the DIM attribute the
@@ -261,10 +263,8 @@ private[sources] object ManifestMv {
           s"create_mv: $what $d has no committed snapshot"))
     val srcVersion = headOf(factDir, "fact source")
     val dimVersion = headOf(dimDir, "dim source")
-    val fact = spark.read.format("graft.sources.ManifestSource")
-      .option("path", factDir).option("version", srcVersion.toString).load()
-    val dim = spark.read.format("graft.sources.ManifestSource")
-      .option("path", dimDir).option("version", dimVersion.toString).load()
+    val fact = readAt(spark, factDir, srcVersion)
+    val dim = readAt(spark, dimDir, dimVersion)
     require(fact.schema.fieldNames.contains(fk) &&
       fact.schema.fieldNames.contains(sumCol),
       s"create_mv: fact lacks '$fk'/'$sumCol'")
@@ -309,8 +309,7 @@ private[sources] object ManifestMv {
     m.join.foreach { j =>
       val dimHead = ManifestLog(conf, j.dimSource).head
       if (dimHead != j.dimVersion) {
-        val fact = spark.read.format("graft.sources.ManifestSource")
-          .option("path", m.source).option("version", head.toString).load()
+        val fact = readAt(spark, m.source, head)
         return RefreshStats(m.sourceVersion, head, -1, -1, publish(
           rollup(fact.join(dimSide(spark, j, dimHead),
             col(j.fk) === col(j.dimKey)), m.keyCol, m.sumCol, m.scale),
@@ -393,9 +392,7 @@ private[sources] object ManifestMv {
           m.ndvCol.toSeq.map(_ => col("psk")): _*)
       // fold against the MV head this refresh read — the snapshot the
       // watermark describes and the commit pins (see scaladoc)
-      val mv = spark.read.format("graft.sources.ManifestSource")
-        .option("path", mvDir).option("version", mvSnap.version.toString)
-        .load()
+      val mv = readAt(spark, mvDir, mvSnap.version)
       // the fold can answer counts/sums under ANY delta, but an
       // extreme or a sketch only folds under appends: any group seen
       // on the minus side needs the group-scoped rescan below
@@ -444,8 +441,7 @@ private[sources] object ManifestMv {
         // never O(table)
         val affectedKeys = folded.filter(col("affected"))
           .select(keys.map(k => col(k).as(s"__ak_$k")): _*)
-        val headSrc = spark.read.format("graft.sources.ManifestSource")
-          .option("path", m.source).option("version", head.toString).load()
+        val headSrc = readAt(spark, m.source, head)
         val scoped = headSrc.join(affectedKeys,
           keys.map(k => headSrc(k) <=> col(s"__ak_$k")).reduce(_ && _),
           "left_semi")

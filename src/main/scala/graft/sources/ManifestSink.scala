@@ -986,7 +986,7 @@ object ManifestSink {
       branch: Option[String] = None,
       op: String = ""): Int = {
     branch.foreach(b => require(ManifestLog.validBranch(b), s"invalid " +
-      s"branch name '$b' (letters, digits, '_', '-' only)"))
+      s"branch name '$b' (ASCII letters, digits, '_', '-' only)"))
     val dir = new Path(path)
     // OPTIMISTIC CONCURRENCY (the Iceberg commit loop): a commit
     // CLAIMS its immutable version file — exists-check + rename,

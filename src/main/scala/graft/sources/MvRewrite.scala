@@ -398,10 +398,8 @@ object MvRewrite extends Rule[LogicalPlan] {
     if (!exact && !subset) return None
     // the MV read is PINNED at the version carrying the watermark — the
     // freshness check and the data served are one snapshot pair
-    val mvPlan = spark.read.format("graft.sources.ManifestSource")
-      .option("path", t.mvDir)
-      .option("version", t.version.toString)
-      .load().queryExecution.optimizedPlan
+    val mvPlan = ManifestMv.readAt(spark, t.mvDir, t.version)
+      .queryExecution.optimizedPlan
     val out = mvPlan.output
     val keyPairs = groupAttrs.flatMap { k =>
       out.find(a => a.name == k.name && a.dataType == k.dataType)
@@ -486,10 +484,8 @@ object MvRewrite extends Rule[LogicalPlan] {
       case _ => false
     }
     if (!matches) return None
-    val mvPlan = spark.read.format("graft.sources.ManifestSource")
-      .option("path", t.mvDir)
-      .option("version", t.version.toString)
-      .load().queryExecution.optimizedPlan
+    val mvPlan = ManifestMv.readAt(spark, t.mvDir, t.version)
+      .queryExecution.optimizedPlan
     val out = mvPlan.output
     for {
       mvKey <- out.find(a => a.name == t.meta.keyCol &&

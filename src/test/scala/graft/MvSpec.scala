@@ -177,7 +177,7 @@ class MvSpec extends SparkSpec {
     write(rows(500, 700), s"$wh/ns/src2", "append")
     // the crash window: the rollup is staged, the claim never lands
     val ex = intercept[Exception] {
-      withClaimHook(s"$wh/ns/mv2", MvClaimFs.Hook(after = false,
+      withClaimHook(s"$wh/ns/mv2", MvClaimFs.Hook(MvClaimFs.BeforeRename,
         () => throw new java.io.IOException("claim lost"))) {
         spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv2')")
       }
@@ -222,7 +222,7 @@ class MvSpec extends SparkSpec {
       "mv_table => 'ns.mv8', source_table => 'ns.src8', " +
       "key_col => 's', sum_col => 'v', scale => 2)")
     write(rows(500, 600), s"$wh/ns/src8", "append")
-    withClaimHook(s"$wh/ns/mv8", MvClaimFs.Hook(after = true, { () =>
+    withClaimHook(s"$wh/ns/mv8", MvClaimFs.Hook(MvClaimFs.AfterRename, { () =>
       write(rows(600, 700), s"$wh/ns/src8", "append")
       spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv8')")
     })) {
@@ -230,6 +230,40 @@ class MvSpec extends SparkSpec {
     }
     spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv8')")
     assert(content("mv8") === direct(spark.sql("SELECT k, s, v FROM gmv.ns.src8")))
+  }
+
+  test("a refresh whose MV head moves before its claim fails loudly " +
+    "and leaves the winner's MV, watermark and rows") {
+    write(rows(0, 500), s"$wh/ns/src9", "overwrite")
+    spark.sql("CALL gmv.system.create_mv(" +
+      "mv_table => 'ns.mv9', source_table => 'ns.src9', " +
+      "key_col => 's', sum_col => 'v', scale => 2)")
+    write(rows(500, 600), s"$wh/ns/src9", "append")
+    var won: Set[(String, Long, java.math.BigDecimal)] = Set.empty
+    // between the refresh's MV head read and its claim, an append and
+    // a second refresh land: the first refresh's fold (source v1→v2
+    // onto MV v1) is stale
+    val ex = intercept[Exception] {
+      withClaimHook(s"$wh/ns/mv9", MvClaimFs.Hook(MvClaimFs.Probe, { () =>
+        write(rows(600, 700), s"$wh/ns/src9", "append")
+        spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv9')")
+        won = content("mv9")
+      })) {
+        spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv9')")
+      }
+    }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.util.ConcurrentModificationException]),
+      ex.toString)
+    val after = mvHead("mv9")
+    assert(after.version === 2 && after.op === "refresh-mv")
+    val src9 = spark.sql("SELECT k, s, v FROM gmv.ns.src9")
+    assert(won === direct(src9))
+    assert(content("mv9") === won)
+    // the head's watermark is the winner's: source v3, nothing to fold
+    val r = spark.sql("CALL gmv.system.refresh_mv(mv_table => 'ns.mv9')").head
+    assert(r.getInt(0) === 3 && r.getInt(1) === 3, s"$r")
+    assert(mvHead("mv9").version === 2, "a caught-up refresh commits nothing")
   }
 
   test("multi-key MV: per-key null-safe folds, group-scoped recompute " +
@@ -439,26 +473,42 @@ class MvSpec extends SparkSpec {
   }
 }
 
-/** A checksummed local filesystem that runs one armed hook when a
-  * version claim of the MV at [[MvClaimFs.dir]] renames into place —
-  * before the rename (to fail the claim) or after it (to race it). */
+/** A checksummed local filesystem that runs one armed hook at a
+  * version claim of the MV at [[MvClaimFs.dir]]: at its free-slot
+  * probe (to move the head under it), before its rename (to fail the
+  * claim) or after it (to run a second refresh once it landed). */
 class MvClaimFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import MvClaimFs._
+  private def armed(p: org.apache.hadoop.fs.Path, at: At): Option[Hook] =
+    if (p.getName.matches("""_MANIFEST\.v\d+\.json""") &&
+        p.getParent.toUri.getPath == dir &&
+        Option(hook.get).exists(_.at == at))
+      Option(hook.getAndSet(null))
+    else None
+
+  override def exists(f: org.apache.hadoop.fs.Path): Boolean = {
+    if (!super.exists(f)) armed(f, Probe).foreach(_.run())
+    super.exists(f)
+  }
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean = {
-    val hook =
-      if (dst.getName.matches("""_MANIFEST\.v\d+\.json""") &&
-          dst.getParent.toUri.getPath == MvClaimFs.dir)
-        Option(MvClaimFs.hook.getAndSet(null))
-      else None
-    hook.filterNot(_.after).foreach(_.run())
+    armed(dst, BeforeRename).foreach(_.run())
+    val hook = armed(dst, AfterRename)
     val renamed = super.rename(src, dst)
-    hook.filter(_.after).foreach(_.run())
+    hook.foreach(_.run())
     renamed
   }
 }
 
 object MvClaimFs {
-  final case class Hook(after: Boolean, run: () => Unit)
+  /** Where a hook runs: at the claim's probe for its free version
+    * file (between the refresh's head read and its claim), or just
+    * before or after the claim's rename. */
+  sealed trait At
+  case object Probe extends At
+  case object BeforeRename extends At
+  case object AfterRename extends At
+  final case class Hook(at: At, run: () => Unit)
   @volatile var dir: String = ""
   val hook = new java.util.concurrent.atomic.AtomicReference[Hook]()
 }

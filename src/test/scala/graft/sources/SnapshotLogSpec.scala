@@ -199,6 +199,24 @@ class SnapshotLogSpec extends SparkSpec {
       "the tagged version survives expiry")
   }
 
+  test("a tag or branch name the listing cannot read back is refused") {
+    val dir = fresh()
+    ManifestSink.publishRebase(plain, dir, h => h :+ pm("p1"),
+      HeaderChange.Append(kv))
+    val cafe = "caf\u00e9"
+    // refused by name, before any file is touched
+    val tag = intercept[IllegalArgumentException](
+      ManifestLog(plain, dir).createTag(cafe, 1))
+    assert(tag.getMessage.contains("invalid tag name"), tag.getMessage)
+    val branch = intercept[IllegalArgumentException](ManifestSink.publishRebase(
+      plain, dir, h => h :+ pm("p2"), HeaderChange.Append(kv), branch = Some(cafe)))
+    assert(branch.getMessage.contains("invalid branch name"), branch.getMessage)
+    val claimed = new java.io.File(dir).list().filter(n =>
+      n.startsWith("_TAG.") || n.contains(cafe))
+    assert(claimed.isEmpty, s"no tag or branch file is claimed: ${claimed.toSeq}")
+    assert(ManifestLog(plain, dir).versions === Seq(1))
+  }
+
   test("a stream builds one reader per distinct read schema") {
     val dir = fresh()
     (1 to 3).foreach { i =>

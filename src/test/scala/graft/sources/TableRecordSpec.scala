@@ -176,6 +176,10 @@ class TableRecordSpec extends SparkSpec {
     assert(spark.sql(s"SELECT w, n_rows FROM $c.ns.mv ORDER BY w").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq ===
       Seq(("x", 10L), ("y", 1L)))
+    // the refresh carries the ALTER forward with the new watermark
+    assert(spark.sql(s"SHOW TBLPROPERTIES $c.ns.mv").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap.get("steward") ===
+      Some("mv"), "refresh_mv must keep the MV's properties")
     val mvStray = strays(files("mv"))
     assert(mvStray.isEmpty, s"unexpected MV files: $mvStray")
   }
