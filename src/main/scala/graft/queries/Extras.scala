@@ -380,7 +380,7 @@ GROUP BY 1 ORDER BY 1""")),
 
     // --- DSv2 SINK with manifest commit (K1 as a cluster warehouse
     // commits it): events are written through graft.sources
-    // .ManifestSink — every task stages a uniquely-named part file
+    // .ManifestSource — every task stages a uniquely-named part file
     // and reports (rows, key min/max) in its WriterCommitMessage; the
     // driver claims the next version file LAST as the atomic commit
     // point. The query then reads the manifest back and returns the
@@ -394,7 +394,7 @@ GROUP BY 1 ORDER BY 1""")),
         val target = QueryDef.freshTable(spark, dir, "sink")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", target).mode("overwrite").save()
         val parts = graft.sources.ManifestLog(
           spark.sparkContext.hadoopConfiguration, target).snapshot().partRanges
@@ -425,7 +425,7 @@ FROM events""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", target).mode("overwrite").save()
         spark.read.format("graft.sources.ManifestSource")
           .option("path", target).load() // schema from the manifest header
@@ -457,7 +457,7 @@ GROUP BY event_type ORDER BY event_type""")),
         val target = QueryDef.freshTable(spark, dir, "sink-agg")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", target).mode("overwrite").save()
         spark.read.format("graft.sources.ManifestSource")
           .option("path", target).load()
@@ -484,7 +484,7 @@ FROM events""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_type"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", target).mode("overwrite").save()
         spark.read.format("graft.sources.ManifestSource")
           .option("path", target).load()
@@ -517,12 +517,12 @@ FROM events WHERE event_type = 'purchase'""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartition(32)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", small).mode("overwrite").save()
         spark.read.format("graft.sources.ManifestSource")
           .option("path", small).load()
           .repartitionByRange(4, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", packed).mode("overwrite").save()
         val conf = spark.sessionState.newHadoopConf()
         val before = graft.sources.ManifestLog(conf, small).snapshot().partRanges
@@ -653,13 +653,13 @@ FROM lineitem WHERE l_quantity > 10""")),
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         base.filter(col("event_id") % 7 =!= 0)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t1).mode("overwrite").save()
         base.filter(col("event_id") % 11 =!= 0)
           .select(col("event_id"),
             when(col("event_id") % 5 === 0, col("value") + 1.0)
               .otherwise(col("value")).as("value"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t2).mode("overwrite").save()
         def snap(p: String, v: String) =
           spark.read.format("graft.sources.ManifestSource")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Exact
 import graft.model.Tables
+import graft.util.SessionConf.withConf
 
 /** Skew- and co-location patterns: the join/aggregation shapes that
   * decide whether a plan survives a 100× scale-up. Each query produces
@@ -444,14 +445,14 @@ FROM d ORDER BY zval, o_orderkey"""
           col("value"))
         Seq("fa", "fb").foreach { t =>
           fact.repartition(4, col("k"))
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", s"$base/ns/$t")
             .mode("overwrite").save()
         }
         Tables.orders(spark, dir)
           .select((col("o_orderkey") % 5000).as("dk"), col("o_totalprice"))
           .repartition(4)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$base/ns/dim")
           .mode("overwrite").save()
         spark.sql("CALL gch.system.analyze(table => 'ns.fa')")
@@ -471,19 +472,13 @@ FROM d ORDER BY zval, o_orderkey"""
         def broadcasts(df: org.apache.spark.sql.DataFrame): Boolean =
           df.queryExecution.executedPlan.exists(_.isInstanceOf[
             org.apache.spark.sql.execution.joins.BroadcastHashJoinExec])
-        val saved = Seq("spark.sql.cbo.enabled",
-          "spark.sql.adaptive.enabled",
-          "spark.sql.autoBroadcastJoinThreshold")
-          .map(c => c -> spark.conf.get(c))
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try {
+        withConf(spark, "spark.sql.cbo.enabled" -> "true",
+            "spark.sql.adaptive.enabled" -> "false",
+            "spark.sql.autoBroadcastJoinThreshold" -> "10485760") {
           // threshold sized from the HISTOGRAM estimate: 4× leaves
           // room for stats noise while staying far under the uniform
           // over-estimate (~16× by construction) and far under the
           // dim's size (~150% of the fact) at every scale factor
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-            "10485760")
           val sizeH = q("fb").queryExecution.optimizedPlan.collect {
             case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
               f.stats.sizeInBytes
@@ -500,7 +495,7 @@ FROM d ORDER BY zval, o_orderkey"""
               lit(estU > total * 4 / 5))
             .withColumn("hist_sees_skew",
               lit(estH >= 0 && estH < total / 4))
-        } finally saved.foreach { case (c, v) => spark.conf.set(c, v) }
+        }
       },
       Some("""SELECT CAST(count(*) AS BIGINT) AS n,
   CAST(CAST(sum(CAST(o.o_totalprice AS DECIMAL(30,2))) AS VARCHAR)

@@ -1556,14 +1556,14 @@ WHERE rn <= 5 ORDER BY probe_id, d2, vec_id""")),
         // base build → snapshot 1, cell-range layout
         indexRows(emb.filter(col("vec_id") >= 8 && col("vec_id") % 4 =!= 0))
           .repartitionByRange(4, col("cell"), col("vec_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .mode("overwrite").save()
         // incremental maintenance → snapshot 2: only the delta's
         // codes are computed; the committed base parts are untouched
         indexRows(emb.filter(col("vec_id") >= 8 && col("vec_id") % 4 === 0))
           .repartitionByRange(2, col("cell"), col("vec_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .mode("append").save()
         // serve from the COMMITTED head (= base ∪ delta)
@@ -1701,7 +1701,7 @@ WHERE rn <= 5 ORDER BY probe_id, hamming, vec_id""")),
         // snapshot 1: the historical corpus's band index, hash layout
         indexRows(sigs.filter(col("doc_id") % 3 =!= 0))
           .repartition(4, col("bh"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .mode("overwrite").save()
         val index = spark.read.format("graft.sources.ManifestSource")
@@ -1728,7 +1728,7 @@ WHERE rn <= 5 ORDER BY probe_id, hamming, vec_id""")),
         // snapshot 2: ONLY the delta's band rows append
         indexRows(sigs.filter(col("doc_id") % 3 === 0))
           .repartition(2, col("bh"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .mode("append").save()
         val after = spark.read.format("graft.sources.ManifestSource")

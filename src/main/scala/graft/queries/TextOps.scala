@@ -158,7 +158,7 @@ FROM documents GROUP BY md5(text) ORDER BY keeper_id""")),
         // committed index of the historical corpus
         docs.filter(col("doc_id") % 3 =!= 0)
           .groupBy(fp.as("fp")).agg(min(col("doc_id")).as("keeper_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .mode("overwrite").save()
         val index = spark.read.format("graft.sources.ManifestSource")
@@ -173,7 +173,7 @@ FROM documents GROUP BY md5(text) ORDER BY keeper_id""")),
         val newUnique = batch.join(index.select(col("fp")), Seq("fp"),
           "left_anti").pinned()
         newUnique.select(col("fp"), col("keeper_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .mode("append").save()
         val updated = spark.read.format("graft.sources.ManifestSource")
@@ -877,7 +877,7 @@ FROM tf GROUP BY term ORDER BY df DESC, term LIMIT 30""")),
 
     // --- INVERTED INDEX AS A COMMITTED TABLE (the text twin of
     // q_ann_index_serve, and q_inverted_index's build made a
-    // LIFECYCLE): the posting table lives as ManifestSink snapshots,
+    // LIFECYCLE): the posting table lives as manifest-table snapshots,
     // range-laid-out on the term-hash key — built once, maintained
     // INCREMENTALLY (an appended doc slice computes only ITS OWN
     // postings; the committed base parts carry by reference in a KB
@@ -922,12 +922,12 @@ FROM tf GROUP BY term ORDER BY df DESC, term LIMIT 30""")),
         val docs = Tables.documents(spark, dir)
         postings(docs.filter(col("doc_id") % 5 =!= 0))
           .repartitionByRange(4, col("term_hash"), col("doc_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .mode("overwrite").save()
         postings(docs.filter(col("doc_id") % 5 === 0))
           .repartitionByRange(2, col("term_hash"), col("doc_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .mode("append").save()
         // the base snapshot predates the delta docs entirely
@@ -978,7 +978,7 @@ ORDER BY score DESC, doc_id LIMIT 20""")),
     // --- BM25 SERVED FROM THE COMMITTED INDEX (q_text_index_serve's
     // lifecycle completed into real retrieval — r17 VERDICT item 3):
     // the query NEVER rescans the corpus. The index is TWO committed
-    // ManifestSink tables — postings (term_hash, tok, doc_id, tf)
+    // manifest tables — postings (term_hash, tok, doc_id, tf)
     // range-laid on term hash, and doclen (doc_id, dl) — both built
     // over a base slice and maintained INCREMENTALLY (the delta
     // appends only ITS OWN postings/lengths; committed parts carry by
@@ -1039,21 +1039,21 @@ ORDER BY score DESC, doc_id LIMIT 20""")),
         val delta = docs.filter(col("doc_id") % 5 === 0)
         postings(base)
           .repartitionByRange(4, col("term_hash"), col("doc_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", pT)
           .mode("overwrite").save()
         doclen(base).repartitionByRange(4, col("doc_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", dT)
           .mode("overwrite").save()
         // incremental maintenance: delta-only postings + lengths
         postings(delta)
           .repartitionByRange(2, col("term_hash"), col("doc_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", pT)
           .mode("append").save()
         doclen(delta).repartitionByRange(2, col("doc_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", dT)
           .mode("append").save()
         // corpus stats FROM INDEX METADATA: one summary row off the

@@ -8,6 +8,7 @@ import graft.functions.Exact
 import graft.model.Tables
 import graft.sources.ManifestMaintenance
 import graft.util.Pin.PinOps
+import graft.util.SessionConf.withConf
 
 /** Snapshot-history table operations over the manifest format — the
   * Iceberg/Delta-shaped warehouse surface assembled from the engine's
@@ -31,7 +32,7 @@ object Warehouse {
   private def writeHistory(df: DataFrame, path: String, mode: String,
       parts: Int = 4): Unit =
     df.repartition(parts)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", path).mode(mode).save()
 
   private def readVersion(spark: SparkSession, path: String,
@@ -328,7 +329,7 @@ ORDER BY d.event_type""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartition(8, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t).mode("overwrite").save()
         readVersion(spark, t, None)
           .filter(col("event_id").isin(11L, 4242L, 777L))
@@ -417,7 +418,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
             val fs = marker.getFileSystem(hconf)
             if (!fs.exists(marker)) {
               batch.repartition(2)
-                .write.format("graft.sources.ManifestSink")
+                .write.format("graft.sources.ManifestSource")
                 .option("path", silver)
                 .mode(if (fs.exists(new Path(silver))) "append" else "overwrite")
                 .save()
@@ -531,7 +532,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         base.repartitionByRange(8, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$t/wh/ev_t")
           .mode("overwrite").save()
         spark.sql("DELETE FROM graftcow.wh.ev_t WHERE event_id < 677")
@@ -630,10 +631,10 @@ FROM feed ORDER BY _commit_version, _change_type, event_id""")),
           .select(col("event_id"), col("event_type"))
         writeHistory(base.filter(col("event_id") % 2 === 0), tbl, "overwrite")
         writeHistory(base.filter(col("event_id") % 2 =!= 0), tbl, "append")
-        spark.conf.set("graft.delete.mode", "eq")
-        try spark.sql(
-          "DELETE FROM graftcdfe.wh.ev_t WHERE event_type = 'click'")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "eq") {
+          spark.sql(
+            "DELETE FROM graftcdfe.wh.ev_t WHERE event_type = 'click'")
+        }
         val q = spark.readStream
           .format("graft.sources.ManifestSource")
           .option("path", tbl).option("changeFeed", "true").load()
@@ -678,7 +679,7 @@ FROM feed ORDER BY _commit_version, _change_type, event_id""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartition(8, col("event_type")) // deliberately scrambled
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .option("clusterBy", "event_id").option("writePartitions", "8")
           .mode("overwrite").save()
@@ -716,10 +717,10 @@ GROUP BY event_type ORDER BY event_type""")),
         val tbl = s"$wh/wh/ev_t"
         writeHistory(base.filter(col("event_id") % 2 === 0), tbl, "overwrite")
         writeHistory(base.filter(col("event_id") % 2 =!= 0), tbl, "append")
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql(
-          "DELETE FROM graftcdm.wh.ev_t WHERE event_type = 'click'")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql(
+            "DELETE FROM graftcdm.wh.ev_t WHERE event_type = 'click'")
+        }
         val q = spark.readStream
           .format("graft.sources.ManifestSource")
           .option("path", tbl).option("changeFeed", "true").load()
@@ -768,14 +769,13 @@ FROM feed ORDER BY _commit_version, _change_type, event_id""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
-        spark.conf.set("graft.delete.mode", "mor")
-        try {
+        withConf(spark, "graft.delete.mode" -> "mor") {
           spark.sql("DELETE FROM graftmor.wh.ev_t WHERE event_type = 'click'")
           spark.sql("DELETE FROM graftmor.wh.ev_t WHERE event_type = 'error'")
-        } finally spark.conf.unset("graft.delete.mode")
+        }
         def agg(version: Option[Int]) = {
           val v = version.map(n => s" VERSION AS OF $n").getOrElse("")
           spark.sql(s"""
@@ -821,7 +821,7 @@ ORDER BY snapshot""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
         spark.sql(
@@ -875,7 +875,7 @@ ORDER BY event_type""")),
           col("o_totalprice").as("price"))
         base.filter(col("k") % 2 === 0)
           .repartitionByRange(4, col("k"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ord_t")
           .mode("overwrite").save()
         base.filter(col("k") % 3 === 0)
@@ -946,7 +946,7 @@ FROM merged GROUP BY prio ORDER BY prio""")),
           col("o_totalprice").as("price"))
         base.filter(col("k") % 2 === 0)
           .repartitionByRange(4, col("k"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ord_sync")
           .mode("overwrite").save()
         base.filter(col("k") % 3 === 0)
@@ -1017,7 +1017,7 @@ FROM merged GROUP BY prio ORDER BY prio""")),
           col("o_totalprice").as("price"))
         base.filter(col("k") % 2 === 0)
           .repartitionByRange(4, col("k"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ord_t")
           .mode("overwrite").save()
         base.filter(col("k") % 3 === 0)
@@ -1025,14 +1025,14 @@ FROM merged GROUP BY prio ORDER BY prio""")),
             (col("price") * 2).as("new_price"),
             when(col("k") % 9 === 0, lit("D")).otherwise(lit("U")).as("op"))
           .createOrReplaceTempView("graft_merge_mor_src")
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("""MERGE INTO graftmm.wh.ord_t t
-          USING graft_merge_mor_src s ON t.k = s.k
-          WHEN MATCHED AND s.op = 'D' THEN DELETE
-          WHEN MATCHED THEN UPDATE SET price = s.new_price
-          WHEN NOT MATCHED AND s.op = 'U' THEN
-            INSERT (k, prio, price) VALUES (s.k, s.prio, s.new_price)""")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("""MERGE INTO graftmm.wh.ord_t t
+            USING graft_merge_mor_src s ON t.k = s.k
+            WHEN MATCHED AND s.op = 'D' THEN DELETE
+            WHEN MATCHED THEN UPDATE SET price = s.new_price
+            WHEN NOT MATCHED AND s.op = 'U' THEN
+              INSERT (k, prio, price) VALUES (s.k, s.prio, s.new_price)""")
+        }
         spark.sql(s"""
           SELECT prio, count(*) AS n,
             ${Exact.decSumSql("price", 2).replace("VARCHAR", "STRING")}
@@ -1096,7 +1096,7 @@ ORDER BY prio""")),
         // stage the odd half on the audit branch — two commits, like a
         // real multi-batch ingest
         def stage(df: DataFrame): Unit = df.repartition(4)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .option("branch", "audit").mode("append").save()
         stage(base.filter(col("event_id") % 4 === 1))
@@ -1151,9 +1151,9 @@ ORDER BY prio""")),
         val tbl = s"$wh/wh/ev_t"
         writeHistory(base.filter(col("event_id") % 2 === 0), tbl, "overwrite")
         writeHistory(base.filter(col("event_id") % 2 =!= 0), tbl, "append")
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM graftht.wh.ev_t WHERE event_id % 5 = 0")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM graftht.wh.ev_t WHERE event_id % 5 = 0")
+        }
         spark.sql("""SELECT version, n_parts, n_rows
           FROM graftht.wh.ev_t.history ORDER BY version""")
       },
@@ -1188,10 +1188,10 @@ ORDER BY prio""")),
           .createOrReplaceTempView("graft_histops_src")
         spark.sql(
           "INSERT INTO graftho.wh.ev_t SELECT * FROM graft_histops_src")
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql(
-          "DELETE FROM graftho.wh.ev_t WHERE event_type = 'error'")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql(
+            "DELETE FROM graftho.wh.ev_t WHERE event_type = 'error'")
+        }
         spark.sql("UPDATE graftho.wh.ev_t SET value = 0.0 " +
           "WHERE event_type = 'click'")
         spark.sql("CALL graftho.system.analyze(table => 'wh.ev_t', " +
@@ -1376,12 +1376,12 @@ FROM events""")),
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("user_id"), col("value"))
         base.repartitionByRange(4, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM graftmf.wh.ev_t WHERE event_id % 10 = 0")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM graftmf.wh.ev_t WHERE event_id % 10 = 0")
+        }
         // user_id is a secondary long column: every part's .files row
         // exposes its generalized ColStat record
         spark.sql("""SELECT count(*) AS n_parts, sum(n_rows) AS total_rows,
@@ -1646,13 +1646,13 @@ ORDER BY event_id""")),
           .select(col("event_id"), col("event_type"), col("value"))
         (0 until 4).foreach { i =>
           base.filter(col("event_id") % 4 === i).coalesce(1)
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", s"$wh/wh/ev_t")
             .mode(if (i == 0) "overwrite" else "append").save()
         }
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM graftan.wh.ev_t WHERE event_type = 'click'")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM graftan.wh.ev_t WHERE event_type = 'click'")
+        }
         def planned: Int = spark.sql(
           "SELECT count(*) FROM graftan.wh.ev_t WHERE event_type = 'click'")
           .queryExecution.sparkPlan.collect {
@@ -1815,7 +1815,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
         spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
         def writeBucketed(df: DataFrame, name: String): Unit =
           df.repartition(8, graft.functions.GraftBucket.bucketId(col("k"), 8))
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", s"$wh/wh/$name")
             .option("buckets", "8").mode("overwrite").save()
         writeBucketed(Tables.lineitem(spark, dir).select(
@@ -1952,7 +1952,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
         Tables.events(spark, dir)
@@ -2063,7 +2063,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
           .select(col("event_id"), col("event_type"), col("value"))
         base.filter(col("event_id") % 3 =!= 2)
           .repartitionByRange(4, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
         spark.sql("CALL graftmv.system.create_mv(" +
@@ -2072,12 +2072,12 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
         // two source commits since the MV: an append and a MOR delete
         base.filter(col("event_id") % 3 === 2)
           .repartitionByRange(2, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ev_t")
           .mode("append").save()
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM graftmv.wh.ev_t WHERE event_type = 'error'")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM graftmv.wh.ev_t WHERE event_type = 'error'")
+        }
         val audit = spark.sql(
           "CALL graftmv.system.refresh_mv(mv_table => 'wh.ev_mv')").head
         spark.sql("""
@@ -2119,14 +2119,13 @@ ORDER BY event_type NULLS FIRST""")),
           .select(col("event_id"), col("event_type"), col("value"))
         base.filter(col("event_id") % 5 =!= 0)
           .repartitionByRange(4, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
         spark.sql("CALL graftmvrw.system.create_mv(" +
           "mv_table => 'wh.ev_mv', source_table => 'wh.ev_t', " +
           "key_col => 'event_type', sum_col => 'value', scale => 6)")
-        spark.conf.set("graft.mv.rewrite", s"$wh/wh/ev_mv")
-        try {
+        withConf(spark, "graft.mv.rewrite" -> s"$wh/wh/ev_mv") {
           val rollup = """SELECT event_type, count(*) AS n_rows,
             CAST(CAST(sum(CAST(value AS DECIMAL(30,6))) AS STRING)
               AS DOUBLE) AS sum_value
@@ -2143,13 +2142,13 @@ ORDER BY event_type NULLS FIRST""")),
           // an un-refreshed append: the MV is now stale — full fallback
           base.filter(col("event_id") % 5 === 0)
             .repartitionByRange(2, col("event_id"))
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", s"$wh/wh/ev_t")
             .mode("append").save()
           val stale = phase("stale")
           fresh.unionAll(stale)
             .orderBy(col("phase"), col("event_type"))
-        } finally spark.conf.unset("graft.mv.rewrite")
+        }
       },
       Some(s"""SELECT event_type, n_rows, sum_value, phase, used_mv FROM (
   SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
@@ -2183,7 +2182,7 @@ ORDER BY phase, event_type NULLS FIRST""")),
             col("o_custkey").as("cust"),
             col("o_totalprice").as("price"))
           .repartitionByRange(8, col("k"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .mode("overwrite").save()
         // cust is a SECONDARY long column — its extremes answer from
@@ -2234,7 +2233,7 @@ FROM orders""")),
         def write(df: org.apache.spark.sql.DataFrame, path: String,
             mode: String): Unit =
           df.repartitionByRange(4, col("event_id"))
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", path)
             .mode(mode).save()
         write(base.filter(col("event_id") % 4 =!= 1), s"$wh/wh/ev_t",
@@ -2302,7 +2301,7 @@ ORDER BY side, event_type NULLS FIRST""")),
           "4-NOT SPECIFIED", "5-LOW")
         prios.zipWithIndex.foreach { case (p, i) =>
           base.filter(col("prio") === p).coalesce(1)
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", t)
             .mode(if (i == 0) "overwrite" else "append").save()
         }
@@ -2345,7 +2344,7 @@ GROUP BY o_orderstatus ORDER BY o_orderstatus""")),
         Seq(col("etype").isNull, col("etype").isNotNull).zipWithIndex
           .foreach { case (p, i) =>
             base.filter(p).coalesce(1)
-              .write.format("graft.sources.ManifestSink")
+              .write.format("graft.sources.ManifestSource")
               .option("path", t)
               .mode(if (i == 0) "overwrite" else "append").save()
           }
@@ -2391,7 +2390,7 @@ ORDER BY which""")),
             nullif(col("event_type"), lit("click")).as("etype"),
             col("user_id"))
           .repartition(4)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t).mode("overwrite").save()
         val agg = spark.read.format("graft.sources.ManifestSource")
           .option("path", t).load()
@@ -2429,7 +2428,7 @@ FROM events WHERE event_type IS NOT NULL""")),
         Tables.orders(spark, dir)
           .select(col("o_orderkey").as("k"), col("o_custkey").as("cust"))
           .repartition(6)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t).mode("overwrite").save()
         val agg = spark.read.format("graft.sources.ManifestSource")
           .option("path", t).load()
@@ -2465,7 +2464,7 @@ FROM orders""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("user_id"))
           .repartition(8)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t).option("splitBy", "event_type")
           .mode("overwrite").save()
         def planned(df: DataFrame): Int =
@@ -2506,7 +2505,7 @@ FROM events WHERE event_type = 'click'""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("user_id"))
           .repartition(8)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t).option("splitBy", "event_type")
           .mode("overwrite").save()
         val q = spark.read.format("graft.sources.ManifestSource")
@@ -2556,7 +2555,7 @@ ORDER BY event_type NULLS FIRST""")),
         def write(df: org.apache.spark.sql.DataFrame, path: String,
             mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", path)
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 === 0), src, "overwrite")
@@ -2583,7 +2582,7 @@ ORDER BY event_type NULLS FIRST""")),
             val fs = marker.getFileSystem(hconf)
             if (!fs.exists(marker)) {
               batch.repartitionByRange(2, col("event_id"))
-                .write.format("graft.sources.ManifestSink")
+                .write.format("graft.sources.ManifestSource")
                 .option("path", src)
                 .mode("append").save()
               fs.create(marker, false).close()
@@ -2696,15 +2695,14 @@ FROM events""")),
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         base.repartitionByRange(4, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ev_t")
           .mode("overwrite").save()
-        spark.conf.set("graft.branch", "audit")
-        try {
+        withConf(spark, "graft.branch" -> "audit") {
           spark.sql("UPDATE graftwd.wh.ev_t SET event_type = 'audited' " +
             "WHERE event_id % 100 = 0")
           spark.sql("DELETE FROM graftwd.wh.ev_t WHERE event_id % 100 = 50")
-        } finally spark.conf.unset("graft.branch")
+        }
         // mid-audit: main must still serve the RAW table
         val mid = spark.sql(
           "SELECT count(*) AS n, " +
@@ -2758,7 +2756,7 @@ FROM events""")),
           .select(col("event_id"), col("event_type"), col("value"))
         def write(df: DataFrame, mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", s"$wh/wh/src")
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 =!= 1), "overwrite")
@@ -2769,13 +2767,12 @@ FROM events""")),
         write(base.filter(col("event_id") % 3 === 1), "append")
         val r1 = spark.sql(
           "CALL graftmvx.system.refresh_mv(mv_table => 'wh.mv')").head
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM graftmvx.wh.src WHERE event_id % 10 = 0")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM graftmvx.wh.src WHERE event_id % 10 = 0")
+        }
         val r2 = spark.sql(
           "CALL graftmvx.system.refresh_mv(mv_table => 'wh.mv')").head
-        spark.conf.set("graft.mv.rewrite", s"$wh/wh/mv")
-        try {
+        withConf(spark, "graft.mv.rewrite" -> s"$wh/wh/mv") {
           val q = spark.sql("""SELECT event_type, count(*) AS n_rows,
             CAST(CAST(sum(CAST(value AS DECIMAL(30,6))) AS STRING)
               AS DOUBLE) AS sum_value,
@@ -2788,7 +2785,7 @@ FROM events""")),
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("event_type"))
             .pinned()
-        } finally spark.conf.unset("graft.mv.rewrite")
+        }
       },
       Some(s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
   ${Exact.decSumSql("value", 6)} AS sum_value,
@@ -2826,7 +2823,7 @@ GROUP BY event_type ORDER BY event_type NULLS FIRST""")),
           col("value"))
         def write(df: DataFrame, mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", s"$wh/wh/src")
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 =!= 1), "overwrite")
@@ -2837,13 +2834,12 @@ GROUP BY event_type ORDER BY event_type NULLS FIRST""")),
         write(base.filter(col("event_id") % 3 === 1), "append")
         val r1 = spark.sql(
           "CALL graftmvmk.system.refresh_mv(mv_table => 'wh.mv')").head
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM graftmvmk.wh.src WHERE event_id % 10 = 0")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM graftmvmk.wh.src WHERE event_id % 10 = 0")
+        }
         val r2 = spark.sql(
           "CALL graftmvmk.system.refresh_mv(mv_table => 'wh.mv')").head
-        spark.conf.set("graft.mv.rewrite", s"$wh/wh/mv")
-        try {
+        withConf(spark, "graft.mv.rewrite" -> s"$wh/wh/mv") {
           val q = spark.sql("""SELECT etype, par, count(*) AS n_rows,
             CAST(CAST(sum(CAST(value AS DECIMAL(30,6))) AS STRING)
               AS DOUBLE) AS sum_value,
@@ -2858,7 +2854,7 @@ GROUP BY event_type ORDER BY event_type NULLS FIRST""")),
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("etype"), col("par"))
             .pinned()
-        } finally spark.conf.unset("graft.mv.rewrite")
+        }
       },
       Some(s"""SELECT etype, par, CAST(count(*) AS BIGINT) AS n_rows,
   ${Exact.decSumSql("value", 6)} AS sum_value,
@@ -2900,7 +2896,7 @@ ORDER BY etype NULLS FIRST, par NULLS FIRST""")),
           col("value"))
         def write(df: DataFrame, mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", s"$wh/wh/src")
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 =!= 1), "overwrite")
@@ -2910,12 +2906,11 @@ ORDER BY etype NULLS FIRST, par NULLS FIRST""")),
           "minmax_col => 'event_id')")
         write(base.filter(col("event_id") % 3 === 1), "append")
         spark.sql("CALL graftmvra.system.refresh_mv(mv_table => 'wh.mv')")
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM graftmvra.wh.src WHERE event_id % 10 = 0")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM graftmvra.wh.src WHERE event_id % 10 = 0")
+        }
         spark.sql("CALL graftmvra.system.refresh_mv(mv_table => 'wh.mv')")
-        spark.conf.set("graft.mv.rewrite", s"$wh/wh/mv")
-        try {
+        withConf(spark, "graft.mv.rewrite" -> s"$wh/wh/mv") {
           val q = spark.sql("""SELECT etype, count(*) AS n_rows,
             CAST(CAST(sum(CAST(value AS DECIMAL(30,6))) AS STRING)
               AS DOUBLE) AS sum_value,
@@ -2930,7 +2925,7 @@ ORDER BY etype NULLS FIRST, par NULLS FIRST""")),
           q.withColumn("used_mv", lit(usedMv))
             .orderBy(col("etype"))
             .pinned()
-        } finally spark.conf.unset("graft.mv.rewrite")
+        }
       },
       Some(s"""SELECT etype, CAST(count(*) AS BIGINT) AS n_rows,
   ${Exact.decSumSql("value", 6)} AS sum_value,
@@ -2974,7 +2969,7 @@ ORDER BY etype NULLS FIRST""")),
           col("user_id"), col("value"))
         def write(df: DataFrame, mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", s"$wh/wh/src")
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 =!= 1), "overwrite")
@@ -2985,9 +2980,9 @@ ORDER BY etype NULLS FIRST""")),
         write(base.filter(col("event_id") % 3 === 1), "append")
         val r1 = spark.sql(
           "CALL graftmvnd.system.refresh_mv(mv_table => 'wh.mv')").head
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM graftmvnd.wh.src WHERE event_id % 10 = 0")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM graftmvnd.wh.src WHERE event_id % 10 = 0")
+        }
         val r2 = spark.sql(
           "CALL graftmvnd.system.refresh_mv(mv_table => 'wh.mv')").head
         // the adjudicators, MATERIALIZED before routing arms so the
@@ -2998,8 +2993,7 @@ ORDER BY etype NULLS FIRST""")),
             hll_sketch_estimate(hll_sketch_agg(user_id)) AS direct_est,
             count(DISTINCT user_id) AS ndv_exact
           FROM graftmvnd.wh.src GROUP BY etype""").pinned()
-        spark.conf.set("graft.mv.rewrite", s"$wh/wh/mv")
-        try {
+        withConf(spark, "graft.mv.rewrite" -> s"$wh/wh/mv") {
           val q = spark.sql("""SELECT etype, count(*) AS n_rows,
             CAST(CAST(sum(CAST(value AS DECIMAL(30,6))) AS STRING)
               AS DOUBLE) AS sum_value,
@@ -3021,7 +3015,7 @@ ORDER BY etype NULLS FIRST""")),
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("etype"))
             .pinned()
-        } finally spark.conf.unset("graft.mv.rewrite")
+        }
       },
       Some(s"""SELECT etype, CAST(count(*) AS BIGINT) AS n_rows,
   ${Exact.decSumSql("value", 6)} AS sum_value,
@@ -3059,7 +3053,7 @@ GROUP BY etype ORDER BY etype NULLS FIRST""")),
           .select(col("event_id"), col("ts"), col("value"))
         def write(df: DataFrame, mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
-            .write.format("graft.sources.ManifestSink")
+            .write.format("graft.sources.ManifestSource")
             .option("path", s"$wh/wh/src")
             .mode(mode).save()
         write(base.filter(col("event_id") % 3 =!= 1), "overwrite")
@@ -3070,13 +3064,12 @@ GROUP BY etype ORDER BY etype NULLS FIRST""")),
         write(base.filter(col("event_id") % 3 === 1), "append")
         val r1 = spark.sql(
           "CALL graftmtg.system.refresh_mv(mv_table => 'wh.mv')").head
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM graftmtg.wh.src WHERE event_id % 10 = 0")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM graftmtg.wh.src WHERE event_id % 10 = 0")
+        }
         val r2 = spark.sql(
           "CALL graftmtg.system.refresh_mv(mv_table => 'wh.mv')").head
-        spark.conf.set("graft.mv.rewrite", s"$wh/wh/mv")
-        try {
+        withConf(spark, "graft.mv.rewrite" -> s"$wh/wh/mv") {
           val q = spark.sql("""SELECT date_trunc('day', ts) AS day_ts,
             count(*) AS n_rows,
             CAST(CAST(sum(CAST(value AS DECIMAL(30,6))) AS STRING)
@@ -3093,7 +3086,7 @@ GROUP BY etype ORDER BY etype NULLS FIRST""")),
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("day_ts"))
             .pinned()
-        } finally spark.conf.unset("graft.mv.rewrite")
+        }
       },
       Some(s"""SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_ts,
   CAST(count(*) AS BIGINT) AS n_rows,
@@ -3123,7 +3116,7 @@ GROUP BY 1 ORDER BY day_ts""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("user_id"))
           .repartition(8)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t).option("splitBy", "event_type")
           .mode("overwrite").save()
         def planned(df: DataFrame): Int =
@@ -3346,15 +3339,14 @@ GROUP BY region, src ORDER BY region, src""")),
           "SELECT count(*) FROM graftde.wh.ev.files WHERE eq_clauses > 0")
           .head.getLong(0)
         val filesBefore = files()
-        spark.conf.set("graft.delete.mode", "eq")
         val (markedKey, markedBoth, noNewFiles) =
-          try {
+          withConf(spark, "graft.delete.mode" -> "eq") {
             spark.sql("DELETE FROM graftde.wh.ev WHERE event_id IN (5, 6)")
             val mk = markedParts()
             spark.sql(
               "DELETE FROM graftde.wh.ev WHERE event_type = 'error'")
             (mk, markedParts(), files() == filesBefore)
-          } finally spark.conf.unset("graft.delete.mode")
+          }
         def countPlan(): (Long, Boolean) = {
           val q = spark.sql("SELECT count(*) FROM graftde.wh.ev")
           (q.head.getLong(0),
@@ -3442,9 +3434,9 @@ WHERE event_id NOT IN (5, 6) AND event_type <> 'error'""")),
         val filesBefore = files()
         val verBefore = spark.sql(
           "SELECT count(*) FROM graftder.wh.ev.history").head.getLong(0)
-        spark.conf.set("graft.delete.mode", "eq")
-        try spark.sql(s"DELETE FROM graftder.wh.ev WHERE ts < $cutoff")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "eq") {
+          spark.sql(s"DELETE FROM graftder.wh.ev WHERE ts < $cutoff")
+        }
         val filesAfter = files()
         val marked = spark.sql("SELECT count(*) FROM " +
           "graftder.wh.ev.files WHERE eq_clauses > 0").head.getLong(0)
@@ -3554,9 +3546,9 @@ WHERE event_id >= (SELECT (max(event_id) * 6) // 10 FROM events)""")),
           s"SELECT event_id FROM graftbl.wh.docs_nb WHERE url = '$target'")
         // delete the target row (MOR vector: bloom untouched, now a
         // stale superset), then rebuild blooms over visible rows
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM graftbl.wh.docs WHERE event_id = 42")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM graftbl.wh.docs WHERE event_id = 42")
+        }
         val pStale = planned(
           s"SELECT event_id FROM graftbl.wh.docs WHERE url = '$target'")
         spark.sql("CALL graftbl.system.analyze(table => 'wh.docs', " +
@@ -3607,9 +3599,9 @@ WHERE event_id >= (SELECT (max(event_id) * 6) // 10 FROM events)""")),
           .createOrReplaceTempView("graft_metap_src")
         spark.sql("INSERT INTO graftmp.wh.ev " +
           "SELECT event_id, event_type, user_id FROM graft_metap_src")
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM graftmp.wh.ev WHERE event_id % 10 = 0")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM graftmp.wh.ev WHERE event_id % 10 = 0")
+        }
         spark.sql("""SELECT partition AS part_id, spec, parts, n_rows,
             visible_rows, key_min, key_max, dv_parts
           FROM graftmp.wh.ev.partitions ORDER BY part_id""")
@@ -3918,7 +3910,7 @@ FROM cur GROUP BY etype ORDER BY etype""")),
             col("o_orderpriority").as("prio"),
             col("o_totalprice").as("price"))
           .repartitionByRange(4, col("k"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ord")
           .mode("overwrite").save()
         Tables.lineitem(spark, dir)
@@ -4165,7 +4157,7 @@ FROM orders WHERE o_orderkey % 7 = 0""")),
           col("o_orderkey").as("k"), col("o_totalprice").as("price"))
         base.filter(col("k") % 2 === 0)
           .repartitionByRange(4, col("k"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/wh/ord_t")
           .mode("overwrite").save()
         base.filter(col("k") % 3 === 0)
@@ -4240,7 +4232,7 @@ FROM merged""")),
         writeHistory(base.filter(col("event_id") % 4 === 0), t, "overwrite")
         // stage the fix on its branch — fork at main v1
         base.filter(col("event_id") % 4 === 1).repartition(4)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .option("branch", "fix").mode("append").save()
         // main advances with an interleaved, disjoint commit
@@ -4573,7 +4565,7 @@ FROM orders ORDER BY k""")),
         writeHistory(base.filter(col("event_id") % 2 === 0), t, "overwrite")
         writeHistory(base.filter(col("event_id") % 2 =!= 0), t, "append")
         base.filter(col("event_id") % 10 === 0).repartition(2)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .option("branch", "audit").mode("append").save()
         spark.sql("CALL graftmr.system.tag(table => 'wh.ev_t', " +
@@ -4626,7 +4618,7 @@ ORDER BY type, name""")),
           .select(col("event_id"), col("value")), tb, "overwrite")
         def stage(df: DataFrame, t: String,
             branch: String = "txn-epoch7"): Unit = df.repartition(2)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", t)
           .option("branch", branch).mode("append").save()
         stage(ev.filter(col("event_id") % 2 =!= 0), ta)
@@ -4721,11 +4713,11 @@ ORDER BY type, name""")),
         val fkLocalAppend = r1.getInt(2) > 0 && r1.getInt(3) == 0
         // fact MOR DELETE → the re-vectored parts restate through the
         // same join (minus the old state, plus the masked read)
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql(
-          "DELETE FROM gmvj.ns.fact WHERE event_id % 7 = 0 " +
-            "AND value IS NOT NULL")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql(
+            "DELETE FROM gmvj.ns.fact WHERE event_id % 7 = 0 " +
+              "AND value IS NOT NULL")
+        }
         val r2 = spark.sql(
           "CALL gmvj.system.refresh_mv(mv_table => 'ns.mv')").head
         val deleteRestated = r2.getInt(3) > 0
@@ -4736,16 +4728,16 @@ ORDER BY type, name""")),
           "AS DOUBLE) AS sum_v " +
           "FROM gmvj.ns.fact f JOIN gmvj.ns.dim d ON f.fk = d.dk " +
           "GROUP BY grp"
-        spark.conf.set("graft.mv.rewrite", s"$wh/ns/mv")
-        val (routedDf, routed) = try {
-          val r = spark.sql(q)
-          val plan = r.queryExecution.optimizedPlan
-          (r, !plan.exists(_.isInstanceOf[
-              org.apache.spark.sql.catalyst.plans.logical.Join]) &&
-            !plan.exists(_.isInstanceOf[
-              org.apache.spark.sql.catalyst.plans.logical.Aggregate]) &&
-            graft.sources.MvRewrite.readsManifestDir(plan, s"$wh/ns/mv"))
-        } finally spark.conf.unset("graft.mv.rewrite")
+        val (routedDf, routed) =
+          withConf(spark, "graft.mv.rewrite" -> s"$wh/ns/mv") {
+            val r = spark.sql(q)
+            val plan = r.queryExecution.optimizedPlan
+            (r, !plan.exists(_.isInstanceOf[
+                org.apache.spark.sql.catalyst.plans.logical.Join]) &&
+              !plan.exists(_.isInstanceOf[
+                org.apache.spark.sql.catalyst.plans.logical.Aggregate]) &&
+              graft.sources.MvRewrite.readsManifestDir(plan, s"$wh/ns/mv"))
+          }
         routedDf
           .withColumn("routed", lit(routed))
           .withColumn("fk_local_append", lit(fkLocalAppend))
@@ -4783,17 +4775,17 @@ GROUP BY n.n_name ORDER BY n.n_name""")),
             col("value"))
         (0 until 4).foreach { i =>
           ev.filter(col("k") >= i * 250L && col("k") < (i + 1) * 250L)
-            .coalesce(1).write.format("graft.sources.ManifestSink")
+            .coalesce(1).write.format("graft.sources.ManifestSource")
             .option("path", t)
             .mode(if (i == 0) "overwrite" else "append").save()
         }
-        spark.conf.set("graft.delete.mode", "mor")
-        try spark.sql("DELETE FROM gsmq.ns.m " +
-          "WHERE k >= 300 AND k < 350 AND s IS NOT NULL")
-        finally spark.conf.unset("graft.delete.mode")
-        spark.conf.set("graft.delete.mode", "eq")
-        try spark.sql("DELETE FROM gsmq.ns.m WHERE k IN (10, 20, 30)")
-        finally spark.conf.unset("graft.delete.mode")
+        withConf(spark, "graft.delete.mode" -> "mor") {
+          spark.sql("DELETE FROM gsmq.ns.m " +
+            "WHERE k >= 300 AND k < 350 AND s IS NOT NULL")
+        }
+        withConf(spark, "graft.delete.mode" -> "eq") {
+          spark.sql("DELETE FROM gsmq.ns.m WHERE k IN (10, 20, 30)")
+        }
         def metricsOf(df: DataFrame): Map[String, Long] = {
           df.collect()
           df.queryExecution.executedPlan.collect {
@@ -4854,14 +4846,14 @@ GROUP BY n.n_name ORDER BY n.n_name""")),
         Tables.events(spark, dir)
           .select(col("event_id").as("k"), col("value"))
           .repartitionByRange(8, col("k"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/ns/fact")
           .mode("overwrite").save()
         Tables.orders(spark, dir)
           .select((col("o_orderkey") % 2000).as("dk"),
             col("o_totalprice"))
           .repartition(4)
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/ns/dim")
           .mode("overwrite").save()
         val factBytes = spark.sql(
@@ -5055,7 +5047,7 @@ FROM events ORDER BY k LIMIT 10""")),
         Tables.events(spark, dir)
           .select(col("event_id").as("k"), col("event_type"), col("value"))
           .repartitionByRange(8, col("k"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/ns/t")
           .mode("overwrite").save()
         val bytes = spark.sql(
@@ -5176,7 +5168,7 @@ WHERE event_id % 2 <> 0 ORDER BY event_id""")),
                 Seq(silver, audit))
               def stage(df: DataFrame, t: String): Unit = df
                 .repartition(2).write
-                .format("graft.sources.ManifestSink")
+                .format("graft.sources.ManifestSource")
                 .option("path", t)
                 .option("branch", s"txn-$id").mode("append").save()
               stage(batch, silver)
@@ -5242,7 +5234,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
           .select(col("event_id"), col("event_type"),
             (col("user_id") % 4).as("par"), col("value"))
           .repartitionByRange(4, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/ns/ev")
           .mode("overwrite").save()
         spark.sql("CALL gmrr.system.create_mv(mv_table => 'ns.mv', " +
@@ -5256,8 +5248,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
         def readsMv(df: DataFrame): Boolean =
           graft.sources.MvRewrite.readsManifestDir(
             df.queryExecution.optimizedPlan, s"$wh/ns/mv")
-        spark.conf.set("graft.mv.rewrite", s"$wh/ns/mv")
-        try {
+        withConf(spark, "graft.mv.rewrite" -> s"$wh/ns/mv") {
           val drill = q("WHERE event_type IN ('click', 'view')")
           val routed = readsMv(drill)
           val nonkeyDeclines =
@@ -5271,7 +5262,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
             .withColumn("nonkey_declines", lit(nonkeyDeclines))
             .orderBy(col("par"))
             .pinned()
-        } finally spark.conf.unset("graft.mv.rewrite")
+        }
       },
       Some(s"""SELECT user_id % 4 AS par, CAST(count(*) AS BIGINT) AS n,
   ${Exact.decSumSql("value", 6)} AS sum_v,
@@ -5300,7 +5291,7 @@ GROUP BY user_id % 4 ORDER BY par""")),
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(4, col("event_id"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$wh/ns/ev")
           .mode("overwrite").save()
         spark.sql("CALL gmrf.system.create_mv(mv_table => 'ns.mv', " +
@@ -5314,8 +5305,7 @@ GROUP BY user_id % 4 ORDER BY par""")),
         def aggregates(df: DataFrame): Boolean =
           df.queryExecution.optimizedPlan.exists(_.isInstanceOf[
             org.apache.spark.sql.catalyst.plans.logical.Aggregate])
-        spark.conf.set("graft.mv.rewrite", s"$wh/ns/mv")
-        try {
+        withConf(spark, "graft.mv.rewrite" -> s"$wh/ns/mv") {
           val keyed = q("WHERE event_type IN ('click', 'view')")
           val routed = !aggregates(keyed) &&
             graft.sources.MvRewrite.readsManifestDir(
@@ -5330,7 +5320,7 @@ GROUP BY user_id % 4 ORDER BY par""")),
             .withColumn("nonkey_declines", lit(nonkeyDeclines))
             .orderBy(col("event_type"))
             .pinned()
-        } finally spark.conf.unset("graft.mv.rewrite")
+        }
       },
       Some(s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n,
   ${Exact.decSumSql("value", 6)} AS sum_v,

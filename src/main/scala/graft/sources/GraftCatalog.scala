@@ -161,7 +161,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   override def name(): String = catalogName
 
   /** CHECK constraints are a first-class table change (see
-    * [[GraftCatalogTable.constraints]]). */
+    * [[GraftTable.constraints]]). */
   override def capabilities(): util.Set[TableCatalogCapability] =
     Set(TableCatalogCapability.SUPPORT_TABLE_CONSTRAINT,
       TableCatalogCapability.SUPPORT_COLUMN_DEFAULT_VALUE,
@@ -193,66 +193,21 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       .toArray
   }
 
-  override def loadTable(ident: Identifier): Table = {
-    val p = tablePath(ident)
-    val head = ManifestLog(conf, p).snapshot().header
-    head.schemaCm match {
-      case Some((schema, cm)) =>
-        // re-attach COLUMN DEFAULTS as the field-metadata pair Spark's
-        // default resolution consumes (the DDL codec stores the schema
-        // clean; the pair lives on the snapshot's colmap header)
-        val withDefaults =
-          if (cm.defaults.isEmpty) schema
-          else StructType(schema.fields.zipWithIndex.map { case (f, i) =>
-            val id = cm.ids.lift(i).getOrElse(i)
-            cm.defaults.get(id) match {
-              case Some((cur, ex)) =>
-                val b = new org.apache.spark.sql.types.MetadataBuilder()
-                  .withMetadata(f.metadata)
-                if (cur.nonEmpty) b.putString("CURRENT_DEFAULT", cur)
-                if (ex.nonEmpty) b.putString("EXISTS_DEFAULT", ex)
-                f.copy(metadata = b.build())
-              case None => f
-            }
-          })
-        val table = head.table
-        // identity spec re-attaches as field metadata so DESCRIBE and
-        // write-side validation see it (the DDL codec stores schemas
-        // clean; the table record's props are the spec's canonical
-        // store)
-        val loaded = ManifestIdentity.parse(table.props) match {
-          case Some(s) => StructType(withDefaults.fields.map { f =>
-            if (f.name != s.col) f
-            else f.copy(metadata =
-              new org.apache.spark.sql.types.MetadataBuilder()
-                .withMetadata(f.metadata)
-                .putLong(ManifestIdentity.MetaStart, s.start)
-                .putLong(ManifestIdentity.MetaStep, s.step)
-                .putBoolean(ManifestIdentity.MetaAllow, s.allowExplicit)
-                .build())
-          })
-          case None => withDefaults
-        }
-        // split tables expose SHOW PARTITIONS / ALTER TABLE DROP
-        // PARTITION (partition values ARE manifest metadata there —
-        // see [[GraftPartitionedCatalogTable]])
-        GraftPartitionedCatalogTable.of(ident, p, loaded, table)
-          .getOrElse(new GraftCatalogTable(ident, p, loaded, table))
-      case None =>
-        // METADATA TABLES (the Iceberg `db.table.history` shape):
-        // `SELECT * FROM cat.ns.t.history|files|branches` parses as
-        // namespace (ns, t) + the metadata name — if the parent IS a
-        // table, serve the requested metadata relation. Pure
-        // metadata: each reads version manifests (KBs), never data
-        // files.
-        if (ident.namespace().nonEmpty) {
-          val parent = (warehouse +: ident.namespace()).mkString("/")
-          if (isTable(parent))
-            MetaTables.forName(parent, ident.name()).foreach(t => return t)
-        }
-        throw new NoSuchTableException(ident)
+  override def loadTable(ident: Identifier): Table =
+    GraftTable(Some(ident), tablePath(ident)).getOrElse {
+      // METADATA TABLES (the Iceberg `db.table.history` shape):
+      // `SELECT * FROM cat.ns.t.history|files|branches` parses as
+      // namespace (ns, t) + the metadata name — if the parent IS a
+      // table, serve the requested metadata relation. Pure
+      // metadata: each reads version manifests (KBs), never data
+      // files.
+      if (ident.namespace().nonEmpty) {
+        val parent = (warehouse +: ident.namespace()).mkString("/")
+        if (isTable(parent))
+          MetaTables.forName(parent, ident.name()).foreach(t => return t)
+      }
+      throw new NoSuchTableException(ident)
     }
-  }
 
   /** SQL time travel: `SELECT … FROM graftcat.ns.t VERSION AS OF 2`
     * resolves the immutable snapshot manifest — schema AND part list
@@ -261,7 +216,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * `VERSION AS OF 'audit'` resolves a live BRANCH to its staged
     * head — the pure-SQL audit read of write-audit-publish (same
     * answer as `option("branch", ...)`, no DataFrame API needed).
-    * Returns the read-only table (history is not writable). */
+    * A pinned version is read-only (history is not writable). */
   override def loadTable(ident: Identifier, version: String): Table = {
     val log = ManifestLog(conf, tablePath(ident))
     val ref = try Ref.At(version.toInt) catch {
@@ -273,20 +228,14 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             s"branch of $ident (tags: ${log.tags.keys.mkString(", ")}; " +
             s"branches: ${log.branches.mkString(", ")})")
     }
-    readTable(ident, log, ref)
+    timeTravel(ident, ref)
   }
 
-  /** The read-only table of one resolved snapshot (history is not
-    * writable). */
-  private def readTable(ident: Identifier, log: ManifestLog, ref: Ref): Table = {
-    val snap = log.snapshot(ref)
-    val schema = snap.schema.getOrElse(throw new NoSuchTableException(ident))
-    ref match {
-      case Ref.Branch(b, _) => new ManifestReadTable(log.dir, schema, None,
-        branch = Some(b))
-      case _ => new ManifestReadTable(log.dir, schema, Some(snap.version))
-    }
-  }
+  /** The table of one resolved snapshot: read-only at a pinned
+    * version, the branch line at a branch head. */
+  private def timeTravel(ident: Identifier, ref: Ref): Table =
+    GraftTable(Some(ident), tablePath(ident), ref)
+      .getOrElse(throw new NoSuchTableException(ident))
 
   /** SQL time travel by TIME: `… TIMESTAMP AS OF '2026-01-01 00:00:00'`
     * resolves the newest snapshot committed at or before the instant
@@ -295,8 +244,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * instant older than the first commit fails loudly rather than
     * serving an empty table. Spark hands micros since epoch. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table =
-    readTable(ident, ManifestLog(conf, tablePath(ident)),
-      Ref.AsOf(timestampMicros / 1000L))
+    timeTravel(ident, Ref.AsOf(timestampMicros / 1000L))
 
   /** The v2 `Column[]` create path: Spark delivers identity specs as
     * first-class [[Column]] attributes (NOT re-encoded into field
@@ -1132,7 +1080,7 @@ private[sources] object H64Function extends UnboundFunction {
   * (hash buckets, an identity or days/hours split, or a write order),
   * and [[check]] is the one place it is validated against a schema —
   * for CREATE / CTAS / RTAS, ALTER … CLUSTER BY, `set_layout` and the
-  * path sink's `buckets` / `splitBy` / `clusterBy` options alike. The
+  * path write's `buckets` / `splitBy` / `clusterBy` options alike. The
   * spellings only parse into a spec; every write then plans from it
   * ([[ManifestSink.writePlan]]). */
 private[sources] object TableLayout {
@@ -1232,10 +1180,17 @@ private[sources] object TableLayout {
   }
 }
 
-/** A catalog-loaded manifest table: batch read (full pushdown
-  * surface), streaming read (snapshot offsets), versioned batch
-  * write (INSERT INTO appends a snapshot; INSERT OVERWRITE is a
-  * logical truncate commit), and METADATA-ONLY `DELETE FROM`.
+/** THE MANIFEST TABLE — the one `Table` over a version log, whichever
+  * way it was reached: the catalog (`cat.ns.t`, time travel included)
+  * or a path ([[ManifestSource]]'s `read`, `readStream` and `write`).
+  * Built by [[GraftTable.apply]] from one snapshot, it serves batch
+  * reads (full pushdown surface), streaming reads (snapshot offsets),
+  * versioned batch and streaming writes (INSERT INTO / `append`
+  * publish a snapshot; INSERT OVERWRITE / `overwrite` is a logical
+  * truncate commit), row-level DML and METADATA-ONLY `DELETE FROM`.
+  * Every write obeys the snapshot's [[TableRecord]]: its layout, its
+  * identity and generated columns, its bloom columns and its CHECK
+  * constraints, so a path write lands exactly like an INSERT.
   *
   * DELETE accepts a predicate only when every part is DECIDABLE from
   * manifest stats alone — provably all-match (part's [min, max] lies
@@ -1249,20 +1204,40 @@ private[sources] object TableLayout {
   * a copy-on-write rewrite is the documented escalation a row-level
   * delete would take. On a range-partitioned layout (each part owns a
   * disjoint key range) retention deletes are decidable by
-  * construction — CatalogSpec pins both paths. */
-private[sources] class GraftCatalogTable(
-    ident: Identifier, path: String, tableSchema: StructType,
-    table: TableRecord)
+  * construction — CatalogSpec pins both paths.
+  *
+  * `ident` is the catalog identifier (None for a path): only a catalog
+  * resolves the `bucket`/`days`/`hours` transforms a write
+  * distribution names. `ref` is the snapshot read: the main head, a
+  * branch head, or a pinned version; a pinned version and a change
+  * feed (`cdf`) are read-only. */
+private[sources] class GraftTable(
+    ident: Option[Identifier], path: String, tableSchema: StructType,
+    table: TableRecord, ref: Ref, cdf: Boolean)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with TruncatableTable {
 
-  /** The head-read table dir [[MvRewrite]] resolves — catalog TIME
-    * TRAVEL loads a [[ManifestReadTable]] instead, so this class
-    * always means "head". */
+  /** The table directory, for [[MvRewrite.readsManifestDir]]. */
   private[sources] def tableDir: String = path
+
+  /** The table dir when a relation over this table reads the plain
+    * MAIN head — no time travel, change feed, branch or stream start —
+    * the only read shape [[MvRewrite]] may substitute before scan
+    * planning. */
+  private[sources] def headDir(options: CaseInsensitiveStringMap): Option[String] =
+    if (ref == Ref.Head && !cdf &&
+        Seq("branch", "startingVersion").forall(k =>
+          Option(options.get(k)).forall(_.isEmpty))) Some(path)
+    else None
+
+  /** Writes land on a head: the main head or a branch's. */
+  private def writable: Boolean = !cdf && (ref match {
+    case Ref.Head | Ref.Branch(_, None) => true
+    case _ => false
+  })
 
   /** SQL `TRUNCATE TABLE` — a LOGICAL truncate: one empty-part-list
     * snapshot (same schema), so pre-truncate versions stay
@@ -1279,9 +1254,10 @@ private[sources] class GraftCatalogTable(
   /** `_part`/`_pos` — physical row address (see [[PartMetaColumn]],
     * [[PosMetaColumn]]); `_part` is also the group identity the
     * row-level rewrites require, and (`_part`, `_pos`) is what the
-    * merge-on-read DELETE builds its deletion vectors from. */
+    * merge-on-read DELETE builds its deletion vectors from. A change
+    * feed's schema carries its own metadata columns instead. */
   override def metadataColumns(): Array[MetadataColumn] =
-    Array(PartMetaColumn, PosMetaColumn)
+    if (cdf) Array.empty else Array(PartMetaColumn, PosMetaColumn)
 
   /** SQL UPDATE / MERGE INTO / every DELETE not answered from
     * metadata land here as group-based copy-on-write rewrites
@@ -1376,7 +1352,14 @@ private[sources] class GraftCatalogTable(
       HeaderChange.Keep, op = "delete")
   }
 
-  override def name(): String = ident.toString
+  override def name(): String = ident.fold {
+    val at = ref match {
+      case Ref.At(v) => s"@v$v"
+      case Ref.Branch(b, v) => s"@$b" + v.fold("")(n => s"@v$n")
+      case _ => ""
+    }
+    s"manifest($path$at${if (cdf) "@changes" else ""})"
+  }(_.toString)
   override def schema(): StructType = tableSchema
 
   /** Stored TBLPROPERTIES (`SHOW TBLPROPERTIES` / `DESCRIBE EXTENDED`
@@ -1389,22 +1372,29 @@ private[sources] class GraftCatalogTable(
   // funnels the source's new columns through this catalog's OWN
   // alterTable (AddColumn at end, fresh field id, metadata-only) —
   // no parallel evolution path exists
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
-      TableCapability.TRUNCATE,
-      TableCapability.OVERWRITE_BY_FILTER,
-      TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
+  override def capabilities(): util.Set[TableCapability] = {
+    val read = Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+    (if (!writable) read
+     else read ++ Set(TableCapability.BATCH_WRITE,
+       TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE,
+       TableCapability.OVERWRITE_BY_FILTER,
+       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)).asJava
+  }
 
-  /** `spark.read.option("branch", "audit").table(...)` reads the
-    * branch head — the audit-side read of write-audit-publish. */
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  /** The scan of this table's snapshot; on a main-head table
+    * `option("branch", "audit")` reads the branch head — the
+    * audit-side read of write-audit-publish. */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val conf = ManifestSink.driverConf()
     new ManifestScanBuilder(path, tableSchema,
-      new SerializableConfiguration(ManifestSink.driverConf()), None,
-      startingVersion = StreamOptions.resolveStarting(options,
-        ManifestSink.driverConf(), path),
-      branch = Option(options.get("branch")).filter(_.nonEmpty),
+      new SerializableConfiguration(conf),
+      if (ref == Ref.Head)
+        Ref.of(None, Option(options.get("branch")).filter(_.nonEmpty))
+      else ref,
+      cdf,
+      startingVersion = StreamOptions.resolveStarting(options, conf, path),
       maxPartsPerTrigger = StreamOptions.maxPartsPerTrigger(options))
+  }
 
   /** Bucketed / identity-partitioned tables advertise their layout
     * (bucket count 0 encodes the identity split spec). */
@@ -1414,12 +1404,12 @@ private[sources] class GraftCatalogTable(
       case (n, c) => expressions.Expressions.bucket(n, c)
     }.toArray
 
-  /** The head record's CHECK constraints, reported ENFORCED — Spark's
-    * ResolveTableConstraints wraps every write to this table in a
-    * CheckInvariant over these predicates, so a violating INSERT /
-    * UPDATE / MERGE fails before any part commits. VALID because
-    * ALTER TABLE ADD CONSTRAINT validated the existing rows before
-    * the constraint was committed. */
+  /** The record's CHECK constraints, reported ENFORCED — Spark's
+    * ResolveTableConstraints wraps every write to this table (INSERT,
+    * UPDATE, MERGE and path writes alike) in a CheckInvariant over
+    * these predicates, so a violating write fails before any part
+    * commits. VALID because ALTER TABLE ADD CONSTRAINT validated the
+    * existing rows before the constraint was committed. */
   override def constraints():
       Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
     table.constraints.map { case (n, sql) =>
@@ -1431,16 +1421,6 @@ private[sources] class GraftCatalogTable(
         : org.apache.spark.sql.connector.catalog.constraints.Constraint
     }.toArray
 
-  /** `df.writeTo(...).option("branch", "audit").append()` stages the
-    * commit on the branch — invisible to main readers until
-    * [[ManifestMaintenance.fastForward]] publishes it. On a BUCKETED
-    * table every write additionally (a) requires a distribution
-    * clustered by `bucket(n, col)` — resolved through this catalog's
-    * own function, so Spark plans one exchange that co-locates each
-    * bucket's rows in one task and the writer emits ~one file per
-    * bucket — and (b) routes rows through the layout writer, which
-    * records the bucket ordinals the SPJ-reporting scan needs. Layout
-    * policy lives with the table; writers stay ignorant. */
   /** Identity-column spec parsed once from the record's props —
     * the write side generates values (see [[ManifestIdentity]]). */
   private val identitySpec: Option[ManifestIdentity.Spec] =
@@ -1452,9 +1432,52 @@ private[sources] class GraftCatalogTable(
   private val generatedSpecs: Seq[(String, String)] =
     ManifestGenerated.parse(table.props)
 
-  /** INSERT INTO / OVERWRITE / REPLACE WHERE ([[ManifestWriteBuilder]])
-    * and streaming appends, planned from the table's layout. */
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+  /** The layout and exchange width a path write plans: the record's
+    * layout, or — on a table that records none — the write's own
+    * spelling of one: `buckets` hashes the first BIGINT column,
+    * `splitBy` splits by value, `clusterBy` orders the write;
+    * `writePartitions` fixes the width. An option that disagrees with
+    * a recorded layout is refused: the record owns row placement. */
+  private def pathSpec(options: CaseInsensitiveStringMap,
+      schema: StructType): (TableSpec, Option[Int]) = {
+    def opt(k: String) = Option(options.get(k)).filter(_.nonEmpty)
+    val layouts =
+      opt("buckets").map(n => TableLayout.bucket(n.toInt, schema.fields
+        .find(_.dataType == LongType).fold("")(_.name))).toSeq ++
+        opt("splitBy").map(c => TableSpec(Some((0, c)))) ++
+        opt("clusterBy").map(c => TableSpec(orderBy = Some(c)))
+    require(layouts.length <= 1,
+      "options 'buckets', 'clusterBy' and 'splitBy' are mutually " +
+        "exclusive (hash-bucketed vs range-clustered vs " +
+        "identity-partitioned layout)")
+    val spec = layouts.headOption.map(TableLayout.check(_, schema)) match {
+      case Some(s) if table.spec != TableSpec() && s != table.spec =>
+        throw new IllegalArgumentException(s"${name()} records the " +
+          s"layout ${table.spec}; the write's layout option asks for $s " +
+          "— drop the option, or change the layout with CALL set_layout")
+      case s => s.getOrElse(table.spec)
+    }
+    (spec, opt("writePartitions").map(_.toInt))
+  }
+
+  /** `df.writeTo(...).option("branch", "audit").append()` (or a path
+    * write with the option) stages the commit on the branch —
+    * invisible to main readers until
+    * [[ManifestMaintenance.fastForward]] publishes it. Every write
+    * plans from the layout ([[pathSpec]] on a path): a bucketed
+    * catalog table (a) requires a distribution clustered by
+    * `bucket(n, col)` —
+    * resolved through the catalog's own function, so Spark plans one
+    * exchange that co-locates each bucket's rows in one task and the
+    * writer emits ~one file per bucket — and (b) routes rows through
+    * the layout writer, which records the bucket ordinals the
+    * SPJ-reporting scan needs; a path has no function catalog, so it
+    * routes without the exchange. INSERT INTO / OVERWRITE / REPLACE
+    * WHERE arrive through [[ManifestWriteBuilder]], streaming appends
+    * through [[ManifestStreamingWrite]]. */
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val (spec, width) = ident.fold(pathSpec(info.options, info.schema()))(
+      _ => (table.spec, None))
     new ManifestWriteBuilder((doTruncate, replaceFilters) => {
       val branch = Option(info.options.get("branch")).filter(_.nonEmpty)
       val sconf = new SerializableConfiguration(ManifestSink.driverConf())
@@ -1493,16 +1516,76 @@ private[sources] class GraftCatalogTable(
             "marker to carry the issued range); generate ids in " +
             "foreachBatch or write to a staging table")
         new ManifestStreamingWrite(path, info.schema(), info.queryId(),
-          sconf, table.spec)
+          sconf, spec)
       }
-      // the catalog resolves bucket()/days()/hours(), so every
-      // layout plans its one-exchange distribution here
-      ManifestSink.writePlan(table.spec, resolvesTransforms = true)(
+      ManifestSink.writePlan(spec, resolvesTransforms = ident.isDefined,
+        width)(
         () => new ManifestBatchWrite(path, info.schema(), doTruncate,
-          sconf, branch, table.spec, replaceFilters = replaceFilters,
+          sconf, branch, spec, replaceFilters = replaceFilters,
           identity = identitySpec, generated = genFills),
         () => streaming())
     })
+  }
+}
+
+private[sources] object GraftTable {
+  /** THE TABLE FACTORY: the table `ref` names in the log at `dir`,
+    * built from one [[Snapshot]] — its record, and its schema unless
+    * the caller states one (a path write states the DataFrame's, a
+    * path read the schema it inferred). A change feed widens the
+    * snapshot's schema with the change columns. None when neither
+    * gives a schema: no table is committed there. The schema carries
+    * the snapshot's column defaults (`CURRENT_DEFAULT` /
+    * `EXISTS_DEFAULT`, which Spark's default resolution reads) and
+    * identity spec (which DESCRIBE and write validation read) as
+    * field metadata; the DDL codec stores schemas clean, the column
+    * mapping and the record's props being their canonical store.
+    * Split tables get the partition-management face
+    * ([[GraftPartitionedTable]]). */
+  def apply(ident: Option[Identifier], dir: String, ref: Ref = Ref.Head,
+      cdf: Boolean = false,
+      schema: Option[StructType] = None): Option[GraftTable] = {
+    require(!cdf || !ref.isInstanceOf[Ref.Branch],
+      "the change feed follows the MAIN snapshot line; 'branch' and " +
+        "'changeFeed' are mutually exclusive")
+    val snap = ManifestLog(ManifestSink.driverConf(), dir).snapshot(ref)
+    val table = snap.header.table
+    // a tag or an instant resolves to the version it names
+    val read = ref match {
+      case Ref.Tag(_) | Ref.AsOf(_) => Ref.At(snap.version)
+      case r => r
+    }
+    schema.orElse(snap.schema.map(s =>
+      if (cdf) StructType(s.fields ++ ManifestCdf.MetaFields) else s))
+      .map { s =>
+        val loaded = decorate(s, snap.header)
+        GraftPartitionedTable.of(ident, dir, loaded, table)
+          .filter(_ => read == Ref.Head && !cdf)
+          .getOrElse(new GraftTable(ident, dir, loaded, table, read, cdf))
+      }
+  }
+
+  private def decorate(schema: StructType, head: ManifestHeader): StructType = {
+    val defaults = head.schemaCm.fold(Map.empty[String, (String, String)]) {
+      case (s, cm) => s.fieldNames.zip(cm.ids)
+        .flatMap { case (n, id) => cm.defaults.get(id).map(n -> _) }.toMap
+    }
+    val identity = ManifestIdentity.parse(head.table.props)
+    StructType(schema.fields.map { f =>
+      val b = new org.apache.spark.sql.types.MetadataBuilder()
+        .withMetadata(f.metadata)
+      defaults.get(f.name).foreach { case (cur, ex) =>
+        if (cur.nonEmpty) b.putString("CURRENT_DEFAULT", cur)
+        if (ex.nonEmpty) b.putString("EXISTS_DEFAULT", ex)
+      }
+      identity.filter(_.col == f.name).foreach { s =>
+        b.putLong(ManifestIdentity.MetaStart, s.start)
+        b.putLong(ManifestIdentity.MetaStep, s.step)
+        b.putBoolean(ManifestIdentity.MetaAllow, s.allowExplicit)
+      }
+      f.copy(metadata = b.build())
+    })
+  }
 }
 
 /** Split tables with Spark's PARTITION MANAGEMENT surface, one class
@@ -1530,12 +1613,12 @@ private[sources] class GraftCatalogTable(
   * migrates the layout) rather than half-applying. Partitions are
   * derived from data by design — INSERT rows instead of creating
   * them. */
-private[sources] class GraftPartitionedCatalogTable[V: Ordering](
-    ident: Identifier, path: String, tableSchema: StructType,
+private[sources] class GraftPartitionedTable[V: Ordering](
+    ident: Option[Identifier], path: String, tableSchema: StructType,
     table: TableRecord, valueOf: PartMeta => Option[V],
-    codec: GraftPartitionedCatalogTable.Codec[V],
+    codec: GraftPartitionedTable.Codec[V],
     mayHold: (PartMeta, V) => Boolean)
-    extends GraftCatalogTable(ident, path, tableSchema, table)
+    extends GraftTable(ident, path, tableSchema, table, Ref.Head, cdf = false)
     with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
 
   private def conf = ManifestSink.driverConf()
@@ -1591,7 +1674,7 @@ private[sources] class GraftPartitionedCatalogTable[V: Ordering](
     java.util.Collections.emptyMap[String, String]()
 }
 
-private[sources] object GraftPartitionedCatalogTable {
+private[sources] object GraftPartitionedTable {
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
   import org.apache.spark.unsafe.types.UTF8String
 
@@ -1603,8 +1686,8 @@ private[sources] object GraftPartitionedCatalogTable {
 
   /** The partition-management face of a split layout, None for every
     * other layout. */
-  def of(ident: Identifier, path: String, schema: StructType,
-      table: TableRecord): Option[GraftCatalogTable] =
+  def of(ident: Option[Identifier], path: String, schema: StructType,
+      table: TableRecord): Option[GraftTable] =
     table.spec.layout.collect { case (0, splitCol) =>
       val field = schema.fields.find(_.name.equalsIgnoreCase(splitCol))
         .getOrElse(throw new IllegalStateException(
@@ -1618,7 +1701,7 @@ private[sources] object GraftPartitionedCatalogTable {
             else StructField(s"${field.name}_hour", LongType, nullable = false),
             d => row(if (isDays) d.toInt else d),
             id => if (isDays) id.getInt(0).toLong else id.getLong(0))
-          new GraftPartitionedCatalogTable[Long](ident, path, schema, table,
+          new GraftPartitionedTable[Long](ident, path, schema, table,
             m => if (m.rows > 0)
               TimeSplit.partOrdinal(m.cstats.get(field.name), m.rows, tf)
             else None,
@@ -1632,7 +1715,7 @@ private[sources] object GraftPartitionedCatalogTable {
             raw => row(if (isLong) raw.toLong else UTF8String.fromString(raw)),
             id => if (isLong) id.getLong(0).toString
               else id.getUTF8String(0).toString)
-          new GraftPartitionedCatalogTable[String](ident, path, schema, table,
+          new GraftPartitionedTable[String](ident, path, schema, table,
             MetaTables.singleValue(_, field.name), codec,
             // stats get a veto; an untracked column cannot exonerate
             (m, want) => m.cstats.get(field.name) match {

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-/** Table-maintenance operations over a [[ManifestSink]] table — the
+/** Table-maintenance operations over a [[GraftTable]] — the
   * VACUUM / expire-snapshots side of the snapshot log, the op
   * every production table format ships because time travel is a lease,
   * not a mortgage: superseded data must eventually be reclaimed or a

@@ -106,8 +106,7 @@ private[sources] class ManifestRowLevelOp(
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ManifestScanBuilder(path, schema,
       new SerializableConfiguration(ManifestSink.driverConf()),
-      version = None, cdf = false, rowLevelOwner = Some(this),
-      branch = branch)
+      Ref.of(None, branch), rowLevelOwner = Some(this))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {

@@ -1,86 +1,13 @@
 package graft.sources
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{DataType, LongType, Metadata, MetadataBuilder, StructField, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
-
-/** DataSource V2 SINK with a manifest commit protocol — the
-  * write-side extension point next to [[SynthSource]]'s read side.
-  * It models the reference's K1 keyed sink
-  * (/root/reference/queue_time_predictions/preprocess_image.py:139-151
-  * save to a well-known target) the way a cluster warehouse commits:
-  *
-  *  - every task stages its own uniquely-named part file
-  *    (`part-<partition>-<task>`): task retries / speculative
-  *    duplicates can never collide or corrupt committed data;
-  *  - each task's DataWriter.commit() returns the part's
-  *    [[PartMeta]] record (path, rows, per-column [[ColStat]]s) —
-  *    statistics computed WHILE writing, the footer metadata every
-  *    modern table format keeps;
-  *  - the driver's BatchWrite.commit() claims the next immutable
-  *    version file `_MANIFEST.v<N>.json` LAST, listing the table schema
-  *    and record ([[TableRecord]]) plus exactly the committed attempts
-  *    — the claim is the atomic
-  *    publish point, so readers either see the full dataset or none of
-  *    it, and orphaned files from failed attempts are invisible
-  *    (abort() deletes what it can; correctness never depends on that
-  *    cleanup).
-  *
-  * Filesystem access uses the SESSION Hadoop configuration end to end:
-  * captured once on the driver (`sessionState.newHadoopConf()`, which
-  * layers `spark.hadoop.*` onto the defaults) and shipped to executor
-  * writers via [[SerializableConfiguration]]. A bare
-  * `new Configuration()` would silently drop the session's filesystem
-  * settings (credentials, `fs.*` implementations, buffer sizing) — on
-  * a real cluster that is the difference between writing the user's
-  * warehouse and writing nothing.
-  *
-  * At 100 TB this protocol is the difference between "a job died and
-  * the table is half-visible" and exactly-once table semantics. Part
-  * files are Parquet, written by Spark's own Parquet writer with each
-  * column named by its stable field id ([[PartFormat]]); the protocol,
-  * not the encoding, is the operator. [[ManifestSource]] is the
-  * matching read path: it
-  * plans one input partition per committed part and prunes parts
-  * whose column stats cannot satisfy the pushed filters.
-  */
-class ManifestSink extends TableProvider {
-  // the write schema comes from the DataFrame being written
-  override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    new StructType()
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    def opt(k: String) = Option(properties.get(k)).filter(_.nonEmpty)
-    // the path spelling of a layout: `buckets` hashes the first BIGINT
-    // column, `splitBy` splits by value, `clusterBy` orders the write
-    val layouts =
-      opt("buckets").map(n => TableLayout.bucket(n.toInt, schema.fields
-        .find(_.dataType == LongType).fold("")(_.name))).toSeq ++
-        opt("splitBy").map(c => TableSpec(Some((0, c)))) ++
-        opt("clusterBy").map(c => TableSpec(orderBy = Some(c)))
-    require(layouts.length <= 1,
-      "options 'buckets', 'clusterBy' and 'splitBy' are mutually " +
-        "exclusive (hash-bucketed vs range-clustered vs " +
-        "identity-partitioned layout)")
-    new ManifestTable(properties.get("path"), schema,
-      TableLayout.check(layouts.headOption.getOrElse(TableSpec()), schema),
-      opt("writePartitions").map(_.toInt), opt("branch"))
-  }
-}
 
 /** Per-part bloom filter over the key column, stored hex-encoded in
   * the manifest line — the point-lookup companion to the (min, max)
@@ -550,8 +477,8 @@ private[sources] object HeaderChange {
       (ddlOf(schema), cm, table)
   }
 
-  /** The schema header is plain name+type(+comment): the catalog
-    * re-attaches CURRENT_DEFAULT/EXISTS_DEFAULT on loadTable (Spark's
+  /** The schema header is plain name+type(+comment): [[GraftTable]]
+    * re-attaches CURRENT_DEFAULT/EXISTS_DEFAULT on load (Spark's
     * default resolution reads it), and Spark 4's toDDL renders that
     * metadata as a `DEFAULT v` clause that fromDDL cannot parse back.
     * The colmap header is the canonical default store. */
@@ -616,6 +543,42 @@ private[sources] object HeaderChange {
   }
 }
 
+/** THE WRITE SIDE of the manifest table format — the commit protocol
+  * every write of a [[GraftTable]] goes through (path and catalog
+  * writes, CTAS/RTAS, streaming, row-level DML and maintenance). It
+  * models the reference pipeline's K1 keyed sink
+  * (`queue_time_predictions/preprocess_image.py:139-151`, a save to a
+  * well-known target) the way a cluster warehouse commits:
+  *
+  *  - every task stages its own uniquely-named part file
+  *    ([[partFileName]]): task retries / speculative duplicates can
+  *    never collide or corrupt committed data;
+  *  - each task's DataWriter.commit() returns the part's
+  *    [[PartMeta]] record (path, rows, per-column [[ColStat]]s) —
+  *    statistics computed WHILE writing, the footer metadata every
+  *    modern table format keeps;
+  *  - the driver's BatchWrite.commit() claims the next immutable
+  *    version file LAST ([[publishRebase]]), listing the table schema
+  *    and record ([[TableRecord]]) plus exactly the committed attempts
+  *    — the claim is the atomic publish point, so readers either see
+  *    the full dataset or none of it, and orphaned files from failed
+  *    attempts are invisible (abort() deletes what it can;
+  *    correctness never depends on that cleanup).
+  *
+  * Filesystem access uses the SESSION Hadoop configuration end to end:
+  * captured once on the driver ([[driverConf]]) and shipped to
+  * executor writers via [[SerializableConfiguration]]. A bare
+  * `new Configuration()` would silently drop the session's filesystem
+  * settings (credentials, `fs.*` implementations, buffer sizing) — on
+  * a real cluster that is the difference between writing the user's
+  * warehouse and writing nothing.
+  *
+  * At 100 TB this protocol is the difference between "a job died and
+  * the table is half-visible" and exactly-once table semantics. Part
+  * files are Parquet, written by Spark's own Parquet writer with each
+  * column named by its stable field id ([[PartFormat]]); the protocol,
+  * not the encoding, is the operator. [[ManifestSource]] is the path
+  * way in to the tables it commits. */
 object ManifestSink {
   /** The session Hadoop conf, captured on the driver. This is the ONLY
     * conf constructor in the manifest code paths. */
@@ -1077,26 +1040,6 @@ object ManifestSink {
 
 }
 
-private[sources] class ManifestTable(
-    path: String, schema: StructType, spec: TableSpec,
-    writePartitions: Option[Int], branch: Option[String])
-    extends Table with SupportsWrite {
-  require(path != null && path.nonEmpty, "option 'path' is required")
-  override def name(): String = s"manifest($path)"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE).asJava
-
-  // capture the session conf HERE — newWriteBuilder/build run on the
-  // driver; executors only ever see the serialized copy
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new ManifestWriteBuilder((doTruncate, _) =>
-      ManifestSink.writePlan(spec, resolvesTransforms = false,
-        writePartitions)(() => new ManifestBatchWrite(path, info.schema(),
-        doTruncate, new SerializableConfiguration(ManifestSink.driverConf()),
-        branch, spec)))
-}
-
 /** The one write builder of the manifest tables: records a truncate
   * (INSERT OVERWRITE, `mode("overwrite")`) or a REPLACE WHERE
   * condition and hands both to `plan`. SQL `INSERT INTO t REPLACE
@@ -1104,8 +1047,7 @@ private[sources] class ManifestTable(
   * OverwriteByExpression: AlwaysTrue degenerates to the logical
   * truncate; anything else must be row-evaluable (same contract as
   * DELETE), so an untranslatable condition is rejected at ANALYSIS via
-  * canOverwrite, never half-applied. Only catalog tables declare
-  * OVERWRITE_BY_FILTER, so only they ever see a condition. */
+  * canOverwrite, never half-applied. */
 private[sources] class ManifestWriteBuilder(
     plan: (Boolean, Option[Array[org.apache.spark.sql.sources.Filter]]) => Write)
     extends SupportsOverwrite {

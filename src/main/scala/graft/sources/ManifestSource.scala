@@ -23,14 +23,21 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** DataSource V2 READ path over a [[ManifestSink]]-committed table —
-  * closing the warehouse loop: what one job commits (part files + a
-  * version manifest carrying the schema and per-part statistics),
-  * a later job scans with metadata-level pruning, never trusting the
+/** THE PATH WAY IN to a manifest table — `spark.read`,
+  * `spark.readStream` and `df.write` with
+  * `format("graft.sources.ManifestSource")` and a `path` option. It
+  * loads the same [[GraftTable]] the catalog loads, so a path read
+  * plans the same pruned scan and a path write obeys the table's
+  * record (layout, identity and generated columns, CHECK constraints)
+  * exactly like an INSERT. What one job commits (part files + a
+  * version manifest carrying the schema and per-part statistics), a
+  * later job scans with metadata-level pruning, never trusting the
   * directory listing.
   *
   *  - The schema comes from the manifest header, not from sampling
-  *    files (self-describing table, like any modern table format).
+  *    files (self-describing table, like any modern table format); a
+  *    write states the DataFrame's, which must extend the committed
+  *    one additively.
   *  - Only files LISTED in the manifest are planned: orphans from
   *    failed attempts are invisible to readers by construction.
   *  - Range predicates on the key column (the first LongType field —
@@ -54,89 +61,50 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * All filesystem access uses the session Hadoop configuration:
   * captured on the driver, shipped to readers via
-  * [[SerializableConfiguration]] — same discipline as the sink.
+  * [[SerializableConfiguration]] — same discipline as the writers.
   *
   * At 100 TB, manifest-listed planning + stats pruning is the
   * difference between "scan 100k files to answer a keyed lookup" and
   * "open the three parts whose range can match".
+  *
+  * Options: `version` (time travel: schema AND parts of that
+  * immutable snapshot) or `branch` (the branch head — the
+  * write-audit-publish staging line; a write commits to it);
+  * `changeFeed` (the readChangeFeed shape); the stream options
+  * `startingVersion`, `startingTimestamp` and `maxPartsPerTrigger`;
+  * and, on a table that records no layout, the write's layout
+  * `buckets`, `splitBy` or `clusterBy` with `writePartitions`.
   */
 class ManifestSource extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = options.get("path")
-    require(path != null && path.nonEmpty, "option 'path' is required")
-    // TIME TRAVEL: `option("version", n)` resolves the schema AND the
-    // part list from that immutable snapshot manifest — each snapshot
-    // carries its own schema, so reading v1 after an additive
-    // evolution still yields v1's (narrower) schema.
-    // BRANCH: `option("branch", name)` resolves the branch head (the
-    // write-audit-publish staging line; main-head fallback while the
-    // branch has no commits).
-    val version = Option(options.get("version")).map(_.toInt)
-    val branch = Option(options.get("branch")).filter(_.nonEmpty)
-    require(branch.isEmpty || version.isEmpty,
-      "options 'branch' and 'version' are mutually exclusive")
-    val base = ManifestLog(ManifestSink.driverConf(), path)
-      .snapshot(Ref.of(version, branch)).schema
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed manifest (with schema header) at $path"))
-    // CHANGE FEED: `option("changeFeed", "true")` widens the schema
-    // with the change metadata columns — the readChangeFeed shape
-    if ("true".equalsIgnoreCase(options.get("changeFeed")))
-      StructType(base.fields ++ ManifestCdf.MetaFields)
-    else base
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    load(options, None).schema()
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new ManifestReadTable(properties.get("path"), schema,
-      Option(properties.get("version")).map(_.toInt),
-      "true".equalsIgnoreCase(properties.get("changeFeed")),
-      Option(properties.get("branch")).filter(_.nonEmpty))
-}
+    load(new CaseInsensitiveStringMap(properties), Some(schema))
 
-private[sources] class ManifestReadTable(
-    path: String, schema: StructType, version: Option[Int],
-    cdf: Boolean = false, branch: Option[String] = None)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
-  require(path != null && path.nonEmpty, "option 'path' is required")
-  /** The table dir when this is a plain HEAD read (no time travel, no
-    * change feed, no branch) — the only path-read shape [[MvRewrite]]
-    * may substitute before scan planning. */
-  private[sources] def plainHeadDir: Option[String] =
-    if (version.isEmpty && !cdf && branch.isEmpty) Some(path) else None
-  require(branch.isEmpty || !cdf,
-    "the change feed follows the MAIN snapshot line; 'branch' and " +
-      "'changeFeed' are mutually exclusive")
-  /** `_part` provenance is available on path reads too (not just
-    * catalog tables) — but not on change feeds, whose schema already
-    * carries its own metadata columns. */
-  override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    if (cdf) Array.empty else Array(PartMetaColumn, PosMetaColumn)
-  override def name(): String =
-    s"manifest($path${version.map(v => s"@v$v").getOrElse("")}" +
-      branch.map(b => s"@$b").getOrElse("") +
-      (if (cdf) "@changes" else "") + ")"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ManifestScanBuilder(path, schema,
-      new SerializableConfiguration(ManifestSink.driverConf()), version, cdf,
-      startingVersion = StreamOptions.resolveStarting(options,
-        ManifestSink.driverConf(), path),
-      branch = branch,
-      maxPartsPerTrigger = StreamOptions.maxPartsPerTrigger(options))
+  private def load(options: CaseInsensitiveStringMap,
+      schema: Option[StructType]): GraftTable = {
+    val path = options.get("path")
+    require(path != null && path.nonEmpty, "option 'path' is required")
+    val version = Option(options.get("version")).map(_.toInt)
+    val branch = Option(options.get("branch")).filter(_.nonEmpty)
+    require(branch.isEmpty || version.isEmpty,
+      "options 'branch' and 'version' are mutually exclusive")
+    GraftTable(None, path, Ref.of(version, branch),
+      "true".equalsIgnoreCase(options.get("changeFeed")), schema)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no committed manifest (with schema header) at $path"))
+  }
 }
 
 private[sources] class ManifestScanBuilder(
     path: String, schema: StructType, conf: SerializableConfiguration,
-    version: Option[Int] = None, cdf: Boolean = false,
+    ref: Ref, cdf: Boolean = false,
     rowLevelOwner: Option[ManifestRowLevelOp] = None,
     startingVersion: Option[Int] = None,
-    branch: Option[String] = None,
     maxPartsPerTrigger: Option[Int] = None)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
@@ -182,7 +150,7 @@ private[sources] class ManifestScanBuilder(
   // the one snapshot this builder plans: its metadata-aggregate
   // answer and its scan read the same resolution
   private lazy val snapshot: Snapshot =
-    ManifestLog(conf.value, path).snapshot(Ref.of(version, branch))
+    ManifestLog(conf.value, path).snapshot(ref)
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -588,7 +556,8 @@ private[sources] class ManifestScanBuilder(
         new ManifestScan(kept, schema, required, conf, all.size, limit, keyCol,
           path, rowLevelOwner, startingVersion, snapshot,
           maxPartsPerTrigger, ManifestSink.alignColMap(head.schemaCm, schema, path),
-          branched = branch.isDefined, runtimeFiltered = !keyBoundDelete,
+          branched = ref.isInstanceOf[Ref.Branch],
+          runtimeFiltered = !keyBoundDelete,
           tableProps = head.table.props)
     }
   }
@@ -1203,9 +1172,9 @@ private[sources] class ManifestMicroBatchStream(
   override def stop(): Unit = ()
 }
 
-/** Option parsing shared by the path table and the catalog table:
-  * `startingVersion` maps to initial offset startingVersion-1, so 0
-  * (or a negative) would plan snapshot -1 on the first
+/** The stream options of a table scan: `startingVersion` maps to
+  * initial offset startingVersion-1, so 0 (or a negative) would plan
+  * snapshot -1 on the first
   * trigger and surface as a raw FileNotFoundException — validate at
   * PARSE time with a message that names the option instead. */
 private[sources] object StreamOptions {

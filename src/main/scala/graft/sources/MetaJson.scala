@@ -92,14 +92,20 @@ private[sources] object MetaJson {
     val target = new Path(dir, name)
     val tmp = new Path(dir,
       s".$name.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(UTF_8)) finally out.close()
-    if (fs.exists(target)) {
-      if (!overwrite) { fs.delete(tmp, false); return false }
-      // Hadoop's local rename refuses an existing target
-      fs.delete(target, false)
-    }
-    fs.rename(tmp, target) || { fs.delete(tmp, false); false }
+    // the temp file (and its checksum sidecar) goes unless the rename
+    // landed it — also when the write, the probe or the rename throws
+    var landed = false
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(body.getBytes(UTF_8)) finally out.close()
+      if (fs.exists(target)) {
+        if (!overwrite) return false
+        // Hadoop's local rename refuses an existing target
+        fs.delete(target, false)
+      }
+      landed = fs.rename(tmp, target)
+      landed
+    } finally if (!landed) fs.delete(tmp, false)
   }
 
   /** The whole text of `p`, or None when it does not exist. */

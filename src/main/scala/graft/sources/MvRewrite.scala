@@ -79,7 +79,7 @@ object MvRewrite extends Rule[LogicalPlan] {
         case _ => false
       }
       case r: DataSourceV2Relation => r.table match {
-        case t: GraftCatalogTable => norm(t.tableDir) == norm(dir)
+        case t: GraftTable => norm(t.tableDir) == norm(dir)
         case _ => false
       }
       case _ => false
@@ -347,11 +347,7 @@ object MvRewrite extends Rule[LogicalPlan] {
         case _ => None
       }
       case r: DataSourceV2Relation => r.table match {
-        case t: ManifestReadTable => t.plainHeadDir.map(d => (d, None))
-        case t: GraftCatalogTable
-            if Option(r.options.get("branch")).forall(_.isEmpty) &&
-              Option(r.options.get("startingVersion")).forall(_.isEmpty) =>
-          Some((t.tableDir, None))
+        case t: GraftTable => t.headDir(r.options).map(d => (d, None))
         case _ => None
       }
       case _ => None

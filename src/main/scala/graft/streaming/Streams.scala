@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.functions.Exact
 import graft.model.Tables
 import graft.queries.QueryDef
+import graft.util.SessionConf.withConf
 
 /** Structured Streaming surface over the events feed.
   *
@@ -251,10 +252,8 @@ object Streams {
       (spark, dir) => {
         import spark.implicits._
         val k = "spark.sql.streaming.stateStore.providerClass"
-        val saved = spark.conf.getOption(k)
-        spark.conf.set(k, "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
-        try {
+        withConf(spark, k -> ("org.apache.spark.sql.execution.streaming." +
+            "state.RocksDBStateStoreProvider")) {
           val typed = eventsStream(spark, dir)
             .select(col("user_id"), col("value"), col("event_id"))
             .as[(Long, Double, Long)]
@@ -271,9 +270,6 @@ object Streams {
               col("r.v1"), col("r.e1"), col("r.v2"), col("r.e2"),
               col("r.v3"), col("r.e3"))
             .orderBy(col("user_id"))
-        } finally saved match {
-          case Some(v) => spark.conf.set(k, v)
-          case None    => spark.conf.unset(k)
         }
       },
       Some("""WITH r AS (
@@ -312,16 +308,12 @@ ORDER BY c.user_id""")),
         import spark.implicits._
         val k = "spark.sql.streaming.stateStore.providerClass"
         val nd = "spark.sql.streaming.noDataMicroBatches.enabled"
-        val saved = spark.conf.getOption(k)
-        val savedNd = spark.conf.getOption(nd)
-        spark.conf.set(k, "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
         // processing-time TTL schedules NO-DATA batches to advance its
         // clock, so AvailableNow would never drain — disable them; the
         // eviction contract this query gates lives in the state
         // GETTER (expired reads absent), not in background cleanup
-        spark.conf.set(nd, "false")
-        try {
+        withConf(spark, k -> ("org.apache.spark.sql.execution.streaming." +
+            "state.RocksDBStateStoreProvider"), nd -> "false") {
           val stage = QueryDef.freshTable(spark, dir, "stream_ttl-stage")
           val ckpt = QueryDef.freshTable(spark, dir, "stream_ttl-ckpt")
           val out1 = QueryDef.freshTable(spark, dir, "stream_ttl-out1")
@@ -396,15 +388,6 @@ ORDER BY c.user_id""")),
             .withColumn("idle_evicted", lit(idleEvicted))
             .withColumn("control_retained", lit(controlRetained))
             .orderBy(col("user_id"))
-        } finally {
-          saved match {
-            case Some(v) => spark.conf.set(k, v)
-            case None    => spark.conf.unset(k)
-          }
-          savedNd match {
-            case Some(v) => spark.conf.set(nd, v)
-            case None    => spark.conf.unset(nd)
-          }
         }
       },
       Some("""SELECT user_id, CAST(count(*) AS BIGINT) AS n_ttl,
@@ -755,8 +738,8 @@ ORDER BY p.user_id, p_id, c_id NULLS FIRST""")),
   FROM events) WHERE rn = 1 ORDER BY user_id""")),
 
     // --- Transactional micro-batch sink: each foreachBatch commits
-    // through the DSv2 ManifestSink into its OWN batch-<id> directory
-    // with overwrite — so a replayed micro-batch (the at-least-once
+    // through a ManifestSource path write into its OWN batch-<id>
+    // directory with overwrite — so a replayed micro-batch (the at-least-once
     // delivery every restart implies) idempotently rewrites its own
     // commit instead of duplicating rows: exactly-once table
     // semantics from at-least-once delivery + idempotent keyed
@@ -777,7 +760,7 @@ ORDER BY p.user_id, p_id, c_id NULLS FIRST""")),
             .option("checkpointLocation", ckpt)
             .foreachBatch { (batch: DataFrame, batchId: Long) =>
               batch.select(col("event_id"), col("event_type"), col("value"))
-                .write.format("graft.sources.ManifestSink")
+                .write.format("graft.sources.ManifestSource")
                 .option("path", s"$target/batch-$batchId")
                 .mode("overwrite")
                 .save()
@@ -964,14 +947,14 @@ ORDER BY window_start_us, event_type""")),
               .select(col("user_id"), col("r.ts_us").as("ts_us"),
                 col("r.event_id").as("event_id"), col("r.value").as("value"))
               .createOrReplaceTempView("graft_smm_src")
-            s0.conf.set("graft.delete.mode", "mor")
-            try s0.sql("""MERGE INTO graftsmm.wh.latest t
-              USING graft_smm_src s ON t.user_id = s.user_id
-              WHEN MATCHED AND (s.ts_us > t.ts_us OR
-                (s.ts_us = t.ts_us AND s.event_id > t.event_id))
-                THEN UPDATE SET *
-              WHEN NOT MATCHED THEN INSERT *""")
-            finally s0.conf.unset("graft.delete.mode")
+            withConf(s0, "graft.delete.mode" -> "mor") {
+              s0.sql("""MERGE INTO graftsmm.wh.latest t
+                USING graft_smm_src s ON t.user_id = s.user_id
+                WHEN MATCHED AND (s.ts_us > t.ts_us OR
+                  (s.ts_us = t.ts_us AND s.event_id > t.event_id))
+                  THEN UPDATE SET *
+                WHEN NOT MATCHED THEN INSERT *""")
+            }
             ()
           }
           .start()

@@ -53,7 +53,7 @@ class AnalyzeSpec extends SparkSpec {
     (0 until 4).foreach { i =>
       (i * 250L until (i + 1) * 250L)
         .map(k => (k, f"s$k%04d", k * 2)).toDF("k", "s", "v")
-        .coalesce(1).write.format("graft.sources.ManifestSink")
+        .coalesce(1).write.format("graft.sources.ManifestSource")
         .option("path", s"$wh/ns/t")
         .mode("append").save()
     }
@@ -103,7 +103,7 @@ class AnalyzeSpec extends SparkSpec {
     (0 until 2).foreach { i =>
       (i * 100L until (i + 1) * 100L).map(k => (k, k + 7, f"t$k%04d"))
         .toDF("k", "junk", "s")
-        .coalesce(1).write.format("graft.sources.ManifestSink")
+        .coalesce(1).write.format("graft.sources.ManifestSource")
         .option("path", s"$wh/ns/cm")
         .mode("append").save()
     }
@@ -131,7 +131,7 @@ class AnalyzeSpec extends SparkSpec {
     spark.sql("CREATE TABLE gan.ns.bl (k BIGINT, s STRING)")
     (0 until 2).foreach { i =>
       (0L until 500L).filter(_ % 2 == i).map(k => (k, s"v$k")).toDF("k", "s")
-        .coalesce(1).write.format("graft.sources.ManifestSink")
+        .coalesce(1).write.format("graft.sources.ManifestSource")
         .option("path", s"$wh/ns/bl")
         .mode("append").save()
     }
@@ -158,7 +158,7 @@ class AnalyzeSpec extends SparkSpec {
     spark.sql("CREATE TABLE gan.ns.fd (k BIGINT, s STRING)")
     (0 until 2).foreach { i =>
       (i * 10L until (i + 1) * 10L).map(k => (k, s"x$k")).toDF("k", "s")
-        .coalesce(1).write.format("graft.sources.ManifestSink")
+        .coalesce(1).write.format("graft.sources.ManifestSource")
         .option("path", s"$wh/ns/fd")
         .mode("append").save()
     }

@@ -275,7 +275,7 @@ class CatalogSpec extends SparkSpec {
     import spark.implicits._
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartition(8, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/pruned")
       .mode("overwrite").save()
     val df = spark.sql("SELECT k FROM gcs.ns.pruned WHERE k = 17")
@@ -310,7 +310,7 @@ class CatalogSpec extends SparkSpec {
     // so retention deletes are decidable from manifest stats alone
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/del")
       .mode("overwrite").save()
     val conf = spark.sessionState.newHadoopConf()
@@ -371,7 +371,7 @@ class CatalogSpec extends SparkSpec {
   private def extremeTable(name: String, parts: Seq[Seq[Long]]): Unit = {
     import spark.implicits._
     parts.foreach(ks => ks.toDF("k").coalesce(1)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/$name")
       .mode("append").save())
   }
@@ -517,7 +517,7 @@ class CatalogSpec extends SparkSpec {
         .toSeq.sorted
     def write(slice: DataFrame, mode: String, parts: Int): Unit =
       indexRows(slice).repartitionByRange(parts, col("cell"), col("vec_id"))
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", t).mode(mode).save()
     def committed(): DataFrame = spark.read
       .format("graft.sources.ManifestSource").option("path", t).load()
@@ -547,7 +547,7 @@ class CatalogSpec extends SparkSpec {
     val t = s"$wh/ns/filesmeta"
     (0L until 800L).map(i => (i, i * 3)).toDF("k", "v")
       .repartitionByRange(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", t)
       .mode("overwrite").save()
     spark.conf.set("graft.delete.mode", "mor")
@@ -578,13 +578,13 @@ class CatalogSpec extends SparkSpec {
     val t = s"$wh/ns/brmeta"
     (0L until 100L).map(i => (i, i)).toDF("k", "v")
       .repartition(2)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", t)
       .mode("overwrite").save()
     assert(spark.sql("SELECT * FROM gcs.ns.brmeta.branches").count() === 0)
     (100L until 150L).map(i => (i, i)).toDF("k", "v")
       .repartition(1)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", t).option("branch", "audit")
       .mode("append").save()
     val row = spark.sql(
@@ -643,13 +643,13 @@ class CatalogSpec extends SparkSpec {
     val t = s"$wh/ns/tagmeta"
     (0L until 120L).map(i => (i, i)).toDF("k", "v")
       .repartition(2)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", t)
       .mode("overwrite").save()
     assert(spark.sql("SELECT * FROM gcs.ns.tagmeta.tags").count() === 0)
     spark.sql("CALL gcs.system.tag(table => 'ns.tagmeta', name => 'r1')")
     (120L until 150L).map(i => (i, i)).toDF("k", "v")
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", t)
       .mode("append").save()
     spark.sql("CALL gcs.system.tag(table => 'ns.tagmeta', name => 'r2')")
@@ -665,7 +665,7 @@ class CatalogSpec extends SparkSpec {
     import spark.implicits._
     (0L until 400L).map(i => (i, i % 7, s"s$i")).toDF("k", "g", "s")
       .repartition(8)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/mcc")
       .mode("overwrite").save()
     val r = spark.sql("CALL gcs.system.compact(table => 'ns.mcc', " +

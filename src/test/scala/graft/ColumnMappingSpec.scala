@@ -149,7 +149,7 @@ class ColumnMappingSpec extends SparkSpec {
     import spark.implicits._
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(8, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/pr")
       .mode("overwrite").save()
     spark.sql("ALTER TABLE gcm.ns.pr RENAME COLUMN k TO id")
@@ -288,7 +288,7 @@ class ColumnMappingSpec extends SparkSpec {
     Seq(1L).toDF("k")
       .select(col("k"),
         struct(lit(10L).as("a"), lit("a").as("b")).as("p"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", dir)
       .mode("overwrite").save()
     // append with a genuinely-null sub-value: accepted, and the
@@ -296,7 +296,7 @@ class ColumnMappingSpec extends SparkSpec {
     Seq((2L, (Option.empty[java.lang.Long], "b")))
       .toDF("k", "p")
       .select(col("k"), col("p").cast("struct<a: bigint, b: string>"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", dir)
       .mode("append").save()
     val read = spark.read.format("graft.sources.ManifestSource")

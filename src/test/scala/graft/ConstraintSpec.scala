@@ -90,4 +90,28 @@ class ConstraintSpec extends SparkSpec {
     assert(spark.sql("SELECT v FROM gcc.ns.dml WHERE k = 1").head.getLong(0)
       === 99L)
   }
+
+  test("a path append obeys the CHECK constraints the table records") {
+    wh
+    spark.sql("CREATE TABLE gcc.ns.pathchk (k BIGINT, v BIGINT)")
+    spark.sql("ALTER TABLE gcc.ns.pathchk ADD CONSTRAINT v_pos CHECK (v > 0)")
+    spark.sql("INSERT INTO gcc.ns.pathchk VALUES (1, 10)")
+    val dir = s"$wh/ns/pathchk"
+    def append(v: Long): Unit =
+      spark.range(1).selectExpr("2L AS k", s"CAST($v AS BIGINT) AS v")
+        .write.format("graft.sources.ManifestSource").option("path", dir)
+        .mode("append").save()
+    def head = graft.sources.ManifestLog(
+      spark.sessionState.newHadoopConf(), dir).head
+    val before = head
+    val e = intercept[Exception](append(-1))
+    def chain(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => String.valueOf(x.getMessage) +: chain(x.getCause))
+    assert(chain(e).exists(m => m.contains("CHECK_CONSTRAINT_VIOLATION") ||
+      m.contains("v_pos")), s"unexpected error: ${e.getMessage}")
+    assert(head === before, "a refused path append must commit nothing")
+    append(5)
+    assert(spark.sql("SELECT k, v FROM gcc.ns.pathchk ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((1L, 10L), (2L, 5L)))
+  }
 }

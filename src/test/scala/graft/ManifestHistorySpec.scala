@@ -26,7 +26,7 @@ class ManifestHistorySpec extends SparkSpec {
       parts: Int = 4): Unit =
     base.filter(col("event_id") % 10 === m)
       .repartition(parts)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", target).mode(mode).save()
 
   private def readVersion(target: String, v: Option[Int]): DataFrame = {
@@ -76,7 +76,7 @@ class ManifestHistorySpec extends SparkSpec {
       .select(col("event_id"), col("value"), col("event_type"))
       .filter(col("event_id") % 10 === 1)
       .repartition(2)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", target).mode("append").save()
     val head = readVersion(target, None)
     assert(head.schema.fieldNames.toSeq === Seq("event_id", "value", "event_type"))
@@ -100,7 +100,7 @@ class ManifestHistorySpec extends SparkSpec {
       Tables.events(spark, Sf0001)
         .select(col("event_id"), col("event_type")) // value → string: not a prefix
         .filter(col("event_id") % 10 === 1)
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", target).mode("append").save()
     }
     def causes(t: Throwable): Seq[Throwable] =
@@ -154,7 +154,7 @@ class ManifestHistorySpec extends SparkSpec {
     val target = s"$wh/ns/cowvac"
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", target)
       .mode("overwrite").save()
     val before = ManifestLog(conf, target).snapshot().partRanges

@@ -17,7 +17,7 @@ class ManifestSinkSpec extends SparkSpec {
     Tables.events(spark, Sf0001)
       .select(col("event_id"), col("event_type"), col("value"))
       .repartition(parts)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", target).mode("overwrite").save()
 
   test("manifest totals equal the written data; every listed file exists") {
@@ -36,7 +36,7 @@ class ManifestSinkSpec extends SparkSpec {
 
   test("a task that writes no row commits no part") {
     val target = Files.createTempDirectory("graft-sink-spec-").toString
-    spark.range(0, 3, 1, 8).write.format("graft.sources.ManifestSink")
+    spark.range(0, 3, 1, 8).write.format("graft.sources.ManifestSource")
       .option("path", target).mode("overwrite").save()
     val m = ManifestLog(spark.sparkContext.hadoopConfiguration, target).snapshot().partRanges
     assert(m.size === 3, m.toString)
@@ -67,10 +67,10 @@ class ManifestSinkSpec extends SparkSpec {
     val ev = Tables.events(spark, Sf0001)
       .select(col("event_id"), col("event_type"), col("value"))
     val first = ev.filter(col("event_id") % 2 === 0)
-    first.write.format("graft.sources.ManifestSink")
+    first.write.format("graft.sources.ManifestSource")
       .option("path", target).mode("overwrite").save()
     ev.filter(col("event_id") % 2 === 1).write
-      .format("graft.sources.ManifestSink")
+      .format("graft.sources.ManifestSource")
       .option("path", target).mode("append").save()
     assert(ManifestLog(conf, target).versions === Seq(1, 2))
     val v1 = spark.read.format("graft.sources.ManifestSource")
@@ -121,7 +121,7 @@ class ManifestSinkSpec extends SparkSpec {
     Tables.events(spark, Sf0001)
       .select(col("event_id"), col("event_type"), col("value"))
       .repartition(7, col("event_type"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", target)
       .option("clusterBy", "event_id").option("writePartitions", "6")
       .mode("overwrite").save()
@@ -149,7 +149,7 @@ class ManifestSinkSpec extends SparkSpec {
     // a clusterBy column absent from the schema fails loudly
     intercept[IllegalArgumentException] {
       Tables.events(spark, Sf0001).select(col("event_id"))
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", target).option("clusterBy", "nope")
         .mode("overwrite").save()
     }

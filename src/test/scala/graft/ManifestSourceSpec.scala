@@ -36,7 +36,7 @@ class ManifestSourceSpec extends SparkSpec {
     Tables.events(spark, Sf0001)
       .select(col("event_id"), col("event_type"), col("value"))
       .repartitionByRange(parts, col("event_id"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", target).mode("overwrite").save()
 
   private def readBack(target: String): DataFrame =
@@ -68,7 +68,7 @@ class ManifestSourceSpec extends SparkSpec {
       (6L, Some("unicode æøå 中文 🙂"), Some(0.1 + 0.2), None),
       (7L, Some("\\N"), Some(0.0), Some(true))) // the literal NULL token
     val df = rows.toDF("k", "s", "v", "b")
-    df.write.format("graft.sources.ManifestSink")
+    df.write.format("graft.sources.ManifestSource")
       .option("path", target).mode("overwrite").save()
     val back = readBack(target)
     assert(back.except(df).isEmpty && df.except(back).isEmpty,
@@ -99,7 +99,7 @@ class ManifestSourceSpec extends SparkSpec {
         CAST(NULL AS BINARY), named_struct('a', CAST(NULL AS INT), 'b', 'x'))
       AS t(k, ti, si, i, f, d, dec, dt, ts, bin, st)""")
     val target2 = Files.createTempDirectory("graft-src-spec-").toString
-    extremes.write.format("graft.sources.ManifestSink")
+    extremes.write.format("graft.sources.ManifestSource")
       .option("path", target2).mode("overwrite").save()
     val back2 = readBack(target2)
     assert(back2.schema.map(_.dataType.simpleString) ===
@@ -131,7 +131,7 @@ class ManifestSourceSpec extends SparkSpec {
     Tables.events(spark, Sf0001)
       .select(col("event_id"), col("event_type"), col("value"))
       .repartitionByRange(4, col("event_type"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", target).mode("overwrite").save()
     val total = scanOf(readBack(target)).inputPartitions.length
     assert(total >= 3, s"range layout should yield several parts, got $total")
@@ -171,7 +171,7 @@ class ManifestSourceSpec extends SparkSpec {
     val target = Files.createTempDirectory("graft-src-collation-").toString
     Seq((1L, pua), (2L, emoji)).toDF("id", "s")
       .coalesce(1)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", target).mode("overwrite").save()
     val hit = readBack(target).filter(col("s") === emoji)
     assert(hit.count() === 1,
@@ -211,7 +211,7 @@ class ManifestSourceSpec extends SparkSpec {
     Tables.events(spark, Sf0001)
       .select(col("event_id"), col("event_type"), col("value"))
       .repartition(8, col("event_id"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", target).mode("overwrite").save()
     val ids = Tables.events(spark, Sf0001)
       .select("event_id").orderBy("event_id").collect().map(_.getLong(0))

@@ -19,7 +19,7 @@ class ManifestStreamSpec extends SparkSpec {
 
   private def write(df: DataFrame, path: String, mode: String): Unit =
     df.repartition(2)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", path).mode(mode).save()
 
   private def drain(table: String, sink: String, checkpoint: String): Long = {
@@ -96,7 +96,7 @@ class ManifestStreamSpec extends SparkSpec {
     val checkpoint = freshDir("mstream-cow-ckpt")
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", table)
       .mode("overwrite").save()
     assert(drain(table, sink, checkpoint) === 1000)
@@ -128,7 +128,7 @@ class ManifestStreamSpec extends SparkSpec {
     val checkpoint = freshDir("mstream-cdf-ckpt")
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", table)
       .mode("overwrite").save()
     def drainCdf(): Unit = {
@@ -168,7 +168,7 @@ class ManifestStreamSpec extends SparkSpec {
     def commit(lo: Long, hi: Long, mode: String): Unit =
       (lo until hi).map(i => (i, s"v$i")).toDF("k", "s")
         .repartition(1)
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", table)
         .mode(mode).save()
     commit(0, 100, "overwrite")  // v1
@@ -215,7 +215,7 @@ class ManifestStreamSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.glc.warehouse", wh)
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", table)
       .mode("overwrite").save() // v1: [0,249][250,499][500,749][750,999]
     spark.conf.set("graft.delete.mode", "mor")
@@ -271,7 +271,7 @@ class ManifestStreamSpec extends SparkSpec {
     def commit(lo: Long, hi: Long, mode: String): Unit =
       (lo until hi).map(i => (i, s"v$i")).toDF("k", "s")
         .repartition(1)
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", table)
         .mode(mode).save()
     commit(0, 100, "overwrite")  // v1
@@ -318,7 +318,7 @@ class ManifestStreamSpec extends SparkSpec {
           val fs = marker.getFileSystem(hconf)
           if (!fs.exists(marker)) {
             batch.repartition(2)
-              .write.format("graft.sources.ManifestSink")
+              .write.format("graft.sources.ManifestSource")
               .option("path", silver)
               .mode(if (fs.exists(new Path(silver))) "append" else "overwrite")
               .save()

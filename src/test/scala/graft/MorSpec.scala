@@ -25,7 +25,7 @@ class MorSpec extends SparkSpec {
     val path = s"$wh/ns/$name"
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", path)
       .mode("overwrite").save()
     path
@@ -78,7 +78,7 @@ class MorSpec extends SparkSpec {
     val path = s"$wh/ns/lim"
     (0L until 100L).map(i => (i, s"v$i")).toDF("k", "s")
       .coalesce(1)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", path)
       .mode("overwrite").save()
     withMor { spark.sql("DELETE FROM gmor.ns.lim WHERE k < 90") }
@@ -171,5 +171,14 @@ class MorSpec extends SparkSpec {
     spark.sql("DELETE FROM gmor.ns.noop WHERE k >= 5000 AND s = 'x'")
     assert(versions === before)
     assert(spark.sql("SELECT count(*) FROM gmor.ns.noop").head.getLong(0) === 1000)
+  }
+
+  test("a query that switches the delete mode puts the caller's back") {
+    spark.conf.set("graft.delete.mode", "eq")
+    try {
+      graft.queries.Warehouse.all.find(_.name == "q_delete_mor").get
+        .fn(spark, Sf0001).collect()
+      assert(spark.conf.getOption("graft.delete.mode") === Some("eq"))
+    } finally spark.conf.unset("graft.delete.mode")
   }
 }

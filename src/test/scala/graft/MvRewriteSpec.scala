@@ -30,7 +30,7 @@ class MvRewriteSpec extends SparkSpec {
 
   private def write(df: DataFrame, mode: String): Unit =
     df.repartition(4)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/src")
       .mode(mode).save()
 
@@ -158,13 +158,13 @@ class MvRewriteSpec extends SparkSpec {
       df.queryExecution.optimizedPlan.exists(_.isInstanceOf[Join])
     (0L until 300L).map(i => (i, i % 4, i * 0.25))
       .toDF("k", "fk", "v").repartition(2)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/cfact")
       .mode("overwrite").save()
     // dk is INT while fk is BIGINT — the bare equi-join carries the
     // analyzer's implicit `CAST(dk AS BIGINT)`
     (0 until 4).map(i => (i, s"c$i")).toDF("dk", "attr")
-      .coalesce(1).write.format("graft.sources.ManifestSink")
+      .coalesce(1).write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/cdim")
       .mode("overwrite").save()
     spark.sql("CALL gmvr.system.create_mv(mv_table => 'ns.cmv', " +
@@ -205,13 +205,13 @@ class MvRewriteSpec extends SparkSpec {
     def hasJoin(df: DataFrame): Boolean =
       df.queryExecution.optimizedPlan.exists(_.isInstanceOf[Join])
     def writeF(df: DataFrame, mode: String): Unit = df.repartition(2)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/jfact")
       .mode(mode).save()
     writeF((0L until 500L).map(i => (i, i % 5, i * 0.5))
       .toDF("k", "fk", "v"), "overwrite")
     (0L until 5L).map(i => (i, s"d$i")).toDF("dk", "attr")
-      .coalesce(1).write.format("graft.sources.ManifestSink")
+      .coalesce(1).write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/jdim")
       .mode("overwrite").save()
     spark.sql("CALL gmvr.system.create_mv(mv_table => 'ns.jmv', " +
@@ -264,7 +264,7 @@ class MvRewriteSpec extends SparkSpec {
         .filter(r => r._1 == "d1" || r._1 == "d3"))
       // MOVED DIM declines; refresh recomputes fully and re-arms
       (5L until 6L).map(i => (i, s"d$i")).toDF("dk", "attr")
-        .coalesce(1).write.format("graft.sources.ManifestSink")
+        .coalesce(1).write.format("graft.sources.ManifestSource")
         .option("path", s"$wh/ns/jdim")
         .mode("append").save()
       val dimMoved = spark.sql(jq)
@@ -291,7 +291,7 @@ class MvRewriteSpec extends SparkSpec {
           i * 0.25))
       .toDF("k", "ts", "v")
       .repartition(3)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", src)
       .mode("overwrite").save()
     spark.sql("CALL gmvr.system.create_mv(mv_table => 'tg.mv', " +
@@ -338,7 +338,7 @@ class MvRewriteSpec extends SparkSpec {
       Seq((9000L, new java.sql.Timestamp(1704067200000L + 700L * 3600000L),
           2.5))
         .toDF("k", "ts", "v")
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", src)
         .mode("append").save()
       assert(hasAggregate(spark.sql(grainSql)), "stale MV must decline")

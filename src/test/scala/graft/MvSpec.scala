@@ -31,7 +31,7 @@ class MvSpec extends SparkSpec {
 
   private def write(df: DataFrame, path: String, mode: String): Unit =
     df.repartition(4)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", path).mode(mode).save()
 
   /** (group, n, sum) set from any frame with (s, v). */

@@ -34,12 +34,12 @@ class NullStatsSpec extends SparkSpec {
     // part 0: s all NULL, v no nulls; part 1: s no nulls, v all NULL
     spark.sql("CREATE TABLE gns.ns.t (k BIGINT, s STRING, v BIGINT)")
     (0L until 100L).map(k => (k, null: String, k)).toDF("k", "s", "v")
-      .coalesce(1).write.format("graft.sources.ManifestSink")
+      .coalesce(1).write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/t")
       .mode("append").save()
     (100L until 200L).map(k => (k, s"s$k", null: java.lang.Long))
       .toDF("k", "s", "v")
-      .coalesce(1).write.format("graft.sources.ManifestSink")
+      .coalesce(1).write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/t")
       .mode("append").save()
     // primary string column: sNulls == rows prunes IS NOT NULL,
@@ -67,7 +67,7 @@ class NullStatsSpec extends SparkSpec {
     (0L until 100L)
       .map(k => (k, if (k % 3 == 0) null else s"s$k", k * 0.5))
       .toDF("k", "s", "d")
-      .repartition(4).write.format("graft.sources.ManifestSink")
+      .repartition(4).write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/c")
       .mode("append").save()
     val agg = spark.sql(
@@ -99,7 +99,7 @@ class NullStatsSpec extends SparkSpec {
     spark.sql("CREATE TABLE gns.ns.a (k BIGINT, s STRING)")
     (0L until 100L)
       .map(k => (k, if (k < 10) null else s"s$k")).toDF("k", "s")
-      .coalesce(1).write.format("graft.sources.ManifestSink")
+      .coalesce(1).write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/a")
       .mode("append").save()
     spark.conf.set("graft.delete.mode", "mor")

@@ -128,7 +128,7 @@ class PropertySpec extends SparkSpec {
         val name = s"${label.toLowerCase}$i"
         rows.toDF("k", "s")
           .repartitionByRange(5, col("k"))
-          .write.format("graft.sources.ManifestSink")
+          .write.format("graft.sources.ManifestSource")
           .option("path", s"$deleteWh/ns/$name")
           .mode("overwrite").save()
         mode.foreach(spark.conf.set("graft.delete.mode", _))

@@ -31,7 +31,7 @@ class ReplaceWhereSpec extends SparkSpec {
     val path = s"$wh/ns/$name"
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", path)
       .mode("overwrite").save()
     path
@@ -102,7 +102,7 @@ class ReplaceWhereSpec extends SparkSpec {
     val path = s"$wh/ns/nullsafe"
     Seq((Some(1L), "a"), (None, "nullk"), (Some(5L), "b"))
       .toDF("k", "s")
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", path)
       .mode("overwrite").save()
     Seq((2L, "two")).toDF("k", "s").createOrReplaceTempView("rw_src3")

@@ -24,7 +24,7 @@ class RowLevelSpec extends SparkSpec {
     val path = s"$wh/ns/$name"
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", path)
       .mode("overwrite").save()
     path
@@ -126,7 +126,7 @@ class RowLevelSpec extends SparkSpec {
       (0 until 100).map(i =>
         ((p * 100 + i).toLong, (p * 1000 + i).toLong, s"v$p-$i"))
         .toDF("k", "k2", "s").coalesce(1)
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", path)
         .mode(if (p == 0) "overwrite" else "append").save()
     }
@@ -229,7 +229,7 @@ class RowLevelSpec extends SparkSpec {
           else java.lang.Long.valueOf(p * 1000L + i)
         ((p * 100 + i).toLong, k2, s"v$p-$i")
       }.toDF("k", "k2", "s").coalesce(1)
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", path)
         .mode(if (p == 0) "overwrite" else "append").save()
     }

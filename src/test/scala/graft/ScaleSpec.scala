@@ -240,7 +240,7 @@ class ScaleSpec extends SparkSpec {
     graft.model.Tables.documents(spark, Sf0001)
       .select(col("doc_id"), col("source"), col("n_chars"))
       .repartition(8, col("doc_id"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", t)
       .mode("overwrite").save()
     def probe() = spark.read.format("graft.sources.ManifestSource")
@@ -445,7 +445,7 @@ class ScaleSpec extends SparkSpec {
     // full table (~1 MB) is over the test threshold, one part is under
     (0L until 100000L).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(64, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", s"$dir/fact")
       .mode("overwrite").save()
     // dim: big enough that IT never broadcasts at the test threshold

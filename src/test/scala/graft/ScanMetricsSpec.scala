@@ -36,7 +36,7 @@ class ScanMetricsSpec extends SparkSpec {
     spark.sql("CREATE TABLE gsm.ns.m (k BIGINT, s STRING)")
     (0 until 4).foreach { i =>
       (i * 100L until (i + 1) * 100L).map(k => (k, s"v$k")).toDF("k", "s")
-        .coalesce(1).write.format("graft.sources.ManifestSink")
+        .coalesce(1).write.format("graft.sources.ManifestSource")
         .option("path", s"$wh/ns/m")
         .mode("append").save()
     }

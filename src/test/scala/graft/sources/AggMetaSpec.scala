@@ -41,7 +41,7 @@ class AggMetaSpec extends graft.SparkSpec {
 
   private def write(df: DataFrame, t: String, mode: String = "append",
       opts: Map[String, String] = Map.empty): Unit = {
-    var w = df.write.format("graft.sources.ManifestSink")
+    var w = df.write.format("graft.sources.ManifestSource")
       .option("path", t)
     opts.foreach { case (k, v) => w = w.option(k, v) }
     w.mode(mode).save()

@@ -78,7 +78,7 @@ class ColStatsSpec extends graft.SparkSpec {
       declare(dir, Map("graft.bloom_cols" -> "u") ++ extraProps)
       (0L until 20000L).map(i => (i, s"u$i")).toDF("k", "u")
         .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", dir)
         .mode("overwrite").save()
       ManifestLog(conf, dir).snapshot().parts
@@ -103,7 +103,7 @@ class ColStatsSpec extends graft.SparkSpec {
       Map("graft.bloom_cols" -> "u", "graft.bloom_bits" -> "262144"))
     (0L until 20000L).map(i => (i, s"u$i")).toDF("k", "u")
       .coalesce(1)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", dir)
       .mode("overwrite").save()
     assert(ManifestLog(conf, dir).snapshot().parts
@@ -128,7 +128,7 @@ class ColStatsSpec extends graft.SparkSpec {
     import spark.implicits._
     (0L until 400L).map(i => (i, "h" + ((i * 37) % 400)))
       .toDF("k", "u").repartition(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", dir)
       .mode("overwrite").save()
     // every part's u-range spans nearly [h0, h399] (hash layout), so
@@ -144,7 +144,7 @@ class ColStatsSpec extends graft.SparkSpec {
     val dir2 = Files.createTempDirectory("graft-cbloom2").toString
     (0L until 400L).map(i => (i, "h" + ((i * 37) % 400)))
       .toDF("k", "u").repartition(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", dir2)
       .mode("overwrite").save()
     assert(scanParts(readBack(dir2).filter(col("u") === "h37")) === 4,
@@ -163,7 +163,7 @@ class ColStatsSpec extends graft.SparkSpec {
     (0 until n).map { i => (i.toLong, ((i * 2654435761L) % n), i.toLong * 3) }
       .toDF("a", "b", "v")
       .repartition(8)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/zt").mode("overwrite").save()
     def box() = readBack(s"$wh/ns/zt")
       .filter(col("a") <= n / 4 && col("b") <= n / 4)
@@ -194,7 +194,7 @@ class ColStatsSpec extends graft.SparkSpec {
         (i.toLong, s"s$i", g.toLong, f"band$p%02d-$i%03d")
       }.toDF("k", "s", "k2", "s2")
         .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", dir)
         .mode(if (p == 0) "overwrite" else "append").save()
     }
@@ -230,10 +230,10 @@ class ColStatsSpec extends graft.SparkSpec {
     import spark.implicits._
     Seq((1L, Option.empty[Long]), (2L, Option.empty[Long]))
       .toDF("k", "k2").coalesce(1)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", dir).mode("overwrite").save()
     Seq((3L, Some(10L)), (4L, Some(20L))).toDF("k", "k2").coalesce(1)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", dir).mode("append").save()
     val df = readBack(dir).filter(col("k2") === 10L)
     // the all-null part has no k2 stat: kept (conservative), and the
@@ -246,10 +246,10 @@ class ColStatsSpec extends graft.SparkSpec {
     val dir = Files.createTempDirectory("graft-cstats").toString
     import spark.implicits._
     Seq((1L, Some(10L), "m"), (2L, Some(20L), "q")).toDF("k", "k2", "s2")
-      .coalesce(1).write.format("graft.sources.ManifestSink")
+      .coalesce(1).write.format("graft.sources.ManifestSource")
       .option("path", dir).mode("overwrite").save()
     Seq((3L, Some(30L), "a"), (4L, Some(40L), "z")).toDF("k", "k2", "s2")
-      .coalesce(1).write.format("graft.sources.ManifestSink")
+      .coalesce(1).write.format("graft.sources.ManifestSource")
       .option("path", dir).mode("append").save()
     // layout: k primary long, k2 SECONDARY long (the subject — its
     // extremes must come from the generalized ColStat record), s2
@@ -262,7 +262,7 @@ class ColStatsSpec extends graft.SparkSpec {
     // declines (absent could be legacy/capped) and the file path
     // still yields the exact null-skipping answer
     Seq((5L, Option.empty[Long], "x")).toDF("k", "k2", "s2")
-      .coalesce(1).write.format("graft.sources.ManifestSink")
+      .coalesce(1).write.format("graft.sources.ManifestSource")
       .option("path", dir).mode("append").save()
     val agg2 = readBack(dir).agg(min("k2").as("lo"), max("k2").as("hi"))
     // (AQE wraps the declined shuffle-agg plan, so assert on plan
@@ -281,7 +281,7 @@ class ColStatsSpec extends graft.SparkSpec {
     (0 until 4).foreach { p =>
       (0 until 100).map(i => (i.toLong, (p * 1000 + i).toLong))
         .toDF("k", "k2").coalesce(1)
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", dir)
         .mode(if (p == 0) "overwrite" else "append").save()
     }
@@ -303,7 +303,7 @@ class ColStatsSpec extends graft.SparkSpec {
     (0 until 2).foreach { p =>
       (0 until 50).map(i => ((p * 100 + i).toLong, (p * 1000 + i).toLong))
         .toDF("k", "k2").coalesce(1)
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", dir)
         .mode(if (p == 0) "overwrite" else "append").save()
     }
@@ -350,7 +350,7 @@ class ColStatsSpec extends graft.SparkSpec {
         case (k, v, ts) => Row(k.orNull, v.orNull,
           ts.map(DateTimeUtils.toJavaTimestamp).orNull)
       }, 1), schema)
-        .write.format("graft.sources.ManifestSink")
+        .write.format("graft.sources.ManifestSource")
         .option("path", s"$wh/ns/p")
         .mode("append").save()
     }

@@ -342,7 +342,7 @@ class EqSpec extends SparkSpec {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-cdfname").toString
     Seq((1L, "a"), (2L, "b")).toDF("k", "_change_type")
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", dir).mode("overwrite").save()
     val got = spark.read.format("graft.sources.ManifestSource")
       .option("path", dir).load().orderBy("k").collect()

@@ -116,4 +116,25 @@ class GeneratedSpec extends SparkSpec {
         (3L, None, None)), s"mode '$mode'")
     }
   }
+
+  test("a path append computes generated columns and refuses a mismatch") {
+    val c = freshCat("p")
+    spark.sql(s"CREATE TABLE $c.wh.g (k BIGINT, " +
+      "g BIGINT GENERATED ALWAYS AS (k * 2))")
+    val dir = spark.conf.get(s"spark.sql.catalog.$c.warehouse") + "/wh/g"
+    def append(g: String): Unit =
+      spark.range(2, 4).selectExpr("id AS k", s"CAST($g AS BIGINT) AS g")
+        .write.format("graft.sources.ManifestSource").option("path", dir)
+        .mode("append").save()
+    append("NULL")
+    def rows = spark.sql(s"SELECT k, g FROM $c.wh.g ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(rows === Seq((2L, 4L), (3L, 6L)))
+    val ex = intercept[Exception](append("99"))
+    def chain(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => String.valueOf(e.getMessage) +: chain(e.getCause))
+    assert(chain(ex).exists(_.contains("GENERATED ALWAYS")),
+      s"expected the generated-column refusal, got: ${ex.getMessage}")
+    assert(rows === Seq((2L, 4L), (3L, 6L)), "a refused append lands nothing")
+  }
 }

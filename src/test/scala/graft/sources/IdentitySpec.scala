@@ -168,7 +168,7 @@ class IdentitySpec extends SparkSpec {
       "IDENTITY, v BIGINT)")
     val src = Files.createTempDirectory("graft-id-src-").toString
     spark.range(0, 10).selectExpr("id AS k", "id * 2 AS v")
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", src)
       .mode("overwrite").save()
     val ex = intercept[Exception] {
@@ -186,5 +186,30 @@ class IdentitySpec extends SparkSpec {
       Option(t).toSeq.flatMap(e => e.getMessage +: chain(e.getCause))
     assert(chain(ex).exists(m => m != null && m.contains("identity")),
       s"expected the identity refusal, got: ${ex.getMessage}")
+  }
+
+  test("a path append generates NULL ids and refuses explicit ones under ALWAYS") {
+    val c = freshCat("p")
+    spark.sql(s"CREATE TABLE $c.wh.t (id BIGINT GENERATED ALWAYS AS " +
+      "IDENTITY, v BIGINT)")
+    spark.sql(s"INSERT INTO $c.wh.t (v) VALUES (1), (2)")
+    val dir = spark.conf.get(s"spark.sql.catalog.$c.warehouse") + "/wh/t"
+    def append(id: String): Unit =
+      spark.range(3, 6).selectExpr(s"CAST($id AS BIGINT) AS id", "id AS v")
+        .write.format("graft.sources.ManifestSource").option("path", dir)
+        .mode("append").save()
+    append("NULL")
+    val r = spark.sql(s"SELECT count(*), count(id), count(DISTINCT id) " +
+      s"FROM $c.wh.t").head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((5L, 5L, 5L)),
+      "a path append fills every NULL id with a fresh one")
+    def head = ManifestLog(spark.sessionState.newHadoopConf(), dir).head
+    val before = head
+    val ex = intercept[Exception](append("1"))
+    def chain(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => String.valueOf(e.getMessage) +: chain(e.getCause))
+    assert(chain(ex).exists(_.contains("GENERATED ALWAYS AS IDENTITY")),
+      s"expected the identity refusal, got: ${ex.getMessage}")
+    assert(head === before, "a refused path append must commit nothing")
   }
 }

@@ -36,15 +36,6 @@ class LayoutSpec extends graft.SparkSpec {
       "TIMESTAMP'2024-03-01 00:00:00' + make_interval(0, 0, 0, 0, " +
         "CAST(id AS INT), 0, 0) AS ts")
 
-  private def withConf[T](kvs: (String, String)*)(f: => T): T = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   /** The layouts, each as (name, path options, DDL clause, set_layout
     * arguments, part-shape check). */
   private case class Layout(name: String, pathOpts: Option[Map[String, String]],
@@ -86,12 +77,13 @@ class LayoutSpec extends graft.SparkSpec {
   // AQE would coalesce these tiny writes into one partition and leave
   // the ordered layout unobservable
   private def write[T](f: => T): T =
-    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(f)
+    graft.util.SessionConf.withConf(spark,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(f)
 
   for (l <- layouts; opts <- l.pathOpts)
     test(s"path options: ${l.name} layout commits its part shape") {
       val dir = s"$wh/path_${l.name}"
-      write(rows().write.format("graft.sources.ManifestSink")
+      write(rows().write.format("graft.sources.ManifestSource")
         .option("path", dir).options(opts).mode("overwrite").save())
       headParts(dir, l)
     }
@@ -129,4 +121,34 @@ class LayoutSpec extends graft.SparkSpec {
       assert(spark.sql(s"SELECT count(*), sum(k) FROM glay.ns.$t").head.toSeq
         === Seq(N, N * (N - 1) / 2))
     }
+
+  test("a path append obeys the recorded bucket(4, k) layout") {
+    wh
+    spark.sql("CREATE TABLE glay.ns.path_append (k BIGINT, v BIGINT, " +
+      "ts TIMESTAMP) PARTITIONED BY (bucket(4, k))")
+    rows().createOrReplaceTempView("glay_src")
+    write(spark.sql("INSERT INTO glay.ns.path_append SELECT * FROM glay_src"))
+    val dir = s"$wh/ns/path_append"
+    def parts = ManifestLog(spark.sessionState.newHadoopConf(), dir)
+      .snapshot().parts
+    val before = parts.map(_.path).toSet
+    def append(opts: (String, String)*): Unit =
+      write(spark.range(N, N + 1000, 1, 8).selectExpr("id AS k",
+        "id % 5 AS v", "TIMESTAMP'2024-03-01 00:00:00' AS ts")
+        .write.format("graft.sources.ManifestSource").option("path", dir)
+        .options(opts.toMap).mode("append").save())
+    append()
+    val added = parts.filterNot(p => before(p.path))
+    assert(added.nonEmpty && added.forall(m => m.nbuckets == 4 &&
+      m.bucket >= 0 && m.bucket < 4), added.map(m => (m.bucket, m.nbuckets)))
+    // an option that disagrees with the recorded layout is refused;
+    // one that restates it is accepted
+    val ex = intercept[Exception](append("splitBy" -> "v"))
+    def chain(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => String.valueOf(e.getMessage) +: chain(e.getCause))
+    assert(chain(ex).exists(_.contains("set_layout")), ex.getMessage)
+    append("buckets" -> "4")
+    assert(spark.sql("SELECT count(*) FROM glay.ns.path_append").head
+      .getLong(0) === N + 2000)
+  }
 }

@@ -25,7 +25,7 @@ class MorDeltaSpec extends graft.SparkSpec {
     val path = s"$wh/ns/$name"
     (0L until rows).map(i => (i, s"v$i")).toDF("k", "s")
       .repartitionByRange(4, col("k"))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", path)
       .mode("overwrite").save()
     path
@@ -182,7 +182,7 @@ class MorDeltaSpec extends graft.SparkSpec {
     val path = mkTable("branchvac")
     (5000L until 5100L).map(i => (i, s"b$i")).toDF("k", "s")
       .repartition(1)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", path)
       .option("branch", "audit").mode("append").save()
     val staged = ManifestLog(conf, path).snapshot(Ref.Branch("audit")).parts

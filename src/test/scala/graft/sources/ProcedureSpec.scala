@@ -29,7 +29,7 @@ class ProcedureSpec extends graft.SparkSpec {
     val t = s"$wh/ns/$name"
     (0L until n).map(i => (i, i * 2)).toDF("k", "v")
       .repartition(parts)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", t)
       .mode("overwrite").save()
     t
@@ -290,7 +290,7 @@ class ProcedureSpec extends graft.SparkSpec {
     import spark.implicits._
     val t = writeTable("wap", 100L, 2)                        // main v1
     (1000L until 1100L).map(i => (i, i * 2)).toDF("k", "v")
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", t).option("branch", "audit")
       .mode("append").save()
     // main readers see nothing of the staged branch commit
@@ -376,7 +376,7 @@ class ProcedureSpec extends graft.SparkSpec {
     import spark.implicits._
     val t = writeTable("dryrun", 100, 2)             // v1: 2 parts
     (100L until 200L).map(i => (i, i)).toDF("k", "v").repartition(2)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", t).mode("overwrite").save()
     def files() = new org.apache.hadoop.fs.Path(t).getFileSystem(conf)
       .listStatus(new org.apache.hadoop.fs.Path(t))
@@ -428,7 +428,7 @@ class ProcedureSpec extends graft.SparkSpec {
     val src = writeTable("clsrc", 300, 3)            // v1: k in [0, 300)
     (300L until 400L).map(i => (i, i * 2)).toDF("k", "v")
       .repartition(1)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", src).mode("append").save()
     // clone v1 by NAME — not the head
     val r = spark.sql("CALL gps.system.clone(source_table => 'ns.clsrc', " +
@@ -444,7 +444,7 @@ class ProcedureSpec extends graft.SparkSpec {
     // divergence: append to the clone; the source head is untouched
     (1000L until 1100L).map(i => (i, i)).toDF("k", "v")
       .repartition(1)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", s"$wh/ns/clfork")
       .mode("append").save()
     assert(spark.sql("SELECT count(*) FROM gps.ns.clfork").head.getLong(0)

@@ -47,6 +47,13 @@ object ProbeFs {
   }
 }
 
+/** A checksummed local file system whose rename always throws — the
+  * I/O error at a claim's publish step. */
+class RenameFailFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: Path, dst: Path): Boolean =
+    throw new java.io.IOException(s"rename refused: $dst")
+}
+
 /** The version log's one resolver ([[ManifestLog]]) and the commit
   * loop's header rule: a commit keeps, appends to or restates the
   * header of the head it lands on, and a pinned commit conflicts when
@@ -217,15 +224,34 @@ class SnapshotLogSpec extends SparkSpec {
     assert(ManifestLog(plain, dir).versions === Seq(1))
   }
 
+  test("a claim whose rename throws leaves no dot-temp file behind") {
+    val dir = fresh()
+    ManifestSink.publishRebase(plain, dir, h => h :+ pm("p1"),
+      HeaderChange.Append(kv))
+    spark.conf.set("fs.file.impl", classOf[RenameFailFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    val ex = try intercept[java.io.IOException](ManifestSink.publishRebase(
+        ManifestSink.driverConf(), dir, h => h :+ pm("p2"),
+        HeaderChange.Append(kv)))
+      finally {
+        spark.conf.unset("fs.file.impl")
+        spark.conf.unset("fs.file.impl.disable.cache")
+      }
+    assert(ex.getMessage.contains("rename refused"), ex.getMessage)
+    val left = new java.io.File(dir).list()
+      .filter(n => n.startsWith(".") && n.contains(".tmp"))
+    assert(left.isEmpty, s"temp files left behind: ${left.toSeq}")
+    assert(head(dir).version === 1, "the failed claim published nothing")
+  }
+
   test("a stream builds one reader per distinct read schema") {
     val dir = fresh()
     (1 to 3).foreach { i =>
       spark.range(i * 10, i * 10 + 5).selectExpr("id AS k", "id AS v")
-        .write.format("graft.sources.ManifestSink").option("path", dir)
+        .write.format("graft.sources.ManifestSource").option("path", dir)
         .mode("append").save()
     }
-    val schema = head(dir).schema.get
-    val stream = new ManifestReadTable(dir, schema, None)
+    val stream = GraftTable(None, dir).get
       .newScanBuilder(new CaseInsensitiveStringMap(java.util.Map.of()))
       .build().toMicroBatchStream(dir + "/_unused")
     def batch(s: Int, e: Int) = {
@@ -268,5 +294,33 @@ class SnapshotLogSpec extends SparkSpec {
       finally files.close()
     assert(offenders.isEmpty,
       s"resolve snapshots through ManifestLog:\n${offenders.mkString("\n")}")
+  }
+
+  test("one provider and one table class serve the manifest format") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    val files = Files.walk(root)
+    val sources: Seq[(java.nio.file.Path, String)] =
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p -> new String(Files.readAllBytes(p), "UTF-8")).toSeq
+      finally files.close()
+    val forbidden = Seq("""\bManifestReadTable\b""".r,
+      "graft\\.sources\\.ManifestSink\"".r)
+    val offenders = sources.flatMap { case (p, text) =>
+      text.linesIterator.zipWithIndex.collect {
+        case (line, i) if forbidden.exists(_.findFirstIn(line).isDefined) =>
+          s"$p:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty, "read and write a path through " +
+      s"graft.sources.ManifestSource:\n${offenders.mkString("\n")}")
+    val providers = sources
+      .filter(_._1.startsWith(root.resolve("graft/sources")))
+      .flatMap { case (_, text) =>
+        """class\s+(\w+)[^{]*\bTableProvider\b""".r
+          .findAllMatchIn(text).map(_.group(1))
+      }
+    assert(providers.sorted === Seq("ManifestSource", "SynthSource"),
+      s"one TableProvider over the manifest format: $providers")
   }
 }

@@ -42,19 +42,13 @@ class SpjSpec extends graft.SparkSpec {
   /** The shared JVM-wide session outlives this suite — plan-shaping
     * confs (broadcast threshold) must be restored or they poison
     * other suites' plan pins. */
-  private def withConf[T](kvs: (String, String)*)(f: => T): T = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+  private def withConf[T](kvs: (String, String)*)(f: => T): T =
+    graft.util.SessionConf.withConf(spark, kvs: _*)(f)
 
   private def writeBucketed(name: String, df: DataFrame, n: Int): String = {
     val t = s"$wh/ns/$name"
     df.repartition(n, GraftBucket.bucketId(col("k"), n))
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", t)
       .option("buckets", n.toString)
       .mode("overwrite").save()
@@ -128,7 +122,7 @@ class SpjSpec extends graft.SparkSpec {
     // plain unbucketed append: correctness must survive, SPJ must not
     (800L until 900L).map(i => (i, i * 7)).toDF("k", "v")
       .coalesce(1)
-      .write.format("graft.sources.ManifestSink")
+      .write.format("graft.sources.ManifestSource")
       .option("path", t)
       .mode("append").save()
     val agg = spark.sql(

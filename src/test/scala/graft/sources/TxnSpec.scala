@@ -46,7 +46,7 @@ class TxnSpec extends SparkSpec {
     import spark.implicits._
     val df = if (str) (1000L until 1000L + n).map(i => (i, s"s$i")).toDF("k", "s")
       else (1000L until 1000L + n).map(i => (i, i * 2)).toDF("k", "v")
-    df.coalesce(1).write.format("graft.sources.ManifestSink")
+    df.coalesce(1).write.format("graft.sources.ManifestSource")
       .option("path", dir)
       .option("branch", branch).mode("append").save()
   }
@@ -107,7 +107,7 @@ class TxnSpec extends SparkSpec {
     stage(tb, "txn-e3", 5, str = true)
     // foreign main commit on tb between stage and commit
     (5000L until 5003L).map(i => (i, s"x$i")).toDF("k", "s")
-      .coalesce(1).write.format("graft.sources.ManifestSink")
+      .coalesce(1).write.format("graft.sources.ManifestSource")
       .option("path", tb)
       .mode("append").save()
     intercept[java.util.ConcurrentModificationException] {
@@ -170,7 +170,7 @@ class TxnSpec extends SparkSpec {
     ManifestTxn.stageMarker(conf, wh, "e5", Seq(ta, tb))
     // foreign commit lands on tb INSIDE the marker→roll-forward window
     (6000L until 6002L).map(i => (i, s"y$i")).toDF("k", "s")
-      .coalesce(1).write.format("graft.sources.ManifestSink")
+      .coalesce(1).write.format("graft.sources.ManifestSource")
       .option("path", tb)
       .mode("append").save()
     val ex = intercept[java.util.ConcurrentModificationException] {
